@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -641,8 +641,7 @@ object MaterializedView {
     require(mv.latestVersion.isEmpty,
       s"MV destination already exists: $mvRoot")
     mv.create(d.mvSchema)
-    Files.write(defPath(mvRoot), encodeDef(d).getBytes(UTF_8),
-      StandardOpenOption.CREATE_NEW)
+    TxLogTable.putIfAbsent(defPath(mvRoot), encodeDef(d).getBytes(UTF_8))
     val v = mv.commit(
       clustered(aggregate(prepared(
         source.snapshot(extProj(source, proj, Seq(head)),

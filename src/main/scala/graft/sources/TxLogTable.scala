@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -48,10 +48,16 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *    [[TxLogTable.SupportedReaderVersion]] gate enforces;
   *  - old versions stay readable (time travel) until vacuumed.
   *
-  * Concurrency is optimistic: the manifest is claimed with an atomic
-  * create-if-absent (`CREATE_NEW`); a losing writer re-reads the latest
-  * version and retries its commit. On a real deployment the `CREATE_NEW`
-  * primitive maps to HDFS create-no-overwrite / object-store
+  * Concurrency is optimistic, and every versioned commit runs through one
+  * primitive, `optimisticCommit`: resolve the latest version, let the
+  * caller plan the full manifest against it, publish that manifest as
+  * the next version with [[TxLogTable.putIfAbsent]], and re-plan from
+  * the new latest version when another writer claimed the number first.
+  * `putIfAbsent` writes the bytes to a temp file beside the target and
+  * claims the final name with a hard link, which is atomic and fails if
+  * the name exists — so a reader never sees a partially written
+  * manifest, and a lost race never overwrites the winner. On a real
+  * deployment it maps to HDFS create-no-overwrite / object-store
   * put-if-absent.
   */
 object TxLogTable {
@@ -101,6 +107,58 @@ object TxLogTable {
   // the rel path of an encoded data line (everything before the stats tab)
   private[sources] def relOf(line: String): String = line.takeWhile(_ != '\t')
 
+  // how many lost version races an optimistic commit re-plans through
+  // before it gives up
+  private val CommitAttempts = 10
+
+  /** What one planning pass of an optimistic commit decided: publish the
+    * full manifest `lines` as the next version and return `result`, or
+    * return `result` without committing anything.
+    */
+  private[sources] sealed trait CommitPlan[+R]
+  private[sources] final case class Publish[+R](lines: Seq[String], result: R)
+      extends CommitPlan[R]
+  private[sources] final case class Unchanged[+R](result: R)
+      extends CommitPlan[R]
+
+  // Suffix of the in-flight temp files `putIfAbsent` and
+  // `replaceAtomically` write next to their target. No reader's filter
+  // (`v*.manifest`, `*.cursor`, `*.tag`, `mv.def`) matches it, and
+  // `vacuum` deletes the ones a crash left behind.
+  private val TempSuffix = ".tmp"
+
+  private def tempBeside(target: Path): Path = target.resolveSibling(
+    s".${target.getFileName}.${java.util.UUID.randomUUID()}$TempSuffix")
+
+  /** Create `target` holding `bytes`, or throw
+    * `FileAlreadyExistsException` when it exists — the put-if-absent
+    * every manifest publish rests on. The bytes go to a temp file in the
+    * same directory and a hard link then claims the final name: the link
+    * is atomic and refuses an existing name, so a reader sees no file or
+    * the complete one. (Writing the target in place exposes a partial
+    * file; a rename would silently replace a racing winner.)
+    */
+  private[graft] def putIfAbsent(target: Path, bytes: Array[Byte]): Unit = {
+    val tmp = tempBeside(target)
+    try {
+      Files.write(tmp, bytes)
+      Files.createLink(target, tmp)
+    } finally Files.deleteIfExists(tmp)
+  }
+
+  /** Replace `target` with `bytes` atomically: a temp file in the same
+    * directory renamed over it, so a concurrent reader sees the old
+    * content or the new, never a torn file.
+    */
+  private def replaceAtomically(target: Path, bytes: Array[Byte]): Unit = {
+    val tmp = tempBeside(target)
+    try {
+      Files.write(tmp, bytes)
+      Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
+        StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
+  }
+
   /** Root-string marker addressing a branch: `<path>@@branch=<name>`.
     * See the constructor note — the branch rides the root string through
     * every layer that already threads roots around.
@@ -133,7 +191,7 @@ object TxLogTable {
       l.startsWith("#chain=") || l.startsWith("#minReader=")
 
   /** Process-wide resolved-manifest cache. Sound because manifests are
-    * write-once: published with CREATE_NEW, never modified in place, only
+    * write-once: published by putIfAbsent, never modified in place, only
     * ever DELETED (vacuum) — so (absolute path, size, mtime) identifies
     * content; a test recreating a table at a reused tmp path misses on
     * the stamp and re-reads. Bounded LRU: resolved line lists are small
@@ -912,6 +970,7 @@ object TxLogTable {
 }
 
 final case class TxLogTable(spark: SparkSession, root: String) {
+  import TxLogTable.{Publish, Unchanged}
 
   // A root of the form `<path>@@branch=<name>` addresses the table's
   // BRANCH log: same data directory (zero-copy, like a clone without the
@@ -1069,14 +1128,9 @@ final case class TxLogTable(spark: SparkSession, root: String) {
   // is atomic and the content logically identical, so this is the one
   // sanctioned exception to write-once manifests; the resolved-lines
   // cache keys on (size, mtime) and re-reads the new encoding.
-  private def materializeManifest(v: Int): Unit = {
-    val resolved = manifestLines(v)
-    val tmp = Files.createTempFile(logDir, "vacuum-cp-", ".tmp")
-    Files.write(tmp, resolved.mkString("\n").getBytes(UTF_8))
-    Files.move(tmp, manifestPath(v),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def materializeManifest(v: Int): Unit =
+    TxLogTable.replaceAtomically(manifestPath(v),
+      manifestLines(v).mkString("\n").getBytes(UTF_8))
 
   private def checkpointInterval: Int =
     spark.conf.getOption("spark.graft.sql.logCheckpointInterval")
@@ -1594,7 +1648,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     }
     Files.createDirectories(logDir)
     Files.createDirectories(dataDir)
-    Files.write(manifestPath(0),
+    TxLogTable.putIfAbsent(manifestPath(0),
       (metaLines(partitionCols, "create", bloomCols) ++
         Seq(s"#schema=${schema.json}") ++
         bucketSpecs.map { case (k, n) => s"#bucketSpec=$k:$n" } ++
@@ -1604,8 +1658,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         (if (ndvCols.nonEmpty)
            Seq(s"#ndvCols=${ndvCols.mkString(",")}") else Nil) ++
         (if (optimizeWrite) Seq("#optimizeWrite=true") else Nil))
-        .mkString("\n").getBytes(UTF_8),
-      StandardOpenOption.CREATE_NEW)
+        .mkString("\n").getBytes(UTF_8))
     0
   }
 
@@ -1642,30 +1695,51 @@ final case class TxLogTable(spark: SparkSession, root: String) {
           "rerun the statement")
   }
 
-  // One optimistic metadata-only commit: resolve the base version, let the
-  // caller validate and assemble the FULL manifest line list, publish with
-  // create-if-absent, re-plan on a lost race — the shared skeleton of the
-  // schema-evolution commits (a review found three hand-rolled copies of
-  // this loop drifting apart).
-  private def metadataCommit(what: String, maxAttempts: Int)
-                            (build: Int => Seq[String]): Int = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
+  /** THE commit protocol: every write that publishes a version runs
+    * through here. Each pass resolves the latest version `base` and hands
+    * it with `next = base + 1` to `plan`, which validates against `base`
+    * and returns either the FULL manifest line list for `next` or a
+    * no-op result. The manifest is encoded (delta or checkpoint) and
+    * published with [[TxLogTable.putIfAbsent]]; when another writer
+    * claimed `next` first, `plan` runs again against the new latest
+    * version. Staging done inside `plan` is redone per pass; files a
+    * lost pass staged stay unreferenced until `vacuum`.
+    */
+  private def optimisticCommit[R](what: String)
+      (plan: (Option[Int], Int) => TxLogTable.CommitPlan[R]): R = {
+    @scala.annotation.tailrec
+    def attempt(n: Int): R = {
       val base = latestVersion
-      require(base.isDefined, s"$what on nonexistent table $root")
-      val b = base.get
-      val lines = build(b)
-      try {
-        Files.write(manifestPath(b + 1),
-          encodeManifest(b + 1, lines), StandardOpenOption.CREATE_NEW)
-        return b + 1
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => attempt += 1
+      val next = base.getOrElse(-1) + 1
+      plan(base, next) match {
+        case Unchanged(result) => result
+        case Publish(lines, result) =>
+          val won =
+            try {
+              TxLogTable.putIfAbsent(manifestPath(next),
+                encodeManifest(next, lines))
+              true
+            } catch {
+              case _: java.nio.file.FileAlreadyExistsException => false
+            }
+          if (won) result
+          else if (n + 1 < TxLogTable.CommitAttempts) attempt(n + 1)
+          else throw new IllegalStateException(
+            s"$what lost the version race ${TxLogTable.CommitAttempts} " +
+              s"times: $root")
       }
     }
-    throw new IllegalStateException(
-      s"$what lost the version race $maxAttempts times: $root")
+    attempt(0)
   }
+
+  // optimisticCommit for the metadata-only commits (schema evolution,
+  // restore, branch publish): `build` gets the existing head and returns
+  // the full line list; the result is the committed version
+  private def metadataCommit(what: String)(build: Int => Seq[String]): Int =
+    optimisticCommit(what) { (base, next) =>
+      require(base.isDefined, s"$what on nonexistent table $root")
+      Publish(build(base.get), next)
+    }
 
   private def recordedSchema(b: Int, what: String): StructType =
     schemaOf(b).getOrElse(throw new IllegalStateException(
@@ -1697,9 +1771,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * tombstones are refused (tombstone files carry physical key columns —
     * compact first, which materializes and clears them).
     */
-  def renameColumn(oldName: String, newName: String,
-                   maxAttempts: Int = 10): Int =
-    metadataCommit("renameColumn", maxAttempts) { b =>
+  def renameColumn(oldName: String, newName: String): Int =
+    metadataCommit("renameColumn") { b =>
       val schema = recordedSchema(b, "renameColumn")
       require(schema.fieldNames.contains(oldName),
         s"no such column: $oldName")
@@ -1742,10 +1815,9 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * resurrect stale data instead of reading NULL.
     */
   def addColumn(name: String, dataType: DataType,
-                maxAttempts: Int = 10,
                 metadata: org.apache.spark.sql.types.Metadata =
                   org.apache.spark.sql.types.Metadata.empty): Int =
-    metadataCommit("addColumn", maxAttempts) { b =>
+    metadataCommit("addColumn") { b =>
       val schema = recordedSchema(b, "addColumn")
       require(!schema.fieldNames.contains(name),
         s"column already exists: $name")
@@ -1779,8 +1851,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * `#droppedPhys=` ledger so [[addColumn]] can never re-bind it. Same
     * restrictions as [[renameColumn]].
     */
-  def dropColumn(name: String, maxAttempts: Int = 10): Int =
-    metadataCommit("dropColumn", maxAttempts) { b =>
+  def dropColumn(name: String): Int =
+    metadataCommit("dropColumn") { b =>
       val schema = recordedSchema(b, "dropColumn")
       require(schema.fieldNames.contains(name), s"no such column: $name")
       require(!partitionColsOf(b).contains(name),
@@ -1818,8 +1890,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * hive dir renders `c=5` identically and parses under the declared
     * type).
     */
-  def widenColumn(name: String, to: DataType, maxAttempts: Int = 10): Int =
-    metadataCommit("widenColumn", maxAttempts) { b =>
+  def widenColumn(name: String, to: DataType): Int =
+    metadataCommit("widenColumn") { b =>
       val schema = recordedSchema(b, "widenColumn")
       val f = schema.fields.find(_.name == name)
       require(f.isDefined, s"no such column: $name")
@@ -1892,12 +1964,11 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * converges the layout to the new unit (and re-arms the SPJ report,
     * which declines while units are mixed).
     */
-  def alterTimeUnit(source: String, newUnit: String,
-                    maxAttempts: Int = 10): Int = {
+  def alterTimeUnit(source: String, newUnit: String): Int = {
     require(TxLogTable.TimeUnits.contains(newUnit),
       s"unknown time unit $newUnit (one of " +
         s"${TxLogTable.TimeUnits.mkString(", ")})")
-    metadataCommit("set-time-unit", maxAttempts) { b =>
+    metadataCommit("set-time-unit") { b =>
       val specs = timeSpecsOf(b)
       require(specs.exists(_._1 == source),
         s"no time transform on column $source " +
@@ -3099,12 +3170,10 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * carried = large files untouched.
     */
   def compactSmall(schema: StructType, minBytes: Long,
-                   targetBytes: Long = 128L * 1024 * 1024,
-                   maxAttempts: Int = 10): TxLogTable.MergeStats = {
+                   targetBytes: Long = 128L * 1024 * 1024)
+      : TxLogTable.MergeStats = {
     require(minBytes > 0 && targetBytes > 0, "compactSmall thresholds")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion
+    optimisticCommit("compactSmall") { (base, next) =>
       val layout = base.map(partitionColsOf).getOrElse(Nil)
       val sizes = base.map(b => fileSizes(Some(b)).toMap)
         .getOrElse(Map.empty)
@@ -3112,39 +3181,31 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         .partition { line =>
           sizes.getOrElse(line.takeWhile(_ != '\t'), 0L) < minBytes }
       if (small.size <= 1) // nothing to pack (or a single straggler)
-        return TxLogTable.MergeStats(base.getOrElse(-1), 0, large.size)
-      val smallBytes = small.map(l =>
-        sizes.getOrElse(l.takeWhile(_ != '\t'), 0L)).sum
-      val nOut = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes)
-        .toInt
-      // partitioned layout: cluster by the partition values so each hive
-      // partition's small rows land in ONE task → one packed file per
-      // value, instead of round-robin scattering every value across all
-      // nOut tasks (which would multiply files, the opposite of OPTIMIZE)
-      val smallRows = withBucketCol(readMaskedEntries(schema,
-        small.map(TxLogTable.decodeEntry), base), layout)
-      val packed =
-        if (layout.isEmpty) smallRows.repartition(nOut)
-        else smallRows.repartition(nOut, layout.map(col): _*)
-      val effBloom = base.map(bloomColsOf).getOrElse(Nil)
-      val staged = stageWithStats(packed, layout, effBloom,
-        inheritedBloomBits(base))
-      val next = base.getOrElse(-1) + 1
-      try {
-        Files.write(manifestPath(next),
-          encodeManifest(next, (metaLines(layout, "compact-small", effBloom) ++
-            tableMetaLines(base) ++ morLines(base) ++
-            dvCarryLines(base, large) ++
-            checkLines(base) ++ large ++ tagVersion(staged, next))),
-          StandardOpenOption.CREATE_NEW)
-        return TxLogTable.MergeStats(next, small.size, large.size)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1 // lost the race: re-list sizes and retry
+        Unchanged(TxLogTable.MergeStats(base.getOrElse(-1), 0, large.size))
+      else {
+        val smallBytes = small.map(l =>
+          sizes.getOrElse(l.takeWhile(_ != '\t'), 0L)).sum
+        val nOut = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes)
+          .toInt
+        // partitioned layout: cluster by the partition values so each hive
+        // partition's small rows land in ONE task → one packed file per
+        // value, instead of round-robin scattering every value across all
+        // nOut tasks (which would multiply files, the opposite of OPTIMIZE)
+        val smallRows = withBucketCol(readMaskedEntries(schema,
+          small.map(TxLogTable.decodeEntry), base), layout)
+        val packed =
+          if (layout.isEmpty) smallRows.repartition(nOut)
+          else smallRows.repartition(nOut, layout.map(col): _*)
+        val effBloom = base.map(bloomColsOf).getOrElse(Nil)
+        val staged = stageWithStats(packed, layout, effBloom,
+          inheritedBloomBits(base))
+        Publish(metaLines(layout, "compact-small", effBloom) ++
+          tableMetaLines(base) ++ morLines(base) ++
+          dvCarryLines(base, large) ++
+          checkLines(base) ++ large ++ tagVersion(staged, next),
+          TxLogTable.MergeStats(next, small.size, large.size))
       }
     }
-    throw new IllegalStateException(
-      s"compactSmall lost the version race $maxAttempts times: $root")
   }
 
   /** PARTITION-SCOPED compaction: rewrite only the files whose hive
@@ -3161,13 +3222,10 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * re-apply them to the new files). Same optimistic manifest race.
     */
   def compactWhere(schema: StructType, preds: Map[String, Set[String]],
-                   numFiles: Int = 1, maxAttempts: Int = 10)
-      : TxLogTable.MergeStats = {
+                   numFiles: Int = 1): TxLogTable.MergeStats = {
     require(preds.nonEmpty && preds.valuesIterator.forall(_.nonEmpty),
       "compactWhere needs at least one partition constraint")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion
+    optimisticCommit("compactWhere") { (base, next) =>
       val layout = base.map(partitionColsOf).getOrElse(Nil)
       require(preds.keySet.subsetOf(layout.toSet),
         s"compactWhere constraints must be partition columns of $layout, " +
@@ -3189,32 +3247,24 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         layout.map(segs.getOrElse(_, ""))
       }
       if (perValue.valuesIterator.forall(_.size <= numFiles))
-        return TxLogTable.MergeStats(base.getOrElse(-1), 0,
-          kept.size + hit.size)
-      val rows = withBucketCol(readMaskedEntries(schema,
-        hit.map(TxLogTable.decodeEntry), base), layout)
-      val packed =
-        if (layout.isEmpty) rows.repartition(numFiles)
-        else rows.repartition(numFiles, layout.map(col): _*)
-      val effBloom = base.map(bloomColsOf).getOrElse(Nil)
-      val staged = stageWithStats(packed, layout, effBloom,
-        inheritedBloomBits(base))
-      val next = base.getOrElse(-1) + 1
-      try {
-        Files.write(manifestPath(next),
-          encodeManifest(next, (metaLines(layout, "compact-where", effBloom) ++
-            tableMetaLines(base) ++ morLines(base) ++
-            dvCarryLines(base, kept) ++
-            checkLines(base) ++ kept ++ tagVersion(staged, next))),
-          StandardOpenOption.CREATE_NEW)
-        return TxLogTable.MergeStats(next, hit.size, kept.size)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1 // lost the race: re-list and retry
+        Unchanged(TxLogTable.MergeStats(base.getOrElse(-1), 0,
+          kept.size + hit.size))
+      else {
+        val rows = withBucketCol(readMaskedEntries(schema,
+          hit.map(TxLogTable.decodeEntry), base), layout)
+        val packed =
+          if (layout.isEmpty) rows.repartition(numFiles)
+          else rows.repartition(numFiles, layout.map(col): _*)
+        val effBloom = base.map(bloomColsOf).getOrElse(Nil)
+        val staged = stageWithStats(packed, layout, effBloom,
+          inheritedBloomBits(base))
+        Publish(metaLines(layout, "compact-where", effBloom) ++
+          tableMetaLines(base) ++ morLines(base) ++
+          dvCarryLines(base, kept) ++
+          checkLines(base) ++ kept ++ tagVersion(staged, next),
+          TxLogTable.MergeStats(next, hit.size, kept.size))
       }
     }
-    throw new IllegalStateException(
-      s"compactWhere lost the version race $maxAttempts times: $root")
   }
 
   /** Re-arm a SORTED table's ordering report by rewriting ONLY the
@@ -3235,12 +3285,10 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * maintenance converges to a no-op.
     */
   def resort(schema: StructType,
-             targetBytes: Long = TxLogTable.RebucketTargetBytes,
-             maxAttempts: Int = 10): TxLogTable.MergeStats = {
+             targetBytes: Long = TxLogTable.RebucketTargetBytes)
+      : TxLogTable.MergeStats = {
     require(targetBytes > 0, s"resort targetBytes: $targetBytes")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion
+    optimisticCommit("resort") { (base, next) =>
       val b = base.getOrElse(throw new IllegalStateException(
         s"resort of empty table: $root"))
       val sorts = sortColsOf(b)
@@ -3262,37 +3310,30 @@ final case class TxLogTable(spark: SparkSession, root: String) {
           }, single).isDefined
       }
       if (damaged.isEmpty)
-        return TxLogTable.MergeStats(b, 0, byDir.valuesIterator.map(_.size).sum)
-      val hit = damaged.valuesIterator.flatten.toSeq
-      val kept = armed.valuesIterator.flatten.toSeq
-      val sizes = fileSizes(Some(b)).toMap
-      val hitBytes = hit.map(l =>
-        sizes.getOrElse(l.takeWhile(_ != '\t'), 0L)).sum
-      val nOut = math.min(1L << 18, math.max(damaged.size.toLong,
-        (hitBytes + targetBytes - 1) / targetBytes)).toInt
-      val rows = withBucketCol(readMaskedEntries(schema,
-        hit.map(TxLogTable.decodeEntry), base), layout)
-      val packed = rows.repartitionByRange(nOut,
-        (layout ++ sorts).map(col): _*)
-      val effBloom = base.map(bloomColsOf).getOrElse(Nil)
-      val staged = stageWithStats(packed, layout, effBloom,
-        inheritedBloomBits(base))
-      val next = b + 1
-      try {
-        Files.write(manifestPath(next),
-          encodeManifest(next, (metaLines(layout, "resort", effBloom) ++
-            tableMetaLines(base) ++ morLines(base) ++
-            dvCarryLines(base, kept) ++
-            checkLines(base) ++ kept ++ tagVersion(staged, next))),
-          StandardOpenOption.CREATE_NEW)
-        return TxLogTable.MergeStats(next, hit.size, kept.size)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1 // lost the race: re-detect damage and retry
+        Unchanged(TxLogTable.MergeStats(b, 0,
+          byDir.valuesIterator.map(_.size).sum))
+      else {
+        val hit = damaged.valuesIterator.flatten.toSeq
+        val kept = armed.valuesIterator.flatten.toSeq
+        val sizes = fileSizes(Some(b)).toMap
+        val hitBytes = hit.map(l =>
+          sizes.getOrElse(l.takeWhile(_ != '\t'), 0L)).sum
+        val nOut = math.min(1L << 18, math.max(damaged.size.toLong,
+          (hitBytes + targetBytes - 1) / targetBytes)).toInt
+        val rows = withBucketCol(readMaskedEntries(schema,
+          hit.map(TxLogTable.decodeEntry), base), layout)
+        val packed = rows.repartitionByRange(nOut,
+          (layout ++ sorts).map(col): _*)
+        val effBloom = base.map(bloomColsOf).getOrElse(Nil)
+        val staged = stageWithStats(packed, layout, effBloom,
+          inheritedBloomBits(base))
+        Publish(metaLines(layout, "resort", effBloom) ++
+          tableMetaLines(base) ++ morLines(base) ++
+          dvCarryLines(base, kept) ++
+          checkLines(base) ++ kept ++ tagVersion(staged, next),
+          TxLogTable.MergeStats(next, hit.size, kept.size))
       }
     }
-    throw new IllegalStateException(
-      s"resort lost the version race $maxAttempts times: $root")
   }
 
   /** Rewrite the current snapshot clustered on the z-order (Morton) curve
@@ -3367,8 +3408,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * depends on the grid, since file range stats record actual values.
     */
   def compactZOrderWhere(schema: StructType, preds: Map[String, Set[String]],
-                         zCols: Seq[String], numFiles: Int = 8,
-                         maxAttempts: Int = 10): TxLogTable.MergeStats = {
+                         zCols: Seq[String], numFiles: Int = 8)
+      : TxLogTable.MergeStats = {
     require(zCols.size >= 2,
       "z-order needs at least two dimensions (one dimension is a plain " +
         "sort — use sortCols for that layout)")
@@ -3384,9 +3425,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     zCols.foreach(c => require(!partitionColsOf(v0).contains(c),
       s"z dimension $c is a partition column — constant within every " +
         "rewritten dir, so it cannot cluster anything; drop it"))
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion
+    optimisticCommit("compactZOrderWhere") { (base, next) =>
       val layout = base.map(partitionColsOf).getOrElse(Nil)
       require(preds.keySet.subsetOf(layout.toSet),
         s"compactZOrderWhere constraints must be partition columns of " +
@@ -3399,57 +3438,49 @@ final case class TxLogTable(spark: SparkSession, root: String) {
             segs.get(c).exists(vals.contains) }
       }
       if (hit.isEmpty)
-        return TxLogTable.MergeStats(base.getOrElse(-1), 0, kept.size)
-      val rows = withBucketCol(readMaskedEntries(schema,
-        hit.map(TxLogTable.decodeEntry), base), layout)
-      def gridInput(c: String): org.apache.spark.sql.Column =
-        schema.find(_.name == c).map(_.dataType) match {
-          case Some(org.apache.spark.sql.types.StringType) =>
-            graft.operators.ZOrder.strEnc(col(c))
-          case _ => col(c).cast("long")
-        }
-      val enc = zCols.map(gridInput)
-      val aggs = enc.flatMap(e => Seq(
-        org.apache.spark.sql.functions.min(e),
-        org.apache.spark.sql.functions.max(e)))
-      val mm = rows.agg(aggs.head, aggs.tail: _*).head()
-      val packed =
-        if (zCols.indices.exists(i => mm.isNullAt(2 * i)))
-          rows.repartition(numFiles, layout.map(col): _*)
-        else {
-          val z = graft.operators.ZOrder.zValueN(
-            enc.zipWithIndex.map { case (e, i) =>
-              (e, mm.getLong(2 * i), mm.getLong(2 * i + 1)) })
-          rows.withColumn("__z", z)
-            .repartitionByRange(numFiles, col("__z"))
-            .sortWithinPartitions("__z")
-            .drop("__z")
-        }
-      val effBloom = base.map(bloomColsOf).getOrElse(Nil)
-      val staged = stageWithStats(packed, layout, effBloom,
-        inheritedBloomBits(base))
-      val next = base.getOrElse(-1) + 1
-      try {
-        Files.write(manifestPath(next),
-          encodeManifest(next, (metaLines(layout, "zorder-where", effBloom) ++
-            tableMetaLines(base) ++ morLines(base) ++
-            dvCarryLines(base, kept) ++
-            checkLines(base) ++ kept ++ tagVersion(staged, next))),
-          StandardOpenOption.CREATE_NEW)
-        return TxLogTable.MergeStats(next, hit.size, kept.size)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1 // lost the race: re-list and retry
+        Unchanged(TxLogTable.MergeStats(base.getOrElse(-1), 0, kept.size))
+      else {
+        val rows = withBucketCol(readMaskedEntries(schema,
+          hit.map(TxLogTable.decodeEntry), base), layout)
+        def gridInput(c: String): org.apache.spark.sql.Column =
+          schema.find(_.name == c).map(_.dataType) match {
+            case Some(org.apache.spark.sql.types.StringType) =>
+              graft.operators.ZOrder.strEnc(col(c))
+            case _ => col(c).cast("long")
+          }
+        val enc = zCols.map(gridInput)
+        val aggs = enc.flatMap(e => Seq(
+          org.apache.spark.sql.functions.min(e),
+          org.apache.spark.sql.functions.max(e)))
+        val mm = rows.agg(aggs.head, aggs.tail: _*).head()
+        val packed =
+          if (zCols.indices.exists(i => mm.isNullAt(2 * i)))
+            rows.repartition(numFiles, layout.map(col): _*)
+          else {
+            val z = graft.operators.ZOrder.zValueN(
+              enc.zipWithIndex.map { case (e, i) =>
+                (e, mm.getLong(2 * i), mm.getLong(2 * i + 1)) })
+            rows.withColumn("__z", z)
+              .repartitionByRange(numFiles, col("__z"))
+              .sortWithinPartitions("__z")
+              .drop("__z")
+          }
+        val effBloom = base.map(bloomColsOf).getOrElse(Nil)
+        val staged = stageWithStats(packed, layout, effBloom,
+          inheritedBloomBits(base))
+        Publish(metaLines(layout, "zorder-where", effBloom) ++
+          tableMetaLines(base) ++ morLines(base) ++
+          dvCarryLines(base, kept) ++
+          checkLines(base) ++ kept ++ tagVersion(staged, next),
+          TxLogTable.MergeStats(next, hit.size, kept.size))
       }
     }
-    throw new IllegalStateException(
-      s"compactZOrderWhere lost the version race $maxAttempts times: $root")
   }
 
   // ---- change-feed cursor registry ----------------------------------
   // One tiny file per cursor under _log/cursors/ — manifest-adjacent so
   // clone/backup tooling that copies the log dir carries retention intent
-  // with it. Atomic upsert (temp + ATOMIC_MOVE) so a concurrent vacuum
+  // with it. Atomic upsert (replaceAtomically) so a concurrent vacuum
   // reads either the old or the new pin, never a torn file.
 
   private def cursorsDir: Path = logDir.resolve("cursors")
@@ -3499,11 +3530,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     Files.createDirectories(cursorsDir)
     val body = s"name=$name\nversion=$version\n" +
       s"updatedMillis=${System.currentTimeMillis()}\n"
-    val tmp = Files.createTempFile(cursorsDir, "cursor-", ".tmp")
-    Files.write(tmp, body.getBytes(UTF_8))
-    Files.move(tmp, cursorsDir.resolve(cursorFileName(name)),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    TxLogTable.replaceAtomically(cursorsDir.resolve(cursorFileName(name)),
+      body.getBytes(UTF_8))
   }
 
   /** Drop cursor `name`'s vacuum pin — the explicit operator act that
@@ -3548,7 +3576,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * existing name (immutability), a vacuumed/absent version, and a
     * bare-integer name (`VERSION AS OF '3'` must stay a version).
     * Returns the tagged version. Concurrent same-name creates race on
-    * an atomic no-replace move — exactly one wins.
+    * [[TxLogTable.putIfAbsent]] — exactly one wins, the others throw
+    * `FileAlreadyExistsException`.
     */
   def tag(name: String, version: Option[Int] = None): Int = {
     require(name.nonEmpty && !name.contains("\n"),
@@ -3566,11 +3595,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     Files.createDirectories(tagsDir)
     val body = s"name=$name\nversion=$v\n" +
       s"createdMillis=${System.currentTimeMillis()}\n"
-    val tmp = Files.createTempFile(tagsDir, "tag-", ".tmp")
-    Files.write(tmp, body.getBytes(UTF_8))
-    Files.move(tmp, tagsDir.resolve(cursorFileName(name)
-        .stripSuffix(".cursor") + ".tag"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    TxLogTable.putIfAbsent(tagsDir.resolve(cursorFileName(name)
+        .stripSuffix(".cursor") + ".tag"), body.getBytes(UTF_8))
     v
   }
 
@@ -3626,7 +3652,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * resolved content — zero data copied, and the branch never depends
     * on main's manifests (main vacuum stays free to drop history the
     * branch forked across). Returns the fork version. Concurrent
-    * same-name creates race on the v0 CREATE_NEW — exactly one wins.
+    * same-name creates race on the v0 putIfAbsent — exactly one wins.
     */
   def createBranch(name: String, version: Option[Int] = None,
                    rewrite: Seq[String] => Seq[String] = identity): Int = {
@@ -3651,8 +3677,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       rewrite(manifestLines(v).filterNot(l =>
         l.startsWith("#op=") || l.startsWith("#commitMillis=") ||
           l.startsWith("#partitionCols=")))
-    Files.write(dir.resolve(f"v${0}%08d.manifest"),
-      lines.mkString("\n").getBytes(UTF_8), StandardOpenOption.CREATE_NEW)
+    TxLogTable.putIfAbsent(dir.resolve(f"v${0}%08d.manifest"),
+      lines.mkString("\n").getBytes(UTF_8))
     v
   }
 
@@ -3671,7 +3697,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * combined file delta), not O(table). The branch stays (audit trail);
     * drop it explicitly when done.
     */
-  def publishBranch(name: String, maxAttempts: Int = 10,
+  def publishBranch(name: String,
                     rewrite: Seq[String] => Seq[String] = identity,
                     expectHead: Option[Int] = None): Int = {
     require(branch.isEmpty, "publish runs on the MAIN handle")
@@ -3690,7 +3716,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         s"(have ${bt.versions.mkString(",")})")
     val fork = bt.forkedFrom.getOrElse(throw new IllegalStateException(
       s"branch '$name' records no fork point — not a forked branch"))
-    metadataCommit(s"publish branch '$name'", maxAttempts) { b =>
+    metadataCommit(s"publish branch '$name'") { b =>
       if (b != fork)
         throw new java.util.ConcurrentModificationException(
           s"fast-forward publish of '$name' requires main unmoved since " +
@@ -3742,6 +3768,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     *    flight looks unreferenced for a moment, and deleting it would let
     *    the racing commit publish a manifest pointing at nothing. Pass 0
     *    only when provably no writer is active (tests, offline maintenance).
+    *    The same age bound applies to the temp files a crashed manifest,
+    *    cursor or tag write leaves under `_log`, which vacuum also deletes.
     *
     * Two FLOORS protect lagging readers (`keep` is a target, not a
     * license — a manifest behind either floor survives regardless):
@@ -3853,8 +3881,32 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         .map(_._1)
         .toSeq
     }
-    if (!dryRun) dead.foreach(f => Files.delete(dataDir.resolve(f)))
+    if (!dryRun) {
+      dead.foreach(f => Files.delete(dataDir.resolve(f)))
+      staleTemps(cutoff).foreach(Files.deleteIfExists)
+    }
     (drop.size, dead.size)
+  }
+
+  // Temp files under `_log` (manifests, branch logs, cursors, tags, the
+  // MV definition) last modified at or before `cutoff`: what a writer that
+  // crashed inside putIfAbsent / replaceAtomically leaves behind. A live
+  // writer's temp vanishing mid-walk is skipped, not an error.
+  private def staleTemps(cutoff: Long): Seq[Path] = {
+    val found = Seq.newBuilder[Path]
+    if (Files.isDirectory(logDir))
+      Files.walkFileTree(logDir,
+        new java.nio.file.SimpleFileVisitor[Path] {
+          override def visitFile(p: Path,
+              a: java.nio.file.attribute.BasicFileAttributes) = {
+            if (p.getFileName.toString.endsWith(TxLogTable.TempSuffix) &&
+                a.lastModifiedTime.toMillis <= cutoff) found += p
+            java.nio.file.FileVisitResult.CONTINUE
+          }
+          override def visitFileFailed(p: Path, e: java.io.IOException) =
+            java.nio.file.FileVisitResult.CONTINUE
+        })
+    found.result()
   }
 
   /** RESTORE TABLE to the state at `toVersion`, published as a NEW version
@@ -3878,8 +3930,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * they displaced — so keyed downstream state rolls back with the
     * table instead of diverging at a reset boundary.
     */
-  def restore(toVersion: Int, maxAttempts: Int = 10): Int =
-    metadataCommit("restore", maxAttempts) { _ =>
+  def restore(toVersion: Int): Int =
+    metadataCommit("restore") { _ =>
       require(versions.contains(toVersion),
         s"no version $toVersion to restore (vacuumed or never existed); " +
           s"surviving: ${versions.mkString(",")}")
@@ -3919,16 +3971,14 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * columns).
     */
   def rebucket(schema: StructType, newN: Int, key: Option[String] = None,
-               files: Int = 0, maxAttempts: Int = 10,
+               files: Int = 0,
                targetBytes: Long = TxLogTable.RebucketTargetBytes,
                alsoKeys: Seq[(String, Int)] = Nil): Int = {
     require(newN > 0 && newN <= (1 << 20),
       s"bucket count out of range: $newN")
     alsoKeys.foreach { case (_, n) =>
       require(n > 0 && n <= (1 << 20), s"bucket count out of range: $n") }
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion
+    optimisticCommit("rebucket") { (base, next) =>
       require(base.isDefined, s"rebucket of nonexistent table $root")
       val b = base.get
       val specs = bucketSpecsOf(b)
@@ -4001,25 +4051,13 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       val effBloom = bloomColsOf(b)
       val staged = stageWithStats(packed, layout, effBloom,
         inheritedBloomBits(base))
-      val next = b + 1
       // tombstones folded by the masked rewrite → morLines dropped; the
       // bucketSpec lines are REPLACED as a block (order preserved)
-      val lines = metaLines(layout, "rebucket", effBloom) ++
+      Publish(metaLines(layout, "rebucket", effBloom) ++
         tableMetaLines(base).filterNot(_.startsWith("#bucketSpec=")) ++
         newSpecs.map { case (k, n) => s"#bucketSpec=$k:$n" } ++
-        checkLines(base) ++ tagVersion(staged, next)
-      try {
-        Files.write(manifestPath(next),
-          encodeManifest(next, lines),
-          StandardOpenOption.CREATE_NEW)
-        return next
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1 // lost the race: re-read the new snapshot, restage
-      }
+        checkLines(base) ++ tagVersion(staged, next), next)
     }
-    throw new IllegalStateException(
-      s"rebucket lost the version race $maxAttempts times: $root")
   }
 
   /** ANALYZE: (re)compute the column NDV sketches from the CURRENT
@@ -4034,8 +4072,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * their carried fold. Subsequent commits keep folding into the fresh
     * baseline.
     */
-  def analyze(schema: StructType, cols: Seq[String],
-              maxAttempts: Int = 10): Int = {
+  def analyze(schema: StructType, cols: Seq[String]): Int = {
     require(cols.nonEmpty, "analyze needs at least one column")
     cols.foreach { c =>
       require(schema.fieldNames.contains(c),
@@ -4043,9 +4080,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       require(TxLogTable.wireSafeName(c),
         s"analyze column '$c' contains a manifest wire delimiter")
     }
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val b = latestVersion.getOrElse(
+    optimisticCommit("analyze") { (base, next) =>
+      val b = base.getOrElse(
         throw new IllegalStateException(s"analyze of empty table: $root"))
       // sketches are keyed by PHYSICAL name (the commit-path fold reads
       // staged files, which carry physical columns)
@@ -4064,26 +4100,14 @@ final case class TxLogTable(spark: SparkSession, root: String) {
           ndvSketchesOf(b).getOrElse(c, Nil))
         s"#ndv:$c=${minima.mkString(",")}"
       }
-      val lines = metaLines(partitionColsOf(b), "analyze", bloomColsOf(b)) ++
+      Publish(metaLines(partitionColsOf(b), "analyze", bloomColsOf(b)) ++
         manifestLines(b).filterNot(l =>
           l.startsWith("#op=") || l.startsWith("#commitMillis=") ||
             l.startsWith("#partitionCols=") ||
             l.startsWith("#bloomCols=") ||
             l.startsWith("#ndvCols=") || l.startsWith("#ndv:")) ++
-        Seq(s"#ndvCols=${allCols.mkString(",")}") ++ freshLines
-      val next = b + 1
-      try {
-        Files.write(manifestPath(next),
-          encodeManifest(next, lines),
-          StandardOpenOption.CREATE_NEW)
-        return next
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1 // lost the race: re-sketch the new snapshot
-      }
+        Seq(s"#ndvCols=${allCols.mkString(",")}") ++ freshLines, next)
     }
-    throw new IllegalStateException(
-      s"analyze lost the version race $maxAttempts times: $root")
   }
 
   /** Zero-copy clone of the CURRENT snapshot into a fresh table at
@@ -4121,8 +4145,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       manifestLines(b).filterNot(l =>
         l.startsWith("#op=") || l.startsWith("#commitMillis=") ||
           l.startsWith("#partitionCols="))
-    Files.write(dest.resolve("_log").resolve(f"v${0}%08d.manifest"),
-      lines.mkString("\n").getBytes(UTF_8), StandardOpenOption.CREATE_NEW)
+    TxLogTable.putIfAbsent(dest.resolve("_log").resolve(f"v${0}%08d.manifest"),
+      lines.mkString("\n").getBytes(UTF_8))
     0
   }
 
@@ -4232,9 +4256,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * layout, and mixing flat files into a hive-partitioned table would
     * make partition-column discovery ambiguous.
     */
-  def commitStagedDir(scratch: Path, op: String,
-                      maxAttempts: Int = 10): Int =
-    commitStagedReplace(scratch, replaced = None, op, maxAttempts)
+  def commitStagedDir(scratch: Path, op: String): Int =
+    commitStagedReplace(scratch, replaced = None, op)
 
   /** Like [[commitStagedDir]], but REPLACES only the named data files:
     * the staged files plus every current file NOT in `replaced` form the
@@ -4245,7 +4268,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * (overwrite).
     */
   def commitStagedReplace(scratch: Path, replaced: Option[Set[String]],
-                          op: String, maxAttempts: Int = 10,
+                          op: String,
                           scanBase: Option[Int] = None,
                           scanPred: Option[org.apache.spark.sql.Column] =
                             None): Int = {
@@ -4274,7 +4297,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     val blooms = bloomStats(rels, effBloom, inheritedBloomBits(latestVersion))
     val staged = rels.map(rel => TxLogTable.FileEntry(rel, footerStats(rel),
       blooms.getOrElse(rel, Map.empty)).encoded)
-    publishReplace(staged, replaced, op, maxAttempts, scanBase, scanPred,
+    publishReplace(staged, replaced, op, scanBase, scanPred,
       partitionCols = Nil, caller = "commitStagedReplace")
   }
 
@@ -4288,7 +4311,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * untouched bulk of the table is carried by reference, never read.
     */
   def commitReplacingDf(df: DataFrame, replaced: Option[Set[String]],
-                        op: String, maxAttempts: Int = 10,
+                        op: String,
                         scanBase: Option[Int] = None,
                         scanPred: Option[org.apache.spark.sql.Column] =
                           None): Int = {
@@ -4297,7 +4320,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     val stagedSpec = latestVersion.map(bucketSpecsOf).getOrElse(Nil)
     val staged = stageWithStats(df, partCols, inheritedBloomCols,
       inheritedBloomBits(latestVersion), rebalanceOk = true)
-    publishReplace(staged, replaced, op, maxAttempts, scanBase, scanPred,
+    publishReplace(staged, replaced, op, scanBase, scanPred,
       partCols, caller = "commitReplacingDf", stagedSpec = stagedSpec)
   }
 
@@ -4305,16 +4328,14 @@ final case class TxLogTable(spark: SparkSession, root: String) {
   // manifest race with write-write + write-skew conflict detection
   private def publishReplace(staged: Seq[String],
                              replaced: Option[Set[String]], op: String,
-                             maxAttempts: Int, scanBase: Option[Int],
+                             scanBase: Option[Int],
                              scanPred: Option[org.apache.spark.sql.Column],
                              partitionCols: Seq[String],
                              caller: String,
                              stagedSpec: Seq[(String, Int)] = Nil): Int = {
     val effBloom = inheritedBloomCols
     val batchKmv = stagedKmv(staged) // staged fixed across retries
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion
+    optimisticCommit(caller) { (base, next) =>
       requireSpecUnchanged(stagedSpec, base, caller)
       val current = base.map(dataLines).getOrElse(Nil)
       val carried = replaced match {
@@ -4358,7 +4379,6 @@ final case class TxLogTable(spark: SparkSession, root: String) {
           }
           current.filterNot(line => reps(line.takeWhile(_ != '\t')))
       }
-      val next = base.getOrElse(-1) + 1
       // MOR tombstones survive a GROUP replacement (unreplaced files stay
       // masked; replaced files were rewritten post-mask at `next`, which
       // every tombstone's sequence number predates, so the new files are
@@ -4366,24 +4386,15 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       // (replaced = None resets the file set, like every other commit
       // path's overwrite contract).
       val mor = if (replaced.isDefined) morLines(base) else Nil
-      try {
-        Files.write(manifestPath(next),
-          encodeManifest(next, (metaLines(partitionCols, op, effBloom) ++
-            // SQL DML (UPDATE SET / MERGE INTO insert) can introduce
-            // values the sketch never saw — fold the staged rows
-            // (idempotent for the rewritten ones); a whole-table
-            // replace (replaced = None) resets like any overwrite
-            metaWithNdv(base, ndvFoldLines(base, batchKmv,
-              reset = replaced.isEmpty)) ++
-            mor ++ checkLines(base) ++ carried ++ tagVersion(staged, next))),
-          StandardOpenOption.CREATE_NEW)
-        return next
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => attempt += 1
-      }
+      Publish(metaLines(partitionCols, op, effBloom) ++
+        // SQL DML (UPDATE SET / MERGE INTO insert) can introduce
+        // values the sketch never saw — fold the staged rows
+        // (idempotent for the rewritten ones); a whole-table
+        // replace (replaced = None) resets like any overwrite
+        metaWithNdv(base, ndvFoldLines(base, batchKmv,
+          reset = replaced.isEmpty)) ++
+        mor ++ checkLines(base) ++ carried ++ tagVersion(staged, next), next)
     }
-    throw new IllegalStateException(
-      s"$caller lost the version race $maxAttempts times: $root")
   }
 
   /** Per-column min/max of one staged file, harvested from the parquet
@@ -4619,8 +4630,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * never rewritten, and still snapshot-isolated behind the same atomic
     * manifest publish.
     */
-  def commitDynamic(df: DataFrame, partitionCols: Seq[String],
-                    maxAttempts: Int = 10): Int = {
+  def commitDynamic(df: DataFrame, partitionCols: Seq[String]): Int = {
     require(partitionCols.nonEmpty,
       "commitDynamic needs partition columns; use commit() otherwise")
     val effBloom = inheritedBloomCols
@@ -4635,9 +4645,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       p.getParent.toString + "/"
     }.distinct
     val dynKmv = stagedKmv(staged) // staged fixed across retries
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion
+    optimisticCommit("commitDynamic") { (base, next) =>
       requireSpecUnchanged(stagedSpec, base, "commitDynamic")
       base.foreach { b =>
         val cur = partitionColsOf(b)
@@ -4648,27 +4656,14 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       // carry RAW lines so untouched files keep their stats
       val carried = base.map(dataLines).getOrElse(Nil)
         .filterNot(f => replacedDirs.exists(f.startsWith))
-      val next = base.getOrElse(-1) + 1
-      try {
-        Files.write(manifestPath(next),
-          encodeManifest(next, (metaLines(partitionCols, "dynamic-overwrite", effBloom) ++
-            // replaced partitions' vanished values leave the fold
-            // stale-high (conservative); the new partitions' values
-            // must still enter or the sketch goes stale-LOW
-            metaWithNdv(base, ndvFoldLines(base, dynKmv,
-              reset = false)) ++
-            morLines(base) ++ dvCarryLines(base, carried) ++
-            checkLines(base) ++ carried ++
-            tagVersion(staged, next))),
-          StandardOpenOption.CREATE_NEW)
-        return next
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1 // lost the race — re-resolve latest and retry
-      }
+      Publish(metaLines(partitionCols, "dynamic-overwrite", effBloom) ++
+        // replaced partitions' vanished values leave the fold
+        // stale-high (conservative); the new partitions' values
+        // must still enter or the sketch goes stale-LOW
+        metaWithNdv(base, ndvFoldLines(base, dynKmv, reset = false)) ++
+        morLines(base) ++ dvCarryLines(base, carried) ++
+        checkLines(base) ++ carried ++ tagVersion(staged, next), next)
     }
-    throw new IllegalStateException(
-      s"commitDynamic lost the version race $maxAttempts times: $root")
   }
 
   /** Keyed copy-on-write MERGE (delete-then-insert upsert): every current
@@ -4711,7 +4706,6 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * changed) — stale staged files are left unreferenced for `vacuum`.
     */
   def merge(schema: StructType, incoming: DataFrame, keys: Seq[String],
-            maxAttempts: Int = 10,
             mergeSchema: Boolean = false): TxLogTable.MergeStats = {
     require(keys.nonEmpty, "merge needs at least one key column")
     if (mergeSchema) {
@@ -4730,7 +4724,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         (if (incoming.columns.contains(f.name)) col(f.name)
          else lit(null)).cast(f.dataType).as(f.name)
       }: _*)
-      return merge(eff, aligned, keys, maxAttempts)
+      return merge(eff, aligned, keys)
     }
     // only the NEW rows need validation — carried rows passed at ingest
     validateChecks(incoming, latestVersion)
@@ -4800,9 +4794,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     // over-cap string keys (no collected probe set): pruned DISTRIBUTED —
     // the batch's values probe the candidate files' blooms on executors
     val overCapKeys = stringKeys.filter(k => stringProbes(k).isEmpty)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion
+    optimisticCommit("merge") { (base, next) =>
       val layout = base.map(partitionColsOf).getOrElse(Nil)
       val cmap = base.map(colMapOf).getOrElse(Map.empty)
       val (hullAffected, hullCarried) = base.map(dataLines).getOrElse(Nil)
@@ -4846,26 +4838,16 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       val effBloom = base.map(bloomColsOf).getOrElse(Nil)
       val staged = stageWithStats(merged, layout, effBloom,
         inheritedBloomBits(base), rebalanceOk = true)
-      val next = base.getOrElse(-1) + 1
-      try {
-        Files.write(manifestPath(next),
-          encodeManifest(next, (metaLines(layout, "merge", effBloom) ++
-            // fold the staged (rewritten + new) rows' minima: a merge
-            // INSERTS new key values, and without the fold the sketch
-            // would go stale-LOW (idempotent re-add for rewritten rows)
-            metaWithNdv(base, ndvFoldLines(base, stagedKmv(staged),
-              reset = false)) ++
-            morLines(base) ++ dvCarryLines(base, carriedLines) ++
-            checkLines(base) ++ carriedLines ++ tagVersion(staged, next))),
-          StandardOpenOption.CREATE_NEW)
-        return TxLogTable.MergeStats(next, affected.size, carriedLines.size)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1 // lost the race: re-plan against the new latest
-      }
+      Publish(metaLines(layout, "merge", effBloom) ++
+        // fold the staged (rewritten + new) rows' minima: a merge
+        // INSERTS new key values, and without the fold the sketch
+        // would go stale-LOW (idempotent re-add for rewritten rows)
+        metaWithNdv(base, ndvFoldLines(base, stagedKmv(staged),
+          reset = false)) ++
+        morLines(base) ++ dvCarryLines(base, carriedLines) ++
+        checkLines(base) ++ carriedLines ++ tagVersion(staged, next),
+        TxLogTable.MergeStats(next, affected.size, carriedLines.size))
     }
-    throw new IllegalStateException(
-      s"merge lost the version race $maxAttempts times: $root")
   }
 
   /** File-targeted copy-on-write DELETE: rows where `pred` is TRUE are
@@ -4889,9 +4871,9 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * carried = files proven untouched. Same optimistic manifest race as
     * `merge`: a lost race re-plans against the new latest version.
     */
-  def deleteWhere(schema: StructType, pred: org.apache.spark.sql.Column,
-                  maxAttempts: Int = 10): TxLogTable.MergeStats =
-    cowRewrite(schema, pred, extra = None, opName = "delete", maxAttempts)
+  def deleteWhere(schema: StructType, pred: org.apache.spark.sql.Column)
+      : TxLogTable.MergeStats =
+    cowRewrite(schema, pred, extra = None, opName = "delete")
 
   // The shared predicate-scoped copy-on-write rewrite behind deleteWhere
   // (extra = None) and replaceWhere (extra = the replacement batch):
@@ -4901,8 +4883,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
   // by reference, under the usual optimistic re-planning race.
   private def cowRewrite(schema: StructType,
                          pred: org.apache.spark.sql.Column,
-                         extra: Option[DataFrame], opName: String,
-                         maxAttempts: Int): TxLogTable.MergeStats = {
+                         extra: Option[DataFrame], opName: String)
+      : TxLogTable.MergeStats = {
     val cmap = inheritedColMap
     val ranges = physKeyed(cmap, PredicateRanges.extract(pred))
     val nn = physNullness(cmap, PredicateRanges.extractNullness(pred))
@@ -4926,9 +4908,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     val exact: Option[Map[String, PredicateRanges.Bound]] =
       PredicateRanges.exactBounds(pred).map(physKeyed(cmap, _))
         .filter(_.nonEmpty)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion
+    optimisticCommit(opName) { (base, next) =>
       val layout = base.map(partitionColsOf).getOrElse(Nil)
       val (affected0, carriedLines) = base.map(dataLines).getOrElse(Nil)
         .partition(line => mayMatchPred(TxLogTable.decodeEntry(line),
@@ -4958,22 +4938,12 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         if (affected.isEmpty && extra.isEmpty) Nil
         else stageWithStats(out, layout, effBloom,
           inheritedBloomBits(base), rebalanceOk = true)
-      val next = base.getOrElse(-1) + 1
-      try {
-        Files.write(manifestPath(next),
-          encodeManifest(next, (metaLines(layout, opName, effBloom) ++ tableMetaLines(base) ++
-            morLines(base) ++ dvCarryLines(base, carriedLines) ++
-            checkLines(base) ++ carriedLines ++ tagVersion(staged, next))),
-          StandardOpenOption.CREATE_NEW)
-        return TxLogTable.MergeStats(next, affected.size, carriedLines.size,
-          dropped.size)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1 // lost the race: re-plan against the new latest
-      }
+      Publish(metaLines(layout, opName, effBloom) ++ tableMetaLines(base) ++
+        morLines(base) ++ dvCarryLines(base, carriedLines) ++
+        checkLines(base) ++ carriedLines ++ tagVersion(staged, next),
+        TxLogTable.MergeStats(next, affected.size, carriedLines.size,
+          dropped.size))
     }
-    throw new IllegalStateException(
-      s"$opName lost the version race $maxAttempts times: $root")
   }
 
   /** Predicate-scoped atomic overwrite — the `replaceWhere` idiom: ONE
@@ -4989,8 +4959,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * with one aggregate over the batch.
     */
   def replaceWhere(schema: StructType, pred: org.apache.spark.sql.Column,
-                   data: DataFrame,
-                   maxAttempts: Int = 10): TxLogTable.MergeStats = {
+                   data: DataFrame): TxLogTable.MergeStats = {
     // ONE validation aggregate over the batch: the predicate contract
     // (every incoming row satisfies pred — otherwise a rerun would not be
     // idempotent) and any CHECK constraints, in the same job, so an
@@ -5008,8 +4977,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       require(row.getLong(i + 1) == 0L,
         s"check '$n' violated by ${row.getLong(i + 1)} rows: $e")
     }
-    cowRewrite(schema, pred, extra = Some(data), opName = "replace-where",
-      maxAttempts)
+    cowRewrite(schema, pred, extra = Some(data), opName = "replace-where")
   }
 
   /** Merge-on-read equality DELETE (Iceberg v2 equality-delete /
@@ -5031,8 +4999,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * delete (like Iceberg's equality-field ids) and must match thereafter.
     * NULL key tuples never match any row (SQL equality), matching COW.
     */
-  def deleteByKeysMor(deleteKeys: DataFrame,
-                      maxAttempts: Int = 10): Int = {
+  def deleteByKeysMor(deleteKeys: DataFrame): Int = {
     val keys = deleteKeys.columns.toSeq
     require(keys.nonEmpty, "deleteByKeysMor needs at least one key column")
     // the tombstone anti-join matches data columns against tombstone-file
@@ -5041,15 +5008,12 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     keys.foreach(k => require(!inheritedColMap.contains(k),
       s"MOR delete key $k is a renamed column: compact before MOR deletes"))
     val staged = stage(deleteKeys, Nil)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion
+    optimisticCommit("deleteByKeysMor") { (base, next) =>
       val existing = base.map(morKeysOf).getOrElse(Nil)
       require(existing.isEmpty || existing == keys,
         s"MOR delete keys $keys do not match the table's $existing")
       val layout = base.map(partitionColsOf).getOrElse(Nil)
-      val next = base.getOrElse(-1) + 1
-      val lines =
+      Publish(
         metaLines(layout, "delete-mor", base.map(bloomColsOf).getOrElse(Nil)) ++
           tableMetaLines(base) ++
           Seq(s"#morKeys=${keys.mkString(",")}") ++
@@ -5057,19 +5021,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
           staged.map(rel => s"#tomb=$rel;v=$next") ++
           base.map(dvLines).getOrElse(Nil) ++
           checkLines(base) ++
-          base.map(dataLines).getOrElse(Nil)
-      try {
-        Files.write(manifestPath(next),
-          encodeManifest(next, lines),
-          StandardOpenOption.CREATE_NEW)
-        return next
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1 // lost the race: re-check keys and tombs, retry
-      }
+          base.map(dataLines).getOrElse(Nil), next)
     }
-    throw new IllegalStateException(
-      s"deleteByKeysMor lost the version race $maxAttempts times: $root")
   }
 
   /** Positional DELETE (deletion-vector style — Iceberg v2 position
@@ -5099,9 +5052,9 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * the zero-rewrite guarantee callers can assert. A predicate
     * matching no rows is a no-op (no version committed).
     */
-  def deleteWherePos(schema: StructType, pred: org.apache.spark.sql.Column,
-                     maxAttempts: Int = 10): TxLogTable.MergeStats =
-    posMask(schema, pred, None, "delete-dv", maxAttempts)
+  def deleteWherePos(schema: StructType, pred: org.apache.spark.sql.Column)
+      : TxLogTable.MergeStats =
+    posMask(schema, pred, None, "delete-dv")
 
   /** Positional UPDATE: rows matching `pred` are masked where they sit
     * (same DV commit as [[deleteWherePos]]) and re-written ONCE with
@@ -5114,15 +5067,15 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * rows under one `_commit_version`).
     */
   def updateWherePos(schema: StructType, pred: org.apache.spark.sql.Column,
-                     set: Seq[(String, org.apache.spark.sql.Column)],
-                     maxAttempts: Int = 10): TxLogTable.MergeStats = {
+                     set: Seq[(String, org.apache.spark.sql.Column)])
+      : TxLogTable.MergeStats = {
     require(set.nonEmpty, "updateWherePos needs at least one assignment")
     set.foreach { case (c, _) =>
       require(schema.fieldNames.contains(c),
         s"updateWherePos column $c is not in the schema " +
           s"(${schema.fieldNames.mkString(", ")})")
     }
-    posMask(schema, pred, Some(set), "update-dv", maxAttempts)
+    posMask(schema, pred, Some(set), "update-dv")
   }
 
   /** Collect a DV mask frame to the driver with the pull BOUNDED by the
@@ -5151,8 +5104,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
   private def posMask(schema: StructType,
                       pred: org.apache.spark.sql.Column,
                       set: Option[Seq[(String, org.apache.spark.sql.Column)]],
-                      opName: String,
-                      maxAttempts: Int): TxLogTable.MergeStats = {
+                      opName: String): TxLogTable.MergeStats = {
     import org.apache.spark.sql.functions.{coalesce, substring}
     val cmap = inheritedColMap
     val ranges = physKeyed(cmap, PredicateRanges.extract(pred))
@@ -5160,9 +5112,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     val points = physKeyed(cmap, PredicateRanges.extractPoints(pred))
     val strs = physKeyed(cmap, PredicateRanges.extractStr(pred))
     val prefixLen = dataDir.toString.length + 1 // abs path → rel
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion
+    optimisticCommit(opName) { (base, next) =>
       val layout = base.map(partitionColsOf).getOrElse(Nil)
       val lines = base.map(dataLines).getOrElse(Nil)
       // manifest pruning bounds the scan exactly as for the COW path
@@ -5170,83 +5120,78 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       val affected = affEntries.filter(e =>
         mayMatchPred(e, ranges, nn, points, strs,
           timeSegBounds(ranges, base)))
-      if (affected.isEmpty) // provably nothing matches: clean no-op
-        return TxLogTable.MergeStats(base.getOrElse(-1), 0, lines.size)
-      // matched rows' positions, read through EVERY live mask (prior
-      // DVs and tombstones) so masks stay disjoint
-      val (rows, fcol, pcol) = readMaskedPos(schema,
-        affected, base, None, withPos = true)
-      val hit = rows.filter(coalesce(pred, lit(false)))
-      val maskFrame = hit.select(
-        substring(col(fcol), prefixLen + 1, Int.MaxValue).as("file"),
-        col(pcol).as("pos"))
-      // ONE headroom-bounded collect replaces the old stage-write +
-      // read-back-count pass (two actions plus a disk round-trip): the
-      // per-file counts become plain driver math and the small DV
-      // parquet is staged from the local rows as a 1-task write. The
-      // mask must stay broadcast-sized anyway (the read-side anti-join
-      // carries it), so the driver pull is the same order of memory the
-      // table already holds per read — and the pull itself is bounded
-      // BEFORE the cap check, so an over-cap bulk delete fails with the
-      // clean refusal below instead of materializing an unbounded mask.
-      val cap = TxLogTable.maxDvMaskRows(spark)
-      val liveTotal = base.map(dvsOf).getOrElse(Nil).map(_.n).sum
-      val maskRows = boundedMaskCollect(maskFrame, affected,
-        math.max(0L, cap - liveTotal))
-      if (maskRows.isEmpty) // predicate matched no surviving row: no-op
-        return TxLogTable.MergeStats(base.getOrElse(-1), 0, lines.size)
-      // keep the table's TOTAL live mask broadcast-sized: beyond the cap
-      // the read-side anti-join and the maintenance paths should not
-      // carry it — compact (materializes every mask) or use the COW path
-      require(liveTotal + maskRows.length <= cap,
-        s"$opName would push the live positional-delete mask past " +
-          s"$cap rows: compact the table first (folds every mask), or " +
-          "use the copy-on-write path (deleteWhere/merge)")
-      // ONE small DV parquet per commit (a target's positions must not
-      // span DV files — the manifest carries one line per target)
-      val stagedDv = stage(spark.createDataFrame(
-        java.util.Arrays.asList(maskRows: _*), maskFrame.schema)
-        .coalesce(1), Nil)
-      val counts: Seq[(String, Long)] = maskRows.groupBy(_.getString(0))
-        .view.mapValues(_.length.toLong).toSeq.sortBy(_._1)
-      val dvRel = stagedDv.head
-      // update: the touched rows re-staged once with assignments applied
-      val stagedData: Seq[String] = set match {
-        case Some(assigns) =>
-          val updated = hit.drop(fcol, pcol).select(
-            schema.fieldNames.toIndexedSeq.map(n =>
-              assigns.collectFirst { case (c, e) if c == n => e.as(n) }
-                .getOrElse(col(n))): _*)
-          validateChecks(updated, base)
-          stageWithStats(updated, layout,
-            base.map(bloomColsOf).getOrElse(Nil),
-            inheritedBloomBits(base), rebalanceOk = true)
-        case None => Nil
-      }
-      val next = base.getOrElse(-1) + 1
-      val newDvLines = counts.map { case (rel, n) =>
-        TxLogTable.encodeDvLine(TxLogTable.DvEntry(dvRel, next, n, rel)) }
-      val ndv = set match { // new values can appear only via assignments
-        case Some(_) =>
-          metaWithNdv(base, ndvFoldLines(base, stagedKmv(stagedData),
-            reset = false))
-        case None => tableMetaLines(base)
-      }
-      try {
-        Files.write(manifestPath(next),
-          encodeManifest(next, (metaLines(layout, opName, base.map(bloomColsOf).getOrElse(Nil)) ++
+      val noop =
+        Unchanged(TxLogTable.MergeStats(base.getOrElse(-1), 0, lines.size))
+      if (affected.isEmpty) noop // provably nothing matches
+      else {
+        // matched rows' positions, read through EVERY live mask (prior
+        // DVs and tombstones) so masks stay disjoint
+        val (rows, fcol, pcol) = readMaskedPos(schema,
+          affected, base, None, withPos = true)
+        val hit = rows.filter(coalesce(pred, lit(false)))
+        val maskFrame = hit.select(
+          substring(col(fcol), prefixLen + 1, Int.MaxValue).as("file"),
+          col(pcol).as("pos"))
+        // ONE headroom-bounded collect replaces the old stage-write +
+        // read-back-count pass (two actions plus a disk round-trip): the
+        // per-file counts become plain driver math and the small DV
+        // parquet is staged from the local rows as a 1-task write. The
+        // mask must stay broadcast-sized anyway (the read-side anti-join
+        // carries it), so the driver pull is the same order of memory the
+        // table already holds per read — and the pull itself is bounded
+        // BEFORE the cap check, so an over-cap bulk delete fails with the
+        // clean refusal below instead of materializing an unbounded mask.
+        val cap = TxLogTable.maxDvMaskRows(spark)
+        val liveTotal = base.map(dvsOf).getOrElse(Nil).map(_.n).sum
+        val maskRows = boundedMaskCollect(maskFrame, affected,
+          math.max(0L, cap - liveTotal))
+        if (maskRows.isEmpty) noop // predicate matched no surviving row
+        else {
+          // keep the table's TOTAL live mask broadcast-sized: beyond the cap
+          // the read-side anti-join and the maintenance paths should not
+          // carry it — compact (materializes every mask) or use the COW path
+          require(liveTotal + maskRows.length <= cap,
+            s"$opName would push the live positional-delete mask past " +
+              s"$cap rows: compact the table first (folds every mask), or " +
+              "use the copy-on-write path (deleteWhere/merge)")
+          // ONE small DV parquet per commit (a target's positions must not
+          // span DV files — the manifest carries one line per target)
+          val stagedDv = stage(spark.createDataFrame(
+            java.util.Arrays.asList(maskRows: _*), maskFrame.schema)
+            .coalesce(1), Nil)
+          val counts: Seq[(String, Long)] = maskRows.groupBy(_.getString(0))
+            .view.mapValues(_.length.toLong).toSeq.sortBy(_._1)
+          val dvRel = stagedDv.head
+          // update: the touched rows re-staged once with assignments applied
+          val stagedData: Seq[String] = set match {
+            case Some(assigns) =>
+              val updated = hit.drop(fcol, pcol).select(
+                schema.fieldNames.toIndexedSeq.map(n =>
+                  assigns.collectFirst { case (c, e) if c == n => e.as(n) }
+                    .getOrElse(col(n))): _*)
+              validateChecks(updated, base)
+              stageWithStats(updated, layout,
+                base.map(bloomColsOf).getOrElse(Nil),
+                inheritedBloomBits(base), rebalanceOk = true)
+            case None => Nil
+          }
+          val newDvLines = counts.map { case (rel, n) =>
+            TxLogTable.encodeDvLine(TxLogTable.DvEntry(dvRel, next, n, rel)) }
+          val ndv = set match { // new values can appear only via assignments
+            case Some(_) =>
+              metaWithNdv(base, ndvFoldLines(base, stagedKmv(stagedData),
+                reset = false))
+            case None => tableMetaLines(base)
+          }
+          Publish(metaLines(layout, opName,
+              base.map(bloomColsOf).getOrElse(Nil)) ++
             ndv ++ morLines(base) ++ dvCarryLines(base, lines) ++
             newDvLines ++ checkLines(base) ++ lines ++
-            tagVersion(stagedData, next))),
-          StandardOpenOption.CREATE_NEW)
-        return TxLogTable.MergeStats(next, 0, lines.size)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1 // lost the race: recompute against the new base
+            tagVersion(stagedData, next),
+            TxLogTable.MergeStats(next, 0, lines.size))
+        }
       }
     }
-    throw new IllegalStateException(
-      s"$opName lost the version race $maxAttempts times: $root")
   }
 
   /** Atomic keyed MOR UPSERT through positional deletes: every CURRENT row
@@ -5284,7 +5229,6 @@ final case class TxLogTable(spark: SparkSession, root: String) {
                 dropKeys: Option[DataFrame] = None,
                 op: String = "upsert-dv",
                 extraMeta: Seq[String] = Nil,
-                maxAttempts: Int = 10,
                 expectHead: Option[Int] = None): TxLogTable.MergeStats = {
     import org.apache.spark.sql.functions.{broadcast, count, count_if,
       max => fmax, min => fmin, substring}
@@ -5338,9 +5282,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         col(k) >= lit(bRow.getAs[Any](s"__mn_$k")) &&
           col(k) <= lit(bRow.getAs[Any](s"__mx_$k"))).reduce(_ && _))
     val prefixLen = dataDir.toString.length + 1 // abs path → rel
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion
+    optimisticCommit(op) { (base, next) =>
       // head-conditional commit: the caller's newRows/dropKeys were
       // computed from state AT expectHead — any other head means a
       // concurrent commit won and this delta is stale, so refuse here
@@ -5409,29 +5351,20 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         base.map(bloomColsOf).getOrElse(Nil), inheritedBloomBits(base),
         rebalanceOk = true)
       if (counts.isEmpty && stagedData.isEmpty) // nothing to mask or add
-        return TxLogTable.MergeStats(base.getOrElse(-1), 0, lines.size)
-      val next = base.getOrElse(-1) + 1
-      val newDvLines = counts.map { case (rel, n) =>
-        TxLogTable.encodeDvLine(
-          TxLogTable.DvEntry(stagedDv.head, next, n, rel)) }
-      try {
-        Files.write(manifestPath(next),
-          encodeManifest(next, (metaLines(layout, op,
-              base.map(bloomColsOf).getOrElse(Nil)) ++
-            metaWithNdv(base, ndvFoldLines(base, stagedKmv(stagedData),
-              reset = false)) ++
-            morLines(base) ++ dvCarryLines(base, lines) ++ newDvLines ++
-            checkLines(base) ++ extraMeta ++ lines ++
-            tagVersion(stagedData, next))),
-          StandardOpenOption.CREATE_NEW)
-        return TxLogTable.MergeStats(next, 0, lines.size)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1 // lost the race: recompute against the new base
+        Unchanged(TxLogTable.MergeStats(base.getOrElse(-1), 0, lines.size))
+      else {
+        val newDvLines = counts.map { case (rel, n) =>
+          TxLogTable.encodeDvLine(
+            TxLogTable.DvEntry(stagedDv.head, next, n, rel)) }
+        Publish(metaLines(layout, op, base.map(bloomColsOf).getOrElse(Nil)) ++
+          metaWithNdv(base, ndvFoldLines(base, stagedKmv(stagedData),
+            reset = false)) ++
+          morLines(base) ++ dvCarryLines(base, lines) ++ newDvLines ++
+          checkLines(base) ++ extraMeta ++ lines ++
+          tagVersion(stagedData, next),
+          TxLogTable.MergeStats(next, 0, lines.size))
       }
     }
-    throw new IllegalStateException(
-      s"$op lost the version race $maxAttempts times: $root")
   }
 
   /** The `#key=` meta value recorded at `v`, if any — the generic accessor
@@ -5511,8 +5444,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * The expression must hold for the CURRENT snapshot too: enforcement
     * that starts with a violating table would lie to readers.
     */
-  def addCheck(schema: StructType, name: String, expr: String,
-               maxAttempts: Int = 10): Int = {
+  def addCheck(schema: StructType, name: String, expr: String): Int = {
     require(name.nonEmpty && !name.exists(c => c == '=' || c == '\n') &&
       !expr.contains('\n'), s"check name/expr not wire-safe: $name")
     val bad = snapshot(schema)
@@ -5520,12 +5452,9 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         org.apache.spark.sql.functions.expr(expr), lit(true))).count()
     require(bad == 0,
       s"cannot add check '$name': $bad existing rows violate ($expr)")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion
+    optimisticCommit("addCheck") { (base, next) =>
       val layout = base.map(partitionColsOf).getOrElse(Nil)
-      val next = base.getOrElse(-1) + 1
-      val lines =
+      Publish(
         tableMetaLines(base) ++
           metaLines(layout, "add-check",
           base.map(bloomColsOf).getOrElse(Nil)) ++
@@ -5533,18 +5462,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
           base.map(b => dvLines(b)).getOrElse(Nil) ++
           checkLines(base) ++
           Seq(s"#check:$name=$expr") ++
-          base.map(dataLines).getOrElse(Nil)
-      try {
-        Files.write(manifestPath(next),
-          encodeManifest(next, lines),
-          StandardOpenOption.CREATE_NEW)
-        return next
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => attempt += 1
-      }
+          base.map(dataLines).getOrElse(Nil), next)
     }
-    throw new IllegalStateException(
-      s"addCheck lost the version race $maxAttempts times: $root")
   }
 
   // ONE validation job for all constraints: a row fails a check only when
@@ -5584,7 +5503,6 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * commit at all) was derived from state AT that head.
     */
   def commit(df: DataFrame, overwrite: Boolean,
-             maxAttempts: Int = 10,
              partitionCols: Seq[String] = Nil,
              op: String = null,
              bloomCols: Seq[String] = Nil,
@@ -5647,9 +5565,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     // batch KMV from the STAGED files (never re-executes the caller's
     // plan), computed once outside the publish retry loop
     val batchKmv = stagedKmv(staged)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val base = latestVersion
+    optimisticCommit("commit") { (base, next) =>
       // head-conditional commit (see upsertPos): a caller that derived
       // this batch — or the decision that an EMPTY batch is the right
       // consumption record — from state at expectHead must not land it
@@ -5675,7 +5591,6 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       val props = (if (overwrite) Nil
         else morLines(base) ++ base.map(dvLines).getOrElse(Nil)) ++
         checkLines(base)
-      val next = base.getOrElse(-1) + 1
       // A layout-CHANGING overwrite must not carry layout-bound specs
       // into a manifest whose partitionCols no longer support them: a
       // stale #bucketSpec on an unpartitioned table would make every
@@ -5704,24 +5619,13 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       // NDV fold: append merges the batch minima into the carried
       // sketch; overwrite starts fresh — the old corpus is gone
       val ndvLines = ndvFoldLines(base, batchKmv, reset = overwrite)
-      try {
-        // the atomic publish: create-if-absent of the version manifest.
-        // An explicit bloomBits replaces the carried table property; the
-        // carried line serves inheritance otherwise.
-        Files.write(manifestPath(next),
-          encodeManifest(next, (metaLines(partitionCols, opName, effBloom) ++
-            (if (bloomBits > 0) Seq(s"#bloomBits=$bloomBits") else Nil) ++
-            metaWithNdv(base, ndvLines).filterNot(dropLines) ++
-            props ++ extraMeta ++
-            carried ++ tagVersion(staged, next))),
-          StandardOpenOption.CREATE_NEW)
-        return next
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempt += 1 // lost the race — re-resolve latest and retry
-      }
+      // An explicit bloomBits replaces the carried table property; the
+      // carried line serves inheritance otherwise.
+      Publish(metaLines(partitionCols, opName, effBloom) ++
+        (if (bloomBits > 0) Seq(s"#bloomBits=$bloomBits") else Nil) ++
+        metaWithNdv(base, ndvLines).filterNot(dropLines) ++
+        props ++ extraMeta ++
+        carried ++ tagVersion(staged, next), next)
     }
-    throw new IllegalStateException(
-      s"commit lost the version race $maxAttempts times: $root")
   }
 }

@@ -19,7 +19,10 @@ package graft.util
   * threads come from a cached daemon pool (60 s idle reap). Results
   * preserve input order, thunks START in input order, and the
   * LOWEST-INDEX failure is rethrown unwrapped, so callers observe the
-  * same error the sequential loop would have raised first.
+  * same error the sequential loop would have raised first; the other
+  * thunks' failures ride along as suppressed exceptions. A fatal JVM
+  * error is never treated as a thunk failure: no further thunk starts,
+  * and it is rethrown ahead of any ordinary failure.
   */
 object Overlap {
 
@@ -35,7 +38,8 @@ object Overlap {
     * results in input order; fewer than two thunks run inline (no pool
     * hop). Each helper binds the caller's active SparkSession so plan
     * building and actions on pool threads resolve against the same
-    * session. */
+    * session, and unbinds it when done so a pooled thread never pins a
+    * stopped session. */
   def inParallel[A](thunks: Seq[() => A], maxInFlight: Int = 3): Seq[A] =
     if (thunks.lengthCompare(2) < 0) thunks.map(_())
     else {
@@ -49,7 +53,12 @@ object Overlap {
         while (i < n) {
           results.set(i,
             try Right(thunks(i)())
-            catch { case e: Throwable => Left(e) })
+            catch {
+              case scala.util.control.NonFatal(e) => Left(e)
+              case fatal: Throwable =>
+                next.set(n) // no worker starts another thunk
+                throw fatal
+            })
           i = next.getAndIncrement()
         }
       }
@@ -59,14 +68,25 @@ object Overlap {
             override def run(): Unit = {
               sess.foreach(
                 org.apache.spark.sql.SparkSession.setActiveSession)
-              work()
+              try work()
+              finally org.apache.spark.sql.SparkSession.clearActiveSession()
             }
           })
         }
       work() // the caller is a worker too
-      helpers.foreach(_.get())
+      // only a fatal error escapes a helper's work loop: rethrow it bare
+      helpers.foreach { h =>
+        try h.get()
+        catch {
+          case e: java.util.concurrent.ExecutionException => throw e.getCause
+        }
+      }
       val out = (0 until n).map(results.get)
-      out.collectFirst { case Left(e) => throw e }
+      val failures = out.collect { case Left(e) => e }
+      failures.headOption.foreach { first =>
+        failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      }
       out.map(_.toOption.get)
     }
 }

@@ -25,7 +25,7 @@ import graft.TestSpark
   * | staged write        | vacuum               | survive (minAge)      |
   * | staged write        | rebucket             | refuse (spec changed) |
   * | tag 'x'             | tag 'x'              | one wins (atomic ref) |
-  * | branch 'x'          | branch 'x'           | one wins (CREATE_NEW) |
+  * | branch 'x'          | branch 'x'           | one wins (putIfAbsent)|
   * | branch publish      | main commit          | refuse (fork moved)   |
   * | MV refresh          | MV refresh           | idempotent (re-mask)  |
   */
@@ -216,8 +216,8 @@ class TxLogConcurrencySpec extends AnyFunSuite {
       val results = Await.result(Future.sequence(Seq(
         Future(scala.util.Try(t.tag("x"))),
         Future(scala.util.Try(t.tag("x"))))), 60.seconds)
-      assert(results.count(_.isSuccess) >= 1,
-        "at least one tag create must win")
+      assert(results.count(_.isSuccess) == 1,
+        "exactly one tag create wins")
       assert(t.tags() == Map("x" -> 0), "exactly one ref exists")
     } finally pool.shutdown()
   }
@@ -234,7 +234,7 @@ class TxLogConcurrencySpec extends AnyFunSuite {
       val results = Await.result(Future.sequence(Seq(
         Future(scala.util.Try(t.createBranch("x"))),
         Future(scala.util.Try(t.createBranch("x"))))), 60.seconds)
-      assert(results.count(_.isSuccess) >= 1)
+      assert(results.count(_.isSuccess) == 1)
       assert(t.branches() == Seq("x"))
       assert(t.branchTable("x").forkedFrom.contains(0),
         "the surviving branch is a coherent fork")

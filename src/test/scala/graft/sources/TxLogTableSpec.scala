@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -611,18 +611,131 @@ class TxLogTableSpec extends AnyFunSuite {
   }
 
   test("losing the version race retries onto the next version") {
+    import org.apache.spark.sql.functions.col
+    // one operation from each commit family; each returns its version
+    val families: Seq[(String, TxLogTable => Int, Set[(Long, String)])] =
+      Seq(
+        ("commit", _.commit(Seq((4L, "d")).toDF("id", "v"),
+          overwrite = false, partitionCols = Seq("v")),
+          Set((1L, "a"), (2L, "b"), (4L, "d"))),
+        ("merge", _.merge(schema, Seq((2L, "X"), (4L, "d")).toDF("id", "v"),
+          Seq("id")).version,
+          Set((1L, "a"), (2L, "X"), (4L, "d"))),
+        ("deleteWhere", _.deleteWhere(schema, col("id") === 1L).version,
+          Set((2L, "b"))),
+        ("compactSmall", _.compactSmall(schema, minBytes = 1L << 30).version,
+          Set((1L, "a"), (2L, "b"))),
+        ("addColumn", _.addColumn("extra", LongType),
+          Set((1L, "a"), (2L, "b"))),
+        ("restore", _.restore(1), Set((1L, "a"))),
+        ("addCheck", _.addCheck(schema, "pos", "id > 0"),
+          Set((1L, "a"), (2L, "b"))),
+        ("commitDynamic", _.commitDynamic(Seq((20L, "b")).toDF("id", "v"),
+          Seq("v")), Set((1L, "a"), (20L, "b"))))
+    families.foreach { case (family, op, expect) =>
+      withClue(s"$family: ") {
+        val t = fresh()
+        t.create(schema, partitionCols = Seq("v"))
+        Seq((1L, "a"), (2L, "b"), (3L, "c")).foreach(r =>
+          t.commit(Seq(r).toDF("id", "v"), overwrite = false,
+            partitionCols = Seq("v")))
+        // a concurrent writer claims v4 first, rolling the table back to
+        // v2's content: the operation must re-plan against v4 (so (3, c)
+        // is gone) and land on v5
+        val log = Paths.get(t.root, "_log")
+        Files.copy(log.resolve("v00000002.manifest"),
+          log.resolve("v00000004.manifest"))
+        assert(op(t) == 5)
+        assert(t.versions == (0 to 5))
+        assert(rows(t, Some(4)) == Set((1L, "a"), (2L, "b")))
+        assert(rows(t, Some(5)) == expect)
+      }
+    }
+  }
+
+  test("a reader polling entries() never sees a partial manifest") {
+    val t = fresh()
+    // entries() reads only manifests, so two synthetic lists of 8,000
+    // file lines stand in for a many-file table: every restore below
+    // publishes a ~500 KB self-contained manifest without writing data
+    def listing(batch: String): Seq[String] = (0 until 8000).map(i =>
+      TxLogTable.FileEntry(f"k=$i%04d/$batch-part-$i%05d.parquet",
+        Map("id" -> (i * 100L, i * 100L + 99))).encoded)
+    val log = Paths.get(t.root, "_log")
+    Files.createDirectories(log)
+    Seq("a", "b").zipWithIndex.foreach { case (batch, v) =>
+      Files.write(log.resolve(f"v$v%08d.manifest"),
+        ("#op=seed" +: listing(batch)).mkString("\n").getBytes(UTF_8))
+    }
+    val valid = Seq("a", "b").map(b => listing(b).map(l =>
+      TxLogTable.decodeEntry(l).rel).toSet)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    var reads = 0
+    val bad = scala.collection.mutable.ArrayBuffer.empty[String]
+    // the reader lists versions in a tight loop and reads the moment a
+    // new one appears — inside the write window, if the name became
+    // visible before its bytes
+    val reader = new Thread(() => {
+      var last = t.latestVersion
+      while (!done.get()) {
+        val head = t.latestVersion
+        if (head != last) {
+          last = head
+          try {
+            val seen = t.entries().map(_.rel).toSet
+            if (!valid.contains(seen)) bad += s"${seen.size} files"
+          } catch {
+            case scala.util.control.NonFatal(e) => bad += e.toString
+          }
+          reads += 1
+        }
+      }
+    })
+    reader.start()
+    try (1 to 20).foreach(i => t.restore(i % 2))
+    finally { done.set(true); reader.join() }
+    assert(t.versions == (0 to 21))
+    assert(reads > 0)
+    assert(bad.isEmpty,
+      s"${bad.size} of $reads reads saw no committed version: ${bad.take(5)}")
+  }
+
+  test("vacuum deletes stale temp files under _log; young ones survive") {
     val t = fresh()
     t.commit(Seq((1L, "a")).toDF("id", "v"), overwrite = true)
-    // occupy v1 manifest out-of-band: the next commit must land on v2
-    Files.createDirectories(Paths.get(t.root, "_log"))
-    Files.write(Paths.get(t.root, "_log", "v00000001.manifest"),
-      "".getBytes(UTF_8), StandardOpenOption.CREATE_NEW)
-    val v = t.commit(Seq((2L, "b")).toDF("id", "v"), overwrite = false)
-    assert(v == 2)
-    // the squatter v1 is an empty table; v2 appended onto latest-at-retry
-    // (v1's empty manifest), so it carries only the delta
-    assert(rows(t, Some(2)) == Set((2L, "b")))
-    assert(rows(t, Some(0)) == Set((1L, "a")))
+    t.registerCursor("c", 0)
+    t.tag("t0")
+    val log = Paths.get(t.root, "_log")
+    val hour = 60L * 60 * 1000
+    // a crash inside putIfAbsent / replaceAtomically leaves files shaped
+    // like these; `cursor-123.tmp` is an older writer's temp name
+    def plant(dir: java.nio.file.Path, name: String, age: Long) = {
+      val p = dir.resolve(name)
+      Files.write(p, "#op=partial\nk=0".getBytes(UTF_8))
+      Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime
+        .fromMillis(System.currentTimeMillis() - age))
+      p
+    }
+    val stale = Seq(
+      plant(log, ".v00000001.manifest.dead.tmp", 2 * hour),
+      plant(log.resolve("cursors"), ".c.cursor.dead.tmp", 2 * hour),
+      plant(log.resolve("tags"), ".t1.tag.dead.tmp", 2 * hour),
+      plant(log.resolve("cursors"), "cursor-123.tmp", 2 * hour))
+    val young = Seq(
+      plant(log, ".v00000001.manifest.live.tmp", 0),
+      plant(log.resolve("tags"), ".t1.tag.live.tmp", 0))
+    def unseen(): Unit = {
+      assert(t.versions == Seq(0))
+      assert(t.cursors().keySet == Set("c"))
+      assert(t.tags() == Map("t0" -> 0))
+    }
+    unseen()
+    t.vacuum(minAgeMillis = hour, dryRun = true)
+    assert((stale ++ young).forall(Files.exists(_)))
+    t.vacuum(minAgeMillis = hour)
+    assert(stale.forall(Files.notExists(_)))
+    assert(young.forall(Files.exists(_)))
+    unseen()
   }
 
   test("merge rewrites only key-overlapping files; fresh keys append") {

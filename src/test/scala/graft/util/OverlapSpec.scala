@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (the MV refresh wave runs on it): pin the contract callers rely on —
   * input-order results, bounded in-flight, the LOWEST-index failure
   * rethrown unwrapped (matching what a sequential loop would raise
-  * first), and inline execution below two thunks. */
+  * first) with sibling failures suppressed onto it, fatal errors never
+  * caught, and inline execution below two thunks. */
 class OverlapSpec extends AnyFunSuite {
 
   test("results preserve input order under concurrency") {
@@ -26,6 +27,26 @@ class OverlapSpec extends AnyFunSuite {
         () => 3))
     }
     assert(e.getMessage === "lo")
+  }
+
+  test("sibling failures ride on the rethrown error as suppressed") {
+    val e = intercept[IllegalStateException] {
+      Overlap.inParallel(Seq[() => Int](
+        () => 1,
+        () => { Thread.sleep(30); throw new IllegalStateException("lo") },
+        () => throw new IllegalArgumentException("hi")))
+    }
+    assert(e.getMessage === "lo")
+    assert(e.getSuppressed.map(_.getMessage).toSeq === Seq("hi"))
+  }
+
+  test("a fatal error propagates ahead of ordinary failures") {
+    val e = intercept[LinkageError] {
+      Overlap.inParallel(Seq[() => Int](
+        () => { Thread.sleep(30); throw new IllegalStateException("lo") },
+        () => throw new LinkageError("fatal")))
+    }
+    assert(e.getMessage === "fatal")
   }
 
   test("in-flight concurrency is bounded by maxInFlight") {
