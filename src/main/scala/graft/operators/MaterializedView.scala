@@ -1412,10 +1412,10 @@ object MaterializedView {
       catch { case e: Throwable => unwind(e) }
     }
     val forkV =
-      try mv.createBranch(name, rewrite = lines =>
+      try mv.createBranch(name, rewrite = annotations =>
         // the fork manifest's consumed/pinned versions translate to the
         // fact/dim BRANCHES' numbering, whose fork points are v0
-        lines.filterNot(l => l.startsWith("#mvsrc=") ||
+        annotations.filterNot(l => l.startsWith("#mvsrc=") ||
             l.startsWith("#mvdim")) ++
           Seq("#mvsrc=0") ++
           d.dims.indices.map(i => s"#${dimMetaKey(i)}=0"))
@@ -1480,8 +1480,8 @@ object MaterializedView {
     val fPub = fact.publishBranch(name, expectHead = Some(bfHead))
     val dPubs = dimTs.zip(bdHeads).map { case (dt, dh) =>
       dt.publishBranch(name, expectHead = Some(dh)) }
-    val vPub = mv.publishBranch(name, rewrite = lines =>
-      lines.filterNot(l => l.startsWith("#mvsrc=") ||
+    val vPub = mv.publishBranch(name, rewrite = annotations =>
+      annotations.filterNot(l => l.startsWith("#mvsrc=") ||
           l.startsWith("#mvdim")) ++
         Seq(s"#mvsrc=$fPub") ++
         dPubs.zipWithIndex.map { case (x, i) => s"#${dimMetaKey(i)}=$x" },

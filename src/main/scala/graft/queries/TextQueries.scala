@@ -98,14 +98,15 @@ object TextQueries {
     * Measured-and-REJECTED (round 3): a native one-pass `minhash_sig`
     * Catalyst expression fusing the 16 interpreted `array_min(transform)`
     * trees (single tokenization, 16 running minima). Value-identical and
-    * structurally cleaner, but BandAB showed no win (0.81–0.88 s vs
-    * 0.75–1.10 s warm at sf0.1) — the 16 md5 digests per distinct token
-    * dwarf HOF dispatch and re-tokenization at any document length, so the
-    * fusion saves nothing. Contrast `catalyst.CosineSim`, adopted on the
-    * same day's measurements: there the per-element work is a bare FP
-    * multiply-add, interpretation overhead WAS the bottleneck, and the
-    * native loop halved its query. Promotion to a native expression pays
-    * iff per-element work is cheap relative to lambda dispatch.
+    * structurally cleaner, but an A/B showed no win (0.81–0.88 s vs
+    * 0.75–1.10 s warm at sf0.1; PLANS.md, "Native cosine") — the 16 md5
+    * digests per distinct token dwarf HOF dispatch and re-tokenization at
+    * any document length, so the fusion saves nothing. Contrast
+    * `catalyst.CosineSim`, adopted on the same day's measurements: there
+    * the per-element work is a bare FP multiply-add, interpretation
+    * overhead WAS the bottleneck, and the native loop halved its query.
+    * Promotion to a native expression pays iff per-element work is cheap
+    * relative to lambda dispatch.
     */
   private[graft] def statelessBands(docs: DataFrame, nBands: Int = 4,
                                     rowsPer: Int = 4): DataFrame = {
@@ -127,10 +128,10 @@ object TextQueries {
   /** Distinct word 3-grams of `text` — via two zip_with string concats
     * over shifted views, NOT `transform(sequence, i -> concat_ws(slice(
     * toks, i+1, 3)))`: the slice form allocates a fresh 3-element array
-    * per gram and measured 6x slower at sf0.1 (5.85 s vs 0.98 s explode,
-    * tools/DecontAB). zip_with's trailing partial grams (null-padded) are
-    * cut by the outer slice to exactly the size-2 full grams. Shared by
-    * decontamination and the boilerplate detector.
+    * per gram and measured 6x slower at sf0.1 (5.85 s vs 0.98 s explode;
+    * PLANS.md, "Round-5 additions"). zip_with's trailing partial grams
+    * (null-padded) are cut by the outer slice to exactly the size-2 full
+    * grams. Shared by decontamination and the boilerplate detector.
     */
   private[queries] def wordGrams(text: Column): Column = {
     val n = 3

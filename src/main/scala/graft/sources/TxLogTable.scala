@@ -112,11 +112,12 @@ object TxLogTable {
   private val CommitAttempts = 10
 
   /** What one planning pass of an optimistic commit decided: publish the
-    * full manifest `lines` as the next version and return `result`, or
-    * return `result` without committing anything.
+    * manifest `header` + `data` as the next version and return `result`,
+    * or return `result` without committing anything.
     */
   private[sources] sealed trait CommitPlan[+R]
-  private[sources] final case class Publish[+R](lines: Seq[String], result: R)
+  private[sources] final case class Publish[+R](header: ManifestHeader,
+                                                data: Seq[String], result: R)
       extends CommitPlan[R]
   private[sources] final case class Unchanged[+R](result: R)
       extends CommitPlan[R]
@@ -190,6 +191,14 @@ object TxLogTable {
     l.startsWith("#delta=") || l.startsWith("#rm=") ||
       l.startsWith("#chain=") || l.startsWith("#minReader=")
 
+  /** One resolved manifest: its header lines, decoded once on first use,
+    * and its data lines.
+    */
+  private[sources] final class Resolved(val meta: Seq[String],
+                                        val data: Seq[String]) {
+    lazy val header: ManifestHeader = ManifestHeader.decode(meta)
+  }
+
   /** Process-wide resolved-manifest cache. Sound because manifests are
     * write-once: published by putIfAbsent, never modified in place, only
     * ever DELETED (vacuum) — so (absolute path, size, mtime) identifies
@@ -198,23 +207,23 @@ object TxLogTable {
     * (≈ file count × 120 B) and 512 versions cover any live working set.
     */
   private val manifestCache =
-    new java.util.LinkedHashMap[String, ((Long, Long), Seq[String])](
+    new java.util.LinkedHashMap[String, ((Long, Long), Resolved)](
       64, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, ((Long, Long), Seq[String])])
+          e: java.util.Map.Entry[String, ((Long, Long), Resolved)])
           : Boolean = size() > 512
     }
 
   private[sources] def cachedManifest(key: String, stamp: (Long, Long))
-                                     (load: => Seq[String]): Seq[String] =
+                                     (load: => Resolved): Resolved =
     manifestCache.synchronized {
       Option(manifestCache.get(key)).collect {
-        case (s, lines) if s == stamp => lines }
+        case (s, r) if s == stamp => r }
     }.getOrElse {
-      val lines = load
+      val r = load
       manifestCache.synchronized {
-        manifestCache.put(key, (stamp, lines)); () }
-      lines
+        manifestCache.put(key, (stamp, r)); () }
+      r
     }
 
   /** Process-wide memo of driver-collected SMALL version snapshots —
@@ -886,29 +895,11 @@ object TxLogTable {
     * `#dv=` line PER TARGET so a later rewrite of one target drops
     * exactly its mask share.
     *
-    * Wire format: `#dv=<dvRel>;v=<v>;n=<n>;file=<targetRel>` — the
-    * target rel comes LAST because hive partition segments can contain
-    * arbitrary escaped bytes; `dvRel` is always an unpartitioned staged
-    * path (`batch-<uuid>/part-*.parquet`, no `;`).
+    * Wire format: `#dv=<dvRel>;v=<v>;n=<n>;file=<targetRel>` (see
+    * [[ManifestHeader]]); `dvRel` is always an unpartitioned staged path
+    * (`batch-<uuid>/part-*.parquet`, no `;`).
     */
   final case class DvEntry(dvRel: String, v: Int, n: Long, file: String)
-
-  def decodeDvLine(line: String): Option[DvEntry] = {
-    if (!line.startsWith("#dv=")) return None
-    val body = line.stripPrefix("#dv=")
-    val c1 = body.indexOf(";v=")
-    val c2 = if (c1 < 0) -1 else body.indexOf(";n=", c1)
-    val c3 = if (c2 < 0) -1 else body.indexOf(";file=", c2)
-    if (c3 < 0) None
-    else scala.util.Try(DvEntry(
-      body.substring(0, c1),
-      body.substring(c1 + 3, c2).toInt,
-      body.substring(c2 + 3, c3).toLong,
-      body.substring(c3 + 6))).toOption
-  }
-
-  def encodeDvLine(d: DvEntry): String =
-    s"#dv=${d.dvRel};v=${d.v};n=${d.n};file=${d.file}"
 
   /** What a copy-on-write [[TxLogTable.merge]] did: the committed version,
     * how many files were rewritten (their key stats overlapped the batch's
@@ -1045,27 +1036,24 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         java.util.Arrays.asList(rows: _*), snap.schema)
     }
 
-  // Manifest format: lines starting with '#' are metadata
-  // (`#partitionCols=a,b`, `#commitMillis=...`, `#op=...` — unknown keys
-  // are ignored by readers, so the format is forward-extensible), the rest
-  // are data-file paths relative to data/, each optionally stats-tagged.
-  // A DELTA manifest (`#delta=<base>`, `#minReader=2`) additionally
-  // carries `#rm=<rel>` removals; its data lines are ADDITIONS against
-  // the resolved base. META lines are always complete per manifest (only
-  // the file LIST is delta'd) so every `#key=` reader below works on any
-  // layout unchanged.
+  // Manifest format: a [[ManifestHeader]] plus data-file paths relative
+  // to data/, each optionally stats-tagged. A DELTA manifest
+  // (`#delta=<base>`, `#minReader=2`) additionally carries `#rm=<rel>`
+  // removals; its data lines are ADDITIONS against the resolved base.
+  // The header is always complete per manifest (only the file LIST is
+  // delta'd), so resolution just strips the delta keys from it.
   private def rawManifestLines(v: Int): Seq[String] =
     new String(Files.readAllBytes(manifestPath(v)), UTF_8)
       .split("\n").toSeq.filter(_.nonEmpty)
 
-  /** Resolved manifest lines of `v`: delta chains folded down to the
-    * nearest checkpoint, delta-machinery keys stripped — callers see the
-    * exact line list a self-contained manifest would hold. Cached
-    * process-wide (manifests are write-once), so resolving a chain costs
-    * one file read per UNCACHED link, and scanning history oldest-first
-    * is O(versions) reads total.
+  /** Resolved manifest of `v`: delta chains folded down to the nearest
+    * checkpoint, delta-machinery keys stripped — callers see the exact
+    * content a self-contained manifest would hold. Cached process-wide
+    * (manifests are write-once), so resolving a chain costs one file
+    * read per UNCACHED link, and scanning history oldest-first is
+    * O(versions) reads total.
     */
-  private def manifestLines(v: Int): Seq[String] = {
+  private def resolved(v: Int): TxLogTable.Resolved = {
     val p = manifestPath(v)
     // stamp BEFORE the read: write-once files make a pre-read stamp only
     // conservatively stale (a mismatch re-reads, never serves wrong lines)
@@ -1076,7 +1064,10 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     }
   }
 
-  private def resolveLines(raw: Seq[String]): Seq[String] = {
+  /** The decoded header of version `v`. */
+  def headerOf(v: Int): ManifestHeader = resolved(v).header
+
+  private def resolveLines(raw: Seq[String]): TxLogTable.Resolved = {
     raw.collectFirst { case l if l.startsWith("#minReader=") =>
         l.stripPrefix("#minReader=").toInt }
       .filter(_ > TxLogTable.SupportedReaderVersion)
@@ -1087,23 +1078,22 @@ final case class TxLogTable(spark: SparkSession, root: String) {
             "upgrade before reading (refusing beats silently dropping " +
             "the lines this reader cannot interpret)")
       }
+    val (meta, data) = raw.partition(ManifestHeader.isHeaderLine)
     raw.collectFirst { case l if l.startsWith("#delta=") =>
         l.stripPrefix("#delta=").toInt } match {
-      case None => raw
+      case None => new TxLogTable.Resolved(meta, data)
       case Some(b) =>
-        val baseData = manifestLines(b).filterNot(_.startsWith("#"))
         val removed = raw.collect { case l if l.startsWith("#rm=") =>
           l.stripPrefix("#rm=") }.toSet
-        val added = raw.filterNot(_.startsWith("#"))
-        val addedRels = added.iterator.map(TxLogTable.relOf).toSet
-        val meta = raw.filter(l =>
-          l.startsWith("#") && !TxLogTable.isDeltaMachinery(l))
-        // an added rel REPLACES a base line of the same rel (stats may
-        // have been re-derived); base order then adds, so resolution is
-        // deterministic per version
-        meta ++ baseData.filterNot { l =>
-          val r = TxLogTable.relOf(l); removed(r) || addedRels(r)
-        } ++ added
+        val addedRels = data.iterator.map(TxLogTable.relOf).toSet
+        // a delta's data lines are additions: an added rel REPLACES a
+        // base line of the same rel (stats may have been re-derived);
+        // base order then adds, so resolution is deterministic per version
+        new TxLogTable.Resolved(
+          meta.filterNot(TxLogTable.isDeltaMachinery),
+          dataLines(b).filterNot { l =>
+            val r = TxLogTable.relOf(l); removed(r) || addedRels(r)
+          } ++ data)
     }
   }
 
@@ -1128,15 +1118,17 @@ final case class TxLogTable(spark: SparkSession, root: String) {
   // is atomic and the content logically identical, so this is the one
   // sanctioned exception to write-once manifests; the resolved-lines
   // cache keys on (size, mtime) and re-reads the new encoding.
-  private def materializeManifest(v: Int): Unit =
+  private def materializeManifest(v: Int): Unit = {
+    val r = resolved(v)
     TxLogTable.replaceAtomically(manifestPath(v),
-      manifestLines(v).mkString("\n").getBytes(UTF_8))
+      (r.meta ++ r.data).mkString("\n").getBytes(UTF_8))
+  }
 
   private def checkpointInterval: Int =
     spark.conf.getOption("spark.graft.sql.logCheckpointInterval")
       .map(_.toInt).getOrElse(TxLogTable.DefaultLogCheckpointInterval)
 
-  /** Encode the commit at `next` whose FULL intended line list is `lines`:
+  /** Encode the commit at `next` whose full content is `header` + `data`:
     * a delta manifest against `next - 1` when the chain stays under the
     * checkpoint interval AND the delta bytes actually undercut the full
     * encoding (a whole-table rewrite naturally fails that test and
@@ -1146,17 +1138,17 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * evolution, streaming sink) gets O(delta) metadata without knowing
     * deltas exist.
     */
-  private def encodeManifest(next: Int, lines: Seq[String]): Array[Byte] = {
-    val full = lines.mkString("\n").getBytes(UTF_8)
+  private def encodeManifest(next: Int, header: ManifestHeader,
+                             data: Seq[String]): Array[Byte] = {
+    val meta = header.lines
+    val full = (meta ++ data).mkString("\n").getBytes(UTF_8)
     val interval = checkpointInterval
     if (next == 0 || interval <= 1) return full
     val base = next - 1
     val (baseChain, baseData) =
-      try (chainLenOf(base),
-        manifestLines(base).filterNot(_.startsWith("#")))
+      try (chainLenOf(base), dataLines(base))
       catch { case scala.util.control.NonFatal(_) => return full }
     if (baseChain + 1 >= interval) return full
-    val (meta, data) = lines.partition(_.startsWith("#"))
     val baseByRel = baseData.map(l => TxLogTable.relOf(l) -> l).toMap
     val newRels = data.iterator.map(TxLogTable.relOf).toSet
     val removes = baseData.map(TxLogTable.relOf).filterNot(newRels)
@@ -1173,28 +1165,23 @@ final case class TxLogTable(spark: SparkSession, root: String) {
 
   /** Commit history, oldest first — the DESCRIBE HISTORY surface: which
     * operation produced each surviving version and when. Reads each
-    * manifest exactly ONCE (driver-side, O(versions) file reads — meta
-    * keys and the data-line count come from the same read; per-key metaOf
-    * calls would re-read every manifest per field, painful on
-    * object-store-like backends where each read is a round trip).
+    * manifest at most ONCE (driver-side, O(versions) file reads — the
+    * header and the data-line count come from the same cached read,
+    * which matters on object-store-like backends where each read is a
+    * round trip).
     */
   def history(): Seq[TxLogTable.VersionInfo] =
     versions.map { v =>
-      val lines = manifestLines(v)
-      def meta(key: String): Option[String] = lines.collectFirst {
-        case l if l.startsWith(s"#$key=") => l.stripPrefix(s"#$key=") }
-      TxLogTable.VersionInfo(v,
-        meta("commitMillis").flatMap(s => scala.util.Try(s.toLong).toOption),
-        meta("op"), lines.count(!_.startsWith("#")))
+      val r = resolved(v)
+      TxLogTable.VersionInfo(v, r.header.commitMillis, r.header.op,
+        r.data.size)
     }
 
   /** The op recorded at `v` — one manifest read, for callers (like the
     * streaming sink's replay fence) that must not pay [[history]]'s
     * O(all versions) for a single version's metadata.
     */
-  def opOf(v: Int): Option[String] =
-    manifestLines(v).collectFirst {
-      case l if l.startsWith("#op=") => l.stripPrefix("#op=") }
+  def opOf(v: Int): Option[String] = headerOf(v).op
 
   /** Latest version committed at or before `tsMillis` — timestamp-based
     * time travel (`snapshot(schema, versionAsOf(ts))`). None when the
@@ -1206,8 +1193,12 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       .lastOption.map(_.version)
 
   // raw data lines (path + optional stats) — what carried-file commits copy
-  private def dataLines(v: Int): Seq[String] =
-    manifestLines(v).filterNot(_.startsWith("#"))
+  private def dataLines(v: Int): Seq[String] = resolved(v).data
+
+  // the manifest file content of `header` + `data`
+  private def manifestBytes(header: ManifestHeader,
+                            data: Seq[String]): Array[Byte] =
+    (header.lines ++ data).mkString("\n").getBytes(UTF_8)
 
   /** Decoded file entries of `version` (default latest): path + stats. */
   def entries(version: Option[Int] = None): Seq[TxLogTable.FileEntry] =
@@ -1218,36 +1209,14 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     dataLines(v).map(_.takeWhile(_ != '\t'))
 
   /** The partition layout committed at `v` (empty = unpartitioned). */
-  def partitionColsOf(v: Int): Seq[String] =
-    manifestLines(v)
-      .collectFirst { case l if l.startsWith("#partitionCols=") =>
-        l.stripPrefix("#partitionCols=").split(",").toSeq.filter(_.nonEmpty) }
-      .getOrElse(Nil)
-
-  /** Bloom size in BITS recorded at `v` (`#bloomBits=`, default
-    * [[TxLogTable.Bloom.DefaultM]]). A table property like the bloom
-    * columns: the 8192-bit default saturates near ~850 distinct values
-    * per file (kn/m ≥ 2 pushes the false-positive rate past 50%, at which
-    * point a multi-key merge probe clears nothing), so tables whose files
-    * carry thousands of keys size up — 10 bits/value holds ~1% FPP, and a
-    * power-of-two m keeps the position math a mask.
-    */
-  def bloomBitsOf(v: Int): Int =
-    manifestLines(v)
-      .collectFirst { case l if l.startsWith("#bloomBits=") =>
-        l.stripPrefix("#bloomBits=").toInt }
-      .getOrElse(TxLogTable.Bloom.DefaultM)
+  def partitionColsOf(v: Int): Seq[String] = headerOf(v).partitionCols
 
   /** The bloom-indexed columns recorded at `v` — a TABLE property like the
     * partition layout: set once at a commit, inherited by every subsequent
     * append / merge / delete / compaction so rewritten files keep their
     * filters without each caller re-declaring them.
     */
-  def bloomColsOf(v: Int): Seq[String] =
-    manifestLines(v)
-      .collectFirst { case l if l.startsWith("#bloomCols=") =>
-        l.stripPrefix("#bloomCols=").split(",").toSeq.filter(_.nonEmpty) }
-      .getOrElse(Nil)
+  def bloomColsOf(v: Int): Seq[String] = headerOf(v).bloomCols
 
   // the table's current bloom columns (empty for a fresh/never-bloom table)
   private def inheritedBloomCols: Seq[String] =
@@ -1266,11 +1235,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * fact tables on every join and sorting neither, ever: the layout
     * paid the sort once, at write time.
     */
-  def sortColsOf(v: Int): Seq[String] =
-    manifestLines(v)
-      .collectFirst { case l if l.startsWith("#sortCols=") =>
-        l.stripPrefix("#sortCols=").split(",").toSeq.filter(_.nonEmpty) }
-      .getOrElse(Nil)
+  def sortColsOf(v: Int): Seq[String] = headerOf(v).sortCols
 
   /** Optimize-write table property (`#optimizeWrite=`, set at CREATE,
     * carried like the other table properties): when true, every
@@ -1287,45 +1252,27 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * their output partitioning (range or salted-hash), which a
     * rebalance shuffle would destroy.
     */
-  def optimizeWriteOf(v: Int): Boolean =
-    manifestLines(v).exists(_ == "#optimizeWrite=true")
+  def optimizeWriteOf(v: Int): Boolean = headerOf(v).optimizeWrite
 
-  /** Columns with a maintained distinct-count sketch (`#ndvCols=`, a
-    * TABLE property set at CREATE like the bloom columns). For each,
-    * every append/overwrite folds the batch's k-minimum-value hashes
-    * into a `#ndv:<col>=` manifest line ([[TxLogTable.KmvK]] 15-hex-char
-    * md5 minima, ~1 KB/column — O(columns) per MANIFEST, independent of
-    * file count, which is what makes it carryable at a million files).
-    * KMV merges by union-and-keep-k-smallest, so appends cost one
-    * bounded fold; row-preserving rewrites carry the lines untouched;
-    * deletes/merges leave the estimate stale-HIGH — conservative for the
-    * planner use (a high NDV means a low estimated filter selectivity,
-    * never an underestimated broadcast). Opt-in because the batch
-    * sketch is one extra column scan of the staged files per commit.
-    */
-  def ndvColsOf(v: Int): Seq[String] =
-    manifestLines(v)
-      .collectFirst { case l if l.startsWith("#ndvCols=") =>
-        l.stripPrefix("#ndvCols=").split(",").toSeq.filter(_.nonEmpty) }
-      .getOrElse(Nil)
-
-  /** The raw KMV minima per ndv column at `v` (sorted 15-hex md5
-    * prefixes, ≤ [[TxLogTable.KmvK]] each). */
-  def ndvSketchesOf(v: Int): Map[String, Seq[String]] =
-    manifestLines(v).collect {
-      case l if l.startsWith("#ndv:") && l.contains('=') =>
-        val body = l.stripPrefix("#ndv:")
-        val cut = body.indexOf('=')
-        body.substring(0, cut) ->
-          body.substring(cut + 1).split(",").toSeq.filter(_.nonEmpty)
-    }.toMap
-
-  /** Distinct-count estimates per ndv column at `v` — the KMV estimator:
-    * fewer than k minima IS the exact count; otherwise
+  /** Distinct-count estimates per ndv column at `v`. The columns are
+    * named by `#ndvCols=` (a TABLE property set at CREATE like the bloom
+    * columns). For each, every append/overwrite folds the batch's
+    * k-minimum-value hashes into a `#ndv:<col>=` manifest line
+    * ([[TxLogTable.KmvK]] 15-hex-char md5 minima, ~1 KB/column —
+    * O(columns) per MANIFEST, independent of file count, which is what
+    * makes it carryable at a million files). KMV merges by
+    * union-and-keep-k-smallest, so appends cost one bounded fold;
+    * row-preserving rewrites carry the lines untouched; deletes/merges
+    * leave the estimate stale-HIGH — conservative for the planner use (a
+    * high NDV means a low estimated filter selectivity, never an
+    * underestimated broadcast). Opt-in because the batch sketch is one
+    * extra column scan of the staged files per commit.
+    *
+    * The estimator: fewer than k minima IS the exact count; otherwise
     * (k-1) / (fraction of the 60-bit hash space below the k-th minimum).
     */
   def ndvOf(v: Int): Map[String, Long] =
-    ndvSketchesOf(v).map { case (c, hs) =>
+    headerOf(v).ndv.toMap.map { case (c, hs) =>
       c -> (if (hs.length < TxLogTable.KmvK) hs.length.toLong
             else {
               val top = java.lang.Long.parseLong(hs.max.substring(0, 15), 16)
@@ -1346,7 +1293,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * side and broadcasts what should have shuffled).
     */
   private def stagedKmv(staged: Seq[String]): Map[String, Seq[String]] = {
-    val cols = latestVersion.map(ndvColsOf).getOrElse(Nil)
+    val cols = latestVersion.map(headerOf(_).ndvCols).getOrElse(Nil)
     if (cols.isEmpty || staged.isEmpty) Map.empty
     else {
       val paths = staged.map(_.takeWhile(_ != '\t'))
@@ -1360,42 +1307,38 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     }
   }
 
-  /** `#ndv:` manifest lines folding `batch` into base's sketches (union,
-    * keep k smallest); `reset` starts fresh — the whole-table-overwrite
-    * contract. Nil when no ndv columns are declared; when non-empty the
-    * caller must drop the carried `#ndv:` lines it replaces.
+  /** `h` with `batch` folded into its sketches of every declared ndv
+    * column (union, keep k smallest); `reset` starts fresh — the
+    * whole-table-overwrite contract. Unchanged when no ndv column is
+    * declared.
     */
-  private def ndvFoldLines(base: Option[Int],
-                           batch: Map[String, Seq[String]],
-                           reset: Boolean): Seq[String] =
-    base.map(ndvColsOf).getOrElse(Nil).map { c =>
-      val parent = if (reset) Nil
-        else base.map(ndvSketchesOf).getOrElse(Map.empty)
-          .getOrElse(c, Nil)
-      val merged = (parent ++ batch.getOrElse(c, Nil))
-        .distinct.sorted.take(TxLogTable.KmvK)
-      s"#ndv:$c=${merged.mkString(",")}"
+  private def foldNdv(h: ManifestHeader, batch: Map[String, Seq[String]],
+                      reset: Boolean): ManifestHeader =
+    if (h.ndvCols.isEmpty) h
+    else {
+      val parent = if (reset) Map.empty[String, Seq[String]] else h.ndv.toMap
+      h.copy(ndv = h.ndvCols.map(c => c ->
+        (parent.getOrElse(c, Nil) ++ batch.getOrElse(c, Nil))
+          .distinct.sorted.take(TxLogTable.KmvK)))
     }
 
-  // tableMetaLines with the carried #ndv: lines replaced by `ndvLines`
-  // (pass-through when the fold produced nothing)
-  private def metaWithNdv(base: Option[Int],
-                          ndvLines: Seq[String]): Seq[String] =
-    tableMetaLines(base).filterNot(l =>
-      ndvLines.nonEmpty && l.startsWith("#ndv:")) ++ ndvLines
-
+  /** Bloom size in BITS recorded at `base` (`#bloomBits=`, default
+    * [[TxLogTable.Bloom.DefaultM]]). A table property like the bloom
+    * columns: the 8192-bit default saturates near ~850 distinct values
+    * per file (kn/m ≥ 2 pushes the false-positive rate past 50%, at which
+    * point a multi-key merge probe clears nothing), so tables whose files
+    * carry thousands of keys size up — 10 bits/value holds ~1% FPP, and a
+    * power-of-two m keeps the position math a mask.
+    */
   private def inheritedBloomBits(base: Option[Int]): Int =
-    base.map(bloomBitsOf).getOrElse(TxLogTable.Bloom.DefaultM)
+    base.flatMap(headerOf(_).bloomBits).getOrElse(TxLogTable.Bloom.DefaultM)
 
   /** The LOGICAL table schema recorded at `v` (`#schema=` meta line, JSON).
     * Present on catalog-created tables ([[create]]) and carried by every
     * commit; absent on tables that only ever saw raw `commit` calls, whose
     * schema is inferred from data files as before.
     */
-  def schemaOf(v: Int): Option[StructType] =
-    manifestLines(v)
-      .collectFirst { case l if l.startsWith("#schema=") =>
-        DataType.fromJson(l.stripPrefix("#schema=")).asInstanceOf[StructType] }
+  def schemaOf(v: Int): Option[StructType] = headerOf(v).schema
 
   /** Current logical schema, when recorded. */
   def tableSchema: Option[StructType] = latestVersion.flatMap(schemaOf)
@@ -1409,17 +1352,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * metadata commit: no data file is ever rewritten, pre-rename files
     * keep their physical column and the map re-labels it at read time.
     */
-  def colMapOf(v: Int): Map[String, String] =
-    manifestLines(v)
-      .collectFirst { case l if l.startsWith("#colmap=") =>
-        l.stripPrefix("#colmap=").split(",").iterator
-          .filter(_.nonEmpty).flatMap { kv =>
-            kv.split(">") match {
-              case Array(lg, ph) => Some(lg -> ph)
-              case _ => None
-            }
-          }.toMap }
-      .getOrElse(Map.empty)
+  def colMapOf(v: Int): Map[String, String] = headerOf(v).colmap
 
   private def inheritedColMap: Map[String, String] =
     latestVersion.map(colMapOf).getOrElse(Map.empty)
@@ -1458,20 +1391,6 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       col(c).as(physOf(map, c))): _*)
   }
 
-  // schema/colmap/bloom-size meta lines carried verbatim by every commit
-  // (the same carrying contract as morLines/checkLines — these are TABLE
-  // properties, not per-version facts)
-  private def tableMetaLines(base: Option[Int]): Seq[String] =
-    base.map(manifestLines(_).filter(l =>
-      l.startsWith("#schema=") || l.startsWith("#colmap=") ||
-        l.startsWith("#bloomBits=") ||
-        l.startsWith("#bucketSpec=") ||
-        l.startsWith("#timeSpec=") ||
-        l.startsWith("#sortCols=") ||
-        l.startsWith("#ndvCols=") || l.startsWith("#ndv:") ||
-        l.startsWith("#optimizeWrite=") ||
-        l.startsWith("#droppedPhys="))).getOrElse(Nil)
-
   /** Hash-bucket layout recorded at `v` — ONE `#bucketSpec=<key>:<n>`
     * line per bucket LEVEL, in order: the table is hive-partitioned on
     * the HIDDEN derived columns [[TxLogTable.bucketColAt]]
@@ -1497,13 +1416,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * better: a predicate on HALF the composite key still prunes its own
     * dir level, where a tuple hash needs the whole tuple.
     */
-  def bucketSpecsOf(v: Int): Seq[(String, Int)] =
-    manifestLines(v).collect {
-      case l if l.startsWith("#bucketSpec=") =>
-        val body = l.stripPrefix("#bucketSpec=")
-        val cut = body.lastIndexOf(':')
-        (body.substring(0, cut), body.substring(cut + 1).toInt)
-    }
+  def bucketSpecsOf(v: Int): Seq[(String, Int)] = headerOf(v).bucketSpecs
 
   /** Hidden-TIME-partitioning layout recorded at `v` — ONE
     * `#timeSpec=<col>:<unit>` line per time LEVEL, in order: the table
@@ -1520,13 +1433,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * partition-scoped maintenance (compactWhere / zorder-where /
     * overwrite) targets one day instead of the table.
     */
-  def timeSpecsOf(v: Int): Seq[(String, String)] =
-    manifestLines(v).collect {
-      case l if l.startsWith("#timeSpec=") =>
-        val body = l.stripPrefix("#timeSpec=")
-        val cut = body.lastIndexOf(':')
-        (body.substring(0, cut), body.substring(cut + 1))
-    }
+  def timeSpecsOf(v: Int): Seq[(String, String)] = headerOf(v).timeSpecs
 
   // derive the hidden bucket and time columns when this table's layout
   // declares them and the staged frame doesn't already carry them — the
@@ -1648,30 +1555,14 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     }
     Files.createDirectories(logDir)
     Files.createDirectories(dataDir)
-    TxLogTable.putIfAbsent(manifestPath(0),
-      (metaLines(partitionCols, "create", bloomCols) ++
-        Seq(s"#schema=${schema.json}") ++
-        bucketSpecs.map { case (k, n) => s"#bucketSpec=$k:$n" } ++
-        timeSpecs.map { case (k, u) => s"#timeSpec=$k:$u" } ++
-        (if (sortCols.nonEmpty)
-           Seq(s"#sortCols=${sortCols.mkString(",")}") else Nil) ++
-        (if (ndvCols.nonEmpty)
-           Seq(s"#ndvCols=${ndvCols.mkString(",")}") else Nil) ++
-        (if (optimizeWrite) Seq("#optimizeWrite=true") else Nil))
-        .mkString("\n").getBytes(UTF_8))
+    TxLogTable.putIfAbsent(manifestPath(0), manifestBytes(
+      ManifestHeader.empty.restamp("create").copy(
+        partitionCols = partitionCols, bloomCols = bloomCols,
+        schema = Some(schema), bucketSpecs = bucketSpecs,
+        timeSpecs = timeSpecs, sortCols = sortCols, ndvCols = ndvCols,
+        optimizeWrite = optimizeWrite), Nil))
     0
   }
-
-  /** Physical column names retired by DROP COLUMN (`#droppedPhys=`,
-    * carried forever): their bytes still sit in old data files, so
-    * [[addColumn]] must never re-bind one — a reader would resurrect the
-    * dropped data instead of filling NULL.
-    */
-  def droppedPhysOf(v: Int): Set[String] =
-    manifestLines(v)
-      .collectFirst { case l if l.startsWith("#droppedPhys=") =>
-        l.stripPrefix("#droppedPhys=").split(",").toSet.filter(_.nonEmpty) }
-      .getOrElse(Set.empty)
 
   // Serializable-conflict guard for the stage-then-race write paths
   // (commit / group-replace / dynamic-overwrite stage ONCE before their
@@ -1698,12 +1589,12 @@ final case class TxLogTable(spark: SparkSession, root: String) {
   /** THE commit protocol: every write that publishes a version runs
     * through here. Each pass resolves the latest version `base` and hands
     * it with `next = base + 1` to `plan`, which validates against `base`
-    * and returns either the FULL manifest line list for `next` or a
-    * no-op result. The manifest is encoded (delta or checkpoint) and
-    * published with [[TxLogTable.putIfAbsent]]; when another writer
-    * claimed `next` first, `plan` runs again against the new latest
-    * version. Staging done inside `plan` is redone per pass; files a
-    * lost pass staged stay unreferenced until `vacuum`.
+    * and returns either the full manifest (header and data lines) for
+    * `next` or a no-op result. The manifest is encoded (delta or
+    * checkpoint) and published with [[TxLogTable.putIfAbsent]]; when
+    * another writer claimed `next` first, `plan` runs again against the
+    * new latest version. Staging done inside `plan` is redone per pass;
+    * files a lost pass staged stay unreferenced until `vacuum`.
     */
   private def optimisticCommit[R](what: String)
       (plan: (Option[Int], Int) => TxLogTable.CommitPlan[R]): R = {
@@ -1713,11 +1604,11 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       val next = base.getOrElse(-1) + 1
       plan(base, next) match {
         case Unchanged(result) => result
-        case Publish(lines, result) =>
+        case Publish(header, data, result) =>
           val won =
             try {
               TxLogTable.putIfAbsent(manifestPath(next),
-                encodeManifest(next, lines))
+                encodeManifest(next, header, data))
               true
             } catch {
               case _: java.nio.file.FileAlreadyExistsException => false
@@ -1734,33 +1625,27 @@ final case class TxLogTable(spark: SparkSession, root: String) {
 
   // optimisticCommit for the metadata-only commits (schema evolution,
   // restore, branch publish): `build` gets the existing head and returns
-  // the full line list; the result is the committed version
-  private def metadataCommit(what: String)(build: Int => Seq[String]): Int =
+  // the full manifest; the result is the committed version
+  private def metadataCommit(what: String)
+      (build: Int => (ManifestHeader, Seq[String])): Int =
     optimisticCommit(what) { (base, next) =>
       require(base.isDefined, s"$what on nonexistent table $root")
-      Publish(build(base.get), next)
+      val (header, data) = build(base.get)
+      Publish(header, data, next)
     }
 
   private def recordedSchema(b: Int, what: String): StructType =
     schemaOf(b).getOrElse(throw new IllegalStateException(
       s"$what needs a recorded #schema (catalog-created table)"))
 
-  private def colmapLine(map: Map[String, String]): Seq[String] =
-    if (map.isEmpty) Nil
-    else Seq(s"#colmap=${map.toSeq.sorted
-      .map { case (l, p) => s"$l>$p" }.mkString(",")}")
-
-  private def droppedLine(dropped: Set[String]): Seq[String] =
-    if (dropped.isEmpty) Nil
-    else Seq(s"#droppedPhys=${dropped.toSeq.sorted.mkString(",")}")
-
-  // table properties every schema-evolution commit carries unchanged
-  private def carriedProps(b: Int): Seq[String] =
-    manifestLines(b).filter(l =>
-      l.startsWith("#bloomBits=") || l.startsWith("#bucketSpec=") ||
-        l.startsWith("#sortCols=") ||
-        l.startsWith("#ndvCols=") || l.startsWith("#ndv:")) ++
-      morLines(Some(b)) ++ dvLines(b) ++ checkLines(Some(b))
+  // a schema-evolution commit of `b`: every file and property carried,
+  // `change` applied to the header
+  private def schemaCommit(b: Int, op: String)
+      (change: ManifestHeader => ManifestHeader)
+      : (ManifestHeader, Seq[String]) = {
+    val data = dataLines(b)
+    (change(headerOf(b).carry(op, data)), data)
+  }
 
   /** RENAME COLUMN as a pure metadata commit (column mapping): the logical
     * schema gets the new name, the colmap routes it to the unchanged
@@ -1781,28 +1666,27 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       require(TxLogTable.wireSafeName(newName),
         s"column name '$newName' contains a manifest wire delimiter " +
           "(> , = ; : tab newline) — pick another name")
-      require(!partitionColsOf(b).contains(oldName),
+      val h = headerOf(b)
+      require(!h.partitionCols.contains(oldName),
         s"cannot rename partition column $oldName (physical hive paths)")
-      require(!bucketSpecsOf(b).exists(_._1 == oldName),
+      require(!h.bucketSpecs.exists(_._1 == oldName),
         s"cannot rename bucket key $oldName (the bucket spec and every " +
           "file's hive bucket id derive from it)")
-      require(!timeSpecsOf(b).exists(_._1 == oldName),
+      require(!h.timeSpecs.exists(_._1 == oldName),
         s"cannot rename time-partition source $oldName (the time spec " +
           "and every file's hidden calendar dir derive from it)")
-      require(!sortColsOf(b).contains(oldName),
+      require(!h.sortCols.contains(oldName),
         s"cannot rename sort column $oldName (every file's physical " +
           "row order derives from it)")
-      require(tombstonesOf(b).isEmpty,
+      require(h.tombs.isEmpty,
         "cannot rename with live MOR tombstones: compact first")
-      val map = colMapOf(b)
-      val newMap = map - oldName + (newName -> physOf(map, oldName))
       val newSchema = StructType(schema.fields.map(f =>
         if (f.name == oldName) f.copy(name = newName) else f))
       // bloom columns are recorded by PHYSICAL name already (they are
-      // harvested from staged files), so the line is untouched
-      metaLines(partitionColsOf(b), "rename-column", bloomColsOf(b)) ++
-        Seq(s"#schema=${newSchema.json}") ++ colmapLine(newMap) ++
-        droppedLine(droppedPhysOf(b)) ++ carriedProps(b) ++ dataLines(b)
+      // harvested from staged files), so they are untouched
+      schemaCommit(b, "rename-column")(_.copy(schema = Some(newSchema),
+        colmap = h.colmap - oldName +
+          (newName -> physOf(h.colmap, oldName))))
     }
 
   /** ADD COLUMN as a pure metadata commit: the logical schema gains a
@@ -1824,12 +1708,12 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       require(TxLogTable.wireSafeName(name),
         s"column name '$name' contains a manifest wire delimiter " +
           "(> , = ; : tab newline) — pick another name")
-      val map = colMapOf(b)
+      val h = headerOf(b)
       val livePhysical =
-        schema.fieldNames.map(c => map.getOrElse(c, c)).toSet
+        schema.fieldNames.map(c => h.colmap.getOrElse(c, c)).toSet
       require(!livePhysical.contains(name) &&
-        !map.valuesIterator.contains(name) &&
-        !droppedPhysOf(b).contains(name),
+        !h.colmap.valuesIterator.contains(name) &&
+        !h.droppedPhys.contains(name),
         s"physical name $name is taken (possibly by a renamed or dropped " +
           "column's old files): pick another name")
       // metadata carries Spark's default-value keys (CURRENT_DEFAULT /
@@ -1839,9 +1723,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       // analyzer (INSERT fill-in) and the parquet readers (old-file fill)
       val newSchema = StructType(schema.fields :+
         StructField(name, dataType, nullable = true, metadata))
-      metaLines(partitionColsOf(b), "add-column", bloomColsOf(b)) ++
-        Seq(s"#schema=${newSchema.json}") ++ colmapLine(map) ++
-        droppedLine(droppedPhysOf(b)) ++ carriedProps(b) ++ dataLines(b)
+      schemaCommit(b, "add-column")(_.copy(schema = Some(newSchema)))
     }
 
   /** DROP COLUMN as a pure metadata commit: the column leaves the logical
@@ -1855,23 +1737,22 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     metadataCommit("dropColumn") { b =>
       val schema = recordedSchema(b, "dropColumn")
       require(schema.fieldNames.contains(name), s"no such column: $name")
-      require(!partitionColsOf(b).contains(name),
+      val h = headerOf(b)
+      require(!h.partitionCols.contains(name),
         s"cannot drop partition column $name")
-      require(!bucketSpecsOf(b).exists(_._1 == name),
+      require(!h.bucketSpecs.exists(_._1 == name),
         s"cannot drop bucket key $name")
-      require(!timeSpecsOf(b).exists(_._1 == name),
+      require(!h.timeSpecs.exists(_._1 == name),
         s"cannot drop time-partition source $name")
-      require(!sortColsOf(b).contains(name),
+      require(!h.sortCols.contains(name),
         s"cannot drop sort column $name")
-      require(tombstonesOf(b).isEmpty,
+      require(h.tombs.isEmpty,
         "cannot drop with live MOR tombstones: compact first")
       require(schema.fields.length > 1, "cannot drop the last column")
-      val map = colMapOf(b)
       val newSchema = StructType(schema.fields.filterNot(_.name == name))
-      metaLines(partitionColsOf(b), "drop-column", bloomColsOf(b)) ++
-        Seq(s"#schema=${newSchema.json}") ++ colmapLine(map - name) ++
-        droppedLine(droppedPhysOf(b) + physOf(map, name)) ++
-        carriedProps(b) ++ dataLines(b)
+      schemaCommit(b, "drop-column")(_.copy(schema = Some(newSchema),
+        colmap = h.colmap - name,
+        droppedPhys = h.droppedPhys + physOf(h.colmap, name)))
     }
 
   /** WIDEN a column's type as a pure metadata commit — `ALTER TABLE ...
@@ -1899,19 +1780,18 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         s"cannot widen ${f.get.dataType.simpleString} to " +
           s"${to.simpleString}: safe promotions are byte/short/int to a " +
           "wider integral and float to double")
-      require(!bucketSpecsOf(b).exists(_._1 == name),
+      val h = headerOf(b)
+      require(!h.bucketSpecs.exists(_._1 == name),
         s"cannot widen bucket key $name (bucket ids hash the typed " +
           "value; old files' rows would sit in different buckets than " +
           "new writes — rebucket instead)")
-      require(!timeSpecsOf(b).exists(_._1 == name),
+      require(!h.timeSpecs.exists(_._1 == name),
         s"cannot widen time-partition source $name")
-      require(tombstonesOf(b).isEmpty,
+      require(h.tombs.isEmpty,
         "cannot widen with live MOR tombstones: compact first")
       val newSchema = StructType(schema.fields.map(x =>
         if (x.name == name) x.copy(dataType = to) else x))
-      metaLines(partitionColsOf(b), "widen-column", bloomColsOf(b)) ++
-        Seq(s"#schema=${newSchema.json}") ++ colmapLine(colMapOf(b)) ++
-        droppedLine(droppedPhysOf(b)) ++ carriedProps(b) ++ dataLines(b)
+      schemaCommit(b, "widen-column")(_.copy(schema = Some(newSchema)))
     }
 
   /** SCHEMA DRIFT absorption (the `mergeSchema` / autoloader pattern):
@@ -1969,25 +1849,15 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       s"unknown time unit $newUnit (one of " +
         s"${TxLogTable.TimeUnits.mkString(", ")})")
     metadataCommit("set-time-unit") { b =>
-      val specs = timeSpecsOf(b)
-      require(specs.exists(_._1 == source),
+      val h = headerOf(b)
+      require(h.timeSpecs.exists(_._1 == source),
         s"no time transform on column $source " +
-          s"(transforms: ${specs.map(s => s"${s._2}s(${s._1})")
+          s"(transforms: ${h.timeSpecs.map(s => s"${s._2}s(${s._1})")
             .mkString(", ")})")
-      metaLines(partitionColsOf(b), "set-time-unit") ++
-        manifestLines(b).filterNot(l =>
-          l.startsWith("#op=") || l.startsWith("#commitMillis=") ||
-            l.startsWith("#partitionCols="))
-          .map { l =>
-            if (!l.startsWith("#timeSpec=")) l
-            else {
-              val body = l.stripPrefix("#timeSpec=")
-              val cut = body.lastIndexOf(':')
-              if (cut > 0 && body.substring(0, cut) == source)
-                s"#timeSpec=$source:$newUnit"
-              else l
-            }
-          }
+      (h.restamp("set-time-unit").copy(timeSpecs = h.timeSpecs.map {
+        case (c, _) if c == source => (c, newUnit)
+        case spec => spec
+      }), dataLines(b))
     }
   }
 
@@ -2019,55 +1889,30 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * equality-delete field-ids restriction, for the same reason: every
     * reader must know ONE key shape to anti-join on).
     */
-  def morKeysOf(v: Int): Seq[String] =
-    manifestLines(v)
-      .collectFirst { case l if l.startsWith("#morKeys=") =>
-        l.stripPrefix("#morKeys=").split(",").toSeq.filter(_.nonEmpty) }
-      .getOrElse(Nil)
+  def morKeysOf(v: Int): Seq[String] = headerOf(v).morKeys
 
   /** Equality-delete tombstones visible at `v`: (tombstone parquet rel
     * under data/, version it was committed at). Tomb lines are `#`-meta
     * (`#tomb=<rel>;v=<n>`) so pre-MOR readers of the data-line section
     * never mistake one for a data file.
     */
-  def tombstonesOf(v: Int): Seq[(String, Int)] =
-    manifestLines(v).collect {
-      case l if l.startsWith("#tomb=") =>
-        l.stripPrefix("#tomb=").split(";v=") match {
-          case Array(rel, tv) => scala.util.Try((rel, tv.toInt)).toOption
-          case _ => None
-        }
-    }.flatten
-
-  private def tombLines(v: Int): Seq[String] =
-    manifestLines(v).filter(_.startsWith("#tomb="))
+  def tombstonesOf(v: Int): Seq[(String, Int)] = headerOf(v).tombs
 
   /** Positional-delete (deletion-vector) entries visible at `v` — one per
-    * (DV parquet, target data file) pair. See [[TxLogTable.DvEntry]].
+    * (DV parquet, target data file) pair. See [[TxLogTable.DvEntry]]. An
+    * entry rides along only while its TARGET file is still referenced
+    * ([[ManifestHeader.carry]]) — a rewrite/drop of the target
+    * materialized (or discarded) the masked rows, so its mask share must
+    * not linger (it would silently undercount [[metaRowCount]]'s
+    * subtraction).
     */
-  def dvsOf(v: Int): Seq[TxLogTable.DvEntry] =
-    manifestLines(v).flatMap(TxLogTable.decodeDvLine)
+  def dvsOf(v: Int): Seq[TxLogTable.DvEntry] = headerOf(v).dvs
 
-  private def dvLines(v: Int): Seq[String] =
-    manifestLines(v).filter(_.startsWith("#dv="))
-
-  /** DV lines to carry into a commit whose surviving data lines are
-    * `carriedDataLines`: an entry rides along only while its TARGET file
-    * is still referenced — a rewrite/drop of the target materialized (or
-    * discarded) the masked rows, so its mask share must not linger (it
-    * would silently undercount [[metaRowCount]]'s subtraction). Append
-    * paths pass ALL previous data lines, so every entry carries.
-    */
-  private def dvCarryLines(base: Option[Int],
-                           carriedDataLines: Seq[String]): Seq[String] = {
-    val lines = base.map(dvLines).getOrElse(Nil)
-    if (lines.isEmpty) Nil
-    else {
-      val kept = carriedDataLines.map(_.takeWhile(_ != '\t')).toSet
-      lines.filter(l =>
-        TxLogTable.decodeDvLine(l).exists(d => kept(d.file)))
-    }
-  }
+  // the header a commit by `op` starts from: `base`'s, carried onto the
+  // kept data lines (the empty header for a new table)
+  private def carryFrom(base: Option[Int], op: String, kept: Seq[String],
+                        overwrite: Boolean = false): ManifestHeader =
+    base.fold(ManifestHeader.empty)(headerOf).carry(op, kept, overwrite)
 
   /** rel → version that added the file, for the snapshot at `version`
     * (0 = the file predates `:v` tagging — oldest, every tombstone
@@ -2889,11 +2734,9 @@ final case class TxLogTable(spark: SparkSession, root: String) {
             s"changesBetween($fromV, $toV): version ${v - 1} was vacuumed; " +
               s"the change feed before v${versions.headOption.getOrElse(v)} " +
               s"is gone — reset from snapshot($v) and resume from there")
-        val lines = manifestLines(v)
-        val files = lines.filterNot(_.startsWith("#"))
-          .map(_.takeWhile(_ != '\t'))
-        val op = lines.collectFirst {
-          case l if l.startsWith("#op=") => l.stripPrefix("#op=") }
+        val r = resolved(v)
+        val files = r.data.map(_.takeWhile(_ != '\t'))
+        val op = r.header.op
         val prev = prevFiles.getOrElse(
           if (present(v - 1)) readManifest(v - 1).toSet
           else Set.empty[String])
@@ -2937,11 +2780,9 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     val present = versions.toSet
     var prevFiles: Option[Set[String]] = None
     (fromV + 1 to toV).iterator.filter(present).map { v =>
-      val lines = manifestLines(v)
-      val files = lines.filterNot(_.startsWith("#"))
-        .map(_.takeWhile(_ != '\t'))
-      val op = lines.collectFirst {
-        case l if l.startsWith("#op=") => l.stripPrefix("#op=") }
+      val r = resolved(v)
+      val files = r.data.map(_.takeWhile(_ != '\t'))
+      val op = r.header.op
       val prev = prevFiles.getOrElse(
         if (present(v - 1)) readManifest(v - 1).toSet
         else Set.empty[String])
@@ -3199,10 +3040,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         val effBloom = base.map(bloomColsOf).getOrElse(Nil)
         val staged = stageWithStats(packed, layout, effBloom,
           inheritedBloomBits(base))
-        Publish(metaLines(layout, "compact-small", effBloom) ++
-          tableMetaLines(base) ++ morLines(base) ++
-          dvCarryLines(base, large) ++
-          checkLines(base) ++ large ++ tagVersion(staged, next),
+        Publish(carryFrom(base, "compact-small", large),
+          large ++ tagVersion(staged, next),
           TxLogTable.MergeStats(next, small.size, large.size))
       }
     }
@@ -3258,10 +3097,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         val effBloom = base.map(bloomColsOf).getOrElse(Nil)
         val staged = stageWithStats(packed, layout, effBloom,
           inheritedBloomBits(base))
-        Publish(metaLines(layout, "compact-where", effBloom) ++
-          tableMetaLines(base) ++ morLines(base) ++
-          dvCarryLines(base, kept) ++
-          checkLines(base) ++ kept ++ tagVersion(staged, next),
+        Publish(carryFrom(base, "compact-where", kept),
+          kept ++ tagVersion(staged, next),
           TxLogTable.MergeStats(next, hit.size, kept.size))
       }
     }
@@ -3327,10 +3164,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         val effBloom = base.map(bloomColsOf).getOrElse(Nil)
         val staged = stageWithStats(packed, layout, effBloom,
           inheritedBloomBits(base))
-        Publish(metaLines(layout, "resort", effBloom) ++
-          tableMetaLines(base) ++ morLines(base) ++
-          dvCarryLines(base, kept) ++
-          checkLines(base) ++ kept ++ tagVersion(staged, next),
+        Publish(carryFrom(base, "resort", kept),
+          kept ++ tagVersion(staged, next),
           TxLogTable.MergeStats(next, hit.size, kept.size))
       }
     }
@@ -3468,10 +3303,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         val effBloom = base.map(bloomColsOf).getOrElse(Nil)
         val staged = stageWithStats(packed, layout, effBloom,
           inheritedBloomBits(base))
-        Publish(metaLines(layout, "zorder-where", effBloom) ++
-          tableMetaLines(base) ++ morLines(base) ++
-          dvCarryLines(base, kept) ++
-          checkLines(base) ++ kept ++ tagVersion(staged, next),
+        Publish(carryFrom(base, "zorder-where", kept),
+          kept ++ tagVersion(staged, next),
           TxLogTable.MergeStats(next, hit.size, kept.size))
       }
     }
@@ -3651,8 +3484,10 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * branch's v0 is a SELF-CONTAINED manifest holding the fork point's
     * resolved content — zero data copied, and the branch never depends
     * on main's manifests (main vacuum stays free to drop history the
-    * branch forked across). Returns the fork version. Concurrent
-    * same-name creates race on the v0 putIfAbsent — exactly one wins.
+    * branch forked across). `rewrite` maps the fork point's annotations
+    * to the branch's (the MV pair-fork renumbers `#mvsrc` into the source
+    * branch's sequence). Returns the fork version. Concurrent same-name
+    * creates race on the v0 putIfAbsent — exactly one wins.
     */
   def createBranch(name: String, version: Option[Int] = None,
                    rewrite: Seq[String] => Seq[String] = identity): Int = {
@@ -3670,29 +3505,22 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       s"branch '$name' already exists on $root — drop_branch first")
     val dir = branchesDir.resolve(name)
     Files.createDirectories(dir)
-    // `rewrite` lets a coordinated fork adjust carried meta lines (the
-    // MV pair-fork renumbers #mvsrc into the source branch's sequence)
-    val lines = metaLines(partitionColsOf(v), "branch") ++
-      Seq(s"#forkedFrom=$v") ++
-      rewrite(manifestLines(v).filterNot(l =>
-        l.startsWith("#op=") || l.startsWith("#commitMillis=") ||
-          l.startsWith("#partitionCols=")))
+    val h = headerOf(v)
     TxLogTable.putIfAbsent(dir.resolve(f"v${0}%08d.manifest"),
-      lines.mkString("\n").getBytes(UTF_8))
+      manifestBytes(h.restamp("branch").copy(forkedFrom = Some(v),
+        annotations = rewrite(h.annotations)), dataLines(v)))
     v
   }
 
   /** The MAIN version a branch handle forked from (None on main). */
-  def forkedFrom: Option[Int] =
-    branch.flatMap(_ => manifestLines(0).collectFirst {
-      case l if l.startsWith("#forkedFrom=") =>
-        l.stripPrefix("#forkedFrom=").toInt })
+  def forkedFrom: Option[Int] = branch.flatMap(_ => headerOf(0).forkedFrom)
 
   /** Fast-forward publish: commit branch `name`'s head content onto main
-    * as one new version (`op=publish`). Requires main unmoved since the
-    * fork — a moved main means the branch no longer descends from the
-    * head, and silently merging would drop main's interim commits; the
-    * refusal names the rebase path. The published manifest delta-encodes
+    * as one new version (`op=publish`), its annotations mapped through
+    * `rewrite`. Requires main unmoved since the fork — a moved main
+    * means the branch no longer descends from the head, and silently
+    * merging would drop main's interim commits; the refusal names the
+    * rebase path. The published manifest delta-encodes
     * against main's head, so publishing N branch commits costs O(their
     * combined file delta), not O(table). The branch stays (audit trail);
     * drop it explicitly when done.
@@ -3729,11 +3557,9 @@ final case class TxLogTable(spark: SparkSession, root: String) {
             "writer committed after the audit gate; re-audit the branch " +
             "and publish again")
       }
-      metaLines(bt.partitionColsOf(head), "publish") ++
-        rewrite(bt.manifestLines(head).filterNot(l =>
-          l.startsWith("#op=") || l.startsWith("#commitMillis=") ||
-            l.startsWith("#partitionCols=") ||
-            l.startsWith("#forkedFrom=")))
+      val h = bt.headerOf(head)
+      (h.restamp("publish").copy(forkedFrom = None,
+        annotations = rewrite(h.annotations)), bt.dataLines(head))
     }
   }
 
@@ -3935,10 +3761,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       require(versions.contains(toVersion),
         s"no version $toVersion to restore (vacuumed or never existed); " +
           s"surviving: ${versions.mkString(",")}")
-      metaLines(partitionColsOf(toVersion), "restore") ++
-        manifestLines(toVersion).filterNot(l =>
-          l.startsWith("#op=") || l.startsWith("#commitMillis=") ||
-            l.startsWith("#partitionCols="))
+      (headerOf(toVersion).restamp("restore"), dataLines(toVersion))
     }
 
   /** BUCKET-SPEC EVOLUTION: rewrite the current snapshot with the bucket
@@ -4007,12 +3830,14 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       val layout = partitionColsOf(b)
       // masked snapshot (tombstones materialize), EVERY level's id
       // re-derived explicitly under the new spec — withBucketCol then
-      // sees the columns present and leaves them alone, so the old spec
-      // never touches these rows
-      val re = newSpecs.zipWithIndex.foldLeft(snapshot(schema, Some(b))) {
-        case (acc, ((k, n), i)) => acc.withColumn(
-          TxLogTable.bucketColAt(i), TxLogTable.bucketIdCol(k, n))
-      }
+      // sees the bucket columns present and leaves them alone, so the
+      // old spec never touches these rows; it derives only the hidden
+      // time levels the output partitioning below needs
+      val re = withBucketCol(
+        newSpecs.zipWithIndex.foldLeft(snapshot(schema, Some(b))) {
+          case (acc, ((k, n), i)) => acc.withColumn(
+            TxLogTable.bucketColAt(i), TxLogTable.bucketIdCol(k, n))
+        }, layout)
       // Output tasks: enough that the AVERAGE task writes ~targetBytes —
       // the old one-file-per-cell default (min(1024, cells)) emitted
       // multi-GB unsplit files at scale, and for a SORTED table an
@@ -4051,12 +3876,10 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       val effBloom = bloomColsOf(b)
       val staged = stageWithStats(packed, layout, effBloom,
         inheritedBloomBits(base))
-      // tombstones folded by the masked rewrite → morLines dropped; the
-      // bucketSpec lines are REPLACED as a block (order preserved)
-      Publish(metaLines(layout, "rebucket", effBloom) ++
-        tableMetaLines(base).filterNot(_.startsWith("#bucketSpec=")) ++
-        newSpecs.map { case (k, n) => s"#bucketSpec=$k:$n" } ++
-        checkLines(base) ++ tagVersion(staged, next), next)
+      // the masked rewrite folded every tombstone and mask: an overwrite
+      Publish(carryFrom(base, "rebucket", Nil, overwrite = true)
+          .copy(bucketSpecs = newSpecs),
+        tagVersion(staged, next), next)
     }
   }
 
@@ -4093,20 +3916,13 @@ final case class TxLogTable(spark: SparkSession, root: String) {
           .kmvMinima(snap, col(c), TxLogTable.KmvK)
           .collect().map(_.getString(0).take(15)).toSeq
       }.toMap
-      val allCols =
-        (ndvColsOf(b) ++ phys.map(_._2)).distinct
-      val freshLines = allCols.map { c =>
-        val minima = fresh.getOrElse(c,
-          ndvSketchesOf(b).getOrElse(c, Nil))
-        s"#ndv:$c=${minima.mkString(",")}"
-      }
-      Publish(metaLines(partitionColsOf(b), "analyze", bloomColsOf(b)) ++
-        manifestLines(b).filterNot(l =>
-          l.startsWith("#op=") || l.startsWith("#commitMillis=") ||
-            l.startsWith("#partitionCols=") ||
-            l.startsWith("#bloomCols=") ||
-            l.startsWith("#ndvCols=") || l.startsWith("#ndv:")) ++
-        Seq(s"#ndvCols=${allCols.mkString(",")}") ++ freshLines, next)
+      val h = headerOf(b)
+      val allCols = (h.ndvCols ++ phys.map(_._2)).distinct
+      val carriedNdv = h.ndv.toMap
+      Publish(h.restamp("analyze").copy(ndvCols = allCols,
+          ndv = allCols.map(c =>
+            c -> fresh.getOrElse(c, carriedNdv.getOrElse(c, Nil)))),
+        dataLines(b), next)
     }
   }
 
@@ -4141,12 +3957,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       Option(dst.getParent).foreach(Files.createDirectories(_))
       Files.createLink(dst, dataDir.resolve(rel))
     }
-    val lines = metaLines(partitionColsOf(b), "clone") ++
-      manifestLines(b).filterNot(l =>
-        l.startsWith("#op=") || l.startsWith("#commitMillis=") ||
-          l.startsWith("#partitionCols="))
     TxLogTable.putIfAbsent(dest.resolve("_log").resolve(f"v${0}%08d.manifest"),
-      lines.mkString("\n").getBytes(UTF_8))
+      manifestBytes(headerOf(b).restamp("clone"), dataLines(b)))
     0
   }
 
@@ -4379,21 +4191,34 @@ final case class TxLogTable(spark: SparkSession, root: String) {
           }
           current.filterNot(line => reps(line.takeWhile(_ != '\t')))
       }
-      // MOR tombstones survive a GROUP replacement (unreplaced files stay
-      // masked; replaced files were rewritten post-mask at `next`, which
-      // every tombstone's sequence number predates, so the new files are
-      // never re-masked) — but die with a whole-table overwrite
-      // (replaced = None resets the file set, like every other commit
-      // path's overwrite contract).
-      val mor = if (replaced.isDefined) morLines(base) else Nil
-      Publish(metaLines(partitionCols, op, effBloom) ++
-        // SQL DML (UPDATE SET / MERGE INTO insert) can introduce
-        // values the sketch never saw — fold the staged rows
-        // (idempotent for the rewritten ones); a whole-table
-        // replace (replaced = None) resets like any overwrite
-        metaWithNdv(base, ndvFoldLines(base, batchKmv,
-          reset = replaced.isEmpty)) ++
-        mor ++ checkLines(base) ++ carried ++ tagVersion(staged, next), next)
+      // Masks that landed after the scan: the rewrite copied the replaced
+      // files' rows without them. A DV aimed at a replaced file would die
+      // with its target; a tombstone orders against file versions, and
+      // the rewritten files are tagged `next`, past every tombstone — so
+      // either mask would be silently undone. Refuse instead.
+      for (bv <- scanBase; reps <- replaced if reps.nonEmpty;
+           h <- base.map(headerOf)) {
+        val lateDvs = h.dvs.filter(d => d.v > bv && reps(d.file))
+        if (lateDvs.nonEmpty)
+          throw new java.util.ConcurrentModificationException(
+            s"$caller: a positional delete committed after version $bv " +
+              s"masks rows of a file this operation rewrote " +
+              s"(${lateDvs.head.file}) — rerun the statement")
+        if (h.tombs.exists(_._2 > bv))
+          throw new java.util.ConcurrentModificationException(
+            s"$caller: a key delete committed after version $bv may mask " +
+              "rows this operation rewrote — rerun the statement")
+      }
+      // MOR tombstones and DVs on carried files survive a GROUP
+      // replacement; a whole-table replace (replaced = None) resets the
+      // file set like every other overwrite. SQL DML (UPDATE SET / MERGE
+      // INTO insert) can introduce values the sketch never saw — fold the
+      // staged rows (idempotent for the rewritten ones).
+      val h = foldNdv(
+        carryFrom(base, op, carried, overwrite = replaced.isEmpty),
+        batchKmv, reset = replaced.isEmpty)
+      Publish(h.copy(partitionCols = partitionCols, bloomCols = effBloom),
+        carried ++ tagVersion(staged, next), next)
     }
   }
 
@@ -4656,13 +4481,13 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       // carry RAW lines so untouched files keep their stats
       val carried = base.map(dataLines).getOrElse(Nil)
         .filterNot(f => replacedDirs.exists(f.startsWith))
-      Publish(metaLines(partitionCols, "dynamic-overwrite", effBloom) ++
-        // replaced partitions' vanished values leave the fold
-        // stale-high (conservative); the new partitions' values
-        // must still enter or the sketch goes stale-LOW
-        metaWithNdv(base, ndvFoldLines(base, dynKmv, reset = false)) ++
-        morLines(base) ++ dvCarryLines(base, carried) ++
-        checkLines(base) ++ carried ++ tagVersion(staged, next), next)
+      // replaced partitions' vanished values leave the fold stale-high
+      // (conservative); the new partitions' values must still enter or
+      // the sketch goes stale-LOW
+      Publish(foldNdv(carryFrom(base, "dynamic-overwrite", carried),
+          dynKmv, reset = false)
+          .copy(partitionCols = partitionCols, bloomCols = effBloom),
+        carried ++ tagVersion(staged, next), next)
     }
   }
 
@@ -4838,14 +4663,12 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       val effBloom = base.map(bloomColsOf).getOrElse(Nil)
       val staged = stageWithStats(merged, layout, effBloom,
         inheritedBloomBits(base), rebalanceOk = true)
-      Publish(metaLines(layout, "merge", effBloom) ++
-        // fold the staged (rewritten + new) rows' minima: a merge
-        // INSERTS new key values, and without the fold the sketch
-        // would go stale-LOW (idempotent re-add for rewritten rows)
-        metaWithNdv(base, ndvFoldLines(base, stagedKmv(staged),
-          reset = false)) ++
-        morLines(base) ++ dvCarryLines(base, carriedLines) ++
-        checkLines(base) ++ carriedLines ++ tagVersion(staged, next),
+      // fold the staged (rewritten + new) rows' minima: a merge INSERTS
+      // new key values, and without the fold the sketch would go
+      // stale-LOW (idempotent re-add for rewritten rows)
+      Publish(foldNdv(carryFrom(base, "merge", carriedLines),
+          stagedKmv(staged), reset = false),
+        carriedLines ++ tagVersion(staged, next),
         TxLogTable.MergeStats(next, affected.size, carriedLines.size))
     }
   }
@@ -4938,9 +4761,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         if (affected.isEmpty && extra.isEmpty) Nil
         else stageWithStats(out, layout, effBloom,
           inheritedBloomBits(base), rebalanceOk = true)
-      Publish(metaLines(layout, opName, effBloom) ++ tableMetaLines(base) ++
-        morLines(base) ++ dvCarryLines(base, carriedLines) ++
-        checkLines(base) ++ carriedLines ++ tagVersion(staged, next),
+      Publish(carryFrom(base, opName, carriedLines),
+        carriedLines ++ tagVersion(staged, next),
         TxLogTable.MergeStats(next, affected.size, carriedLines.size,
           dropped.size))
     }
@@ -5012,16 +4834,10 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       val existing = base.map(morKeysOf).getOrElse(Nil)
       require(existing.isEmpty || existing == keys,
         s"MOR delete keys $keys do not match the table's $existing")
-      val layout = base.map(partitionColsOf).getOrElse(Nil)
-      Publish(
-        metaLines(layout, "delete-mor", base.map(bloomColsOf).getOrElse(Nil)) ++
-          tableMetaLines(base) ++
-          Seq(s"#morKeys=${keys.mkString(",")}") ++
-          base.map(tombLines).getOrElse(Nil) ++
-          staged.map(rel => s"#tomb=$rel;v=$next") ++
-          base.map(dvLines).getOrElse(Nil) ++
-          checkLines(base) ++
-          base.map(dataLines).getOrElse(Nil), next)
+      val data = base.map(dataLines).getOrElse(Nil)
+      val h = carryFrom(base, "delete-mor", data)
+      Publish(h.copy(morKeys = keys,
+        tombs = h.tombs ++ staged.map(_ -> next)), data, next)
     }
   }
 
@@ -5038,7 +4854,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     *
     * Contract matrix, same as MOR tombstones: reads apply the mask
     * ([[readMaskedPos]]); compaction/resort/rebucket materialize it for
-    * the files they rewrite and [[dvCarryLines]] keeps it for the rest;
+    * the files they rewrite and the carry rule keeps it for the rest;
     * vacuum protects DV parquets referenced by surviving manifests;
     * time travel sees each version's own mask; CDC emits the masked
     * rows as exact delete events ([[changesWithDeletes]]); metadata
@@ -5175,19 +4991,13 @@ final case class TxLogTable(spark: SparkSession, root: String) {
                 inheritedBloomBits(base), rebalanceOk = true)
             case None => Nil
           }
-          val newDvLines = counts.map { case (rel, n) =>
-            TxLogTable.encodeDvLine(TxLogTable.DvEntry(dvRel, next, n, rel)) }
-          val ndv = set match { // new values can appear only via assignments
-            case Some(_) =>
-              metaWithNdv(base, ndvFoldLines(base, stagedKmv(stagedData),
-                reset = false))
-            case None => tableMetaLines(base)
-          }
-          Publish(metaLines(layout, opName,
-              base.map(bloomColsOf).getOrElse(Nil)) ++
-            ndv ++ morLines(base) ++ dvCarryLines(base, lines) ++
-            newDvLines ++ checkLines(base) ++ lines ++
-            tagVersion(stagedData, next),
+          val h = carryFrom(base, opName, lines)
+          // new values can appear only via assignments
+          val folded = if (set.isEmpty) h
+            else foldNdv(h, stagedKmv(stagedData), reset = false)
+          Publish(folded.copy(dvs = h.dvs ++ counts.map { case (rel, n) =>
+              TxLogTable.DvEntry(dvRel, next, n, rel) }),
+            lines ++ tagVersion(stagedData, next),
             TxLogTable.MergeStats(next, 0, lines.size))
         }
       }
@@ -5246,8 +5056,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       require(d.columns.sorted.sameElements(keyCols.sorted),
         s"dropKeys columns (${d.columns.mkString(",")}) must be exactly " +
           s"the key columns (${keyCols.mkString(",")})"))
-    extraMeta.foreach(l => require(l.startsWith("#") && !l.contains('\n'),
-      s"extraMeta must be #-prefixed single lines: $l"))
+    ManifestHeader.requireAnnotations(extraMeta)
     tableSchema.foreach { rec =>
       schema.fields.foreach(f => require(
         rec.fields.exists(e => e.name == f.name && e.dataType == f.dataType),
@@ -5353,28 +5162,24 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       if (counts.isEmpty && stagedData.isEmpty) // nothing to mask or add
         Unchanged(TxLogTable.MergeStats(base.getOrElse(-1), 0, lines.size))
       else {
-        val newDvLines = counts.map { case (rel, n) =>
-          TxLogTable.encodeDvLine(
-            TxLogTable.DvEntry(stagedDv.head, next, n, rel)) }
-        Publish(metaLines(layout, op, base.map(bloomColsOf).getOrElse(Nil)) ++
-          metaWithNdv(base, ndvFoldLines(base, stagedKmv(stagedData),
-            reset = false)) ++
-          morLines(base) ++ dvCarryLines(base, lines) ++ newDvLines ++
-          checkLines(base) ++ extraMeta ++ lines ++
-          tagVersion(stagedData, next),
+        val h = carryFrom(base, op, lines)
+        Publish(foldNdv(h, stagedKmv(stagedData), reset = false).copy(
+            dvs = h.dvs ++ counts.map { case (rel, n) =>
+              TxLogTable.DvEntry(stagedDv.head, next, n, rel) },
+            annotations = extraMeta),
+          lines ++ tagVersion(stagedData, next),
           TxLogTable.MergeStats(next, 0, lines.size))
       }
     }
   }
 
-  /** The `#key=` meta value recorded at `v`, if any — the generic accessor
-    * for per-commit annotations (the MV refresh's `#mvsrc=` progress
-    * record). One manifest read; unknown keys cost nothing to writers
+  /** The value of annotation `#key=` recorded at `v`, if any — the
+    * generic accessor for per-commit annotations (the MV refresh's
+    * `#mvsrc=` progress record). Unknown keys cost nothing to writers
     * because every reader ignores them.
     */
   def metaOf(v: Int, key: String): Option[String] =
-    manifestLines(v).collectFirst {
-      case l if l.startsWith(s"#$key=") => l.stripPrefix(s"#$key=") }
+    headerOf(v).annotation(key)
 
   /** The tombstone KEY rows committed AT `v` itself (carried older
     * tombstones excluded) — a MOR delete's exact key set, for consumers
@@ -5413,29 +5218,12 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       readManifest(v - 1).exists(!cur(_))
     }
 
-  // tombstone + MOR-key lines carried by every non-overwrite commit (an
-  // overwrite resets the file set, so deletes-by-key die with it)
-  private def morLines(base: Option[Int]): Seq[String] =
-    base.map(b => manifestLines(b).filter(l =>
-      l.startsWith("#tomb=") || l.startsWith("#morKeys="))).getOrElse(Nil)
-
   /** CHECK constraints recorded at `v`: name → SQL boolean expression
     * every ingested row must satisfy (TRUE or NULL passes, SQL-standard).
     * A table property like the partition layout — constraints survive
     * overwrites; only dropping the table drops them.
     */
-  def checksOf(v: Int): Map[String, String] =
-    manifestLines(v).collect {
-      case l if l.startsWith("#check:") =>
-        val body = l.stripPrefix("#check:")
-        val cut = body.indexOf('=')
-        if (cut > 0) Some(body.substring(0, cut) -> body.substring(cut + 1))
-        else None
-    }.flatten.toMap
-
-  private def checkLines(base: Option[Int]): Seq[String] =
-    base.map(b => manifestLines(b).filter(_.startsWith("#check:")))
-      .getOrElse(Nil)
+  def checksOf(v: Int): Map[String, String] = headerOf(v).checks.toMap
 
   /** Register a CHECK constraint as a metadata-only commit (no data file
     * touched). Future ingests ([[commit]], [[commitDynamic]], [[merge]]'s
@@ -5453,16 +5241,9 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     require(bad == 0,
       s"cannot add check '$name': $bad existing rows violate ($expr)")
     optimisticCommit("addCheck") { (base, next) =>
-      val layout = base.map(partitionColsOf).getOrElse(Nil)
-      Publish(
-        tableMetaLines(base) ++
-          metaLines(layout, "add-check",
-          base.map(bloomColsOf).getOrElse(Nil)) ++
-          morLines(base) ++
-          base.map(b => dvLines(b)).getOrElse(Nil) ++
-          checkLines(base) ++
-          Seq(s"#check:$name=$expr") ++
-          base.map(dataLines).getOrElse(Nil), next)
+      val data = base.map(dataLines).getOrElse(Nil)
+      val h = carryFrom(base, "add-check", data)
+      Publish(h.copy(checks = h.checks :+ (name -> expr)), data, next)
     }
   }
 
@@ -5482,14 +5263,6 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         s"check '$n' violated by ${row.getLong(i)} rows: $e")
     }
   }
-
-  private def metaLines(partitionCols: Seq[String], op: String,
-                        bloomCols: Seq[String] = Nil): Seq[String] =
-    Seq(s"#partitionCols=${partitionCols.mkString(",")}",
-      s"#commitMillis=${System.currentTimeMillis()}",
-      s"#op=$op") ++
-      (if (bloomCols.isEmpty) Nil
-       else Seq(s"#bloomCols=${bloomCols.mkString(",")}"))
 
   /** `bloomCols` non-empty enables per-file Bloom filters on those columns
     * for this commit's files AND records them as a table property every
@@ -5513,8 +5286,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       Option(op).getOrElse(if (overwrite) "overwrite" else "append")
     // per-commit annotation lines (see upsertPos): never carried forward,
     // ignored by every reader that does not ask for them via metaOf
-    extraMeta.foreach(l => require(l.startsWith("#") && !l.contains('\n'),
-      s"extraMeta must be #-prefixed single lines: $l"))
+    ManifestHeader.requireAnnotations(extraMeta)
     // bloom columns are a physical-name table property (filters are
     // harvested from staged files): translate CALLER-supplied logical
     // names only — the inherited list is already physical, and pushing it
@@ -5587,10 +5359,11 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       }
       val carried =
         if (overwrite) Nil else base.map(dataLines).getOrElse(Nil)
-      // tombstones die with an overwrite; CHECK constraints survive it
-      val props = (if (overwrite) Nil
-        else morLines(base) ++ base.map(dvLines).getOrElse(Nil)) ++
-        checkLines(base)
+      // tombstones die with an overwrite; CHECK constraints survive it.
+      // NDV fold: append merges the batch minima into the carried
+      // sketch; overwrite starts fresh — the old corpus is gone
+      val h = foldNdv(carryFrom(base, opName, carried, overwrite),
+        batchKmv, reset = overwrite)
       // A layout-CHANGING overwrite must not carry layout-bound specs
       // into a manifest whose partitionCols no longer support them: a
       // stale #bucketSpec on an unpartitioned table would make every
@@ -5599,32 +5372,23 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       // that no longer flow through a partitioned staging layout. Keep
       // each spec only when the new layout still carries its derived
       // columns in create()'s shape.
-      val expectBkt = base.map(bucketSpecsOf).getOrElse(Nil)
-        .indices.map(TxLogTable.bucketColAt)
+      val expectBkt = h.bucketSpecs.indices.map(TxLogTable.bucketColAt)
       val bucketsStillFit = expectBkt.nonEmpty &&
         partitionCols.takeRight(expectBkt.length) == expectBkt &&
         partitionCols.count(TxLogTable.isBucketCol) == expectBkt.length
-      val expectTp = base.map(timeSpecsOf).getOrElse(Nil)
-        .indices.map(TxLogTable.timeColAt)
+      val expectTp = h.timeSpecs.indices.map(TxLogTable.timeColAt)
       val timesStillFit = expectTp.nonEmpty &&
         partitionCols.filter(TxLogTable.isTimeCol) == expectTp
-      val dropLines: String => Boolean = l =>
-        (bloomBits > 0 && l.startsWith("#bloomBits=")) ||
-          (overwrite && !bucketsStillFit &&
-            l.startsWith("#bucketSpec=")) ||
-          (overwrite && !timesStillFit &&
-            l.startsWith("#timeSpec=")) ||
-          (overwrite && partitionCols.isEmpty &&
-            l.startsWith("#sortCols="))
-      // NDV fold: append merges the batch minima into the carried
-      // sketch; overwrite starts fresh — the old corpus is gone
-      val ndvLines = ndvFoldLines(base, batchKmv, reset = overwrite)
       // An explicit bloomBits replaces the carried table property; the
-      // carried line serves inheritance otherwise.
-      Publish(metaLines(partitionCols, opName, effBloom) ++
-        (if (bloomBits > 0) Seq(s"#bloomBits=$bloomBits") else Nil) ++
-        metaWithNdv(base, ndvLines).filterNot(dropLines) ++
-        props ++ extraMeta ++
+      // carried one serves inheritance otherwise.
+      Publish(h.copy(partitionCols = partitionCols, bloomCols = effBloom,
+          bloomBits = if (bloomBits > 0) Some(bloomBits) else h.bloomBits,
+          bucketSpecs =
+            if (overwrite && !bucketsStillFit) Nil else h.bucketSpecs,
+          timeSpecs = if (overwrite && !timesStillFit) Nil else h.timeSpecs,
+          sortCols =
+            if (overwrite && partitionCols.isEmpty) Nil else h.sortCols,
+          annotations = extraMeta),
         carried ++ tagVersion(staged, next), next)
     }
   }
