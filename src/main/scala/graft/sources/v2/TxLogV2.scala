@@ -14,7 +14,7 @@ import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownF
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sources.{TxLogRelation, TxLogTable}
@@ -160,9 +160,6 @@ class TxLogCatalog extends TableCatalog with ProcedureCatalog
     */
   private def metaTableFor(ident: Identifier,
                            asOf: Option[Int] = None): Option[Table] = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField}
-    import org.apache.spark.unsafe.types.UTF8String
     if (ident.namespace().length < 1) return None
     val parent = Identifier.of(ident.namespace.init, ident.namespace.last)
     if (!tableExists(parent)) return None
@@ -170,29 +167,21 @@ class TxLogCatalog extends TableCatalog with ProcedureCatalog
     asOf.foreach(v => require(
       TxLogTable(spark, pathOf(parent).toString).versions.contains(v),
       s"version $v of ${parent.toString} does not exist (or was vacuumed)"))
-    def utf(s: String) = UTF8String.fromString(s)
     def partOf(rel: String): String = {
       val i = rel.lastIndexOf('/')
       if (i < 0) "" else rel.substring(0, i)
     }
-    val fields: Option[(StructType, () => Seq[InternalRow])] =
+    val fields: Option[(String, () => Seq[Row])] =
       ident.name match {
-        case "history" => Some((StructType(Seq(
-            StructField("version", IntegerType),
-            StructField("commit_millis", LongType),
-            StructField("op", StringType),
-            StructField("num_files", IntegerType))),
+        case "history" => Some((
+          "version INT, commit_millis BIGINT, op STRING, num_files INT",
           () => t.history()
             .filter(h => asOf.forall(h.version <= _))
-            .map(h => InternalRow(h.version,
-            h.commitMillis.map(Long.box).orNull, utf(h.op.getOrElse("")),
-            h.numFiles))))
-        case "files" => Some((StructType(Seq(
-            StructField("file", StringType),
-            StructField("partition", StringType),
-            StructField("rows", LongType),
-            StructField("bytes", LongType),
-            StructField("dv_masked", LongType))),
+            .map(h => Row(h.version, h.commitMillis, h.op.getOrElse(""),
+              h.numFiles))))
+        case "files" => Some((
+          "file STRING, partition STRING, rows BIGINT, bytes BIGINT, " +
+            "dv_masked BIGINT",
           () => {
             val tbl = t
             val v = asOf.orElse(tbl.latestVersion)
@@ -200,28 +189,16 @@ class TxLogCatalog extends TableCatalog with ProcedureCatalog
             val masked = v.map(tbl.dvsOf).getOrElse(Nil)
               .groupBy(_.file).view.mapValues(_.map(_.n).sum).toMap
             tbl.entries(v).map { e =>
-              InternalRow(utf(e.rel), utf(partOf(e.rel)),
-                e.stats.get(TxLogTable.RowsKey).map(r => Long.box(r._1))
-                  .orNull,
+              Row(e.rel, partOf(e.rel),
+                e.stats.get(TxLogTable.RowsKey).map(_._1),
                 sizes.getOrElse(e.rel, 0L),
                 masked.getOrElse(e.rel, 0L))
             }
           }))
-        case "tags" => Some((StructType(Seq(
-            StructField("name", StringType),
-            StructField("version", IntegerType))),
-          () => t.tags().toSeq.sortBy(_._1).map { case (n, v) =>
-            InternalRow(utf(n), v) }))
-        case "cursors" => Some((StructType(Seq(
-            StructField("name", StringType),
-            StructField("version", IntegerType),
-            StructField("updated_millis", LongType))),
-          () => t.cursors().values.toSeq.sortBy(_.name).map(c =>
-            InternalRow(utf(c.name), c.version, c.updatedMillis))))
-        case "partitions" => Some((StructType(Seq(
-            StructField("partition", StringType),
-            StructField("num_files", LongType),
-            StructField("rows", LongType))),
+        case "tags" => Some((TagsSchema, () => tagRows(t)))
+        case "cursors" => Some((CursorsSchema, () => cursorRows(t)))
+        case "partitions" => Some((
+          "partition STRING, num_files BIGINT, rows BIGINT",
           () => {
             val tbl = t
             tbl.entries(asOf.orElse(tbl.latestVersion))
@@ -229,30 +206,35 @@ class TxLogCatalog extends TableCatalog with ProcedureCatalog
               .map { case (p, es) =>
                 val counts = es.flatMap(_.stats.get(TxLogTable.RowsKey)
                   .map(_._1))
-                InternalRow(utf(p), es.size.toLong,
+                Row(p, es.size.toLong,
                   // NULL when any file lacks a recorded count — a
                   // wrong number is worse than an absent one
-                  if (counts.size == es.size) Long.box(counts.sum)
-                  else null)
+                  Option.when(counts.size == es.size)(counts.sum))
               }
           }))
         case _ => None
       }
-    fields.map { case (sch, mkRows) =>
+    fields.map { case (ddl, mkRows) =>
+      val sch = StructType.fromDDL(ddl)
       new Table with SupportsRead {
         override def name(): String = ident.toString
         override def schema(): StructType = sch
         override def capabilities(): util.Set[TableCapability] =
           util.EnumSet.of(TableCapability.BATCH_READ)
         override def newScanBuilder(opts: CaseInsensitiveStringMap)
-            : ScanBuilder = () =>
-          new org.apache.spark.sql.connector.read.LocalScan {
-            override def readSchema(): StructType = sch
-            override def rows(): Array[InternalRow] = mkRows().toArray
-          }
+            : ScanBuilder = () => SystemProcedure.localScan(sch, mkRows())
       }
     }
   }
+
+  // rows shared by the `tags`/`cursors` procedures and metadata tables
+  private val TagsSchema = "name STRING, version INT"
+  private def tagRows(t: TxLogTable): Seq[Row] =
+    t.tags().toSeq.sortBy(_._1).map { case (n, v) => Row(n, v) }
+  private val CursorsSchema = "name STRING, version INT, updated_millis BIGINT"
+  private def cursorRows(t: TxLogTable): Seq[Row] =
+    t.cursors().values.toSeq.sortBy(_.name)
+      .map(c => Row(c.name, c.version, c.updatedMillis))
 
   /** `SELECT ... FROM t VERSION AS OF <n | 'tag'>` — SQL time travel to
     * a manifest version (the format's native coordinate) or a named TAG
@@ -458,13 +440,14 @@ class TxLogCatalog extends TableCatalog with ProcedureCatalog
     Files.move(pathOf(old), pathOf(to))
   }
 
-  // ---- SQL maintenance surface: CALL <cat>.system.{compact,vacuum,
-  // history}('ns.table') — the lifecycle every table needs at scale,
-  // reachable without the library API (Spark 4 stored procedures).
+  // ---- SQL maintenance surface: CALL <cat>.system.<procedure>(...) — the
+  // lifecycle every table needs at scale, reachable without the library
+  // API (Spark 4 stored procedures).
 
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.unsafe.types.UTF8String
+  import org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
+  import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StringType}
+  import graft.operators.{AnnIndex, MaterializedView}
+  import SystemProcedure.{arg, dynamicProc, opt, proc, req}
 
   private def tableByName(qualified: String): TxLogTable = {
     val parts = qualified.split('.')
@@ -488,12 +471,87 @@ class TxLogCatalog extends TableCatalog with ProcedureCatalog
     throw new IllegalArgumentException(s"no such txlog table: $qualified")
   }
 
+  // the recorded schema, else the one the V2 relation infers (tables
+  // written before `#schema` was recorded)
+  private def schemaOf(t: TxLogTable, qualified: String): StructType =
+    t.tableSchema.getOrElse(TxLogV2Table(spark, t.root, qualified).schema)
+
+  // a table argument and its schema; `cols` are the columns the
+  // procedure reads by name
+  private def tableArg(a: ProcArgs, param: String,
+                       cols: String*): (TxLogTable, StructType) = {
+    val q = a.str(param)
+    val t = tableByName(q)
+    val schema = schemaOf(t, q)
+    require(cols.forall(schema.fieldNames.contains),
+      s"${a.proc} $param needs (${cols.mkString(", ")}) columns")
+    (t, schema)
+  }
+
+  // warehouse path for a name that is a DIRECTORY of txlog tables (an
+  // ANN index root), not itself a table — no existence requirement
+  private def indexRoot(a: ProcArgs): String = {
+    val parts = a.str("index").split('.')
+    require(parts.nonEmpty && parts.forall(_.nonEmpty),
+      s"procedure path argument must be 'ns.name', got '${a.str("index")}'")
+    pathOf(Identifier.of(parts.init, parts.last)).toString
+  }
+
+  // warehouse path for a 'ns.table' argument that must NOT exist yet —
+  // clone targets, views and result tables are new artifacts, never
+  // in-place mutations
+  private def newTablePath(a: ProcArgs, param: String): String = {
+    val q = a.str(param)
+    val parts = q.split('.')
+    require(parts.length >= 2 && parts.forall(_.nonEmpty),
+      s"${a.proc} $param must be 'ns.table', got '$q'")
+    val ident = Identifier.of(parts.init, parts.last)
+    require(!tableExists(ident), s"${a.proc} $param already exists: $q")
+    pathOf(ident).toString
+  }
+
+  // materialize a procedure's result frame as a fresh table at `path`:
+  // declared-schema create + one append commit → (version, rows)
+  private def writeResultTable(path: String, df: DataFrame): (Int, Long) = {
+    val t = TxLogTable(spark, path)
+    t.create(df.schema)
+    val v = t.commit(df, overwrite = false)
+    (v, t.entries(None).flatMap(_.stats.get(TxLogTable.RowsKey))
+      .map(_._1).sum)
+  }
+
+  // the non-blank items of a `sep`-separated list, trimmed
+  private def items(s: String, sep: Char = ','): Seq[String] =
+    s.split(sep).toSeq.map(_.trim).filter(_.nonEmpty)
+
+  // `key<kv>value` at the first `kv` (values may contain it again)
+  private def pairOf(item: String, kv: Char, what: String): (String, String) = {
+    val i = item.indexOf(kv)
+    require(i > 0, s"$what entry '$item' is not key${kv}value")
+    item.substring(0, i).trim -> item.substring(i + 1).trim
+  }
+
+  private def pairs(spec: String, sep: Char, kv: Char,
+                    what: String): Seq[(String, String)] =
+    items(spec, sep).map(pairOf(_, kv, what))
+
+  // 'col=value' (comma-separated): the partition dirs a rewrite touches
+  private def partitionSpec(spec: String): Map[String, Set[String]] =
+    pairs(spec, ',', '=', "partition spec")
+      .map { case (c, v) => c -> Set(v) }.toMap
+
+  // 'name:expr[;name2:expr2]' — row-local computed columns (date_trunc
+  // rollup keys and the like); ';'-separated so the exprs may contain
+  // commas
+  private def derives(a: ProcArgs): Seq[(String, String)] =
+    a.opt[String]("derives").toSeq.flatMap(pairs(_, ';', ':', "derive"))
+
   // MV measure spec: 'out:src' (sum) or 'out:min:src' / 'out:max:src' —
   // returns (sums, mins, maxs)
   private def parseAggSpec(sv: String): (Seq[(String, String)],
       Seq[(String, String)], Seq[(String, String)]) = {
-    val items = sv.split(',').toSeq.map(_.trim).filter(_.nonEmpty).map {
-      t => t.split(':') match {
+    val specs = items(sv).map { t =>
+      t.split(':') match {
         case Array(out, src) => ("sum", out, src)
         case Array(out, agg, src)
             if Set("sum", "min", "max")(agg) => (agg, out, src)
@@ -501,1744 +559,1044 @@ class TxLogCatalog extends TableCatalog with ProcedureCatalog
           s"measure spec must be 'out:src' or 'out:min|max:src': '$t'")
       }
     }
-    (items.collect { case ("sum", o, c) => o -> c },
-      items.collect { case ("min", o, c) => o -> c },
-      items.collect { case ("max", o, c) => o -> c })
+    (specs.collect { case ("sum", o, c) => o -> c },
+      specs.collect { case ("min", o, c) => o -> c },
+      specs.collect { case ("max", o, c) => o -> c })
   }
 
-  // warehouse path for a name that is a DIRECTORY of txlog tables (an
-  // ANN index root), not itself a table — no existence requirement
-  private def pathByName(qualified: String): Path = {
-    val parts = qualified.split('.')
-    require(parts.nonEmpty && parts.forall(_.nonEmpty),
-      s"procedure path argument must be 'ns.name', got '$qualified'")
-    pathOf(Identifier.of(parts.init, parts.last))
+  // rows a positional DML commit masked (a no-op — nothing matched —
+  // commits no version)
+  private def maskedBy(t: TxLogTable, before: Int, v: Int): Long =
+    if (v <= before) 0L
+    else t.dvsOf(v).filter(_.v == v).map(_.n).sum
+
+  // the materialized views among a namespace's tables: (qualified, root)
+  private def viewsIn(namespace: String): Seq[(String, String)] = {
+    val ns = namespace.split('.').filter(_.nonEmpty)
+    listTables(ns).toSeq
+      .map(id => ((ns :+ id.name).mkString("."), pathOf(id).toString))
+      .filter { case (_, root) =>
+        Files.exists(Paths.get(root, "_log", "mv.def")) }
   }
 
-  // one-row result delivered through a LocalScan (driver-side rows are
-  // exactly what a maintenance summary is)
-  private def resultScan(schema: StructType,
-                         rs: Seq[InternalRow]): java.util.Iterator[
-      org.apache.spark.sql.connector.read.Scan] =
-    java.util.List.of[org.apache.spark.sql.connector.read.Scan](
-      new org.apache.spark.sql.connector.read.LocalScan {
-        override def readSchema(): StructType = schema
-        override def rows(): Array[InternalRow] = rs.toArray
-      }).iterator()
+  private def ndvText(t: TxLogTable, v: Int): String =
+    t.ndvOf(v).toSeq.sortBy(_._1).map { case (c, n) => s"$c≈$n" }
+      .mkString(", ")
 
-  // a CALL result carrying a (bounded, dashboard-sized) DataFrame
-  private def dfScan(df: org.apache.spark.sql.DataFrame): java.util
-      .Iterator[org.apache.spark.sql.connector.read.Scan] = {
-    val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToCatalystConverter(df.schema)
-    resultScan(df.schema,
-      df.collect().toSeq.map(r => conv(r).asInstanceOf[InternalRow]))
-  }
+  private def frame(df: DataFrame): (StructType, Seq[Row]) =
+    (df.schema, df.collect().toSeq)
 
-  private abstract class MaintenanceProc(procName: String,
-                                         params: Seq[ProcedureParameter])
-      extends UnboundProcedure with BoundProcedure {
-    override def name(): String = procName
-    override def bind(inputType: StructType): BoundProcedure = this
-    override def parameters(): Array[ProcedureParameter] = params.toArray
-    override def isDeterministic: Boolean = false
-  }
+  /** Every `CALL <cat>.system.<name>` procedure, in `listProcedures`
+    * order: `listProcedures`, `loadProcedure` and the unknown-name error
+    * all read this one table. Each entry declares its parameters in call
+    * order and its result schema once, as DDL (see [[SystemProcedure]]).
+    *
+    * The argument rule, for every procedure alike: an argument that is
+    * omitted or passed as SQL NULL takes the parameter's declared
+    * default (`arg` a typed value, `opt` NULL → `None`); a parameter
+    * declared `req` has no default, and NULL for it fails the call with
+    * `IllegalArgumentException("<proc> needs <param>")` before the body
+    * runs. Bodies read arguments by name through [[ProcArgs]] and never
+    * test for NULL themselves.
+    */
+  private lazy val procedures: Seq[SystemProcedure] = Seq(
+    // CALL c.system.compact('ns.t' [, files [, partition]]): rewrite the
+    // current snapshot into `files` files per partition (1 = full
+    // compaction; MOR tombstones fold in, the usual prerequisite for
+    // row-level DML on a MOR table). With the optional `partition` spec
+    // ('col=value', comma-separated for multiple columns) only THAT
+    // partition's files rewrite and the rest carry by manifest
+    // reference — OPTIMIZE for the hot partition of a 100 TB table,
+    // O(partition) instead of O(table).
+    proc("compact", "version INT, files_before INT, files_after INT",
+        req("table"), arg("files", 1), opt("partition", StringType)) { a =>
+      val (t, schema) = tableArg(a, "table")
+      val before = t.fileCount()
+      val v = a.opt[String]("partition").fold(
+        t.compact(schema, a.int("files")))(p =>
+        t.compactWhere(schema, partitionSpec(p), a.int("files")).version)
+      Seq(Row(v, before, t.fileCount()))
+    },
+    // CALL c.system.vacuum('ns.t' [, keep [, min_age_ms [, retain_ms
+    // [, dry_run]]]]): drop all but the last `keep` manifests and delete
+    // unreferenced data files older than min_age_ms (the age guard
+    // protects in-flight writers, exactly like the API default).
+    // retain_ms is the lagging-reader time floor — a manifest younger
+    // than it survives regardless of `keep`; the 7-day default makes a
+    // bare CALL safe on a live streamed table. dry_run => true: report
+    // what would be reclaimed, touch nothing — the pre-flight before a
+    // retention change.
+    proc("vacuum", "manifests_deleted INT, files_deleted INT",
+        req("table"), arg("keep", 1),
+        arg("min_age_ms", TxLogTable.DefaultVacuumMinAgeMillis),
+        arg("retain_ms", TxLogTable.DefaultVacuumRetainMillis),
+        arg("dry_run", false)) { a =>
+      val (manifests, files) = tableByName(a.str("table")).vacuum(
+        a.int("keep"), a.long("min_age_ms"), a.long("retain_ms"),
+        a.bool("dry_run"))
+      Seq(Row(manifests, files))
+    },
+    // CALL c.system.history('ns.t'): one row per surviving version
+    proc("history", "version INT, commit_millis BIGINT, op STRING, " +
+        "n_files INT", req("table")) { a =>
+      tableByName(a.str("table")).history().map(h =>
+        Row(h.version, h.commitMillis, h.op, h.numFiles))
+    },
+    // CALL c.system.partitions('ns.t'): one row per partition value with
+    // file/row counts from the MANIFEST alone — no file opened; SHOW
+    // PARTITIONS with sizes, free at any table size. Row counts are exact
+    // per-file footer sums; they are NULL (unknown) when a file predates
+    // stats or live MOR tombstones hide rows — the same exactness
+    // contract as the metadata aggregates. A non-partitioned table
+    // reports one row with an empty partition.
+    proc("partitions", "partition STRING, n_files INT, n_rows BIGINT",
+        req("table")) { a =>
+      val t = tableByName(a.str("table"))
+      val v = t.latestVersion
+      val parts = v.map(t.partitionColsOf).getOrElse(Nil)
+      val tombs = v.exists(t.tombstonesOf(_).nonEmpty)
+      // positional-delete masks are per target FILE with exact counts,
+      // so per-partition rows stay exact by subtraction (tombstones
+      // cannot: their match count needs a scan)
+      val dvByFile = v.map(t.dvsOf).getOrElse(Nil)
+        .groupMapReduce(_.file)(_.n)(_ + _)
+      val groups = t.entries(None).groupBy { e =>
+        val segs = TxLogTable.partitionSegmentsOf(e.rel)
+        parts.flatMap(c => segs.get(c).map(v => s"$c=$v")).mkString("/")
+      }
+      groups.toSeq.sortBy(_._1).map { case (p, es) =>
+        val rows = es.flatMap(_.stats.get(TxLogTable.RowsKey).map(_._1))
+        val dvSub = es.map(e => dvByFile.getOrElse(e.rel, 0L)).sum
+        Row(p, es.size, Option.when(!tombs && rows.size == es.size)(
+          rows.sum - dvSub))
+      }
+    },
+    // CALL c.system.restore('ns.t', version): roll the table back to
+    // `version` as a NEW commit — O(manifest), no data file touched,
+    // history preserved. The bad-write undo button.
+    proc("restore", "version INT, restored_version INT, n_files INT",
+        req("table"), req("version", IntegerType)) { a =>
+      val t = tableByName(a.str("table"))
+      val v = t.restore(a.int("version"))
+      Seq(Row(v, a.int("version"), t.fileCount()))
+    },
+    // CALL c.system.clone('ns.src', 'ns.dst'): zero-copy clone of the
+    // source's current snapshot as a fresh catalog table — manifest
+    // republished as the clone's v0, data files hard-linked (no byte
+    // copied). The dev/test-against-prod-data idiom: at 100 TB a CTAS
+    // copy is hours and doubles storage; this is O(files) metadata ops.
+    proc("clone", "version INT, n_files INT",
+        req("source"), req("dest")) { a =>
+      val src = tableByName(a.str("source"))
+      src.cloneTo(newTablePath(a, "dest"))
+      Seq(Row(0, src.fileCount()))
+    },
+    // CALL c.system.zorder('ns.t', 'colA', 'colB' [, files
+    // [, partition]]): OPTIMIZE ZORDER BY — rewrite the snapshot
+    // clustered on the Morton curve so manifest min/max stats prune range
+    // scans on EVERY listed dimension (a plain sort serves only its
+    // leading column). col_a may carry a comma-separated list for 3+
+    // dimensions — 'a,b,c' with col_b NULL — since stored-procedure
+    // signatures are fixed-arity; per-dim grid bits shrink as
+    // min(16, 63/N). The multi-dimensional skipping layout for the
+    // 100 TB point-lookup table. `partition` ('col=value',
+    // comma-separated) scopes the rewrite to matching partition dirs
+    // (compactZOrderWhere) — the incremental-clustering form: z-order
+    // yesterday's partition after it closes, O(partition) per day, never
+    // O(table).
+    proc("zorder", "version INT, files_after INT",
+        req("table"), req("col_a"), opt("col_b", StringType),
+        arg("files", 8), opt("partition", StringType)) { a =>
+      val (t, schema) = tableArg(a, "table")
+      val zCols = items(a.str("col_a")) ++ a.opt[String]("col_b")
+      val files = a.int("files")
+      val v = a.opt[String]("partition").fold(
+        t.compactZOrder(schema, zCols, files))(p =>
+        t.compactZOrderWhere(schema, partitionSpec(p), zCols, files)
+          .version)
+      Seq(Row(v, t.fileCount()))
+    },
+    // CALL c.system.rebucket('ns.t', new_buckets [, key [, files
+    // [, target_bytes [, buckets2, key2]]]]): bucket-spec evolution —
+    // full rewrite re-deriving the hidden bucket ids under the new count
+    // plus an atomic manifest spec bump. THE maintenance lever when a
+    // bucketed table outgrows its CREATE-time count: per-bucket bytes
+    // scale with the corpus, and KeyGroupedPartitioning is the one plan
+    // AQE skew-splitting cannot touch, so the operator re-picks n
+    // (typically 2×) and every subsequent SPJ is balanced again.
+    // O(table) once, by choice — see TxLogTable.rebucket for why not a
+    // dual-spec read. buckets2/key2 evolve a second grid level in the
+    // SAME rewrite — one O(table) pass, one version bump, never two.
+    proc("rebucket",
+        "version INT, buckets_before INT, buckets_after INT, n_files INT",
+        req("table"), req("buckets", IntegerType), opt("key", StringType),
+        arg("files", 0), arg("target_bytes", TxLogTable.RebucketTargetBytes),
+        opt("buckets2", IntegerType), opt("key2", StringType)) { a =>
+      val (t, schema) = tableArg(a, "table")
+      val newN = a.int("buckets")
+      val key = a.opt[String]("key")
+      // a key2 with no buckets2 (or the reverse) fails loudly, never
+      // silently dropping the second grid level the caller asked for
+      val also = (a.opt[Int]("buckets2"), a.opt[String]("key2")) match {
+        case (Some(n2), Some(k2)) => Seq(k2 -> n2)
+        case (b2, k2) =>
+          require(k2.isEmpty, "rebucket key2 needs buckets2")
+          require(b2.isEmpty, "rebucket buckets2 needs key2")
+          Nil
+      }
+      val specs = t.latestVersion.map(t.bucketSpecsOf).getOrElse(Nil)
+      val before = key.flatMap(k => specs.find(_._1 == k))
+        .orElse(specs.headOption).map(_._2).getOrElse(0)
+      val v = t.rebucket(schema, newN, key, a.int("files"),
+        targetBytes = a.long("target_bytes"), alsoKeys = also)
+      Seq(Row(v, before, newN, t.fileCount()))
+    },
+    // CALL c.system.semdedup('ns.src', 'ns.dst', tau [, k]): the SQL
+    // surface of graft.operators.SemDedup — cluster-blocked semantic
+    // dedup over the source's (vec_id, embedding) columns, verdicts
+    // (vec_id, cluster, kept) materialized as a fresh txlog table. k = 0
+    // (default) derives k from the corpus (the scale path); an explicit
+    // k pins it (deterministic replay). The SQL-first user of the 100 TB
+    // catalog never has to leave SQL to curate.
+    proc("semdedup", "dest_version INT, n_vectors BIGINT",
+        req("source"), req("dest"), req("tau", DoubleType),
+        arg("k", 0)) { a =>
+      implicit val s: SparkSession = spark
+      val (src, schema) = tableArg(a, "source", "vec_id", "embedding")
+      val dest = newTablePath(a, "dest")
+      val emb = src.snapshot(schema)
+      val verdicts =
+        if (a.int("k") > 0)
+          graft.operators.SemDedup.withK(emb, a.int("k"), a.double("tau"))
+        else graft.operators.SemDedup(emb, a.double("tau"))
+      val (v, n) = writeResultTable(dest, verdicts)
+      Seq(Row(v, n))
+    },
+    // CALL c.system.dedup_near('ns.src', 'ns.dst' [, threshold]): the SQL
+    // surface of graft.operators.Dedup.dedupNearExact — MinHash-LSH-gated
+    // near-dup removal over the source's (doc_id, source, text) columns,
+    // surviving corpus materialized as a fresh txlog table. Same scale
+    // shape as the operator: banding + candidate verify + one anti-join,
+    // never all-pairs.
+    proc("dedup_near", "dest_version INT, n_kept BIGINT",
+        req("source"), req("dest"), arg("threshold", 0.5)) { a =>
+      val (src, schema) =
+        tableArg(a, "source", "doc_id", "source", "text")
+      val dest = newTablePath(a, "dest")
+      // cache hygiene: the banding the operator caches for its two
+      // in-query consumers is one-shot here — the handle the operator
+      // returns is released after materializing (finally: a failed write
+      // must not leak it either), so a long-lived session never
+      // accumulates corpus-sized cache entries across procedure calls
+      val (kept, bands) = graft.operators.Dedup
+        .dedupNearExactWithHandle(src.snapshot(schema), a.double("threshold"))
+      val (v, n) =
+        try writeResultTable(dest, kept)
+        finally bands.unpersist()
+      Seq(Row(v, n))
+    },
+    // CALL c.system.bm25('ns.docs', 'space-separated terms' [, k]):
+    // BM25-ranked top-k retrieval over a documents table — the SQL
+    // surface of TextQueries.bm25Scores (same body: query-term-filtered
+    // postings, broadcast df/stats, DECIMAL-deterministic scores).
+    // Returns (doc_id, n_terms, bm25) ordered by score desc, doc_id asc.
+    // k is a bounded result-set size (top-k is driver-small by
+    // definition), capped so the LocalScan result can never balloon.
+    proc("bm25", "doc_id BIGINT, n_terms BIGINT, bm25 DOUBLE",
+        req("table"), req("query"), arg("k", 10)) { a =>
+      val (src, schema) = tableArg(a, "table", "doc_id", "text")
+      val terms = a.str("query").split("\\s+").toSeq
+        .filter(_.nonEmpty).distinct
+      val k = a.int("k")
+      require(k > 0 && k <= 10000, s"bm25 k must be in [1, 10000], got $k")
+      // one-shot scoring: release the per-doc cache the scorer registers
+      // once the top-k is materialized (a repeated CALL builds a fresh
+      // snapshot plan per table version — without the release each call
+      // would leave a corpus-sized entry)
+      val (scores, perDoc) = graft.queries.TextQueries
+        .bm25ScoresWithHandle(src.snapshot(schema), terms)
+      try scores.orderBy(col("bm25").desc, col("doc_id")).limit(k)
+        .collect().toSeq
+      finally perDoc.unpersist()
+    },
+    // CALL c.system.optimize('ns.t' [, min_bytes [, target_bytes]]):
+    // INCREMENTAL small-file compaction — only files under min_bytes
+    // rewrite (packed toward target_bytes outputs), everything already
+    // large is carried by manifest reference. This is what OPTIMIZE
+    // means at 100 TB: steady-state cost O(new small files), never
+    // O(table) — `compact` (the full rewrite) stays for layout resets.
+    // Reads through the MOR mask, so optimizing also materializes
+    // deletes for the rewritten files.
+    proc("optimize", "version INT, rewritten INT, carried INT",
+        req("table"), arg("min_bytes", 16L * 1024 * 1024),
+        arg("target_bytes", 128L * 1024 * 1024)) { a =>
+      val (t, schema) = tableArg(a, "table")
+      val st = t.compactSmall(schema, a.long("min_bytes"),
+        a.long("target_bytes"))
+      Seq(Row(st.version, st.rewritten, st.carried))
+    },
+    // CALL c.system.detail('ns.t'): DESCRIBE DETAIL — one row of the
+    // table's physical identity straight off the manifest (no file
+    // opened, free at any size): current version, file/row/byte totals,
+    // the partition layout, bucket spec(s), sort order, and bloom
+    // columns. The first thing an operator asks of an unfamiliar 100 TB
+    // table.
+    proc("detail", "version INT, n_files INT, n_rows BIGINT, bytes BIGINT, " +
+        "partition_cols STRING, bucket_spec STRING, sort_cols STRING, " +
+        "bloom_cols STRING, ndv STRING, cursors STRING, " +
+        "optimize_write BOOLEAN", req("table")) { a =>
+      val t = tableByName(a.str("table"))
+      val v = t.latestVersion.get
+      val sizes = t.fileSizes(Some(v))
+      Seq(Row(v, sizes.size,
+        // metaRowCount handles every exactness case (pre-stats files,
+        // tombstones decline, DV masks subtract exactly)
+        t.metaRowCount(Some(v)), sizes.map(_._2).sum,
+        t.partitionColsOf(v).mkString(","),
+        (t.bucketSpecsOf(v).map { case (k, n) => s"bucket($n, $k)" } ++
+          t.timeSpecsOf(v).map { case (k, u) => s"${u}s($k)" })
+          .mkString(", "),
+        t.sortColsOf(v).mkString(","), t.bloomColsOf(v).mkString(","),
+        ndvText(t, v),
+        // who pins vacuum, at which version — the retention question
+        // DESCRIBE DETAIL should answer in one glance
+        t.cursors().values.toSeq.sortBy(_.name)
+          .map(c => s"${c.name}@v${c.version}").mkString(", "),
+        t.optimizeWriteOf(v)))
+    },
+    // CALL c.system.analyze('ns.t', 'col1,col2'): (re)build the column
+    // NDV sketches from the current masked snapshot — stats for tables
+    // created without 'ndvCols', and the re-tightening pass after deletes
+    // left the incremental fold stale-high. One column-pruned scan per
+    // column, metadata-only commit, no change-feed impact.
+    proc("analyze", "version INT, ndv STRING",
+        req("table"), req("cols")) { a =>
+      val (t, schema) = tableArg(a, "table")
+      val v = t.analyze(schema, items(a.str("cols")))
+      Seq(Row(v, ndvText(t, v)))
+    },
+    // CALL c.system.resort('ns.t' [, target_bytes]): re-arm a sorted
+    // table's ordering report by rewriting ONLY the partition dirs whose
+    // file ranges overlap — O(damaged), never O(table); armed dirs are
+    // carried by reference and a fully-armed table is a no-op. The
+    // targeted twin of `compact` for the sorted layout.
+    proc("resort", "version INT, rewritten INT, carried INT", req("table"),
+        arg("target_bytes", TxLogTable.RebucketTargetBytes)) { a =>
+      val (t, schema) = tableArg(a, "table")
+      val st = t.resort(schema, a.long("target_bytes"))
+      Seq(Row(st.version, st.rewritten, st.carried))
+    },
+    // CALL c.system.changes('ns.src', 'ns.dst', from_v [, to_v
+    // [, with_deletes]]): the BATCH change feed in pure SQL — rows added
+    // in (from_v, to_v] (to_v NULL = latest), tagged _commit_version,
+    // materialized as a fresh txlog table; with_deletes additionally
+    // surfaces MOR tombstones as keys-only '_change_type = delete' rows
+    // (changesWithDeletes). Row-preserving maintenance versions are
+    // skipped (the same contract the streaming source defaults to). The
+    // SQL-only consumer reads a day's delta of a 100 TB table without
+    // ever importing this library. Timestamp twins (from_ts / to_ts —
+    // epoch millis or a Timestamp literal) resolve against commit
+    // instants with the same AT-OR-AFTER / at-or-before contract as the
+    // streaming options: the feed covers every commit landing within
+    // [from_ts, to_ts] — "yesterday's delta" without ever looking a
+    // version number up.
+    proc("changes", "dest_version INT, from_v INT, to_v INT",
+        req("source"), req("dest"), opt("from_v", IntegerType),
+        opt("to_v", IntegerType), arg("with_deletes", false),
+        opt("from_ts", StringType), opt("to_ts", StringType)) { a =>
+      val (src, schema) = tableArg(a, "source")
+      val (fromTs, toTs) = (a.opt[String]("from_ts"), a.opt[String]("to_ts"))
+      require(a.opt[Int]("from_v").isEmpty != fromTs.isEmpty,
+        "changes needs exactly one of from_v / from_ts")
+      require(a.opt[Int]("to_v").isEmpty || toTs.isEmpty,
+        "to_v and to_ts are mutually exclusive")
+      def millisOf(s: String): Long = s.toLongOption.getOrElse(
+        java.sql.Timestamp.valueOf(s).getTime)
+      lazy val hist = src.history()
+      val fromV: Int = a.opt[Int]("from_v").getOrElse {
+        val m = millisOf(fromTs.get)
+        // first commit AT-OR-AFTER from_ts enters the feed; a ts past all
+        // history yields an empty window
+        hist.find(_.commitMillis.exists(_ >= m)).map(_.version - 1)
+          .getOrElse(src.latestVersion.getOrElse(0))
+      }
+      val toV: Int = a.opt[Int]("to_v").getOrElse(toTs.fold(
+        src.latestVersion.getOrElse(fromV)) { ts =>
+        val m = millisOf(ts)
+        // last commit at-or-before to_ts closes the window; a ts before
+        // all history yields an empty window
+        hist.reverse.find(_.commitMillis.exists(_ <= m)).map(_.version)
+          .getOrElse(fromV)
+      })
+      val dest = newTablePath(a, "dest")
+      val feed =
+        if (a.bool("with_deletes"))
+          src.changesWithDeletes(schema, fromV, toV, skipRewrites = true)
+        else src.changesBetween(schema, fromV, toV, skipRewrites = true)
+      Seq(Row(writeResultTable(dest, feed)._1, fromV, toV))
+    },
+    // CALL c.system.ann_build('ns.corpus', 'ns.idx' [, k [, iters
+    // [, pq [, sq8]]]]): train and persist an ANN index over the corpus's
+    // CURRENT version (graft.operators.AnnIndex.build) — the index lands
+    // as txlog tables under the 'ns.idx' warehouse path
+    // (meta/centroids/assignments[/codes/codebook]). The SQL-first
+    // operator of the 100 TB catalog builds serving indexes without
+    // leaving SQL.
+    proc("ann_build", "pinned_version INT",
+        req("corpus"), req("index"), arg("k", 8), arg("iterations", 2),
+        arg("pq", true), arg("sq8", false)) { a =>
+      val idx = indexRoot(a)
+      val (src, schema) = tableArg(a, "corpus", "vec_id", "embedding")
+      Seq(Row(AnnIndex.build(spark, src.root, idx, schema, a.int("k"),
+        a.int("iterations"), a.bool("pq"), a.bool("sq8"))))
+    },
+    // CALL c.system.ann_refresh('ns.idx' [, max_routed_frac]): advance a
+    // persisted index to its corpus head WITHOUT a training pass — new
+    // vectors route to the existing centroids, PQ codes encode against
+    // the persisted codebook, the pin advances. O(new vectors); the
+    // between-rebuilds growth path (AnnIndex.refresh's contract,
+    // tombstoned corpora refuse loudly). The STALENESS GUARD
+    // (AnnIndex.refreshAuto) is ON BY DEFAULT at the conf policy
+    // spark.graft.ann.maxRoutedFrac (0.5): when absorbing the window
+    // would push the routed-since-train fraction past the threshold, the
+    // refresh retrains instead — recall decay from frozen centroids is
+    // bounded by policy, not operator vigilance. An explicit
+    // max_routed_frac overrides; ≤ 0 disables the guard.
+    // action ∈ noop|routed|retrained.
+    proc("ann_refresh", "pinned_version INT, vectors_added BIGINT, " +
+        "action STRING", req("index"),
+        opt("max_routed_frac", DoubleType)) { a =>
+      val idx = indexRoot(a)
+      // omitted → the conf-resolved policy default (0.5), computed at
+      // call time: the guard is ON unless the caller passes ≤ 0
+      val frac = a.opt[Double]("max_routed_frac")
+        .getOrElse(AnnIndex.confMaxRoutedFrac(spark))
+      val (v, added, action) =
+        if (frac > 0) AnnIndex.refreshAuto(spark, idx, frac)
+        else {
+          val (v0, a0) = AnnIndex.refresh(spark, idx)
+          (v0, a0, if (a0 == 0) "noop" else "routed")
+        }
+      Seq(Row(v, added, action))
+    },
+    // CALL c.system.ann_search('ns.idx', query_vec_id [, k [, predicate
+    // [, require_fresh [, nprobe [, variant]]]]]): IVF top-k through the
+    // persisted index without leaving SQL. The optional predicate — a
+    // SQL boolean over the corpus's own columns — restricts candidates
+    // INSIDE the probed cells (pre-filter: all k survivors satisfy it);
+    // nprobe widens routing to the n best cells (the recall/cost knob).
+    // Result is at most k rows, so the driver-side collect is bounded by
+    // the ask, never the corpus. variant => 'sq8' ranks the persisted
+    // 8-bit codes instead of the full vectors (4x less ranking I/O,
+    // near-exact recall; the index must have been built with sq8
+    // artifacts). The sq8 path serves unfiltered — its ranking payload
+    // carries no corpus attributes; use the exact variant for predicate
+    // search.
+    proc("ann_search", "vec_id BIGINT, cluster INT, q_cos DOUBLE",
+        req("index"), req("query_vec_id", LongType), arg("k", 5),
+        opt("predicate", StringType), arg("require_fresh", false),
+        arg("nprobe", 1), arg("variant", "exact")) { a =>
+      val idx = indexRoot(a)
+      val (qid, k) = (a.long("query_vec_id"), a.int("k"))
+      require(k > 0, s"ann_search k must be positive, got $k")
+      val pred = a.opt[String]("predicate")
+        .map(org.apache.spark.sql.functions.expr)
+      val (fresh, np) = (a.bool("require_fresh"), a.int("nprobe"))
+      (a.str("variant") match {
+        case "exact" => AnnIndex.searchIvf(spark, idx, qid, k,
+          requireFresh = fresh, filter = pred, nprobe = np)
+        case "sq8" =>
+          require(pred.isEmpty, "ann_search variant 'sq8' serves " +
+            "unfiltered — use the exact variant for predicate search")
+          AnnIndex.searchIvfSq8(spark, idx, qid, k, requireFresh = fresh,
+            nprobe = np)
+        case other => throw new IllegalArgumentException(
+          s"ann_search variant must be 'exact' or 'sq8': $other")
+      }).collect().toSeq
+    },
+    // CALL c.system.ann_build_auto('ns.corpus', 'ns.idx' [, target_cell
+    // [, train_sample [, iters [, pq [, sq8]]]]]): the auto-sized build
+    // (graft.operators.AnnIndex.buildAuto) — k derives from the corpus so
+    // cell SIZE is the invariant, and the quantizer trains on a bounded
+    // deterministic sample, so training cost is O(sample × k) at any
+    // corpus size.
+    proc("ann_build_auto", "pinned_version INT, k INT",
+        req("corpus"), req("index"), arg("target_cell", 4096L),
+        arg("train_sample", 262144L), arg("iterations", 2),
+        arg("pq", true), arg("sq8", false)) { a =>
+      val idx = indexRoot(a)
+      val (src, schema) = tableArg(a, "corpus", "vec_id", "embedding")
+      val (pinned, k) = AnnIndex.buildAuto(spark, src.root, idx, schema,
+        a.int("iterations"), a.long("target_cell"), a.long("train_sample"),
+        a.bool("pq"), a.bool("sq8"))
+      Seq(Row(pinned, k))
+    },
+    // CALL c.system.ann_status('ns.idx'): the index's drift ledger —
+    // routed-since-train fraction (recall-decay proxy: vectors routed to
+    // centroids trained on an older distribution) and cell-size
+    // imbalance (a quantizer that stopped fitting the data concentrates
+    // mass in few cells). O(index) — one meta read + one |cells|-sized
+    // aggregate; never scans the corpus.
+    proc("ann_status", "pinned_version INT, corpus_version INT, " +
+        "total_vectors BIGINT, routed_since_train BIGINT, " +
+        "routed_frac DOUBLE, cells BIGINT, mean_cell DOUBLE, " +
+        "max_cell BIGINT, imbalance DOUBLE", req("index")) { a =>
+      val st = AnnIndex.status(spark, indexRoot(a))
+      Seq(Row(st.pinnedVersion, st.corpusVersion, st.totalVectors,
+        st.routedSinceTrain, st.routedFrac, st.cells, st.meanCell,
+        st.maxCell, st.imbalance))
+    },
+    // CALL c.system.cursors('ns.t'): one row per registered change-feed
+    // cursor — which consumers pin history, at which version, and when
+    // they last advanced. The operator's "who is holding my vacuum back"
+    // view (Kafka's consumer-group listing).
+    proc("cursors", CursorsSchema, req("table")) { a =>
+      cursorRows(tableByName(a.str("table")))
+    },
+    // CALL c.system.release_cursor('ns.t', 'name'): drop a cursor's
+    // vacuum pin — the explicit decommissioning act for an abandoned
+    // consumer; afterwards its history is reclaimable and a late resume
+    // hits the change feed's loud vacuum-horizon refusal.
+    proc("release_cursor", "released BOOLEAN",
+        req("table"), req("name")) { a =>
+      Seq(Row(tableByName(a.str("table")).releaseCursor(a.str("name"))))
+    },
+    // CALL c.system.delete_pos('ns.t', '<predicate>'): positional
+    // (deletion-vector) DELETE — matched rows are masked by (file,
+    // position), the commit is O(matched rows) and rewrites ZERO data
+    // files (the `files_rewritten` output is the proof). The
+    // non-key-predicate complement of the MOR tombstone path; COW
+    // `DELETE FROM` remains the bulk path.
+    proc("delete_pos", "version INT, rows_deleted BIGINT, " +
+        "files_rewritten INT", req("table"), req("predicate")) { a =>
+      val (t, schema) = tableArg(a, "table")
+      val v0 = t.latestVersion.getOrElse(-1)
+      val st = t.deleteWherePos(schema,
+        org.apache.spark.sql.functions.expr(a.str("predicate")))
+      Seq(Row(st.version, maskedBy(t, v0, st.version), st.rewritten))
+    },
+    // CALL c.system.update_pos('ns.t', '<predicate>', '<set>'):
+    // positional UPDATE — matched rows are masked where they sit and
+    // re-staged ONCE with the assignments applied (new files hold ONLY
+    // the touched rows). `set` is ';'-separated `col = <expr>` pairs,
+    // each expr a SQL expression over the row's old values (`x = x + 1`
+    // increments). ';' separates because exprs legitimately contain
+    // commas; '=' splits at the first occurrence (column names are
+    // wire-safe).
+    proc("update_pos", "version INT, rows_updated BIGINT, " +
+        "files_rewritten INT", req("table"), req("predicate"),
+        req("set")) { a =>
+      val (t, schema) = tableArg(a, "table")
+      val assigns = pairs(a.str("set"), ';', '=', "set")
+        .map { case (c, e) => c -> org.apache.spark.sql.functions.expr(e) }
+      val v0 = t.latestVersion.getOrElse(-1)
+      val st = t.updateWherePos(schema,
+        org.apache.spark.sql.functions.expr(a.str("predicate")), assigns)
+      Seq(Row(st.version, maskedBy(t, v0, st.version), st.rewritten))
+    },
+    // CALL c.system.set_time_unit('ns.t', 'ts', 'hour'): hidden-partition
+    // SPEC EVOLUTION — change a time transform's granularity as a
+    // metadata-only commit. Old files keep their old-unit dirs (pruning
+    // is per-file-unit exact); a later full compaction converges the
+    // layout. `mixed_layout` reports whether the table currently holds
+    // both units.
+    proc("set_time_unit", "version INT, mixed_layout BOOLEAN",
+        req("table"), req("source"), req("unit")) { a =>
+      val t = tableByName(a.str("table"))
+      val v = t.alterTimeUnit(a.str("source"), a.str("unit"))
+      Seq(Row(v, t.timeUnitsMixed(v)))
+    },
+    // CALL c.system.tag('ns.t', 'name' [, version]): create an IMMUTABLE
+    // named ref at `version` (default: latest) — read it back with
+    // `VERSION AS OF 'name'`; vacuum keeps the floor at the oldest tag.
+    // Re-pointing is drop_tag + tag, both explicit.
+    proc("tag", "name STRING, version INT",
+        req("table"), req("name"), opt("version", IntegerType)) { a =>
+      Seq(Row(a.str("name"), tableByName(a.str("table"))
+        .tag(a.str("name"), a.opt[Int]("version"))))
+    },
+    // CALL c.system.drop_tag('ns.t', 'name'): release the ref and its
+    // retention pin — the tagged history becomes reclaimable.
+    proc("drop_tag", "dropped BOOLEAN", req("table"), req("name")) { a =>
+      Seq(Row(tableByName(a.str("table")).dropTag(a.str("name"))))
+    },
+    // CALL c.system.tags('ns.t'): the named refs and their pinned
+    // versions — "which snapshots can still be named".
+    proc("tags", TagsSchema, req("table")) { a =>
+      tagRows(tableByName(a.str("table")))
+    },
+    // CALL c.system.ann_search_batch('ns.idx', array(id, ...) [, k
+    // [, nprobe [, require_fresh [, variant]]]]): N queries through ONE
+    // persisted-index pass (AnnIndex.searchIvfBatch — routing is the
+    // broadcast k × N centroid product, scoring an equi-join on the
+    // probed cell, per-query window top-k). At most k rows PER QUERY
+    // cross the driver — bounded by the ask, never the corpus; the
+    // nightly-similarity-sweep shape without leaving SQL. The score
+    // column is named for the variant: q_cos (exact) or sq8_sim ('sq8'
+    // ranks the persisted 8-bit codes — 4× less ranking I/O, near-exact
+    // recall; the index needs sq8 artifacts).
+    dynamicProc("ann_search_batch", req("index"),
+        req("query_vec_ids", ArrayType(LongType)), arg("k", 5),
+        arg("nprobe", 1), arg("require_fresh", false),
+        arg("variant", "exact")) { a =>
+      val idx = indexRoot(a)
+      val qids = a.longs("query_vec_ids")
+      require(qids.nonEmpty, "ann_search_batch needs query ids")
+      val k = a.int("k")
+      require(k > 0, s"ann_search_batch k must be positive, got $k")
+      val (fresh, np) = (a.bool("require_fresh"), a.int("nprobe"))
+      val (df, scoreCol) = a.str("variant") match {
+        case "exact" => (AnnIndex.searchIvfBatch(spark, idx, qids, k,
+          requireFresh = fresh, nprobe = np), "q_cos")
+        case "sq8" => (AnnIndex.searchIvfSq8Batch(spark, idx, qids, k,
+          requireFresh = fresh, nprobe = np), "sq8_sim")
+        case other => throw new IllegalArgumentException(
+          s"ann_search_batch variant must be exact|sq8, got $other")
+      }
+      (StructType.fromDDL(
+        s"q_id BIGINT, vec_id BIGINT, cluster INT, $scoreCol DOUBLE"),
+        df.collect().toSeq)
+    },
+    // CALL c.system.branch('ns.t', 'name' [, version]): fork a WRITABLE
+    // branch at `version` (default: head) — write-audit-publish. Every
+    // write path targets it via the `ns.t.branch_<name>` identifier; main
+    // readers never see branch commits until CALL system.publish
+    // fast-forwards them.
+    proc("branch", "name STRING, forked_from INT",
+        req("table"), req("name"), opt("version", IntegerType)) { a =>
+      Seq(Row(a.str("name"), tableByName(a.str("table"))
+        .createBranch(a.str("name"), a.opt[Int]("version"))))
+    },
+    // CALL c.system.publish('ns.t', 'name'): fast-forward the branch head
+    // onto main as ONE atomic version (op=publish, delta-encoded against
+    // main's head). Refuses if main moved since the fork — re-branch and
+    // replay, never a silent merge.
+    proc("publish", "published_version INT",
+        req("table"), req("name")) { a =>
+      Seq(Row(tableByName(a.str("table")).publishBranch(a.str("name"))))
+    },
+    // CALL c.system.drop_branch('ns.t', 'name'): delete the branch log;
+    // files only it referenced become vacuum-reclaimable.
+    proc("drop_branch", "dropped BOOLEAN", req("table"), req("name")) { a =>
+      Seq(Row(tableByName(a.str("table")).dropBranch(a.str("name"))))
+    },
+    // CALL c.system.branches('ns.t'): live branches, their heads, and
+    // fork points — "what work is in flight against this table".
+    proc("branches", "name STRING, head INT, forked_from INT",
+        req("table")) { a =>
+      val t = tableByName(a.str("table"))
+      t.branches().map { n =>
+        val bt = t.branchTable(n)
+        Row(n, bt.latestVersion.getOrElse(-1), bt.forkedFrom.getOrElse(-1))
+      }
+    },
+    // CALL c.system.create_mv('ns.mv', 'ns.src', 'k1,k2',
+    // 'total:value[,out2:src2]' [, filter [, derives]]): persist an
+    // incrementally-maintained materialized view (GROUP BY group_cols
+    // with COUNT(*) AS mv_count and SUM(src) AS out per spec) as a
+    // catalog table. The view registers a change-feed cursor on the
+    // source so vacuum can never drop its un-consumed window; see
+    // graft.operators.MaterializedView for the refresh contract.
+    proc("create_mv", "version INT, source_version INT",
+        req("view"), req("source"), req("group_cols"), req("sums"),
+        opt("filter", StringType), opt("derives", StringType)) { a =>
+      val path = newTablePath(a, "view")
+      val (src, srcSchema) = tableArg(a, "source")
+      val (sums, mins, maxs) = parseAggSpec(a.str("sums"))
+      val v = MaterializedView.create(spark, path, a.str("view"), src,
+        srcSchema, items(a.str("group_cols")), sums, a.opt[String]("filter"),
+        mins, maxs, derives(a))
+      Seq(Row(v, src.latestVersion.getOrElse(-1)))
+    },
+    // CALL c.system.create_mv_joined('ns.mv', 'ns.fact',
+    // 'ns.dim[;ns.dim2…]', 'fk:dk[,fk2:dk2][;fk:dk…]', 'group_cols',
+    // 'out:src[,..]' [, filter [, derives]]): a STAR-SCHEMA view — fact
+    // JOIN dim1 [JOIN dim2 …] (each inner, broadcast; each dim unique on
+    // its keys) grouped and summed, group/sum/filter columns from any
+    // side; 'derives' (name:expr, ';'-separated) are row-local computed
+    // columns that may combine all sides. An N-DIM star lists its dims
+    // ';'-separated, join_on aligning positionally (','-separated keys
+    // within a dim). Every dim is PINNED independently: fact deltas fold
+    // against the pinned snapshots, and each dim change folds as its own
+    // DIM DELTA (changed keys → affected groups, telescoped across dims)
+    // that re-pins — never O(view).
+    proc("create_mv_joined", "version INT, fact_version INT, " +
+        "dim_version INT", req("view"), req("fact"), req("dim"),
+        req("join_on"), req("group_cols"), req("sums"),
+        opt("filter", StringType), opt("derives", StringType)) { a =>
+      val path = newTablePath(a, "view")
+      val (fact, factSchema) = tableArg(a, "fact")
+      val dimNames = items(a.str("dim"), ';')
+      val joinSegs = items(a.str("join_on"), ';')
+      require(dimNames.nonEmpty && joinSegs.length == dimNames.length,
+        s"join_on must carry one ';'-segment per dim: " +
+          s"${dimNames.length} dims, ${joinSegs.length} segments")
+      val dimSpecs = dimNames.zip(joinSegs).map { case (dn, js) =>
+        val dim = tableByName(dn)
+        (dim, schemaOf(dim, dn), pairs(js, ',', ':', "join_on"))
+      }
+      val (sums, mins, maxs) = parseAggSpec(a.str("sums"))
+      val v = MaterializedView.createStar(spark, path, a.str("view"), fact,
+        factSchema, dimSpecs, items(a.str("group_cols")), sums,
+        a.opt[String]("filter"), mins, maxs, derives(a))
+      Seq(Row(v, fact.latestVersion.getOrElse(-1),
+        dimSpecs.head._1.latestVersion.getOrElse(-1)))
+    },
+    // CALL c.system.refresh_mv('ns.mv' [, full]): one transactional
+    // refresh — O(changed groups) incremental fold of the source's change
+    // feed, or a full recompute when the range crosses a reset (or
+    // full => true). No-op when already current; progress (#mvsrc) and
+    // data ride one atomic commit (exactly-once).
+    proc("refresh_mv", "mode STRING, from_version INT, to_version INT, " +
+        "groups_changed BIGINT, mv_version INT",
+        req("view"), arg("full", false)) { a =>
+      val st = MaterializedView.refresh(spark,
+        tableByName(a.str("view")).root, a.bool("full"))
+      Seq(Row(st.mode, st.fromVersion, st.toVersion, st.groupsChanged,
+        st.mvVersion))
+    },
+    // CALL c.system.mv_status('ns.mv'): the view's maintenance position —
+    // consumed source version vs source head, how many versions behind,
+    // the definition, and (star views) the pinned dim version vs the dim
+    // head — without touching data.
+    proc("mv_status", "name STRING, consumed_version INT, " +
+        "source_head INT, behind INT, group_cols STRING, sums STRING, " +
+        "filter STRING, derives STRING, dim STRING, dim_pinned INT, " +
+        "dim_head INT, dim_behind INT", req("view")) { a =>
+      val t = tableByName(a.str("view"))
+      val d = MaterializedView.definition(spark, t.root)
+      val last = MaterializedView.lastSourceVersion(t)
+      val head = TxLogTable(spark, d.source).latestVersion.getOrElse(-1)
+      val dimPinneds = d.dims.indices.map(MaterializedView.lastDimVersion(t, _))
+      val dimHeads = d.dims.map(dm =>
+        TxLogTable(spark, dm.root).latestVersion.getOrElse(-1))
+      // the N-dim star reports one ';'-joined cell per column: roots,
+      // pins, heads; dim_behind is the WORST lag (the number a
+      // maintenance scheduler acts on)
+      Seq(Row(d.name, last, head, math.max(0, head - last),
+        d.groupCols.mkString(","),
+        (d.sums.map { case (o, c) => s"$o:$c" } ++
+          d.mins.map { case (o, c) => s"$o:min:$c" } ++
+          d.maxs.map { case (o, c) => s"$o:max:$c" }).mkString(","),
+        d.filterExpr,
+        Option.when(d.derives.nonEmpty)(
+          d.derives.map { case (n, _, e) => s"$n:$e" }.mkString(";")),
+        Option.when(d.dims.nonEmpty)(d.dims.map(_.root).mkString(";")),
+        dimPinneds.headOption, dimHeads.headOption,
+        Option.when(d.dims.nonEmpty)(dimPinneds.zip(dimHeads)
+          .map { case (p, h) => math.max(0, h - p) }.max)))
+    },
+    // CALL c.system.mvs('ns'): every materialized view in the namespace
+    // with its maintenance position — the fleet dashboard (which views
+    // exist, what they watch, how far behind). One directory listing +
+    // one manifest-meta read per view; no data touched.
+    proc("mvs", "table STRING, name STRING, consumed_version INT, " +
+        "source_head INT, behind INT", req("namespace")) { a =>
+      viewsIn(a.str("namespace")).map { case (qn, root) =>
+        // one broken view (vacuumed-away #mvsrc, half-created mv.def,
+        // missing source) must not take down the fleet dashboard: flag
+        // it with consumed_version = -1 instead
+        scala.util.Try {
+          val d = MaterializedView.definition(spark, root)
+          val last = MaterializedView.lastSourceVersion(
+            TxLogTable(spark, root))
+          val head = TxLogTable(spark, d.source).latestVersion.getOrElse(-1)
+          Row(qn, d.name, last, head, math.max(0, head - last))
+        }.getOrElse(Row(qn, Paths.get(root).getFileName.toString, -1, -1, 0))
+      }
+    },
+    // CALL c.system.remove_orphans('ns.t' [, min_age_ms [, dry_run]]):
+    // delete data-dir files no reachable version references — crashed
+    // writers' leftovers — WITHOUT touching history (vacuum with keep =
+    // ALL versions). Same writer guards as vacuum: `.staging` scratch
+    // dirs are skipped and only files older than min_age_ms go (a
+    // just-staged file whose manifest publish is in flight must
+    // survive). The orphan sweep is the maintenance companion Iceberg
+    // ships as remove_orphan_files.
+    proc("remove_orphans", "files_deleted INT", req("table"),
+        arg("min_age_ms", TxLogTable.DefaultVacuumMinAgeMillis),
+        arg("dry_run", false)) { a =>
+      val (_, files) = tableByName(a.str("table")).vacuum(
+        keep = Int.MaxValue, minAgeMillis = a.long("min_age_ms"),
+        retainMillis = 0L, dryRun = a.bool("dry_run"))
+      Seq(Row(files))
+    },
+    // CALL c.system.create_mv_distinct('ns.mv', 'ns.src', 'k1,k2',
+    // 'out:src' [, filter]): an APPROX-COUNT(DISTINCT) view — the
+    // per-group HLL register table of src, maintained by the same
+    // incremental fold as every MV (appends fold, deleting windows
+    // recompute: the honest sketch contract). Read estimates with CALL
+    // system.mv_distinct.
+    proc("create_mv_distinct", "version INT, source_version INT",
+        req("view"), req("source"), req("group_cols"), req("measure"),
+        opt("filter", StringType)) { a =>
+      val path = newTablePath(a, "view")
+      val (src, srcSchema) = tableArg(a, "source")
+      val v = MaterializedView.createDistinct(spark, path, a.str("view"),
+        src, srcSchema, items(a.str("group_cols")),
+        pairOf(a.str("measure"), ':', "measure"), a.opt[String]("filter"))
+      Seq(Row(v, src.latestVersion.getOrElse(-1)))
+    },
+    // CALL c.system.create_mv_hist('ns.mv', 'ns.src', 'k1,k2', 'out:src'
+    // [, filter]): a power-of-2 HISTOGRAM view (bucket = bit length of
+    // floor(src), exact counts) — fully additive, so it folds
+    // incrementally under every DML shape. Read quantile estimates with
+    // CALL system.mv_quantile.
+    proc("create_mv_hist", "version INT, source_version INT",
+        req("view"), req("source"), req("group_cols"), req("measure"),
+        opt("filter", StringType)) { a =>
+      val path = newTablePath(a, "view")
+      val (src, srcSchema) = tableArg(a, "source")
+      val v = MaterializedView.createHist(spark, path, a.str("view"),
+        src, srcSchema, items(a.str("group_cols")),
+        pairOf(a.str("measure"), ':', "measure"), a.opt[String]("filter"))
+      Seq(Row(v, src.latestVersion.getOrElse(-1)))
+    },
+    // CALL c.system.mv_distinct('ns.mv'): per-group distinct-count
+    // estimates from a create_mv_distinct view's registers — a
+    // |groups|-sized aggregate over the ≤256 register rows each. The
+    // result columns are the view's group columns + distinct_est.
+    dynamicProc("mv_distinct", req("view")) { a =>
+      frame(MaterializedView.distinctEstimates(spark,
+        tableByName(a.str("view")).root))
+    },
+    // CALL c.system.mv_quantile('ns.mv', q): per-group quantile estimates
+    // (±1 power of 2) from a create_mv_hist view; the result columns
+    // follow the view's group columns.
+    dynamicProc("mv_quantile", req("view"), req("q", DoubleType)) { a =>
+      frame(MaterializedView.histQuantiles(spark,
+        tableByName(a.str("view")).root, a.double("q")))
+    },
+    // CALL c.system.mv_branch('ns.mv', 'name'): fork a CONSISTENT
+    // (source, view) branch pair for write-audit-publish on derived
+    // tables — audit writes go to source.branch_<name>, CALL
+    // refresh_mv('ns.mv.branch_<name>') folds them on the branch, CALL
+    // mv_publish promotes both. The view must be current.
+    proc("mv_branch", "source_fork_version INT, view_fork_version INT",
+        req("view"), req("name")) { a =>
+      val (f, v) = MaterializedView.branchMv(spark,
+        tableByName(a.str("view")).root, a.str("name"))
+      Seq(Row(f, v))
+    },
+    // CALL c.system.mv_publish('ns.mv', 'name'): publish the audited
+    // branch pair — fact first, then the view with its consumed version
+    // rewritten to the fact's just-published MAIN version. Gated on the
+    // branch view having absorbed the branch fact head.
+    proc("mv_publish", "source_version INT, view_version INT",
+        req("view"), req("name")) { a =>
+      val (f, v) = MaterializedView.publishWap(spark,
+        tableByName(a.str("view")).root, a.str("name"))
+      Seq(Row(f, v))
+    },
+    // CALL c.system.refresh_all('ns'): one maintenance sweep over every
+    // materialized view in the namespace — each stale view gets one
+    // transactional refresh (the per-view cost contract is refresh_mv's:
+    // O(changed groups)); current views no-op; a broken view is reported
+    // as mode='error' without stopping the fleet. Views are refreshed in
+    // DEPENDENCY ORDER (a view whose source is itself a view in the sweep
+    // runs after it — the exact-distinct pairs and any MV-over-MV chain
+    // come out fully current in ONE sweep). The cron body of a 100-view
+    // deployment.
+    proc("refresh_all", "table STRING, mode STRING, from_version INT, " +
+        "to_version INT, groups_changed BIGINT, view_version INT",
+        req("namespace")) { a =>
+      val views = viewsIn(a.str("namespace")).map { case (qn, root) =>
+        // a view depends on its SOURCE and (star views) its DIM — both
+        // must refresh first when they are views themselves, or the
+        // sweep would fold against a stale upstream and need a second
+        // pass
+        val deps = scala.util.Try {
+          val d = MaterializedView.definition(spark, root)
+          d.source +: d.dims.map(_.root)
+        }.getOrElse(Nil)
+        (qn, root, deps)
+      }
+      // Kahn order on the view→view source/dim edges; anything left (a
+      // cycle can only mean corrupted defs) appends unordered and will
+      // surface as error rows, not be dropped
+      val byRoot = views.map(v => v._2 -> v).toMap
+      val ordered = scala.collection.mutable.ArrayBuffer
+        .empty[(String, String, Seq[String])]
+      var remaining = views
+      var progressed = true
+      while (remaining.nonEmpty && progressed) {
+        val (ready, blocked) = remaining.partition(v =>
+          !v._3.exists(s => byRoot.contains(s) &&
+            !ordered.exists(_._2 == s)))
+        progressed = ready.nonEmpty
+        ordered ++= ready
+        remaining = blocked
+      }
+      ordered ++= remaining
+      ordered.toSeq.map { case (qn, root, _) =>
+        scala.util.Try {
+          val st = MaterializedView.refresh(spark, root)
+          Row(qn, st.mode, st.fromVersion, st.toVersion, st.groupsChanged,
+            st.mvVersion)
+        }.recover { case e =>
+          Row(qn, s"error: ${e.getMessage.take(120)}", -1, -1, -1L, -1)
+        }.get
+      }
+    },
+    // CALL c.system.create_mv_distinct_exact('ns.mv', 'ns.src', 'k1,k2',
+    // 'u' [, filter]): EXACT incremental COUNT(DISTINCT u) — two composed
+    // views (inner keyed by (groups, u) count-only at '<mv>_keys'; outer
+    // counts the inner's rows), both fully additive, so distinct counts
+    // stay exact AND incremental under every DML shape including
+    // deletes. Refresh inner-then-outer (refresh_all orders the pair
+    // automatically). Read the count as the outer view's mv_count.
+    proc("create_mv_distinct_exact", "keys_version INT, view_version INT, " +
+        "source_version INT", req("view"), req("source"), req("group_cols"),
+        req("distinct_col"), opt("filter", StringType)) { a =>
+      val path = newTablePath(a, "view")
+      val (src, srcSchema) = tableArg(a, "source")
+      val (v1, v2) = MaterializedView.createDistinctExact(spark, path,
+        a.str("view"), src, srcSchema, items(a.str("group_cols")),
+        a.str("distinct_col").trim, a.opt[String]("filter"))
+      Seq(Row(v1, v2, src.latestVersion.getOrElse(-1)))
+    })
 
-  private def inParam(n: String, dt: org.apache.spark.sql.types.DataType,
-                      default: Option[String] = None): ProcedureParameter = {
-    val b = ProcedureParameter.in(n, dt)
-    default.foreach(b.defaultValue)
-    b.build()
-  }
+  private lazy val procedureByName: Map[String, SystemProcedure] =
+    procedures.map(p => p.name -> p).toMap
 
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
     if (namespace.sameElements(Array("system")))
-      Array("compact", "vacuum", "history", "partitions", "restore",
-        "clone", "zorder", "rebucket", "semdedup", "dedup_near",
-        "bm25", "optimize", "detail", "analyze", "resort", "changes",
-        "ann_build", "ann_refresh", "ann_search", "ann_build_auto",
-        "ann_status",
-        "cursors", "release_cursor", "delete_pos", "update_pos",
-        "set_time_unit", "tag", "drop_tag", "tags", "ann_search_batch",
-        "branch", "publish", "drop_branch", "branches",
-        "create_mv", "create_mv_joined", "refresh_mv", "mv_status",
-        "mvs", "remove_orphans", "create_mv_distinct", "create_mv_hist",
-        "mv_distinct", "mv_quantile", "mv_branch", "mv_publish",
-        "refresh_all", "create_mv_distinct_exact")
-        .map(Identifier.of(Array("system"), _))
+      procedures.map(p => Identifier.of(Array("system"), p.name)).toArray
     else Array.empty
 
   override def loadProcedure(ident: Identifier): UnboundProcedure = {
     require(ident.namespace.sameElements(Array("system")),
       s"procedures live in the 'system' namespace, got ${ident.toString}")
-    import org.apache.spark.sql.types._
-    ident.name match {
-      case "compact" =>
-        // CALL c.system.compact('ns.t' [, files [, partition]]): rewrite
-        // the current snapshot into `files` files per partition (1 = full
-        // compaction; MOR tombstones fold in, the usual prerequisite for
-        // row-level DML on a MOR table). With the optional `partition`
-        // spec ('col=value', comma-separated for multiple columns) only
-        // THAT partition's files rewrite and the rest carry by manifest
-        // reference — OPTIMIZE for the hot partition of a 100 TB table,
-        // O(partition) instead of O(table).
-        new MaintenanceProc("compact", Seq(
-          inParam("table", StringType),
-          inParam("files", IntegerType, Some("1")),
-          inParam("partition", StringType, Some("NULL")))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            val files = if (input.isNullAt(1)) 1 else input.getInt(1)
-            val before = t.fileCount()
-            val schema = t.tableSchema.getOrElse(
-              TxLogV2Table(spark, t.root, input.getString(0)).schema)
-            val v =
-              if (input.isNullAt(2)) t.compact(schema, files)
-              else {
-                val preds = input.getString(2).split(',').iterator
-                  .map(_.trim).filter(_.nonEmpty).map { kv =>
-                    val i = kv.indexOf('=')
-                    require(i > 0, s"partition spec entry '$kv' is not " +
-                      "col=value")
-                    kv.substring(0, i).trim ->
-                      Set(kv.substring(i + 1).trim)
-                  }.toMap
-                t.compactWhere(schema, preds, files).version
-              }
-            resultScan(StructType(Seq(
-              StructField("version", IntegerType),
-              StructField("files_before", IntegerType),
-              StructField("files_after", IntegerType))),
-              Seq(InternalRow(v, before, t.fileCount())))
-          }
-        }
-      case "vacuum" =>
-        // CALL c.system.vacuum('ns.t' [, keep [, min_age_ms
-        // [, retain_ms]]]): drop all but the last `keep` manifests and
-        // delete unreferenced data files older than min_age_ms (the age
-        // guard protects in-flight writers, exactly like the API
-        // default). retain_ms is the lagging-reader time floor — a
-        // manifest younger than it survives regardless of `keep`; the
-        // 7-day default makes a bare CALL safe on a live streamed table
-        new MaintenanceProc("vacuum", Seq(
-          inParam("table", StringType),
-          inParam("keep", IntegerType, Some("1")),
-          inParam("min_age_ms", LongType,
-            Some(TxLogTable.DefaultVacuumMinAgeMillis.toString)),
-          inParam("retain_ms", LongType,
-            Some(TxLogTable.DefaultVacuumRetainMillis.toString)),
-          // dry_run => true: report what would be reclaimed, touch
-          // nothing — the pre-flight before a retention change
-          inParam("dry_run", org.apache.spark.sql.types.BooleanType,
-            Some("false")))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            val keep = if (input.isNullAt(1)) 1 else input.getInt(1)
-            val age = if (input.isNullAt(2))
-              TxLogTable.DefaultVacuumMinAgeMillis else input.getLong(2)
-            val retain = if (input.isNullAt(3))
-              TxLogTable.DefaultVacuumRetainMillis else input.getLong(3)
-            val dry = !input.isNullAt(4) && input.getBoolean(4)
-            val (manifests, files) = t.vacuum(keep, age, retain, dry)
-            resultScan(StructType(Seq(
-              StructField("manifests_deleted", IntegerType),
-              StructField("files_deleted", IntegerType))),
-              Seq(InternalRow(manifests, files)))
-          }
-        }
-      case "delete_pos" =>
-        // CALL c.system.delete_pos('ns.t', '<predicate>'): positional
-        // (deletion-vector) DELETE — matched rows are masked by (file,
-        // position), the commit is O(matched rows) and rewrites ZERO
-        // data files (the `files_rewritten` output is the proof). The
-        // non-key-predicate complement of the MOR tombstone path; COW
-        // `DELETE FROM` remains the bulk path.
-        new MaintenanceProc("delete_pos", Seq(
-          inParam("table", StringType),
-          inParam("predicate", StringType))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            require(!input.isNullAt(1), "delete_pos needs a predicate")
-            val schema = t.tableSchema.getOrElse(
-              TxLogV2Table(spark, t.root, input.getString(0)).schema)
-            val v0 = t.latestVersion.getOrElse(-1)
-            val st = t.deleteWherePos(schema,
-              org.apache.spark.sql.functions.expr(input.getString(1)))
-            val masked = // a no-op (nothing matched) commits no version
-              if (st.version <= v0) 0L
-              else t.dvsOf(st.version).filter(_.v == st.version)
-                .map(_.n).sum
-            resultScan(StructType(Seq(
-              StructField("version", IntegerType),
-              StructField("rows_deleted", LongType),
-              StructField("files_rewritten", IntegerType))),
-              Seq(InternalRow(st.version, masked, st.rewritten)))
-          }
-        }
-      case "update_pos" =>
-        // CALL c.system.update_pos('ns.t', '<predicate>', '<set>'):
-        // positional UPDATE — matched rows are masked where they sit
-        // and re-staged ONCE with the assignments applied (new files
-        // hold ONLY the touched rows). `set` is ';'-separated
-        // `col = <expr>` pairs, each expr a SQL expression over the
-        // row's old values (`x = x + 1` increments). ';' separates
-        // because exprs legitimately contain commas; '=' splits at the
-        // first occurrence (column names are wire-safe).
-        new MaintenanceProc("update_pos", Seq(
-          inParam("table", StringType),
-          inParam("predicate", StringType),
-          inParam("set", StringType))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            require(!input.isNullAt(1) && !input.isNullAt(2),
-              "update_pos needs a predicate and a set clause")
-            val schema = t.tableSchema.getOrElse(
-              TxLogV2Table(spark, t.root, input.getString(0)).schema)
-            val assigns = input.getString(2).split(';').iterator
-              .map(_.trim).filter(_.nonEmpty).map { kv =>
-                val i = kv.indexOf('=')
-                require(i > 0, s"set entry '$kv' is not col = expr")
-                kv.substring(0, i).trim ->
-                  org.apache.spark.sql.functions.expr(kv.substring(i + 1))
-              }.toSeq
-            val v0 = t.latestVersion.getOrElse(-1)
-            val st = t.updateWherePos(schema,
-              org.apache.spark.sql.functions.expr(input.getString(1)),
-              assigns)
-            val masked = // a no-op (nothing matched) commits no version
-              if (st.version <= v0) 0L
-              else t.dvsOf(st.version).filter(_.v == st.version)
-                .map(_.n).sum
-            resultScan(StructType(Seq(
-              StructField("version", IntegerType),
-              StructField("rows_updated", LongType),
-              StructField("files_rewritten", IntegerType))),
-              Seq(InternalRow(st.version, masked, st.rewritten)))
-          }
-        }
-      case "set_time_unit" =>
-        // CALL c.system.set_time_unit('ns.t', 'ts', 'hour'): hidden-
-        // partition SPEC EVOLUTION — change a time transform's
-        // granularity as a metadata-only commit. Old files keep their
-        // old-unit dirs (pruning is per-file-unit exact); a later full
-        // compaction converges the layout. `mixed_layout` reports
-        // whether the table currently holds both units.
-        new MaintenanceProc("set_time_unit", Seq(
-          inParam("table", StringType),
-          inParam("source", StringType),
-          inParam("unit", StringType))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            require(!input.isNullAt(1) && !input.isNullAt(2),
-              "set_time_unit needs a source column and a unit")
-            val v = t.alterTimeUnit(input.getString(1),
-              input.getString(2))
-            resultScan(StructType(Seq(
-              StructField("version", IntegerType),
-              StructField("mixed_layout",
-                org.apache.spark.sql.types.BooleanType))),
-              Seq(InternalRow(v, t.timeUnitsMixed(v))))
-          }
-        }
-      case "history" =>
-        // CALL c.system.history('ns.t'): one row per surviving version
-        new MaintenanceProc("history", Seq(
-          inParam("table", StringType))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            resultScan(StructType(Seq(
-              StructField("version", IntegerType),
-              StructField("commit_millis", LongType),
-              StructField("op", StringType),
-              StructField("n_files", IntegerType))),
-              t.history().map(h => InternalRow(h.version,
-                h.commitMillis.map(Long.box).orNull,
-                h.op.map(UTF8String.fromString).orNull, h.numFiles)))
-          }
-        }
-      case "partitions" =>
-        // CALL c.system.partitions('ns.t'): one row per partition value
-        // with file/row counts from the MANIFEST alone — no file opened;
-        // SHOW PARTITIONS with sizes, free at any table size. Row counts
-        // are exact per-file footer sums; they are NULL (unknown) when a
-        // file predates stats or live MOR tombstones hide rows — the
-        // same exactness contract as the metadata aggregates. A
-        // non-partitioned table reports one row with an empty partition.
-        new MaintenanceProc("partitions", Seq(
-          inParam("table", StringType))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            val v = t.latestVersion
-            val parts = v.map(t.partitionColsOf).getOrElse(Nil)
-            val tombs = v.exists(t.tombstonesOf(_).nonEmpty)
-            // positional-delete masks are per target FILE with exact
-            // counts, so per-partition rows stay exact by subtraction
-            // (tombstones cannot: their match count needs a scan)
-            val dvByFile = v.map(t.dvsOf).getOrElse(Nil)
-              .groupMapReduce(_.file)(_.n)(_ + _)
-            val groups = t.entries(None).groupBy { e =>
-              val segs = TxLogTable.partitionSegmentsOf(e.rel)
-              parts.flatMap(c => segs.get(c).map(v => s"$c=$v"))
-                .mkString("/")
-            }
-            resultScan(StructType(Seq(
-              StructField("partition", StringType),
-              StructField("n_files", IntegerType),
-              StructField("n_rows", LongType))),
-              groups.toSeq.sortBy(_._1).map { case (p, es) =>
-                val rows = es.flatMap(
-                  _.stats.get(TxLogTable.RowsKey).map(_._1))
-                val dvSub = es.map(e =>
-                  dvByFile.getOrElse(e.rel, 0L)).sum
-                InternalRow(UTF8String.fromString(p), es.size,
-                  if (!tombs && rows.size == es.size)
-                    Long.box(rows.sum - dvSub)
-                  else null)
-              })
-          }
-        }
-      case "cursors" =>
-        // CALL c.system.cursors('ns.t'): one row per registered change-
-        // feed cursor — which consumers pin history, at which version,
-        // and when they last advanced. The operator's "who is holding my
-        // vacuum back" view (Kafka's consumer-group listing).
-        new MaintenanceProc("cursors", Seq(
-          inParam("table", StringType))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            resultScan(StructType(Seq(
-              StructField("name", StringType),
-              StructField("version", IntegerType),
-              StructField("updated_millis", LongType))),
-              t.cursors().values.toSeq.sortBy(_.name).map(c =>
-                InternalRow(UTF8String.fromString(c.name), c.version,
-                  c.updatedMillis)))
-          }
-        }
-      case "release_cursor" =>
-        // CALL c.system.release_cursor('ns.t', 'name'): drop a cursor's
-        // vacuum pin — the explicit decommissioning act for an abandoned
-        // consumer; afterwards its history is reclaimable and a late
-        // resume hits the change feed's loud vacuum-horizon refusal.
-        new MaintenanceProc("release_cursor", Seq(
-          inParam("table", StringType),
-          inParam("name", StringType))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            require(!input.isNullAt(1), "release_cursor needs a name")
-            val released = t.releaseCursor(input.getString(1))
-            resultScan(StructType(Seq(
-              StructField("released", org.apache.spark.sql.types
-                .BooleanType))),
-              Seq(InternalRow(released)))
-          }
-        }
-      case "tag" =>
-        // CALL c.system.tag('ns.t', 'name' [, version]): create an
-        // IMMUTABLE named ref at `version` (default: latest) — read it
-        // back with `VERSION AS OF 'name'`; vacuum keeps the floor at
-        // the oldest tag. Re-pointing is drop_tag + tag, both explicit.
-        new MaintenanceProc("tag", Seq(
-          inParam("table", StringType),
-          inParam("name", StringType),
-          inParam("version", IntegerType, Some("NULL")))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            require(!input.isNullAt(1), "tag needs a name")
-            val v = t.tag(input.getString(1),
-              if (input.isNullAt(2)) None else Some(input.getInt(2)))
-            resultScan(StructType(Seq(
-              StructField("name", StringType),
-              StructField("version", IntegerType))),
-              Seq(InternalRow(UTF8String.fromString(input.getString(1)),
-                v)))
-          }
-        }
-      case "drop_tag" =>
-        // CALL c.system.drop_tag('ns.t', 'name'): release the ref and
-        // its retention pin — the tagged history becomes reclaimable.
-        new MaintenanceProc("drop_tag", Seq(
-          inParam("table", StringType),
-          inParam("name", StringType))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            require(!input.isNullAt(1), "drop_tag needs a name")
-            resultScan(StructType(Seq(
-              StructField("dropped", org.apache.spark.sql.types
-                .BooleanType))),
-              Seq(InternalRow(t.dropTag(input.getString(1)))))
-          }
-        }
-      case "tags" =>
-        // CALL c.system.tags('ns.t'): the named refs and their pinned
-        // versions — "which snapshots can still be named".
-        new MaintenanceProc("tags", Seq(
-          inParam("table", StringType))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            resultScan(StructType(Seq(
-              StructField("name", StringType),
-              StructField("version", IntegerType))),
-              t.tags().toSeq.sortBy(_._1).map { case (n, v) =>
-                InternalRow(UTF8String.fromString(n), v) })
-          }
-        }
-      case "branch" =>
-        // CALL c.system.branch('ns.t', 'name' [, version]): fork a
-        // WRITABLE branch at `version` (default: head) — write-audit-
-        // publish. Every write path targets it via the
-        // `ns.t.branch_<name>` identifier; main readers never see branch
-        // commits until CALL system.publish fast-forwards them.
-        new MaintenanceProc("branch", Seq(
-          inParam("table", StringType),
-          inParam("name", StringType),
-          inParam("version", IntegerType, Some("NULL")))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            require(!input.isNullAt(1), "branch needs a name")
-            val fork = t.createBranch(input.getString(1),
-              if (input.isNullAt(2)) None else Some(input.getInt(2)))
-            resultScan(StructType(Seq(
-              StructField("name", StringType),
-              StructField("forked_from", IntegerType))),
-              Seq(InternalRow(UTF8String.fromString(input.getString(1)),
-                fork)))
-          }
-        }
-      case "publish" =>
-        // CALL c.system.publish('ns.t', 'name'): fast-forward the branch
-        // head onto main as ONE atomic version (op=publish, delta-encoded
-        // against main's head). Refuses if main moved since the fork —
-        // re-branch and replay, never a silent merge.
-        new MaintenanceProc("publish", Seq(
-          inParam("table", StringType),
-          inParam("name", StringType))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            require(!input.isNullAt(1), "publish needs a branch name")
-            val v = t.publishBranch(input.getString(1))
-            resultScan(StructType(Seq(
-              StructField("published_version", IntegerType))),
-              Seq(InternalRow(v)))
-          }
-        }
-      case "drop_branch" =>
-        // CALL c.system.drop_branch('ns.t', 'name'): delete the branch
-        // log; files only it referenced become vacuum-reclaimable.
-        new MaintenanceProc("drop_branch", Seq(
-          inParam("table", StringType),
-          inParam("name", StringType))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            require(!input.isNullAt(1), "drop_branch needs a name")
-            resultScan(StructType(Seq(
-              StructField("dropped", org.apache.spark.sql.types
-                .BooleanType))),
-              Seq(InternalRow(t.dropBranch(input.getString(1)))))
-          }
-        }
-      case "branches" =>
-        // CALL c.system.branches('ns.t'): live branches, their heads,
-        // and fork points — "what work is in flight against this table".
-        new MaintenanceProc("branches", Seq(
-          inParam("table", StringType))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            resultScan(StructType(Seq(
-              StructField("name", StringType),
-              StructField("head", IntegerType),
-              StructField("forked_from", IntegerType))),
-              t.branches().map { n =>
-                val bt = t.branchTable(n)
-                InternalRow(UTF8String.fromString(n),
-                  bt.latestVersion.getOrElse(-1),
-                  bt.forkedFrom.getOrElse(-1))
-              })
-          }
-        }
-      case "restore" =>
-        // CALL c.system.restore('ns.t', version): roll the table back to
-        // `version` as a NEW commit — O(manifest), no data file touched,
-        // history preserved. The bad-write undo button.
-        new MaintenanceProc("restore", Seq(
-          inParam("table", StringType),
-          inParam("version", IntegerType))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            require(!input.isNullAt(1), "restore needs a target version")
-            val v = t.restore(input.getInt(1))
-            resultScan(StructType(Seq(
-              StructField("version", IntegerType),
-              StructField("restored_version", IntegerType),
-              StructField("n_files", IntegerType))),
-              Seq(InternalRow(v, input.getInt(1), t.fileCount())))
-          }
-        }
-      case "clone" =>
-        // CALL c.system.clone('ns.src', 'ns.dst'): zero-copy clone of the
-        // source's current snapshot as a fresh catalog table — manifest
-        // republished as the clone's v0, data files hard-linked (no byte
-        // copied). The dev/test-against-prod-data idiom: at 100 TB a
-        // CTAS copy is hours and doubles storage; this is O(files)
-        // metadata ops.
-        new MaintenanceProc("clone", Seq(
-          inParam("source", StringType),
-          inParam("dest", StringType))) {
-          override def call(input: InternalRow) = {
-            val src = tableByName(input.getString(0))
-            val parts = input.getString(1).split('.')
-            require(parts.length >= 2 && parts.forall(_.nonEmpty),
-              s"clone dest must be 'ns.table', got '${input.getString(1)}'")
-            val dident = Identifier.of(parts.init, parts.last)
-            require(!tableExists(dident),
-              s"clone destination already exists: ${input.getString(1)}")
-            src.cloneTo(pathOf(dident).toString)
-            resultScan(StructType(Seq(
-              StructField("version", IntegerType),
-              StructField("n_files", IntegerType))),
-              Seq(InternalRow(0, src.fileCount())))
-          }
-        }
-      case "zorder" =>
-        // CALL c.system.zorder('ns.t', 'colA', 'colB' [, files]):
-        // OPTIMIZE ZORDER BY — rewrite the snapshot clustered on the
-        // Morton curve so manifest min/max stats prune range scans on
-        // EVERY listed dimension (a plain sort serves only its leading
-        // column). col_a may carry a comma-separated list for 3+
-        // dimensions — 'a,b,c' with col_b NULL — since stored-procedure
-        // signatures are fixed-arity; per-dim grid bits shrink as
-        // min(16, 63/N). The multi-dimensional skipping layout for the
-        // 100 TB point-lookup table.
-        // ... [, partition]: 'col=value' (comma-separated) scopes the
-        // rewrite to matching partition dirs (compactZOrderWhere) — the
-        // incremental-clustering form: z-order yesterday's partition
-        // after it closes, O(partition) per day, never O(table)
-        new MaintenanceProc("zorder", Seq(
-          inParam("table", StringType),
-          inParam("col_a", StringType),
-          inParam("col_b", StringType, Some("NULL")),
-          inParam("files", IntegerType, Some("8")),
-          inParam("partition", StringType, Some("NULL")))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            val schema = t.tableSchema.getOrElse(
-              TxLogV2Table(spark, t.root, input.getString(0)).schema)
-            val files = if (input.isNullAt(3)) 8 else input.getInt(3)
-            val zCols = input.getString(1).split(",").toSeq
-              .map(_.trim).filter(_.nonEmpty) ++
-              (if (input.isNullAt(2)) Nil else Seq(input.getString(2)))
-            val v =
-              if (input.isNullAt(4)) t.compactZOrder(schema, zCols, files)
-              else {
-                val preds = input.getString(4).split(',').iterator
-                  .map(_.trim).filter(_.nonEmpty).map { kv =>
-                    val i = kv.indexOf('=')
-                    require(i > 0, s"partition spec entry '$kv' is not " +
-                      "col=value")
-                    kv.substring(0, i).trim ->
-                      Set(kv.substring(i + 1).trim)
-                  }.toMap
-                t.compactZOrderWhere(schema, preds, zCols, files).version
-              }
-            resultScan(StructType(Seq(
-              StructField("version", IntegerType),
-              StructField("files_after", IntegerType))),
-              Seq(InternalRow(v, t.fileCount())))
-          }
-        }
-      case "rebucket" =>
-        // CALL c.system.rebucket('ns.t', new_buckets [, files]):
-        // bucket-spec evolution — full rewrite re-deriving the hidden
-        // bucket ids under the new count plus an atomic manifest spec
-        // bump. THE maintenance lever when a bucketed table outgrows its
-        // CREATE-time count: per-bucket bytes scale with the corpus, and
-        // KeyGroupedPartitioning is the one plan AQE skew-splitting
-        // cannot touch, so the operator re-picks n (typically 2×) and
-        // every subsequent SPJ is balanced again. O(table) once, by
-        // choice — see TxLogTable.rebucket for why not a dual-spec read.
-        new MaintenanceProc("rebucket", Seq(
-          inParam("table", StringType),
-          inParam("buckets", IntegerType),
-          inParam("key", StringType, Some("NULL")),
-          inParam("files", IntegerType, Some("0")),
-          inParam("target_bytes", LongType, Some(
-            graft.sources.TxLogTable.RebucketTargetBytes.toString)),
-          // a second grid level evolved in the SAME rewrite — one
-          // O(table) pass, one version bump, never two
-          inParam("buckets2", IntegerType, Some("NULL")),
-          inParam("key2", StringType, Some("NULL")))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            require(!input.isNullAt(1), "rebucket needs a bucket count")
-            val newN = input.getInt(1)
-            val key = if (input.isNullAt(2)) None
-              else Some(input.getString(2))
-            val files = if (input.isNullAt(3)) 0 else input.getInt(3)
-            val tgtB = if (input.isNullAt(4))
-              graft.sources.TxLogTable.RebucketTargetBytes
-              else input.getLong(4)
-            val also =
-              if (input.isNullAt(5)) {
-                // symmetric with the branch below: a key2 with no
-                // buckets2 must fail loudly, not silently drop the
-                // second grid level the caller asked for
-                require(input.isNullAt(6),
-                  "rebucket key2 needs buckets2")
-                Nil
-              } else {
-                require(!input.isNullAt(6),
-                  "rebucket buckets2 needs key2")
-                Seq(input.getString(6) -> input.getInt(5))
-              }
-            val specs = t.latestVersion.map(t.bucketSpecsOf)
-              .getOrElse(Nil)
-            val before = key.flatMap(k =>
-                specs.find(_._1 == k)).orElse(specs.headOption)
-              .map(_._2).getOrElse(0)
-            val schema = t.tableSchema.getOrElse(
-              TxLogV2Table(spark, t.root, input.getString(0)).schema)
-            val v = t.rebucket(schema, newN, key, files,
-              targetBytes = tgtB, alsoKeys = also)
-            resultScan(StructType(Seq(
-              StructField("version", IntegerType),
-              StructField("buckets_before", IntegerType),
-              StructField("buckets_after", IntegerType),
-              StructField("n_files", IntegerType))),
-              Seq(InternalRow(v, before, newN, t.fileCount())))
-          }
-        }
-      case "ann_build" =>
-        // CALL c.system.ann_build('ns.corpus', 'ns.idx' [, k [, iters
-        // [, pq]]]): train and persist an ANN index over the corpus's
-        // CURRENT version (graft.operators.AnnIndex.build) — the index
-        // lands as txlog tables under the 'ns.idx' warehouse path
-        // (meta/centroids/assignments[/codes/codebook]). The SQL-first
-        // operator of the 100 TB catalog builds serving indexes without
-        // leaving SQL.
-        new MaintenanceProc("ann_build", Seq(
-          inParam("corpus", StringType),
-          inParam("index", StringType),
-          inParam("k", IntegerType, Some("8")),
-          inParam("iterations", IntegerType, Some("2")),
-          inParam("pq", BooleanType, Some("true")),
-          inParam("sq8", BooleanType, Some("false")))) {
-          override def call(input: InternalRow) = {
-            val src = tableByName(input.getString(0))
-            val idxRoot = pathByName(input.getString(1)).toString
-            val k = if (input.isNullAt(2)) 8 else input.getInt(2)
-            val it = if (input.isNullAt(3)) 2 else input.getInt(3)
-            val pq = input.isNullAt(4) || input.getBoolean(4)
-            val sq8 = !input.isNullAt(5) && input.getBoolean(5)
-            val schema = src.tableSchema.getOrElse(
-              TxLogV2Table(spark, src.root, input.getString(0)).schema)
-            require(Seq("vec_id", "embedding").forall(
-              schema.fieldNames.contains),
-              "ann_build corpus needs (vec_id, embedding) columns")
-            val pinned = graft.operators.AnnIndex.build(
-              spark, src.root, idxRoot, schema, k, it, pq, sq8)
-            resultScan(StructType(Seq(
-              StructField("pinned_version", IntegerType))),
-              Seq(InternalRow(pinned)))
-          }
-        }
-      case "ann_build_auto" =>
-        // CALL c.system.ann_build_auto('ns.corpus', 'ns.idx'
-        // [, target_cell [, train_sample [, iters [, pq [, sq8]]]]]):
-        // the auto-sized build (graft.operators.AnnIndex.buildAuto) —
-        // k derives from the corpus so cell SIZE is the invariant, and
-        // the quantizer trains on a bounded deterministic sample, so
-        // training cost is O(sample × k) at any corpus size.
-        new MaintenanceProc("ann_build_auto", Seq(
-          inParam("corpus", StringType),
-          inParam("index", StringType),
-          inParam("target_cell", LongType, Some("4096")),
-          inParam("train_sample", LongType, Some("262144")),
-          inParam("iterations", IntegerType, Some("2")),
-          inParam("pq", BooleanType, Some("true")),
-          inParam("sq8", BooleanType, Some("false")))) {
-          override def call(input: InternalRow) = {
-            val src = tableByName(input.getString(0))
-            val idxRoot = pathByName(input.getString(1)).toString
-            val tc = if (input.isNullAt(2)) 4096L else input.getLong(2)
-            val ts = if (input.isNullAt(3)) 262144L else input.getLong(3)
-            val it = if (input.isNullAt(4)) 2 else input.getInt(4)
-            val pq = input.isNullAt(5) || input.getBoolean(5)
-            val sq8 = !input.isNullAt(6) && input.getBoolean(6)
-            val schema = src.tableSchema.getOrElse(
-              TxLogV2Table(spark, src.root, input.getString(0)).schema)
-            require(Seq("vec_id", "embedding").forall(
-              schema.fieldNames.contains),
-              "ann_build_auto corpus needs (vec_id, embedding) columns")
-            val (pinned, k) = graft.operators.AnnIndex.buildAuto(
-              spark, src.root, idxRoot, schema, it, tc, ts, pq, sq8)
-            resultScan(StructType(Seq(
-              StructField("pinned_version", IntegerType),
-              StructField("k", IntegerType))),
-              Seq(InternalRow(pinned, k)))
-          }
-        }
-      case "ann_search" =>
-        // CALL c.system.ann_search('ns.idx', query_vec_id [, k
-        // [, predicate [, require_fresh [, nprobe]]]]): IVF top-k
-        // through the persisted index without leaving SQL. The optional
-        // predicate — a SQL boolean over the corpus's own columns —
-        // restricts candidates INSIDE the probed cells (pre-filter: all
-        // k survivors satisfy it); nprobe widens routing to the n best
-        // cells (the recall/cost knob). Result is at most k rows, so
-        // the driver-side collect is bounded by the ask, never the
-        // corpus.
-        // variant => 'sq8' ranks the persisted 8-bit codes instead of the
-        // full vectors (4x less ranking I/O, near-exact recall; the
-        // index must have been built with sq8 artifacts). The sq8 path
-        // serves unfiltered — its ranking payload carries no corpus
-        // attributes; use the exact variant for predicate search.
-        new MaintenanceProc("ann_search", Seq(
-          inParam("index", StringType),
-          inParam("query_vec_id", LongType),
-          inParam("k", IntegerType, Some("5")),
-          inParam("predicate", StringType, Some("NULL")),
-          inParam("require_fresh", BooleanType, Some("false")),
-          inParam("nprobe", IntegerType, Some("1")),
-          inParam("variant", StringType, Some("'exact'")))) {
-          override def call(input: InternalRow) = {
-            val idxRoot = pathByName(input.getString(0)).toString
-            require(!input.isNullAt(1), "ann_search needs query_vec_id")
-            val qid = input.getLong(1)
-            val k = if (input.isNullAt(2)) 5 else input.getInt(2)
-            require(k > 0, s"ann_search k must be positive, got $k")
-            val pred =
-              if (input.isNullAt(3)) None
-              else Some(org.apache.spark.sql.functions
-                .expr(input.getString(3)))
-            val fresh = !input.isNullAt(4) && input.getBoolean(4)
-            val np = if (input.isNullAt(5)) 1 else input.getInt(5)
-            val variant =
-              if (input.isNullAt(6)) "exact" else input.getString(6)
-            val rows = variant match {
-              case "exact" => graft.operators.AnnIndex.searchIvf(spark,
-                idxRoot, qid, k, requireFresh = fresh, filter = pred,
-                nprobe = np).collect()
-              case "sq8" =>
-                require(pred.isEmpty,
-                  "ann_search variant 'sq8' serves unfiltered — use " +
-                    "the exact variant for predicate search")
-                graft.operators.AnnIndex.searchIvfSq8(spark, idxRoot,
-                  qid, k, requireFresh = fresh, nprobe = np).collect()
-              case other => throw new IllegalArgumentException(
-                s"ann_search variant must be 'exact' or 'sq8': $other")
-            }
-            resultScan(StructType(Seq(
-              StructField("vec_id", LongType),
-              StructField("cluster", IntegerType),
-              StructField("q_cos", DoubleType))),
-              rows.toSeq.map(r =>
-                InternalRow(r.getLong(0), r.getInt(1), r.getDouble(2))))
-          }
-        }
-      case "ann_search_batch" =>
-        // CALL c.system.ann_search_batch('ns.idx', array(id, ...)
-        // [, k [, nprobe [, require_fresh]]]): N queries through ONE
-        // persisted-index pass (AnnIndex.searchIvfBatch — routing is
-        // the broadcast k × N centroid product, scoring an equi-join
-        // on the probed cell, per-query window top-k). At most k rows
-        // PER QUERY cross the driver — bounded by the ask, never the
-        // corpus; the nightly-similarity-sweep shape without leaving
-        // SQL.
-        new MaintenanceProc("ann_search_batch", Seq(
-          inParam("index", StringType),
-          inParam("query_vec_ids",
-            org.apache.spark.sql.types.ArrayType(LongType)),
-          inParam("k", IntegerType, Some("5")),
-          inParam("nprobe", IntegerType, Some("1")),
-          inParam("require_fresh", BooleanType, Some("false")),
-          inParam("variant", StringType, Some("'exact'")))) {
-          override def call(input: InternalRow) = {
-            val idxRoot = pathByName(input.getString(0)).toString
-            require(!input.isNullAt(1),
-              "ann_search_batch needs query_vec_ids")
-            val qids = input.getArray(1).toLongArray().toSeq
-            require(qids.nonEmpty, "ann_search_batch needs query ids")
-            val k = if (input.isNullAt(2)) 5 else input.getInt(2)
-            require(k > 0, s"ann_search_batch k must be positive, got $k")
-            val np = if (input.isNullAt(3)) 1 else input.getInt(3)
-            val fresh = !input.isNullAt(4) && input.getBoolean(4)
-            val variant = if (input.isNullAt(5)) "exact"
-              else input.getString(5)
-            // 'sq8' ranks the persisted 8-bit codes (4× less ranking
-            // I/O, near-exact recall — the index needs sq8 artifacts)
-            val (df, scoreCol) = variant match {
-              case "exact" => (graft.operators.AnnIndex.searchIvfBatch(
-                spark, idxRoot, qids, k, requireFresh = fresh,
-                nprobe = np), "q_cos")
-              case "sq8" => (graft.operators.AnnIndex.searchIvfSq8Batch(
-                spark, idxRoot, qids, k, requireFresh = fresh,
-                nprobe = np), "sq8_sim")
-              case other => throw new IllegalArgumentException(
-                s"ann_search_batch variant must be exact|sq8, got $other")
-            }
-            val rows = df.collect()
-            resultScan(StructType(Seq(
-              StructField("q_id", LongType),
-              StructField("vec_id", LongType),
-              StructField("cluster", IntegerType),
-              StructField(scoreCol, DoubleType))),
-              rows.toSeq.map(r => InternalRow(r.getLong(0), r.getLong(1),
-                r.getInt(2), r.getDouble(3))))
-          }
-        }
-      case "ann_refresh" =>
-        // CALL c.system.ann_refresh('ns.idx' [, max_routed_frac]):
-        // advance a persisted index to its corpus head WITHOUT a
-        // training pass — new vectors route to the existing centroids,
-        // PQ codes encode against the persisted codebook, the pin
-        // advances. O(new vectors); the between-rebuilds growth path
-        // (AnnIndex.refresh's contract, tombstoned corpora refuse
-        // loudly). The STALENESS GUARD (AnnIndex.refreshAuto) is ON BY
-        // DEFAULT at the conf policy spark.graft.ann.maxRoutedFrac
-        // (0.5): when absorbing the window would push the
-        // routed-since-train fraction past the threshold, the refresh
-        // retrains instead — recall decay from frozen centroids is
-        // bounded by policy, not operator vigilance. An explicit
-        // max_routed_frac overrides; ≤ 0 disables the guard.
-        // action ∈ noop|routed|retrained.
-        new MaintenanceProc("ann_refresh", Seq(
-          inParam("index", StringType),
-          inParam("max_routed_frac", DoubleType, Some("NULL")))) {
-          override def call(input: InternalRow) = {
-            val idxRoot = pathByName(input.getString(0)).toString
-            // omitted → the conf-resolved policy default (0.5): the
-            // guard is ON unless the caller explicitly passes ≤ 0
-            val frac =
-              if (input.isNullAt(1))
-                graft.operators.AnnIndex.confMaxRoutedFrac(spark)
-              else input.getDouble(1)
-            val (v, added, action) =
-              if (frac > 0)
-                graft.operators.AnnIndex.refreshAuto(spark, idxRoot, frac)
-              else {
-                val (v0, a0) =
-                  graft.operators.AnnIndex.refresh(spark, idxRoot)
-                (v0, a0, if (a0 == 0) "noop" else "routed")
-              }
-            resultScan(StructType(Seq(
-              StructField("pinned_version", IntegerType),
-              StructField("vectors_added", LongType),
-              StructField("action", StringType))),
-              Seq(InternalRow(v, added,
-                org.apache.spark.unsafe.types.UTF8String
-                  .fromString(action))))
-          }
-        }
-      case "ann_status" =>
-        // CALL c.system.ann_status('ns.idx'): the index's drift ledger —
-        // routed-since-train fraction (recall-decay proxy: vectors
-        // routed to centroids trained on an older distribution) and
-        // cell-size imbalance (a quantizer that stopped fitting the
-        // data concentrates mass in few cells). O(index) — one meta
-        // read + one |cells|-sized aggregate; never scans the corpus.
-        new MaintenanceProc("ann_status", Seq(
-          inParam("index", StringType))) {
-          override def call(input: InternalRow) = {
-            val idxRoot = pathByName(input.getString(0)).toString
-            val st = graft.operators.AnnIndex.status(spark, idxRoot)
-            resultScan(StructType(Seq(
-              StructField("pinned_version", IntegerType),
-              StructField("corpus_version", IntegerType),
-              StructField("total_vectors", LongType),
-              StructField("routed_since_train", LongType),
-              StructField("routed_frac", DoubleType),
-              StructField("cells", LongType),
-              StructField("mean_cell", DoubleType),
-              StructField("max_cell", LongType),
-              StructField("imbalance", DoubleType))),
-              Seq(InternalRow(st.pinnedVersion, st.corpusVersion,
-                st.totalVectors, st.routedSinceTrain, st.routedFrac,
-                st.cells, st.meanCell, st.maxCell, st.imbalance)))
-          }
-        }
-      case "semdedup" =>
-        // CALL c.system.semdedup('ns.src', 'ns.dst', tau [, k]): the SQL
-        // surface of graft.operators.SemDedup — cluster-blocked semantic
-        // dedup over the source's (vec_id, embedding) columns, verdicts
-        // (vec_id, cluster, kept) materialized as a fresh txlog table.
-        // k = 0 (default) derives k from the corpus (the scale path);
-        // an explicit k pins it (deterministic replay). The SQL-first
-        // user of the 100 TB catalog never has to leave SQL to curate.
-        new MaintenanceProc("semdedup", Seq(
-          inParam("source", StringType),
-          inParam("dest", StringType),
-          inParam("tau", DoubleType),
-          inParam("k", IntegerType, Some("0")))) {
-          override def call(input: InternalRow) = {
-            implicit val s: SparkSession = spark
-            val src = tableByName(input.getString(0))
-            require(!input.isNullAt(2), "semdedup needs tau")
-            val tau = input.getDouble(2)
-            val k = if (input.isNullAt(3)) 0 else input.getInt(3)
-            val schema = src.tableSchema.getOrElse(
-              TxLogV2Table(spark, src.root, input.getString(0)).schema)
-            require(Seq("vec_id", "embedding").forall(
-              schema.fieldNames.contains),
-              "semdedup source needs (vec_id, embedding) columns")
-            val emb = src.snapshot(schema)
-            val verdicts =
-              if (k > 0) graft.operators.SemDedup.withK(emb, k, tau)
-              else graft.operators.SemDedup(emb, tau)
-            val outV = writeResultTable(input.getString(1), verdicts)
-            resultScan(StructType(Seq(
-              StructField("dest_version", IntegerType),
-              StructField("n_vectors", LongType))),
-              Seq(InternalRow(outV, tableByName(input.getString(1))
-                .entries(None).flatMap(_.stats.get(TxLogTable.RowsKey))
-                .map(_._1).sum)))
-          }
-        }
-      case "dedup_near" =>
-        // CALL c.system.dedup_near('ns.src', 'ns.dst' [, threshold]):
-        // the SQL surface of graft.operators.Dedup.dedupNearExact —
-        // MinHash-LSH-gated near-dup removal over the source's
-        // (doc_id, source, text) columns, surviving corpus materialized
-        // as a fresh txlog table. Same scale shape as the operator:
-        // banding + candidate verify + one anti-join, never all-pairs.
-        new MaintenanceProc("dedup_near", Seq(
-          inParam("source", StringType),
-          inParam("dest", StringType),
-          inParam("threshold", DoubleType, Some("0.5")))) {
-          override def call(input: InternalRow) = {
-            val src = tableByName(input.getString(0))
-            val thr = if (input.isNullAt(2)) 0.5 else input.getDouble(2)
-            val schema = src.tableSchema.getOrElse(
-              TxLogV2Table(spark, src.root, input.getString(0)).schema)
-            require(Seq("doc_id", "source", "text").forall(
-              schema.fieldNames.contains),
-              "dedup_near source needs (doc_id, source, text) columns")
-            val docs = src.snapshot(schema)
-            // cache hygiene: the banding the operator caches for its
-            // two in-query consumers is one-shot here — the handle the
-            // operator returns is released after materializing (finally:
-            // an existing-dest refusal must not leak it either), so a
-            // long-lived session never accumulates corpus-sized cache
-            // entries across procedure calls
-            val (kept, bands) = graft.operators.Dedup
-              .dedupNearExactWithHandle(docs, thr)
-            val outV =
-              try writeResultTable(input.getString(1), kept)
-              finally bands.unpersist()
-            resultScan(StructType(Seq(
-              StructField("dest_version", IntegerType),
-              StructField("n_kept", LongType))),
-              Seq(InternalRow(outV, tableByName(input.getString(1))
-                .entries(None).flatMap(_.stats.get(TxLogTable.RowsKey))
-                .map(_._1).sum)))
-          }
-        }
-      case "changes" =>
-        // CALL c.system.changes('ns.src', 'ns.dst', from_v [, to_v
-        // [, with_deletes]]): the BATCH change feed in pure SQL — rows
-        // added in (from_v, to_v] (to_v NULL = latest), tagged
-        // _commit_version, materialized as a fresh txlog table;
-        // with_deletes additionally surfaces MOR tombstones as
-        // keys-only '_change_type = delete' rows (changesWithDeletes).
-        // Row-preserving maintenance versions are skipped (the same
-        // contract the streaming source defaults to). The SQL-only
-        // consumer reads a day's delta of a 100 TB table without ever
-        // importing this library.
-        // Timestamp twins (from_ts / to_ts — epoch millis or a Timestamp
-        // literal) resolve against commit instants with the same AT-OR-
-        // AFTER / at-or-before contract as the streaming options: the
-        // feed covers every commit landing within [from_ts, to_ts].
-        // "yesterday's delta" without ever looking a version number up.
-        new MaintenanceProc("changes", Seq(
-          inParam("source", StringType),
-          inParam("dest", StringType),
-          inParam("from_v", IntegerType, Some("NULL")),
-          inParam("to_v", IntegerType, Some("NULL")),
-          inParam("with_deletes", BooleanType, Some("false")),
-          inParam("from_ts", StringType, Some("NULL")),
-          inParam("to_ts", StringType, Some("NULL")))) {
-          override def call(input: InternalRow) = {
-            val src = tableByName(input.getString(0))
-            require(input.isNullAt(2) != input.isNullAt(5),
-              "changes needs exactly one of from_v / from_ts")
-            require(input.isNullAt(3) || input.isNullAt(6),
-              "to_v and to_ts are mutually exclusive")
-            def millisOf(s: String): Long = s.toLongOption.getOrElse(
-              java.sql.Timestamp.valueOf(s).getTime)
-            lazy val hist = src.history()
-            val fromV =
-              if (!input.isNullAt(2)) input.getInt(2)
-              else {
-                val m = millisOf(input.getString(5))
-                // first commit AT-OR-AFTER from_ts enters the feed;
-                // a ts past all history yields an empty window
-                hist.find(_.commitMillis.exists(_ >= m))
-                  .map(_.version - 1)
-                  .getOrElse(src.latestVersion.getOrElse(0))
-              }
-            val toV =
-              if (!input.isNullAt(3)) input.getInt(3)
-              else if (!input.isNullAt(6)) {
-                val m = millisOf(input.getString(6))
-                // last commit at-or-before to_ts closes the window;
-                // a ts before all history yields an empty window
-                hist.reverse.find(_.commitMillis.exists(_ <= m))
-                  .map(_.version).getOrElse(fromV)
-              }
-              else src.latestVersion.getOrElse(fromV)
-            val withDel = !input.isNullAt(4) && input.getBoolean(4)
-            val schema = src.tableSchema.getOrElse(
-              TxLogV2Table(spark, src.root, input.getString(0)).schema)
-            val feed =
-              if (withDel) src.changesWithDeletes(schema, fromV, toV,
-                skipRewrites = true)
-              else src.changesBetween(schema, fromV, toV,
-                skipRewrites = true)
-            val outV = writeResultTable(input.getString(1), feed)
-            resultScan(StructType(Seq(
-              StructField("dest_version", IntegerType),
-              StructField("from_v", IntegerType),
-              StructField("to_v", IntegerType))),
-              Seq(InternalRow(outV, fromV, toV)))
-          }
-        }
-      case "detail" =>
-        // CALL c.system.detail('ns.t'): DESCRIBE DETAIL — one row of the
-        // table's physical identity straight off the manifest (no file
-        // opened, free at any size): current version, file/row/byte
-        // totals, the partition layout, bucket spec(s), sort order, and
-        // bloom columns. The first thing an operator asks of an
-        // unfamiliar 100 TB table.
-        new MaintenanceProc("detail", Seq(
-          inParam("table", StringType))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            val v = t.latestVersion.get
-            val sizes = t.fileSizes(Some(v))
-            // metaRowCount handles every exactness case (pre-stats
-            // files, tombstones decline, DV masks subtract exactly)
-            val exactRows =
-              t.metaRowCount(Some(v)).map(Long.box).orNull
-            def s(str: String) = UTF8String.fromString(str)
-            resultScan(StructType(Seq(
-              StructField("version", IntegerType),
-              StructField("n_files", IntegerType),
-              StructField("n_rows", LongType),
-              StructField("bytes", LongType),
-              StructField("partition_cols", StringType),
-              StructField("bucket_spec", StringType),
-              StructField("sort_cols", StringType),
-              StructField("bloom_cols", StringType),
-              StructField("ndv", StringType),
-              StructField("cursors", StringType),
-              StructField("optimize_write", BooleanType))),
-              Seq(InternalRow(v, sizes.size, exactRows,
-                Long.box(sizes.map(_._2).sum),
-                s(t.partitionColsOf(v).mkString(",")),
-                s((t.bucketSpecsOf(v).map { case (k, n) =>
-                    s"bucket($n, $k)" } ++
-                  t.timeSpecsOf(v).map { case (k, u) => s"${u}s($k)" })
-                  .mkString(", ")),
-                s(t.sortColsOf(v).mkString(",")),
-                s(t.bloomColsOf(v).mkString(",")),
-                s(t.ndvOf(v).toSeq.sortBy(_._1)
-                  .map { case (c, n) => s"$c≈$n" }.mkString(", ")),
-                // who pins vacuum, at which version — the retention
-                // question DESCRIBE DETAIL should answer in one glance
-                s(t.cursors().values.toSeq.sortBy(_.name)
-                  .map(c => s"${c.name}@v${c.version}").mkString(", ")),
-                t.optimizeWriteOf(v))))
-          }
-        }
-      case "resort" =>
-        // CALL c.system.resort('ns.t' [, target_bytes]): re-arm a sorted
-        // table's ordering report by rewriting ONLY the partition dirs
-        // whose file ranges overlap — O(damaged), never O(table); armed
-        // dirs are carried by reference and a fully-armed table is a
-        // no-op. The targeted twin of `compact` for the sorted layout.
-        new MaintenanceProc("resort", Seq(
-          inParam("table", StringType),
-          inParam("target_bytes", LongType, Some(
-            graft.sources.TxLogTable.RebucketTargetBytes.toString)))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            val tgtB = if (input.isNullAt(1))
-              graft.sources.TxLogTable.RebucketTargetBytes
-              else input.getLong(1)
-            val schema = t.tableSchema.getOrElse(
-              TxLogV2Table(spark, t.root, input.getString(0)).schema)
-            val stats = t.resort(schema, tgtB)
-            resultScan(StructType(Seq(
-              StructField("version", IntegerType),
-              StructField("rewritten", IntegerType),
-              StructField("carried", IntegerType))),
-              Seq(InternalRow(stats.version, stats.rewritten,
-                stats.carried)))
-          }
-        }
-      case "analyze" =>
-        // CALL c.system.analyze('ns.t', 'col1,col2'): (re)build the
-        // column NDV sketches from the current masked snapshot — stats
-        // for tables created without 'ndvCols', and the re-tightening
-        // pass after deletes left the incremental fold stale-high. One
-        // column-pruned scan per column, metadata-only commit, no
-        // change-feed impact.
-        new MaintenanceProc("analyze", Seq(
-          inParam("table", StringType),
-          inParam("cols", StringType))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            require(!input.isNullAt(1), "analyze needs a column list")
-            val cols = input.getString(1).split(",").toSeq
-              .map(_.trim).filter(_.nonEmpty)
-            val schema = t.tableSchema.getOrElse(
-              TxLogV2Table(spark, t.root, input.getString(0)).schema)
-            val v = t.analyze(schema, cols)
-            def s(str: String) = UTF8String.fromString(str)
-            resultScan(StructType(Seq(
-              StructField("version", IntegerType),
-              StructField("ndv", StringType))),
-              Seq(InternalRow(v,
-                s(t.ndvOf(v).toSeq.sortBy(_._1)
-                  .map { case (c, n) => s"$c≈$n" }.mkString(", ")))))
-          }
-        }
-      case "optimize" =>
-        // CALL c.system.optimize('ns.t' [, min_bytes [, target_bytes]]):
-        // INCREMENTAL small-file compaction — only files under min_bytes
-        // rewrite (packed toward target_bytes outputs), everything
-        // already large is carried by manifest reference. This is what
-        // OPTIMIZE means at 100 TB: steady-state cost O(new small
-        // files), never O(table) — `compact` (the full rewrite) stays
-        // for layout resets. Reads through the MOR mask, so optimizing
-        // also materializes deletes for the rewritten files.
-        new MaintenanceProc("optimize", Seq(
-          inParam("table", StringType),
-          inParam("min_bytes", LongType, Some((16L * 1024 * 1024).toString)),
-          inParam("target_bytes", LongType,
-            Some((128L * 1024 * 1024).toString)))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            val minB = if (input.isNullAt(1)) 16L * 1024 * 1024
-              else input.getLong(1)
-            val tgtB = if (input.isNullAt(2)) 128L * 1024 * 1024
-              else input.getLong(2)
-            val schema = t.tableSchema.getOrElse(
-              TxLogV2Table(spark, t.root, input.getString(0)).schema)
-            val stats = t.compactSmall(schema, minB, tgtB)
-            resultScan(StructType(Seq(
-              StructField("version", IntegerType),
-              StructField("rewritten", IntegerType),
-              StructField("carried", IntegerType))),
-              Seq(InternalRow(stats.version, stats.rewritten,
-                stats.carried)))
-          }
-        }
-      case "create_mv" =>
-        // CALL c.system.create_mv('ns.mv', 'ns.src', 'k1,k2',
-        // 'total:value[,out2:src2]'): persist an incrementally-
-        // maintained materialized view (GROUP BY group_cols with
-        // COUNT(*) AS mv_count and SUM(src) AS out per spec) as a
-        // catalog table. The view registers a change-feed cursor on the
-        // source so vacuum can never drop its un-consumed window; see
-        // graft.operators.MaterializedView for the refresh contract.
-        new MaintenanceProc("create_mv", Seq(
-          inParam("view", StringType),
-          inParam("source", StringType),
-          inParam("group_cols", StringType),
-          inParam("sums", StringType),
-          inParam("filter", StringType, Some("NULL")),
-          inParam("derives", StringType, Some("NULL")))) {
-          override def call(input: InternalRow) = {
-            val qname = input.getString(0)
-            val parts = qname.split('.')
-            require(parts.length >= 2 && parts.forall(_.nonEmpty),
-              s"create_mv view must be 'ns.table', got '$qname'")
-            val vident = Identifier.of(parts.init, parts.last)
-            require(!tableExists(vident),
-              s"MV destination already exists: $qname")
-            val src = tableByName(input.getString(1))
-            val srcSchema = src.tableSchema.getOrElse(
-              TxLogV2Table(spark, src.root, input.getString(1)).schema)
-            val groups = input.getString(2).split(',').toSeq
-              .map(_.trim).filter(_.nonEmpty)
-            val (sums, mins, maxs) = parseAggSpec(input.getString(3))
-            val filt = if (input.isNullAt(4)) None
-              else Some(input.getString(4))
-            // 'name:expr[;name2:expr2]' — row-local computed columns
-            // (date_trunc rollup keys and the like); ';'-separated so
-            // the exprs may contain commas
-            val derives = if (input.isNullAt(5)) Nil
-              else input.getString(5).split(';').toSeq.map(_.trim)
-                .filter(_.nonEmpty).map { t =>
-                  val i = t.indexOf(':')
-                  require(i > 0, s"derive spec must be name:expr, got $t")
-                  t.substring(0, i).trim -> t.substring(i + 1).trim
-                }
-            val v = graft.operators.MaterializedView.create(spark,
-              pathOf(vident).toString, qname, src, srcSchema, groups,
-              sums, filt, mins, maxs, derives)
-            resultScan(StructType(Seq(
-              StructField("version", IntegerType),
-              StructField("source_version", IntegerType))),
-              Seq(InternalRow(v, src.latestVersion.getOrElse(-1))))
-          }
-        }
-      case "create_mv_joined" =>
-        // CALL c.system.create_mv_joined('ns.mv', 'ns.fact',
-        // 'ns.dim[;ns.dim2…]', 'fk:dk[,fk2:dk2][;fk:dk…]', 'group_cols',
-        // 'out:src[,..]' [, filter [, derives]]): a STAR-SCHEMA view —
-        // fact JOIN dim1 [JOIN dim2 …] (each inner, broadcast; each dim
-        // unique on its keys) grouped and summed, group/sum/filter
-        // columns from any side; 'derives' (name:expr, ';'-separated)
-        // are row-local computed columns that may
-        // combine all sides. An N-DIM star lists its dims
-        // ';'-separated, join_on aligning positionally (','-separated
-        // keys within a dim). Every dim is PINNED independently: fact
-        // deltas fold against the pinned snapshots, and each dim
-        // change folds as its own DIM DELTA (changed keys → affected
-        // groups, telescoped across dims) that re-pins — never
-        // O(view).
-        new MaintenanceProc("create_mv_joined", Seq(
-          inParam("view", StringType),
-          inParam("fact", StringType),
-          inParam("dim", StringType),
-          inParam("join_on", StringType),
-          inParam("group_cols", StringType),
-          inParam("sums", StringType),
-          inParam("filter", StringType, Some("NULL")),
-          inParam("derives", StringType, Some("NULL")))) {
-          override def call(input: InternalRow) = {
-            val qname = input.getString(0)
-            val parts = qname.split('.')
-            require(parts.length >= 2 && parts.forall(_.nonEmpty),
-              s"create_mv_joined view must be 'ns.table', got '$qname'")
-            val vident = Identifier.of(parts.init, parts.last)
-            require(!tableExists(vident),
-              s"MV destination already exists: $qname")
-            val fact = tableByName(input.getString(1))
-            val factSchema = fact.tableSchema.getOrElse(
-              TxLogV2Table(spark, fact.root, input.getString(1)).schema)
-            val dimNames = input.getString(2).split(';').toSeq
-              .map(_.trim).filter(_.nonEmpty)
-            val joinSegs = input.getString(3).split(';').toSeq
-              .map(_.trim).filter(_.nonEmpty)
-            require(dimNames.nonEmpty && joinSegs.length == dimNames.length,
-              s"join_on must carry one ';'-segment per dim: " +
-                s"${dimNames.length} dims, ${joinSegs.length} segments")
-            def pairs(sv: String, what: String): Seq[(String, String)] =
-              sv.split(',').toSeq.map(_.trim).filter(_.nonEmpty).map { t =>
-                val i = t.indexOf(':')
-                require(i > 0, s"$what must be 'a:b', got '$t'")
-                t.substring(0, i) -> t.substring(i + 1)
-              }
-            val dimSpecs = dimNames.zip(joinSegs).map { case (dn, js) =>
-              val dim = tableByName(dn)
-              val dimSchema = dim.tableSchema.getOrElse(
-                TxLogV2Table(spark, dim.root, dn).schema)
-              (dim, dimSchema, pairs(js, "join_on"))
-            }
-            val groups = input.getString(4).split(',').toSeq
-              .map(_.trim).filter(_.nonEmpty)
-            val filt = if (input.isNullAt(6)) None
-              else Some(input.getString(6))
-            val derives = if (input.isNullAt(7)) Nil
-              else input.getString(7).split(';').toSeq.map(_.trim)
-                .filter(_.nonEmpty).map { t =>
-                  val i = t.indexOf(':')
-                  require(i > 0, s"derive spec must be name:expr, got $t")
-                  t.substring(0, i).trim -> t.substring(i + 1).trim
-                }
-            val (sums, mins, maxs) = parseAggSpec(input.getString(5))
-            val v = graft.operators.MaterializedView.createStar(spark,
-              pathOf(vident).toString, qname, fact, factSchema,
-              dimSpecs, groups, sums, filt, mins, maxs, derives)
-            resultScan(StructType(Seq(
-              StructField("version", IntegerType),
-              StructField("fact_version", IntegerType),
-              StructField("dim_version", IntegerType))),
-              Seq(InternalRow(v, fact.latestVersion.getOrElse(-1),
-                dimSpecs.head._1.latestVersion.getOrElse(-1))))
-          }
-        }
-      case "refresh_mv" =>
-        // CALL c.system.refresh_mv('ns.mv' [, full]): one transactional
-        // refresh — O(changed groups) incremental fold of the source's
-        // change feed, or a full recompute when the range crosses a
-        // reset (or full => true). No-op when already current; progress
-        // (#mvsrc) and data ride one atomic commit (exactly-once).
-        new MaintenanceProc("refresh_mv", Seq(
-          inParam("view", StringType),
-          inParam("full", org.apache.spark.sql.types.BooleanType,
-            Some("false")))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            val full = !input.isNullAt(1) && input.getBoolean(1)
-            val st = graft.operators.MaterializedView.refresh(spark,
-              t.root, full)
-            resultScan(StructType(Seq(
-              StructField("mode", StringType),
-              StructField("from_version", IntegerType),
-              StructField("to_version", IntegerType),
-              StructField("groups_changed", LongType),
-              StructField("mv_version", IntegerType))),
-              Seq(InternalRow(UTF8String.fromString(st.mode),
-                st.fromVersion, st.toVersion, st.groupsChanged,
-                st.mvVersion)))
-          }
-        }
-      case "mv_status" =>
-        // CALL c.system.mv_status('ns.mv'): the view's maintenance
-        // position — consumed source version vs source head, how many
-        // versions behind, the definition, and (star views) the pinned
-        // dim version vs the dim head — without touching data.
-        new MaintenanceProc("mv_status", Seq(
-          inParam("view", StringType))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            val d = graft.operators.MaterializedView.definition(spark,
-              t.root)
-            val src = TxLogTable(spark, d.source)
-            val last = graft.operators.MaterializedView
-              .lastSourceVersion(t)
-            val head = src.latestVersion.getOrElse(-1)
-            val dimTs = d.dims.map(dm => TxLogTable(spark, dm.root))
-            val dimPinneds = d.dims.indices.map(i =>
-              graft.operators.MaterializedView.lastDimVersion(t, i))
-            val dimHeads = dimTs.map(_.latestVersion.getOrElse(-1))
-            // the N-dim star reports one ';'-joined cell per column:
-            // roots, pins, heads; dim_behind is the WORST lag (the
-            // number a maintenance scheduler acts on)
-            val dimPinned = dimPinneds.headOption
-            val dimHead = dimHeads.headOption
-            resultScan(StructType(Seq(
-              StructField("name", StringType),
-              StructField("consumed_version", IntegerType),
-              StructField("source_head", IntegerType),
-              StructField("behind", IntegerType),
-              StructField("group_cols", StringType),
-              StructField("sums", StringType),
-              StructField("filter", StringType),
-              StructField("derives", StringType),
-              StructField("dim", StringType),
-              StructField("dim_pinned", IntegerType),
-              StructField("dim_head", IntegerType),
-              StructField("dim_behind", IntegerType))),
-              Seq(InternalRow(UTF8String.fromString(d.name), last, head,
-                math.max(0, head - last),
-                UTF8String.fromString(d.groupCols.mkString(",")),
-                UTF8String.fromString(
-                  (d.sums.map { case (o, c) => s"$o:$c" } ++
-                    d.mins.map { case (o, c) => s"$o:min:$c" } ++
-                    d.maxs.map { case (o, c) => s"$o:max:$c" })
-                    .mkString(",")),
-                d.filterExpr.map(UTF8String.fromString).orNull,
-                if (d.derives.isEmpty) null
-                else UTF8String.fromString(d.derives
-                  .map { case (n, _, e) => s"$n:$e" }.mkString(";")),
-                (if (d.dims.isEmpty) null
-                 else UTF8String.fromString(
-                   d.dims.map(_.root).mkString(";"))),
-                dimPinned.map(Integer.valueOf).orNull,
-                dimHead.map(Integer.valueOf).orNull,
-                (if (d.dims.isEmpty) null
-                 else Integer.valueOf(dimPinneds.zip(dimHeads)
-                   .map { case (p, h) => math.max(0, h - p) }.max)))))
-          }
-        }
-      case "mvs" =>
-        // CALL c.system.mvs('ns'): every materialized view in the
-        // namespace with its maintenance position — the fleet dashboard
-        // (which views exist, what they watch, how far behind). One
-        // directory listing + one manifest-meta read per view; no data
-        // touched.
-        new MaintenanceProc("mvs", Seq(
-          inParam("namespace", StringType))) {
-          override def call(input: InternalRow) = {
-            val ns = input.getString(0).split('.').filter(_.nonEmpty)
-            val rows = listTables(ns).toSeq.flatMap { ident =>
-              val root = pathOf(ident).toString
-              if (!java.nio.file.Files.exists(
-                  java.nio.file.Paths.get(root, "_log", "mv.def"))) Nil
-              else {
-                // one broken view (vacuumed-away #mvsrc, half-created
-                // mv.def, missing source) must not take down the fleet
-                // dashboard: flag it with consumed_version = -1 instead
-                scala.util.Try {
-                  val d = graft.operators.MaterializedView
-                    .definition(spark, root)
-                  val src = TxLogTable(spark, d.source)
-                  val last = graft.operators.MaterializedView
-                    .lastSourceVersion(TxLogTable(spark, root))
-                  val head = src.latestVersion.getOrElse(-1)
-                  InternalRow(
-                    UTF8String.fromString(
-                      (ns :+ ident.name).mkString(".")),
-                    UTF8String.fromString(d.name), last, head,
-                    math.max(0, head - last))
-                }.getOrElse(InternalRow(
-                  UTF8String.fromString((ns :+ ident.name).mkString(".")),
-                  UTF8String.fromString(ident.name), -1, -1, 0)) :: Nil
-              }
-            }
-            resultScan(StructType(Seq(
-              StructField("table", StringType),
-              StructField("name", StringType),
-              StructField("consumed_version", IntegerType),
-              StructField("source_head", IntegerType),
-              StructField("behind", IntegerType))), rows)
-          }
-        }
-      case "create_mv_distinct" =>
-        // CALL c.system.create_mv_distinct('ns.mv', 'ns.src', 'k1,k2',
-        // 'out:src' [, filter]): an APPROX-COUNT(DISTINCT) view — the
-        // per-group HLL register table of src, maintained by the same
-        // incremental fold as every MV (appends fold, deleting windows
-        // recompute: the honest sketch contract). Read estimates with
-        // CALL system.mv_distinct.
-        new MaintenanceProc("create_mv_distinct", Seq(
-          inParam("view", StringType),
-          inParam("source", StringType),
-          inParam("group_cols", StringType),
-          inParam("measure", StringType),
-          inParam("filter", StringType, Some("NULL")))) {
-          override def call(input: InternalRow) = {
-            val qname = input.getString(0)
-            val parts = qname.split('.')
-            require(parts.length >= 2 && parts.forall(_.nonEmpty),
-              s"create_mv_distinct view must be 'ns.table', got '$qname'")
-            val vident = Identifier.of(parts.init, parts.last)
-            require(!tableExists(vident),
-              s"MV destination already exists: $qname")
-            val src = tableByName(input.getString(1))
-            val srcSchema = src.tableSchema.getOrElse(
-              TxLogV2Table(spark, src.root, input.getString(1)).schema)
-            val groups = input.getString(2).split(',').toSeq
-              .map(_.trim).filter(_.nonEmpty)
-            val m = input.getString(3)
-            val i = m.indexOf(':')
-            require(i > 0, s"measure must be out:src, got $m")
-            val filt = if (input.isNullAt(4)) None
-              else Some(input.getString(4))
-            val v = graft.operators.MaterializedView.createDistinct(
-              spark, pathOf(vident).toString, qname, src, srcSchema,
-              groups, m.substring(0, i).trim -> m.substring(i + 1).trim,
-              filt)
-            resultScan(StructType(Seq(
-              StructField("version", IntegerType),
-              StructField("source_version", IntegerType))),
-              Seq(InternalRow(v, src.latestVersion.getOrElse(-1))))
-          }
-        }
-      case "create_mv_hist" =>
-        // CALL c.system.create_mv_hist('ns.mv', 'ns.src', 'k1,k2',
-        // 'out:src' [, filter]): a power-of-2 HISTOGRAM view (bucket =
-        // bit length of floor(src), exact counts) — fully additive, so
-        // it folds incrementally under every DML shape. Read quantile
-        // estimates with CALL system.mv_quantile.
-        new MaintenanceProc("create_mv_hist", Seq(
-          inParam("view", StringType),
-          inParam("source", StringType),
-          inParam("group_cols", StringType),
-          inParam("measure", StringType),
-          inParam("filter", StringType, Some("NULL")))) {
-          override def call(input: InternalRow) = {
-            val qname = input.getString(0)
-            val parts = qname.split('.')
-            require(parts.length >= 2 && parts.forall(_.nonEmpty),
-              s"create_mv_hist view must be 'ns.table', got '$qname'")
-            val vident = Identifier.of(parts.init, parts.last)
-            require(!tableExists(vident),
-              s"MV destination already exists: $qname")
-            val src = tableByName(input.getString(1))
-            val srcSchema = src.tableSchema.getOrElse(
-              TxLogV2Table(spark, src.root, input.getString(1)).schema)
-            val groups = input.getString(2).split(',').toSeq
-              .map(_.trim).filter(_.nonEmpty)
-            val m = input.getString(3)
-            val i = m.indexOf(':')
-            require(i > 0, s"measure must be out:src, got $m")
-            val filt = if (input.isNullAt(4)) None
-              else Some(input.getString(4))
-            val v = graft.operators.MaterializedView.createHist(
-              spark, pathOf(vident).toString, qname, src, srcSchema,
-              groups, m.substring(0, i).trim -> m.substring(i + 1).trim,
-              filt)
-            resultScan(StructType(Seq(
-              StructField("version", IntegerType),
-              StructField("source_version", IntegerType))),
-              Seq(InternalRow(v, src.latestVersion.getOrElse(-1))))
-          }
-        }
-      case "refresh_all" =>
-        // CALL c.system.refresh_all('ns'): one maintenance sweep over
-        // every materialized view in the namespace — each stale view
-        // gets one transactional refresh (the per-view cost contract is
-        // refresh_mv's: O(changed groups)); current views no-op; a
-        // broken view is reported as mode='error' without stopping the
-        // fleet. Views are refreshed in DEPENDENCY ORDER (a view whose
-        // source is itself a view in the sweep runs after it — the
-        // exact-distinct pairs and any MV-over-MV chain come out fully
-        // current in ONE sweep). The cron body of a 100-view deployment.
-        new MaintenanceProc("refresh_all", Seq(
-          inParam("namespace", StringType))) {
-          override def call(input: InternalRow) = {
-            val ns = input.getString(0).split('.').filter(_.nonEmpty)
-            val views: Seq[(String, String, Seq[String])] =
-              listTables(ns).toSeq.flatMap { ident =>
-                val root = pathOf(ident).toString
-                if (!java.nio.file.Files.exists(
-                    java.nio.file.Paths.get(root, "_log", "mv.def"))) Nil
-                else {
-                  val qn = (ns :+ ident.name).mkString(".")
-                  // a view depends on its SOURCE and (star views) its
-                  // DIM — both must refresh first when they are views
-                  // themselves, or the sweep would fold against a
-                  // stale upstream and need a second pass
-                  val deps = scala.util.Try {
-                    val d = graft.operators.MaterializedView
-                      .definition(spark, root)
-                    d.source +: d.dims.map(_.root)
-                  }.getOrElse(Nil)
-                  Seq((qn, root, deps))
-                }
-              }
-            // Kahn order on the view→view source/dim edges; anything
-            // left (a cycle can only mean corrupted defs) appends
-            // unordered and will surface as error rows, not be dropped
-            val byRoot = views.map(v => v._2 -> v).toMap
-            val ordered = scala.collection.mutable.ArrayBuffer
-              .empty[(String, String, Seq[String])]
-            var remaining = views
-            var progressed = true
-            while (remaining.nonEmpty && progressed) {
-              val (ready, blocked) = remaining.partition(v =>
-                !v._3.exists(s => byRoot.contains(s) &&
-                  !ordered.exists(_._2 == s)))
-              progressed = ready.nonEmpty
-              ordered ++= ready
-              remaining = blocked
-            }
-            ordered ++= remaining
-            val rows = ordered.toSeq.map { case (qn, root, _) =>
-              scala.util.Try {
-                val st = graft.operators.MaterializedView
-                  .refresh(spark, root)
-                InternalRow(UTF8String.fromString(qn),
-                  UTF8String.fromString(st.mode), st.fromVersion,
-                  st.toVersion, st.groupsChanged, st.mvVersion)
-              }.recover { case e =>
-                InternalRow(UTF8String.fromString(qn),
-                  UTF8String.fromString(
-                    s"error: ${e.getMessage.take(120)}"),
-                  -1, -1, -1L, -1)
-              }.get
-            }
-            resultScan(StructType(Seq(
-              StructField("table", StringType),
-              StructField("mode", StringType),
-              StructField("from_version", IntegerType),
-              StructField("to_version", IntegerType),
-              StructField("groups_changed", LongType),
-              StructField("view_version", IntegerType))), rows)
-          }
-        }
-      case "create_mv_distinct_exact" =>
-        // CALL c.system.create_mv_distinct_exact('ns.mv', 'ns.src',
-        // 'k1,k2', 'u' [, filter]): EXACT incremental COUNT(DISTINCT u)
-        // — two composed views (inner keyed by (groups, u) count-only at
-        // '<mv>_keys'; outer counts the inner's rows), both fully
-        // additive, so distinct counts stay exact AND incremental under
-        // every DML shape including deletes. Refresh inner-then-outer
-        // (refresh_all orders the pair automatically). Read the count as
-        // the outer view's mv_count.
-        new MaintenanceProc("create_mv_distinct_exact", Seq(
-          inParam("view", StringType),
-          inParam("source", StringType),
-          inParam("group_cols", StringType),
-          inParam("distinct_col", StringType),
-          inParam("filter", StringType, Some("NULL")))) {
-          override def call(input: InternalRow) = {
-            val qname = input.getString(0)
-            val parts = qname.split('.')
-            require(parts.length >= 2 && parts.forall(_.nonEmpty),
-              s"create_mv_distinct_exact view must be 'ns.table', " +
-                s"got '$qname'")
-            val vident = Identifier.of(parts.init, parts.last)
-            require(!tableExists(vident),
-              s"MV destination already exists: $qname")
-            val src = tableByName(input.getString(1))
-            val srcSchema = src.tableSchema.getOrElse(
-              TxLogV2Table(spark, src.root, input.getString(1)).schema)
-            val groups = input.getString(2).split(',').toSeq
-              .map(_.trim).filter(_.nonEmpty)
-            val filt = if (input.isNullAt(4)) None
-              else Some(input.getString(4))
-            val (v1, v2) = graft.operators.MaterializedView
-              .createDistinctExact(spark, pathOf(vident).toString, qname,
-                src, srcSchema, groups, input.getString(3).trim, filt)
-            resultScan(StructType(Seq(
-              StructField("keys_version", IntegerType),
-              StructField("view_version", IntegerType),
-              StructField("source_version", IntegerType))),
-              Seq(InternalRow(v1, v2, src.latestVersion.getOrElse(-1))))
-          }
-        }
-      case "mv_branch" =>
-        // CALL c.system.mv_branch('ns.mv', 'name'): fork a CONSISTENT
-        // (source, view) branch pair for write-audit-publish on derived
-        // tables — audit writes go to source.branch_<name>, CALL
-        // refresh_mv('ns.mv.branch_<name>') folds them on the branch,
-        // CALL mv_publish promotes both. The view must be current.
-        new MaintenanceProc("mv_branch", Seq(
-          inParam("view", StringType),
-          inParam("name", StringType))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            val (f, v) = graft.operators.MaterializedView.branchMv(
-              spark, t.root, input.getString(1))
-            resultScan(StructType(Seq(
-              StructField("source_fork_version", IntegerType),
-              StructField("view_fork_version", IntegerType))),
-              Seq(InternalRow(f, v)))
-          }
-        }
-      case "mv_publish" =>
-        // CALL c.system.mv_publish('ns.mv', 'name'): publish the audited
-        // branch pair — fact first, then the view with its consumed
-        // version rewritten to the fact's just-published MAIN version.
-        // Gated on the branch view having absorbed the branch fact head.
-        new MaintenanceProc("mv_publish", Seq(
-          inParam("view", StringType),
-          inParam("name", StringType))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            val (f, v) = graft.operators.MaterializedView.publishWap(
-              spark, t.root, input.getString(1))
-            resultScan(StructType(Seq(
-              StructField("source_version", IntegerType),
-              StructField("view_version", IntegerType))),
-              Seq(InternalRow(f, v)))
-          }
-        }
-      case "mv_distinct" =>
-        // CALL c.system.mv_distinct('ns.mv'): per-group distinct-count
-        // estimates from a create_mv_distinct view's registers — a
-        // |groups|-sized aggregate over the ≤256 register rows each.
-        new MaintenanceProc("mv_distinct", Seq(
-          inParam("view", StringType))) {
-          override def call(input: InternalRow) =
-            dfScan(graft.operators.MaterializedView.distinctEstimates(
-              spark, tableByName(input.getString(0)).root))
-        }
-      case "mv_quantile" =>
-        // CALL c.system.mv_quantile('ns.mv', q): per-group quantile
-        // estimates (±1 power of 2) from a create_mv_hist view.
-        new MaintenanceProc("mv_quantile", Seq(
-          inParam("view", StringType),
-          inParam("q", DoubleType))) {
-          override def call(input: InternalRow) =
-            dfScan(graft.operators.MaterializedView.histQuantiles(
-              spark, tableByName(input.getString(0)).root,
-              input.getDouble(1)))
-        }
-      case "remove_orphans" =>
-        // CALL c.system.remove_orphans('ns.t' [, min_age_ms
-        // [, dry_run]]): delete data-dir files no reachable version
-        // references — crashed writers' leftovers — WITHOUT touching
-        // history (vacuum with keep = ALL versions). Same writer guards
-        // as vacuum: `.staging` scratch dirs are skipped and only files
-        // older than min_age_ms go (a just-staged file whose manifest
-        // publish is in flight must survive). The orphan sweep is the
-        // maintenance companion Iceberg ships as remove_orphan_files.
-        new MaintenanceProc("remove_orphans", Seq(
-          inParam("table", StringType),
-          inParam("min_age_ms", LongType,
-            Some(TxLogTable.DefaultVacuumMinAgeMillis.toString)),
-          inParam("dry_run", org.apache.spark.sql.types.BooleanType,
-            Some("false")))) {
-          override def call(input: InternalRow) = {
-            val t = tableByName(input.getString(0))
-            val age = if (input.isNullAt(1))
-              TxLogTable.DefaultVacuumMinAgeMillis else input.getLong(1)
-            val dry = !input.isNullAt(2) && input.getBoolean(2)
-            val (_, files) = t.vacuum(keep = Int.MaxValue,
-              minAgeMillis = age, retainMillis = 0L, dryRun = dry)
-            resultScan(StructType(Seq(
-              StructField("files_deleted", IntegerType))),
-              Seq(InternalRow(files)))
-          }
-        }
-      case "bm25" =>
-        // CALL c.system.bm25('ns.docs', 'space-separated terms' [, k]):
-        // BM25-ranked top-k retrieval over a documents table — the SQL
-        // surface of TextQueries.bm25Scores (same body: query-term-
-        // filtered postings, broadcast df/stats, DECIMAL-deterministic
-        // scores). Returns (doc_id, n_terms, bm25) ordered by score
-        // desc, doc_id asc. k is a bounded result-set size (top-k is
-        // driver-small by definition), capped so the LocalScan result
-        // can never balloon.
-        new MaintenanceProc("bm25", Seq(
-          inParam("table", StringType),
-          inParam("query", StringType),
-          inParam("k", IntegerType, Some("10")))) {
-          override def call(input: InternalRow) = {
-            val src = tableByName(input.getString(0))
-            require(!input.isNullAt(1), "bm25 needs a query string")
-            val terms = input.getString(1).split("\\s+").toSeq
-              .filter(_.nonEmpty).distinct
-            val k = if (input.isNullAt(2)) 10 else input.getInt(2)
-            require(k > 0 && k <= 10000,
-              s"bm25 k must be in [1, 10000], got $k")
-            val schema = src.tableSchema.getOrElse(
-              TxLogV2Table(spark, src.root, input.getString(0)).schema)
-            require(Seq("doc_id", "text").forall(
-              schema.fieldNames.contains),
-              "bm25 source needs (doc_id, text) columns")
-            import org.apache.spark.sql.functions.col
-            // one-shot scoring: release the per-doc cache the scorer
-            // registers once the top-k is materialized (a repeated CALL
-            // builds a fresh snapshot plan per table version — without
-            // the release each call would leave a corpus-sized entry)
-            val (scores, perDoc) = graft.queries.TextQueries
-              .bm25ScoresWithHandle(src.snapshot(schema), terms)
-            val top =
-              try scores.orderBy(col("bm25").desc, col("doc_id"))
-                .limit(k).collect()
-              finally perDoc.unpersist()
-            resultScan(StructType(Seq(
-              StructField("doc_id", LongType),
-              StructField("n_terms", LongType),
-              StructField("bm25", DoubleType))),
-              top.toSeq.map(r => InternalRow(
-                r.getLong(0), r.getLong(1), r.getDouble(2))))
-          }
-        }
-      case other =>
-        throw new UnsupportedOperationException(
-          s"unknown txlog procedure: system.$other " +
-            "(available: compact, vacuum, history, partitions, restore, " +
-            "clone, zorder, rebucket, semdedup, dedup_near, bm25, " +
-            "optimize, detail, analyze, resort, changes, ann_build, " +
-            "ann_refresh, ann_search, ann_status, cursors, " +
-            "release_cursor, delete_pos, update_pos, set_time_unit, " +
-            "tag, drop_tag, tags, ann_search_batch)")
-    }
+    procedureByName.getOrElse(ident.name,
+      throw new UnsupportedOperationException(
+        s"unknown txlog procedure: system.${ident.name} (available: " +
+          procedures.map(_.name).mkString(", ") + ")"))
+  }
+}
+
+/** One `CALL <cat>.system.<name>` procedure of [[TxLogCatalog]]: its
+  * parameters in call order, its declared result schema (`None` for the
+  * few whose columns depend on the call — a view's group columns, the
+  * scored variant) and its body over the typed argument reader. Bound
+  * once; every call converts the body's rows through one
+  * `CatalystTypeConverters` converter into a LocalScan (driver-side rows
+  * are exactly what a maintenance summary is).
+  */
+private[sources] final class SystemProcedure(
+    procName: String, params: Seq[ProcParam], val result: Option[StructType],
+    body: ProcArgs => (StructType, Seq[Row]))
+    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
+    with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
+  override def name(): String = procName
+  override def bind(inputType: StructType)
+      : org.apache.spark.sql.connector.catalog.procedures.BoundProcedure = this
+  override def parameters()
+      : Array[org.apache.spark.sql.connector.catalog.procedures
+        .ProcedureParameter] = params.map(_.toSpark).toArray
+  override def isDeterministic: Boolean = false
+  override def call(input: org.apache.spark.sql.catalyst.InternalRow)
+      : util.Iterator[Scan] = {
+    val (schema, rows) = body(new ProcArgs(procName, params, input))
+    util.List.of[Scan](SystemProcedure.localScan(schema, rows)).iterator()
+  }
+}
+
+private[sources] object SystemProcedure {
+  import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+  import org.apache.spark.sql.catalyst.expressions.Literal
+  import org.apache.spark.sql.connector.read.LocalScan
+  import org.apache.spark.sql.types.StringType
+
+  /** A procedure whose result schema is the declared `result` DDL. */
+  def proc(name: String, result: String, params: ProcParam*)(
+      body: ProcArgs => Seq[Row]): SystemProcedure = {
+    val schema = StructType.fromDDL(result)
+    new SystemProcedure(name, params, Some(schema), a => (schema, body(a)))
   }
 
-  // materialize a procedure's result frame as a fresh catalog table:
-  // declared-schema create + one append commit (the dest must not exist —
-  // curation outputs are new artifacts, not in-place mutations)
-  private def writeResultTable(dest: String,
-                               df: org.apache.spark.sql.DataFrame): Int = {
-    val parts = dest.split('.')
-    require(parts.length >= 2 && parts.forall(_.nonEmpty),
-      s"destination must be 'ns.table', got '$dest'")
-    val dident = Identifier.of(parts.init, parts.last)
-    require(!tableExists(dident), s"destination already exists: $dest")
-    val t = TxLogTable(spark, pathOf(dident).toString)
-    t.create(df.schema)
-    t.commit(df, overwrite = false)
+  /** A procedure whose body returns its result schema with its rows. */
+  def dynamicProc(name: String, params: ProcParam*)(
+      body: ProcArgs => (StructType, Seq[Row])): SystemProcedure =
+    new SystemProcedure(name, params, None, body)
+
+  /** A parameter without a default: NULL fails the call. */
+  def req(name: String, dataType: DataType = StringType): ProcParam =
+    ProcParam(name, dataType, ProcParam.Required)
+
+  /** A parameter whose default is NULL, read with `opt`. */
+  def opt(name: String, dataType: DataType): ProcParam =
+    ProcParam(name, dataType, null)
+
+  /** A parameter whose type is its typed default's. */
+  def arg(name: String, default: Any): ProcParam =
+    ProcParam(name, Literal(default).dataType, default)
+
+  /** Driver-side rows served as a scan; `mkRows` is evaluated per read. */
+  def localScan(schema: StructType, mkRows: => Seq[Row]): LocalScan = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    new LocalScan {
+      override def readSchema(): StructType = schema
+      override def rows(): Array[InternalRow] =
+        mkRows.map(toCatalyst(_).asInstanceOf[InternalRow]).toArray
+    }
   }
+}
+
+/** One declared procedure parameter; `default` is [[ProcParam.Required]],
+  * `null` (SQL NULL) or a typed Scala value of `dataType`.
+  */
+private[sources] final case class ProcParam(name: String,
+                                            dataType: DataType,
+                                            default: Any) {
+  import org.apache.spark.sql.catalyst.expressions.Literal
+
+  def toSpark: org.apache.spark.sql.connector.catalog.procedures
+      .ProcedureParameter = {
+    val b = org.apache.spark.sql.connector.catalog.procedures
+      .ProcedureParameter.in(name, dataType)
+    default match {
+      case ProcParam.Required => ()
+      case null => b.defaultValue("NULL")
+      case s: String => b.defaultValue(Literal(s).sql)
+      case v => b.defaultValue(v.toString)
+    }
+    b.build()
+  }
+}
+
+private[sources] object ProcParam {
+  case object Required
+}
+
+/** The typed argument reader a procedure body gets: values by parameter
+  * name, NULL replaced by the declared default. Construction fails with
+  * `IllegalArgumentException("<proc> needs <param>")` when a parameter
+  * without a default is NULL, so a body never sees a missing argument.
+  */
+private[sources] final class ProcArgs(val proc: String,
+                                      params: Seq[ProcParam],
+                                      input: org.apache.spark.sql.catalyst
+                                        .InternalRow) {
+  private val values: Map[String, Any] = params.zipWithIndex.map {
+    case (p, i) =>
+      val v =
+        if (input.isNullAt(i)) p.default
+        else org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .convertToScala(input.get(i, p.dataType), p.dataType)
+      if (v == ProcParam.Required)
+        throw new IllegalArgumentException(s"$proc needs ${p.name}")
+      p.name -> v
+  }.toMap
+
+  def str(name: String): String = values(name).asInstanceOf[String]
+  def int(name: String): Int = values(name).asInstanceOf[Int]
+  def long(name: String): Long = values(name).asInstanceOf[Long]
+  def double(name: String): Double = values(name).asInstanceOf[Double]
+  def bool(name: String): Boolean = values(name).asInstanceOf[Boolean]
+  def longs(name: String): Seq[Long] =
+    values(name).asInstanceOf[scala.collection.Seq[Long]].toSeq
+  /** An `opt` parameter: `None` when NULL or omitted. */
+  def opt[T](name: String): Option[T] = Option(values(name).asInstanceOf[T])
 }
 
 /** The catalog's V2 `bucket` function — the contract behind bucketed

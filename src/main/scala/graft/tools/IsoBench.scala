@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query isolation bench: times the named SparkEntry queries in a
   * FRESH session with no shared warm caches — the A/B tool for separating
   * a query's own cost from session-state pollution in the full Bench run.
@@ -9,20 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object IsoBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Engine writes pin INT64 TIMESTAMP_MICROS (not Spark's legacy
-      // INT96, which carries NO column statistics): every staged
-      // timestamp column gets real min/max footer stats, so manifest
-      // range pruning works on time predicates without any partitioning.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(32)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark.range(1000).selectExpr("md5(cast(id as string)) m")
       .agg("m" -> "max").collect()

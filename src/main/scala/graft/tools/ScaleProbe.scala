@@ -10,21 +10,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Engine writes pin INT64 TIMESTAMP_MICROS (not Spark's legacy
-      // INT96, which carries NO column statistics): every staged
-      // timestamp column gets real min/max footer stats, so manifest
-      // range pruning works on time predicates without any partitioning.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(32)
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     def rep(k: Int): DataFrame = (0 until k).map(i =>
       base.withColumn("doc_id", col("doc_id") + lit(i * 1000000L)))

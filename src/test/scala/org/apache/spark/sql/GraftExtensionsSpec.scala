@@ -12,9 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftExtensionsSpec extends AnyFunSuite {
 
   private val names = Seq("cosine_sim", "l2_sq", "tokenize_ru",
-    "winnow_fingerprint", "sorted_intersect_count", "image_dims")
+    "winnow_fingerprint", "sorted_intersect_count", "image_dims",
+    "video_meta")
 
-  test("extension installs all six native functions into a registry") {
+  test("extension installs all seven native functions") {
     val ext = new SparkSessionExtensions
     new _root_.graft.GraftExtensions().apply(ext)
     val reg = ext.registerFunctions(FunctionRegistry.builtin.clone())
@@ -46,5 +47,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(reg.lookupFunction(FunctionIdentifier("image_dims"),
       Seq(Literal.default(org.apache.spark.sql.types.BinaryType)))
       .isInstanceOf[_root_.graft.catalyst.ImageDims])
+    assert(reg.lookupFunction(FunctionIdentifier("video_meta"),
+      Seq(Literal.default(org.apache.spark.sql.types.BinaryType)))
+      .isInstanceOf[_root_.graft.catalyst.Mp4Meta])
   }
 }
