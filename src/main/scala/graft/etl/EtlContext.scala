@@ -71,68 +71,13 @@ final case class EtlContext(spark: SparkSession, warehouse: String,
       Files.move(tmp, path(table))
     }
 
-  /** Table maintenance (tx-log backend only) — the operational surface of
-    * the underlying [[graft.sources.TxLogTable]]: incremental change feed,
-    * small-file compaction, history GC, and the version cursor feeds are
-    * driven from.
+  /** The transaction-log table behind `name` (tx-log backend only) — the
+    * operational surface: change feed, compaction, history, vacuum and
+    * row-level DML are its methods ([[graft.sources.TxLogTable]]).
     */
-  def latestVersion(table: String): Option[Int] = {
-    require(txLog, s"latestVersion($table) requires the txLog backend")
-    tx(table).latestVersion
-  }
-
-  def changesBetween(table: String, schema: StructType,
-                     fromV: Int, toV: Int): DataFrame = {
-    require(txLog, s"changesBetween($table) requires the txLog backend")
-    tx(table).changesBetween(schema, fromV, toV)
-  }
-
-  def compact(table: String, schema: StructType, numFiles: Int = 1): Int = {
-    require(txLog, s"compact($table) requires the txLog backend")
-    tx(table).compact(schema, numFiles)
-  }
-
-  def vacuum(table: String, keep: Int = 1,
-             minAgeMillis: Long =
-               graft.sources.TxLogTable.DefaultVacuumMinAgeMillis,
-             retainMillis: Long =
-               graft.sources.TxLogTable.DefaultVacuumRetainMillis,
-             dryRun: Boolean = false)
-      : (Int, Int) = {
-    require(txLog, s"vacuum($table) requires the txLog backend")
-    tx(table).vacuum(keep, minAgeMillis, retainMillis, dryRun)
-  }
-
-  def history(table: String): Seq[graft.sources.TxLogTable.VersionInfo] = {
-    require(txLog, s"history($table) requires the txLog backend")
-    tx(table).history()
-  }
-
-  def compactZOrder(table: String, schema: StructType,
-                    colA: String, colB: String, numFiles: Int = 8): Int = {
-    require(txLog, s"compactZOrder($table) requires the txLog backend")
-    tx(table).compactZOrder(schema, colA, colB, numFiles)
-  }
-
-  /** Keyed copy-on-write MERGE (file-targeted upsert) on a tx-log table. */
-  def merge(table: String, schema: StructType, incoming: DataFrame,
-            keys: Seq[String]): graft.sources.TxLogTable.MergeStats = {
-    require(txLog, s"merge($table) requires the txLog backend")
-    tx(table).merge(schema, incoming, keys)
-  }
-
-  /** Copy-on-write DELETE WHERE (file-targeted) on a tx-log table. */
-  def deleteWhere(table: String, schema: StructType,
-                  pred: org.apache.spark.sql.Column)
-      : graft.sources.TxLogTable.MergeStats = {
-    require(txLog, s"deleteWhere($table) requires the txLog backend")
-    tx(table).deleteWhere(schema, pred)
-  }
-
-  /** Merge-on-read equality DELETE (tombstones) on a tx-log table. */
-  def deleteByKeysMor(table: String, deleteKeys: DataFrame): Int = {
-    require(txLog, s"deleteByKeysMor($table) requires the txLog backend")
-    tx(table).deleteByKeysMor(deleteKeys)
+  def table(name: String): graft.sources.TxLogTable = {
+    require(txLog, s"table($name) requires the txLog backend")
+    tx(name)
   }
 
   private def deleteRecursive(p: Path): Unit =

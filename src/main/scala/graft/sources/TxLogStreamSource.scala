@@ -45,13 +45,12 @@ import org.apache.spark.sql.types.StructType
   * (whichever bites first); neither caps a full initial snapshot (that
   * is ONE consistent batch by contract).
   *
-  * Maintenance commits are SKIPPED by default: `compact` / `zorder` /
-  * `rebucket` / `optimize` rewrite every (or most) file of the table
-  * without changing a row, and a feed that diffed file sets blindly would
-  * replay the whole table as inserts into every consumer — at 100 TB, one
-  * `CALL system.rebucket` on a streamed table is a full-table phantom
-  * re-delivery. The `#op=` manifest line identifies them
-  * ([[TxLogTable.RewriteOps]]); versions carrying those ops emit zero
+  * Maintenance commits are SKIPPED by default: the layout rewrites
+  * ([[TxLogTable.RewriteOps]]) re-lay files without changing a row, and a
+  * feed that diffed file sets blindly would replay the rewritten rows as
+  * inserts into every consumer — at 100 TB, one `CALL system.rebucket` on
+  * a streamed table is a full-table phantom re-delivery. The `#op=`
+  * manifest line identifies them; versions carrying those ops emit zero
   * rows. `option("includeMaintenance", "true")` opts back into the raw
   * file feed for consumers that genuinely track physical files (mirrors
   * the public Delta CDF's `dataChange = false` / `skipChangeCommits`

@@ -122,6 +122,17 @@ object TxLogTable {
   private[sources] final case class Unchanged[+R](result: R)
       extends CommitPlan[R]
 
+  /** What one planning pass of a layout rewrite decided for its base
+    * version: restage the data lines `hit` through `cluster` and carry
+    * `kept` by reference. `overwrite` marks a whole-table rewrite (the
+    * tombstones and the MOR key set die with it); `edit` changes the
+    * carried header.
+    */
+  private[sources] final case class Rewrite(hit: Seq[String],
+      kept: Seq[String], cluster: DataFrame => DataFrame,
+      overwrite: Boolean = false,
+      edit: ManifestHeader => ManifestHeader = identity)
+
   // Suffix of the in-flight temp files `putIfAbsent` and
   // `replaceAtomically` write next to their target. No reader's filter
   // (`v*.manifest`, `*.cursor`, `*.tag`, `mv.def`) matches it, and
@@ -342,17 +353,29 @@ object TxLogTable {
     spark.conf.getOption("spark.graft.mv.maxLocalDimRows")
       .map(_.toLong).getOrElse(MaxLocalDimRows)
 
+  /** The layout-maintenance rewrites: each value is the `#op=` name of
+    * the commits one method publishes through the shared rewrite
+    * primitive (`TxLogTable.rewrite`). They re-lay files without changing
+    * a row.
+    */
+  object LayoutRewrite extends Enumeration {
+    val Compact = Value("compact") // compact
+    val CompactSmall = Value("compact-small") // compactSmall
+    val CompactWhere = Value("compact-where") // compactWhere
+    val Resort = Value("resort") // resort
+    val ZOrder = Value("zorder") // compactZOrder
+    val ZOrderWhere = Value("zorder-where") // compactZOrderWhere
+    val Rebucket = Value("rebucket") // rebucket
+  }
+
   /** `#op=` values whose commits preserve the table's logical content —
-    * pure layout maintenance (file packing / clustering / bucket
-    * evolution). The change feed can skip these wholesale: every row in
-    * their "new" files already reached consumers under an earlier
-    * version. `restore` is deliberately NOT here (it changes visible
-    * rows), nor are the metadata-only ops (rename/add/drop-column,
+    * every [[LayoutRewrite]]. The change feed can skip these wholesale:
+    * every row in their "new" files already reached consumers under an
+    * earlier version. `restore` is deliberately NOT here (it changes
+    * visible rows), nor are the metadata-only ops (rename/add/drop-column,
     * add-check — they add no files, so the feed already emits nothing).
     */
-  val RewriteOps: Set[String] =
-    Set("compact", "compact-small", "compact-where", "zorder", "rebucket",
-      "resort")
+  val RewriteOps: Set[String] = LayoutRewrite.values.map(_.toString)
 
   /** COPY-ON-WRITE row-changing ops: versions that REWRITE the affected
     * files (old file out, replacement file in) rather than appending.
@@ -961,7 +984,7 @@ object TxLogTable {
 }
 
 final case class TxLogTable(spark: SparkSession, root: String) {
-  import TxLogTable.{Publish, Unchanged}
+  import TxLogTable.{LayoutRewrite, Publish, Rewrite, Unchanged}
 
   // A root of the form `<path>@@branch=<name>` addresses the table's
   // BRANCH log: same data directory (zero-copy, like a clone without the
@@ -2688,11 +2711,10 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * CDC contracts do.
     *
     * `skipRewrites` excludes versions whose `#op=` is a row-PRESERVING
-    * layout rewrite ([[TxLogTable.RewriteOps]]: compact / compact-small /
-    * compact-where / zorder / rebucket): those commits change the file
-    * layout but not the logical table content, so a change-feed consumer
-    * that received the rewritten files would re-receive every row of the
-    * table as phantom inserts — at 100 TB, one `CALL system.rebucket`
+    * layout rewrite ([[TxLogTable.RewriteOps]]): those commits change the
+    * file layout but not the logical table content, so a change-feed
+    * consumer that received the rewritten files would re-receive every row
+    * of the table as phantom inserts — at 100 TB, one `CALL system.rebucket`
     * would replay the ENTIRE table into every downstream stream. The
     * streaming source passes `skipRewrites = true` by default (the public
     * Delta CDF ships the same knob: OPTIMIZE files carry
@@ -2965,27 +2987,84 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     ins.unionByName(del)
   }
 
-  /** Rewrite the current snapshot into `numFiles` files per partition value
-    * (one overwrite commit, table layout preserved) — the answer to the
-    * small-file problem O(delta) appends accumulate: a year of hourly
-    * commits leaves ~10k tiny files whose per-file open/footer cost comes
-    * to dominate scans. Readers are never blocked: data files are
-    * immutable, the swap is the usual atomic manifest publish, and prior
-    * versions (and the change feed before the compaction point) stay
-    * readable until `vacuum`.
+  /** THE layout-maintenance rewrite: every [[TxLogTable.LayoutRewrite]]
+    * stages and publishes through here, inside [[optimisticCommit]]. Each
+    * pass hands the resolved `base` to `plan`, which either declares the
+    * table converged (`Left`: the stats to return, nothing committed) or
+    * names the files to rewrite and to keep. The rewritten files are read
+    * through the MOR/DV mask (their deletes materialize) with the hidden
+    * layout columns derived, clustered by the plan, and staged with the
+    * inherited bloom columns and bits. The version publishes the kept
+    * lines plus the staged files under `base`'s carried header and the
+    * plan's edit. A lost race re-plans against the new head, so a commit
+    * landing during the staging write is re-read, never dropped. The rows
+    * passed the CHECK constraints at ingest and are not re-validated; the
+    * NDV sketch carries (the rows are the same — `analyze` re-tightens
+    * it).
     */
-  def compact(schema: StructType, numFiles: Int = 1): Int = {
-    val v = latestVersion.getOrElse(
-      throw new IllegalStateException(s"compact of empty table: $root"))
-    val cols = partitionColsOf(v)
-    // a bucketed table's hidden partition col is not in `schema`:
-    // re-derive it before clustering so the rewrite packs per bucket
-    val snap = withBucketCol(snapshot(schema), cols)
-    val packed =
-      if (cols.isEmpty) snap.repartition(numFiles)
-      else snap.repartition(numFiles, cols.map(col): _*)
-    commit(packed, overwrite = true, partitionCols = cols, op = "compact")
+  private def rewrite(op: LayoutRewrite.Value, schema: StructType)
+      (plan: Option[Int] => Either[TxLogTable.MergeStats, Rewrite])
+      : TxLogTable.MergeStats =
+    optimisticCommit(op.toString) { (base, next) =>
+      plan(base) match {
+        case Left(converged) => Unchanged(converged)
+        case Right(rw) =>
+          val layout = base.map(partitionColsOf).getOrElse(Nil)
+          val rows = withBucketCol(readMaskedEntries(schema,
+            rw.hit.map(TxLogTable.decodeEntry), base), layout)
+          val staged = stageWithStats(rw.cluster(rows), layout,
+            base.map(bloomColsOf).getOrElse(Nil), inheritedBloomBits(base))
+          Publish(
+            rw.edit(carryFrom(base, op.toString, rw.kept, rw.overwrite)),
+            rw.kept ++ tagVersion(staged, next),
+            TxLogTable.MergeStats(next, rw.hit.size, rw.kept.size))
+      }
+    }
+
+  // a rewrite of every file of `b`
+  private def wholeTable(b: Int, cluster: DataFrame => DataFrame)
+      : Rewrite =
+    Rewrite(dataLines(b), Nil, cluster, overwrite = true)
+
+  // `rows` in `n` tasks clustered by the partition values, so each hive
+  // value's rows land in ONE task → one packed file per value, instead of
+  // round-robin scattering every value across all `n` tasks (which would
+  // multiply files, the opposite of OPTIMIZE)
+  private def packed(rows: DataFrame, n: Int,
+                     layout: Seq[String]): DataFrame =
+    if (layout.isEmpty) rows.repartition(n)
+    else rows.repartition(n, layout.map(col): _*)
+
+  // `base`'s data lines split into the files whose hive partition path
+  // segments satisfy `preds` (column → allowed values, the same exact
+  // per-file decision the filtered metadata aggregates use) and the rest
+  private def partitionSplit(what: String, base: Option[Int],
+                             preds: Map[String, Set[String]])
+      : (Seq[String], Seq[String]) = {
+    val layout = base.map(partitionColsOf).getOrElse(Nil)
+    require(preds.keySet.subsetOf(layout.toSet),
+      s"$what constraints must be partition columns of $layout, " +
+        s"got ${preds.keySet}")
+    base.map(dataLines).getOrElse(Nil).partition { line =>
+      val segs = TxLogTable.partitionSegmentsOf(TxLogTable.relOf(line))
+      preds.forall { case (c, vals) => segs.get(c).exists(vals.contains) }
+    }
   }
+
+  /** Rewrite the current snapshot into `numFiles` files per partition value
+    * (table layout preserved) — the answer to the small-file problem
+    * O(delta) appends accumulate: a year of hourly commits leaves ~10k
+    * tiny files whose per-file open/footer cost comes to dominate scans.
+    * Readers are never blocked: data files are immutable, the swap is the
+    * usual atomic manifest publish, and prior versions (and the change
+    * feed before the compaction point) stay readable until `vacuum`.
+    */
+  def compact(schema: StructType, numFiles: Int = 1): Int =
+    rewrite(LayoutRewrite.Compact, schema) { base =>
+      val b = base.getOrElse(
+        throw new IllegalStateException(s"compact of empty table: $root"))
+      Right(wholeTable(b, packed(_, numFiles, partitionColsOf(b))))
+    }.version
 
   /** Data-file sizes of `version` (bytes, from the filesystem listing —
     * the LIST that object stores return sizes with anyway). The input to
@@ -3002,10 +3081,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * OPTIMIZE means at 100 TB — [[compact]]'s full rewrite is O(table)
     * every time, while the steady-state cost here is O(new small files):
     * a year of hourly appends compacts hour-by-hour without ever
-    * rewriting the consolidated bulk. Reads through the MOR tombstone
-    * mask, so compacting also materializes deletes for the rewritten
-    * files (tombstones stay for the carried ones). Same optimistic
-    * manifest race as [[merge]].
+    * rewriting the consolidated bulk. Compacting materializes deletes for
+    * the rewritten files (tombstones stay for the carried ones).
     *
     * Returns [[TxLogTable.MergeStats]]: rewritten = small files packed,
     * carried = large files untouched.
@@ -3014,93 +3091,54 @@ final case class TxLogTable(spark: SparkSession, root: String) {
                    targetBytes: Long = 128L * 1024 * 1024)
       : TxLogTable.MergeStats = {
     require(minBytes > 0 && targetBytes > 0, "compactSmall thresholds")
-    optimisticCommit("compactSmall") { (base, next) =>
-      val layout = base.map(partitionColsOf).getOrElse(Nil)
+    rewrite(LayoutRewrite.CompactSmall, schema) { base =>
       val sizes = base.map(b => fileSizes(Some(b)).toMap)
         .getOrElse(Map.empty)
-      val (small, large) = base.map(dataLines).getOrElse(Nil)
-        .partition { line =>
-          sizes.getOrElse(line.takeWhile(_ != '\t'), 0L) < minBytes }
+      def size(line: String): Long =
+        sizes.getOrElse(TxLogTable.relOf(line), 0L)
+      val (small, large) =
+        base.map(dataLines).getOrElse(Nil).partition(size(_) < minBytes)
       if (small.size <= 1) // nothing to pack (or a single straggler)
-        Unchanged(TxLogTable.MergeStats(base.getOrElse(-1), 0, large.size))
+        Left(TxLogTable.MergeStats(base.getOrElse(-1), 0, large.size))
       else {
-        val smallBytes = small.map(l =>
-          sizes.getOrElse(l.takeWhile(_ != '\t'), 0L)).sum
-        val nOut = math.max(1L, (smallBytes + targetBytes - 1) / targetBytes)
-          .toInt
-        // partitioned layout: cluster by the partition values so each hive
-        // partition's small rows land in ONE task → one packed file per
-        // value, instead of round-robin scattering every value across all
-        // nOut tasks (which would multiply files, the opposite of OPTIMIZE)
-        val smallRows = withBucketCol(readMaskedEntries(schema,
-          small.map(TxLogTable.decodeEntry), base), layout)
-        val packed =
-          if (layout.isEmpty) smallRows.repartition(nOut)
-          else smallRows.repartition(nOut, layout.map(col): _*)
-        val effBloom = base.map(bloomColsOf).getOrElse(Nil)
-        val staged = stageWithStats(packed, layout, effBloom,
-          inheritedBloomBits(base))
-        Publish(carryFrom(base, "compact-small", large),
-          large ++ tagVersion(staged, next),
-          TxLogTable.MergeStats(next, small.size, large.size))
+        val nOut = math.max(1L,
+          (small.map(size).sum + targetBytes - 1) / targetBytes).toInt
+        val layout = base.map(partitionColsOf).getOrElse(Nil)
+        Right(Rewrite(small, large, packed(_, nOut, layout)))
       }
     }
   }
 
   /** PARTITION-SCOPED compaction: rewrite only the files whose hive
-    * partition path segments satisfy `preds` (column → allowed values,
-    * the same exact per-file decision the filtered metadata aggregates
-    * use), packed to `numFiles` per partition value; every other file is
+    * partition path segments satisfy `preds` (column → allowed values),
+    * packed to `numFiles` per partition value; every other file is
     * carried by manifest reference. This is what OPTIMIZE means on a
     * date-partitioned 100 TB table: yesterday's hot partition compacts
     * without reading — or rewriting — the consolidated bulk, so the
     * steady-state maintenance cost is O(new partition), not O(table).
-    * Reads through the MOR mask like [[compactSmall]]: deletes
-    * materialize for the rewritten partition, tombstone lines are
+    * Deletes materialize for the rewritten partition, tombstone lines are
     * carried for the untouched rest (sequence-aware readers never
-    * re-apply them to the new files). Same optimistic manifest race.
+    * re-apply them to the new files).
     */
   def compactWhere(schema: StructType, preds: Map[String, Set[String]],
                    numFiles: Int = 1): TxLogTable.MergeStats = {
     require(preds.nonEmpty && preds.valuesIterator.forall(_.nonEmpty),
       "compactWhere needs at least one partition constraint")
-    optimisticCommit("compactWhere") { (base, next) =>
+    rewrite(LayoutRewrite.CompactWhere, schema) { base =>
       val layout = base.map(partitionColsOf).getOrElse(Nil)
-      require(preds.keySet.subsetOf(layout.toSet),
-        s"compactWhere constraints must be partition columns of $layout, " +
-          s"got ${preds.keySet}")
-      val (hit, kept) = base.map(dataLines).getOrElse(Nil).partition {
-        line =>
-          val segs = TxLogTable.partitionSegmentsOf(
-            line.takeWhile(_ != '\t'))
-          preds.forall { case (c, vals) =>
-            segs.get(c).exists(vals.contains) }
-      }
+      val (hit, kept) = partitionSplit("compactWhere", base, preds)
       // convergence: `numFiles` is PER PARTITION VALUE — a multi-value
       // predicate is already compacted when every selected value sits at
       // (or under) the target, and the scheduled-maintenance rerun must
       // then be a no-op, not an endless full re-rewrite of the selection
       val perValue = hit.groupBy { line =>
-        val segs = TxLogTable.partitionSegmentsOf(
-          line.takeWhile(_ != '\t'))
+        val segs = TxLogTable.partitionSegmentsOf(TxLogTable.relOf(line))
         layout.map(segs.getOrElse(_, ""))
       }
       if (perValue.valuesIterator.forall(_.size <= numFiles))
-        Unchanged(TxLogTable.MergeStats(base.getOrElse(-1), 0,
+        Left(TxLogTable.MergeStats(base.getOrElse(-1), 0,
           kept.size + hit.size))
-      else {
-        val rows = withBucketCol(readMaskedEntries(schema,
-          hit.map(TxLogTable.decodeEntry), base), layout)
-        val packed =
-          if (layout.isEmpty) rows.repartition(numFiles)
-          else rows.repartition(numFiles, layout.map(col): _*)
-        val effBloom = base.map(bloomColsOf).getOrElse(Nil)
-        val staged = stageWithStats(packed, layout, effBloom,
-          inheritedBloomBits(base))
-        Publish(carryFrom(base, "compact-where", kept),
-          kept ++ tagVersion(staged, next),
-          TxLogTable.MergeStats(next, hit.size, kept.size))
-      }
+      else Right(Rewrite(hit, kept, packed(_, numFiles, layout)))
     }
   }
 
@@ -3116,16 +3154,15 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * disagree. Rewritten dirs range-split on layout ++ sortCols toward
     * `targetBytes` (like the sorted rebucket path), so re-armed dirs
     * come back multi-file and splittable, not as monster files;
-    * untouched dirs are carried by manifest reference. Reads through
-    * the MOR mask (rewritten files materialize their deletes). A table
-    * whose dirs are all armed returns without committing — scheduled
-    * maintenance converges to a no-op.
+    * untouched dirs are carried by manifest reference. Rewritten files
+    * materialize their deletes. A table whose dirs are all armed returns
+    * without committing — scheduled maintenance converges to a no-op.
     */
   def resort(schema: StructType,
              targetBytes: Long = TxLogTable.RebucketTargetBytes)
       : TxLogTable.MergeStats = {
     require(targetBytes > 0, s"resort targetBytes: $targetBytes")
-    optimisticCommit("resort") { (base, next) =>
+    rewrite(LayoutRewrite.Resort, schema) { base =>
       val b = base.getOrElse(throw new IllegalStateException(
         s"resort of empty table: $root"))
       val sorts = sortColsOf(b)
@@ -3135,7 +3172,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       val layout = partitionColsOf(b)
       val single = sorts.length == 1
       val byDir = dataLines(b).groupBy(l =>
-        l.takeWhile(_ != '\t').lastIndexOf('/') match {
+        TxLogTable.relOf(l).lastIndexOf('/') match {
           case -1 => ""
           case i => l.substring(0, i)
         })
@@ -3147,26 +3184,17 @@ final case class TxLogTable(spark: SparkSession, root: String) {
           }, single).isDefined
       }
       if (damaged.isEmpty)
-        Unchanged(TxLogTable.MergeStats(b, 0,
+        Left(TxLogTable.MergeStats(b, 0,
           byDir.valuesIterator.map(_.size).sum))
       else {
         val hit = damaged.valuesIterator.flatten.toSeq
-        val kept = armed.valuesIterator.flatten.toSeq
         val sizes = fileSizes(Some(b)).toMap
         val hitBytes = hit.map(l =>
-          sizes.getOrElse(l.takeWhile(_ != '\t'), 0L)).sum
+          sizes.getOrElse(TxLogTable.relOf(l), 0L)).sum
         val nOut = math.min(1L << 18, math.max(damaged.size.toLong,
           (hitBytes + targetBytes - 1) / targetBytes)).toInt
-        val rows = withBucketCol(readMaskedEntries(schema,
-          hit.map(TxLogTable.decodeEntry), base), layout)
-        val packed = rows.repartitionByRange(nOut,
-          (layout ++ sorts).map(col): _*)
-        val effBloom = base.map(bloomColsOf).getOrElse(Nil)
-        val staged = stageWithStats(packed, layout, effBloom,
-          inheritedBloomBits(base))
-        Publish(carryFrom(base, "resort", kept),
-          kept ++ tagVersion(staged, next),
-          TxLogTable.MergeStats(next, hit.size, kept.size))
+        Right(Rewrite(hit, armed.valuesIterator.flatten.toSeq,
+          _.repartitionByRange(nOut, (layout ++ sorts).map(col): _*)))
       }
     }
   }
@@ -3177,7 +3205,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * small rectangle of the (colA, colB) space, so the manifest min/max
     * stats prune range scans on EITHER column (`candidateFiles` /
     * `snapshotRange`), where a plain sort would serve only its leading
-    * column. Same atomic overwrite-commit publish as `compact`.
+    * column. Same atomic publish as `compact`.
     */
   def compactZOrder(schema: StructType, colA: String, colB: String,
                     numFiles: Int = 8): Int =
@@ -3193,42 +3221,14 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     */
   def compactZOrder(schema: StructType, zCols: Seq[String],
                     numFiles: Int): Int = {
-    require(zCols.size >= 2,
-      "z-order needs at least two dimensions (one dimension is a plain " +
-        "sort — use sortCols for that layout)")
-    val v = latestVersion.getOrElse(
-      throw new IllegalStateException(s"compactZOrder of empty table: $root"))
-    require(sortColsOf(v).isEmpty,
-      "zorder and sortCols are competing physical layouts: the staging " +
-        "sort would re-order the Morton clustering right back — drop " +
-        "one of the two")
-    val cols = partitionColsOf(v)
-    val snap = snapshot(schema)
-    // a STRING dimension rides the curve through the order-preserving
-    // prefix encoding (ZOrder.strEnc — the Column twin of the :spre: stats
-    // embedding); integral dimensions grid on the raw value as before
-    def gridInput(c: String): org.apache.spark.sql.Column =
-      schema.find(_.name == c).map(_.dataType) match {
-        case Some(org.apache.spark.sql.types.StringType) =>
-          graft.operators.ZOrder.strEnc(col(c))
-        case _ => col(c).cast("long")
-      }
-    val enc = zCols.map(gridInput)
-    // one pass for every dimension's [min, max]
-    val aggs = enc.flatMap(e => Seq(
-      org.apache.spark.sql.functions.min(e),
-      org.apache.spark.sql.functions.max(e)))
-    val mm = snap.agg(aggs.head, aggs.tail: _*).head()
-    if (zCols.indices.exists(i => mm.isNullAt(2 * i)))
-      return compact(schema, numFiles) // an all-null dim / empty table
-    val z = graft.operators.ZOrder.zValueN(
-      enc.zipWithIndex.map { case (e, i) =>
-        (e, mm.getLong(2 * i), mm.getLong(2 * i + 1)) })
-    val packed = snap.withColumn("__z", z)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-    commit(packed, overwrite = true, partitionCols = cols, op = "zorder")
+    requireZDims(zCols)
+    rewrite(LayoutRewrite.ZOrder, schema) { base =>
+      val b = base.getOrElse(throw new IllegalStateException(
+        s"compactZOrder of empty table: $root"))
+      requireUnsorted(b)
+      Right(wholeTable(b,
+        zOrdered(_, schema, zCols, numFiles, partitionColsOf(b))))
+    }.version
   }
 
   /** PARTITION-SCOPED z-order: rewrite only the partition dirs matching
@@ -3245,69 +3245,65 @@ final case class TxLogTable(spark: SparkSession, root: String) {
   def compactZOrderWhere(schema: StructType, preds: Map[String, Set[String]],
                          zCols: Seq[String], numFiles: Int = 8)
       : TxLogTable.MergeStats = {
-    require(zCols.size >= 2,
-      "z-order needs at least two dimensions (one dimension is a plain " +
-        "sort — use sortCols for that layout)")
+    requireZDims(zCols)
     require(preds.nonEmpty && preds.valuesIterator.forall(_.nonEmpty),
       "compactZOrderWhere needs at least one partition constraint; use " +
         "compactZOrder for the whole table")
-    val v0 = latestVersion.getOrElse(throw new IllegalStateException(
-      s"compactZOrderWhere of empty table: $root"))
-    require(sortColsOf(v0).isEmpty,
+    rewrite(LayoutRewrite.ZOrderWhere, schema) { base =>
+      val b = base.getOrElse(throw new IllegalStateException(
+        s"compactZOrderWhere of empty table: $root"))
+      requireUnsorted(b)
+      val layout = partitionColsOf(b)
+      zCols.foreach(c => require(!layout.contains(c),
+        s"z dimension $c is a partition column — constant within every " +
+          "rewritten dir, so it cannot cluster anything; drop it"))
+      val (hit, kept) = partitionSplit("compactZOrderWhere", base, preds)
+      if (hit.isEmpty) Left(TxLogTable.MergeStats(b, 0, kept.size))
+      else Right(Rewrite(hit, kept,
+        zOrdered(_, schema, zCols, numFiles, layout)))
+    }
+  }
+
+  private def requireZDims(zCols: Seq[String]): Unit =
+    require(zCols.size >= 2,
+      "z-order needs at least two dimensions (one dimension is a plain " +
+        "sort — use sortCols for that layout)")
+
+  private def requireUnsorted(b: Int): Unit =
+    require(sortColsOf(b).isEmpty,
       "zorder and sortCols are competing physical layouts: the staging " +
         "sort would re-order the Morton clustering right back — drop " +
         "one of the two")
-    zCols.foreach(c => require(!partitionColsOf(v0).contains(c),
-      s"z dimension $c is a partition column — constant within every " +
-        "rewritten dir, so it cannot cluster anything; drop it"))
-    optimisticCommit("compactZOrderWhere") { (base, next) =>
-      val layout = base.map(partitionColsOf).getOrElse(Nil)
-      require(preds.keySet.subsetOf(layout.toSet),
-        s"compactZOrderWhere constraints must be partition columns of " +
-          s"$layout, got ${preds.keySet}")
-      val (hit, kept) = base.map(dataLines).getOrElse(Nil).partition {
-        line =>
-          val segs = TxLogTable.partitionSegmentsOf(
-            line.takeWhile(_ != '\t'))
-          preds.forall { case (c, vals) =>
-            segs.get(c).exists(vals.contains) }
-      }
-      if (hit.isEmpty)
-        Unchanged(TxLogTable.MergeStats(base.getOrElse(-1), 0, kept.size))
-      else {
-        val rows = withBucketCol(readMaskedEntries(schema,
-          hit.map(TxLogTable.decodeEntry), base), layout)
-        def gridInput(c: String): org.apache.spark.sql.Column =
-          schema.find(_.name == c).map(_.dataType) match {
-            case Some(org.apache.spark.sql.types.StringType) =>
-              graft.operators.ZOrder.strEnc(col(c))
-            case _ => col(c).cast("long")
-          }
-        val enc = zCols.map(gridInput)
-        val aggs = enc.flatMap(e => Seq(
-          org.apache.spark.sql.functions.min(e),
-          org.apache.spark.sql.functions.max(e)))
-        val mm = rows.agg(aggs.head, aggs.tail: _*).head()
-        val packed =
-          if (zCols.indices.exists(i => mm.isNullAt(2 * i)))
-            rows.repartition(numFiles, layout.map(col): _*)
-          else {
-            val z = graft.operators.ZOrder.zValueN(
-              enc.zipWithIndex.map { case (e, i) =>
-                (e, mm.getLong(2 * i), mm.getLong(2 * i + 1)) })
-            rows.withColumn("__z", z)
-              .repartitionByRange(numFiles, col("__z"))
-              .sortWithinPartitions("__z")
-              .drop("__z")
-          }
-        val effBloom = base.map(bloomColsOf).getOrElse(Nil)
-        val staged = stageWithStats(packed, layout, effBloom,
-          inheritedBloomBits(base))
-        Publish(carryFrom(base, "zorder-where", kept),
-          kept ++ tagVersion(staged, next),
-          TxLogTable.MergeStats(next, hit.size, kept.size))
-      }
-    }
+
+  // `rows` range-split into `numFiles` tasks on the Morton curve over
+  // `zCols`, each task sorted along it. The grid spans the rows' own
+  // [min, max] per dimension, one pass for all of them. A STRING
+  // dimension rides the curve through the order-preserving prefix
+  // encoding (ZOrder.strEnc — the Column twin of the :spre: stats
+  // embedding); integral dimensions grid on the raw value. With an
+  // all-null dimension (or no rows) there is no grid, and the rows pack
+  // per partition value instead.
+  private def zOrdered(rows: DataFrame, schema: StructType,
+                       zCols: Seq[String], numFiles: Int,
+                       layout: Seq[String]): DataFrame = {
+    val enc = zCols.map(c => schema.find(_.name == c).map(_.dataType) match {
+      case Some(org.apache.spark.sql.types.StringType) =>
+        graft.operators.ZOrder.strEnc(col(c))
+      case _ => col(c).cast("long")
+    })
+    val aggs = enc.flatMap(e => Seq(
+      org.apache.spark.sql.functions.min(e),
+      org.apache.spark.sql.functions.max(e)))
+    val mm = rows.agg(aggs.head, aggs.tail: _*).head()
+    if (zCols.indices.exists(i => mm.isNullAt(2 * i)))
+      packed(rows, numFiles, layout)
+    else rows
+      .withColumn("__z", graft.operators.ZOrder.zValueN(
+        enc.zipWithIndex.map { case (e, i) =>
+          (e, mm.getLong(2 * i), mm.getLong(2 * i + 1)) }))
+      .repartitionByRange(numFiles, col("__z"))
+      .sortWithinPartitions("__z")
+      .drop("__z")
   }
 
   // ---- change-feed cursor registry ----------------------------------
@@ -3801,7 +3797,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       s"bucket count out of range: $newN")
     alsoKeys.foreach { case (_, n) =>
       require(n > 0 && n <= (1 << 20), s"bucket count out of range: $n") }
-    optimisticCommit("rebucket") { (base, next) =>
+    rewrite(LayoutRewrite.Rebucket, schema) { base =>
       require(base.isDefined, s"rebucket of nonexistent table $root")
       val b = base.get
       val specs = bucketSpecsOf(b)
@@ -3828,16 +3824,6 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       val newSpecs = specs.map { case (k, n) =>
         (k, updateMap.getOrElse(k, n)) }
       val layout = partitionColsOf(b)
-      // masked snapshot (tombstones materialize), EVERY level's id
-      // re-derived explicitly under the new spec — withBucketCol then
-      // sees the bucket columns present and leaves them alone, so the
-      // old spec never touches these rows; it derives only the hidden
-      // time levels the output partitioning below needs
-      val re = withBucketCol(
-        newSpecs.zipWithIndex.foldLeft(snapshot(schema, Some(b))) {
-          case (acc, ((k, n), i)) => acc.withColumn(
-            TxLogTable.bucketColAt(i), TxLogTable.bucketIdCol(k, n))
-        }, layout)
       // Output tasks: enough that the AVERAGE task writes ~targetBytes —
       // the old one-file-per-cell default (min(1024, cells)) emitted
       // multi-GB unsplit files at scale, and for a SORTED table an
@@ -3862,7 +3848,13 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         else math.min(1L << 18,
           math.max(byBytes, math.min(cells, 1024L))).toInt
       val sortSpec = sortColsOf(b)
-      val packed =
+      // the masked rows (tombstones materialize) with EVERY level's id
+      // re-derived under the new spec, replacing the old spec's ids
+      def cluster(rows: DataFrame): DataFrame = {
+        val re = newSpecs.zipWithIndex.foldLeft(rows) {
+          case (acc, ((k, n), i)) => acc.withColumn(
+            TxLogTable.bucketColAt(i), TxLogTable.bucketIdCol(k, n))
+        }
         if (sortSpec.nonEmpty)
           re.repartitionByRange(nOut, (layout ++ sortSpec).map(col): _*)
         else if (nOut > cells) {
@@ -3873,14 +3865,10 @@ final case class TxLogTable(spark: SparkSession, root: String) {
             .repartition(nOut, (layout :+ "__rbsalt").map(col): _*)
             .drop("__rbsalt")
         } else re.repartition(nOut, layout.map(col): _*)
-      val effBloom = bloomColsOf(b)
-      val staged = stageWithStats(packed, layout, effBloom,
-        inheritedBloomBits(base))
-      // the masked rewrite folded every tombstone and mask: an overwrite
-      Publish(carryFrom(base, "rebucket", Nil, overwrite = true)
-          .copy(bucketSpecs = newSpecs),
-        tagVersion(staged, next), next)
-    }
+      }
+      Right(wholeTable(b, cluster)
+        .copy(edit = _.copy(bucketSpecs = newSpecs)))
+    }.version
   }
 
   /** ANALYZE: (re)compute the column NDV sketches from the CURRENT
@@ -5249,8 +5237,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
 
   // ONE validation job for all constraints: a row fails a check only when
   // the expression is literally FALSE (NULL passes, SQL-standard).
-  // Maintenance rewrites (compact/zorder) skip re-validation — their rows
-  // all passed at ingest.
+  // Layout rewrites never get here — their rows all passed at ingest.
   private def validateChecks(df: DataFrame, base: Option[Int]): Unit = {
     val checks = base.map(checksOf).getOrElse(Map.empty)
     if (checks.isEmpty) return
@@ -5328,12 +5315,10 @@ final case class TxLogTable(spark: SparkSession, root: String) {
           }
       }
     }
-    // maintenance rewrites re-stage rows that already passed at ingest
-    if (!Set("compact", "zorder", "compact-small")(opName))
-      validateChecks(df, latestVersion)
+    validateChecks(df, latestVersion)
     val stagedSpec = latestVersion.map(bucketSpecsOf).getOrElse(Nil)
     val staged = stageWithStats(df, partitionCols, effBloom, effBits,
-      rebalanceOk = !Set("compact", "zorder", "compact-small")(opName))
+      rebalanceOk = true)
     // batch KMV from the STAGED files (never re-executes the caller's
     // plan), computed once outside the publish retry loop
     val batchKmv = stagedKmv(staged)

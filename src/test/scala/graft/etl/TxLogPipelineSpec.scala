@@ -103,21 +103,22 @@ class TxLogPipelineSpec extends AnyFunSuite {
     // overwrite as a reset boundary carrying the new state; compact packs
     // the table without changing it; vacuum leaves only the latest version
     val ctx = EtlContext(spark, whTx, ts("2026-02-01 00:00:00"), txLog = true)
-    val latest = ctx.latestVersion("schedule_events").get
-    val feed = ctx.changesBetween("schedule_events",
-      Schemas.scheduleEventsTable, latest - 1, latest)
+    val events = ctx.table("schedule_events")
+    val latest = events.latestVersion.get
+    val feed = events.changesBetween(Schemas.scheduleEventsTable,
+      latest - 1, latest)
     assert(feed.columns.contains("_commit_version"))
     assert(norm(feed, Schemas.scheduleEventsTable) == cur)
-    ctx.compact("schedule_events", Schemas.scheduleEventsTable)
+    events.compact(Schemas.scheduleEventsTable)
     assert(rowsTx("schedule_events", Schemas.scheduleEventsTable) == cur)
     // DESCRIBE HISTORY through the context: ops + instants per version
-    val hist = ctx.history("schedule_events")
+    val hist = events.history()
     assert(hist.nonEmpty && hist.last.op.contains("compact"))
     assert(hist.forall(_.commitMillis.nonEmpty))
     val (droppedManifests, droppedFiles) =
-      ctx.vacuum("schedule_events", minAgeMillis = 0L, retainMillis = 0L)
+      events.vacuum(minAgeMillis = 0L, retainMillis = 0L)
     assert(droppedManifests >= 2 && droppedFiles > 0)
-    assert(ctx.latestVersion("schedule_events").toSeq ==
+    assert(events.latestVersion.toSeq ==
       TxLogTable(spark, s"$whTx/schedule_events").versions)
     assert(rowsTx("schedule_events", Schemas.scheduleEventsTable) == cur)
   }

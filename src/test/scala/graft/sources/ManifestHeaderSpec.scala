@@ -66,6 +66,11 @@ class ManifestHeaderSpec extends AnyFunSuite {
     // runs on an unsorted twin, with a live DV on a file it keeps
     val z = propertyTable(sorted = false)
     z.deleteWherePos(schema, col("id") === 0L)
+    // the whole-table z-order runs on a third twin, with a live DV and a
+    // tombstone for its overwrite to fold
+    val zw = propertyTable(sorted = false)
+    zw.deleteWherePos(schema, col("id") === 0L)
+    zw.deleteByKeysMor(Seq(1L).toDF("id"))
     val setup = t.latestVersion.get
     val h0 = t.headerOf(setup)
     assert(h0.schema.contains(schema) && h0.colmap == Map("y" -> "x") &&
@@ -132,6 +137,10 @@ class ManifestHeaderSpec extends AnyFunSuite {
         t.commit(rows(0, 40), overwrite = true, partitionCols = layout)),
       ("deleteByKeysMor again", t, carried, Set("tombs", "morKeys"), () =>
         t.deleteByKeysMor(Seq(12L).toDF("id"))),
+      // the whole-table rewrites fold every mask and carry the sketch
+      ("compact", t, overwritten, Set(), () => t.compact(schema)),
+      ("zorder", zw, overwritten, Set(), () =>
+        zw.compactZOrder(schema, Seq("id", "n"), numFiles = 1)),
       ("rebucket", t, overwritten, Set("bucketSpecs"), () =>
         t.rebucket(schema, 8)))
 

@@ -8,6 +8,29 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
+/** The default file-commit protocol plus a one-shot driver-side hook that
+  * runs right after a write job commits, on the writing thread: the
+  * deterministic way to land a concurrent commit INSIDE another writer's
+  * staging write. Enabled per test through
+  * `spark.sql.sources.commitProtocolClass`.
+  */
+class HookedCommitProtocol(jobId: String, path: String,
+                           dynamicPartitionOverwrite: Boolean)
+    extends org.apache.spark.sql.execution.datasources
+      .SQLHadoopMapReduceCommitProtocol(jobId, path,
+        dynamicPartitionOverwrite) {
+  override def commitJob(job: org.apache.hadoop.mapreduce.JobContext,
+      taskCommits: Seq[org.apache.spark.internal.io.FileCommitProtocol
+        .TaskCommitMessage]): Unit = {
+    super.commitJob(job, taskCommits)
+    Option(HookedCommitProtocol.hook.getAndSet(null)).foreach(_())
+  }
+}
+
+object HookedCommitProtocol {
+  val hook = new java.util.concurrent.atomic.AtomicReference[() => Unit]()
+}
+
 /** The multi-writer CONFLICT MATRIX, enumerated: every pairing of
   * concurrent operations either SERIALIZES (optimistic retry produces a
   * history equivalent to some serial order) or REFUSES LOUDLY
@@ -22,6 +45,7 @@ import graft.TestSpark
   * | row-level DML       | disjoint append      | serialize (carried)   |
   * | row-level DML       | file-disjoint DML    | BOTH land (commute)   |
   * | row-level DML       | overlapping DML      | refuse (write-write)  |
+  * | compact / zorder    | append               | re-plan (re-read)     |
   * | staged write        | vacuum               | survive (minAge)      |
   * | staged write        | rebucket             | refuse (spec changed) |
   * | tag 'x'             | tag 'x'              | one wins (atomic ref) |
@@ -63,6 +87,54 @@ class TxLogConcurrencySpec extends AnyFunSuite {
       assert(vs.toSet.size == 10, "every commit got a distinct version")
       assert(rows(t).size == 11, "no writer's rows were lost")
     } finally pool.shutdown()
+  }
+
+  test("compact / zorder || append: re-plan — an append landing during " +
+    "the rewrite's staging write stays visible") {
+    import java.util.concurrent.Executors
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val protocolKey = "spark.sql.sources.commitProtocolClass"
+    // the appender's thread starts here, so it inherits no SQL execution
+    // properties from the rewrite's write
+    val pool = Executors.newSingleThreadExecutor()
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    Await.result(Future(()), 10.seconds)
+    val t = fresh()
+    t.commit((0L until 20L).map(i => (i, s"v$i")).toDF("id", "v"),
+      overwrite = true)
+    spark.conf.set(protocolKey, classOf[HookedCommitProtocol].getName)
+    try {
+      var visible = (0L until 20L).toSet
+      // `rewrite`'s first write job is its staging write: the appender
+      // thread commits `keys` right after it, before the rewrite publishes
+      def whileStaging(op: String, keys: Seq[Long])(rewrite: => Int): Unit = {
+        HookedCommitProtocol.hook.set(() => Await.result(Future {
+          t.commit(keys.map(k => (k, s"a$k")).toDF("id", "v"),
+            overwrite = false)
+        }, 120.seconds))
+        val appendedAt = t.latestVersion.get + 1
+        // the rewrite publishes, or throws the documented lost-race error
+        val v = try rewrite catch {
+          case e: IllegalStateException
+              if e.getMessage.contains("lost the version race") => -1
+        }
+        assert(HookedCommitProtocol.hook.get == null,
+          s"$op staged nothing")
+        assert(t.opOf(appendedAt).contains("append"))
+        visible ++= keys
+        assert(rows(t).map(_._1) == visible,
+          s"$op dropped the append that landed during its staging write")
+        if (v >= 0) assert(v > appendedAt && t.opOf(v).contains(op))
+      }
+      whileStaging("compact", Seq(100L, 101L))(t.compact(schema))
+      whileStaging("zorder", Seq(200L, 201L))(
+        t.compactZOrder(schema, "id", "v", numFiles = 2))
+    } finally {
+      HookedCommitProtocol.hook.set(null)
+      spark.conf.unset(protocolKey)
+      pool.shutdown()
+    }
   }
 
   test("DML || compact of its read files: refuse, write-write") {

@@ -169,40 +169,60 @@ class TxLogStreamSourceSpec extends AnyFunSuite {
   }
 
   test("maintenance commits don't replay the table into the stream") {
-    val base = java.nio.file.Files.createTempDirectory("txstream-maint")
-    val t = TxLogTable(spark, base.resolve("t").toString)
+    // every layout rewrite re-lays files without changing a row, so the
+    // consumer must see NOTHING (a blind file-set diff would re-deliver
+    // the rewritten rows). The fixture is bucketed (rebucket), sorted for
+    // resort and unsorted for the z-orders (they refuse sortCols). Two
+    // single-task appends with nested id ranges leave every bucket dir
+    // two files whose ranges overlap — work for compactSmall,
+    // compactWhere and resort alike
     val layout = Seq(TxLogTable.BucketCol)
-    t.create(schema, partitionCols = layout, bucketSpecs = Seq(("id", 4)))
-    t.commit(Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
-      overwrite = false, partitionCols = layout)
-    val mem = "maint_skip_feed"
-    val q = spark.readStream.format("txlog").schema(schema).load(t.root)
-      .writeStream.format("memory").queryName(mem)
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .start()
-    try {
-      q.processAllAvailable()
-      assert(spark.table(mem).count() == 2)
-      // compact rewrites every file; rebucket rewrites the whole table
-      // under a new spec — neither changes a row, so the consumer must
-      // see NOTHING (a blind file-set diff would re-deliver 2 + 2 rows)
-      t.compact(schema)
-      q.processAllAvailable()
-      assert(spark.table(mem).count() == 2,
-        "compact replayed the table into the stream")
-      t.rebucket(schema, 8)
-      q.processAllAvailable()
-      assert(spark.table(mem).count() == 2,
-        "rebucket replayed the table into the stream")
-      // a REAL append after the rewrites surfaces exactly its own rows
-      // (the skipped versions still anchor the next diff)
-      t.commit(Seq((3L, "c")).toDF("id", "v"),
-        overwrite = false, partitionCols = layout)
-      q.processAllAvailable()
-      val rows = spark.table(mem).collect()
-      assert(rows.length == 3 &&
-        rows.map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
-    } finally q.stop()
+    val allBuckets = Map(TxLogTable.BucketCol -> (0 until 4).map(_.toString)
+      .toSet)
+    val ops: Seq[(String, Boolean, TxLogTable => Any)] = Seq(
+      ("compact", true, _.compact(schema)),
+      ("compact-small", true, _.compactSmall(schema, minBytes = 1L << 40)),
+      ("compact-where", true, _.compactWhere(schema, allBuckets)),
+      ("resort", true, _.resort(schema)),
+      ("rebucket", true, _.rebucket(schema, 8)),
+      ("zorder", false, _.compactZOrder(schema, "id", "v")),
+      ("zorder-where", false,
+        _.compactZOrderWhere(schema, allBuckets, Seq("id", "v"))))
+    ops.foreach { case (op, sorted, rewrite) =>
+      withClue(s"$op: ") {
+        val base = java.nio.file.Files.createTempDirectory("txstream-maint")
+        val t = TxLogTable(spark, base.resolve("t").toString)
+        t.create(schema, partitionCols = layout, bucketSpecs = Seq(("id", 4)),
+          sortCols = if (sorted) Seq("id") else Nil)
+        Seq((1L to 10L) ++ (31L to 40L), 11L to 30L).foreach(ids =>
+          t.commit(ids.map(i => (i, s"r$i")).toDF("id", "v").coalesce(1),
+            overwrite = false, partitionCols = layout))
+        val mem = "maint_skip_" + op.replace('-', '_')
+        val q = spark.readStream.format("txlog").schema(schema).load(t.root)
+          .writeStream.format("memory").queryName(mem)
+          .option("checkpointLocation", base.resolve("ckpt").toString)
+          .start()
+        try {
+          q.processAllAvailable()
+          assert(spark.table(mem).count() == 40)
+          val before = t.latestVersion.get
+          rewrite(t)
+          assert(t.versions.last == before + 1 &&
+            t.opOf(before + 1).contains(op), "the rewrite committed")
+          q.processAllAvailable()
+          assert(spark.table(mem).count() == 40,
+            s"$op replayed the table into the stream")
+          // a REAL append after the rewrite surfaces exactly its own rows
+          // (the skipped version still anchors the next diff)
+          t.commit(Seq((100L, "c")).toDF("id", "v"),
+            overwrite = false, partitionCols = layout)
+          q.processAllAvailable()
+          val rows = spark.table(mem).collect()
+          assert(rows.length == 41 &&
+            rows.map(_.getLong(0)).toSet == (1L to 40L).toSet + 100L)
+        } finally q.stop()
+      }
+    }
   }
 
   test("includeMaintenance=true opts back into the raw file feed") {

@@ -632,25 +632,35 @@ class TxLogTableSpec extends AnyFunSuite {
           Set((1L, "a"), (2L, "b"))),
         ("commitDynamic", _.commitDynamic(Seq((20L, "b")).toDF("id", "v"),
           Seq("v")), Set((1L, "a"), (20L, "b"))))
-    families.foreach { case (family, op, expect) =>
+    def race(family: String, seed: Seq[(Long, String)],
+             op: TxLogTable => Int, expect: Set[(Long, String)]): Unit =
       withClue(s"$family: ") {
         val t = fresh()
         t.create(schema, partitionCols = Seq("v"))
-        Seq((1L, "a"), (2L, "b"), (3L, "c")).foreach(r =>
+        seed.foreach(r =>
           t.commit(Seq(r).toDF("id", "v"), overwrite = false,
             partitionCols = Seq("v")))
         // a concurrent writer claims v4 first, rolling the table back to
-        // v2's content: the operation must re-plan against v4 (so (3, c)
-        // is gone) and land on v5
+        // v2's content: the operation must re-plan against v4 (so the
+        // third row is gone) and land on v5
         val log = Paths.get(t.root, "_log")
         Files.copy(log.resolve("v00000002.manifest"),
           log.resolve("v00000004.manifest"))
         assert(op(t) == 5)
         assert(t.versions == (0 to 5))
-        assert(rows(t, Some(4)) == Set((1L, "a"), (2L, "b")))
+        assert(rows(t, Some(4)) == seed.take(2).toSet)
         assert(rows(t, Some(5)) == expect)
       }
+    families.foreach { case (family, op, expect) =>
+      race(family, Seq((1L, "a"), (2L, "b"), (3L, "c")), op, expect)
     }
+    // the layout rewrites, on a seed whose value `a` holds two files (so
+    // compactWhere has something to pack)
+    val twoA = Seq((1L, "a"), (2L, "a"), (3L, "c"))
+    race("compact", twoA, _.compact(schema), Set((1L, "a"), (2L, "a")))
+    race("compactWhere", twoA,
+      _.compactWhere(schema, Map("v" -> Set("a"))).version,
+      Set((1L, "a"), (2L, "a")))
   }
 
   test("a reader polling entries() never sees a partial manifest") {
