@@ -3,7 +3,7 @@ package graft.operators
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -31,10 +31,13 @@ import graft.sources.TxLogTable
   *    projected to the view's columns (group keys + summed measures —
   *    parquet column pruning does the rest);
   *  - the delta aggregate is map-side partial, shuffling at most
-  *    |changed groups| rows;
-  *  - the write is [[TxLogTable.upsertPos]]: one small DV parquet masking
-  *    the changed groups' current rows plus the replacement rows — the
-  *    view's other billion groups are untouched manifest references;
+  *    |changed groups| rows, and comes to the driver in one bounded take
+  *    (a window touching more groups than the mask cap recomputes);
+  *  - the changed groups' current rows are read once, with their
+  *    positions, and folded on the driver; the write
+  *    ([[TxLogTable.foldKeyedAt]]) is one small DV parquet masking them
+  *    plus the replacement rows — the view's other billion groups are
+  *    untouched manifest references;
   *  - progress (`#mvsrc=<source version>`) rides the SAME manifest write,
   *    so a refresh is exactly-once by the commit protocol itself: a crash
   *    before the manifest leaves only unreferenced staged files (vacuum
@@ -70,7 +73,8 @@ import graft.sources.TxLogTable
   * commit, then the fold re-anchors on the compacted head — so
   * streaming-cadence views self-maintain; with
   * `spark.graft.mv.autoCompact=false` it refuses with the compact
-  * instruction instead. Layout rewrites are expressly NOT tampering — the
+  * instruction instead. A single window that touches more groups than
+  * the cap could never commit incrementally, so it recomputes. Layout rewrites are expressly NOT tampering — the
   * engine-maintained head check admits [[TxLogTable.RewriteOps]], so
   * `CALL system.compact/optimize/vacuum` on a view are routine.
   */
@@ -145,13 +149,12 @@ object MaterializedView {
                                 mvVersion: Int)
 
   /** Overlap the refresh's independent frame materializations
-    * (optimization guide §2.6): each lazy `localCheckpoint` / `take`
-    * probe below runs its own AQE stage-materialization train of
-    * sub-second jobs; the trains share no data across fold steps /
-    * dims, so running them back-to-back would leave the cluster idle
-    * during each train's tail and pay every per-action fixed cost
-    * serially. Order-preserving, lowest-index failure rethrown — see
-    * [[graft.util.Overlap]]. */
+    * (optimization guide §2.6): each bounded `take` below runs its own
+    * AQE stage-materialization train of sub-second jobs; the trains
+    * share no data across fold steps / dims, so running them
+    * back-to-back would leave the cluster idle during each train's tail
+    * and pay every per-action fixed cost serially. Order-preserving,
+    * lowest-index failure rethrown — see [[graft.util.Overlap]]. */
   private def inParallel[A](thunks: Seq[() => A]): Seq[A] =
     graft.util.Overlap.inParallel(thunks)
 
@@ -287,20 +290,20 @@ object MaterializedView {
     * fold stays exact. Each dim side is required unique on its join keys
     * (checked at create and at every full refresh; incremental refreshes
     * pin the dim versions, so the check cannot rot between them).
-    * Dim frames arrive from [[dimSnapHinted]], which attaches the
-    * broadcast hint only while the dim is provably broadcast-sized —
-    * small dims keep the guaranteed map-side star plan, a huge dim
-    * enriches through an ordinary shuffle join.
+    * Dim snapshots arrive from [[dimSnapOf]], which decides the
+    * broadcast only while the dim is provably broadcast-sized — small
+    * dims keep the guaranteed map-side star plan, a huge dim enriches
+    * through an ordinary shuffle join.
     */
   private def prepared(rows: DataFrame, d: MvDef,
-                       dimSnaps: Seq[DataFrame]): DataFrame = {
+                       dimSnaps: Seq[DimSnap]): DataFrame = {
     require(dimSnaps.length == d.dims.length,
       "dim snapshots must be supplied exactly one per view dimension")
     val joined = d.dims.zip(dimSnaps).foldLeft(rows) {
       case (acc, (dm, ds)) =>
-        val cond = dm.join.map { case (f, k) => acc(f) === ds(k) }
+        val cond = dm.join.map { case (f, k) => acc(f) === ds.df(k) }
           .reduce(_ && _)
-        acc.join(ds, cond, "inner")
+        acc.join(ds.build, cond, "inner")
     }
     // row-local derived columns (after the join so they may combine both
     // sides, before the filter so the filter may reference them); the
@@ -314,19 +317,26 @@ object MaterializedView {
     filtered(derived, d)
   }
 
-  /** A dim snapshot for enrichment joins, broadcast-hinted only while
-    * the dim's EXACT manifest row count is known (no live MOR
+  /** A pinned dim snapshot and whether enrichment joins broadcast it:
+    * only while the dim's EXACT manifest row count is known (no live MOR
     * tombstones) and under `spark.graft.mv.maxBroadcastDimRows`. Under
     * the cap this pins the classic star plan — the dim builds map-side,
     * the fact never shuffles for the join. Past it (or count unknown)
-    * the hint is simply absent and Catalyst/AQE plan the enrichment
-    * like any large join, shuffling on the FK — a billion-row dim is
-    * then merely a bigger join, never a forced driver-OOM broadcast.
-    * The decision costs one O(manifest) metadata read per pinned
-    * version; correctness is identical either way.
+    * there is no hint and Catalyst/AQE plan the enrichment like any
+    * large join, shuffling on the FK — a billion-row dim is then merely
+    * a bigger join, never a forced driver-OOM broadcast. The decision
+    * costs one O(manifest) metadata read per pinned version;
+    * correctness is identical either way. The hint goes on at the join
+    * ([[DimSnap.build]]), never on the frame: the same snapshot also
+    * feeds collects and aggregates (uniqueness probes, the key diff),
+    * where a hint no join consumes is dropped with a warning.
     */
-  private def dimSnapHinted(spark: SparkSession, dt: TxLogTable,
-                            projSchema: StructType, v: Int): DataFrame =
+  private final case class DimSnap(df: DataFrame, bcast: Boolean) {
+    def build: DataFrame = if (bcast) broadcast(df) else df
+  }
+
+  private def dimSnapOf(spark: SparkSession, dt: TxLogTable,
+                        projSchema: StructType, v: Int): DimSnap =
     // collect ONCE and pin the snapshot as a driver-local relation: a
     // refresh runs many actions, and each action's BroadcastExchange
     // would otherwise re-scan and re-collect these same rows to the
@@ -338,13 +348,10 @@ object MaterializedView {
     // per refresh.
     dt.localPinnedSnapshot(projSchema, v,
         TxLogTable.maxLocalDimRows(spark)) match {
-      case Some(local) => broadcast(local)
+      case Some(local) => DimSnap(local, bcast = true)
       case None =>
-        val snap = dt.snapshot(projSchema, Some(v))
-        if (dt.metaRowCount(Some(v))
-            .exists(_ <= TxLogTable.maxBroadcastDimRows(spark)))
-          broadcast(snap)
-        else snap
+        DimSnap(dt.snapshot(projSchema, Some(v)), dt.metaRowCount(Some(v))
+          .exists(_ <= TxLogTable.maxBroadcastDimRows(spark)))
     }
 
   /** Join-key types whose DRIVER equality (boxed `equals` on collected
@@ -367,21 +374,16 @@ object MaterializedView {
     }
 
   /** The rows of `df` when it is already a driver-local relation
-    * (the under-cap dim snapshot from [[dimSnapHinted]], possibly under
-    * its broadcast hint) AND every `keys` column has driver-safe
-    * equality — collect() on such a frame short-circuits to the
-    * in-memory rows with no Spark job. Returns the rows plus the key
-    * field indices; None routes the caller to the distributed path.
+    * (the under-cap dim snapshot from [[dimSnapOf]]) AND every `keys`
+    * column has driver-safe equality — collect() on such a frame
+    * short-circuits to the in-memory rows with no Spark job. Returns the
+    * rows plus the key field indices; None routes the caller to the
+    * distributed path.
     */
   private def localKeyedRows(df: DataFrame, keys: Seq[String])
-      : Option[(Seq[org.apache.spark.sql.Row], Seq[Int])] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
-      ResolvedHint}
-    val isLocal = df.queryExecution.analyzed match {
-      case _: LocalRelation => true
-      case ResolvedHint(_: LocalRelation, _) => true
-      case _ => false
-    }
+      : Option[(Seq[Row], Seq[Int])] = {
+    val isLocal = df.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
     val schema = df.schema
     if (isLocal && keys.forall(k => schema.fields.find(_.name == k)
           .exists(f => sqlEqualsSafe(f.dataType))))
@@ -419,8 +421,8 @@ object MaterializedView {
 
   /** Range-cluster a full view state by its group keys before a create /
     * full-refresh commit: every base file then covers a TIGHT, disjoint
-    * key range, so [[TxLogTable.upsertPos]]'s manifest prune narrows the
-    * mask join to the files the touched groups actually live in — the
+    * key range, so [[TxLogTable.foldKeyedAt]]'s manifest prune narrows
+    * the keyed read to the files the touched groups actually live in — the
     * refresh's READ side stays O(touched files), not O(view), at a
     * billion groups. A hash-partitioned aggregate output would spread
     * every file across the full key range and defeat that prune
@@ -440,6 +442,131 @@ object MaterializedView {
       count(lit(1)).as(CountCol)
     prepped.groupBy(d.groupCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The counting fold over driver rows: the same result, bit for bit, as
+    * folding the same frames through
+    * `union(state, delta).groupBy(keys).agg(sum, min, max, sum(count))`
+    * pairwise in step order (what the refresh ran as Spark plans while
+    * its deltas stayed distributed):
+    *  - groups are keyed by [[GroupKeys]], the aggregate's own equality
+    *    (NULL, floating-point and binary keys stay exact);
+    *  - a SUM ignores NULL inputs and is NULL only when both inputs are;
+    *    an exact sum outside [[SumType]] is NULL (an error under ANSI), as
+    *    Spark's decimal SUM;
+    *  - MIN/MAX ignore NULLs and keep the current value on a tie;
+    *  - a group whose count reaches 0 stays in the state — a later step
+    *    may re-create it — and leaves the output;
+    *  - a [[GroupFold.Drop]] removes every group whose tombstone-key
+    *    columns equal a tombstone row's (null-safe, compared in the
+    *    common type, as `<=>`).
+    * Rows in and out are external rows in the view's column order (or
+    * its group-column prefix for [[keyOf]]); the state is Catalyst values.
+    */
+  private final class GroupFold(d: MvDef, spark: SparkSession) {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters,
+      InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow,
+      UnsafeRow}
+    import org.apache.spark.sql.catalyst.util.TypeUtils
+    import org.apache.spark.sql.graft.GroupKeys
+
+    private val schema = d.mvSchema
+    private val g = d.groupCols.length
+    private val nSum = d.sums.length
+    private val nMin = d.mins.length
+    private val nMax = d.maxs.length
+    private val keySchema = StructType(schema.fields.take(g))
+    private val tz = spark.sessionState.conf.sessionLocalTimeZone
+    private val ansi = spark.sessionState.conf.ansiEnabled
+    private val toInternal =
+      CatalystTypeConverters.createToCatalystConverter(schema)
+    private val keyToInternal =
+      CatalystTypeConverters.createToCatalystConverter(keySchema)
+    private val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    private val keyToRow =
+      CatalystTypeConverters.createToScalaConverter(keySchema)
+    private val keyProj = GroupKeys.projection(
+      keySchema.fields.indices.map(i =>
+        (i, keySchema(i).dataType, keySchema(i).dataType)), tz)
+    private lazy val ords = schema.fields.map(f =>
+      TypeUtils.getInterpretedOrdering(f.dataType))
+    private val maxSum = java.math.BigInteger.TEN.pow(SumType.precision)
+
+    /** The group key of a row whose first columns are the group columns. */
+    def keyOf(r: Row): UnsafeRow =
+      keyProj(keyToInternal(Row.fromSeq(r.toSeq.take(g)))
+        .asInstanceOf[InternalRow]).copy()
+
+    def keyRow(k: UnsafeRow): Row = keyToRow(k).asInstanceOf[Row]
+
+    /** `state` (current view rows) folded through `steps`, in order; the
+      * groups left with rows, as view rows. */
+    def fold(state: Seq[Row], steps: Seq[GroupFold.Step]): Seq[Row] = {
+      val acc = scala.collection.mutable.LinkedHashMap
+        .empty[UnsafeRow, Array[Any]]
+      def plus(rows: Seq[Row]): Unit = rows.foreach { r =>
+        val ir = toInternal(r).asInstanceOf[InternalRow]
+        val k = keyProj(ir).copy()
+        val m = Array.tabulate[Any](schema.length - g)(j =>
+          ir.get(g + j, schema(g + j).dataType))
+        acc(k) = acc.get(k).fold(m)(merged(_, m))
+      }
+      plus(state)
+      steps.foreach {
+        case GroupFold.Plus(rows) => plus(rows)
+        case GroupFold.Drop(rows, tSchema, keys) =>
+          val at = keys.map(d.groupCols.indexOf)
+          val common = keys.zip(at).map { case (k, i) =>
+            val (a, b) = (keySchema(i).dataType, tSchema(k).dataType)
+            org.apache.spark.sql.catalyst.analysis.TypeCoercion
+              .findWiderTypeForTwo(a, b).getOrElse(a)
+          }
+          val ofState = GroupKeys.projection(at.zip(common).map {
+            case (i, t) => (i, keySchema(i).dataType, t) }, tz)
+          val ofTomb = GroupKeys.projection(keys.zip(common).map {
+            case (k, t) => (tSchema.fieldIndex(k), tSchema(k).dataType, t)
+          }, tz)
+          val conv = CatalystTypeConverters.createToCatalystConverter(tSchema)
+          val gone = rows.iterator.map(r =>
+            ofTomb(conv(r).asInstanceOf[InternalRow]).copy()).toSet
+          acc.filterInPlace((k, _) => !gone(ofState(k)))
+      }
+      acc.iterator.collect {
+        case (k, m) if m.last.asInstanceOf[Long] > 0L =>
+          toRow(new GenericInternalRow(Array.tabulate[Any](g)(i =>
+            k.get(i, keySchema(i).dataType)) ++ m)).asInstanceOf[Row]
+      }.toSeq
+    }
+
+    // one group's measures after a pairwise re-aggregation
+    private def merged(a: Array[Any], b: Array[Any]): Array[Any] =
+      Array.tabulate(a.length) { j =>
+        val (x, y) = (a(j), b(j))
+        if (x == null) y
+        else if (y == null) x
+        else if (j < nSum) {
+          val s = x.asInstanceOf[Decimal].toJavaBigDecimal
+            .add(y.asInstanceOf[Decimal].toJavaBigDecimal)
+          if (s.unscaledValue.abs.compareTo(maxSum) < 0)
+            Decimal(s, SumType.precision, SumType.scale)
+          else if (ansi) throw new ArithmeticException(
+            s"MV sum ${schema(g + j).name} overflows ${SumType.sql}")
+          else null
+        }
+        else if (j < nSum + nMin) { if (ords(g + j).lt(y, x)) y else x }
+        else if (j < nSum + nMin + nMax) { if (ords(g + j).gt(y, x)) y else x }
+        else x.asInstanceOf[Long] + y.asInstanceOf[Long]
+      }
+  }
+
+  private object GroupFold {
+    sealed trait Step
+    /** Counting-delta rows in the view's column order. */
+    final case class Plus(rows: Seq[Row]) extends Step
+    /** A MOR drop: the tombstone key rows, their schema and key columns. */
+    final case class Drop(rows: Seq[Row], schema: StructType,
+                          keys: Seq[String]) extends Step
   }
 
   /** Create the view at `mvRoot` over `source`'s CURRENT snapshot and
@@ -634,9 +761,9 @@ object MaterializedView {
         MvDim(dt.root, joinOn, dp.toDDL) },
       mins, maxs, derivesTyped)
     val dimSnaps = dimSpecs.zip(dimProjs).zip(dimHeads).map {
-      case (((dt, _, _), dp), dh) => dimSnapHinted(spark, dt, dp, dh) }
+      case (((dt, _, _), dp), dh) => dimSnapOf(spark, dt, dp, dh) }
     d.dims.zip(dimSnaps).foreach { case (dm, ds) =>
-      checkDimUnique(ds, dm.join.map(_._2)) }
+      checkDimUnique(ds.df, dm.join.map(_._2)) }
     val mv = TxLogTable(spark, mvRoot)
     require(mv.latestVersion.isEmpty,
       s"MV destination already exists: $mvRoot")
@@ -876,6 +1003,10 @@ object MaterializedView {
     val minMaxTargeted = ((d.mins.nonEmpty || d.maxs.nonEmpty) &&
       range.exists(v => rowChanging(opAt(v)))) || dimTargeted
     val needFull = full ||
+      // the incremental fold groups on the driver by the keys' binary
+      // form, which a collated group column does not group by
+      !d.groupCols.forall(c => org.apache.spark.sql.graft.GroupKeys
+        .exact(d.mvSchema(c).dataType)) ||
       (dimMoved && !dimDeltaFoldable && !dimTargeted) ||
       !morFoldable ||
       range.exists { v =>
@@ -893,8 +1024,8 @@ object MaterializedView {
       val dimSnapsFull = inParallel(
         dimTs.zip(d.dims).zip(dimHeads).map {
           case ((dt, dm), dh) => () => {
-            val ds = dimSnapHinted(spark, dt, dm.projSchema, dh)
-            checkDimUnique(ds, dm.join.map(_._2))
+            val ds = dimSnapOf(spark, dt, dm.projSchema, dh)
+            checkDimUnique(ds.df, dm.join.map(_._2))
             ds
           }
         })
@@ -912,6 +1043,20 @@ object MaterializedView {
     }
     if (needFull) return fullRecompute()
     // ---- incremental fold ------------------------------------------
+    // Every change a committable refresh makes is changed-groups-sized:
+    // the commit masks at most one current row per changed group and
+    // refuses more than `cap` masked rows. So each frame below — a fold
+    // step's delta, a drop's tombstone keys, a dim correction — comes to
+    // the driver in ONE take bounded by cap + 1, and the bookkeeping
+    // (affected keys, the empty-window gate, the fold itself) is driver
+    // code. A frame past the bound means the window touches more groups
+    // than an incremental commit could mask: recompute instead (an
+    // overwrite commit needs no mask).
+    val cap = TxLogTable.maxDvMaskRows(spark)
+    def bounded(df: DataFrame): Option[Seq[Row]] = {
+      val rows = df.take(math.min(cap + 1, Int.MaxValue.toLong).toInt)
+      if (rows.length > cap) None else Some(rows.toSeq)
+    }
     // segments: maximal non-MOR runs fold as one order-free counting
     // delta; each MOR version is a group-drop step at its exact position
     // (a re-insert after the drop survives — the sequence-aware contract)
@@ -941,18 +1086,18 @@ object MaterializedView {
     // pinned per-dim, old and new in one thunk (a dim's two pins share
     // the memo's table locks); ACROSS dims the pins are independent
     // collects, overlapped on the fold pool (guide §2.6)
-    val dimSnapPairs: Seq[(DataFrame, DataFrame)] =
+    val dimSnapPairs: Seq[(DimSnap, DimSnap)] =
       inParallel(d.dims.indices.map(i => () => {
-        val old = dimSnapHinted(spark, dimTs(i), d.dims(i).projSchema,
+        val old = dimSnapOf(spark, dimTs(i), d.dims(i).projSchema,
           lastDims(i))
         val nw =
           if (dimHeads(i) == lastDims(i)) old
-          else dimSnapHinted(spark, dimTs(i), d.dims(i).projSchema,
+          else dimSnapOf(spark, dimTs(i), d.dims(i).projSchema,
             dimHeads(i))
         (old, nw)
       }))
-    val dimSnapsOld: Seq[DataFrame] = dimSnapPairs.map(_._1)
-    val dimSnapsNew: Seq[DataFrame] = dimSnapPairs.map(_._2)
+    val dimSnapsOld: Seq[DimSnap] = dimSnapPairs.map(_._1)
+    val dimSnapsNew: Seq[DimSnap] = dimSnapPairs.map(_._2)
     def deltaOf(f: Fold): DataFrame = {
       val feed = prepared(src.changesWithDeletes(feedProj, f.fromV,
         f.toV, skipRewrites = true), d, dimSnapsOld)
@@ -967,23 +1112,18 @@ object MaterializedView {
         d.mins.map { case (out, s0) => min(col(s0)).as(out) } ++
         d.maxs.map { case (out, s0) => max(col(s0)).as(out) } :+
         sum(when(del, lit(-1L)).otherwise(lit(1L))).as(CountCol)
+      // the view's column order: the driver fold reads it positionally
       feed.groupBy(groupKeyCols: _*).agg(aggs.head, aggs.tail: _*)
     }
-    // checkpoint each delta: it is changed-groups-sized, reused for the
-    // affected-key set AND the state fold, and keeps the final upsert
-    // plan shallow however many versions the range spans. LAZY: the
-    // checkpoint call still runs the plan's AQE stage trains eagerly,
-    // but the final stage rides the first consuming action (the kAll
-    // count below) instead of paying a dedicated job per frame; Spark's
-    // local-checkpoint machinery back-fills any partition a partial
-    // first action skipped. Step frames materialize on the parallel
-    // wave below, overlapped with the dim corrections.
-    def stepFrameOf(step: Step): (Step, DataFrame) = step match {
-      case f: Fold => (f, deltaOf(f).localCheckpoint(false))
-      case dr: Drop => (dr, src.tombstoneFrameOf(dr.v).getOrElse(
-        throw new IllegalStateException(
-          s"delete-mor v${dr.v} committed no tombstone"))
-        .localCheckpoint(false))
+    // a fold step's driver form: the delta rows (view-shaped), or a
+    // drop's tombstone key rows with their schema
+    def stepRowsOf(step: Step): Option[GroupFold.Step] = step match {
+      case f: Fold => bounded(deltaOf(f)).map(GroupFold.Plus(_))
+      case dr: Drop =>
+        val tf = src.tombstoneFrameOf(dr.v).getOrElse(
+          throw new IllegalStateException(
+            s"delete-mor v${dr.v} committed no tombstone"))
+        bounded(tf).map(GroupFold.Drop(_, tf.schema, src.morKeysOf(dr.v)))
     }
     // ---- dim delta: changed dim keys → affected groups ---------------
     // The dim window's exact change events name the changed join keys K
@@ -1002,13 +1142,15 @@ object MaterializedView {
     // already at their new heads and dims AFTER it still at their old
     // pins, so the summed corrections take view(fact@head, all-old) to
     // view(fact@head, all-new) bit-exactly, each correction touching
-    // only its own affected groups. dimDeltas: the signed counting
-    // deltas (sums-only views); dimKeyFrames: the affected-GROUP-key
-    // frames (MIN/MAX views — those groups are re-aggregated by the
-    // targeted recompute below, so only all-old/all-new keys matter).
+    // only its own affected groups. DimDelta: the signed counting delta
+    // rows (sums-only views); DimTargetKeys: the affected GROUP keys
+    // (MIN/MAX views — those groups are re-aggregated by the targeted
+    // recompute below, so only all-old/all-new keys matter). Both come
+    // to the driver bounded like the fold steps; past the bound the dim
+    // votes for the recompute.
     sealed trait DimOut
-    case class DimDelta(df: DataFrame) extends DimOut
-    case class DimTargetKeys(df: DataFrame) extends DimOut
+    case class DimDelta(rows: Seq[Row]) extends DimOut
+    case class DimTargetKeys(rows: Seq[Row]) extends DimOut
     case object DimNeedsFull extends DimOut
     def dimOutcome(i: Int): DimOut = {
       val dt = dimTs(i)
@@ -1024,7 +1166,7 @@ object MaterializedView {
         .na.drop("any", dimKeys).distinct()
       // DRIVER-SIDE K (zero Spark jobs): when BOTH of this dim's pins —
       // the consumed version and the head — are already driver-local
-      // relations (the common small-dim window; dimSnapHinted collected
+      // relations (the common small-dim window; dimSnapOf collected
       // them once via the process-wide memo) AND every projected column
       // has driver-safe equality, the changed-key set is the SNAPSHOT
       // DIFF of the two local row sets: keys whose full projected row
@@ -1040,15 +1182,15 @@ object MaterializedView {
       // identical-row re-upserts (and the unexposed groupsChanged
       // stat) shrink. The all-atomic gate makes boxed equality exact;
       // a richer-typed dim keeps the probe below.
-      val localDiffK: Option[IndexedSeq[org.apache.spark.sql.Row]] =
+      val localDiffK: Option[IndexedSeq[Row]] =
         if (!dProj.fields.forall(f => sqlEqualsSafe(f.dataType))) None
         else for {
-          (oldRows, oIdx) <- localKeyedRows(dimSnapsOld(i), dimKeys)
-          (newRows, nIdx) <- localKeyedRows(dimSnapsNew(i), dimKeys)
+          (oldRows, oIdx) <- localKeyedRows(dimSnapsOld(i).df, dimKeys)
+          (newRows, nIdx) <- localKeyedRows(dimSnapsNew(i).df, dimKeys)
         } yield {
           // per non-null key: multiset of full projected rows (the
           // feed's na.drop excludes null keys the same way)
-          def byKey(rows: Seq[org.apache.spark.sql.Row], idx: Seq[Int])
+          def byKey(rows: Seq[Row], idx: Seq[Int])
               : Map[IndexedSeq[Any], Map[Seq[Any], Int]] =
             rows.iterator.filter(r => !idx.exists(r.isNullAt))
               .map(r => idx.map(r.get).toIndexedSeq -> r.toSeq).toSeq
@@ -1059,7 +1201,7 @@ object MaterializedView {
           val nw = byKey(newRows, nIdx)
           (o.keySet ++ nw.keySet).iterator
             .filter(k => o.get(k) != nw.get(k))
-            .map(k => org.apache.spark.sql.Row.fromSeq(k))
+            .map(k => Row.fromSeq(k))
             .toIndexedSeq
         }
       // without the local diff, small changed-key sets collect in ONE
@@ -1076,7 +1218,7 @@ object MaterializedView {
         case Some(ks) =>
           (spark.createDataFrame(
             java.util.Arrays.asList(ks: _*), kPlan.schema),
-            ks.length.toLong, Some(ks: Seq[org.apache.spark.sql.Row]))
+            ks.length.toLong, Some(ks: Seq[Row]))
         case None =>
           val probe = kPlan.take(MaxDimDeltaPushdownPoints.toInt + 1)
           if (probe.length <= MaxDimDeltaPushdownPoints)
@@ -1105,11 +1247,11 @@ object MaterializedView {
       if (!kBcast && !dt.metaRowCount(Some(dimHeads(i)))
             .exists(kRows * 2 <= _))
         return DimNeedsFull
-      def kHint(df: DataFrame): DataFrame =
-        if (kBcast) broadcast(df) else df
-      def keysIn(side: DataFrame): DataFrame = side.join(kHint(kDim),
-        dimKeys.map(k => side(k) === kDim(k)).reduce(_ && _),
-        "left_semi")
+      // the changed-key set builds its joins broadcast under the delta
+      // cap, and through an ordinary shuffle join past it
+      val kBuild = if (kBcast) broadcast(kDim) else kDim
+      def keysIn(side: DataFrame): DataFrame = side.join(kBuild,
+        dimKeys.map(k => side(k) === kDim(k)).reduce(_ && _), "left_semi")
       // new duplicates can only arrive via changed keys — the rest of
       // the dim was checked unique at its last pin. When BOTH the new
       // dim snapshot and the changed-key set are already driver-local
@@ -1117,7 +1259,7 @@ object MaterializedView {
       // uniqueness probe run as plain driver code — zero Spark actions
       // — with SQL-equal key semantics guaranteed by the atomic-type
       // gate; any other shape keeps the distributed probe.
-      val newSide = localKeyedRows(dimSnapsNew(i), dimKeys) match {
+      val newSide = localKeyedRows(dimSnapsNew(i).df, dimKeys) match {
         case Some((dimRows, dIdx)) if kIsLocal =>
           val kset = kLocalRows.get.iterator
             .map(r => dimKeys.indices.map(r.get(_)).toIndexedSeq).toSet
@@ -1130,9 +1272,9 @@ object MaterializedView {
               s"the dimension (e.g. ${dup.map(_._2.head).getOrElse("")})" +
               " — a fact row must enrich to at most one dim row")
           spark.createDataFrame(
-            java.util.Arrays.asList(hit: _*), dimSnapsNew(i).schema)
+            java.util.Arrays.asList(hit: _*), dimSnapsNew(i).df.schema)
         case _ =>
-          val ns = keysIn(dimSnapsNew(i)).localCheckpoint(false)
+          val ns = keysIn(dimSnapsNew(i).df).localCheckpoint(false)
           checkDimUnique(ns, dimKeys)
           ns
       }
@@ -1151,7 +1293,7 @@ object MaterializedView {
           src.snapshotWhere(extProj(src, proj, Seq(head)),
             col(fk).isInCollection(pts), Some(head))
         } else src.snapshot(extProj(src, proj, Seq(head)), Some(head))
-      val affFacts = factBase.join(kHint(kDim),
+      val affFacts = factBase.join(kBuild,
         dm.join.map { case (f, k) => factBase(f) === kDim(k) }
           .reduce(_ && _), "left_semi")
       if (dimTargeted) {
@@ -1160,30 +1302,30 @@ object MaterializedView {
         // (old groups that shrink or empty, new groups that grow,
         // filter transitions included) name every group this dim's
         // churn can touch. The targeted recompute re-aggregates exactly
-        // those from the head snapshots; emptied groups drop via
-        // `zeros`.
+        // those from the head snapshots; emptied groups leave the view.
         val oldKeys = prepared(affFacts, d, dimSnapsOld)
           .select(groupKeyCols: _*)
         val newKeys = prepared(affFacts, d, dimSnapsNew)
           .select(groupKeyCols: _*)
-        DimTargetKeys(oldKeys.unionByName(newKeys).distinct()
-          .localCheckpoint(false))
+        bounded(oldKeys.unionByName(newKeys).distinct())
+          .fold[DimOut](DimNeedsFull)(DimTargetKeys(_))
       } else {
         val sign = "__graft_dim_sign"
-        val signedDim = keysIn(dimSnapsOld(i)).withColumn(sign, lit(-1L))
+        val signedDim = keysIn(dimSnapsOld(i).df).withColumn(sign, lit(-1L))
           .unionByName(newSide.withColumn(sign, lit(1L)))
-        var joined = affFacts.join(kHint(signedDim),
+        var joined = affFacts.join(
+          if (kBcast) broadcast(signedDim) else signedDim,
           dm.join.map { case (f, k) => affFacts(f) === signedDim(k) }
             .reduce(_ && _), "inner")
         // the other dims enrich at the telescoping versions: before i →
         // new head, after i → old pin (each inner, both signs see the
         // same other-dim state, so non-i enrichment cancels exactly);
-        // the snapshots carry their own size-aware broadcast hint
+        // each snapshot carries its own size-aware broadcast choice
         d.dims.indices.filterNot(_ == i).foreach { j =>
           val ds = if (j < i) dimSnapsNew(j) else dimSnapsOld(j)
           val cond = d.dims(j).join.map { case (f, k) =>
-            joined(f) === ds(k) }.reduce(_ && _)
-          joined = joined.join(ds, cond, "inner")
+            joined(f) === ds.df(k) }.reduce(_ && _)
+          joined = joined.join(ds.build, cond, "inner")
         }
         val derived = d.derives.foldLeft(joined) { case (acc, (n, t, e)) =>
           acc.withColumn(n, expr(e).cast(
@@ -1193,54 +1335,59 @@ object MaterializedView {
         val rows = filtered(derived, d)
         val sgn = col(sign)
         // mins/maxs empty here (dimDeltaFoldable gate), so the
-        // delta's shape is exactly sums ++ mv_count
+        // delta's shape is exactly the view's: sums ++ mv_count
         val aggs = d.sums.map { case (out, s0) =>
             val v = col(s0).cast(SumType)
             sum(when(sgn < 0, -v).otherwise(v)).as(out)
           } :+ sum(sgn).as(CountCol)
-        DimDelta(rows.groupBy(groupKeyCols: _*)
-          .agg(aggs.head, aggs.tail: _*).localCheckpoint(false))
+        bounded(rows.groupBy(groupKeyCols: _*)
+            .agg(aggs.head, aggs.tail: _*))
+          .fold[DimOut](DimNeedsFull)(DimDelta(_))
       }
     }
-    // ONE parallel wave materializes every independent frame of this
-    // refresh — the fold-step checkpoints and each moved dim's probe +
-    // correction — so their AQE stage trains overlap instead of running
-    // back-to-back (guide §2.6). Order is preserved (fold steps first,
-    // dims in definition order) and the lowest-index failure propagates,
-    // matching the old sequential walk; a dim voting "needs full" only
-    // wastes its siblings' fold work on the rare recompute path.
-    val wave: Seq[Either[(Step, DataFrame), DimOut]] = inParallel(
+    // ONE parallel wave collects every independent frame of this refresh
+    // — the fold steps and each moved dim's probe + correction — so
+    // their AQE stage trains overlap instead of running back-to-back
+    // (guide §2.6). Order is preserved (fold steps first, dims in
+    // definition order) and the lowest-index failure propagates; a frame
+    // voting for the recompute only wastes its siblings' work on that
+    // rare path.
+    val wave: Seq[Either[Option[GroupFold.Step], DimOut]] = inParallel(
       steps.result().map(st => () =>
-        Left(stepFrameOf(st)): Either[(Step, DataFrame), DimOut]) ++
+        Left(stepRowsOf(st)): Either[Option[GroupFold.Step], DimOut]) ++
       movedIdx.map(i => () =>
-        Right(dimOutcome(i)): Either[(Step, DataFrame), DimOut]))
-    val stepFrames: Seq[(Step, DataFrame)] = wave.collect {
+        Right(dimOutcome(i)): Either[Option[GroupFold.Step], DimOut]))
+    val stepRows: Seq[Option[GroupFold.Step]] = wave.collect {
       case Left(x) => x }
     val dimOuts: Seq[DimOut] = wave.collect { case Right(x) => x }
-    if (dimOuts.contains(DimNeedsFull)) return fullRecompute()
-    val dimDeltas: Seq[DataFrame] = dimOuts.collect {
-      case DimDelta(df) => df }
-    val dimTargetKeys: Seq[DataFrame] = dimOuts.collect {
-      case DimTargetKeys(df) => df }
-    val mvSnap = mv.snapshot(d.mvSchema, Some(mvHead))
-    def nullSafe(l: DataFrame, r: DataFrame, cols: Seq[String]) =
-      cols.map(c => l(c) <=> r(c)).reduce(_ && _)
-    // affected groups: every key a fold touched, plus every CURRENT view
-    // group a MOR drop matches (groups a drop hits mid-range after being
-    // created mid-range are already in an earlier fold's keys)
-    val keyFrames = stepFrames.map {
-      case (_: Fold, df) => df.select(groupKeyCols: _*)
-      case (dr: Drop, tf) =>
-        mvSnap.join(broadcast(tf),
-          nullSafe(mvSnap, tf, src.morKeysOf(dr.v)), "left_semi")
-          .select(groupKeyCols: _*)
-    } ++ dimDeltas.map(_.select(groupKeyCols: _*)) ++ dimTargetKeys
-    val kAll = keyFrames.reduce(_.unionByName(_)).distinct()
-      .localCheckpoint(false)
-    // one count serves both the empty-window gate here and the
-    // groupsChanged stat below (was an isEmpty probe + a count — two
-    // jobs over the same checkpointed frame)
-    val groupsChanged = kAll.count()
+    if (stepRows.contains(None) || dimOuts.contains(DimNeedsFull))
+      return fullRecompute()
+    val foldSteps = stepRows.flatten
+    val dimDeltas: Seq[Seq[Row]] = dimOuts.collect { case DimDelta(r) => r }
+    val dimTargetKeys: Seq[Seq[Row]] = dimOuts.collect {
+      case DimTargetKeys(r) => r }
+    val groups = new GroupFold(d, spark)
+    // groups a MOR drop empties are CURRENT view groups matching its
+    // tombstone keys: one keyed read of the view at the pin names them
+    // (a group a drop hits after a fold step created it mid-window is
+    // already among that step's keys)
+    val dropped: Option[Seq[Row]] = steps.result()
+      .collect { case dr: Drop => dr }
+      .map { dr =>
+        val mvSnap = mv.snapshot(d.mvSchema, Some(mvHead))
+        val tf = src.tombstoneFrameOf(dr.v).get
+        mvSnap.join(tf, src.morKeysOf(dr.v).map(k => mvSnap(k) <=> tf(k))
+          .reduce(_ && _), "left_semi").select(groupKeyCols: _*)
+      }.reduceOption(_.unionByName(_)).fold(Option(Seq.empty[Row]))(
+        u => bounded(u.distinct()))
+    if (dropped.isEmpty) return fullRecompute()
+    // affected groups: every key a fold step or dim correction touched,
+    // plus every current group a drop empties
+    val kAll = (foldSteps.collect { case GroupFold.Plus(rs) => rs } ++
+        dimDeltas ++ dimTargetKeys :+ dropped.get)
+      .flatten.map(groups.keyOf).distinct
+    if (kAll.length > cap) return fullRecompute()
+    val groupsChanged = kAll.length.toLong
     if (groupsChanged == 0) {
       // the walked window touched nothing the view sees (events outside
       // the filter, dim churn on keys no fact row joins): the fold just
@@ -1249,12 +1396,13 @@ object MaterializedView {
       // later [[branchMv]] sees corresponding states), zero rows touched,
       // and the next refresh never re-walks this window
       val empty = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), d.mvSchema)
-      // HEAD-CONDITIONAL like upsertPos below: a racer committing between
-      // this refresh's mvHead pin and here would make this empty commit's
-      // #mvsrc/#mvdim REGRESS the consumed pointer (lastSourceVersionAt
-      // reads the newest), and the next refresh would re-fold the racer's
-      // already-absorbed window — refuse and re-anchor instead
+        new java.util.ArrayList[Row](), d.mvSchema)
+      // HEAD-CONDITIONAL like the fold commit below: a racer committing
+      // between this refresh's mvHead pin and here would make this empty
+      // commit's #mvsrc/#mvdim REGRESS the consumed pointer
+      // (lastSourceVersionAt reads the newest), and the next refresh
+      // would re-fold the racer's already-absorbed window — refuse and
+      // re-anchor instead
       val mvv = mv.commit(empty, overwrite = false, op = "mv-refresh",
         extraMeta = Seq(s"#mvsrc=$head") ++
           d.dims.indices.map(i => s"#${dimMetaKey(i)}=" +
@@ -1266,56 +1414,6 @@ object MaterializedView {
           dt.registerCursor(d.dimCursorName(i), dh) }
       return RefreshStats("incremental", last, head, 0, mvv)
     }
-    val measureCols =
-      (d.sums.map(_._1) ++ d.mins.map(_._1) ++ d.maxs.map(_._1)) :+
-        CountCol
-    val shape = (d.groupCols ++ measureCols).map(col)
-    val mergeOf: Map[String, org.apache.spark.sql.Column =>
-        org.apache.spark.sql.Column] =
-      (d.sums.map(_._1 -> (sum(_: org.apache.spark.sql.Column))) ++
-        d.mins.map(_._1 -> (min(_: org.apache.spark.sql.Column))) ++
-        d.maxs.map(_._1 -> (max(_: org.apache.spark.sql.Column))) :+
-        (CountCol -> (sum(_: org.apache.spark.sql.Column)))).toMap
-    def plus(state: DataFrame, delta: DataFrame): DataFrame = {
-      val u = state.select(shape: _*).unionByName(delta.select(shape: _*))
-      val aggs = measureCols.map(m => mergeOf(m)(col(m)).as(m))
-      u.groupBy(groupKeyCols: _*).agg(aggs.head, aggs.tail: _*)
-    }
-    val finalState = if (minMaxTargeted) {
-      // GROUP-TARGETED PARTIAL RECOMPUTE: the non-distributive measures
-      // cannot fold through a deleting window, so the affected groups —
-      // exactly the key set the fold machinery just derived — are
-      // re-aggregated from the snapshot at head. Sequence semantics
-      // (MOR drops, mid-window re-inserts) are materialized by the
-      // snapshot itself, the write stays O(affected groups), and the
-      // view's other groups remain untouched manifest references.
-      // When dims moved (dimTargeted), enrichment comes from the dims
-      // at THEIR heads — the recompute semantics the consumed #mvdim
-      // pins record; unmoved snapshots are that same state already.
-      val prepped = prepared(src.snapshot(extProj(src, proj, Seq(head)),
-        Some(head)), d, if (dimTargeted) dimSnapsNew else dimSnapsOld)
-      aggregate(prepped.join(kAll,
-        nullSafe(prepped, kAll, d.groupCols), "left_semi"), d)
-    } else {
-      val state0 = mvSnap.join(kAll, nullSafe(mvSnap, kAll, d.groupCols),
-        "left_semi")
-      val foldedState = stepFrames.foldLeft(state0) {
-        case (st, (_: Fold, delta)) => plus(st, delta)
-        case (st, (dr: Drop, tf)) =>
-          st.join(broadcast(tf), nullSafe(st, tf, src.morKeysOf(dr.v)),
-            "left_anti")
-      }
-      // the dim corrections apply to the END state (fact steps first
-      // brought it to view(fact@head, all-old)) in dim order — the SCD
-      // cadence: the refresh observes every dim at its head, exactly as
-      // a recompute would
-      dimDeltas.foldLeft(foldedState)((st, dd) => plus(st, dd))
-    }
-    val newRows = finalState.filter(col(CountCol) > 0)
-      .select(d.mvSchema.fieldNames.toIndexedSeq.map(col): _*)
-      .localCheckpoint(false)
-    val zeros = kAll.join(newRows, nullSafe(kAll, newRows, d.groupCols),
-      "left_anti")
     // DV maintenance happens ON the refresh path: when this refresh's
     // mask (≤ one current row per affected group, plus what already
     // accrued) would cross the cap, fold the view's masks NOW — one
@@ -1323,27 +1421,54 @@ object MaterializedView {
     // re-anchor the whole fold on the compacted head via the retry
     // loop. A streaming-cadence view therefore never pages an operator;
     // conf-off (spark.graft.mv.autoCompact=false) keeps the loud
-    // refusal from upsertPos itself.
+    // refusal of the commit itself.
     if (TxLogTable.mvAutoCompact(spark) &&
-        mv.dvsOf(mvHead).map(_.n).sum + groupsChanged >
-          TxLogTable.maxDvMaskRows(spark)) {
+        mv.dvsOf(mvHead).map(_.n).sum + groupsChanged > cap) {
       mv.compact(d.mvSchema)
       throw new TxLogTable.ConcurrentHeadMoved(
         s"auto-compacted MV $mvRoot to fold its delete masks — " +
           "re-anchoring the refresh on the compacted head")
     }
+    val kRows = kAll.map(groups.keyRow)
+    // GROUP-TARGETED PARTIAL RECOMPUTE for MIN/MAX views: the
+    // non-distributive measures cannot fold through a deleting window,
+    // so the affected groups — exactly the key set derived above — are
+    // re-aggregated from the snapshot at head. Sequence semantics (MOR
+    // drops, mid-window re-inserts) are materialized by the snapshot
+    // itself, the write stays O(affected groups), and the view's other
+    // groups remain untouched manifest references. When dims moved
+    // (dimTargeted), enrichment comes from the dims at THEIR heads — the
+    // recompute semantics the consumed #mvdim pins record; unmoved
+    // snapshots are that same state already. At most one row per key.
+    val targeted: Option[Seq[Row]] = if (!minMaxTargeted) None else {
+      val prepped = prepared(src.snapshot(extProj(src, proj, Seq(head)),
+        Some(head)), d, if (dimTargeted) dimSnapsNew else dimSnapsOld)
+      val kf = spark.createDataFrame(java.util.Arrays.asList(kRows: _*),
+        StructType(d.mvSchema.fields.take(d.groupCols.length)))
+      Some(aggregate(prepped.join(kf, d.groupCols.map(c =>
+        prepped(c) <=> kf(c)).reduce(_ && _), "left_semi"), d)
+        .collect().toSeq)
+    }
     betweenFoldAndCommitHook()
     val dimConsumed = dimDeltas.nonEmpty || dimTargetKeys.nonEmpty
-    val stats = mv.upsertPos(d.mvSchema, newRows, d.groupCols,
-      dropKeys = Some(zeros), op = "mv-refresh",
-      extraMeta = Seq(s"#mvsrc=$head") ++
-        d.dims.indices.map(i => s"#${dimMetaKey(i)}=" +
-          (if (dimConsumed) dimHeads(i) else lastDims(i))),
-      expectHead = Some(mvHead))
+    // ONE keyed read of the view at the pin brings the affected groups'
+    // current rows and their positions; the fold runs on the driver —
+    // fact steps first (bringing the state to view(fact@head, all-old)),
+    // then the dim corrections in dim order, the SCD cadence: the
+    // refresh observes every dim at its head, exactly as a recompute
+    // would — and the commit masks those rows and adds the folded groups
+    // that still have rows, in one manifest with the progress record
+    val stats = mv.foldKeyedAt(d.mvSchema, d.groupCols, kRows, mvHead,
+        "mv-refresh", Seq(s"#mvsrc=$head") ++
+          d.dims.indices.map(i => s"#${dimMetaKey(i)}=" +
+            (if (dimConsumed) dimHeads(i) else lastDims(i)))) { current =>
+      targeted.getOrElse(groups.fold(current,
+        foldSteps ++ dimDeltas.map(GroupFold.Plus(_))))
+    }
     // the vacuum floor advances ONLY when the refresh actually committed
     // a new #mvsrc: an all-cancelling window (every affected group
-    // created and fully deleted inside it) no-ops the upsert, and the
-    // cursor must then keep guarding the still-unconsumed feed window
+    // created and fully deleted inside it) masks and adds nothing, and
+    // the cursor must then keep guarding the still-unconsumed feed window
     if (stats.version > mvHead) {
       src.registerCursor(d.cursorName, head)
       if (dimConsumed)

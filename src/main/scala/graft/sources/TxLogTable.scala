@@ -290,6 +290,12 @@ object TxLogTable {
     */
   val MaxDvMaskRows: Long = 4L << 20
 
+  /** Driver-held key sets up to this size filter a keyed read
+    * ([[TxLogTable.foldKeyedAt]]) as one IN over key structs — no
+    * broadcast-build job; larger sets ride a broadcast semi-join rather
+    * than a plan-sized literal list. */
+  val MaxLocalKeyPoints: Int = 1024
+
   def maxDvMaskRows(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.sql.maxDvMaskRows")
       .map(_.toLong).getOrElse(MaxDvMaskRows)
@@ -923,6 +929,13 @@ object TxLogTable {
     * (`batch-<uuid>/part-*.parquet`, no `;`).
     */
   final case class DvEntry(dvRel: String, v: Int, n: Long, file: String)
+
+  /** The columns of a DV parquet: the masked row's data file (relative to
+    * data/) and its row position. Readers pass it so a masked read never
+    * pays a schema-inference job. */
+  val DvSchema: StructType = StructType(Seq(
+    StructField("file", org.apache.spark.sql.types.StringType),
+    StructField("pos", org.apache.spark.sql.types.LongType)))
 
   /** What a copy-on-write [[TxLogTable.merge]] did: the committed version,
     * how many files were rewritten (their key stats overlapped the batch's
@@ -2028,7 +2041,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
             decodedFileCol.as(fcol) :+
             col("_metadata.row_index").as(pcol): _*)
       }
-    lazy val dvMask = spark.read.parquet(dvs.map(_.dvRel).distinct
+    lazy val dvMask = spark.read.schema(TxLogTable.DvSchema)
+      .parquet(dvs.map(_.dvRel).distinct
         .map(r => dataDir.resolve(r).toString): _*)
       .select(concat(lit(dataDir.toString + "/"), col("file")).as(fcol),
         col("pos").as(pcol))
@@ -2901,7 +2915,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
             decodedFileCol.as(fcol) :+
             col("_metadata.row_index").as(pcol): _*)
         val dvRelToV = newDvs.map(d => d.dvRel -> d.v).distinct
-        val mask = spark.read.parquet(dvRelToV.map(_._1).distinct
+        val mask = spark.read.schema(TxLogTable.DvSchema)
+          .parquet(dvRelToV.map(_._1).distinct
             .map(r => dataDir.resolve(r).toString): _*)
           .select(
             concat(lit(dataDir.toString + "/"), col("file")).as(fcol),
@@ -2954,9 +2969,12 @@ final case class TxLogTable(spark: SparkSession, root: String) {
   /** insert/delete events of ONE copy-on-write version by CONTENT DIFF
     * of its rewritten file set: LOGICAL rows of the files the version
     * dropped, minus logical rows of the files it added, are the deletes
-    * (full rows); the reverse difference is the inserts. `exceptAll`
-    * gives multiset semantics (duplicate rows cancel pairwise) and
-    * null-safe equality, so no key declaration is needed — this works
+    * (full rows); the reverse difference is the inserts. Both come from
+    * ONE aggregate: each distinct row's count in the added files minus
+    * its count in the dropped ones, replicated as that many inserts
+    * (positive) or deletes (negative) — `exceptAll`'s multiset
+    * semantics in both directions with one shuffle instead of two.
+    * Grouping is null-safe, so no key declaration is needed — this works
     * on key-less tables where MOR tombstones cannot. Both sides read
     * through their version's tombstone MASK ([[readMaskedEntries]]),
     * which makes the diff logically EXACT: a row already MOR-deleted
@@ -2978,13 +2996,20 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       curE.filterNot(e => prevRels(e.rel)), Some(v), Some(map))
     val r = readMaskedEntries(schema,
       prevE.filterNot(e => curRels(e.rel)), Some(v - 1), Some(map))
-    val ins = a.exceptAll(r)
-      .withColumn("_commit_version", lit(v.toLong))
-      .withColumn("_change_type", lit("insert"))
-    val del = r.exceptAll(a)
-      .withColumn("_commit_version", lit(v.toLong))
-      .withColumn("_change_type", lit("delete"))
-    ins.unionByName(del)
+    import org.apache.spark.sql.functions.{abs, explode, sequence, sum,
+      when}
+    val net = Iterator.from(0).map(i => s"_graft_net$i")
+      .find(c => !schema.fieldNames.contains(c)).get
+    val cols = schema.fieldNames.toSeq.map(n =>
+      col("`" + n.replace("`", "``") + "`"))
+    a.withColumn(net, lit(1L)).unionByName(r.withColumn(net, lit(-1L)))
+      .groupBy(cols: _*).agg(sum(col(net)).as(net))
+      .filter(col(net) =!= 0L)
+      .select(cols :+ lit(v.toLong).as("_commit_version") :+
+        when(col(net) > 0, lit("insert")).otherwise(lit("delete"))
+          .as("_change_type") :+
+        explode(sequence(lit(1L), abs(col(net)))).as(net): _*)
+      .drop(net)
   }
 
   /** THE layout-maintenance rewrite: every [[TxLogTable.LayoutRewrite]]
@@ -4909,86 +4934,14 @@ final case class TxLogTable(spark: SparkSession, root: String) {
                       pred: org.apache.spark.sql.Column,
                       set: Option[Seq[(String, org.apache.spark.sql.Column)]],
                       opName: String): TxLogTable.MergeStats = {
-    import org.apache.spark.sql.functions.{coalesce, substring}
-    val cmap = inheritedColMap
-    val ranges = physKeyed(cmap, PredicateRanges.extract(pred))
-    val nn = physNullness(cmap, PredicateRanges.extractNullness(pred))
-    val points = physKeyed(cmap, PredicateRanges.extractPoints(pred))
-    val strs = physKeyed(cmap, PredicateRanges.extractStr(pred))
-    val prefixLen = dataDir.toString.length + 1 // abs path → rel
-    optimisticCommit(opName) { (base, next) =>
-      val layout = base.map(partitionColsOf).getOrElse(Nil)
-      val lines = base.map(dataLines).getOrElse(Nil)
-      // manifest pruning bounds the scan exactly as for the COW path
-      val affEntries = lines.map(TxLogTable.decodeEntry)
-      val affected = affEntries.filter(e =>
-        mayMatchPred(e, ranges, nn, points, strs,
-          timeSegBounds(ranges, base)))
-      val noop =
-        Unchanged(TxLogTable.MergeStats(base.getOrElse(-1), 0, lines.size))
-      if (affected.isEmpty) noop // provably nothing matches
-      else {
-        // matched rows' positions, read through EVERY live mask (prior
-        // DVs and tombstones) so masks stay disjoint
-        val (rows, fcol, pcol) = readMaskedPos(schema,
-          affected, base, None, withPos = true)
-        val hit = rows.filter(coalesce(pred, lit(false)))
-        val maskFrame = hit.select(
-          substring(col(fcol), prefixLen + 1, Int.MaxValue).as("file"),
-          col(pcol).as("pos"))
-        // ONE headroom-bounded collect replaces the old stage-write +
-        // read-back-count pass (two actions plus a disk round-trip): the
-        // per-file counts become plain driver math and the small DV
-        // parquet is staged from the local rows as a 1-task write. The
-        // mask must stay broadcast-sized anyway (the read-side anti-join
-        // carries it), so the driver pull is the same order of memory the
-        // table already holds per read — and the pull itself is bounded
-        // BEFORE the cap check, so an over-cap bulk delete fails with the
-        // clean refusal below instead of materializing an unbounded mask.
-        val cap = TxLogTable.maxDvMaskRows(spark)
-        val liveTotal = base.map(dvsOf).getOrElse(Nil).map(_.n).sum
-        val maskRows = boundedMaskCollect(maskFrame, affected,
-          math.max(0L, cap - liveTotal))
-        if (maskRows.isEmpty) noop // predicate matched no surviving row
-        else {
-          // keep the table's TOTAL live mask broadcast-sized: beyond the cap
-          // the read-side anti-join and the maintenance paths should not
-          // carry it — compact (materializes every mask) or use the COW path
-          require(liveTotal + maskRows.length <= cap,
-            s"$opName would push the live positional-delete mask past " +
-              s"$cap rows: compact the table first (folds every mask), or " +
-              "use the copy-on-write path (deleteWhere/merge)")
-          // ONE small DV parquet per commit (a target's positions must not
-          // span DV files — the manifest carries one line per target)
-          val stagedDv = stage(spark.createDataFrame(
-            java.util.Arrays.asList(maskRows: _*), maskFrame.schema)
-            .coalesce(1), Nil)
-          val counts: Seq[(String, Long)] = maskRows.groupBy(_.getString(0))
-            .view.mapValues(_.length.toLong).toSeq.sortBy(_._1)
-          val dvRel = stagedDv.head
-          // update: the touched rows re-staged once with assignments applied
-          val stagedData: Seq[String] = set match {
-            case Some(assigns) =>
-              val updated = hit.drop(fcol, pcol).select(
-                schema.fieldNames.toIndexedSeq.map(n =>
-                  assigns.collectFirst { case (c, e) if c == n => e.as(n) }
-                    .getOrElse(col(n))): _*)
-              validateChecks(updated, base)
-              stageWithStats(updated, layout,
-                base.map(bloomColsOf).getOrElse(Nil),
-                inheritedBloomBits(base), rebalanceOk = true)
-            case None => Nil
-          }
-          val h = carryFrom(base, opName, lines)
-          // new values can appear only via assignments
-          val folded = if (set.isEmpty) h
-            else foldNdv(h, stagedKmv(stagedData), reset = false)
-          Publish(folded.copy(dvs = h.dvs ++ counts.map { case (rel, n) =>
-              TxLogTable.DvEntry(dvRel, next, n, rel) }),
-            lines ++ tagVersion(stagedData, next),
-            TxLogTable.MergeStats(next, 0, lines.size))
-        }
-      }
+    import org.apache.spark.sql.functions.coalesce
+    maskAndAdd(schema, Some(pred), _.filter(coalesce(pred, lit(false))),
+        keepRows = false, opName, Nil, None) { (hit, picked) =>
+      // update: the touched rows re-staged once with assignments applied
+      set.filter(_ => picked.nonEmpty).map(assigns =>
+        hit.select(schema.fieldNames.toIndexedSeq.map(n =>
+          assigns.collectFirst { case (c, e) if c == n => e.as(n) }
+            .getOrElse(col(n))): _*))
     }
   }
 
@@ -5005,23 +4958,23 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * growth past broadcast size; CDC sees exact delete+insert pairs under
     * one `_commit_version`.
     *
-    * `dropKeys` (exactly the `keyCols` columns) removes groups with NO
-    * replacement rows — the materialized-view refresh's zero-count groups
-    * ([[graft.operators.MaterializedView]], the primary caller).
-    * `extraMeta` lines ride the commit's manifest (unknown `#`-keys are
-    * ignored by every reader); the MV refresh records its consumed source
-    * version this way, which is what makes a refresh exactly-once: the
-    * data change and the progress record are one atomic manifest create.
+    * `dropKeys` (exactly the `keyCols` columns) removes keys with NO
+    * replacement rows. `extraMeta` lines ride the commit's manifest as
+    * annotations (unknown `#`-keys are ignored by every reader), so a
+    * caller's progress record and its data change are one atomic
+    * manifest create.
     *
-    * Key matching is NULL-SAFE (`<=>`): a NULL-keyed group is a real group
-    * to a groupBy consumer, and a null-unsafe join would strand its old
-    * rows unmasked. Manifest min/max pruning bounds the position scan only
+    * Key matching is NULL-SAFE (`<=>`): a NULL key is a real key to a
+    * groupBy consumer, and a null-unsafe join would strand its old rows
+    * unmasked. Manifest min/max pruning bounds the position scan only
     * when no key value is NULL (parquet stats are null-blind); the bounds
-    * come from one aggregate over the (changed-groups-sized) key frame.
+    * come from one aggregate over the key frame, which is checkpointed so
+    * the caller's `newRows` plan runs once.
     *
-    * Retries stage inside the loop — a lost version race recomputes
-    * positions against the new base, so a racing refresh that already
-    * upserted the same keys is simply re-masked (idempotent content).
+    * The read, mask and publish are [[maskAndAdd]], shared with
+    * [[foldKeyedAt]]. A lost version race re-plans against the new base,
+    * so a racing writer that already upserted the same keys is simply
+    * re-masked (idempotent content); `expectHead` refuses instead.
     */
   def upsertPos(schema: StructType, newRows: DataFrame, keyCols: Seq[String],
                 dropKeys: Option[DataFrame] = None,
@@ -5029,14 +4982,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
                 extraMeta: Seq[String] = Nil,
                 expectHead: Option[Int] = None): TxLogTable.MergeStats = {
     import org.apache.spark.sql.functions.{broadcast, count, count_if,
-      max => fmax, min => fmin, substring}
-    require(keyCols.nonEmpty, "upsertPos needs at least one key column")
-    keyCols.foreach { k =>
-      require(!inheritedColMap.contains(k),
-        s"upsert key $k is a renamed column: compact before keyed upserts")
-      require(schema.fieldNames.contains(k),
-        s"upsert key $k is not in the schema")
-    }
+      max => fmax, min => fmin}
+    requireKeyed(schema, keyCols, extraMeta, "upsertPos")
     require(newRows.columns.sorted.sameElements(schema.fieldNames.sorted),
       s"newRows columns (${newRows.columns.mkString(",")}) must match " +
         s"the schema (${schema.fieldNames.mkString(",")})")
@@ -5044,17 +4991,9 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       require(d.columns.sorted.sameElements(keyCols.sorted),
         s"dropKeys columns (${d.columns.mkString(",")}) must be exactly " +
           s"the key columns (${keyCols.mkString(",")})"))
-    ManifestHeader.requireAnnotations(extraMeta)
-    tableSchema.foreach { rec =>
-      schema.fields.foreach(f => require(
-        rec.fields.exists(e => e.name == f.name && e.dataType == f.dataType),
-        s"upsertPos column ${f.name}:${f.dataType.simpleString} does not " +
-          s"match the table schema (${rec.fields.map(e =>
-            s"${e.name}:${e.dataType.simpleString}").mkString(", ")})"))
-    }
     val aligned = newRows.select(schema.fieldNames.toIndexedSeq.map(col): _*)
     // reused by the bounds aggregate and the mask join of every retry
-    // attempt: checkpoint so the caller's plan (an MV fold) runs once.
+    // attempt: checkpoint so the caller's plan runs once.
     // (Measured alternative, r21: pinning small key sets as a driver-
     // local relation via an executeTake probe ADDED 2-4 jobs per commit
     // — the incremental take scans partitions in scale-up rounds and
@@ -5072,18 +5011,137 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     if (bRow.getAs[Long]("__n") == 0L) // no keys at all: clean no-op
       return TxLogTable.MergeStats(latestVersion.getOrElse(-1), 0,
         fileCount())
-    val anyNull = keyCols.exists(k => bRow.getAs[Long](s"__nl_$k") > 0L)
-    val prunePred: Option[Column] =
-      if (anyNull) None
-      else Some(keyCols.map(k =>
-        col(k) >= lit(bRow.getAs[Any](s"__mn_$k")) &&
-          col(k) <= lit(bRow.getAs[Any](s"__mx_$k"))).reduce(_ && _))
+    val hull = keyHull(keyCols.map(k => k ->
+      (if (bRow.getAs[Long](s"__nl_$k") > 0L) None
+       else Some((bRow.getAs[Any](s"__mn_$k"), bRow.getAs[Any](s"__mx_$k"))))))
+    maskAndAdd(schema, hull,
+      rows => rows.join(broadcast(keyFrame),
+        keyCols.map(k => rows(k) <=> keyFrame(k)).reduce(_ && _),
+        "left_semi"),
+      keepRows = false, op, extraMeta, expectHead)((_, _) => Some(aligned))
+  }
+
+  /** Keyed read-fold-write at a pinned head — the commit of an MV refresh
+    * whose change is already on the driver. One pass at `head`: read the
+    * current rows of the `keys` tuples (null-safe) through every live mask
+    * together with their positions, collect them, hand them to `fold`,
+    * then mask them all and add `fold`'s rows, in ONE manifest. `keys`
+    * are driver rows of the `keyCols` columns, so the manifest bounds are
+    * driver math and a small key set filters the scan as an IN over key
+    * structs (no broadcast-build job); past [[MaxLocalKeyPoints]] the
+    * set rides a broadcast semi-join. Any head other than `head` refuses
+    * with [[TxLogTable.ConcurrentHeadMoved]] before `fold` runs, so the
+    * fold always sees the state the caller anchored on. Mask cap and
+    * refusal are [[maskAndAdd]]'s.
+    */
+  private[graft] def foldKeyedAt(schema: StructType, keyCols: Seq[String],
+                                 keys: Seq[org.apache.spark.sql.Row],
+                                 head: Int, op: String,
+                                 extraMeta: Seq[String])
+                                (fold: Seq[org.apache.spark.sql.Row] =>
+                                  Seq[org.apache.spark.sql.Row])
+      : TxLogTable.MergeStats = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    import org.apache.spark.sql.catalyst.util.TypeUtils
+    import org.apache.spark.sql.functions.{broadcast, struct}
+    requireKeyed(schema, keyCols, extraMeta, "foldKeyedAt")
+    val keySchema = StructType(keyCols.map(k => schema(k)))
+    val hull = keyHull(keyCols.indices.map { i =>
+      val t = keySchema(i).dataType
+      keyCols(i) -> (if (keys.exists(_.isNullAt(i))) None
+      else {
+        val ord = TypeUtils.getInterpretedOrdering(t)
+        val vs = keys.map(r =>
+          CatalystTypeConverters.convertToCatalyst(r.get(i)))
+        Some((CatalystTypeConverters.convertToScala(vs.min(ord), t),
+          CatalystTypeConverters.convertToScala(vs.max(ord), t)))
+      })
+    })
+    val flat = keySchema.forall(f => f.dataType match {
+      case _: StructType | _: org.apache.spark.sql.types.ArrayType |
+           _: org.apache.spark.sql.types.MapType => false
+      case _ => true
+    })
+    val pick: DataFrame => DataFrame =
+      if (flat && keys.length <= TxLogTable.MaxLocalKeyPoints) {
+        // struct IN compares field-wise by the type's ordering: NULL
+        // fields match NULL, -0.0 matches 0.0 — exactly `<=>` per column
+        val lits = keys.map(r => struct(keySchema.fields.indices.map(i =>
+          lit(r.get(i)).cast(keySchema(i).dataType)): _*))
+        rows => rows.filter(struct(keyCols.map(col): _*).isin(lits: _*))
+      } else {
+        val kf = spark.createDataFrame(java.util.Arrays.asList(keys: _*),
+          keySchema)
+        rows => rows.join(broadcast(kf),
+          keyCols.map(k => rows(k) <=> kf(k)).reduce(_ && _), "left_semi")
+      }
+    maskAndAdd(schema, hull, pick, keepRows = true, op, extraMeta,
+        Some(head)) { (_, picked) =>
+      val out = fold(picked)
+      if (out.isEmpty) None
+      else Some(spark.createDataFrame(java.util.Arrays.asList(out: _*),
+        schema).coalesce(1))
+    }
+  }
+
+  // the shared argument checks of the keyed rewrites
+  private def requireKeyed(schema: StructType, keyCols: Seq[String],
+                           extraMeta: Seq[String], what: String): Unit = {
+    require(keyCols.nonEmpty, s"$what needs at least one key column")
+    keyCols.foreach { k =>
+      require(!inheritedColMap.contains(k),
+        s"upsert key $k is a renamed column: compact before keyed upserts")
+      require(schema.fieldNames.contains(k),
+        s"upsert key $k is not in the schema")
+    }
+    ManifestHeader.requireAnnotations(extraMeta)
+    tableSchema.foreach { rec =>
+      schema.fields.foreach(f => require(
+        rec.fields.exists(e => e.name == f.name && e.dataType == f.dataType),
+        s"$what column ${f.name}:${f.dataType.simpleString} does not " +
+          s"match the table schema (${rec.fields.map(e =>
+            s"${e.name}:${e.dataType.simpleString}").mkString(", ")})"))
+    }
+  }
+
+  // the manifest prune of a keyed rewrite: each key column within its
+  // [min, max] over the keys — None for the whole prune when any column's
+  // bounds are unknown (a NULL key: parquet stats are null-blind)
+  private def keyHull(bounds: Seq[(String, Option[(Any, Any)])])
+      : Option[Column] =
+    if (bounds.exists(_._2.isEmpty)) None
+    else Some(bounds.map { case (k, b) =>
+      col(k) >= lit(b.get._1) && col(k) <= lit(b.get._2) }.reduce(_ && _))
+
+  /** The masked-position rewrite behind [[deleteWherePos]],
+    * [[updateWherePos]], [[upsertPos]] and [[foldKeyedAt]], one optimistic
+    * pass per attempt:
+    *  - `expectHead`, when set, refuses any other base;
+    *  - `prune` narrows the base's files by their manifest stats;
+    *  - the surviving files are read through EVERY live mask (prior DVs
+    *    and tombstones, so masks stay disjoint) with each row's (file,
+    *    position), `pick` keeps the rows to mask, and ONE collect bounded
+    *    by the mask-cap headroom pulls their positions — plus their
+    *    `schema` columns when `keepRows` — to the driver; an over-cap
+    *    mask fails with the "compact first" refusal without ever being
+    *    materialized whole;
+    *  - the positions stage as ONE DV parquet from the driver rows (a
+    *    1-task write; per-file counts are driver math), and `add`'s
+    *    frame stages as new data files; `add` gets the picked rows as a
+    *    frame of `schema` columns and as the collected rows (their
+    *    `schema` columns with `keepRows`, else their positions);
+    *  - both publish in one manifest, or nothing when nothing was masked
+    *    or added.
+    */
+  private def maskAndAdd(schema: StructType, prune: Option[Column],
+                         pick: DataFrame => DataFrame, keepRows: Boolean,
+                         op: String, extraMeta: Seq[String],
+                         expectHead: Option[Int])
+                        (add: (DataFrame, Seq[org.apache.spark.sql.Row]) =>
+                          Option[DataFrame]): TxLogTable.MergeStats = {
+    import org.apache.spark.sql.functions.substring
     val prefixLen = dataDir.toString.length + 1 // abs path → rel
     optimisticCommit(op) { (base, next) =>
-      // head-conditional commit: the caller's newRows/dropKeys were
-      // computed from state AT expectHead — any other head means a
-      // concurrent commit won and this delta is stale, so refuse here
-      // (before staging) rather than land a lost update
       expectHead.foreach { eh =>
         if (!base.contains(eh))
           throw new TxLogTable.ConcurrentHeadMoved(
@@ -5093,65 +5151,67 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       }
       val layout = base.map(partitionColsOf).getOrElse(Nil)
       val lines = base.map(dataLines).getOrElse(Nil)
-      val cmap = inheritedColMap
       val allEntries = lines.map(TxLogTable.decodeEntry)
-      val affected = prunePred match {
+      val affected = prune match {
         case Some(p) =>
+          val cmap = inheritedColMap
           val ranges = physKeyed(cmap, PredicateRanges.extract(p))
-          val nn = physNullness(cmap, PredicateRanges.extractNullness(p))
-          val points = physKeyed(cmap, PredicateRanges.extractPoints(p))
-          val strs = physKeyed(cmap, PredicateRanges.extractStr(p))
-          allEntries.filter(e => mayMatchPred(e,
-            ranges, nn, points, strs, timeSegBounds(ranges, base)))
+          allEntries.filter(e => mayMatchPred(e, ranges,
+            physNullness(cmap, PredicateRanges.extractNullness(p)),
+            physKeyed(cmap, PredicateRanges.extractPoints(p)),
+            physKeyed(cmap, PredicateRanges.extractStr(p)),
+            timeSegBounds(ranges, base)))
         case None => allEntries
       }
-      // matched keys' current rows, read through EVERY live mask (prior
-      // DVs and tombstones) so masks stay disjoint
-      val (stagedDv: Seq[String], counts: Seq[(String, Long)]) =
-        if (affected.isEmpty) (Nil, Nil)
+      val (hitRows, picked) =
+        if (affected.isEmpty)
+          (readRels(schema, Nil, inheritedColMap),
+            Array.empty[org.apache.spark.sql.Row])
         else {
           val (rows, fcol, pcol) = readMaskedPos(schema,
             affected, base, None, withPos = true)
-          val cond = keyCols.map(k => rows(k) <=> keyFrame(k))
-            .reduce(_ && _)
-          val hit = rows.join(broadcast(keyFrame), cond, "left_semi")
-            .select(
-              substring(col(fcol), prefixLen + 1, Int.MaxValue).as("file"),
-              col(pcol).as("pos"))
-          // ONE cap-bounded collect replaces the old stage-write +
-          // read-back-count pass (two actions): the mask is ≤
-          // maxDvMaskRows in every successful commit — enforced below
-          // exactly as before — so the driver pull is bounded; the dv
-          // file is then staged from the local rows (a 1-task write) and
-          // the per-file counts are plain driver math. The pull itself
-          // is headroom-bounded, so an OVER-cap upsert fails with the
-          // clean refusal below instead of collecting an unbounded mask.
+          val kept = pick(rows)
+          val hit = kept.select(
+            Seq(substring(col(fcol), prefixLen + 1, Int.MaxValue).as("file"),
+              col(pcol).as("pos")) ++
+              (if (keepRows) schema.fieldNames.toSeq.map(col) else Nil): _*)
           val cap = TxLogTable.maxDvMaskRows(spark)
           val liveTotal = base.map(dvsOf).getOrElse(Nil).map(_.n).sum
-          val maskRows = boundedMaskCollect(hit, affected,
+          val got = boundedMaskCollect(hit, affected,
             math.max(0L, cap - liveTotal))
-          if (maskRows.isEmpty) (Nil, Nil)
-          else {
-            require(liveTotal + maskRows.length <= cap,
-              s"$op would push the live positional-delete mask past $cap " +
-                "rows: compact the table first (folds every mask), or use " +
-                "the copy-on-write merge")
-            val staged = stage(spark.createDataFrame(
-              java.util.Arrays.asList(maskRows: _*), hit.schema)
-              .coalesce(1), Nil)
-            (staged, maskRows.groupBy(_.getString(0)).view
-              .mapValues(_.length.toLong).toSeq.sortBy(_._1))
-          }
+          require(got.isEmpty || liveTotal + got.length <= cap,
+            s"$op would push the live positional-delete mask past $cap " +
+              "rows: compact the table first (folds every mask), or use " +
+              "the copy-on-write path (deleteWhere/merge)")
+          (kept.drop(fcol, pcol), got)
         }
-      validateChecks(aligned, base)
-      val stagedData = stageWithStats(aligned, layout,
-        base.map(bloomColsOf).getOrElse(Nil), inheritedBloomBits(base),
-        rebalanceOk = true)
+      // ONE small DV parquet per commit (a target's positions must not
+      // span DV files — the manifest carries one line per target)
+      val stagedDv =
+        if (picked.isEmpty) Nil
+        else stage(spark.createDataFrame(java.util.Arrays.asList(
+          picked.map(r => org.apache.spark.sql.Row(r.get(0), r.get(1))): _*),
+          TxLogTable.DvSchema).coalesce(1), Nil)
+      val counts = picked.groupBy(_.getString(0)).view
+        .mapValues(_.length.toLong).toSeq.sortBy(_._1)
+      val stagedData = add(hitRows,
+          if (keepRows) picked.toSeq.map(r =>
+            org.apache.spark.sql.Row.fromSeq(r.toSeq.drop(2)))
+          else picked.toSeq)
+        .fold(Seq.empty[String]) { data =>
+          validateChecks(data, base)
+          stageWithStats(data, layout, base.map(bloomColsOf).getOrElse(Nil),
+            inheritedBloomBits(base), rebalanceOk = true)
+        }
       if (counts.isEmpty && stagedData.isEmpty) // nothing to mask or add
         Unchanged(TxLogTable.MergeStats(base.getOrElse(-1), 0, lines.size))
       else {
         val h = carryFrom(base, op, lines)
-        Publish(foldNdv(h, stagedKmv(stagedData), reset = false).copy(
+        // new values can appear only via added rows
+        val folded =
+          if (stagedData.isEmpty) h
+          else foldNdv(h, stagedKmv(stagedData), reset = false)
+        Publish(folded.copy(
             dvs = h.dvs ++ counts.map { case (rel, n) =>
               TxLogTable.DvEntry(stagedDv.head, next, n, rel) },
             annotations = extraMeta),

@@ -2,7 +2,7 @@ package graft.sources.v2
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, NamedExpression, Not, Or}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Between, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, NamedExpression, Not, Or}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, DeleteFromTable, Filter, LocalRelation, LogicalPlan, MergeIntoTable, Project, UpdateTable}
 import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, ShortType, TimestampType}
@@ -18,8 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * whole-stage codegen, parquet filter pushdown, and NO InternalRow→Row
   * conversion (what the V1Scan fallback pays).
   *
-  * A Filter directly above the relation is additionally translated (as far
-  * as its shape allows — conservative, same contract as the V1 connector's
+  * A Filter above the relation — directly, or through the aliases, views
+  * and identity projections a catalog read, an aliased query, a DataFrame
+  * filter and a view analyze to — is additionally translated (as far as
+  * its shape allows — conservative, same contract as the V1 connector's
   * pushdown) into a predicate `Column` for `snapshotWhere`, so MANIFEST
   * pruning (range stats, null counts, partition paths, Blooms) happens for
   * SQL reads too. The original Filter stays on top — untranslated
@@ -91,16 +93,21 @@ case class TxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
           LocalRelation(aggExprs.map(_.toAttribute),
             Seq(InternalRow.fromSeq(values)), isStreaming = false))
           .getOrElse(agg)
+      // A Filter whose conjuncts translate prunes the read beneath it at
+      // the manifest. The read is a relation (spliced here, pruned) or
+      // the marker of a read spliced by an earlier analysis — a view
+      // body, a `spark.table` frame — re-spliced pruned at the marker's
+      // pinned version. A Filter that translates nothing leaves its read
+      // to the relation cases below.
+      case f @ Filter(cond, child) if f.resolved &&
+          toPredicate(cond).isDefined &&
+          readUnder(child).exists(r => !deferred.contains(r._1)) =>
+        val (read, rebuild) = readUnder(child).get
+        prunedRead(read, toPredicate(cond).get)
+          .map(p => Filter(cond, rebuild(p))).getOrElse(f)
       // spjEligible relations are left alone: their DSv2 scan reports
       // KeyGroupedPartitioning (storage-partitioned joins — zero-shuffle
       // co-partitioned joins), which the spliced native plan cannot.
-      case f @ Filter(cond, rel: DataSourceV2Relation)
-          if rel.table.isInstanceOf[TxLogV2Table] && f.resolved &&
-            !rel.table.asInstanceOf[TxLogV2Table].spjEligible &&
-            !deferred.contains(rel) =>
-        val tbl = rel.table.asInstanceOf[TxLogV2Table]
-        aligned(tbl.snapshotDF(toPredicate(cond)), rel.output)
-          .map(Filter(cond, _)).getOrElse(f)
       case rel: DataSourceV2Relation
           if rel.table.isInstanceOf[TxLogV2Table] &&
             !rel.table.asInstanceOf[TxLogV2Table].spjEligible &&
@@ -118,14 +125,8 @@ case class TxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // fallback pays an InternalRow→Row conversion at the scan top
       // (`TxLogRelation.buildScan`'s `.rdd`), so replace it with the
       // native parquet plan whenever the extension is installed. Filter
-      // translation and manifest pruning are identical to the V2 case.
-      case f @ Filter(cond,
-          lr: org.apache.spark.sql.execution.datasources.LogicalRelation)
-          if lr.relation.isInstanceOf[graft.sources.TxLogRelation] &&
-            !lr.isStreaming && f.resolved && !deferred.contains(lr) =>
-        val rel = lr.relation.asInstanceOf[graft.sources.TxLogRelation]
-        aligned(v1SnapshotDF(rel, toPredicate(cond)), lr.output)
-          .map(Filter(cond, _)).getOrElse(f)
+      // translation and manifest pruning (the Filter case above) are
+      // identical to the V2 case.
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
           if lr.relation.isInstanceOf[graft.sources.TxLogRelation] &&
             !lr.isStreaming && !deferred.contains(lr) =>
@@ -151,9 +152,11 @@ case class TxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
     org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias(
       "__txlog@" + version.getOrElse(-1) + "@" + root, plan)
 
+  private def isMarker(name: String): Boolean = name.startsWith("__txlog@")
+
   private def fromMarker(name: String)
       : Option[(graft.sources.TxLogTable, Option[Int])] =
-    if (!name.startsWith("__txlog@")) None
+    if (!isMarker(name)) None
     else {
       val rest = name.stripPrefix("__txlog@")
       val at = rest.indexOf('@')
@@ -164,13 +167,20 @@ case class TxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
 
   // See through an identity Project (plain attributes or name-preserving
-  // aliases — what View resolution inserts to re-key exprIds). A RENAMING
-  // view must NOT see through: the metadata lookups are name-based and a
-  // renamed column would bind the wrong stats.
+  // aliases, possibly of a cast to the attribute's own type — what View
+  // resolution inserts to re-key exprIds). A RENAMING view must NOT see
+  // through: the metadata lookups are name-based and a renamed column
+  // would bind the wrong stats.
   private def identityChild(pr: Project): Option[LogicalPlan] =
     if (pr.projectList.forall {
       case _: AttributeReference => true
       case Alias(ar: AttributeReference, name) => ar.name == name
+      case Alias(c: org.apache.spark.sql.catalyst.expressions.Cast, name) =>
+        c.child match {
+          case ar: AttributeReference =>
+            ar.name == name && ar.dataType == c.dataType
+          case _ => false
+        }
       case _ => false
     }) Some(pr.child) else None
 
@@ -185,6 +195,57 @@ case class TxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case pr: Project if identityChild(pr).isDefined =>
       filterUnder(identityChild(pr).get)
     case Filter(cond, child) => Some((cond, child))
+    case _ => None
+  }
+
+  // The txlog read beneath a Filter's alias wrappers — a spliceable
+  // relation, or a splice marker — with the function that rebuilds the
+  // wrappers over a replacement read.
+  private def readUnder(p: LogicalPlan)
+      : Option[(LogicalPlan, LogicalPlan => LogicalPlan)] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{SubqueryAlias, View}
+    def under(child: LogicalPlan)(wrap: LogicalPlan => LogicalPlan) =
+      readUnder(child).map { case (r, re) => (r, (x: LogicalPlan) =>
+        wrap(re(x))) }
+    p match {
+      case s: SubqueryAlias if isMarker(s.identifier.name) =>
+        Some((s, identity))
+      case s: SubqueryAlias => under(s.child)(c => s.copy(child = c))
+      case v: View => under(v.child)(c => v.copy(child = c))
+      case pr: Project if identityChild(pr).isDefined =>
+        under(pr.child)(c => pr.copy(child = c))
+      case rel: DataSourceV2Relation
+          if rel.table.isInstanceOf[TxLogV2Table] &&
+            !rel.table.asInstanceOf[TxLogV2Table].spjEligible =>
+        Some((rel, identity))
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
+          if lr.relation.isInstanceOf[graft.sources.TxLogRelation] &&
+            !lr.isStreaming =>
+        Some((lr, identity))
+      case _ => None
+    }
+  }
+
+  // `read` (from readUnder) re-planned as a manifest-pruned snapshot,
+  // output attributes kept. A marker re-splices at its own pinned version
+  // and keeps no marker: under its Filter no whole-table metadata answer
+  // applies, and a marker-free splice is never pruned twice.
+  private def prunedRead(read: LogicalPlan, pred: Column)
+      : Option[LogicalPlan] = read match {
+    case rel: DataSourceV2Relation =>
+      aligned(rel.table.asInstanceOf[TxLogV2Table].snapshotDF(Some(pred)),
+        rel.output)
+    case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+      aligned(v1SnapshotDF(
+        lr.relation.asInstanceOf[graft.sources.TxLogRelation], Some(pred)),
+        lr.output)
+    case s: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
+      val out = s.child.output.collect { case a: AttributeReference => a }
+      fromMarker(s.identifier.name).collect { case (t, Some(v)) =>
+        aligned(t.snapshotWhere(org.apache.spark.sql.types.StructType(
+          out.map(a => org.apache.spark.sql.types.StructField(a.name,
+            a.dataType, a.nullable))), pred, Some(v)), out)
+      }.flatten
     case _ => None
   }
 
@@ -281,14 +342,15 @@ case class TxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
     if (vals.forall(_.isDefined)) Some(vals.map(_.get)) else None
   }
 
-  // The txlog RELATION NODE beneath alias wrappers (for the defer set) —
-  // the structural twin of [[txLogUnder]] before types resolve. Descends
-  // one Filter too: a relation under `WHERE <partition cols>` beneath a
-  // not-yet-resolved COUNT(*) must also stay un-spliced until the
-  // Aggregate case has had its chance at the filtered metadata collapse.
+  // The txlog RELATION NODE (or splice marker) beneath alias wrappers
+  // (for the defer set) — the structural twin of [[txLogUnder]] before
+  // types resolve. Descends one Filter too: a read under `WHERE
+  // <partition cols>` beneath a not-yet-resolved COUNT(*) must also stay
+  // un-spliced (a marker un-pruned) until the Aggregate case has had its
+  // chance at the filtered metadata collapse.
   private def relUnder(p: LogicalPlan): Option[LogicalPlan] = p match {
-    case org.apache.spark.sql.catalyst.plans.logical
-        .SubqueryAlias(_, child) => relUnder(child)
+    case s: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
+      if (isMarker(s.identifier.name)) Some(s) else relUnder(s.child)
     case v: org.apache.spark.sql.catalyst.plans.logical.View =>
       relUnder(v.child)
     case Filter(_, child) => relUnder(child)
@@ -400,44 +462,57 @@ case class TxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def qcol(name: String): Column =
     col("`" + name.replace("`", "``") + "`")
 
-  private def litVal(l: Literal): Option[Column] = l.value match {
-    case v: Int => Some(lit(v))
-    case v: Long => Some(lit(v))
-    case v: Short => Some(lit(v))
-    case v: Byte => Some(lit(v))
-    case s: UTF8String => Some(lit(s.toString))
+  // A literal as a pruning Column, for the types whose Column literal
+  // means the same value: integral and string. (A DATE or TIMESTAMP
+  // literal holds epoch days / micros internally, which as a plain
+  // number would compare against the column as something else.)
+  private def litVal(l: Literal): Option[Column] = (l.dataType, l.value) match {
+    case (ByteType | ShortType | IntegerType | LongType, v) if v != null =>
+      Some(lit(v))
+    case (org.apache.spark.sql.types.StringType, s: UTF8String) =>
+      Some(lit(s.toString))
     case _ => None
   }
 
+  // A constant operand, folded: the analyzer leaves its type-coercion
+  // casts around literals (`bigintCol >= 10` is `>= CAST(10 AS BIGINT)`)
+  // and constant folding runs only in the optimizer.
+  private object Const {
+    def unapply(e: Expression): Option[Literal] = e match {
+      case l: Literal => Some(l)
+      case _ if e.foldable && e.deterministic =>
+        scala.util.Try(Literal.create(e.eval(), e.dataType)).toOption
+      case _ => None
+    }
+  }
+
   private def toPredicate(e: Expression): Option[Column] = e match {
-    case EqualTo(a: AttributeReference, l: Literal) =>
+    case EqualTo(a: AttributeReference, Const(l)) =>
       litVal(l).map(qcol(a.name) === _)
-    case EqualTo(l: Literal, a: AttributeReference) =>
+    case EqualTo(Const(l), a: AttributeReference) =>
       litVal(l).map(qcol(a.name) === _)
-    case GreaterThan(a: AttributeReference, l: Literal) =>
+    case GreaterThan(a: AttributeReference, Const(l)) =>
       litVal(l).map(qcol(a.name) > _)
-    case GreaterThan(l: Literal, a: AttributeReference) =>
+    case GreaterThan(Const(l), a: AttributeReference) =>
       litVal(l).map(qcol(a.name) < _)
-    case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
+    case GreaterThanOrEqual(a: AttributeReference, Const(l)) =>
       litVal(l).map(qcol(a.name) >= _)
-    case GreaterThanOrEqual(l: Literal, a: AttributeReference) =>
+    case GreaterThanOrEqual(Const(l), a: AttributeReference) =>
       litVal(l).map(qcol(a.name) <= _)
-    case LessThan(a: AttributeReference, l: Literal) =>
+    case LessThan(a: AttributeReference, Const(l)) =>
       litVal(l).map(qcol(a.name) < _)
-    case LessThan(l: Literal, a: AttributeReference) =>
+    case LessThan(Const(l), a: AttributeReference) =>
       litVal(l).map(qcol(a.name) > _)
-    case LessThanOrEqual(a: AttributeReference, l: Literal) =>
+    case LessThanOrEqual(a: AttributeReference, Const(l)) =>
       litVal(l).map(qcol(a.name) <= _)
-    case LessThanOrEqual(l: Literal, a: AttributeReference) =>
+    case LessThanOrEqual(Const(l), a: AttributeReference) =>
       litVal(l).map(qcol(a.name) >= _)
-    case In(a: AttributeReference, vs)
-        if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-      val raw: Seq[Option[Any]] = vs.map {
-        case Literal(v: Int, _) => Some(v)
-        case Literal(v: Long, _) => Some(v)
-        case Literal(v: Short, _) => Some(v)
-        case Literal(v: Byte, _) => Some(v)
-        case Literal(s: UTF8String, _) => Some(s.toString)
+    case b: Between =>
+      toPredicate(And(GreaterThanOrEqual(b.input, b.lower),
+        LessThanOrEqual(b.input, b.upper)))
+    case In(a: AttributeReference, vs) if vs.nonEmpty =>
+      val raw = vs.map {
+        case Const(l) => litVal(l)
         case _ => None
       }
       if (raw.forall(_.isDefined)) Some(qcol(a.name).isin(raw.flatten: _*))

@@ -980,4 +980,231 @@ class MaterializedViewSpec extends AnyFunSuite {
     assert(mv.opOf(mv.latestVersion.get).contains("mv-refresh"))
     assert(mvRows(mvRoot) === recompute(src))
   }
+
+  // ---- fold exactness: the incremental fold equals the recompute
+  // bit for bit (Row equality: doubles by Double.compare, binary by
+  // content) on the key and measure shapes a driver-keyed fold could
+  // get wrong ----
+
+  /** The view's rows against GROUP BY over the source snapshot, both in
+    * the view's column order, compared as multisets of Rows. */
+  private def assertFoldExact(src: TxLogTable, srcSchema: StructType,
+                              mvRoot: String): Unit = {
+    val d = MaterializedView.definition(spark, mvRoot)
+    val cols = d.mvSchema.fieldNames.toSeq.map(col)
+    val aggs = d.sums.map { case (out, c) =>
+      sum(col(c).cast(MaterializedView.SumType)).as(out) } :+
+      count(lit(1)).as(MaterializedView.CountCol)
+    val want = src.snapshot(srcSchema).groupBy(d.groupCols.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*).select(cols: _*).collect()
+    val got = TxLogTable(spark, mvRoot).snapshot(d.mvSchema)
+      .select(cols: _*).collect()
+    def canon(r: org.apache.spark.sql.Row): String = r.toSeq.map {
+      case b: Array[Byte] => b.mkString("bin(", ",", ")")
+      case x: java.lang.Double => java.lang.Double.doubleToRawLongBits(x)
+        .toString
+      case x => String.valueOf(x)
+    }.mkString("|")
+    assert(got.map(canon).sorted.toSeq === want.map(canon).sorted.toSeq)
+    assert(got.sortBy(canon).toSeq === want.sortBy(canon).toSeq)
+  }
+
+  test("fold exactness: NULL fields of a two-column group key") {
+    val (src, mvRoot) = fresh()
+    val rows = Seq[(Option[Long], Option[String], Double)](
+      (Some(1L), Some("a"), 1.0), (None, Some("a"), 2.0),
+      (Some(1L), None, 3.0), (None, None, 4.0))
+    src.commit(rows.toDF("k", "cat", "v"), overwrite = true)
+    MaterializedView.create(spark, mvRoot, "nullkeys", src, schema,
+      Seq("k", "cat"), Seq("total" -> "v"))
+    src.commit(Seq[(Option[Long], Option[String], Double)](
+      (None, Some("a"), 20.0), (None, None, 40.0), (Some(2L), None, 5.0))
+      .toDF("k", "cat", "v"), overwrite = false)
+    src.deleteWhere(schema, col("v") === 3.0) // empties (1, NULL)
+    val st = MaterializedView.refresh(spark, mvRoot)
+    assert(st.mode === "incremental" && st.groupsChanged === 4, st)
+    assertFoldExact(src, schema, mvRoot)
+  }
+
+  test("fold exactness: a DOUBLE group key receiving -0.0, 0.0 and NaN") {
+    val (src, mvRoot) = fresh()
+    val dSchema = StructType(Seq(StructField("d", DoubleType),
+      StructField("v", DoubleType)))
+    src.commit(Seq((0.0, 1.0), (1.5, 2.0)).toDF("d", "v"), overwrite = true)
+    MaterializedView.create(spark, mvRoot, "dbl", src, dSchema,
+      Seq("d"), Seq("total" -> "v"))
+    src.commit(Seq((-0.0, 10.0), (Double.NaN, 3.0), (-0.0, 7.0))
+      .toDF("d", "v"), overwrite = false)
+    val st = MaterializedView.refresh(spark, mvRoot)
+    assert(st.mode === "incremental" && st.groupsChanged === 2, st)
+    assertFoldExact(src, dSchema, mvRoot)
+    // a second window: the NaN group grows, the zero group shrinks
+    src.commit(Seq((java.lang.Double.longBitsToDouble(0x7ff8000000000001L),
+      1.0)).toDF("d", "v"), overwrite = false)
+    src.deleteWhere(dSchema, col("v") === 10.0)
+    assert(MaterializedView.refresh(spark, mvRoot).mode === "incremental")
+    assertFoldExact(src, dSchema, mvRoot)
+  }
+
+  test("fold exactness: a BINARY group key") {
+    val (src, mvRoot) = fresh()
+    val bSchema = StructType(Seq(StructField("b", BinaryType),
+      StructField("v", DoubleType)))
+    val (x, y, z) = (Array[Byte](1, 2), Array[Byte](1, 2, 0), Array[Byte]())
+    src.commit(Seq((x, 1.0), (y, 2.0)).toDF("b", "v"), overwrite = true)
+    MaterializedView.create(spark, mvRoot, "bin", src, bSchema,
+      Seq("b"), Seq("total" -> "v"))
+    // equal CONTENT in fresh arrays must land in the same group
+    src.commit(Seq((Array[Byte](1, 2), 5.0), (z, 3.0)).toDF("b", "v"),
+      overwrite = false)
+    src.deleteWhere(bSchema, col("v") === 2.0) // empties y
+    val st = MaterializedView.refresh(spark, mvRoot)
+    assert(st.mode === "incremental" && st.groupsChanged === 3, st)
+    assertFoldExact(src, bSchema, mvRoot)
+  }
+
+  test("fold exactness: a decimal sum that overflows SumType is NULL, " +
+    "as in the recompute") {
+    val (src, mvRoot) = fresh()
+    val decSchema = StructType(Seq(StructField("k", LongType),
+      StructField("v", DecimalType(38, 6))))
+    val big = new java.math.BigDecimal("60000000000000000000000000000000")
+    val rows = spark.createDataFrame(java.util.Arrays.asList(
+      org.apache.spark.sql.Row(1L, big), org.apache.spark.sql.Row(2L, big)),
+      decSchema)
+    src.commit(rows, overwrite = true)
+    MaterializedView.create(spark, mvRoot, "dec", src, decSchema,
+      Seq("k"), Seq("total" -> "v"))
+    // k=1 crosses 10^32 (NULL); k=2 grows to just under it
+    src.commit(spark.createDataFrame(java.util.Arrays.asList(
+      org.apache.spark.sql.Row(1L, big),
+      org.apache.spark.sql.Row(2L,
+        new java.math.BigDecimal("39999999999999999999999999999999.999999"))),
+      decSchema), overwrite = false)
+    val st = MaterializedView.refresh(spark, mvRoot)
+    assert(st.mode === "incremental", st)
+    assertFoldExact(src, decSchema, mvRoot)
+    val sums = TxLogTable(spark, mvRoot)
+      .snapshot(MaterializedView.definition(spark, mvRoot).mvSchema)
+      .collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    assert(sums(1L) == null && sums(2L) != null, sums)
+  }
+
+  test("fold exactness: groups emptied and re-created inside one window, " +
+    "across copy-on-write deletes and a MOR drop") {
+    val (src, mvRoot) = fresh()
+    src.commit(df((1L, "a", 1.0), (1L, "a", 2.0), (2L, "b", 3.0)),
+      overwrite = true)
+    MaterializedView.create(spark, mvRoot, "recreate", src, schema,
+      Seq("k"), Seq("total" -> "v"))
+    src.deleteWhere(schema, col("k") === 1L)          // empties k=1
+    src.commit(df((1L, "a", 7.0), (9L, "n", 4.0)), overwrite = false)
+    src.deleteWhere(schema, col("k") === 9L)          // k=9 born and gone
+    src.commit(df((9L, "n", 5.0)), overwrite = false) // ... and back
+    src.deleteByKeysMor(Seq(9L, 2L).toDF("k"))        // drop step
+    src.commit(df((9L, "n", 6.0), (2L, "b", 8.0)), overwrite = false)
+    val st = MaterializedView.refresh(spark, mvRoot)
+    assert(st.mode === "incremental", st)
+    assertFoldExact(src, schema, mvRoot)
+    assert(mvRows(mvRoot) === Set((Some(1L), 1L, 7.0), (Some(2L), 1L, 8.0),
+      (Some(9L), 1L, 6.0)))
+  }
+
+  test("fold exactness: a window touching more groups than the keyed " +
+    "read filters inline reads them through a broadcast semi-join") {
+    val (src, mvRoot) = fresh()
+    val n = TxLogTable.MaxLocalKeyPoints + 100L
+    src.commit(df((1L to n).map(k => (k, "a", k.toDouble)): _*),
+      overwrite = true)
+    MaterializedView.create(spark, mvRoot, "wide", src, schema,
+      Seq("k", "cat"), Seq("total" -> "v"))
+    src.commit(df((1L to n + 5).map(k => (k, "a", 1.0)): _*),
+      overwrite = false)
+    src.deleteWhere(schema, col("k") === 3L)
+    val st = MaterializedView.refresh(spark, mvRoot)
+    assert(st.mode === "incremental" && st.groupsChanged === n + 5, st)
+    assertFoldExact(src, schema, mvRoot)
+  }
+
+  test("fold exactness: a group column under a non-binary collation " +
+    "recomputes, grouping as the collation does") {
+    val (src, mvRoot) = fresh()
+    val lcase = StringType("UTF8_LCASE")
+    def rows(xs: (String, Double)*): DataFrame = xs.toDF("s", "v")
+      .select(col("s").cast(lcase).as("s"), col("v"))
+    val first = rows(("A", 1.0), ("b", 2.0))
+    src.commit(first, overwrite = true)
+    MaterializedView.create(spark, mvRoot, "coll", src, first.schema,
+      Seq("s"), Seq("total" -> "v"))
+    src.commit(rows(("a", 10.0), ("B", 20.0)), overwrite = false)
+    val st = MaterializedView.refresh(spark, mvRoot)
+    assert(st.mode === "full", st)
+    val d = MaterializedView.definition(spark, mvRoot)
+    assert(TxLogTable(spark, mvRoot).snapshot(d.mvSchema).collect()
+      .map(r => (r.getString(0).toLowerCase, r.getLong(2))).toSet ===
+      Set(("a", 2L), ("b", 2L)))
+  }
+
+  // ---- job budgets: job counts are deterministic, so a refresh that
+  // starts doing more Spark work fails here rather than hiding in
+  // wall-time noise ----
+
+  private def jobsOf[A](body: => A): (A, Int) =
+    org.apache.spark.JobCount.of(spark.sparkContext)(body)
+
+  // the measured counts of the two scenarios below (local[4], AQE on)
+  private val JobBudgetAgg = 9
+  private val JobBudgetStar = 12
+
+  test("job budget: an incremental refresh over an append + merge + " +
+    "delete window") {
+    val (src, mvRoot) = fresh()
+    src.commit(df((1L to 40L).map(i => (i, "c" + (i % 4), i.toDouble)): _*),
+      overwrite = true)
+    MaterializedView.create(spark, mvRoot, "budget", src, schema,
+      Seq("cat"), Seq("total" -> "v"))
+    // warm the view once so its DV masks are live, as in steady state
+    src.commit(df((41L, "c1", 1.0)), overwrite = false)
+    MaterializedView.refresh(spark, mvRoot)
+    src.commit(df((42L, "c2", 2.0), (43L, "c5", 3.0)), overwrite = false)
+    src.merge(schema, df((5L, "c1", 50.0), (6L, "c6", 60.0)), Seq("k"))
+    src.deleteWhere(schema, col("k") === 7L)
+    val (st, jobs) = jobsOf(MaterializedView.refresh(spark, mvRoot))
+    assert(st.mode === "incremental", st)
+    assertFoldExact(src, schema, mvRoot)
+    info(s"refresh ran $jobs Spark jobs")
+    assert(jobs <= JobBudgetAgg, s"refresh ran $jobs Spark jobs")
+  }
+
+  test("job budget: a star view's refresh under dimension churn") {
+    val dir = Files.createTempDirectory("mvbudget-star")
+    val fact = TxLogTable(spark, dir.resolve("fact").toString)
+    val dim = TxLogTable(spark, dir.resolve("dim").toString)
+    val mvRoot = dir.resolve("mv").toString
+    val dimSchema = StructType(Seq(
+      StructField("uid", LongType), StructField("seg", StringType)))
+    fact.commit(df((1L to 40L).map(i => (i % 10, "x", i.toDouble)): _*),
+      overwrite = true)
+    dim.commit((0L to 9L).map(i => (i, "s" + (i % 3))).toDF("uid", "seg"),
+      overwrite = true)
+    MaterializedView.createJoined(spark, mvRoot, "budget_star", fact,
+      schema, dim, dimSchema, Seq("k" -> "uid"), Seq("seg"),
+      Seq("total" -> "v"))
+    fact.commit(df((3L, "x", 100.0)), overwrite = false)
+    dim.merge(dimSchema, Seq((4L, "s9"), (5L, "s0")).toDF("uid", "seg"),
+      Seq("uid"))
+    val (st, jobs) = jobsOf(MaterializedView.refresh(spark, mvRoot))
+    assert(st.mode === "incremental", st)
+    val d = MaterializedView.definition(spark, mvRoot)
+    val want = fact.snapshot(schema).join(dim.snapshot(dimSchema),
+        col("k") === col("uid"))
+      .groupBy("seg").agg(
+        sum(col("v").cast(MaterializedView.SumType)).as("total"),
+        count(lit(1)).as(MaterializedView.CountCol))
+      .collect().map(r => (r.getString(0), r.get(1), r.getLong(2))).toSet
+    assert(TxLogTable(spark, mvRoot).snapshot(d.mvSchema).collect()
+      .map(r => (r.getString(0), r.get(1), r.getLong(2))).toSet === want)
+    info(s"refresh ran $jobs Spark jobs")
+    assert(jobs <= JobBudgetStar, s"refresh ran $jobs Spark jobs")
+  }
 }

@@ -175,6 +175,26 @@ class MvConcurrencySpec extends AnyFunSuite {
     }
   }
 
+  test("a refresh that touches more groups than maxDvMaskRows falls " +
+    "back to a full recompute instead of compacting forever") {
+    val (src, mvRoot) = fresh()
+    src.commit(df((1L, "a", 1.0), (2L, "b", 2.0)), overwrite = true)
+    MaterializedView.create(spark, mvRoot, "wide", src, schema,
+      Seq("k"), Seq("total" -> "v"))
+    spark.conf.set("spark.graft.sql.maxDvMaskRows", "3")
+    try {
+      // one append touching 5 groups: no incremental commit can mask
+      // them under the cap, so the refresh recomputes (an overwrite
+      // commit needs no mask)
+      src.commit(df((1L to 5L).map(k => (k, "x", k * 10.0)): _*),
+        overwrite = false)
+      val st = MaterializedView.refresh(spark, mvRoot)
+      assert(st.mode === "full", st)
+      assert(mvRows(mvRoot) === recompute(src))
+      assert(MaterializedView.refresh(spark, mvRoot).mode === "noop")
+    } finally spark.conf.unset("spark.graft.sql.maxDvMaskRows")
+  }
+
   test("malformed mv.def min/max lines fail with the malformed " +
     "diagnostic, not a raw string-index error") {
     for (field <- Seq("min", "max")) {

@@ -55,6 +55,15 @@ class TxLogCatalogSpec extends AnyFunSuite {
     assert(df.collect().map(_.getLong(0)).toSeq == Seq(2L))
   }
 
+  // files the executed scans of `df` read in its last action (the scans'
+  // own numFiles metric; every action resets it)
+  private def filesRead(df: org.apache.spark.sql.DataFrame): Long =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+          s.metrics.get("numFiles").map(_.value).getOrElse(0L)
+      }.sum
+
   test("filter above the relation prunes at the manifest") {
     spark.sql(
       "CREATE TABLE txcat.ns.banded (id BIGINT, v STRING) USING txlog")
@@ -65,14 +74,31 @@ class TxLogCatalogSpec extends AnyFunSuite {
     val t = TxLogTable(spark, s"$warehouse/ns/banded")
     val total = t.fileCount() // a VALUES insert may split into >1 file
     assert(total >= 3)
-    // the rule routes WHERE through snapshotWhere: files outside [10,11]
-    // never reach the scan
-    val df = spark.sql(
-      "SELECT id, v FROM txcat.ns.banded WHERE id >= 10 AND id <= 11")
-    assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(10L, 11L))
     val cand = t.candidateFilesWhere(col("id") >= 10 && col("id") <= 11).size
     assert(cand >= 1 && cand < total,
       s"manifest pruned nothing: $cand of $total files")
+    // the rule routes WHERE through snapshotWhere on every read shape:
+    // files outside [10,11] never reach the executed scan
+    spark.sql("CREATE OR REPLACE TEMP VIEW banded_v AS " +
+      "SELECT * FROM txcat.ns.banded")
+    val shapes = Seq(
+      "sql" -> spark.sql(
+        "SELECT id, v FROM txcat.ns.banded WHERE id >= 10 AND id <= 11"),
+      "alias" -> spark.sql(
+        "SELECT b.id, b.v FROM txcat.ns.banded b " +
+          "WHERE b.id >= 10 AND b.id <= 11"),
+      "dataframe" -> spark.table("txcat.ns.banded")
+        .filter(col("id") >= 10 && col("id") <= 11),
+      "view" -> spark.sql(
+        "SELECT id, v FROM banded_v WHERE id >= 10 AND id <= 11"))
+    shapes.foreach { case (shape, df) =>
+      assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(10L, 11L),
+        shape)
+      val read = filesRead(df)
+      assert(read == cand,
+        s"$shape read $read files, the manifest admits $cand of $total")
+    }
+    spark.catalog.dropTempView("banded_v")
   }
 
   test("DELETE FROM routes to the file-targeted COW delete") {
