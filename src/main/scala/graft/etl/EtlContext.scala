@@ -20,10 +20,15 @@ import org.apache.spark.sql.types.StructType
   * One `runTs` is captured per run and used for every SCD2 close/open in that
   * run (deterministic reruns; documented deviation from the reference's
   * per-statement `now()`, SURVEY §7).
+  *
+  * `seen` observes every table access as `(table, replaces)`: reads and
+  * existence probes with `false`, replaces with `true`. The pipeline's
+  * step declarations ([[EtlPipeline.Step]]) are checked against it.
   */
 final case class EtlContext(spark: SparkSession, warehouse: String,
                             runTs: java.sql.Timestamp,
-                            txLog: Boolean = false) {
+                            txLog: Boolean = false,
+                            seen: (String, Boolean) => Unit = (_, _) => ()) {
 
   val runTsCol: Column = lit(runTs)
 
@@ -32,19 +37,23 @@ final case class EtlContext(spark: SparkSession, warehouse: String,
   private def tx(table: String): graft.sources.TxLogTable =
     graft.sources.TxLogTable(spark, path(table).toString)
 
-  def exists(table: String): Boolean =
+  def exists(table: String): Boolean = {
+    seen(table, false)
     if (txLog) tx(table).latestVersion.isDefined
     else Files.exists(path(table))
+  }
 
   /** Read a table; absent table → empty DataFrame with the declared schema
     * (DDL-bootstrap semantics: create-if-absent, reference main.py:26-29).
     */
-  def read(table: String, schema: StructType): DataFrame =
+  def read(table: String, schema: StructType): DataFrame = {
+    seen(table, false)
     if (txLog) tx(table).snapshot(schema)
     else if (exists(table))
       spark.read.schema(schema).parquet(path(table).toString)
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  }
 
   /** Atomic table replace. Default backend: write to staging, then swap
     * directories — `partitionCols` lays the table out hive-style (SURVEY
@@ -57,7 +66,8 @@ final case class EtlContext(spark: SparkSession, warehouse: String,
     * the partition columns via basePath (TxLogTable scaladoc).
     */
   def replace(table: String, df: DataFrame,
-              partitionCols: Seq[String] = Nil): Unit =
+              partitionCols: Seq[String] = Nil): Unit = {
+    seen(table, true)
     if (txLog) {
       tx(table).commit(df, overwrite = true, partitionCols = partitionCols)
       ()
@@ -70,6 +80,7 @@ final case class EtlContext(spark: SparkSession, warehouse: String,
       deleteRecursive(path(table))
       Files.move(tmp, path(table))
     }
+  }
 
   /** The transaction-log table behind `name` (tx-log backend only) — the
     * operational surface: change feed, compaction, history, vacuum and

@@ -205,33 +205,45 @@ object ScheduleFlatten {
     ctx.replace("student_groups", updated)
   }
 
-  /** Full EP2 ingest: bronze version history (A5) + silver events (U8 per
-    * entity slice) + count back-propagation (A6/A7).
+  /** Full EP2 ingest on its own: rejects, bronze, count back-propagation
+    * and events, run as [[EtlPipeline.run]] runs them.
     */
-  def ingest(ctx: EtlContext, raw: DataFrame): Unit = {
-    // Per-entity error isolation (reference logic.py:422-424): an entity whose
-    // payload does not parse is quarantined (dropped from this run) instead of
-    // failing the batch — the distributed analogue of the reference's
-    // savepoint-rollback-and-continue.
-    val parsable = raw.filter(try_parse_json(col("raw_json")).isNotNull)
-    val rejects = raw.filter(try_parse_json(col("raw_json")).isNull)
-      .select(col("entity_name"), col("entity_type"), col("raw_json"),
-        lit("unparseable json").as("reason"),
-        ctx.runTsCol.as("rejected_at"))
-    ctx.replace("schedule_rejects", rejects)
-    val bronzeCur = ctx.read("schedule_json_storage",
+  def ingest(ctx: EtlContext, raw: DataFrame): Unit =
+    EtlPipeline.runSteps(ctx, EtlPipeline.scheduleSteps(raw))
+
+  /** Per-entity error isolation (reference logic.py:422-424): an entity
+    * whose payload does not parse is quarantined (dropped from this run)
+    * instead of failing the batch — the distributed analogue of the
+    * reference's savepoint-rollback-and-continue. The other ingest steps
+    * read only these rows.
+    */
+  def parsable(raw: DataFrame): DataFrame =
+    raw.filter(try_parse_json(col("raw_json")).isNotNull)
+
+  /** The quarantined entities of this run, with the reason. */
+  def rejects(ctx: EtlContext, raw: DataFrame): Unit =
+    ctx.replace("schedule_rejects",
+      raw.filter(try_parse_json(col("raw_json")).isNull)
+        .select(col("entity_name"), col("entity_type"), col("raw_json"),
+          lit("unparseable json").as("reason"),
+          ctx.runTsCol.as("rejected_at")))
+
+  /** A5: bronze version history of the raw payloads. */
+  def bronze(ctx: EtlContext, parsable: DataFrame): Unit = {
+    val cur = ctx.read("schedule_json_storage",
       Schemas.scheduleJsonStorageTable)
-    val bronzeInc = parsable.select(col("entity_name"), col("entity_type"),
+    val inc = parsable.select(col("entity_name"), col("entity_type"),
       col("raw_json").as("data"))
     ctx.replace("schedule_json_storage",
-      Scd2.versionedAppend(bronzeCur, bronzeInc,
+      Scd2.versionedAppend(cur, inc,
         Seq("entity_name", "entity_type"), ctx.runTsCol))
+  }
 
-    backPropagateCounts(ctx, parsable)
-
-    val eventsCur = ctx.read("schedule_events", Schemas.scheduleEventsTable)
+  /** Silver events, replaced per entity slice (U8). */
+  def events(ctx: EtlContext, parsable: DataFrame): Unit = {
+    val cur = ctx.read("schedule_events", Schemas.scheduleEventsTable)
     ctx.replace("schedule_events",
-      Upsert.deleteInsert(eventsCur, flatten(parsable),
+      Upsert.deleteInsert(cur, flatten(parsable),
         Seq("entity_name", "entity_type")),
       partitionCols = Seq("entity_type"))
   }

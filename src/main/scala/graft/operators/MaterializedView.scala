@@ -1440,17 +1440,27 @@ object MaterializedView {
     // (dimTargeted), enrichment comes from the dims at THEIR heads — the
     // recompute semantics the consumed #mvdim pins record; unmoved
     // snapshots are that same state already. At most one row per key.
-    val targeted: Option[Seq[Row]] = if (!minMaxTargeted) None else {
+    def reaggregated(keys: Seq[Row]): Seq[Row] = {
       val prepped = prepared(src.snapshot(extProj(src, proj, Seq(head)),
-        Some(head)), d, if (dimTargeted) dimSnapsNew else dimSnapsOld)
-      val kf = spark.createDataFrame(java.util.Arrays.asList(kRows: _*),
+        Some(head)), d, dimSnapsNew)
+      val kf = spark.createDataFrame(java.util.Arrays.asList(keys: _*),
         StructType(d.mvSchema.fields.take(d.groupCols.length)))
-      Some(aggregate(prepped.join(kf, d.groupCols.map(c =>
+      aggregate(prepped.join(kf, d.groupCols.map(c =>
         prepped(c) <=> kf(c)).reduce(_ && _), "left_semi"), d)
-        .collect().toSeq)
+        .collect().toSeq
     }
+    val targeted: Option[Seq[Row]] =
+      if (!minMaxTargeted) None else Some(reaggregated(kRows))
     betweenFoldAndCommitHook()
     val dimConsumed = dimDeltas.nonEmpty || dimTargetKeys.nonEmpty
+    // the view keeps no count of non-NULL inputs per SUM, so a sum that
+    // folds to exactly 0 in a window that removed rows may be a group
+    // whose remaining inputs are all NULL — NULL in a recompute. Those
+    // groups are re-aggregated from head like the MIN/MAX groups above.
+    val removes = dimConsumed || range.exists(v => rowChanging(opAt(v)))
+    val g = d.groupCols.length
+    def zeroSum(r: Row): Boolean = (g until g + d.sums.length).exists(j =>
+      !r.isNullAt(j) && r.getDecimal(j).signum == 0)
     // ONE keyed read of the view at the pin brings the affected groups'
     // current rows and their positions; the fold runs on the driver —
     // fact steps first (bringing the state to view(fact@head, all-old)),
@@ -1462,8 +1472,17 @@ object MaterializedView {
         "mv-refresh", Seq(s"#mvsrc=$head") ++
           d.dims.indices.map(i => s"#${dimMetaKey(i)}=" +
             (if (dimConsumed) dimHeads(i) else lastDims(i)))) { current =>
-      targeted.getOrElse(groups.fold(current,
-        foldSteps ++ dimDeltas.map(GroupFold.Plus(_))))
+      targeted.getOrElse {
+        val out = groups.fold(current,
+          foldSteps ++ dimDeltas.map(GroupFold.Plus(_)))
+        val zeroed = if (removes) out.filter(zeroSum) else Nil
+        if (zeroed.isEmpty) out
+        else {
+          val redo = zeroed.map(groups.keyOf).toSet
+          out.filterNot(r => redo(groups.keyOf(r))) ++
+            reaggregated(zeroed.map(r => Row.fromSeq(r.toSeq.take(g))))
+        }
+      }
     }
     // the vacuum floor advances ONLY when the refresh actually committed
     // a new #mvsrc: an all-cancelling window (every affected group

@@ -86,7 +86,10 @@ object Scd2 {
   /** A5 bronze versioning (`/root/reference/iis_etl/logic.py:282-297`): close
     * the open version for every key present in `incoming`, then append the
     * incoming rows as new open versions. Unlike full SCD2 there is no change
-    * detection — every arrival is a new version (raw-JSON history).
+    * detection — every arrival is a new version (raw-JSON history). A retry
+    * of the same run (same `runTs`) replaces the open versions that run
+    * appended instead of closing them at zero length, so a rerun after a
+    * partial failure leaves the history a clean run leaves.
     */
   def versionedAppend(current: DataFrame, incoming: DataFrame,
                       keys: Seq[String], runTs: Column,
@@ -94,7 +97,10 @@ object Scd2 {
                       validTo: String = "valid_to"): DataFrame = {
     val hit = incoming.select(keys.map(col): _*).distinct()
       .withColumn("__hit", lit(true))
+    val sameRun = col("__hit") && col(validTo).isNull &&
+      col(validFrom) === runTs
     val closed = current.join(hit, keys, "left")
+      .filter(!coalesce(sameRun, lit(false)))
       .withColumn(validTo,
         when(col("__hit") && col(validTo).isNull, runTs)
           .otherwise(col(validTo)))

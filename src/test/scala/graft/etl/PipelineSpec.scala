@@ -59,7 +59,9 @@ class PipelineSpec extends AnyFunSuite {
           {"id":501,"firstName":"Пётр","lastName":"Петров","urlId":"petrov",
            "academicDepartment":["Неизвестная кафедра"]},
           {"id":502,"firstName":"NoUrl","lastName":"Skip",
-           "academicDepartment":[]}]""")
+           "academicDepartment":[]},
+          {"id":503,"firstName":"Нина","lastName":"Новикова",
+           "urlId":"novikova","academicDepartment":["Новая кафедра"]}]""")
     write("auditories.json",
       """[{"id":900,"name":"101","buildingNumber":{"name":"4 к."},
            "capacity":30,"auditoryType":{"name":"Лекционная"},"departmentId":10},
@@ -146,9 +148,11 @@ class PipelineSpec extends AnyFunSuite {
     // employees (U5) + bridge (J2/U8): urlId-less skipped; normalized
     // two-key lookup; unknown dept dropped; set-dedup
     assert(table("employees").collect().map(_.getLong(0)).toSet ==
-      Set(500L, 501L))
+      Set(500L, 501L, 503L))
     val bridge = table("departments_employees").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
+    // 503 names department 77, which only auditory 902 embeds: employees
+    // reads `departments` before auditories inserts it, so no link yet
     assert(bridge == Set((10L, 500L), (11L, 500L)))
 
     // auditories (U6/J5/F11): display names, FK null-out, embedded dept FK
@@ -216,7 +220,9 @@ class PipelineSpec extends AnyFunSuite {
     write("employees.json",
       """[{"id":500,"firstName":"ДругоеИмя","lastName":"Иванов",
            "degree":"д.т.н.","rank":"профессор","urlId":"ivanov",
-           "academicDepartment":[{"name":"КСУ"}]}]""")
+           "academicDepartment":[{"name":"КСУ"}]},
+          {"id":503,"firstName":"Нина","lastName":"Новикова",
+           "urlId":"novikova","academicDepartment":["Новая кафедра"]}]""")
     write("schedules.json",
       """[{"entityName":"253501","entityType":"group","data":{"schedules":{
             "Понедельник":[
@@ -246,9 +252,11 @@ class PipelineSpec extends AnyFunSuite {
     val emp500 = table("employees").filter("id = 500").collect().head
     assert(emp500.getString(1) == "Иван")         // frozen
     assert(emp500.getString(5) == "профессор")    // updated
-    // bridge fully replaced for employee 500
+    // bridge fully replaced for employee 500; 503 links to department 77,
+    // which run 1's auditories inserted after run 1's employees read
     assert(table("departments_employees").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet == Set((11L, 500L)))
+      .map(r => (r.getLong(0), r.getLong(1))).toSet ==
+      Set((11L, 500L), (77L, 503L)))
 
     // bronze: 253501 has closed v1 + open v2; untouched entities stay open
     val b = table("schedule_json_storage")
@@ -294,5 +302,87 @@ class PipelineSpec extends AnyFunSuite {
     // and nothing from the broken entity leaked into bronze
     assert(table("schedule_json_storage")
       .filter("entity_name = 'brokenentity'").count() == 0)
+  }
+
+  private val allTables = Seq(
+    "system_state" -> Schemas.systemState,
+    "faculties" -> Schemas.facultiesTable,
+    "departments" -> Schemas.departmentsTable,
+    "specialities" -> Schemas.specialitiesTable,
+    "student_groups" -> Schemas.studentGroupsTable,
+    "employees" -> Schemas.employeesTable,
+    "departments_employees" -> Schemas.departmentsEmployeesTable,
+    "auditories" -> Schemas.auditoriesTable,
+    "schedule_rejects" -> Schemas.scheduleRejectsTable,
+    "schedule_json_storage" -> Schemas.scheduleJsonStorageTable,
+    "schedule_events" -> Schemas.scheduleEventsTable,
+    "occupancy_index" -> Schemas.occupancyIndexTable)
+
+  test("step declarations cover every table each step reads and replaces") {
+    writeRun1()
+    val in = EtlPipeline.inputs(spark, StagedDirSource(dir))
+    val steps = EtlPipeline.steps(in)
+    assert(steps.map(_.name).toSet.size == steps.size)
+    // a cold run, then a warm one over the state it left
+    Seq("2026-01-10 00:00:00", "2026-02-01 00:00:00").foreach { t =>
+      steps.foreach { step =>
+        val seen = scala.collection.mutable.Set.empty[(String, Boolean)]
+        step.body(EtlContext(spark, s"$dir/wh_declared", ts(t),
+          seen = (table, replaces) => seen.synchronized {
+            seen += ((table, replaces)); ()
+          }))
+        val read = seen.collect { case (tb, false) => tb }.toSet
+        val replaced = seen.collect { case (tb, true) => tb }.toSet
+        assert(replaced.nonEmpty, s"${step.name} replaced nothing")
+        assert(replaced.subsetOf(step.replaces),
+          s"${step.name} replaces undeclared ${replaced -- step.replaces}")
+        assert(read.forall(step.touches), s"${step.name} reads undeclared " +
+          s"${read.filterNot(step.touches)}")
+      }
+    }
+  }
+
+  test("a failed step stops only its dependents; a rerun converges") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    writeRun1()
+    val in = EtlPipeline.inputs(spark, StagedDirSource(dir))
+    val broken = in.copy(employees = in.employees.map(_.withColumn("v",
+      when(col("v").isNotNull, raise_error(lit("employees feed broken")))
+        .otherwise(col("v")))))
+    def ctx(wh: String, t: String) =
+      EtlContext(spark, s"$dir/$wh", ts(t), txLog = true)
+    def versions(wh: String): Map[String, Option[Int]] =
+      allTables.map { case (t, _) =>
+        t -> graft.sources.TxLogTable(spark, s"$dir/$wh/$t").latestVersion
+      }.toMap
+    def rows(wh: String): Map[String, Seq[String]] =
+      allTables.map { case (t, sch) =>
+        t -> graft.sources.TxLogTable(spark, s"$dir/$wh/$t").snapshot(sch)
+          .collect().map(_.toString).sorted.toSeq
+      }.toMap
+    val (t1, t2) = ("2026-01-10 00:00:00", "2026-02-01 00:00:00")
+    EtlPipeline.run(ctx("wh_failed", t1), in)
+    EtlPipeline.run(ctx("wh_clean", t1), in)
+
+    val before = versions("wh_failed")
+    val e = intercept[Exception](EtlPipeline.run(ctx("wh_failed", t2), broken))
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException])
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage)
+        .contains("employees feed broken")), e.toString)
+    val after = versions("wh_failed")
+    // employees failed: it and everything after it on its tables waited
+    Seq("employees", "departments_employees", "auditories",
+      "occupancy_index").foreach(t =>
+      assert(after(t) == before(t), s"$t committed after the failure"))
+    // steps on unrelated tables ran and committed
+    Seq("faculties", "specialities", "student_groups", "schedule_rejects",
+      "schedule_json_storage", "schedule_events").foreach(t =>
+      assert(after(t).get > before(t).get, s"$t did not commit"))
+
+    EtlPipeline.run(ctx("wh_failed", t2), in)
+    EtlPipeline.run(ctx("wh_clean", t2), in)
+    val (got, want) = (rows("wh_failed"), rows("wh_clean"))
+    allTables.foreach { case (t, _) => assert(got(t) == want(t), t) }
   }
 }

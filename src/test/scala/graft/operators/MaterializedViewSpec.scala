@@ -245,6 +245,53 @@ class MaterializedViewSpec extends AnyFunSuite {
     assert(d.projSchema.fieldNames.contains("cat"))
   }
 
+  // (group, count, total) with a NULL total kept as None
+  private def totals(mvRoot: String): Set[(Any, Long, Option[BigDecimal])] = {
+    val d = MaterializedView.definition(spark, mvRoot)
+    TxLogTable(spark, mvRoot).snapshot(d.mvSchema).collect().map(r =>
+      (r.get(0), r.getAs[Long](MaterializedView.CountCol),
+        Option(r.getAs[java.math.BigDecimal]("total")).map(BigDecimal(_))))
+      .toSet
+  }
+
+  test("a SUM whose remaining inputs are all NULL folds to NULL, as a " +
+    "recompute gives it; a true zero stays 0") {
+    val (src, mvRoot) = fresh()
+    src.commit(Seq((1L, "a", Option(5.0)), (1L, "a", None),
+      (2L, "b", Option(3.0)), (3L, "c", Option(2.0)), (3L, "c", Option(-2.0)),
+      (3L, "c", Option(4.0))).toDF("k", "cat", "v"), overwrite = true)
+    MaterializedView.create(spark, mvRoot, "nullsum", src, schema,
+      Seq("k"), Seq("total" -> "v"))
+    src.deleteWhere(schema, col("v") === 5.0 || col("v") === 4.0)
+    val st = MaterializedView.refresh(spark, mvRoot)
+    assert(st.mode === "incremental", st)
+    assert(totals(mvRoot) === Set[(Any, Long, Option[BigDecimal])](
+      (1L, 1L, None), (2L, 1L, Some(BigDecimal(3))),
+      (3L, 2L, Some(BigDecimal(0)))))
+  }
+
+  test("star view: a dim delta that moves a group's only non-NULL input " +
+    "away leaves its SUM NULL, as a recompute gives it") {
+    val dir = Files.createTempDirectory("mvjnull")
+    val fact = TxLogTable(spark, dir.resolve("fact").toString)
+    val dim = TxLogTable(spark, dir.resolve("dim").toString)
+    val mvRoot = dir.resolve("mv").toString
+    val dimSchema = StructType(Seq(
+      StructField("uid", LongType), StructField("seg", StringType)))
+    fact.commit(Seq((1L, "x", Option(5.0)), (2L, "x", None))
+      .toDF("k", "cat", "v"), overwrite = true)
+    dim.commit(Seq((1L, "gold"), (2L, "gold")).toDF("uid", "seg"),
+      overwrite = true)
+    MaterializedView.createJoined(spark, mvRoot, "starnull", fact, schema,
+      dim, dimSchema, Seq("k" -> "uid"), Seq("seg"), Seq("total" -> "v"))
+    dim.deleteWhere(dimSchema, col("uid") === 1L)
+    dim.commit(Seq((1L, "iron")).toDF("uid", "seg"), overwrite = false)
+    val st = MaterializedView.refresh(spark, mvRoot)
+    assert(st.mode === "incremental", st)
+    assert(totals(mvRoot) === Set[(Any, Long, Option[BigDecimal])](
+      ("gold", 1L, None), ("iron", 1L, Some(BigDecimal(5)))))
+  }
+
   test("star-schema view: fact deltas fold against the PINNED dim; a dim " +
     "change folds as a dim delta that re-pins — never O(view)") {
     val dir = Files.createTempDirectory("mvj")

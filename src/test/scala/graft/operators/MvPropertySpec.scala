@@ -28,8 +28,8 @@ class MvPropertySpec extends AnyFunSuite {
     StructField("k", LongType), StructField("v", DoubleType)))
 
   private sealed trait Op
-  private case class Append(rows: List[(Long, Double)]) extends Op
-  private case class Overwrite(rows: List[(Long, Double)]) extends Op
+  private case class Append(rows: List[(Long, Option[Double])]) extends Op
+  private case class Overwrite(rows: List[(Long, Option[Double])]) extends Op
   private case class DeleteCow(ks: List[Long]) extends Op
   private case class DeletePos(ks: List[Long]) extends Op
   private case class UpdatePos(ks: List[Long]) extends Op
@@ -38,10 +38,16 @@ class MvPropertySpec extends AnyFunSuite {
   private case object Vac extends Op
   private case object Refresh extends Op
 
-  private val rowsGen: Gen[List[(Long, Double)]] =
+  // NULL measures: a SUM over only NULL inputs is NULL, not 0
+  private def dec(r: org.apache.spark.sql.Row, c: String): Option[BigDecimal] =
+    Option(r.getAs[java.math.BigDecimal](c)).map(BigDecimal(_))
+  private def dbl(r: org.apache.spark.sql.Row, c: String): Option[Double] =
+    Option(r.getAs[java.lang.Double](c)).map(_.doubleValue)
+
+  private val rowsGen: Gen[List[(Long, Option[Double])]] =
     Gen.resize(3, Gen.nonEmptyListOf(for {
       k <- Gen.choose(1L, 5L)
-      v <- Gen.oneOf(1.5, 2.25, 3.0, 10.0)
+      v <- Gen.oneOf(Some(1.5), Some(2.25), Some(3.0), Some(10.0), None)
     } yield (k, v)))
 
   private val ksGen: Gen[List[Long]] =
@@ -80,20 +86,20 @@ class MvPropertySpec extends AnyFunSuite {
         Seed(4200L + i)), 4200L + i)
     }
 
-  private def state(src: TxLogTable): Set[(Long, Long, BigDecimal)] =
+  private def state(src: TxLogTable): Set[(Long, Long, Option[BigDecimal])] =
     src.snapshot(schema).groupBy("k")
       .agg(count(lit(1)).as("n"),
         sum(col("v").cast(DecimalType(38, 6))).as("t"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1),
-        BigDecimal(r.getAs[java.math.BigDecimal]("t")))).toSet
+        dec(r, "t"))).toSet
 
   private def mvState(spark0: org.apache.spark.sql.SparkSession,
-                      mvRoot: String): Set[(Long, Long, BigDecimal)] = {
+                      mvRoot: String): Set[(Long, Long, Option[BigDecimal])] = {
     val d = MaterializedView.definition(spark0, mvRoot)
     TxLogTable(spark0, mvRoot).snapshot(d.mvSchema).collect()
       .map(r => (r.getLong(0), r.getAs[Long](MaterializedView.CountCol),
-        BigDecimal(r.getAs[java.math.BigDecimal]("total")))).toSet
+        dec(r, "total"))).toSet
   }
 
   test("star-schema fuzz: random fact DML + mid-program dim churn — the " +
@@ -109,20 +115,20 @@ class MvPropertySpec extends AnyFunSuite {
       dim.commit((1L to 6L).map(i => (i, s"s${i % 3}"))
         .toDF("uid", "seg"), overwrite = true)
       var created = false
-      def joinState(): Set[(String, Long, BigDecimal)] =
+      def joinState(): Set[(String, Long, Option[BigDecimal])] =
         fact.snapshot(schema).join(dim.snapshot(dimSchema),
             col("k") === col("uid"))
           .groupBy("seg")
           .agg(count(lit(1)).as("n"),
             sum(col("v").cast(DecimalType(38, 6))).as("t"))
           .collect().map(r => (r.getString(0), r.getLong(1),
-            BigDecimal(r.getAs[java.math.BigDecimal]("t")))).toSet
-      def mvJState(): Set[(String, Long, BigDecimal)] = {
+            dec(r, "t"))).toSet
+      def mvJState(): Set[(String, Long, Option[BigDecimal])] = {
         val d = MaterializedView.definition(spark, mvRoot)
         TxLogTable(spark, mvRoot).snapshot(d.mvSchema).collect()
           .map(r => (r.getString(0),
             r.getAs[Long](MaterializedView.CountCol),
-            BigDecimal(r.getAs[java.math.BigDecimal]("total")))).toSet
+            dec(r, "total"))).toSet
       }
       program.zipWithIndex.foreach { case (op, step) =>
         def ctx = s"seed=$seed step=$step op=$op program=$program"
@@ -185,7 +191,7 @@ class MvPropertySpec extends AnyFunSuite {
       4 -> Gen.const(DRefresh))
     val dProgGen: Gen[List[DOp]] = for {
       tail <- Gen.resize(12, Gen.listOf(dopGen))
-    } yield (FactOp(Overwrite(List((1L, 1.5), (2L, 3.0)))) :: tail) :+
+    } yield (FactOp(Overwrite(List((1L, Some(1.5)), (2L, Some(3.0))))) :: tail) :+
       DRefresh
     var dimFolds = 0
     var shuffleFolds = 0
@@ -204,20 +210,20 @@ class MvPropertySpec extends AnyFunSuite {
       dim.commit((1L to 6L).map(i => (i, s"s${i % 3}"))
         .toDF("uid", "seg"), overwrite = true)
       var created = false
-      def joinState(): Set[(String, Long, BigDecimal)] =
+      def joinState(): Set[(String, Long, Option[BigDecimal])] =
         fact.snapshot(schema).join(dim.snapshot(dimSchema),
             col("k") === col("uid"))
           .groupBy("seg")
           .agg(count(lit(1)).as("n"),
             sum(col("v").cast(DecimalType(38, 6))).as("t"))
           .collect().map(r => (r.getString(0), r.getLong(1),
-            BigDecimal(r.getAs[java.math.BigDecimal]("t")))).toSet
-      def mvJState(): Set[(String, Long, BigDecimal)] = {
+            dec(r, "t"))).toSet
+      def mvJState(): Set[(String, Long, Option[BigDecimal])] = {
         val d = MaterializedView.definition(spark, mvRoot)
         TxLogTable(spark, mvRoot).snapshot(d.mvSchema).collect()
           .map(r => (r.getString(0),
             r.getAs[Long](MaterializedView.CountCol),
-            BigDecimal(r.getAs[java.math.BigDecimal]("total")))).toSet
+            dec(r, "total"))).toSet
       }
       program.zipWithIndex.foreach { case (dop, step) =>
         def ctx = s"seed=$seed step=$step op=$dop program=$program"
@@ -370,9 +376,9 @@ class MvPropertySpec extends AnyFunSuite {
     "refreshes — fold == recompute on both handles, tagged snapshots " +
     "stay readable and exact, abandoned audits drop cleanly") {
     sealed trait COp
-    case class MAppend(rows: List[(Long, Double)]) extends COp
+    case class MAppend(rows: List[(Long, Option[Double])]) extends COp
     case class MDelete(ks: List[Long]) extends COp
-    case class BAppend(rows: List[(Long, Double)]) extends COp
+    case class BAppend(rows: List[(Long, Option[Double])]) extends COp
     case object MRefresh extends COp
     case object BRefresh extends COp
     case object Fork extends COp
@@ -403,15 +409,15 @@ class MvPropertySpec extends AnyFunSuite {
       val mv = TxLogTable(spark, mvRoot)
       var branch = false
       var tagN = 0
-      var tagged = Map.empty[String, Set[(Long, Long, BigDecimal)]]
+      var tagged = Map.empty[String, Set[(Long, Long, Option[BigDecimal])]]
       def bSrc = src.branchTable("a")
       def bHandle = TxLogTable.branchRoot(mvRoot, "a")
-      def stateAt(v: Int): Set[(Long, Long, BigDecimal)] =
+      def stateAt(v: Int): Set[(Long, Long, Option[BigDecimal])] =
         src.snapshot(schema, Some(v)).groupBy("k")
           .agg(count(lit(1)).as("n"),
             sum(col("v").cast(DecimalType(38, 6))).as("t"))
           .collect().map(r => (r.getLong(0), r.getLong(1),
-            BigDecimal(r.getAs[java.math.BigDecimal]("t")))).toSet
+            dec(r, "t"))).toSet
       program.zipWithIndex.foreach { case (op, step) =>
         def ctx = s"seed=$seed step=$step op=$op program=$program"
         op match {
@@ -489,21 +495,21 @@ class MvPropertySpec extends AnyFunSuite {
       val mvRoot = dir.resolve("mv").toString
       var created = false
       var sawRowChange = false
-      def mmRecompute(): Set[(Long, Long, BigDecimal, Double, Double)] =
+      def mmRecompute(): Set[(Long, Long, Option[BigDecimal], Option[Double], Option[Double])] =
         src.snapshot(schema).groupBy("k")
           .agg(count(lit(1)).as("n"),
             sum(col("v").cast(DecimalType(38, 6))).as("t"),
             min(col("v")).as("lo"), max(col("v")).as("hi"))
           .collect().map(r => (r.getLong(0), r.getLong(1),
-            BigDecimal(r.getAs[java.math.BigDecimal]("t")),
-            r.getDouble(3), r.getDouble(4))).toSet
-      def mmView(): Set[(Long, Long, BigDecimal, Double, Double)] = {
+            dec(r, "t"),
+            dbl(r, "lo"), dbl(r, "hi"))).toSet
+      def mmView(): Set[(Long, Long, Option[BigDecimal], Option[Double], Option[Double])] = {
         val d = MaterializedView.definition(spark, mvRoot)
         TxLogTable(spark, mvRoot).snapshot(d.mvSchema).collect()
           .map(r => (r.getLong(0),
             r.getAs[Long](MaterializedView.CountCol),
-            BigDecimal(r.getAs[java.math.BigDecimal]("total")),
-            r.getAs[Double]("lo"), r.getAs[Double]("hi"))).toSet
+            dec(r, "total"),
+            dbl(r, "lo"), dbl(r, "hi"))).toSet
       }
       program.zipWithIndex.foreach { case (op, step) =>
         def ctx = s"seed=$seed step=$step op=$op program=$program"
@@ -581,8 +587,8 @@ class MvPropertySpec extends AnyFunSuite {
     // would leave the both-moved coverage to chance
     val dProgGen: Gen[List[DOp]] = for {
       tail <- Gen.resize(14, Gen.listOf(dopGen))
-    } yield (FactOp(Overwrite(List((1L, 1.5), (2L, 3.0)))) :: tail) ++
-      List(DRefresh, FactOp(Append(List((7L, 2.5)))), D1Ins(List(42L)),
+    } yield (FactOp(Overwrite(List((1L, Some(1.5)), (2L, Some(3.0))))) :: tail) ++
+      List(DRefresh, FactOp(Append(List((7L, Some(2.5))))), D1Ins(List(42L)),
         D2Ins(List(42L)), DRefresh)
     var bothMovedInc = 0
     forAllSeeded(dProgGen, 10) { (program, seed) =>
@@ -596,7 +602,7 @@ class MvPropertySpec extends AnyFunSuite {
       dimC.commit((1L to 6L).map(i => (i, s"c${i % 2}"))
         .toDF("uid2", "cls"), overwrite = true)
       var created = false
-      def joinState(): Set[(String, String, Long, BigDecimal)] =
+      def joinState(): Set[(String, String, Long, Option[BigDecimal])] =
         fact.snapshot(schema)
           .join(dimU.snapshot(duSchema), col("k") === col("uid"))
           .join(dimC.snapshot(dcSchema), col("k") === col("uid2"))
@@ -605,13 +611,13 @@ class MvPropertySpec extends AnyFunSuite {
             sum(col("v").cast(DecimalType(38, 6))).as("t"))
           .collect().map(r => (r.getString(0), r.getString(1),
             r.getLong(2),
-            BigDecimal(r.getAs[java.math.BigDecimal]("t")))).toSet
-      def mvJState(): Set[(String, String, Long, BigDecimal)] = {
+            dec(r, "t"))).toSet
+      def mvJState(): Set[(String, String, Long, Option[BigDecimal])] = {
         val d = MaterializedView.definition(spark, mvRoot)
         TxLogTable(spark, mvRoot).snapshot(d.mvSchema).collect()
           .map(r => (r.getString(0), r.getString(1),
             r.getAs[Long](MaterializedView.CountCol),
-            BigDecimal(r.getAs[java.math.BigDecimal]("total")))).toSet
+            dec(r, "total"))).toSet
       }
       def insIfAbsent(dt: TxLogTable, sch: StructType, key: String,
                       ks: List[Long], mk: Long => (Long, String)): Unit = {
@@ -706,7 +712,7 @@ class MvPropertySpec extends AnyFunSuite {
       4 -> Gen.const(DRefresh))
     val dProgGen: Gen[List[DOp]] = for {
       tail <- Gen.resize(12, Gen.listOf(dopGen))
-    } yield (FactOp(Overwrite(List((1L, 1.5), (2L, 3.0)))) :: tail) :+
+    } yield (FactOp(Overwrite(List((1L, Some(1.5)), (2L, Some(3.0))))) :: tail) :+
       DRefresh
     var dimTargeted = 0
     forAllSeeded(dProgGen, 10) { (program, seed) =>
@@ -717,7 +723,7 @@ class MvPropertySpec extends AnyFunSuite {
       dim.commit((1L to 6L).map(i => (i, s"s${i % 3}"))
         .toDF("uid", "seg"), overwrite = true)
       var created = false
-      def joinState(): Set[(String, Long, BigDecimal, Double, Double)] =
+      def joinState(): Set[(String, Long, Option[BigDecimal], Option[Double], Option[Double])] =
         fact.snapshot(schema).join(dim.snapshot(dimSchema),
             col("k") === col("uid"))
           .groupBy("seg")
@@ -725,15 +731,15 @@ class MvPropertySpec extends AnyFunSuite {
             sum(col("v").cast(DecimalType(38, 6))).as("t"),
             min(col("v")).as("lo"), max(col("v")).as("hi"))
           .collect().map(r => (r.getString(0), r.getLong(1),
-            BigDecimal(r.getAs[java.math.BigDecimal]("t")),
-            r.getDouble(3), r.getDouble(4))).toSet
-      def mvJState(): Set[(String, Long, BigDecimal, Double, Double)] = {
+            dec(r, "t"),
+            dbl(r, "lo"), dbl(r, "hi"))).toSet
+      def mvJState(): Set[(String, Long, Option[BigDecimal], Option[Double], Option[Double])] = {
         val d = MaterializedView.definition(spark, mvRoot)
         TxLogTable(spark, mvRoot).snapshot(d.mvSchema).collect()
           .map(r => (r.getString(0),
             r.getAs[Long](MaterializedView.CountCol),
-            BigDecimal(r.getAs[java.math.BigDecimal]("total")),
-            r.getAs[Double]("lo"), r.getAs[Double]("hi"))).toSet
+            dec(r, "total"),
+            dbl(r, "lo"), dbl(r, "hi"))).toSet
       }
       program.zipWithIndex.foreach { case (dop, step) =>
         def ctx = s"seed=$seed step=$step op=$dop program=$program"
@@ -798,8 +804,8 @@ class MvPropertySpec extends AnyFunSuite {
     val dimSchema = StructType(Seq(
       StructField("uid", LongType), StructField("seg", StringType)))
     sealed trait TOp
-    case class FMain(rows: List[(Long, Double)]) extends TOp
-    case class FBranch(rows: List[(Long, Double)]) extends TOp
+    case class FMain(rows: List[(Long, Option[Double])]) extends TOp
+    case class FBranch(rows: List[(Long, Option[Double])]) extends TOp
     case class DMain(ks: List[Long]) extends TOp
     case class DBranch(ks: List[Long]) extends TOp
     case object RMain extends TOp
@@ -822,7 +828,7 @@ class MvPropertySpec extends AnyFunSuite {
     // the deterministic tail guarantees each seed also lands ONE clean
     // fork→write-both-sides→audit→publish cycle
     val progGen = Gen.resize(14, Gen.listOf(topGen)).map(_ ++ List(
-      TPublish, TFork, FBranch(List((7L, 7.5))), DBranch(List(7L)),
+      TPublish, TFork, FBranch(List((7L, Some(7.5)))), DBranch(List(7L)),
       RBranch, TPublish))
     var publishes = 0
     forAllSeeded(progGen, 8) { (program, seed) =>
@@ -841,19 +847,19 @@ class MvPropertySpec extends AnyFunSuite {
       var branch = false
       def bHandle = TxLogTable.branchRoot(mvRoot, "a")
       def stateOf(f: TxLogTable, dm: TxLogTable)
-          : Set[(String, Long, BigDecimal)] =
+          : Set[(String, Long, Option[BigDecimal])] =
         f.snapshot(schema).join(dm.snapshot(dimSchema),
             col("k") === col("uid"))
           .groupBy("seg").agg(count(lit(1)).as("n"),
             sum(col("v").cast(DecimalType(38, 6))).as("t"))
           .collect().map(r => (r.getString(0), r.getLong(1),
-            BigDecimal(r.getAs[java.math.BigDecimal]("t")))).toSet
-      def viewOf(root: String): Set[(String, Long, BigDecimal)] = {
+            dec(r, "t"))).toSet
+      def viewOf(root: String): Set[(String, Long, Option[BigDecimal])] = {
         val d = MaterializedView.definition(spark, mvRoot)
         TxLogTable(spark, root).snapshot(d.mvSchema).collect()
           .map(r => (r.getString(0),
             r.getAs[Long](MaterializedView.CountCol),
-            BigDecimal(r.getAs[java.math.BigDecimal]("total")))).toSet
+            dec(r, "total"))).toSet
       }
       program.zipWithIndex.foreach { case (op, step) =>
         def ctx = s"seed=$seed step=$step op=$op program=$program"
@@ -924,8 +930,8 @@ class MvPropertySpec extends AnyFunSuite {
     val dimSchema = StructType(Seq(
       StructField("uid", LongType), StructField("seg", StringType)))
     sealed trait TOp
-    case class FMain(rows: List[(Long, Double)]) extends TOp
-    case class FBranch(rows: List[(Long, Double)]) extends TOp
+    case class FMain(rows: List[(Long, Option[Double])]) extends TOp
+    case class FBranch(rows: List[(Long, Option[Double])]) extends TOp
     case class FDelMain(ks: List[Long]) extends TOp
     case class FDelBranch(ks: List[Long]) extends TOp
     case class DMain(ks: List[Long]) extends TOp
@@ -950,7 +956,7 @@ class MvPropertySpec extends AnyFunSuite {
       2 -> Gen.const(TPublish),
       1 -> Gen.const(TVac))
     val progGen = Gen.resize(14, Gen.listOf(topGen)).map(_ ++ List(
-      TPublish, TFork, FBranch(List((7L, 7.5))), DBranch(List(7L)),
+      TPublish, TFork, FBranch(List((7L, Some(7.5)))), DBranch(List(7L)),
       FDelBranch(List(2L)), RBranch, TPublish))
     var dimTargeted = 0
     forAllSeeded(progGen, 6) { (program, seed) =>
@@ -970,23 +976,23 @@ class MvPropertySpec extends AnyFunSuite {
       var branch = false
       def bHandle = TxLogTable.branchRoot(mvRoot, "a")
       def stateOf(f: TxLogTable, dm: TxLogTable)
-          : Set[(String, Long, BigDecimal, Double, Double)] =
+          : Set[(String, Long, Option[BigDecimal], Option[Double], Option[Double])] =
         f.snapshot(schema).join(dm.snapshot(dimSchema),
             col("k") === col("uid"))
           .groupBy("seg").agg(count(lit(1)).as("n"),
             sum(col("v").cast(DecimalType(38, 6))).as("t"),
             min(col("v")).as("lo"), max(col("v")).as("hi"))
           .collect().map(r => (r.getString(0), r.getLong(1),
-            BigDecimal(r.getAs[java.math.BigDecimal]("t")),
-            r.getDouble(3), r.getDouble(4))).toSet
+            dec(r, "t"),
+            dbl(r, "lo"), dbl(r, "hi"))).toSet
       def viewOf(root: String)
-          : Set[(String, Long, BigDecimal, Double, Double)] = {
+          : Set[(String, Long, Option[BigDecimal], Option[Double], Option[Double])] = {
         val d = MaterializedView.definition(spark, mvRoot)
         TxLogTable(spark, root).snapshot(d.mvSchema).collect()
           .map(r => (r.getString(0),
             r.getAs[Long](MaterializedView.CountCol),
-            BigDecimal(r.getAs[java.math.BigDecimal]("total")),
-            r.getAs[Double]("lo"), r.getAs[Double]("hi"))).toSet
+            dec(r, "total"),
+            dbl(r, "lo"), dbl(r, "hi"))).toSet
       }
       def refreshCounting(root: String, dimT: TxLogTable): Unit = {
         val dimBefore = MaterializedView.lastDimVersion(

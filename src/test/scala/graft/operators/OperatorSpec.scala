@@ -95,6 +95,14 @@ class OperatorSpec extends AnyFunSuite {
         Option(r.getTimestamp(4)))).toSet
     assert(out == Set(
       ("a", "v1", Some(t2)), ("a", "v2", None), ("b", "v1", None)))
+    // a retry at the same run instant replaces that run's open version
+    val again = Scd2.versionedAppend(
+      Scd2.versionedAppend(cur, inc, Seq("k", "t"), lit(t2)),
+      Seq(("a", "g", "v3")).toDF("k", "t", "data"), Seq("k", "t"), lit(t2))
+      .collect().map(r => (r.getString(0), r.getString(2),
+        Option(r.getTimestamp(4)))).toSet
+    assert(again == Set(
+      ("a", "v1", Some(t2)), ("a", "v3", None), ("b", "v1", None)))
   }
 
   test("SemDedup.apply derives k from the corpus and equals pinned-k core") {
