@@ -57,7 +57,8 @@ object Bench {
     // ratio cannot distinguish a real 1.3x regression from co-tenant
     // noise; the calibration pair brackets the run and `value_cal`
     // normalizes the headline to the pinned reference below. Per-query
-    // A/B verdicts stay with tools.IsoBench min-of-N (PLANS.md §bench).
+    // A/B verdicts stay with `tools.Profile --iso` min-of-N (PLANS.md
+    // §bench).
     def calibQuery(): Unit =
       spark.read.parquet(s"$sfDir/lineitem.parquet")
         .groupBy("l_returnflag").sum("l_quantity").collect()

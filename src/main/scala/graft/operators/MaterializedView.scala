@@ -142,8 +142,10 @@ object MaterializedView {
     }
   }
 
-  /** `mode` ∈ noop | incremental | full; `groupsChanged` is -1 for a full
-    * recompute (counting it would cost a job for a log line). */
+  /** `mode` ∈ noop | incremental | full; `groupsChanged` counts the
+    * groups the refresh changed — for a full recompute, every group of
+    * the recomputed view: its row count, summed from the committed
+    * files' manifest row counts (no job; -1 only if a file lacks one). */
   final case class RefreshStats(mode: String, fromVersion: Int,
                                 toVersion: Int, groupsChanged: Long,
                                 mvVersion: Int)
@@ -849,6 +851,16 @@ object MaterializedView {
     * off it (a racing refresh/compact won). The loser retries from
     * scratch against the winner's state, so the same source window can
     * never be folded twice onto already-folded state.
+    *
+    * Failures: an error while probing a moved dimension — reading its
+    * change feed for the changed join keys, or the snapshot diff that
+    * stands in for it — fails the refresh, as an error reading the
+    * source's own feed does; it is not degraded to a recompute. Nothing
+    * is committed before the fold, so the view stays at its pre-refresh
+    * version and content, and a retry once the cause is gone converges.
+    * A damaged dimension window then shows up as an error rather than as
+    * an O(view) recompute on every refresh; `full = true` recomputes from
+    * the dimension heads when that window is gone for good.
     */
   def refresh(spark: SparkSession, mvRoot: String,
               full: Boolean = false): RefreshStats = {
@@ -1039,7 +1051,8 @@ object MaterializedView {
       src.registerCursor(d.cursorName, head)
       dimTs.zip(dimHeads).zipWithIndex.foreach { case ((dt, dh), i) =>
         dt.registerCursor(d.dimCursorName(i), dh) }
-      RefreshStats("full", last, head, -1L, mvv)
+      RefreshStats("full", last, head,
+        mv.metaRowCount(Some(mvv)).getOrElse(-1L), mvv)
     }
     if (needFull) return fullRecompute()
     // ---- incremental fold ------------------------------------------
@@ -1184,25 +1197,27 @@ object MaterializedView {
       // a richer-typed dim keeps the probe below.
       val localDiffK: Option[IndexedSeq[Row]] =
         if (!dProj.fields.forall(f => sqlEqualsSafe(f.dataType))) None
+        // one pinned snapshot serves both pins: nothing to diff
+        else if (dimSnapsOld(i) eq dimSnapsNew(i)) Some(IndexedSeq.empty)
         else for {
           (oldRows, oIdx) <- localKeyedRows(dimSnapsOld(i).df, dimKeys)
           (newRows, nIdx) <- localKeyedRows(dimSnapsNew(i).df, dimKeys)
         } yield {
-          // per non-null key: multiset of full projected rows (the
-          // feed's na.drop excludes null keys the same way)
-          def byKey(rows: Seq[Row], idx: Seq[Int])
-              : Map[IndexedSeq[Any], Map[Seq[Any], Int]] =
-            rows.iterator.filter(r => !idx.exists(r.isNullAt))
-              .map(r => idx.map(r.get).toIndexedSeq -> r.toSeq).toSeq
-              .groupBy(_._1).map { case (k, rs) =>
-                k -> rs.map(_._2).groupBy(identity)
-                  .map { case (row, dup) => (row, dup.size) } }
-          val o = byKey(oldRows, oIdx)
-          val nw = byKey(newRows, nIdx)
-          (o.keySet ++ nw.keySet).iterator
-            .filter(k => o.get(k) != nw.get(k))
-            .map(k => Row.fromSeq(k))
-            .toIndexedSeq
+          // a key's row multisets differ between the pins iff one of its
+          // full projected rows has a different count: one count map per
+          // side, one pass each (the feed's na.drop excludes null keys
+          // the same way).
+          def counts(rows: Seq[Row], idx: Seq[Int]): Map[Seq[Any], Int] =
+            rows.view.filterNot(r => idx.exists(r.isNullAt))
+              .groupMapReduce(_.toSeq)(_ => 1)(_ + _)
+          val o = counts(oldRows, oIdx)
+          val nw = counts(newRows, nIdx)
+          def moved(side: Map[Seq[Any], Int], other: Map[Seq[Any], Int],
+                    idx: Seq[Int]) =
+            side.collect { case (row, n) if !other.get(row).contains(n) =>
+              idx.map(row) }
+          (moved(o, nw, oIdx) ++ moved(nw, o, nIdx)).toSeq.distinct
+            .map(Row.fromSeq).toIndexedSeq
         }
       // without the local diff, small changed-key sets collect in ONE
       // bounded take and live as a driver-local relation: the key frame

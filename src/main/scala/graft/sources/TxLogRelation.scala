@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
@@ -43,39 +43,9 @@ final case class TxLogRelation(sqlContext: SQLContext, root: String,
     // #schema line is the contract; footers are only a fallback for
     // raw tables that never declared one.
     version.orElse(table.latestVersion).flatMap(table.schemaOf)
-      .getOrElse {
-        val rels = table.entries(version).map(_.rel)
-        require(rels.nonEmpty,
-          s"txlog table at $root is empty or absent: pass an explicit " +
-            "schema")
-        spark.read
-          .option("basePath",
-            java.nio.file.Paths.get(
-              TxLogTable.pathOfRoot(root), "data").toString)
-          .parquet(rels.map(r =>
-            java.nio.file.Paths.get(
-              TxLogTable.pathOfRoot(root), "data", r).toString): _*).schema
-      }
-  }
-
-  // conservative Filter → Column translation: anything not understood
-  // yields None and simply doesn't participate in manifest pruning (Spark
-  // still applies it post-scan — we report all filters unhandled)
-  private def toPredicate(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v) => Some(col(a) === lit(v))
-    case GreaterThan(a, v) => Some(col(a) > lit(v))
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case LessThan(a, v) => Some(col(a) < lit(v))
-    case LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-    case In(a, vs) if vs.nonEmpty => Some(col(a).isin(vs.toIndexedSeq: _*))
-    case IsNull(a) => Some(col(a).isNull)
-    case IsNotNull(a) => Some(col(a).isNotNull)
-    case And(l, r) =>
-      (toPredicate(l), toPredicate(r)) match {
-        case (Some(a), Some(b)) => Some(a && b)
-        case (a, b) => a.orElse(b) // one conjunct still prunes soundly
-      }
-    case _ => None // Or/Not/StringStartsWith/...: no pruning, still correct
+      .orElse(table.fileSchema(version))
+      .getOrElse(throw new IllegalArgumentException(
+        s"txlog table at $root is empty or absent: pass an explicit schema"))
   }
 
   override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
@@ -83,7 +53,9 @@ final case class TxLogRelation(sqlContext: SQLContext, root: String,
 
   override def buildScan(requiredColumns: Array[String],
                          filters: Array[Filter]): RDD[Row] = {
-    val pred = filters.flatMap(toPredicate).reduceOption(_ && _)
+    // conservative: a filter that does not translate just prunes nothing
+    val pred = filters.flatMap(v2.TxLogV2Table.loosePredicate)
+      .reduceOption(_ && _)
     val snap: DataFrame = pred match {
       case Some(p) => table.snapshotWhere(schema, p, version)
       case None => table.snapshot(schema, version)

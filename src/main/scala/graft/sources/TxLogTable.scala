@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit, pmod, xxhash64}
-import org.apache.spark.sql.graft.PredicateRanges
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graft.{ManifestFileIndex, PredicateRanges}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Minimal transaction-log table format — the commit protocol behind the
@@ -936,6 +937,10 @@ object TxLogTable {
   val DvSchema: StructType = StructType(Seq(
     StructField("file", org.apache.spark.sql.types.StringType),
     StructField("pos", org.apache.spark.sql.types.LongType)))
+
+  /** The change feed's per-file tag: the version that added the file. */
+  val CommitVersionTag: StructType = StructType(Seq(
+    StructField("_commit_version", org.apache.spark.sql.types.LongType)))
 
   /** What a copy-on-write [[TxLogTable.merge]] did: the committed version,
     * how many files were rewritten (their key stats overlapped the batch's
@@ -1976,8 +1981,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * left-anti join against the (small, broadcast) union of tombstone key
     * sets, sequence-aware — a tombstone only masks rows from files added
     * at or before its version, so keys re-inserted after a delete survive.
-    * With no tombstones this is exactly [[readRels]] (zero overhead on
-    * the common path).
+    * With no tombstones this is exactly the plain [[scanFiles]] (zero
+    * overhead on the common path).
     */
   private def readMaskedEntries(schema: StructType,
                                 es: Seq[TxLogTable.FileEntry],
@@ -1987,19 +1992,26 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     readMaskedPos(schema, es, version, mapOverride, withPos = false)._1
 
   /** The full masked read — MOR tombstones AND positional-delete (DV)
-    * masks — with optional `(decoded file path, row position)`
-    * passthrough columns. Returns (frame, fileCol, posCol); the extra
-    * columns are present only when `withPos = true` (the DV WRITER's
-    * read: it needs each surviving row's position to stage new masks).
+    * masks — with optional `(file ordinal, row position)` passthrough
+    * columns. Returns (frame, fileCol, posCol); the extra columns are
+    * present only when `withPos = true` (the DV WRITER's read: it needs
+    * each surviving row's position to stage new masks). The ordinal
+    * indexes `es`.
     *
+    * Everything is ONE scan of `es` ([[scanFiles]]): the file ordinal
+    * and the file's added version ride as per-file partition values.
     * DV masking is one broadcast LEFT ANTI join of the scan's
-    * `(file, _metadata.row_index)` against the union of live DV
-    * parquets. No sequence logic is needed — a DV entry names its
-    * target file, rels are batch-UUID-unique and never reused, and a DV
-    * row whose target is not being read matches nothing (which is also
-    * why a stale entry, should one ever survive a carry, is harmless to
-    * reads). With no live DVs and `withPos = false` this is exactly
-    * [[readRels]] — zero overhead on the common path.
+    * `(ordinal, _metadata.row_index)` against the union of live DV
+    * parquets, whose target rels map to ordinals through a literal map.
+    * No sequence logic is needed — a DV entry names its target file,
+    * rels are batch-UUID-unique and never reused, and a DV row whose
+    * target is not being read maps to no ordinal and matches nothing
+    * (which is also why a stale entry, should one ever survive a carry,
+    * is harmless to reads). Tombstone masking is one broadcast LEFT ANTI
+    * join against every tombstone file, each tagged with its version,
+    * sequence-aware: a tombstone only masks rows from files added at or
+    * before its version, so keys re-inserted after a delete survive. With
+    * no live masks and `withPos = false` this is exactly the plain scan.
     */
   private def readMaskedPos(schema: StructType,
                             es: Seq[TxLogTable.FileEntry],
@@ -2007,7 +2019,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
                             mapOverride: Option[Map[String, String]],
                             withPos: Boolean)
       : (DataFrame, String, String) = {
-    import org.apache.spark.sql.functions.{broadcast, concat}
+    import org.apache.spark.sql.functions.{broadcast, typedLit}
+    import org.apache.spark.sql.types.IntegerType
     val v = version.orElse(latestVersion)
     // mapOverride: the CDC diff reads OLD versions' files under the
     // CURRENT logical schema, which only the LATEST colmap can
@@ -2022,145 +2035,131 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     val fcol = fileTagName(taken)
     val pcol = fileTagName(taken :+ fcol) + "_pos"
     val needPos = withPos || dvs.nonEmpty
-    def readPlain(rels: Seq[String]): DataFrame =
-      if (!needPos) readRels(schema, rels, cmap)
-      else if (rels.isEmpty)
-        readRels(schema, Nil, cmap)
-          .withColumn(fcol,
-            lit(null).cast(org.apache.spark.sql.types.StringType))
-          .withColumn(pcol,
-            lit(null).cast(org.apache.spark.sql.types.LongType))
+    val byTomb = tombs.nonEmpty && keys.nonEmpty
+    val tags = StructType(
+      (if (needPos) Seq(StructField(fcol, IntegerType)) else Nil) ++
+        (if (byTomb) Seq(StructField("_added_v", IntegerType)) else Nil))
+    val data = scanFiles(schema, cmap,
+      es.zipWithIndex.map { case (e, i) => e.rel ->
+        ((if (needPos) Seq(i) else Nil) ++
+          (if (byTomb) Seq(addedVOf(e)) else Nil)) },
+      tags, pruneBy(v, es), if (needPos) Some(pcol) else None)
+    val dvMasked =
+      if (dvs.isEmpty || es.isEmpty) data
       else {
-        val phys = StructType(schema.fields.map(f =>
-          f.copy(name = physOf(cmap, f.name))))
-        spark.read.option("basePath", dataDir.toString)
-          .schema(phys)
-          .parquet(rels.map(rel => dataDir.resolve(rel).toString): _*)
-          .select(schema.fields.toIndexedSeq.map(f =>
-            col(physOf(cmap, f.name)).as(f.name)) :+
-            decodedFileCol.as(fcol) :+
-            col("_metadata.row_index").as(pcol): _*)
+        val ordOf = typedLit(es.map(_.rel).zipWithIndex.toMap)
+        val mask = scanFiles(TxLogTable.DvSchema, Map.empty,
+            dvs.map(_.dvRel).distinct.map(_ -> Nil))
+          .select(ordOf(col("file")).as(fcol), col("pos").as(pcol))
+        data.join(broadcast(mask), Seq(fcol, pcol), "left_anti")
       }
-    lazy val dvMask = spark.read.schema(TxLogTable.DvSchema)
-      .parquet(dvs.map(_.dvRel).distinct
-        .map(r => dataDir.resolve(r).toString): _*)
-      .select(concat(lit(dataDir.toString + "/"), col("file")).as(fcol),
-        col("pos").as(pcol))
-    def masked(rels: Seq[String]): DataFrame = {
-      val d = readPlain(rels)
-      if (dvs.isEmpty || rels.isEmpty) d
-      else d.join(broadcast(dvMask), Seq(fcol, pcol), "left_anti")
-    }
     val out =
-      if (tombs.isEmpty || keys.isEmpty) masked(es.map(_.rel))
+      if (!byTomb) dvMasked
       else {
-        val tombUnion = tombs.map { case (rel, tv) =>
-          spark.read.parquet(dataDir.resolve(rel).toString)
-            .withColumn("_tomb_v", lit(tv))
-        }.reduce(_.unionByName(_))
-        val data = es.groupBy(addedVOf).toSeq.map { case (av, group) =>
-          masked(group.map(_.rel)).withColumn("_added_v", lit(av))
-        }.reduceOption(_.unionByName(_))
-          .getOrElse(readPlain(Nil).withColumn("_added_v", lit(0)))
-        val cond = keys.map(k => data(k) === tombUnion(k)).reduce(_ && _) &&
-          tombUnion("_tomb_v") >= data("_added_v")
-        data.join(broadcast(tombUnion), cond, "left_anti").drop("_added_v")
+        val tombUnion = tombstoneKeys(v.get,
+          StructType(keys.map(k => schema(k))))
+        val cond = keys.map(k => dvMasked(k) === tombUnion(k))
+          .reduce(_ && _) && tombUnion("_tomb_v") >= dvMasked("_added_v")
+        dvMasked.join(broadcast(tombUnion), cond, "left_anti")
+          .drop("_added_v")
       }
     (if (needPos && !withPos) out.drop(fcol, pcol) else out, fcol, pcol)
   }
 
-  /** Scan of an explicit relative-path file list under data/, empty-with-
-    * schema when the list is empty — the shared read path of snapshot /
-    * snapshotRange / snapshotWhere / merge.
+  /** The live MOR tombstone key rows at `v` as `keys` (their columns are
+    * never renamed while tombstones live), each tagged `_tomb_v` with its
+    * tombstone's version — ONE scan of every tombstone file. */
+  def tombstoneKeys(v: Int, keys: StructType): DataFrame =
+    scanFiles(keys, Map.empty,
+      tombstonesOf(v).map { case (rel, tv) => rel -> Seq(tv) },
+      StructType(Seq(StructField("_tomb_v",
+        org.apache.spark.sql.types.IntegerType))))
+
+  /** ONE scan of `files` — `(rel under data/, per-file tag values)` —
+    * through a [[ManifestFileIndex]], the shared read path of snapshot /
+    * snapshotRange / snapshotWhere / merge / the change feed. Planning it
+    * lists nothing: the manifest is the file list. Returns the caller's
+    * `schema` columns, then `tags` (per-file constants: a feed's
+    * `_commit_version`, a file ordinal), then with `posCol` each row's
+    * position in its file (`_metadata.row_index`).
+    *
+    * Column mapping: the caller's schema is LOGICAL (of the version being
+    * read — `map` is that version's colmap); data files carry PHYSICAL
+    * columns. Unmapped names are identity, a renamed column is read from
+    * its unchanged physical bytes and re-labeled — no file rewrite ever.
+    * Hive `k=v` dirs between data/ and each file are parsed back into
+    * partition columns committed with `partitionCols` (typed by the
+    * schema); the select makes the CALLER's declared order authoritative
+    * wherever the partition column sits in it. `prune` is the index's
+    * manifest pruning ([[pruneBy]]); reads of DV and tombstone files pass
+    * none.
     */
-  private def readRels(schema: StructType, rels: Seq[String],
-                       map: Map[String, String]): DataFrame = {
-    // Column mapping: the caller's schema is LOGICAL (of the version being
-    // read — `map` is that version's colmap); data files carry PHYSICAL
-    // columns. Unmapped names are identity, a renamed column is read from
-    // its unchanged physical bytes and re-labeled — no file rewrite ever.
+  private def scanFiles(schema: StructType, map: Map[String, String],
+                        files: Seq[(String, Seq[Any])],
+                        tags: StructType = new StructType(),
+                        prune: Seq[Expression] => String => Boolean =
+                          _ => _ => true,
+                        posCol: Option[String] = None): DataFrame = {
     val phys = StructType(schema.fields.map(f =>
       f.copy(name = physOf(map, f.name))))
-    if (rels.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else
-      // basePath makes Spark parse the hive `k=v` dirs between data/ and
-      // each listed leaf file, restoring partition columns committed with
-      // `partitionCols` (files sit directly in partition dirs — see
-      // commit). Discovery appends partition columns after the data
-      // columns; the select makes the CALLER's declared order
-      // authoritative wherever the partition column sits in it.
-      spark.read.option("basePath", dataDir.toString)
-        .schema(phys)
-        .parquet(rels.map(rel => dataDir.resolve(rel).toString): _*)
-        .select(schema.fields.toIndexedSeq.map(f =>
-          col(physOf(map, f.name)).as(f.name)): _*)
+    val index = new ManifestFileIndex(spark, dataDir.toString, files, phys,
+      tags, prune)
+    ManifestFileIndex.read(spark, index, phys)
+      .select(schema.fields.toIndexedSeq.map(f =>
+        col(physOf(map, f.name)).as(f.name)) ++
+        tags.fieldNames.map(col) ++
+        posCol.map(col("_metadata.row_index").as(_)): _*)
   }
+
+  /** The manifest pruning of a scan over `es` at `version`: the filters
+    * Spark pushes to the scan (PHYSICAL column names — the relation's own)
+    * translated as far as their shape allows, then the same per-file
+    * decision as [[candidateFilesWhere]]. Files outside `es` (none, for
+    * the scans that use it) are kept. */
+  private def pruneBy(version: Option[Int], es: Seq[TxLogTable.FileEntry])
+      : Seq[Expression] => String => Boolean = filters =>
+    filters.flatMap(PredicateRanges.fromCatalyst).reduceOption(_ && _) match {
+      case None => _ => true
+      case Some(p) =>
+        val mayMatch = entryFilter(p, version, Map.empty)
+        val byRel = es.iterator.map(e => e.rel -> e).toMap
+        rel => byRel.get(rel).forall(mayMatch)
+    }
 
   /** The change feed's read body: ALL of `added`'s files in ONE source
     * scan, each row tagged with the `_commit_version` of the (rel,
-    * version) pair that contributed its file — a broadcast join of
-    * `input_file_name()` against the tiny rel→version map. The plan has
-    * one scan leaf REGARDLESS of how many versions the range spans;
-    * the per-version alternative (one scan + N-way `unionByName`) grows
-    * driver planning time and codegen size with backlog LENGTH — a
-    * 1,000-version catch-up becomes a 1,000-leaf plan before a single
-    * byte is read. Wire format: the join key is the DECODED absolute
-    * filesystem path on BOTH sides, not the raw URI string —
-    * `input_file_name()` returns the Hadoop `Path.toUri.toString` form,
-    * which %-encodes space but leaves non-ASCII bytes raw
-    * (`…/p=café%20x/…`), while `java.nio.file.Path.toUri` encodes both
-    * (`…/p=caf%C3%A9%20x/…`); joining the raw strings silently drops
-    * every row under a non-ASCII partition dir. Decoding collapses both
-    * encodings to the same bytes: map side is the plain nio path string,
-    * scan side strips `scheme:(//authority)?` and URI-decodes with
-    * codegen'd builtins ([[decodedFileCol]]). A rel re-added at a SECOND
-    * version inside the range (restore after an overwrite) appears twice
-    * in the map and its rows correctly emit under both versions — the
-    * broadcast join duplicates where a map lookup could not.
+    * version) pair that contributed its file — a per-file partition value
+    * of the scan, so no join. The plan has one scan leaf REGARDLESS of
+    * how many versions the range spans; the per-version alternative (one
+    * scan + N-way `unionByName`) grows driver planning time and codegen
+    * size with backlog LENGTH — a 1,000-version catch-up becomes a
+    * 1,000-leaf plan before a single byte is read. A rel re-added at a
+    * SECOND version inside the range (restore after an overwrite) is
+    * listed under both versions and its rows correctly emit under both.
     */
   private def readRelsVersioned(schema: StructType,
                                 added: Seq[(String, Int)],
-                                map: Map[String, String]): DataFrame = {
-    import org.apache.spark.sql.functions.broadcast
-    val rels = added.map(_._1).distinct
-    val phys = StructType(schema.fields.map(f =>
-      f.copy(name = physOf(map, f.name))))
-    val fcol = fileTagName(schema.fieldNames)
-    val data = spark.read.option("basePath", dataDir.toString)
-      .schema(phys)
-      .parquet(rels.map(rel => dataDir.resolve(rel).toString): _*)
-      .select(schema.fields.toIndexedSeq.map(f =>
-        col(physOf(map, f.name)).as(f.name)) :+
-        decodedFileCol.as(fcol): _*)
-    val pairs = added.map { case (rel, v) =>
-      dataDir.resolve(rel).toString -> v.toLong }
-    val vmap = spark.createDataFrame(pairs)
-      .toDF(fcol, "_commit_version")
-    data.join(broadcast(vmap), fcol).drop(fcol)
-  }
-
-  /** `input_file_name()` reduced to the decoded absolute path — the
-    * version-map join key. `scheme:(//authority)?` is stripped first
-    * (pure-ASCII by RFC 3986, so safe on the still-encoded string), raw
-    * `+` is protected as `%2B` because `url_decode` is form-decoding
-    * (`+` → space) while URI encoding leaves literal `+` raw, then one
-    * `url_decode` pass maps `%XX` (UTF-8) to bytes. All three are
-    * codegen'd builtins — no UDF on the CDC hot path.
-    */
-  private def decodedFileCol: Column =
-    expr("url_decode(replace(regexp_replace(input_file_name(), " +
-      "'^[a-zA-Z][a-zA-Z0-9+.\\\\-]*:(//[^/]*)?', ''), '+', '%2B'))")
+                                map: Map[String, String]): DataFrame =
+    scanFiles(schema, map, added.map { case (rel, v) => rel -> Seq(v.toLong) },
+      TxLogTable.CommitVersionTag)
 
   /** Helper-column name for the file tag, guaranteed not to collide with
     * a user column literally named `_graft_file` (which would make the
-    * select ambiguous and break the version-map join).
+    * select ambiguous and break the positional-delete joins).
     */
   private def fileTagName(taken: Seq[String]): String =
     Iterator.from(0)
       .map(i => if (i == 0) "_graft_file" else s"_graft_file_$i")
       .find(n => !taken.contains(n) && n != "_commit_version").get
+
+  /** The schema `version`'s data files declare (footer inference), for
+    * raw tables that never recorded one; None when it has no files. */
+  def fileSchema(version: Option[Int]): Option[StructType] = {
+    val rels = entries(version).map(_.rel)
+    if (rels.isEmpty) None
+    else ManifestFileIndex.inferSchema(spark, ManifestFileIndex.of(spark,
+      dataDir.toString, rels, new StructType()))
+  }
 
   /** Snapshot read of `version` (default: latest). Absent table or empty
     * manifest → empty DataFrame with the given schema (DDL bootstrap, S5).
@@ -2321,18 +2320,24 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * file cannot match `c IS NULL`.
     */
   def candidateFilesWhere(pred: org.apache.spark.sql.Column,
-                          version: Option[Int] = None): Seq[String] = {
-    val map = colMapAt(version)
+                          version: Option[Int] = None): Seq[String] =
+    entries(version).filter(entryFilter(pred, version, colMapAt(version)))
+      .map(_.rel)
+
+  /** The per-file decision of [[candidateFilesWhere]] for `pred` (LOGICAL
+    * names, translated through `map`) at `version`: bucket dirs, then
+    * [[mayMatchPred]]. */
+  private def entryFilter(pred: org.apache.spark.sql.Column,
+                          version: Option[Int], map: Map[String, String])
+      : TxLogTable.FileEntry => Boolean = {
     val ranges = physKeyed(map, PredicateRanges.extract(pred))
     val nn = physNullness(map, PredicateRanges.extractNullness(pred))
     val points = physKeyed(map, PredicateRanges.extractPoints(pred))
     val strs = physKeyed(map, PredicateRanges.extractStr(pred))
     val buckets = allowedBuckets(points, version)
     val tsegs = timeSegBounds(ranges, version)
-    entries(version).collect {
-      case e if bucketMayMatch(e, buckets) &&
-        mayMatchPred(e, ranges, nn, points, strs, tsegs) => e.rel
-    }
+    e => bucketMayMatch(e, buckets) &&
+      mayMatchPred(e, ranges, nn, points, strs, tsegs)
   }
 
   /** Bucket pruning for POINT lookups on a bucketed table: min/max stats
@@ -2701,14 +2706,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     */
   def snapshotWhere(schema: StructType, pred: org.apache.spark.sql.Column,
                     version: Option[Int] = None): DataFrame = {
-    val map = colMapAt(version)
-    val ranges = physKeyed(map, PredicateRanges.extract(pred))
-    val nn = physNullness(map, PredicateRanges.extractNullness(pred))
-    val points = physKeyed(map, PredicateRanges.extractPoints(pred))
-    val strs = physKeyed(map, PredicateRanges.extractStr(pred))
-    val tsegs = timeSegBounds(ranges, version)
     val es = entries(version)
-      .filter(mayMatchPred(_, ranges, nn, points, strs, tsegs))
+      .filter(entryFilter(pred, version, colMapAt(version)))
     readMaskedEntries(schema, es, version).filter(pred)
   }
 
@@ -2783,13 +2782,9 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       }
     // CDC contract: `schema` is the CURRENT logical schema, so the latest
     // colmap translates it (physical names never change, so it covers
-    // every version's files). One scan + broadcast version tagging —
+    // every version's files). One scan with per-file version tags —
     // plan width is independent of how many versions the range spans.
-    if (added.isEmpty) {
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      empty.withColumn("_commit_version", lit(0L)).limit(0)
-    } else readRelsVersioned(schema, added, inheritedColMap)
+    readRelsVersioned(schema, added, inheritedColMap)
   }
 
   /** Bytes of the files ADDED at each version in `(fromV, toV]` —
@@ -2887,10 +2882,11 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     // below (a rewrite inside the range folds an entry out of later
     // manifests; its commit-version manifest still carries it, and that
     // manifest's survival keeps both the DV parquet and the target file
-    // vacuum-protected). One scan of the distinct target files + a
-    // broadcast (file, pos, version) mask — an INNER join, sound to tag
-    // versions because masks are disjoint: a position is masked by at
-    // most one commit.
+    // vacuum-protected). One scan of the distinct target files (each
+    // tagged with its ordinal) + a broadcast (ordinal, pos, version) mask
+    // whose version is the DV file's own tag — an INNER join, sound to
+    // tag versions because masks are disjoint: a position is masked by
+    // at most one commit.
     val newDvs = (fromV + 1 to toV).filter(present)
       .flatMap(dvsOf)
       .filter(d => d.v > fromV && d.v <= toV)
@@ -2898,34 +2894,23 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     val withDv =
       if (newDvs.isEmpty) adds
       else {
-        import org.apache.spark.sql.functions.{broadcast, concat}
-        val map = inheritedColMap
+        import org.apache.spark.sql.functions.{broadcast, typedLit}
         val taken = schema.fieldNames.toSeq
         val fcol = fileTagName(taken)
         val pcol = fileTagName(taken :+ fcol) + "_pos"
-        val dcol = fileTagName(taken ++ Seq(fcol, pcol))
-        val phys = StructType(schema.fields.map(f =>
-          f.copy(name = physOf(map, f.name))))
-        val targets = spark.read.option("basePath", dataDir.toString)
-          .schema(phys)
-          .parquet(newDvs.map(_.file).distinct
-            .map(r => dataDir.resolve(r).toString): _*)
-          .select(schema.fields.toIndexedSeq.map(f =>
-            col(physOf(map, f.name)).as(f.name)) :+
-            decodedFileCol.as(fcol) :+
-            col("_metadata.row_index").as(pcol): _*)
-        val dvRelToV = newDvs.map(d => d.dvRel -> d.v).distinct
-        val mask = spark.read.schema(TxLogTable.DvSchema)
-          .parquet(dvRelToV.map(_._1).distinct
-            .map(r => dataDir.resolve(r).toString): _*)
-          .select(
-            concat(lit(dataDir.toString + "/"), col("file")).as(fcol),
-            col("pos").as(pcol), decodedFileCol.as(dcol))
-        val vmap = spark.createDataFrame(dvRelToV.map { case (rel, v) =>
-            dataDir.resolve(rel).toString -> v.toLong })
-          .toDF(dcol, "_commit_version")
-        val tagged = mask.join(broadcast(vmap), dcol).drop(dcol)
-        val dvDeletes = targets.join(broadcast(tagged), Seq(fcol, pcol))
+        val targetRels = newDvs.map(_.file).distinct
+        val targets = scanFiles(schema, inheritedColMap,
+          targetRels.zipWithIndex.map { case (r, i) => r -> Seq(i) },
+          StructType(Seq(StructField(fcol,
+            org.apache.spark.sql.types.IntegerType))),
+          posCol = Some(pcol))
+        val ordOf = typedLit(targetRels.zipWithIndex.toMap)
+        val mask = scanFiles(TxLogTable.DvSchema, Map.empty,
+            newDvs.map(d => d.dvRel -> Seq(d.v.toLong)).distinct,
+            TxLogTable.CommitVersionTag)
+          .select(ordOf(col("file")).as(fcol), col("pos").as(pcol),
+            col("_commit_version"))
+        val dvDeletes = targets.join(broadcast(mask), Seq(fcol, pcol))
           .drop(fcol, pcol)
           .withColumn("_change_type", lit("delete"))
         adds.unionByName(dvDeletes)
@@ -2937,30 +2922,21 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     if (newTombs.isEmpty) return withDv
     // ONE scan over all tombstone files per distinct key-column set
     // (almost always exactly one — the table's MOR keys at commit time),
-    // versions tagged by the same broadcast input_file_name() map the
-    // insert side uses: plan width stays independent of how many delete
+    // each file tagged with its commit version the way the insert side
+    // tags its files: plan width stays independent of how many delete
     // commits the range holds. Grouping by the commit version's recorded
     // key spec keeps a mid-history key change from mixing two tombstone
     // schemas into one scan.
-    import org.apache.spark.sql.functions.broadcast
     val deletes = newTombs.groupBy { case (_, v) => morKeysOf(v) }
       .toSeq.map { case (keys, tombs) =>
-        // same decoded-path join key as readRelsVersioned — raw URI
-        // strings diverge between nio (%-encodes non-ASCII) and Hadoop
-        // (leaves it raw) and would drop tombstones under such dirs
-        val fcol = fileTagName(keys)
-        val keyDf = spark.read.parquet(
-          tombs.map { case (rel, _) => dataDir.resolve(rel).toString }: _*)
-          .select(keys.map(col) :+
-            decodedFileCol.as(fcol): _*)
-        val vmap = spark.createDataFrame(tombs.map { case (rel, v) =>
-          dataDir.resolve(rel).toString -> v.toLong })
-          .toDF(fcol, "_commit_version")
-        val tagged = keyDf.join(broadcast(vmap), fcol)
+        val keySchema = StructType(keys.flatMap(k => schema.find(_.name == k)))
+        val keyDf = scanFiles(keySchema, Map.empty,
+          tombs.map { case (rel, v) => rel -> Seq(v.toLong) },
+          TxLogTable.CommitVersionTag)
         val cols = schema.fieldNames.toIndexedSeq.map(n =>
-          if (keys.contains(n)) col(n)
+          if (keySchema.fieldNames.contains(n)) col(n)
           else lit(null).cast(schema(n).dataType).as(n))
-        tagged.select(cols :+ col("_commit_version"): _*)
+        keyDf.select(cols :+ col("_commit_version"): _*)
           .withColumn("_change_type", lit("delete"))
       }
     deletes.foldLeft(withDv)(_.unionByName(_))
@@ -5139,8 +5115,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
                          expectHead: Option[Int])
                         (add: (DataFrame, Seq[org.apache.spark.sql.Row]) =>
                           Option[DataFrame]): TxLogTable.MergeStats = {
-    import org.apache.spark.sql.functions.substring
-    val prefixLen = dataDir.toString.length + 1 // abs path → rel
+    import org.apache.spark.sql.functions.typedLit
     optimisticCommit(op) { (base, next) =>
       expectHead.foreach { eh =>
         if (!base.contains(eh))
@@ -5154,25 +5129,19 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       val allEntries = lines.map(TxLogTable.decodeEntry)
       val affected = prune match {
         case Some(p) =>
-          val cmap = inheritedColMap
-          val ranges = physKeyed(cmap, PredicateRanges.extract(p))
-          allEntries.filter(e => mayMatchPred(e, ranges,
-            physNullness(cmap, PredicateRanges.extractNullness(p)),
-            physKeyed(cmap, PredicateRanges.extractPoints(p)),
-            physKeyed(cmap, PredicateRanges.extractStr(p)),
-            timeSegBounds(ranges, base)))
+          allEntries.filter(entryFilter(p, base, inheritedColMap))
         case None => allEntries
       }
       val (hitRows, picked) =
         if (affected.isEmpty)
-          (readRels(schema, Nil, inheritedColMap),
+          (scanFiles(schema, inheritedColMap, Nil),
             Array.empty[org.apache.spark.sql.Row])
         else {
           val (rows, fcol, pcol) = readMaskedPos(schema,
             affected, base, None, withPos = true)
           val kept = pick(rows)
           val hit = kept.select(
-            Seq(substring(col(fcol), prefixLen + 1, Int.MaxValue).as("file"),
+            Seq(typedLit(affected.map(_.rel)).apply(col(fcol)).as("file"),
               col(pcol).as("pos")) ++
               (if (keepRows) schema.fieldNames.toSeq.map(col) else Nil): _*)
           val cap = TxLogTable.maxDvMaskRows(spark)

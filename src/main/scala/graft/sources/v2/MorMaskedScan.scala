@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan}
 import org.apache.spark.sql.execution.PartitionedFileUtil
-import org.apache.spark.sql.execution.datasources.{FilePartition, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.{FilePartition, FileIndex}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The MOR-masked variant of the row-level operation scan: wraps the
@@ -32,7 +32,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * next compaction, where correctness beats the vectorized fast path.
   */
 final class MorMaskedScan(spark: SparkSession, inner: Scan,
-                          index: InMemoryFileIndex, dataDirAbs: String,
+                          index: FileIndex, dataDirAbs: String,
                           addedVByRel: Map[String, Int],
                           keyOrds: Array[Int], keyTypes: Array[DataType],
                           tombNewestV: Map[Seq[Any], Int])

@@ -1,14 +1,13 @@
 package graft.sources.v2
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Between, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, NamedExpression, Not, Or}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualTo, Expression, In, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, DeleteFromTable, Filter, LocalRelation, LogicalPlan, MergeIntoTable, Project, UpdateTable}
 import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, ShortType, TimestampType}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Analyzer rule (installed by `graft.GraftExtensions`) that replaces a
@@ -18,18 +17,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * whole-stage codegen, parquet filter pushdown, and NO InternalRow→Row
   * conversion (what the V1Scan fallback pays).
   *
-  * A Filter above the relation — directly, or through the aliases, views
-  * and identity projections a catalog read, an aliased query, a DataFrame
-  * filter and a view analyze to — is additionally translated (as far as
-  * its shape allows — conservative, same contract as the V1 connector's
-  * pushdown) into a predicate `Column` for `snapshotWhere`, so MANIFEST
-  * pruning (range stats, null counts, partition paths, Blooms) happens for
-  * SQL reads too. The original Filter stays on top — untranslated
-  * conjuncts narrow nothing at the manifest but still filter rows, so
-  * results never change.
+  * Filters are not handled here: the spliced read is a parquet relation
+  * over the table's manifest file index, whose `listFiles` runs the
+  * MANIFEST pruning (range stats, null counts, partition paths, Blooms)
+  * on the filters the optimizer pushes to the scan — through aliases,
+  * views, identity projections and joins alike.
   *
-  * Top-down transform: the Filter case must see the relation BENEATH it
-  * before the bare-relation case rewrites it.
+  * Top-down transform: the metadata-only Aggregate case must see the
+  * relation BENEATH it before the relation cases rewrite it.
   */
 case class TxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -70,10 +65,10 @@ case class TxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // cases below can splice its child away.
       case agg @ Aggregate(groups, aggExprs, child, _)
           if groups.isEmpty && agg.resolved && aggExprs.nonEmpty =>
-        val direct = for {
-          tbl <- txLogUnder(child)
-          values <- metaValues(tbl, aggExprs)
-        } yield values
+        val direct = txLogUnder(child).flatMap { case (t, v) =>
+          metaValues(aggExprs, t.metaRowCount(v),
+            t.metaMinMax(_, v).map(Some(_)))
+        }
         // Filtered COUNT(*) over PARTITION columns only: a partition
         // value is constant per file, so each file fully satisfies or
         // fully fails the predicate and the manifest still answers
@@ -83,28 +78,19 @@ case class TxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
         // partial translation is fine for pruning but unsound for
         // counting, so any untranslated conjunct declines the collapse
         // and the ordinary spliced scan answers instead.
+        // MIN/MAX read the qualifying files' footer extrema (a partition
+        // column's from its path segment).
         val filtered = direct.orElse(for {
           (cond, fchild) <- filterUnder(child)
-          tbl <- txLogUnder(fchild)
+          (t, v) <- txLogUnder(fchild)
           preds <- partitionPoints(cond)
-          values <- metaCountOnly(tbl, aggExprs, preds)
+          values <- metaValues(aggExprs, t.metaRowCountWhere(preds, v),
+            t.metaMinMaxWhere(_, preds, v))
         } yield values)
         filtered.map(values =>
           LocalRelation(aggExprs.map(_.toAttribute),
             Seq(InternalRow.fromSeq(values)), isStreaming = false))
           .getOrElse(agg)
-      // A Filter whose conjuncts translate prunes the read beneath it at
-      // the manifest. The read is a relation (spliced here, pruned) or
-      // the marker of a read spliced by an earlier analysis — a view
-      // body, a `spark.table` frame — re-spliced pruned at the marker's
-      // pinned version. A Filter that translates nothing leaves its read
-      // to the relation cases below.
-      case f @ Filter(cond, child) if f.resolved &&
-          toPredicate(cond).isDefined &&
-          readUnder(child).exists(r => !deferred.contains(r._1)) =>
-        val (read, rebuild) = readUnder(child).get
-        prunedRead(read, toPredicate(cond).get)
-          .map(p => Filter(cond, rebuild(p))).getOrElse(f)
       // spjEligible relations are left alone: their DSv2 scan reports
       // KeyGroupedPartitioning (storage-partitioned joins — zero-shuffle
       // co-partitioned joins), which the spliced native plan cannot.
@@ -124,9 +110,8 @@ case class TxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // user finds first — gets the same splice: the PrunedFilteredScan
       // fallback pays an InternalRow→Row conversion at the scan top
       // (`TxLogRelation.buildScan`'s `.rdd`), so replace it with the
-      // native parquet plan whenever the extension is installed. Filter
-      // translation and manifest pruning (the Filter case above) are
-      // identical to the V2 case.
+      // native parquet plan whenever the extension is installed. Manifest
+      // pruning is identical to the V2 case.
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
           if lr.relation.isInstanceOf[graft.sources.TxLogRelation] &&
             !lr.isStreaming && !deferred.contains(lr) =>
@@ -198,57 +183,6 @@ case class TxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  // The txlog read beneath a Filter's alias wrappers — a spliceable
-  // relation, or a splice marker — with the function that rebuilds the
-  // wrappers over a replacement read.
-  private def readUnder(p: LogicalPlan)
-      : Option[(LogicalPlan, LogicalPlan => LogicalPlan)] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{SubqueryAlias, View}
-    def under(child: LogicalPlan)(wrap: LogicalPlan => LogicalPlan) =
-      readUnder(child).map { case (r, re) => (r, (x: LogicalPlan) =>
-        wrap(re(x))) }
-    p match {
-      case s: SubqueryAlias if isMarker(s.identifier.name) =>
-        Some((s, identity))
-      case s: SubqueryAlias => under(s.child)(c => s.copy(child = c))
-      case v: View => under(v.child)(c => v.copy(child = c))
-      case pr: Project if identityChild(pr).isDefined =>
-        under(pr.child)(c => pr.copy(child = c))
-      case rel: DataSourceV2Relation
-          if rel.table.isInstanceOf[TxLogV2Table] &&
-            !rel.table.asInstanceOf[TxLogV2Table].spjEligible =>
-        Some((rel, identity))
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
-          if lr.relation.isInstanceOf[graft.sources.TxLogRelation] &&
-            !lr.isStreaming =>
-        Some((lr, identity))
-      case _ => None
-    }
-  }
-
-  // `read` (from readUnder) re-planned as a manifest-pruned snapshot,
-  // output attributes kept. A marker re-splices at its own pinned version
-  // and keeps no marker: under its Filter no whole-table metadata answer
-  // applies, and a marker-free splice is never pruned twice.
-  private def prunedRead(read: LogicalPlan, pred: Column)
-      : Option[LogicalPlan] = read match {
-    case rel: DataSourceV2Relation =>
-      aligned(rel.table.asInstanceOf[TxLogV2Table].snapshotDF(Some(pred)),
-        rel.output)
-    case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-      aligned(v1SnapshotDF(
-        lr.relation.asInstanceOf[graft.sources.TxLogRelation], Some(pred)),
-        lr.output)
-    case s: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
-      val out = s.child.output.collect { case a: AttributeReference => a }
-      fromMarker(s.identifier.name).collect { case (t, Some(v)) =>
-        aligned(t.snapshotWhere(org.apache.spark.sql.types.StructType(
-          out.map(a => org.apache.spark.sql.types.StructField(a.name,
-            a.dataType, a.nullable))), pred, Some(v)), out)
-      }.flatten
-    case _ => None
-  }
-
   // COMPLETE translation of a predicate into per-partition-column allowed
   // value sets (hive-segment string rendering): equality / IN on an
   // attribute under AND — the shapes a partition value decides exactly.
@@ -293,60 +227,11 @@ case class TxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  // Aggregates answered from the partition-filtered file subset:
-  // COUNT(*) via metaRowCountWhere, MIN/MAX of integral columns via
-  // metaMinMaxWhere (footer extrema of qualifying files; the partition
-  // column itself reads from the path segment). An empty qualifying
-  // subset yields COUNT 0 and MIN/MAX NULL — SQL's zero-row aggregate
-  // semantics, still manifest-answered.
-  private def metaCountOnly(tbl: (graft.sources.TxLogTable, Option[Int]),
-                            aggExprs: Seq[NamedExpression],
-                            preds: Map[String, Set[String]])
-      : Option[Seq[Any]] = {
-    val (t, version) = tbl
-    lazy val rowCount = t.metaRowCountWhere(preds, version)
-    def narrowed(v: Long, dt: org.apache.spark.sql.types.DataType): Any =
-      dt match {
-        case ByteType => v.toByte
-        case ShortType => v.toShort
-        case IntegerType => v.toInt
-        case DateType => v.toInt // internal DateType is epoch days
-        case _ => v // LongType, and TimestampType's internal micros
-      }
-    def extremum(a: AttributeReference, lo: Boolean): Option[Any] =
-      a.dataType match {
-        // temporal columns qualify because footerStats records their
-        // extrema EXACTLY in the internal unit (micros/days) — inexact
-        // normalizations are never stored
-        case ByteType | ShortType | IntegerType | LongType |
-             TimestampType | DateType =>
-          t.metaMinMaxWhere(a.name, preds, version).map {
-            case Some((mn, mx)) =>
-              narrowed(if (lo) mn else mx, a.dataType)
-            case None => null // empty subset: SQL MIN/MAX of zero rows
-          }
-        case _ => None
-      }
-    val vals = aggExprs.map {
-      case Alias(AggregateExpression(
-          Count(Seq(Literal(v, _))), _, false, None, _), _) if v != null =>
-        rowCount
-      case Alias(AggregateExpression(
-          Min(a: AttributeReference), _, false, None, _), _) =>
-        extremum(a, lo = true)
-      case Alias(AggregateExpression(
-          Max(a: AttributeReference), _, false, None, _), _) =>
-        extremum(a, lo = false)
-      case _ => None
-    }
-    if (vals.forall(_.isDefined)) Some(vals.map(_.get)) else None
-  }
-
   // The txlog RELATION NODE (or splice marker) beneath alias wrappers
   // (for the defer set) — the structural twin of [[txLogUnder]] before
   // types resolve. Descends one Filter too: a read under `WHERE
   // <partition cols>` beneath a not-yet-resolved COUNT(*) must also stay
-  // un-spliced (a marker un-pruned) until the Aggregate case has had its
+  // un-spliced until the Aggregate case has had its
   // chance at the filtered metadata collapse.
   private def relUnder(p: LogicalPlan): Option[LogicalPlan] = p match {
     case s: org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias =>
@@ -390,28 +275,33 @@ case class TxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   // One manifest-derived value per aggregate expression, or None when any
   // expression is outside the exactly-answerable set {COUNT(*)/COUNT(lit),
-  // MIN(intCol), MAX(intCol)} or the manifest lacks the stats.
-  private def metaValues(tbl: (graft.sources.TxLogTable, Option[Int]),
-                         aggExprs: Seq[NamedExpression])
+  // MIN/MAX of an integral or temporal column} or the manifest lacks the
+  // stats. `minMax` answers Some(None) for an empty file set: SQL MIN/MAX
+  // over zero rows is NULL, still manifest-answered. Temporal columns
+  // qualify because footerStats records their extrema EXACTLY in the
+  // internal unit (micros/days) — inexact normalizations are never stored.
+  private def metaValues(aggExprs: Seq[NamedExpression],
+                         count: => Option[Long],
+                         minMax: String => Option[Option[(Long, Long)]])
       : Option[Seq[Any]] = {
-    val (t, version) = tbl
-    lazy val rowCount = t.metaRowCount(version)
-    def minMax(a: AttributeReference): Option[(Long, Long)] =
+    lazy val rowCount = count
+    def extremum(a: AttributeReference, lo: Boolean): Option[Any] =
       a.dataType match {
-        // temporal columns qualify: footerStats records their extrema
-        // EXACTLY in the internal unit (micros/days)
         case ByteType | ShortType | IntegerType | LongType |
              TimestampType | DateType =>
-          t.metaMinMax(a.name, version)
+          minMax(a.name).map {
+            case Some((mn, mx)) =>
+              val v = if (lo) mn else mx
+              a.dataType match {
+                case ByteType => v.toByte
+                case ShortType => v.toShort
+                case IntegerType => v.toInt
+                case DateType => v.toInt // internal DateType is epoch days
+                case _ => v // LongType, and TimestampType's internal micros
+              }
+            case None => null
+          }
         case _ => None
-      }
-    def narrowed(v: Long, dt: org.apache.spark.sql.types.DataType): Any =
-      dt match {
-        case ByteType => v.toByte
-        case ShortType => v.toShort
-        case IntegerType => v.toInt
-        case DateType => v.toInt // internal DateType is epoch days
-        case _ => v // LongType, and TimestampType's internal micros
       }
     val vals = aggExprs.map {
       case Alias(AggregateExpression(
@@ -419,24 +309,13 @@ case class TxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
         rowCount
       case Alias(AggregateExpression(
           Min(a: AttributeReference), _, false, None, _), _) =>
-        minMax(a).map(mm => narrowed(mm._1, a.dataType))
+        extremum(a, lo = true)
       case Alias(AggregateExpression(
           Max(a: AttributeReference), _, false, None, _), _) =>
-        minMax(a).map(mm => narrowed(mm._2, a.dataType))
+        extremum(a, lo = false)
       case _ => None
     }
     if (vals.forall(_.isDefined)) Some(vals.map(_.get)) else None
-  }
-
-  // the V1 relation's snapshot as a native-parquet DataFrame (manifest
-  // pruning included), mirroring TxLogV2Table.snapshotDF
-  private def v1SnapshotDF(rel: graft.sources.TxLogRelation,
-                           pred: Option[Column]) = {
-    val t = graft.sources.TxLogTable(spark, rel.root)
-    pred match {
-      case Some(p) => t.snapshotWhere(rel.schema, p, rel.version)
-      case None => t.snapshot(rel.schema, rel.version)
-    }
   }
 
   // Re-key the replacement plan's output to the V2 relation's attribute
@@ -452,81 +331,5 @@ case class TxLogReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
     if (!output.forall(o => byName.contains(o.name))) None
     else Some(Project(output.map { o =>
       Alias(byName(o.name), o.name)(exprId = o.exprId) }, inner))
-  }
-
-  // Conservative catalyst→Column translation for manifest pruning: only
-  // shapes PredicateRanges understands; anything else contributes nothing
-  // (the Filter on top re-applies the full predicate regardless).
-  // quote: a legal column name containing a dot must not parse as
-  // struct access when the pruning predicate is re-built as a Column
-  private def qcol(name: String): Column =
-    col("`" + name.replace("`", "``") + "`")
-
-  // A literal as a pruning Column, for the types whose Column literal
-  // means the same value: integral and string. (A DATE or TIMESTAMP
-  // literal holds epoch days / micros internally, which as a plain
-  // number would compare against the column as something else.)
-  private def litVal(l: Literal): Option[Column] = (l.dataType, l.value) match {
-    case (ByteType | ShortType | IntegerType | LongType, v) if v != null =>
-      Some(lit(v))
-    case (org.apache.spark.sql.types.StringType, s: UTF8String) =>
-      Some(lit(s.toString))
-    case _ => None
-  }
-
-  // A constant operand, folded: the analyzer leaves its type-coercion
-  // casts around literals (`bigintCol >= 10` is `>= CAST(10 AS BIGINT)`)
-  // and constant folding runs only in the optimizer.
-  private object Const {
-    def unapply(e: Expression): Option[Literal] = e match {
-      case l: Literal => Some(l)
-      case _ if e.foldable && e.deterministic =>
-        scala.util.Try(Literal.create(e.eval(), e.dataType)).toOption
-      case _ => None
-    }
-  }
-
-  private def toPredicate(e: Expression): Option[Column] = e match {
-    case EqualTo(a: AttributeReference, Const(l)) =>
-      litVal(l).map(qcol(a.name) === _)
-    case EqualTo(Const(l), a: AttributeReference) =>
-      litVal(l).map(qcol(a.name) === _)
-    case GreaterThan(a: AttributeReference, Const(l)) =>
-      litVal(l).map(qcol(a.name) > _)
-    case GreaterThan(Const(l), a: AttributeReference) =>
-      litVal(l).map(qcol(a.name) < _)
-    case GreaterThanOrEqual(a: AttributeReference, Const(l)) =>
-      litVal(l).map(qcol(a.name) >= _)
-    case GreaterThanOrEqual(Const(l), a: AttributeReference) =>
-      litVal(l).map(qcol(a.name) <= _)
-    case LessThan(a: AttributeReference, Const(l)) =>
-      litVal(l).map(qcol(a.name) < _)
-    case LessThan(Const(l), a: AttributeReference) =>
-      litVal(l).map(qcol(a.name) > _)
-    case LessThanOrEqual(a: AttributeReference, Const(l)) =>
-      litVal(l).map(qcol(a.name) <= _)
-    case LessThanOrEqual(Const(l), a: AttributeReference) =>
-      litVal(l).map(qcol(a.name) >= _)
-    case b: Between =>
-      toPredicate(And(GreaterThanOrEqual(b.input, b.lower),
-        LessThanOrEqual(b.input, b.upper)))
-    case In(a: AttributeReference, vs) if vs.nonEmpty =>
-      val raw = vs.map {
-        case Const(l) => litVal(l)
-        case _ => None
-      }
-      if (raw.forall(_.isDefined)) Some(qcol(a.name).isin(raw.flatten: _*))
-      else None
-    case IsNull(a: AttributeReference) => Some(qcol(a.name).isNull)
-    case IsNotNull(a: AttributeReference) => Some(qcol(a.name).isNotNull)
-    case Not(IsNull(a: AttributeReference)) => Some(qcol(a.name).isNotNull)
-    case And(l, r) =>
-      (toPredicate(l), toPredicate(r)) match {
-        case (Some(a), Some(b)) => Some(a && b)
-        case (a, b) => a.orElse(b) // one conjunct still prunes soundly
-      }
-    case Or(l, r) =>
-      for (a <- toPredicate(l); b <- toPredicate(r)) yield a || b
-    case _ => None
   }
 }

@@ -6,8 +6,9 @@ import org.apache.spark.sql.connector.expressions.Expressions
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReaderFactory, Scan, SupportsReportPartitioning}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
 import org.apache.spark.sql.execution.PartitionedFileUtil
-import org.apache.spark.sql.execution.datasources.{FilePartition, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
+import org.apache.spark.sql.graft.ManifestFileIndex
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -172,13 +173,11 @@ final class TxLogSpjScan(spark: SparkSession, tbl: TxLogV2Table,
   private val dataDir = java.nio.file.Paths.get(
     graft.sources.TxLogTable.pathOfRoot(tbl.root), "data").toString
 
-  // basePath discovery re-types the `k=v` hive segments of the pruned
-  // leaves against the declared schema — one partition directory per
-  // distinct partition value among the surviving files
-  private def mkIndex(rs: Seq[String]): InMemoryFileIndex =
-    new InMemoryFileIndex(spark,
-      rs.sorted.map(r => new org.apache.hadoop.fs.Path(s"$dataDir/$r")),
-      Map("basePath" -> dataDir), Some(tbl.schema))
+  // the manifest file index re-types the `k=v` hive segments of the
+  // pruned leaves against the declared schema — one partition directory
+  // per distinct partition value among the surviving files
+  private def mkIndex(rs: Seq[String]): ManifestFileIndex =
+    ManifestFileIndex.of(spark, dataDir, rs.sorted, tbl.schema)
 
   // plan-time index over the manifest-pruned set: readSchema and the
   // reported partition count come from here (runtime filters arrive

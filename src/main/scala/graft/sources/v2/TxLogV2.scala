@@ -1738,10 +1738,10 @@ final case class TxLogV2Table(spark: SparkSession, root: String,
       // rows ride the rewrite untouched), so row-group-level filtering
       // would silently drop them.
       //
-      // HIVE-PARTITIONED tables: the file index gets basePath, so the
-      // `k=v` segments between data/ and each pruned leaf are parsed back
-      // into partition columns (typed by the declared schema) — the same
-      // reconstruction readRels does for API reads.
+      // HIVE-PARTITIONED tables: the manifest file index parses the
+      // `k=v` segments between data/ and each pruned leaf back into
+      // partition columns (typed by the declared schema) — the same
+      // reconstruction API reads get.
       //
       // COLUMN-MAPPED tables: files carry PHYSICAL column names, so the
       // parquet scan is built against the physical schema and then
@@ -1790,11 +1790,8 @@ final case class TxLogV2Table(spark: SparkSession, root: String,
               f.copy(name = cmap.getOrElse(f.name, f.name))))
             val dataDir = java.nio.file.Paths.get(
               graft.sources.TxLogTable.pathOfRoot(root), "data").toString
-            val paths = rels.toSeq.sorted.map(r =>
-              new org.apache.hadoop.fs.Path(s"$dataDir/$r"))
-            val index = new org.apache.spark.sql.execution.datasources
-              .InMemoryFileIndex(spark, paths, Map("basePath" -> dataDir),
-                Some(physFull))
+            val index = org.apache.spark.sql.graft.ManifestFileIndex.of(
+              spark, dataDir, rels.toSeq.sorted, physFull)
             // prune to EXACTLY the declared columns: identity layouts keep
             // their partition columns (they're in the schema); a bucketed
             // layout's hidden _bkt dir column is discovered by the index
@@ -1825,40 +1822,23 @@ final case class TxLogV2Table(spark: SparkSession, root: String,
                   "SQL row-level DML with binary MOR keys: compact first")
                 val convs = keyTypes.map(org.apache.spark.sql.catalyst
                   .CatalystTypeConverters.createToCatalystConverter)
-                val keyCols = morKeys.map(k => org.apache.spark.sql
-                  .functions.col("`" + k.replace("`", "``") + "`"))
-                // Bound the driver BEFORE materializing, in ONE pass:
-                // each tombstone file's keys are collected through
-                // limit(remaining + 1), so at most cap+1 keys ever reach
-                // the driver IN TOTAL (the limit stops the scan early on
-                // the file that crosses), every file is read exactly
-                // once, and a table with 100M live tombstone keys gets
-                // the friendly "compact first" refusal instead of the
-                // OOM the cap exists to prevent.
+                // Bound the driver BEFORE materializing: ONE scan of every
+                // tombstone file through limit(cap + 1), so at most cap+1
+                // keys ever reach the driver, and a table with 100M live
+                // tombstone keys gets the friendly "compact first"
+                // refusal instead of the OOM the cap exists to prevent.
                 val morCap = TxLogV2Table.maxMorMaskKeys(spark)
-                var remaining = morCap
-                var overCap = false
-                val pairsB = Seq.newBuilder[(Seq[Any], Int)]
-                val tombIt = tombs.iterator
-                while (tombIt.hasNext && !overCap) {
-                  val (rel, tv) = tombIt.next()
-                  val rows = spark.read.parquet(s"$dataDir/$rel")
-                    .select(keyCols: _*).na.drop("any", morKeys)
-                    .limit(remaining + 1).collect()
-                  if (rows.length > remaining) overCap = true
-                  else {
-                    remaining -= rows.length
-                    rows.foreach(r => pairsB +=
-                      ((Seq.tabulate[Any](morKeys.length)(i =>
-                        convs(i)(r.get(i))), tv)))
-                  }
-                }
-                require(!overCap,
+                val rows = t.tombstoneKeys(t.latestVersion.get,
+                    StructType(morKeys.map(rs(_))))
+                  .na.drop("any", morKeys).limit(morCap + 1).collect()
+                require(rows.length <= morCap,
                   s"SQL row-level DML with more than $morCap live MOR " +
                     s"tombstone keys (cap $morCap): compact first")
                 // the key map — provably under the cap, same order of
                 // memory as the broadcast anti-join the API read path uses
-                val pairs = pairsB.result()
+                val pairs = rows.toSeq.map(r => (Seq.tabulate[Any](
+                  morKeys.length)(i => convs(i)(r.get(i))),
+                  r.getInt(morKeys.length)))
                 new MorMaskedScan(spark, inner, index, dataDir,
                   t.addedVersions(None), keyOrds, keyTypes,
                   pairs.groupMapReduce(_._1)(_._2)(math.max))
@@ -2123,15 +2103,6 @@ final case class TxLogV2Table(spark: SparkSession, root: String,
         table.colMapOf(ver).isEmpty && !table.timeUnitsMixed(ver))
     }
 
-  /** The (possibly time-traveled) snapshot as a DataFrame — what
-    * [[TxLogReadRule]] splices into the logical plan (native parquet
-    * scan, logical columns).
-    */
-  def snapshotDF(pred: Option[Column]): DataFrame = pred match {
-    case Some(p) => table.snapshotWhere(schema, p, asOfVersion)
-    case None => table.snapshot(schema, asOfVersion)
-  }
-
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder = new TxLogScanBuilder(this)
 
@@ -2178,7 +2149,7 @@ object TxLogV2Table {
   private def qcol(name: String): Column =
     col("`" + name.replace("`", "``") + "`")
 
-  private[v2] def loosePredicate(f: Filter): Option[Column] = f match {
+  private[sources] def loosePredicate(f: Filter): Option[Column] = f match {
     case And(l, r) =>
       (loosePredicate(l), loosePredicate(r)) match {
         case (Some(a), Some(b)) => Some(a && b)

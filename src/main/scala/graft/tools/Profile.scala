@@ -3,13 +3,33 @@ package graft.tools
 import org.apache.spark.scheduler._
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Per-query job/stage profiler (guide §1): runs named SparkEntry queries
   * in the bench's session shape with a listener recording every Spark job
-  * (wall time, description, task count). Reports the query's total wall,
-  * the summed job wall, the DRIVER GAP (wall not covered by any running
-  * job — planning, manifest IO, commit protocol), and the top jobs.
+  * (wall time, description, task count). Each profiled query runs once
+  * unprofiled (footers, codegen), then once profiled. Modes:
+  *
+  *  - `Profile q1 q2 …` — per query: total wall, job count, summed job
+  *    time, the DRIVER GAP (wall not covered by any running job —
+  *    planning, manifest IO, commit protocol), the top jobs and the
+  *    per-SQL-execution split;
+  *  - `Profile --all out.json` — every query, one summary each (wall,
+  *    jobs, tasks, job time, driver gap) written as JSON;
+  *  - `Profile --diff a.json b.json` — every query whose job count moved
+  *    between two `--all` runs, and how many rose (no Spark session);
+  *  - `Profile --iso q1 q2 …` — three timed passes per query in this
+  *    fresh session, no listener: the per-query A/B verdict, separating a
+  *    query's own cost from session-state pollution in the full Bench run;
+  *  - `Profile --explain [q1 q2 …]` — `.explain("formatted")` of the named
+  *    queries (all of them if none named): the dev loop for checking
+  *    pushdown, broadcast choice and exchange count.
+  *
+  * The session reads `SPARK_GRAFT_SF_DIR` (default sf0.1) with
+  * `SPARK_GRAFT_CPUS` cores (default 32):
   *   sbt "runMain graft.tools.Profile sql_mv_star_2dim"
+  *   SPARK_GRAFT_SF_DIR=/path/sf0.01 SPARK_GRAFT_CPUS=4 \
+  *     sbt "runMain graft.tools.Profile --all /tmp/profile.json"
   */
 object Profile {
   final case class JobRec(id: Int, desc: String, start: Long,
@@ -20,101 +40,197 @@ object Profile {
   final case class ExecRec(id: Long, desc: String, start: Long,
                            var end: Long = 0L)
 
-  def main(args: Array[String]): Unit = {
+  /** One profiled run of a query. */
+  final case class Summary(wallS: Double, jobs: Int, tasks: Int,
+                           jobS: Double, gapS: Double)
+
+  /** Records the jobs (and the SQL executions they ran under) while it
+    * is registered. */
+  final class Recorder extends SparkListener {
+    val jobs = mutable.ArrayBuffer.empty[JobRec]
+    val execs = mutable.ArrayBuffer.empty[ExecRec]
+    private val stageJob = mutable.Map.empty[Int, Int] // stageId -> jobId
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val names = e.stageInfos.map(_.name).distinct
+      val desc = names.find(!_.startsWith("$anonfun"))
+        .orElse(names.headOption).getOrElse("?")
+      val eid = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        .map(_.toLong).getOrElse(-1L)
+      jobs += JobRec(e.jobId, desc, e.time, stages = e.stageIds.size,
+        execId = eid)
+      e.stageIds.foreach(sid => stageJob(sid) = e.jobId)
+    }
+    // attribute jobs (incl. AQE stage-future sub-jobs, which share the
+    // parent's execution id) to the SQL statement that ran them
+    override def onOtherEvent(e: SparkListenerEvent): Unit = synchronized {
+      e match {
+        case s: org.apache.spark.sql.execution.ui
+            .SparkListenerSQLExecutionStart =>
+          execs += ExecRec(s.executionId, s.description, s.time)
+        case s: org.apache.spark.sql.execution.ui
+            .SparkListenerSQLExecutionEnd =>
+          execs.find(_.id == s.executionId).foreach(_.end = s.time)
+        case _ =>
+      }
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      jobs.find(_.id == e.jobId).foreach(_.end = e.time)
+    }
+    override def onStageCompleted(
+        e: SparkListenerStageCompleted): Unit = synchronized {
+      val si = e.stageInfo
+      stageJob.get(si.stageId).foreach { jid =>
+        jobs.find(_.id == jid).foreach(_.tasks += si.numTasks)
+      }
+    }
+
+    /** The finished jobs in start order. */
+    def done: Seq[JobRec] =
+      synchronized(jobs.filter(_.end > 0).sortBy(_.start).toSeq)
+
+    def summary(wallS: Double): Summary = {
+      val d = done
+      // union of job intervals -> covered time; gap = wall - covered
+      var covered = 0L
+      var curS = -1L; var curE = -1L
+      d.foreach { j =>
+        if (j.start > curE) { if (curE > 0) covered += curE - curS
+          curS = j.start; curE = j.end }
+        else curE = math.max(curE, j.end)
+      }
+      if (curE > 0) covered += curE - curS
+      Summary(wallS, d.size, d.map(_.tasks).sum,
+        d.map(j => j.end - j.start).sum / 1e3, wallS - covered / 1e3)
+    }
+  }
+
+  /** Runs `q` unprofiled, then profiled; the recorder holds the profiled
+    * run's jobs. */
+  private def profiled(spark: org.apache.spark.sql.SparkSession, q: String,
+                       dir: String): (Summary, Recorder) = {
+    graft.SparkEntry.queries(q)(spark, dir).count()
+    val rec = new Recorder
+    spark.sparkContext.addSparkListener(rec)
+    val wall =
+      try {
+        val t0 = System.nanoTime()
+        graft.SparkEntry.queries(q)(spark, dir).count()
+        (System.nanoTime() - t0) / 1e9
+      } finally {
+        Thread.sleep(300) // drain the listener bus
+        spark.sparkContext.removeSparkListener(rec)
+      }
+    (rec.summary(wall), rec)
+  }
+
+  def main(args: Array[String]): Unit = args.toList match {
+    case "--diff" :: a :: b :: Nil => diff(a, b)
+    case "--all" :: out :: Nil => withSession { (spark, dir) =>
+      val queries = graft.SparkEntry.queries.keys.toSeq.sorted.map { q =>
+        q -> (try {
+          val s = profiled(spark, q, dir)._1
+          println(f"== $q wall=${s.wallS}%.2fs jobs=${s.jobs} " +
+            f"tasks=${s.tasks} jobTime=${s.jobS}%.2fs gap=${s.gapS}%.2fs")
+          s
+        } catch { case scala.util.control.NonFatal(e) =>
+          println(s"== $q FAILED: $e")
+          Map("error" -> e.toString)
+        })
+      }
+      mapper.writerWithDefaultPrettyPrinter().writeValue(
+        new java.io.File(out), Map("sfDir" -> dir,
+          "cpus" -> spark.sparkContext.defaultParallelism,
+          "queries" -> scala.collection.immutable.ListMap(queries: _*)))
+      println(s"[profile] wrote ${queries.size} queries to $out")
+    }
+    case "--iso" :: qs => withSession { (spark, dir) =>
+      for (q <- qs; p <- 1 to 3) {
+        val t0 = System.nanoTime()
+        graft.SparkEntry.queries(q)(spark, dir).count()
+        println(f"[iso] $q pass$p ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      }
+    }
+    case "--explain" :: qs => withSession { (spark, dir) =>
+      graft.SparkEntry.queries.keys.toSeq.sorted
+        .filter(q => qs.isEmpty || qs.contains(q)).foreach { q =>
+          println(s"\n========== $q ==========")
+          try graft.SparkEntry.queries(q)(spark, dir).explain("formatted")
+          catch { case scala.util.control.NonFatal(e) =>
+            println(s"[explain] $q failed: ${e.getMessage}")
+          }
+        }
+    }
+    case qs => withSession((spark, dir) => qs.foreach(detail(spark, dir, _)))
+  }
+
+  private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
+
+  private def withSession(
+      body: (org.apache.spark.sql.SparkSession, String) => Unit): Unit = {
     println(s"[profile] pid=${java.lang.ProcessHandle.current().pid()}")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.local(cpus.toInt)
     spark.range(1000).selectExpr("md5(cast(id as string)) m")
       .agg("m" -> "max").collect()
+    try body(spark, dir) finally spark.stop()
+  }
 
-    val jobs = mutable.ArrayBuffer.empty[JobRec]
-    val execs = mutable.ArrayBuffer.empty[ExecRec]
-    val stageTasks = mutable.Map.empty[Int, Int]   // stageId -> numTasks
-    val stageJob = mutable.Map.empty[Int, Int]     // stageId -> jobId
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-        val names = e.stageInfos.map(_.name).distinct
-        val desc = names.find(!_.startsWith("$anonfun"))
-          .orElse(names.headOption).getOrElse("?")
-        val eid = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          .map(_.toLong).getOrElse(-1L)
-        jobs += JobRec(e.jobId, desc, e.time, stages = e.stageIds.size,
-          execId = eid)
-        e.stageIds.foreach(sid => stageJob(sid) = e.jobId)
-      }
-      // attribute jobs (incl. AQE stage-future sub-jobs, which share the
-      // parent's execution id) to the SQL statement that ran them
-      override def onOtherEvent(
-          e: SparkListenerEvent): Unit = synchronized {
-        e match {
-          case s: org.apache.spark.sql.execution.ui
-              .SparkListenerSQLExecutionStart =>
-            execs += ExecRec(s.executionId, s.description, s.time)
-          case s: org.apache.spark.sql.execution.ui
-              .SparkListenerSQLExecutionEnd =>
-            execs.find(_.id == s.executionId).foreach(_.end = s.time)
-          case _ =>
-        }
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-        jobs.find(_.id == e.jobId).foreach(_.end = e.time)
-      }
-      override def onStageCompleted(
-          e: SparkListenerStageCompleted): Unit = synchronized {
-        val si = e.stageInfo
-        stageTasks(si.stageId) = si.numTasks
-        stageJob.get(si.stageId).foreach { jid =>
-          jobs.find(_.id == jid).foreach(_.tasks += si.numTasks)
-        }
+  private def detail(spark: org.apache.spark.sql.SparkSession, dir: String,
+                     q: String): Unit = {
+    val (s, rec) = profiled(spark, q, dir)
+    val done = rec.done
+    println(f"== $q wall=${s.wallS}%.2fs jobs=${s.jobs} " +
+      f"jobTime=${s.jobS}%.2fs covered=${s.wallS - s.gapS}%.2fs " +
+      f"gap=${s.gapS}%.2fs tasks=${s.tasks}")
+    val byDesc = done.groupBy(_.desc).map { case (d, js) =>
+      (d, js.size, js.map(j => j.end - j.start).sum, js.map(_.tasks).sum)
+    }.toSeq.sortBy(-_._3)
+    byDesc.take(30).foreach { case (d, n, ms, tk) =>
+      println(f"  ${ms / 1e3}%7.2fs n=$n%-4d tasks=$tk%-6d ${d.take(120)}")
+    }
+    // per-SQL-execution attribution: wall, jobs (incl. AQE sub-jobs)
+    val byExec = rec.execs.filter(_.end > 0).sortBy(x => -(x.end - x.start))
+    println(f"  -- executions: ${byExec.size} " +
+      f"(execWall=${byExec.map(x => x.end - x.start).sum / 1e3}%.2fs)")
+    byExec.take(25).foreach { x =>
+      val js = done.filter(_.execId == x.id)
+      val jt = js.map(j => j.end - j.start).sum
+      val oneLine = x.desc.replaceAll("\\s+", " ").take(110)
+      println(f"  ${(x.end - x.start) / 1e3}%7.2fs jobs=${js.size}%-4d " +
+        f"jobTime=${jt / 1e3}%5.2fs tasks=${js.map(_.tasks).sum}%-5d " +
+        s"$oneLine")
+    }
+  }
+
+  /** Every query whose job count differs between two `--all` files;
+    * queries present in only one file are listed as added or dropped. */
+  private def diff(a: String, b: String): Unit = {
+    // a query that failed in a run has no job count there
+    def jobsIn(f: String): Map[String, Int] = {
+      val qs = mapper.readTree(new java.io.File(f)).get("queries")
+      qs.fieldNames().asScala.collect {
+        case q if qs.get(q).has("jobs") => q -> qs.get(q).get("jobs").asInt
+      }.toMap
+    }
+    val (ja, jb) = (jobsIn(a), jobsIn(b))
+    val moved = (ja.keySet ++ jb.keySet).toSeq.sorted.flatMap { q =>
+      (ja.get(q), jb.get(q)) match {
+        case (Some(x), Some(y)) if x != y => Some((q, s"$x -> $y", y - x))
+        case (Some(x), None) => Some((q, s"$x -> dropped", 0))
+        case (None, Some(y)) => Some((q, s"added -> $y", 0))
+        case _ => None
       }
     }
-
-    for (q <- args) {
-      // warm pass (footers, codegen) — NOT profiled
-      graft.SparkEntry.queries(q)(spark, dir).count()
-      jobs.clear(); execs.clear(); stageTasks.clear(); stageJob.clear()
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(q)(spark, dir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(listener)
-      Thread.sleep(200) // drain listener bus
-      val done = jobs.filter(_.end > 0).sortBy(_.start)
-      // union of job intervals -> covered time; gap = wall - covered
-      var covered = 0L
-      var curS = -1L; var curE = -1L
-      done.foreach { j =>
-        if (j.start > curE) { if (curE > 0) covered += curE - curS
-          curS = j.start; curE = j.end }
-        else curE = math.max(curE, j.end)
-      }
-      if (curE > 0) covered += curE - curS
-      val totTasks = done.map(_.tasks).sum
-      println(f"== $q wall=$wall%.2fs jobs=${done.size} " +
-        f"jobTime=${done.map(j => j.end - j.start).sum / 1e3}%.2fs " +
-        f"covered=${covered / 1e3}%.2fs gap=${wall - covered / 1e3}%.2fs " +
-        f"tasks=$totTasks")
-      val byDesc = done.groupBy(_.desc).map { case (d, js) =>
-        (d, js.size, js.map(j => j.end - j.start).sum, js.map(_.tasks).sum)
-      }.toSeq.sortBy(-_._3)
-      byDesc.take(30).foreach { case (d, n, ms, tk) =>
-        println(f"  ${ms / 1e3}%7.2fs n=$n%-4d tasks=$tk%-6d ${d.take(120)}")
-      }
-      // per-SQL-execution attribution: wall, jobs (incl. AQE sub-jobs)
-      val byExec = execs.filter(_.end > 0).sortBy(x => -(x.end - x.start))
-      println(f"  -- executions: ${byExec.size} " +
-        f"(execWall=${byExec.map(x => x.end - x.start).sum / 1e3}%.2fs)")
-      byExec.take(25).foreach { x =>
-        val js = done.filter(_.execId == x.id)
-        val jt = js.map(j => j.end - j.start).sum
-        val oneLine = x.desc.replaceAll("\\s+", " ").take(110)
-        println(f"  ${(x.end - x.start) / 1e3}%7.2fs jobs=${js.size}%-4d " +
-          f"jobTime=${jt / 1e3}%5.2fs tasks=${js.map(_.tasks).sum}%-5d " +
-          s"$oneLine")
-      }
+    moved.foreach { case (q, m, d) =>
+      println(f"$q%-40s $m${if (d != 0) f" ($d%+d)" else ""}")
     }
-    spark.stop()
+    println(s"== ${moved.size} of ${(ja.keySet ++ jb.keySet).size} " +
+      s"queries moved, ${moved.count(_._3 > 0)} rose, " +
+      s"${moved.count(_._3 < 0)} fell; jobs ${ja.values.sum} -> " +
+      s"${jb.values.sum}")
   }
 }

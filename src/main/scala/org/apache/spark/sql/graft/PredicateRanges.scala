@@ -1,7 +1,12 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Between, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Not, Or}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.internal.{ColumnNode, Literal => NodeLit, UnresolvedAttribute => NodeAttr, UnresolvedFunction => NodeFn}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, ShortType, StringType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Conservative per-column bounds extracted from a predicate `Column` —
   * the analysis that lets `TxLogTable.snapshotWhere` skip files for
@@ -450,5 +455,92 @@ object PredicateRanges {
       case _ => Map.empty // not / udf / non-literal cmp: no pruning, still correct
     }
     case _ => Map.empty
+  }
+
+  /** A resolved Catalyst predicate as a pruning `Column`, as far as its
+    * shape allows: comparisons, BETWEEN, IN/INSET, IS [NOT] NULL of an
+    * attribute against integral or string constants, under AND (where
+    * one translated conjunct still prunes soundly) and OR (where both
+    * sides must translate). Anything else contributes nothing; the
+    * caller re-applies the full predicate to the rows it reads.
+    */
+  def fromCatalyst(e: Expression): Option[Column] = e match {
+    case EqualTo(a: AttributeReference, Const(l)) =>
+      litVal(l).map(qcol(a.name) === _)
+    case EqualTo(Const(l), a: AttributeReference) =>
+      litVal(l).map(qcol(a.name) === _)
+    case GreaterThan(a: AttributeReference, Const(l)) =>
+      litVal(l).map(qcol(a.name) > _)
+    case GreaterThan(Const(l), a: AttributeReference) =>
+      litVal(l).map(qcol(a.name) < _)
+    case GreaterThanOrEqual(a: AttributeReference, Const(l)) =>
+      litVal(l).map(qcol(a.name) >= _)
+    case GreaterThanOrEqual(Const(l), a: AttributeReference) =>
+      litVal(l).map(qcol(a.name) <= _)
+    case LessThan(a: AttributeReference, Const(l)) =>
+      litVal(l).map(qcol(a.name) < _)
+    case LessThan(Const(l), a: AttributeReference) =>
+      litVal(l).map(qcol(a.name) > _)
+    case LessThanOrEqual(a: AttributeReference, Const(l)) =>
+      litVal(l).map(qcol(a.name) <= _)
+    case LessThanOrEqual(Const(l), a: AttributeReference) =>
+      litVal(l).map(qcol(a.name) >= _)
+    case b: Between =>
+      fromCatalyst(And(GreaterThanOrEqual(b.input, b.lower),
+        LessThanOrEqual(b.input, b.upper)))
+    case In(a: AttributeReference, vs) if vs.nonEmpty =>
+      val raw = vs.map {
+        case Const(l) => litVal(l)
+        case _ => None
+      }
+      if (raw.forall(_.isDefined)) Some(qcol(a.name).isin(raw.flatten: _*))
+      else None
+    // the optimizer's form of a long IN list
+    case InSet(a: AttributeReference, vs) if vs.nonEmpty =>
+      val raw = vs.toSeq.map(v => litVal(Literal(v, a.dataType)))
+      if (raw.forall(_.isDefined)) Some(qcol(a.name).isin(raw.flatten: _*))
+      else None
+    case IsNull(a: AttributeReference) => Some(qcol(a.name).isNull)
+    case IsNotNull(a: AttributeReference) => Some(qcol(a.name).isNotNull)
+    case Not(IsNull(a: AttributeReference)) => Some(qcol(a.name).isNotNull)
+    case And(l, r) =>
+      (fromCatalyst(l), fromCatalyst(r)) match {
+        case (Some(a), Some(b)) => Some(a && b)
+        case (a, b) => a.orElse(b) // one conjunct still prunes soundly
+      }
+    case Or(l, r) =>
+      for (a <- fromCatalyst(l); b <- fromCatalyst(r)) yield a || b
+    case _ => None
+  }
+
+  // quoted: a legal column name containing a dot must not parse as
+  // struct access when the predicate is re-built as a Column
+  private def qcol(name: String): Column =
+    col("`" + name.replace("`", "``") + "`")
+
+  // A literal as a pruning Column of the same type: integral and string
+  // values as they are, a DATE's epoch days and a TIMESTAMP's epoch
+  // micros as the java.time values they encode (a bare number would
+  // compare against the column as something else).
+  private def litVal(l: Literal): Option[Column] = (l.dataType, l.value) match {
+    case (ByteType | ShortType | IntegerType | LongType, v) if v != null =>
+      Some(lit(v))
+    case (StringType, s: UTF8String) => Some(lit(s.toString))
+    case (DateType, d: Int) => Some(lit(java.time.LocalDate.ofEpochDay(d)))
+    case (TimestampType, us: Long) =>
+      Some(lit(DateTimeUtils.microsToInstant(us)))
+    case _ => None
+  }
+
+  // A constant operand, folded: the analyzer leaves its type-coercion
+  // casts around literals (`bigintCol >= 10` is `>= CAST(10 AS BIGINT)`)
+  // and constant folding runs only in the optimizer.
+  private object Const {
+    def unapply(e: Expression): Option[Literal] = e match {
+      case l: Literal => Some(l)
+      case _ if e.foldable && e.deterministic =>
+        scala.util.Try(Literal.create(e.eval(), e.dataType)).toOption
+      case _ => None
+    }
   }
 }

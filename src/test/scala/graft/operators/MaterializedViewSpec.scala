@@ -1192,6 +1192,57 @@ class MaterializedViewSpec extends AnyFunSuite {
       Set(("a", 2L), ("b", 2L)))
   }
 
+  test("a full recompute reports the recomputed view's group count") {
+    val (src, mvRoot) = fresh()
+    src.commit(df((1L, "a", 1.0), (2L, "b", 2.0), (2L, "b", 3.0),
+      (3L, "c", 4.0)), overwrite = true)
+    MaterializedView.create(spark, mvRoot, "gc_full", src, schema,
+      Seq("k"), Seq("total" -> "v"))
+    src.commit(df((4L, "d", 5.0), (4L, "d", 6.0)), overwrite = false)
+    val st = MaterializedView.refresh(spark, mvRoot, full = true)
+    assert(st.mode === "full", st)
+    assert(st.groupsChanged === 4L, st) // k = 1, 2, 3, 4
+    assert(mvRows(mvRoot) === recompute(src))
+  }
+
+  test("a dimension probe that throws fails the refresh; the view stays " +
+    "at its pre-state") {
+    val dir = Files.createTempDirectory("mvprobe")
+    val fact = TxLogTable(spark, dir.resolve("fact").toString)
+    val dim = TxLogTable(spark, dir.resolve("dim").toString)
+    val mvRoot = dir.resolve("mv").toString
+    val dimSchema = StructType(Seq(
+      StructField("uid", LongType), StructField("seg", StringType)))
+    fact.commit(df((1L to 20L).map(i => (i % 5, "x", i.toDouble)): _*),
+      overwrite = true)
+    dim.commit((0L to 4L).map(i => (i, "s" + (i % 2))).toDF("uid", "seg"),
+      overwrite = true)
+    MaterializedView.createJoined(spark, mvRoot, "probe_star", fact,
+      schema, dim, dimSchema, Seq("k" -> "uid"), Seq("seg"),
+      Seq("total" -> "v"))
+    val mv = TxLogTable(spark, mvRoot)
+    val d = MaterializedView.definition(spark, mvRoot)
+    val preV = mv.latestVersion
+    val pre = mv.snapshot(d.mvSchema).collect().toSet
+    // the dim moves by an append whose file a compaction then replaces:
+    // only the dim's change feed — the probe — still reads that file,
+    // which is then damaged
+    val before = dim.entries().map(_.rel).toSet
+    dim.commit(Seq((5L, "s9"), (1L, "s7")).toDF("uid", "seg"),
+      overwrite = false)
+    val added = dim.entries().map(_.rel).filterNot(before)
+    dim.compact(dimSchema)
+    added.foreach(r => Files.write(dir.resolve("dim").resolve("data")
+      .resolve(r), "not parquet".getBytes))
+    // past the local-snapshot cap, so the probe runs instead of the
+    // driver-side snapshot diff
+    spark.conf.set("spark.graft.mv.maxLocalDimRows", "0")
+    try intercept[Exception](MaterializedView.refresh(spark, mvRoot))
+    finally spark.conf.unset("spark.graft.mv.maxLocalDimRows")
+    assert(mv.latestVersion === preV)
+    assert(mv.snapshot(d.mvSchema).collect().toSet === pre)
+  }
+
   // ---- job budgets: job counts are deterministic, so a refresh that
   // starts doing more Spark work fails here rather than hiding in
   // wall-time noise ----

@@ -101,6 +101,33 @@ class TxLogCatalogSpec extends AnyFunSuite {
     spark.catalog.dropTempView("banded_v")
   }
 
+  test("DATE and TIMESTAMP filters prune at the manifest, through a join") {
+    spark.sql("CREATE TABLE txcat.ns.dated (id BIGINT, d DATE, ts TIMESTAMP) " +
+      "USING txlog")
+    Seq("2024-01-01", "2024-02-01", "2024-03-01").foreach { day =>
+      spark.sql("INSERT INTO txcat.ns.dated SELECT id, " +
+        s"date_add(DATE'$day', CAST(id AS INT)), " +
+        s"timestamp_seconds(unix_timestamp(DATE'$day') + id) FROM range(3)")
+    }
+    val total = TxLogTable(spark, s"$warehouse/ns/dated").fileCount()
+    val shapes = Seq(
+      "date" -> spark.sql("SELECT id FROM txcat.ns.dated " +
+        "WHERE d >= DATE'2024-02-01' AND d < DATE'2024-02-10'"),
+      "timestamp" -> spark.sql("SELECT id FROM txcat.ns.dated " +
+        "WHERE ts >= TIMESTAMP'2024-02-01 00:00:00' " +
+        "AND ts < TIMESTAMP'2024-02-02 00:00:00'"),
+      "join" -> spark.sql("SELECT a.id FROM txcat.ns.dated a " +
+        "JOIN range(3) r ON a.id = r.id " +
+        "WHERE a.d BETWEEN DATE'2024-02-01' AND DATE'2024-02-09'"))
+    shapes.foreach { case (shape, df) =>
+      assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L),
+        shape)
+      val read = filesRead(df)
+      assert(read >= 1 && read < total,
+        s"$shape read $read of $total files")
+    }
+  }
+
   test("DELETE FROM routes to the file-targeted COW delete") {
     spark.sql("DROP TABLE IF EXISTS txcat.ns.del")
     spark.sql("CREATE TABLE txcat.ns.del USING txlog AS " +

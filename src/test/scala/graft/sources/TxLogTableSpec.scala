@@ -189,6 +189,64 @@ class TxLogTableSpec extends AnyFunSuite {
       "each tombstone must carry its own commit version")
   }
 
+  // ---- job budgets of the read path: the manifest is the file list, so
+  // planning a read lists nothing and tagging a feed joins nothing ----
+
+  private def jobsOf[A](body: => A): (A, Seq[String]) =
+    org.apache.spark.JobCount.described(spark.sparkContext)(body)
+
+  // past the 32 paths at which Spark's own file index lists in a job
+  private def fortyOneFileCommits(): TxLogTable = {
+    val t = fresh()
+    (0 until 40).foreach { i =>
+      t.commit(Seq((i.toLong, s"v$i")).toDF("id", "v").coalesce(1),
+        overwrite = i == 0)
+    }
+    assert(t.fileCount() == 40)
+    t
+  }
+
+  test("job budget: a snapshot over 40 one-file commits plans with 0 jobs") {
+    val t = fortyOneFileCommits()
+    val (snap, planJobs) = jobsOf(t.snapshot(schema))
+    assert(planJobs.isEmpty, s"building the read ran jobs: $planJobs")
+    val (n, runJobs) = jobsOf(snap.collect().length)
+    assert(n == 40)
+    assert(!runJobs.exists(_.startsWith("Listing leaf files")), runJobs)
+  }
+
+  test("job budget: a change feed over 40 commits runs no listing and no " +
+      "broadcast-build job") {
+    val t = fortyOneFileCommits()
+    val (feed, planJobs) = jobsOf(t.changesBetween(schema, -1, 39))
+    assert(planJobs.isEmpty, s"building the feed ran jobs: $planJobs")
+    val (got, runJobs) = jobsOf(feed.collect()
+      .map(r => (r.getLong(0), r.getLong(2))).toSet)
+    assert(got == (0 until 40).map(i => (i.toLong, i.toLong)).toSet)
+    assert(!runJobs.exists(_.startsWith("Listing leaf files")), runJobs)
+    // the version tag is a per-file value: nothing to broadcast
+    assert(!feed.queryExecution.executedPlan.toString
+      .contains("BroadcastExchange"), feed.queryExecution.executedPlan)
+  }
+
+  test("a literal '+' in a partition value round-trips through snapshot " +
+      "and change feed") {
+    val t = fresh()
+    val pSchema = StructType(Seq(StructField("id", LongType),
+      StructField("p", StringType)))
+    Seq("a+b", "c + d", "e+").zipWithIndex.foreach { case (p, i) =>
+      t.commit(Seq((i.toLong, p)).toDF("id", "p"), overwrite = i == 0,
+        partitionCols = Seq("p"))
+    }
+    val want = Set((0L, "a+b"), (1L, "c + d"), (2L, "e+"))
+    assert(t.snapshot(pSchema).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet == want)
+    assert(t.changesBetween(pSchema, -1, 2).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet ==
+      want.map { case (id, p) => (id, p, id) })
+    assert(t.snapshot(pSchema).where("p = 'a+b'").count() == 1)
+  }
+
   test("change feed: user column literally named _graft_file does not " +
       "collide with the version-tag helper") {
     val t = fresh()
