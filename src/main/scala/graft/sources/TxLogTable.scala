@@ -123,16 +123,53 @@ object TxLogTable {
   private[sources] final case class Unchanged[+R](result: R)
       extends CommitPlan[R]
 
-  /** What one planning pass of a layout rewrite decided for its base
-    * version: restage the data lines `hit` through `cluster` and carry
-    * `kept` by reference. `overwrite` marks a whole-table rewrite (the
-    * tombstones and the MOR key set die with it); `edit` changes the
-    * carried header.
+  /** What one planning pass of a copy-on-write commit decided for its
+    * base version: carry the data lines `kept` by reference, and read the
+    * data lines `hit` through the MOR/DV mask, pass their rows through
+    * `rows` and re-stage the result. `overwrite` marks a whole-table
+    * replace (the tombstones and the MOR key set die with it); `edit`
+    * changes the carried header; `dropped` counts the files removed
+    * unread.
     */
-  private[sources] final case class Rewrite(hit: Seq[String],
-      kept: Seq[String], cluster: DataFrame => DataFrame,
+  private[sources] final case class Rewrite(kept: Seq[String],
+      hit: Seq[String] = Nil,
+      rows: DataFrame => DataFrame = identity,
       overwrite: Boolean = false,
-      edit: ManifestHeader => ManifestHeader = identity)
+      edit: ManifestHeader => ManifestHeader = identity,
+      dropped: Int = 0)
+
+  /** How a commit's files are staged: the hive layout, the bloom columns
+    * and the bloom size in bits (None: the table's recorded size).
+    */
+  private[sources] final case class Layout(partitionCols: Seq[String],
+      bloomCols: Seq[String], bloomBits: Option[Int] = None)
+
+  /** The new rows a data commit brings, beyond what its plan re-reads
+    * from the files it hits: they pass the CHECK constraints in one job
+    * before the version race, and the commit folds them into the NDV
+    * sketch.
+    */
+  private[sources] sealed trait Batch
+
+  /** New rows the plan's `rows` transform brings in (a merge's upsert, a
+    * replaceWhere's union): re-staged with the hit rows on every attempt.
+    * Each of `rules` — a condition that refuses a row, and the message
+    * for a refused-row count — rides the CHECK validation job.
+    */
+  private[sources] final case class Joined(rows: DataFrame,
+      rules: Seq[(Column, Long => String)] = Nil) extends Batch
+
+  /** New rows staged ONCE under `layout` before the version race (append,
+    * overwrite, dynamic overwrite, the partitioned SQL group replace): a
+    * lost race re-plans what the commit keeps, never re-stages these.
+    */
+  private[sources] final case class Staged(rows: DataFrame, layout: Layout)
+      extends Batch
+
+  /** An external writer's parquet files under `scratch` (the native SQL
+    * write), moved into the table once before the version race.
+    */
+  private[sources] final case class Written(scratch: Path) extends Batch
 
   // Suffix of the in-flight temp files `putIfAbsent` and
   // `replaceAtomically` write next to their target. No reader's filter
@@ -1002,7 +1039,8 @@ object TxLogTable {
 }
 
 final case class TxLogTable(spark: SparkSession, root: String) {
-  import TxLogTable.{LayoutRewrite, Publish, Rewrite, Unchanged}
+  import TxLogTable.{Batch, Joined, Layout, LayoutRewrite, Publish, Rewrite,
+    Staged, Unchanged, Written}
 
   // A root of the form `<path>@@branch=<name>` addresses the table's
   // BRANCH log: same data directory (zero-copy, like a clone without the
@@ -1605,17 +1643,16 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     0
   }
 
-  // Serializable-conflict guard for the stage-then-race write paths
-  // (commit / group-replace / dynamic-overwrite stage ONCE before their
-  // publish loop): staged files' hidden bucket ids were derived under
-  // the spec current at staging, so a CONCURRENT REBUCKET landing before
-  // our publish would let the retry publish a silently corrupt layout —
-  // files whose `_bkt` segment lies about their content under the new
-  // hash, which turns the bucket point-prune into wrong answers. Refuse
-  // loudly instead (the same contract as the write-write detection in
-  // publishReplace); the caller reruns against the new spec. Paths that
-  // stage INSIDE their loop (merge, compactions, rebucket itself)
-  // re-derive per attempt and need no guard.
+  // Serializable-conflict guard for the batches `rewrite` stages ONCE
+  // before its publish loop: staged files' hidden bucket ids were derived
+  // under the spec current at staging, so a CONCURRENT REBUCKET landing
+  // before our publish would let the retry publish a silently corrupt
+  // layout — files whose `_bkt` segment lies about their content under
+  // the new hash, which turns the bucket point-prune into wrong answers.
+  // Refuse loudly instead (the same contract as the write-write detection
+  // in groupReplace); the caller reruns against the new spec. Files
+  // staged INSIDE the loop (merge, compactions, rebucket itself) are
+  // re-derived per attempt and need no guard.
   private[sources] def requireSpecUnchanged(
       stagedSpec: Seq[(String, Int)], base: Option[Int],
       what: String): Unit = {
@@ -2988,44 +3025,99 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       .drop(net)
   }
 
-  /** THE layout-maintenance rewrite: every [[TxLogTable.LayoutRewrite]]
-    * stages and publishes through here, inside [[optimisticCommit]]. Each
-    * pass hands the resolved `base` to `plan`, which either declares the
-    * table converged (`Left`: the stats to return, nothing committed) or
-    * names the files to rewrite and to keep. The rewritten files are read
-    * through the MOR/DV mask (their deletes materialize) with the hidden
-    * layout columns derived, clustered by the plan, and staged with the
-    * inherited bloom columns and bits. The version publishes the kept
-    * lines plus the staged files under `base`'s carried header and the
-    * plan's edit. A lost race re-plans against the new head, so a commit
-    * landing during the staging write is re-read, never dropped. The rows
-    * passed the CHECK constraints at ingest and are not re-validated; the
-    * NDV sketch carries (the rows are the same — `analyze` re-tightens
-    * it).
+  /** THE copy-on-write data commit: every commit that adds or removes
+    * data files publishes through here, inside [[optimisticCommit]] —
+    * the [[TxLogTable.LayoutRewrite]]s, [[merge]], [[deleteWhere]],
+    * [[replaceWhere]], [[commit]], [[commitDynamic]] and the SQL group
+    * replaces. Before the race, the `batch`'s new rows pass the CHECK
+    * constraints in one job (a layout rewrite's or a delete's rows all
+    * passed at ingest), and a [[Staged]] or [[Written]] batch is staged.
+    *
+    * Each pass hands the resolved `base` and the pre-staged data lines to
+    * `plan`, which either declares the commit a no-op (`Left`: the stats
+    * to return, nothing committed) or names the files to keep and the
+    * files to re-stage. Those are read under the logical `schema` through
+    * the MOR/DV mask (their deletes materialize), passed through the
+    * plan's `rows` and staged under `base`'s layout, bloom columns and
+    * bloom bits. User writes rebalance under optimizeWrite; a layout
+    * rewrite keeps its hand-placed partitioning and clusters on the
+    * derived hidden layout columns. The version publishes the kept lines
+    * plus every staged file under `base`'s carried header, the staging
+    * layout and the plan's edit. A commit that brings new rows folds its
+    * staged files into the NDV sketch (from scratch when it replaces the
+    * whole table); a layout rewrite or a delete carries the sketch (its
+    * rows are the same or fewer — `analyze` re-tightens it).
+    *
+    * A lost race re-plans against the new head, so a commit landing
+    * during a staging write is re-read, never dropped, and the hit files
+    * are re-staged. Pre-staged files are never re-staged: they join
+    * every attempt, and are refused when a concurrent rebucket changed
+    * the bucket layout they were staged under. Files a lost pass staged
+    * stay unreferenced until `vacuum`.
     */
-  private def rewrite(op: LayoutRewrite.Value, schema: StructType)
-      (plan: Option[Int] => Either[TxLogTable.MergeStats, Rewrite])
-      : TxLogTable.MergeStats =
-    optimisticCommit(op.toString) { (base, next) =>
-      plan(base) match {
-        case Left(converged) => Unchanged(converged)
+  private def rewrite(op: String, schema: StructType = StructType(Nil),
+                      batch: Option[Batch] = None)
+      (plan: (Option[Int], Seq[String]) =>
+        Either[TxLogTable.MergeStats, Rewrite]): TxLogTable.MergeStats = {
+    val user = !TxLogTable.RewriteOps(op)
+    val head = latestVersion
+    val spec = head.map(bucketSpecsOf).getOrElse(Nil)
+    val (pre, preLayout) = batch match {
+      case Some(Staged(rows, l)) =>
+        validateChecks(rows, head)
+        (fileEntries(stage(rows, l.partitionCols, rebalance = true), l,
+          head), Some(l))
+      case Some(Written(scratch)) =>
+        val files = parquetUnder(scratch)
+        if (files.nonEmpty)
+          validateChecks(logical(spark.read.parquet(files: _*)), head)
+        val l = layoutOf(head)
+        (fileEntries(moveStaged(scratch), l, head), Some(l))
+      case Some(Joined(rows, rules)) =>
+        validateChecks(rows, head, rules)
+        (Nil, None)
+      case None => (Nil, None)
+    }
+    optimisticCommit(op) { (base, next) =>
+      plan(base, pre) match {
+        case Left(done) => Unchanged(done)
         case Right(rw) =>
-          val layout = base.map(partitionColsOf).getOrElse(Nil)
-          val rows = withBucketCol(readMaskedEntries(schema,
-            rw.hit.map(TxLogTable.decodeEntry), base), layout)
-          val staged = stageWithStats(rw.cluster(rows), layout,
-            base.map(bloomColsOf).getOrElse(Nil), inheritedBloomBits(base))
-          Publish(
-            rw.edit(carryFrom(base, op.toString, rw.kept, rw.overwrite)),
-            rw.kept ++ tagVersion(staged, next),
-            TxLogTable.MergeStats(next, rw.hit.size, rw.kept.size))
+          if (preLayout.isDefined) requireSpecUnchanged(spec, base, op)
+          val layout = preLayout.getOrElse(layoutOf(base))
+          val joined = batch.exists(_.isInstanceOf[Joined])
+          val restaged =
+            if (rw.hit.isEmpty && !joined) Nil
+            else {
+              val read = readMaskedEntries(schema,
+                rw.hit.map(TxLogTable.decodeEntry), base)
+              val rows = rw.rows(
+                if (user) read else withBucketCol(read, layout.partitionCols))
+              fileEntries(stage(rows, layout.partitionCols, rebalance = user),
+                layout, base)
+            }
+          val carried = carryFrom(base, op, rw.kept, rw.overwrite)
+          val h = carried.copy(partitionCols = layout.partitionCols,
+            bloomCols = layout.bloomCols,
+            bloomBits = layout.bloomBits.orElse(carried.bloomBits))
+          val folded =
+            if (batch.isEmpty) h
+            else foldNdv(h, stagedKmv(pre ++ restaged), reset = rw.overwrite)
+          Publish(rw.edit(folded), rw.kept ++ tagVersion(pre ++ restaged, next),
+            TxLogTable.MergeStats(next, rw.hit.size, rw.kept.size,
+              rw.dropped))
       }
     }
+  }
+
+  // how `base` stages: its hive layout and bloom columns
+  private def layoutOf(base: Option[Int]): Layout =
+    Layout(base.map(partitionColsOf).getOrElse(Nil),
+      base.map(bloomColsOf).getOrElse(Nil))
 
   // a rewrite of every file of `b`
   private def wholeTable(b: Int, cluster: DataFrame => DataFrame)
       : Rewrite =
-    Rewrite(dataLines(b), Nil, cluster, overwrite = true)
+    Rewrite(Nil, dataLines(b), cluster, overwrite = true)
 
   // `rows` in `n` tasks clustered by the partition values, so each hive
   // value's rows land in ONE task → one packed file per value, instead of
@@ -3061,7 +3153,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * feed before the compaction point) stay readable until `vacuum`.
     */
   def compact(schema: StructType, numFiles: Int = 1): Int =
-    rewrite(LayoutRewrite.Compact, schema) { base =>
+    rewrite(LayoutRewrite.Compact.toString, schema) { (base, _) =>
       val b = base.getOrElse(
         throw new IllegalStateException(s"compact of empty table: $root"))
       Right(wholeTable(b, packed(_, numFiles, partitionColsOf(b))))
@@ -3092,7 +3184,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
                    targetBytes: Long = 128L * 1024 * 1024)
       : TxLogTable.MergeStats = {
     require(minBytes > 0 && targetBytes > 0, "compactSmall thresholds")
-    rewrite(LayoutRewrite.CompactSmall, schema) { base =>
+    rewrite(LayoutRewrite.CompactSmall.toString, schema) { (base, _) =>
       val sizes = base.map(b => fileSizes(Some(b)).toMap)
         .getOrElse(Map.empty)
       def size(line: String): Long =
@@ -3105,7 +3197,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         val nOut = math.max(1L,
           (small.map(size).sum + targetBytes - 1) / targetBytes).toInt
         val layout = base.map(partitionColsOf).getOrElse(Nil)
-        Right(Rewrite(small, large, packed(_, nOut, layout)))
+        Right(Rewrite(large, small, packed(_, nOut, layout)))
       }
     }
   }
@@ -3125,7 +3217,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
                    numFiles: Int = 1): TxLogTable.MergeStats = {
     require(preds.nonEmpty && preds.valuesIterator.forall(_.nonEmpty),
       "compactWhere needs at least one partition constraint")
-    rewrite(LayoutRewrite.CompactWhere, schema) { base =>
+    rewrite(LayoutRewrite.CompactWhere.toString, schema) { (base, _) =>
       val layout = base.map(partitionColsOf).getOrElse(Nil)
       val (hit, kept) = partitionSplit("compactWhere", base, preds)
       // convergence: `numFiles` is PER PARTITION VALUE — a multi-value
@@ -3139,7 +3231,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       if (perValue.valuesIterator.forall(_.size <= numFiles))
         Left(TxLogTable.MergeStats(base.getOrElse(-1), 0,
           kept.size + hit.size))
-      else Right(Rewrite(hit, kept, packed(_, numFiles, layout)))
+      else Right(Rewrite(kept, hit, packed(_, numFiles, layout)))
     }
   }
 
@@ -3163,7 +3255,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
              targetBytes: Long = TxLogTable.RebucketTargetBytes)
       : TxLogTable.MergeStats = {
     require(targetBytes > 0, s"resort targetBytes: $targetBytes")
-    rewrite(LayoutRewrite.Resort, schema) { base =>
+    rewrite(LayoutRewrite.Resort.toString, schema) { (base, _) =>
       val b = base.getOrElse(throw new IllegalStateException(
         s"resort of empty table: $root"))
       val sorts = sortColsOf(b)
@@ -3194,7 +3286,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
           sizes.getOrElse(TxLogTable.relOf(l), 0L)).sum
         val nOut = math.min(1L << 18, math.max(damaged.size.toLong,
           (hitBytes + targetBytes - 1) / targetBytes)).toInt
-        Right(Rewrite(hit, armed.valuesIterator.flatten.toSeq,
+        Right(Rewrite(armed.valuesIterator.flatten.toSeq, hit,
           _.repartitionByRange(nOut, (layout ++ sorts).map(col): _*)))
       }
     }
@@ -3223,7 +3315,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
   def compactZOrder(schema: StructType, zCols: Seq[String],
                     numFiles: Int): Int = {
     requireZDims(zCols)
-    rewrite(LayoutRewrite.ZOrder, schema) { base =>
+    rewrite(LayoutRewrite.ZOrder.toString, schema) { (base, _) =>
       val b = base.getOrElse(throw new IllegalStateException(
         s"compactZOrder of empty table: $root"))
       requireUnsorted(b)
@@ -3250,7 +3342,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     require(preds.nonEmpty && preds.valuesIterator.forall(_.nonEmpty),
       "compactZOrderWhere needs at least one partition constraint; use " +
         "compactZOrder for the whole table")
-    rewrite(LayoutRewrite.ZOrderWhere, schema) { base =>
+    rewrite(LayoutRewrite.ZOrderWhere.toString, schema) { (base, _) =>
       val b = base.getOrElse(throw new IllegalStateException(
         s"compactZOrderWhere of empty table: $root"))
       requireUnsorted(b)
@@ -3260,7 +3352,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
           "rewritten dir, so it cannot cluster anything; drop it"))
       val (hit, kept) = partitionSplit("compactZOrderWhere", base, preds)
       if (hit.isEmpty) Left(TxLogTable.MergeStats(b, 0, kept.size))
-      else Right(Rewrite(hit, kept,
+      else Right(Rewrite(kept, hit,
         zOrdered(_, schema, zCols, numFiles, layout)))
     }
   }
@@ -3798,7 +3890,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       s"bucket count out of range: $newN")
     alsoKeys.foreach { case (_, n) =>
       require(n > 0 && n <= (1 << 20), s"bucket count out of range: $n") }
-    rewrite(LayoutRewrite.Rebucket, schema) { base =>
+    rewrite(LayoutRewrite.Rebucket.toString, schema) { (base, _) =>
       require(base.isDefined, s"rebucket of nonexistent table $root")
       val b = base.get
       val specs = bucketSpecsOf(b)
@@ -3951,15 +4043,6 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     0
   }
 
-  /** Commit `df` as the next version. `overwrite = false` appends: the new
-    * manifest carries the previous version's files plus the delta. Returns
-    * the committed version number.
-    *
-    * Partitioning is a TABLE property, as in hive-layout tables: an append
-    * must use the current version's `partitionCols` (mixed layouts under
-    * one `basePath` are unreadable — Spark's partition discovery rejects
-    * conflicting directory structures); an overwrite may change them.
-    */
   // Stage to a scratch dir, then move each data file to its FINAL
   // partition-dir location under data/ with a batch-unique name —
   // invisible until a manifest references it. This is the Delta/Iceberg
@@ -3971,11 +4054,9 @@ final case class TxLogTable(spark: SparkSession, root: String) {
   // directory structures. A crash mid-move leaves only unreferenced
   // files; the table is untouched.
   private def stage(df: DataFrame, partitionCols: Seq[String],
-                    rebalanceOk: Boolean = false): Seq[String] = {
-    Files.createDirectories(dataDir)
-    Files.createDirectories(logDir)
-    val batch = "batch-" + java.util.UUID.randomUUID().toString
-    val scratch = dataDir.resolve(batch + ".staging")
+                    rebalance: Boolean = false): Seq[String] = {
+    val scratch = dataDir.resolve(
+      "batch-" + java.util.UUID.randomUUID().toString + ".staging")
     // data files always carry PHYSICAL column names (column mapping):
     // renamed logical columns are translated here once, so every commit
     // path — append, merge rewrite, compaction — stays physically uniform
@@ -4000,10 +4081,10 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     // value lands in as few target-sized files as its bytes need,
     // regardless of the incoming plan's partitioning. BEFORE the
     // within-partition sort (the shuffle would destroy it). Only on
-    // user-facing writes (rebalanceOk): maintenance rewrites hand-place
+    // user-facing writes (rebalance): maintenance rewrites hand-place
     // their range/salted partitioning and must not be reshuffled.
     val sized =
-      if (rebalanceOk && latestVersion.exists(optimizeWriteOf))
+      if (rebalance && latestVersion.exists(optimizeWriteOf))
         (if (partitionCols.isEmpty) bucketed.hint("rebalance")
          else bucketed.hint("rebalance", partitionCols.map(col): _*))
       else bucketed
@@ -4017,27 +4098,33 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       .write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(scratch.toString)
-    moveStaged(scratch, batch)
+    moveStaged(scratch)
   }
 
-  // move every parquet under `scratch` into data/ under the batch-unique
-  // prefix (hive subdirs preserved), clean up the scratch remains, and
-  // return the rel paths — the publish half of staging, shared with
-  // commitStagedDir
-  private def moveStaged(scratch: Path, batch: String): Seq[String] = {
-    val stagedFiles = scala.util.Using.resource(Files.walk(scratch)) { s =>
+  // the parquet files under `scratch`, in path order
+  private def parquetUnder(scratch: Path): Seq[String] =
+    scala.util.Using.resource(Files.walk(scratch)) { s =>
       s.iterator().asScala
-        .filter(p => p.toString.endsWith(".parquet") &&
-          Files.isRegularFile(p))
-        .toSeq.sortBy(_.toString)
+        .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
+        .map(_.toString).toSeq.sorted
     }
-    val staged = stagedFiles.map { p =>
-      val rel = scratch.relativize(p) // k=v/.../part-N.parquet or part-N.parquet
+
+  // move every parquet under `scratch` into data/ under a batch-unique
+  // prefix (hive subdirs preserved), clean up the scratch remains, and
+  // return the rel paths — the publish half of staging, shared with the
+  // external writer's files of the native SQL write
+  private def moveStaged(scratch: Path): Seq[String] = {
+    Files.createDirectories(dataDir)
+    Files.createDirectories(logDir)
+    val batch = "batch-" + java.util.UUID.randomUUID().toString
+    val staged = parquetUnder(scratch).map { f =>
+      // k=v/.../part-N.parquet or part-N.parquet
+      val rel = scratch.relativize(Paths.get(f))
       val dest =
         if (rel.getParent == null) Paths.get(s"$batch-${rel.getFileName}")
         else rel.getParent.resolve(s"$batch-${rel.getFileName}")
       Files.createDirectories(dataDir.resolve(dest).getParent)
-      Files.move(p, dataDir.resolve(dest))
+      Files.move(Paths.get(f), dataDir.resolve(dest))
       dest.toString
     }
     // scratch now holds only empty dirs and _SUCCESS markers
@@ -4047,26 +4134,29 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     staged
   }
 
-  /** Publish a directory of parquet files an EXTERNAL writer produced —
-    * the SQL row-level DML path hands Spark's own file-writer output here
-    * — as one atomic OVERWRITE commit: files move under data/, footer
-    * stats and blooms are harvested exactly as for any commit, CHECK
-    * constraints are re-validated (one scan, only when constraints
-    * exist), and the manifest publish is the usual optimistic race.
-    * Unpartitioned tables only: an external writer produces a flat
-    * layout, and mixing flat files into a hive-partitioned table would
-    * make partition-column discovery ambiguous.
-    */
-  def commitStagedDir(scratch: Path, op: String): Int =
-    commitStagedReplace(scratch, replaced = None, op)
+  // staged files carry PHYSICAL column names; a frame over them relabeled
+  // to the logical names CHECK expressions are written against
+  private def logical(raw: DataFrame): DataFrame = {
+    val map = inheritedColMap
+    if (map.isEmpty) raw
+    else raw.select(raw.columns.toIndexedSeq.map { c =>
+      val lg = map.collectFirst { case (l, p) if p == c => l }
+      col(c).as(lg.getOrElse(c))
+    }: _*)
+  }
 
-  /** Like [[commitStagedDir]], but REPLACES only the named data files:
-    * the staged files plus every current file NOT in `replaced` form the
-    * new version — the group-replacement commit the SQL row-level DML
-    * path needs (the scan reads a pruned file subset, the new content of
-    * exactly those groups arrives here, everything else is carried by
-    * manifest reference). `replaced = None` replaces the whole table
-    * (overwrite).
+  /** Publish a directory of parquet files an EXTERNAL writer produced —
+    * the native SQL write hands Spark's own file-writer output here — as
+    * a group replace: the files move under data/, and with every current
+    * file NOT in `replaced` form the new version (the scan of a SQL
+    * row-level DML reads a pruned file subset, the new content of exactly
+    * those groups arrives here, everything else is carried by manifest
+    * reference). `replaced = None` replaces the whole table (overwrite).
+    * `scanBase`/`scanPred` are the version and condition the scan saw
+    * (see [[groupReplace]]). Unpartitioned tables only: an external
+    * writer produces a flat layout, and mixing flat files into a
+    * hive-partitioned table would make partition-column discovery
+    * ambiguous.
     */
   def commitStagedReplace(scratch: Path, replaced: Option[Set[String]],
                           op: String,
@@ -4076,36 +4166,13 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     require(latestVersion.map(partitionColsOf).getOrElse(Nil).isEmpty,
       s"commitStagedReplace on a partitioned table: " +
         "use commitReplacingDf (partition-aware re-stage)")
-    Files.createDirectories(dataDir)
-    Files.createDirectories(logDir)
-    val batch = "batch-" + java.util.UUID.randomUUID().toString
-    val rels = moveStaged(scratch, batch)
-    if (latestVersion.exists(v => checksOf(v).nonEmpty) && rels.nonEmpty) {
-      // staged files carry PHYSICAL column names; CHECK expressions are
-      // written against the logical schema — relabel before validating
-      val raw = spark.read.parquet(
-        rels.map(r => dataDir.resolve(r).toString): _*)
-      val map = inheritedColMap
-      val logical =
-        if (map.isEmpty) raw
-        else raw.select(raw.columns.toIndexedSeq.map { c =>
-          val lg = map.collectFirst { case (l, p) if p == c => l }
-          col(c).as(lg.getOrElse(c))
-        }: _*)
-      validateChecks(logical, latestVersion)
-    }
-    val effBloom = inheritedBloomCols
-    val blooms = bloomStats(rels, effBloom, inheritedBloomBits(latestVersion))
-    val staged = rels.map(rel => TxLogTable.FileEntry(rel, footerStats(rel),
-      blooms.getOrElse(rel, Map.empty)).encoded)
-    publishReplace(staged, replaced, op, scanBase, scanPred,
-      partitionCols = Nil, caller = "commitStagedReplace")
+    groupReplace(op, Written(scratch), replaced, scanBase, scanPred)
   }
 
   /** Group-replacement commit from a DATAFRAME: stages `df` through the
     * normal partition-aware, column-mapping-aware staging path (hive
-    * layout, physical column names), then publishes staged + (current −
-    * `replaced`) as one atomic version — the partitioned twin of
+    * layout, physical column names), then publishes it with the current
+    * files not in `replaced` — the partitioned twin of
     * [[commitStagedReplace]] for SQL row-level DML. Costs one extra pass
     * over the REPLACED subset vs the move-only path (the external
     * writer's flat output is re-staged into the hive layout); the
@@ -4115,101 +4182,71 @@ final case class TxLogTable(spark: SparkSession, root: String) {
                         op: String,
                         scanBase: Option[Int] = None,
                         scanPred: Option[org.apache.spark.sql.Column] =
-                          None): Int = {
-    val partCols = latestVersion.map(partitionColsOf).getOrElse(Nil)
-    validateChecks(df, latestVersion)
-    val stagedSpec = latestVersion.map(bucketSpecsOf).getOrElse(Nil)
-    val staged = stageWithStats(df, partCols, inheritedBloomCols,
-      inheritedBloomBits(latestVersion), rebalanceOk = true)
-    publishReplace(staged, replaced, op, scanBase, scanPred,
-      partCols, caller = "commitReplacingDf", stagedSpec = stagedSpec)
-  }
+                          None): Int =
+    groupReplace(op, Staged(df, layoutOf(latestVersion)), replaced,
+      scanBase, scanPred)
 
-  // the shared publish half of the group-replacement commits: optimistic
-  // manifest race with write-write + write-skew conflict detection
-  private def publishReplace(staged: Seq[String],
-                             replaced: Option[Set[String]], op: String,
-                             scanBase: Option[Int],
-                             scanPred: Option[org.apache.spark.sql.Column],
-                             partitionCols: Seq[String],
-                             caller: String,
-                             stagedSpec: Seq[(String, Int)] = Nil): Int = {
-    val effBloom = inheritedBloomCols
-    val batchKmv = stagedKmv(staged) // staged fixed across retries
-    optimisticCommit(caller) { (base, next) =>
-      requireSpecUnchanged(stagedSpec, base, caller)
+  /** A group replace: `batch` plus the data lines kept at `base` — none
+    * for a whole-table replace (`replaced = None`), else every line but
+    * the `replaced` rels. The staged content was computed from the
+    * replaced files as of the scan at `scanBase`, so the replace refuses
+    * (the serializable-conflict contract every optimistic table format
+    * has; the caller reruns the statement against the new state) when
+    *  - write-write: a concurrent commit rewrote or removed a replaced
+    *    file — publishing would silently drop that writer's change;
+    *  - write-skew: a file added since the scan may hold rows matching
+    *    `scanPred` — carried forward, but never considered by the
+    *    rewrite. Manifest stats decide "may match": a partially
+    *    translated (or absent) condition only widens the hazard set;
+    *  - late mask: a DV or tombstone committed since the scan masks rows
+    *    of a replaced file. The rewrite copied them unmasked; a DV dies
+    *    with its target and the rewritten files are tagged past every
+    *    tombstone, so either mask would be silently undone.
+    * MOR tombstones and DVs on carried files survive a group replace.
+    */
+  private def groupReplace(what: String, batch: Batch,
+                           replaced: Option[Set[String]],
+                           scanBase: Option[Int],
+                           scanPred: Option[org.apache.spark.sql.Column])
+      : Int = rewrite(what, batch = Some(batch)) { (base, _) =>
+    Right(Rewrite(replaced.fold(Seq.empty[String]) { reps =>
       val current = base.map(dataLines).getOrElse(Nil)
-      val carried = replaced match {
-        case None => Nil
-        case Some(reps) =>
-          // write-write conflict detection: the staged content was
-          // computed FROM the replaced files — if a concurrent commit
-          // rewrote or removed any of them since the scan, publishing
-          // would silently drop that writer's change. Fail loudly (the
-          // serializable-conflict contract every optimistic table format
-          // has); the caller reruns the statement against the new state.
-          val currentRels = current.map(_.takeWhile(_ != '\t')).toSet
-          val gone = reps -- currentRels
-          if (gone.nonEmpty)
-            throw new java.util.ConcurrentModificationException(
-              s"$caller: ${gone.size} of the files this " +
-                s"operation read were rewritten by a concurrent commit " +
-                s"(e.g. ${gone.head}) — rerun the statement")
-          // The other half of the serializable contract: files ADDED
-          // since the operation's scan (a concurrent append/insert) are
-          // carried forward — their rows survive — but the rewrite never
-          // CONSIDERED them, so any added file that may hold rows
-          // matching the operation's condition makes the publish write
-          // skew, not a serial history. Manifest stats decide "may
-          // match": a partially-translated (or absent) condition only
-          // widens the hazard set — aborts more, never misses a conflict.
-          for (bv <- scanBase if base.exists(_ != bv)) {
-            val baseRels = dataLines(bv).map(_.takeWhile(_ != '\t')).toSet
-            val added = currentRels -- baseRels -- reps
-            val hazardous = scanPred match {
-              case Some(p) if added.nonEmpty =>
-                candidateFilesWhere(p, base).toSet.intersect(added)
-              case _ => added
-            }
-            if (hazardous.nonEmpty)
-              throw new java.util.ConcurrentModificationException(
-                s"$caller: ${hazardous.size} file(s) added by " +
-                  s"a concurrent commit since version $bv may match this " +
-                  s"operation's condition (e.g. ${hazardous.head}) — " +
-                  s"rerun the statement")
-          }
-          current.filterNot(line => reps(line.takeWhile(_ != '\t')))
+      val currentRels = current.map(TxLogTable.relOf).toSet
+      val gone = reps -- currentRels
+      if (gone.nonEmpty)
+        throw new java.util.ConcurrentModificationException(
+          s"$what: ${gone.size} of the files this operation read were " +
+            s"rewritten by a concurrent commit (e.g. ${gone.head}) — " +
+            "rerun the statement")
+      for (bv <- scanBase if base.exists(_ != bv)) {
+        val baseRels = dataLines(bv).map(TxLogTable.relOf).toSet
+        val added = currentRels -- baseRels -- reps
+        val hazardous = scanPred match {
+          case Some(p) if added.nonEmpty =>
+            candidateFilesWhere(p, base).toSet.intersect(added)
+          case _ => added
+        }
+        if (hazardous.nonEmpty)
+          throw new java.util.ConcurrentModificationException(
+            s"$what: ${hazardous.size} file(s) added by a concurrent " +
+              s"commit since version $bv may match this operation's " +
+              s"condition (e.g. ${hazardous.head}) — rerun the statement")
       }
-      // Masks that landed after the scan: the rewrite copied the replaced
-      // files' rows without them. A DV aimed at a replaced file would die
-      // with its target; a tombstone orders against file versions, and
-      // the rewritten files are tagged `next`, past every tombstone — so
-      // either mask would be silently undone. Refuse instead.
-      for (bv <- scanBase; reps <- replaced if reps.nonEmpty;
-           h <- base.map(headerOf)) {
+      for (bv <- scanBase if reps.nonEmpty; h <- base.map(headerOf)) {
         val lateDvs = h.dvs.filter(d => d.v > bv && reps(d.file))
         if (lateDvs.nonEmpty)
           throw new java.util.ConcurrentModificationException(
-            s"$caller: a positional delete committed after version $bv " +
+            s"$what: a positional delete committed after version $bv " +
               s"masks rows of a file this operation rewrote " +
               s"(${lateDvs.head.file}) — rerun the statement")
         if (h.tombs.exists(_._2 > bv))
           throw new java.util.ConcurrentModificationException(
-            s"$caller: a key delete committed after version $bv may mask " +
+            s"$what: a key delete committed after version $bv may mask " +
               "rows this operation rewrote — rerun the statement")
       }
-      // MOR tombstones and DVs on carried files survive a GROUP
-      // replacement; a whole-table replace (replaced = None) resets the
-      // file set like every other overwrite. SQL DML (UPDATE SET / MERGE
-      // INTO insert) can introduce values the sketch never saw — fold the
-      // staged rows (idempotent for the rewritten ones).
-      val h = foldNdv(
-        carryFrom(base, op, carried, overwrite = replaced.isEmpty),
-        batchKmv, reset = replaced.isEmpty)
-      Publish(h.copy(partitionCols = partitionCols, bloomCols = effBloom),
-        carried ++ tagVersion(staged, next), next)
-    }
-  }
+      current.filterNot(line => reps(TxLogTable.relOf(line)))
+    }, overwrite = replaced.isEmpty))
+  }.version
 
   /** Per-column min/max of one staged file, harvested from the parquet
     * FOOTER — a metadata read, no data scan (Delta gathers the same stats
@@ -4410,26 +4447,24 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     out.toMap
   }
 
-  private def stageWithStats(df: DataFrame, partitionCols: Seq[String],
-                             bloomCols: Seq[String] = Nil,
-                             bloomBits: Int = TxLogTable.Bloom.DefaultM,
-                             rebalanceOk: Boolean = false)
-      : Seq[String] = {
-    val rels = stage(df, partitionCols, rebalanceOk)
-    val withStats = rels.map(rel => rel -> footerStats(rel))
-    // ZERO-ROW files never enter the manifest: Spark's writer creates a
-    // task's output file eagerly, so an empty partition (a collapsed
-    // range boundary, a skewed bucket with nothing in it) stages a
-    // 0-row parquet — which carries no column stats and no bloom, so
-    // every conservative pruning test would call it "may match" FOREVER
-    // (a string-keyed merge rewrote one such file on every batch).
-    // Empty files are pure manifest overhead at 100 TB; drop them here,
-    // the one chokepoint every staging write passes through.
-    val (empty, live) = withStats.partition(
-      _._2.get(TxLogTable.RowsKey).exists(_._1 == 0L))
+  // The manifest lines of the just-staged `rels`: footer stats, and one
+  // bloom pass over `layout`'s bloom columns. ZERO-ROW files never enter
+  // the manifest: Spark's writer creates a task's output file eagerly, so
+  // an empty partition (a collapsed range boundary, a skewed bucket with
+  // nothing in it, an empty external write) stages a 0-row parquet —
+  // which carries no column stats and no bloom, so every conservative
+  // pruning test would call it "may match" FOREVER (a string-keyed merge
+  // rewrote one such file on every batch). Empty files are pure manifest
+  // overhead at 100 TB; every staged file passes through here, so they
+  // are deleted here.
+  private def fileEntries(rels: Seq[String], layout: Layout,
+                          base: Option[Int]): Seq[String] = {
+    val (empty, live) = rels.map(rel => rel -> footerStats(rel))
+      .partition(_._2.get(TxLogTable.RowsKey).exists(_._1 == 0L))
     empty.foreach { case (rel, _) =>
       scala.util.Try(Files.delete(dataDir.resolve(rel))) }
-    val blooms = bloomStats(live.map(_._1), bloomCols, bloomBits)
+    val blooms = bloomStats(live.map(_._1), layout.bloomCols,
+      layout.bloomBits.getOrElse(inheritedBloomBits(base)))
     live.map { case (rel, st) => TxLogTable.FileEntry(rel, st,
       blooms.getOrElse(rel, Map.empty)).encoded }
   }
@@ -4442,42 +4477,28 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * only the hour's / tenant's partitions: O(affected partitions) write
     * amplification, with the untouched bulk of the table never read,
     * never rewritten, and still snapshot-isolated behind the same atomic
-    * manifest publish.
+    * manifest publish. The replaced partitions' vanished values leave the
+    * NDV sketch stale-high (conservative).
     */
   def commitDynamic(df: DataFrame, partitionCols: Seq[String]): Int = {
     require(partitionCols.nonEmpty,
       "commitDynamic needs partition columns; use commit() otherwise")
-    val effBloom = inheritedBloomCols
-    validateChecks(df, latestVersion)
-    val stagedSpec = latestVersion.map(bucketSpecsOf).getOrElse(Nil)
-    val staged = stageWithStats(df, partitionCols, effBloom,
-      inheritedBloomBits(latestVersion), rebalanceOk = true)
-    // the replaced partitions are exactly the hive dirs this batch wrote
-    val replacedDirs = staged.map { f =>
-      val p = Paths.get(f.takeWhile(_ != '\t'))
-      // drop the batch-unique file name, keep `k=v[/k2=v2...]/`
-      p.getParent.toString + "/"
-    }.distinct
-    val dynKmv = stagedKmv(staged) // staged fixed across retries
-    optimisticCommit("commitDynamic") { (base, next) =>
-      requireSpecUnchanged(stagedSpec, base, "commitDynamic")
+    val layout = Layout(partitionCols, inheritedBloomCols)
+    rewrite("dynamic-overwrite", batch = Some(Staged(df, layout))) {
+        (base, staged) =>
       base.foreach { b =>
         val cur = partitionColsOf(b)
         require(cur == partitionCols,
           s"dynamic overwrite layout ${partitionCols.mkString(",")} does " +
             s"not match table layout ${cur.mkString(",")} at $root v$b")
       }
-      // carry RAW lines so untouched files keep their stats
-      val carried = base.map(dataLines).getOrElse(Nil)
-        .filterNot(f => replacedDirs.exists(f.startsWith))
-      // replaced partitions' vanished values leave the fold stale-high
-      // (conservative); the new partitions' values must still enter or
-      // the sketch goes stale-LOW
-      Publish(foldNdv(carryFrom(base, "dynamic-overwrite", carried),
-          dynKmv, reset = false)
-          .copy(partitionCols = partitionCols, bloomCols = effBloom),
-        carried ++ tagVersion(staged, next), next)
-    }
+      // the replaced partitions are exactly the hive dirs this batch
+      // wrote: `k=v[/k2=v2...]/` of each staged file
+      val replacedDirs = staged.map(f =>
+        Paths.get(TxLogTable.relOf(f)).getParent.toString + "/").distinct
+      Right(Rewrite(base.map(dataLines).getOrElse(Nil)
+        .filterNot(f => replacedDirs.exists(f.startsWith))))
+    }.version
   }
 
   /** Keyed copy-on-write MERGE (delete-then-insert upsert): every current
@@ -4514,10 +4535,6 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * the full rewrite it replaces. NULL batch keys only insert (SQL
     * equality never matches them), so their absence from the hull / probe
     * set cannot unprune a deletion target.
-    *
-    * Concurrency: same optimistic manifest race as `commit`, but a lost
-    * race RE-PLANS from the new latest version (the carried set may have
-    * changed) — stale staged files are left unreferenced for `vacuum`.
     */
   def merge(schema: StructType, incoming: DataFrame, keys: Seq[String],
             mergeSchema: Boolean = false): TxLogTable.MergeStats = {
@@ -4540,8 +4557,6 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       }: _*)
       return merge(eff, aligned, keys)
     }
-    // only the NEW rows need validation — carried rows passed at ingest
-    validateChecks(incoming, latestVersion)
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val integralKeys = keys.filter(k =>
       schema.find(_.name == k).map(_.dataType).exists {
@@ -4608,8 +4623,9 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     // over-cap string keys (no collected probe set): pruned DISTRIBUTED —
     // the batch's values probe the candidate files' blooms on executors
     val overCapKeys = stringKeys.filter(k => stringProbes(k).isEmpty)
-    optimisticCommit("merge") { (base, next) =>
-      val layout = base.map(partitionColsOf).getOrElse(Nil)
+    // only the NEW rows need validation — carried rows passed at ingest
+    rewrite("merge", schema, Some(Joined(incoming))) {
+        (base, _) =>
       val cmap = base.map(colMapOf).getOrElse(Map.empty)
       val (hullAffected, hullCarried) = base.map(dataLines).getOrElse(Nil)
         .partition { line =>
@@ -4643,22 +4659,10 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         val kept = affected.toSet
         hullCarried ++ hullAffected.filterNot(kept)
       }
-      // rewrite reads through the tombstone mask so a MOR-deleted row is
-      // never resurrected by a later merge's rewrite
-      val merged = graft.operators.Upsert.deleteInsert(
-        readMaskedEntries(schema, affected.map(TxLogTable.decodeEntry),
-          base),
-        incoming, keys)
-      val effBloom = base.map(bloomColsOf).getOrElse(Nil)
-      val staged = stageWithStats(merged, layout, effBloom,
-        inheritedBloomBits(base), rebalanceOk = true)
-      // fold the staged (rewritten + new) rows' minima: a merge INSERTS
-      // new key values, and without the fold the sketch would go
-      // stale-LOW (idempotent re-add for rewritten rows)
-      Publish(foldNdv(carryFrom(base, "merge", carriedLines),
-          stagedKmv(staged), reset = false),
-        carriedLines ++ tagVersion(staged, next),
-        TxLogTable.MergeStats(next, affected.size, carriedLines.size))
+      // the rewrite reads through the tombstone mask, so a MOR-deleted row
+      // is never resurrected by a later merge's rewrite
+      Right(Rewrite(carriedLines, affected,
+        graft.operators.Upsert.deleteInsert(_, incoming, keys)))
     }
   }
 
@@ -4680,23 +4684,20 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * degrades to the full rewrite it replaces, still correct.
     *
     * Returns [[TxLogTable.MergeStats]]: rewritten = files read+rewritten,
-    * carried = files proven untouched. Same optimistic manifest race as
-    * `merge`: a lost race re-plans against the new latest version.
+    * carried = files proven untouched.
     */
   def deleteWhere(schema: StructType, pred: org.apache.spark.sql.Column)
       : TxLogTable.MergeStats =
-    cowRewrite(schema, pred, extra = None, opName = "delete")
+    rewrite("delete", schema)(where(pred, identity))
 
-  // The shared predicate-scoped copy-on-write rewrite behind deleteWhere
-  // (extra = None) and replaceWhere (extra = the replacement batch):
-  // manifest pruning bounds the rewrite, survivors of the affected files
-  // (NULL pred keeps the row, SQL DELETE semantics) are re-staged —
-  // unioned with the batch when present — and everything else is carried
-  // by reference, under the usual optimistic re-planning race.
-  private def cowRewrite(schema: StructType,
-                         pred: org.apache.spark.sql.Column,
-                         extra: Option[DataFrame], opName: String)
-      : TxLogTable.MergeStats = {
+  // The plan of a predicate-scoped rewrite, behind deleteWhere and
+  // replaceWhere: manifest pruning bounds the rewrite, the survivors of
+  // the affected files (NULL pred keeps the row, SQL DELETE semantics)
+  // pass through `more` and are re-staged, and everything else is
+  // carried by reference.
+  private def where(pred: org.apache.spark.sql.Column,
+                    more: DataFrame => DataFrame)
+      : (Option[Int], Seq[String]) => Either[TxLogTable.MergeStats, Rewrite] = {
     val cmap = inheritedColMap
     val ranges = physKeyed(cmap, PredicateRanges.extract(pred))
     val nn = physNullness(cmap, PredicateRanges.extractNullness(pred))
@@ -4720,8 +4721,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     val exact: Option[Map[String, PredicateRanges.Bound]] =
       PredicateRanges.exactBounds(pred).map(physKeyed(cmap, _))
         .filter(_.nonEmpty)
-    optimisticCommit(opName) { (base, next) =>
-      val layout = base.map(partitionColsOf).getOrElse(Nil)
+    (base, _) => {
       val (affected0, carriedLines) = base.map(dataLines).getOrElse(Nil)
         .partition(line => mayMatchPred(TxLogTable.decodeEntry(line),
           ranges, nn, points, strs, timeSegBounds(ranges, base)))
@@ -4736,24 +4736,9 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         }
         case None => (Nil, affected0)
       }
-      // Reads through the tombstone mask (no resurrection on rewrite).
-      val kept = readMaskedEntries(schema,
-          affected.map(TxLogTable.decodeEntry), base)
-        .filter(!org.apache.spark.sql.functions.coalesce(pred, lit(false)))
-      val out = extra.fold(kept)(d => kept.unionByName(
-        d.select(schema.fieldNames.toIndexedSeq.map(col): _*)))
-      val effBloom = base.map(bloomColsOf).getOrElse(Nil)
-      // nothing to restage when every affected file dropped wholesale
-      // and no replacement batch rides along — don't write an empty
-      // part file into the manifest
-      val staged =
-        if (affected.isEmpty && extra.isEmpty) Nil
-        else stageWithStats(out, layout, effBloom,
-          inheritedBloomBits(base), rebalanceOk = true)
-      Publish(carryFrom(base, opName, carriedLines),
-        carriedLines ++ tagVersion(staged, next),
-        TxLogTable.MergeStats(next, affected.size, carriedLines.size,
-          dropped.size))
+      Right(Rewrite(carriedLines, affected, rows => more(rows.filter(
+          !org.apache.spark.sql.functions.coalesce(pred, lit(false)))),
+        dropped = dropped.size))
     }
   }
 
@@ -4771,24 +4756,16 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     */
   def replaceWhere(schema: StructType, pred: org.apache.spark.sql.Column,
                    data: DataFrame): TxLogTable.MergeStats = {
-    // ONE validation aggregate over the batch: the predicate contract
-    // (every incoming row satisfies pred — otherwise a rerun would not be
-    // idempotent) and any CHECK constraints, in the same job, so an
-    // expensive batch lineage is computed once for validation
-    import org.apache.spark.sql.functions.{coalesce, count_if, expr}
-    val checks = latestVersion.map(checksOf).getOrElse(Map.empty)
-    val aggs = count_if(!coalesce(pred, lit(false))).as("__outside") +:
-      checks.toSeq.map { case (n, e) =>
-        count_if(!coalesce(expr(e), lit(true))).as(n) }
-    val row = data.agg(aggs.head, aggs.tail: _*).head()
-    require(row.getLong(0) == 0L,
-      s"replaceWhere: ${row.getLong(0)} incoming rows do not satisfy the " +
-        "predicate — the replacement would not be idempotent")
-    checks.toSeq.zipWithIndex.foreach { case ((n, e), i) =>
-      require(row.getLong(i + 1) == 0L,
-        s"check '$n' violated by ${row.getLong(i + 1)} rows: $e")
-    }
-    cowRewrite(schema, pred, extra = Some(data), opName = "replace-where")
+    // the predicate contract (every incoming row satisfies pred —
+    // otherwise a rerun would not be idempotent) rides the CHECK
+    // validation job, so an expensive batch lineage is computed once
+    val outside: (Column, Long => String) =
+      (!org.apache.spark.sql.functions.coalesce(pred, lit(false)),
+        n => s"replaceWhere: $n incoming rows do not satisfy the " +
+          "predicate — the replacement would not be idempotent")
+    val rows = data.select(schema.fieldNames.toIndexedSeq.map(col): _*)
+    rewrite("replace-where", schema, Some(Joined(data, Seq(outside))))(
+      where(pred, _.unionByName(rows)))
   }
 
   /** Merge-on-read equality DELETE (Iceberg v2 equality-delete /
@@ -4864,7 +4841,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
   /** Positional UPDATE: rows matching `pred` are masked where they sit
     * (same DV commit as [[deleteWherePos]]) and re-written ONCE with
     * `set` applied, as new data files holding ONLY the touched rows —
-    * O(matched rows) write amplification, vs [[cowRewrite]]'s O(affected
+    * O(matched rows) write amplification, vs [[deleteWhere]]'s O(affected
     * files). `set` maps column name → replacement expression (evaluated
     * against the row's old values, so `col("x") + 1` increments).
     * CHECK constraints validate the updated rows before publish; CDC
@@ -5169,8 +5146,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
           else picked.toSeq)
         .fold(Seq.empty[String]) { data =>
           validateChecks(data, base)
-          stageWithStats(data, layout, base.map(bloomColsOf).getOrElse(Nil),
-            inheritedBloomBits(base), rebalanceOk = true)
+          fileEntries(stage(data, layout, rebalance = true), layoutOf(base),
+            base)
         }
       if (counts.isEmpty && stagedData.isEmpty) // nothing to mask or add
         Unchanged(TxLogTable.MergeStats(base.getOrElse(-1), 0, lines.size))
@@ -5264,23 +5241,37 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     }
   }
 
-  // ONE validation job for all constraints: a row fails a check only when
-  // the expression is literally FALSE (NULL passes, SQL-standard).
-  // Layout rewrites never get here — their rows all passed at ingest.
-  private def validateChecks(df: DataFrame, base: Option[Int]): Unit = {
-    val checks = base.map(checksOf).getOrElse(Map.empty)
-    if (checks.isEmpty) return
+  // ONE validation job over a batch of new rows: `rules` first, then every
+  // CHECK constraint at `base` (a row fails a check only when the
+  // expression is literally FALSE — NULL passes, SQL-standard). `df` is
+  // built only when there is something to validate. Layout rewrites and
+  // deletes never get here — their rows all passed at ingest.
+  private def validateChecks(df: => DataFrame, base: Option[Int],
+                             rules: Seq[(Column, Long => String)] = Nil)
+      : Unit = {
     import org.apache.spark.sql.functions.{coalesce, count_if, expr}
-    val aggs = checks.toSeq.map { case (n, e) =>
-      count_if(!coalesce(expr(e), lit(true))).as(n) }
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    checks.toSeq.zipWithIndex.foreach { case ((n, e), i) =>
-      require(row.getLong(i) == 0L,
-        s"check '$n' violated by ${row.getLong(i)} rows: $e")
+    val all = rules ++ base.map(checksOf).getOrElse(Map.empty).toSeq.map {
+      case (n, e) => (!coalesce(expr(e), lit(true)),
+        (bad: Long) => s"check '$n' violated by $bad rows: $e")
+    }
+    if (all.nonEmpty) {
+      val counts = all.indices.map(i => count_if(all(i)._1).as(s"_r$i"))
+      val row = df.agg(counts.head, counts.tail: _*).head()
+      all.indices.foreach(i =>
+        require(row.getLong(i) == 0L, all(i)._2(row.getLong(i))))
     }
   }
 
-  /** `bloomCols` non-empty enables per-file Bloom filters on those columns
+  /** Commit `df` as the next version. `overwrite = false` appends: the new
+    * manifest carries the previous version's files plus the delta. Returns
+    * the committed version number.
+    *
+    * Partitioning is a TABLE property, as in hive-layout tables: an append
+    * must use the current version's `partitionCols` (mixed layouts under
+    * one `basePath` are unreadable — Spark's partition discovery rejects
+    * conflicting directory structures); an overwrite may change them.
+    *
+    * `bloomCols` non-empty enables per-file Bloom filters on those columns
     * for this commit's files AND records them as a table property every
     * later write inherits; empty inherits the table's current setting.
     * `bloomBits` > 0 sizes the filters (power of two, 2^13..2^20 bits) and
@@ -5315,8 +5306,6 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       require(Integer.bitCount(bloomBits) == 1 &&
         bloomBits >= TxLogTable.Bloom.DefaultM && bloomBits <= (1 << 20),
         s"bloomBits must be a power of two in [8192, 1048576]: $bloomBits")
-    val effBits =
-      if (bloomBits > 0) bloomBits else inheritedBloomBits(latestVersion)
     // SCHEMA GATE for catalog-created tables (recorded #schema): an
     // incoming column must exist in the table (hidden bucket columns
     // derived by staging are exempt) with an equal or NARROWER type
@@ -5344,14 +5333,10 @@ final case class TxLogTable(spark: SparkSession, root: String) {
           }
       }
     }
-    validateChecks(df, latestVersion)
-    val stagedSpec = latestVersion.map(bucketSpecsOf).getOrElse(Nil)
-    val staged = stageWithStats(df, partitionCols, effBloom, effBits,
-      rebalanceOk = true)
-    // batch KMV from the STAGED files (never re-executes the caller's
-    // plan), computed once outside the publish retry loop
-    val batchKmv = stagedKmv(staged)
-    optimisticCommit("commit") { (base, next) =>
+    val layout = Layout(partitionCols, effBloom,
+      Some(bloomBits).filter(_ > 0))
+    rewrite(opName, batch = Some(Staged(df, layout))) {
+        (base, _) =>
       // head-conditional commit (see upsertPos): a caller that derived
       // this batch — or the decision that an EMPTY batch is the right
       // consumption record — from state at expectHead must not land it
@@ -5363,7 +5348,6 @@ final case class TxLogTable(spark: SparkSession, root: String) {
               s"v${base.getOrElse(-1)}: a concurrent commit moved the " +
               s"head — recompute the batch against the new state: $root")
       }
-      requireSpecUnchanged(stagedSpec, base, "commit")
       if (!overwrite) base.foreach { b =>
         val cur = partitionColsOf(b)
         require(cur == partitionCols,
@@ -5371,13 +5355,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
             s"table layout ${cur.mkString(",")} at $root v$b; " +
             "overwrite to repartition the table")
       }
-      val carried =
-        if (overwrite) Nil else base.map(dataLines).getOrElse(Nil)
       // tombstones die with an overwrite; CHECK constraints survive it.
-      // NDV fold: append merges the batch minima into the carried
-      // sketch; overwrite starts fresh — the old corpus is gone
-      val h = foldNdv(carryFrom(base, opName, carried, overwrite),
-        batchKmv, reset = overwrite)
       // A layout-CHANGING overwrite must not carry layout-bound specs
       // into a manifest whose partitionCols no longer support them: a
       // stale #bucketSpec on an unpartitioned table would make every
@@ -5386,24 +5364,25 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       // that no longer flow through a partitioned staging layout. Keep
       // each spec only when the new layout still carries its derived
       // columns in create()'s shape.
-      val expectBkt = h.bucketSpecs.indices.map(TxLogTable.bucketColAt)
-      val bucketsStillFit = expectBkt.nonEmpty &&
-        partitionCols.takeRight(expectBkt.length) == expectBkt &&
-        partitionCols.count(TxLogTable.isBucketCol) == expectBkt.length
-      val expectTp = h.timeSpecs.indices.map(TxLogTable.timeColAt)
-      val timesStillFit = expectTp.nonEmpty &&
-        partitionCols.filter(TxLogTable.isTimeCol) == expectTp
-      // An explicit bloomBits replaces the carried table property; the
-      // carried one serves inheritance otherwise.
-      Publish(h.copy(partitionCols = partitionCols, bloomCols = effBloom,
-          bloomBits = if (bloomBits > 0) Some(bloomBits) else h.bloomBits,
+      def fitted(h: ManifestHeader): ManifestHeader = {
+        val expectBkt = h.bucketSpecs.indices.map(TxLogTable.bucketColAt)
+        val bucketsStillFit = expectBkt.nonEmpty &&
+          partitionCols.takeRight(expectBkt.length) == expectBkt &&
+          partitionCols.count(TxLogTable.isBucketCol) == expectBkt.length
+        val expectTp = h.timeSpecs.indices.map(TxLogTable.timeColAt)
+        val timesStillFit = expectTp.nonEmpty &&
+          partitionCols.filter(TxLogTable.isTimeCol) == expectTp
+        h.copy(
           bucketSpecs =
             if (overwrite && !bucketsStillFit) Nil else h.bucketSpecs,
           timeSpecs = if (overwrite && !timesStillFit) Nil else h.timeSpecs,
           sortCols =
             if (overwrite && partitionCols.isEmpty) Nil else h.sortCols,
-          annotations = extraMeta),
-        carried ++ tagVersion(staged, next), next)
-    }
+          annotations = extraMeta)
+      }
+      Right(Rewrite(
+        if (overwrite) Nil else base.map(dataLines).getOrElse(Nil),
+        overwrite = overwrite, edit = fitted))
+    }.version
   }
 }

@@ -1411,32 +1411,35 @@ class TxLogCatalog extends TableCatalog with ProcedureCatalog
         }.getOrElse(Nil)
         (qn, root, deps)
       }
-      // Kahn order on the view→view source/dim edges; anything left (a
-      // cycle can only mean corrupted defs) appends unordered and will
-      // surface as error rows, not be dropped
+      // each view after the views it reads (a depth-first post-order; a
+      // cycle — only corrupted defs make one — is cut where the walk
+      // re-enters it), then one DAG over those edges. Each refresh turns
+      // its own failure into an error row, so a failed upstream still
+      // lets its dependents run: its last committed version is a
+      // consistent, if stale, source.
       val byRoot = views.map(v => v._2 -> v).toMap
-      val ordered = scala.collection.mutable.ArrayBuffer
-        .empty[(String, String, Seq[String])]
-      var remaining = views
-      var progressed = true
-      while (remaining.nonEmpty && progressed) {
-        val (ready, blocked) = remaining.partition(v =>
-          !v._3.exists(s => byRoot.contains(s) &&
-            !ordered.exists(_._2 == s)))
-        progressed = ready.nonEmpty
-        ordered ++= ready
-        remaining = blocked
-      }
-      ordered ++= remaining
-      ordered.toSeq.map { case (qn, root, _) =>
-        scala.util.Try {
-          val st = MaterializedView.refresh(spark, root)
-          Row(qn, st.mode, st.fromVersion, st.toVersion, st.groupsChanged,
-            st.mvVersion)
-        }.recover { case e =>
-          Row(qn, s"error: ${e.getMessage.take(120)}", -1, -1, -1L, -1)
-        }.get
-      }
+      val order = scala.collection.mutable.LinkedHashSet.empty[String]
+      def visit(root: String, path: Set[String]): Unit =
+        if (!order(root) && !path(root)) {
+          byRoot(root)._3.filter(byRoot.contains)
+            .foreach(visit(_, path + root))
+          order += root
+        }
+      views.foreach(v => visit(v._2, Set.empty))
+      val ordered = order.toSeq.map(byRoot)
+      val at = order.zipWithIndex.toMap
+      graft.util.Overlap.inDag(
+        ordered.map { case (qn, root, _) => () =>
+          scala.util.Try {
+            val st = MaterializedView.refresh(spark, root)
+            Row(qn, st.mode, st.fromVersion, st.toVersion, st.groupsChanged,
+              st.mvVersion)
+          }.recover { case e =>
+            Row(qn, s"error: ${e.getMessage.take(120)}", -1, -1, -1L, -1)
+          }.get
+        },
+        ordered.map { case (_, root, deps) =>
+          deps.flatMap(at.get).filter(_ < at(root)) })
     },
     // CALL c.system.create_mv_distinct_exact('ns.mv', 'ns.src', 'k1,k2',
     // 'u' [, filter]): EXACT incremental COUNT(DISTINCT u) — two composed
@@ -1970,18 +1973,10 @@ final case class TxLogV2Table(spark: SparkSession, root: String,
                       // aware commit — one extra pass over the REPLACED
                       // subset only; the untouched bulk is carried by
                       // manifest reference, never read.
-                      val physSchema = physInfo.schema()
-                      val logicalNames = winfo.schema().fieldNames
-                      val raw = spark.read.schema(physSchema)
-                        .parquet(scratch.toString)
-                      val logical = raw.select(
-                        physSchema.fieldNames.toIndexedSeq.zip(logicalNames)
-                          .map { case (p, l) =>
-                            org.apache.spark.sql.functions
-                              .col("`" + p.replace("`", "``") + "`").as(l)
-                          }: _*)
                       try {
-                        t.commitReplacingDf(logical, replacedRels,
+                        t.commitReplacingDf(TxLogV2Table.readStaged(spark,
+                            scratch, physInfo.schema(), winfo.schema()),
+                          replacedRels,
                           op = opName,
                           scanBase = scanBaseV, scanPred = scanPredC)
                       } finally TxLogV2Table.dropDir(scratch)
@@ -2128,6 +2123,17 @@ object TxLogV2Table {
   def maxMorMaskKeys(spark: org.apache.spark.sql.SparkSession): Int =
     spark.conf.getOption("spark.graft.sql.maxMorMaskKeys")
       .map(_.toInt).getOrElse(MaxMorMaskKeys)
+
+  // an external writer's files under `scratch`, read back under their
+  // physical schema `phys` and relabeled to the `logical` schema's names
+  private[v2] def readStaged(spark: SparkSession, scratch: java.nio.file.Path,
+                             phys: StructType, logical: StructType)
+      : DataFrame =
+    spark.read.schema(phys).parquet(scratch.toString).select(
+      phys.fieldNames.toIndexedSeq.zip(logical.fieldNames).map { case (p, l) =>
+        org.apache.spark.sql.functions.col("`" + p.replace("`", "``") + "`")
+          .as(l)
+      }: _*)
 
   // best-effort recursive delete of a staging scratch dir (abort/cleanup)
   private[v2] def dropDir(dir: java.nio.file.Path): Unit =
@@ -2355,19 +2361,9 @@ final class TxLogWriteBuilder(tbl: TxLogV2Table, info: LogicalWriteInfo)
               // predicate-scoped overwrite: re-read the staged batch
               // (batch-sized, not table-sized) and route through
               // replaceWhere's validated predicate-scoped commit
-              val spark = SparkSession.active
-              val cmap = tbl.table.latestVersion
-                .map(tbl.table.colMapOf).getOrElse(Map.empty)
-              val raw = spark.read.schema(physInfo.schema())
-                .parquet(scratch.toString)
-              val logicalNames = info.schema().fieldNames
-              val logical = raw.select(
-                physInfo.schema().fieldNames.toIndexedSeq.zip(logicalNames)
-                  .map { case (p, l) =>
-                    org.apache.spark.sql.functions
-                      .col("`" + p.replace("`", "``") + "`").as(l)
-                  }: _*)
-              try tbl.table.replaceWhere(tbl.schema, pred, logical)
+              try tbl.table.replaceWhere(tbl.schema, pred,
+                TxLogV2Table.readStaged(SparkSession.active, scratch,
+                  physInfo.schema(), info.schema()))
               finally TxLogV2Table.dropDir(scratch)
             case None =>
               tbl.table.commitStagedReplace(scratch,
