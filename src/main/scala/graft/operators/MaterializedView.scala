@@ -36,8 +36,9 @@ import graft.sources.TxLogTable
   *  - the changed groups' current rows are read once, with their
   *    positions, and folded on the driver; the write
   *    ([[TxLogTable.foldKeyedAt]]) is one small DV parquet masking them
-  *    plus the replacement rows — the view's other billion groups are
-  *    untouched manifest references;
+  *    plus the replacement rows, both written on the driver (no Spark
+  *    job) — the view's other billion groups are untouched manifest
+  *    references;
   *  - progress (`#mvsrc=<source version>`) rides the SAME manifest write,
   *    so a refresh is exactly-once by the commit protocol itself: a crash
   *    before the manifest leaves only unreferenced staged files (vacuum
@@ -50,9 +51,22 @@ import graft.sources.TxLogTable
   * random DML programs.
   *
   * Fold-safety triage per walked source version:
-  *  - appends and DV commits feed exact events; copy-on-write row DML
-  *    ([[TxLogTable.CowDiffOps]]) is content-diffed by the feed; layout
-  *    rewrites are skipped (`skipRewrites`);
+  *  - appends and DV commits feed exact events; layout rewrites are
+  *    skipped (`skipRewrites`);
+  *  - copy-on-write row DML ([[TxLogTable.CowDiffOps]]) folds LINEARLY
+  *    into a view whose measures are all SUM/COUNT: each version's rows
+  *    are read signed (+1 per row of a file it added, −1 per row of a
+  *    file it removed, each through its version's mask) and aggregate
+  *    straight to per-group deltas, Σ(added) − Σ(removed) — rows the
+  *    rewrite carried cancel inside the sum, so no row-exact diff is
+  *    needed. A group only copy-on-write versions touched whose count,
+  *    sums and signed non-NULL count per sum all net to zero (a group
+  *    the rewrite only carried, a value swap inside the group) cannot
+  *    change and is dropped before the fold, so `groupsChanged` never
+  *    exceeds the netted feed's group count. A view with MIN/MAX (and the HLL views built on MAX) reads
+  *    the NETTED feed — [[TxLogTable.changesWithDeletes]], which content-
+  *    diffs each version — as do dimension windows, streams and the
+  *    public change feed;
   *  - keys-only MOR deletes fold as GROUP DROPS at their exact position
   *    in the version sequence (a later re-insert of the key survives),
   *    provided the tombstone keys are a subset of the view's group
@@ -1111,10 +1125,19 @@ object MaterializedView {
       }))
     val dimSnapsOld: Seq[DimSnap] = dimSnapPairs.map(_._1)
     val dimSnapsNew: Seq[DimSnap] = dimSnapPairs.map(_._2)
+    // a SUM/COUNT view folds LINEARLY: its delta is Σ(added) − Σ(removed)
+    // per group whichever rows carry it, so it reads the signed feed
+    // (copy-on-write versions un-netted) instead of the content diff
+    val linear = d.mins.isEmpty && d.maxs.isEmpty
     def deltaOf(f: Fold): DataFrame = {
-      val feed = prepared(src.changesWithDeletes(feedProj, f.fromV,
-        f.toV, skipRewrites = true), d, dimSnapsOld)
+      val events =
+        if (linear) src.signedChanges(feedProj, f.fromV, f.toV,
+          skipRewrites = true)
+        else src.changesWithDeletes(feedProj, f.fromV, f.toV,
+          skipRewrites = true)
+      val feed = prepared(events, d, dimSnapsOld)
       val del = col("_change_type") === "delete"
+      val sign = when(del, lit(-1L)).otherwise(lit(1L))
       val aggs = d.sums.map { case (out, s0) =>
           val v = col(s0).cast(SumType)
           sum(when(del, -v).otherwise(v)).as(out)
@@ -1124,9 +1147,30 @@ object MaterializedView {
         // targeted-recompute branch consumes this delta's KEYS only
         d.mins.map { case (out, s0) => min(col(s0)).as(out) } ++
         d.maxs.map { case (out, s0) => max(col(s0)).as(out) } :+
-        sum(when(del, lit(-1L)).otherwise(lit(1L))).as(CountCol)
+        sum(sign).as(CountCol)
+      // rows a rewrite carried enter the signed feed once per side, so a
+      // group only copy-on-write versions touched may have an all-zero
+      // delta: a linear view drops such a group when its count, sums and
+      // signed non-NULL count per sum all net to zero (its view row
+      // cannot change, NULL-ness included). Any other event keeps the
+      // group, as in the netted feed.
+      val cowVs = (f.fromV + 1 to f.toV).filter(v =>
+        present(v) && TxLogTable.CowDiffOps(opAt(v)))
+      val nn = if (linear) d.sums.indices.map(i => s"__graft_nn$i") else Nil
+      val other = "__graft_other"
+      val extra = if (!linear) Nil else
+        d.sums.zip(nn).map { case ((_, s0), n) =>
+          sum(when(col(s0).isNull, lit(0L)).otherwise(sign)).as(n) } :+
+        sum(when(col("_commit_version").isin(cowVs: _*), lit(0L))
+          .otherwise(lit(1L))).as(other)
       // the view's column order: the driver fold reads it positionally
-      feed.groupBy(groupKeyCols: _*).agg(aggs.head, aggs.tail: _*)
+      val delta = feed.groupBy(groupKeyCols: _*)
+        .agg(aggs.head, aggs.tail ++ extra: _*)
+      val kept = Seq(col(other) =!= 0L, col(CountCol) =!= 0L) ++
+        nn.map(col(_) =!= 0L) ++
+        d.sums.map { case (out, _) => coalesce(col(out) =!= 0, lit(false)) }
+      if (!linear) delta
+      else delta.filter(kept.reduce(_ || _)).drop(other +: nn: _*)
     }
     // a fold step's driver form: the delta rows (view-shaped), or a
     // drop's tombstone key rows with their schema

@@ -2895,7 +2895,25 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     */
   def changesWithDeletes(schema: StructType, fromV: Int,
                          toV: Int,
-                         skipRewrites: Boolean = false): DataFrame = {
+                         skipRewrites: Boolean = false): DataFrame =
+    changeEvents(schema, fromV, toV, skipRewrites, net = true)
+
+  /** The SIGNED change feed over `(fromV, toV]`: [[changesWithDeletes]]
+    * with each copy-on-write version left un-netted — every row of a file
+    * the version added is an `'insert'`, every row of a file it removed a
+    * `'delete'`, each read through its version's mask ([[cowSignedEvents]]).
+    * Rows a rewrite carried appear once on each side, so the feed is exact
+    * only for LINEAR consumers, which sum the signs per group (the MV
+    * refresh of a SUM/COUNT view); skipping the per-row netting saves the
+    * shuffle that groups every column of the rewritten files.
+    */
+  private[graft] def signedChanges(schema: StructType, fromV: Int, toV: Int,
+                                   skipRewrites: Boolean): DataFrame =
+    changeEvents(schema, fromV, toV, skipRewrites, net = false)
+
+  private def changeEvents(schema: StructType, fromV: Int, toV: Int,
+                           skipRewrites: Boolean,
+                           net: Boolean): DataFrame = {
     val present = versions.toSet
     val cowVs = (fromV + 1 to toV).filter(present)
       .filter(v => v > 0 && present(v - 1) &&
@@ -2903,7 +2921,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     val rawAdds = changesBetweenEx(schema, fromV, toV, skipRewrites,
         cowVs.toSet)
       .withColumn("_change_type", lit("insert"))
-    val adds = cowVs.map(cowDiffEvents(schema, _))
+    val adds = cowVs.map(v =>
+        if (net) cowDiffEvents(schema, v) else cowSignedEvents(schema, v))
       .foldLeft(rawAdds)(_.unionByName(_))
     // tombstones are collected from EVERY manifest in the range, not
     // just toV's: a compaction inside the range FOLDS earlier
@@ -2979,27 +2998,18 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     deletes.foldLeft(withDv)(_.unionByName(_))
   }
 
-  /** insert/delete events of ONE copy-on-write version by CONTENT DIFF
-    * of its rewritten file set: LOGICAL rows of the files the version
-    * dropped, minus logical rows of the files it added, are the deletes
-    * (full rows); the reverse difference is the inserts. Both come from
-    * ONE aggregate: each distinct row's count in the added files minus
-    * its count in the dropped ones, replicated as that many inserts
-    * (positive) or deletes (negative) — `exceptAll`'s multiset
-    * semantics in both directions with one shuffle instead of two.
-    * Grouping is null-safe, so no key declaration is needed — this works
-    * on key-less tables where MOR tombstones cannot. Both sides read
-    * through their version's tombstone MASK ([[readMaskedEntries]]),
-    * which makes the diff logically EXACT: a row already MOR-deleted
-    * never re-surfaces as a phantom delete when a later rewrite drops
-    * its file — a phantom would kill a key legitimately RE-INSERTED
-    * between the tombstone and the rewrite in any keyed consumer fold.
-    * Reads ONLY the touched files (carried files appear in both
-    * manifests and never enter the diff); translation uses the LATEST
-    * colmap, valid for every version's files because physical names
-    * are never rebound.
+  /** The signed rows of ONE copy-on-write version: LOGICAL rows of the
+    * files it added as `'insert'`, of the files it dropped as `'delete'`,
+    * tagged with `v`. Reads ONLY the touched files (carried files appear
+    * in both manifests and never enter). Both sides read through their
+    * version's tombstone MASK ([[readMaskedEntries]]): a row already
+    * MOR-deleted never re-surfaces as a phantom delete when a later
+    * rewrite drops its file — a phantom would kill a key legitimately
+    * RE-INSERTED between the tombstone and the rewrite in any keyed
+    * consumer fold. Translation uses the LATEST colmap, valid for every
+    * version's files because physical names are never rebound.
     */
-  private def cowDiffEvents(schema: StructType, v: Int): DataFrame = {
+  private def cowSignedEvents(schema: StructType, v: Int): DataFrame = {
     val curE = entries(Some(v))
     val prevE = entries(Some(v - 1))
     val curRels = curE.map(_.rel).toSet
@@ -3009,14 +3019,32 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       curE.filterNot(e => prevRels(e.rel)), Some(v), Some(map))
     val r = readMaskedEntries(schema,
       prevE.filterNot(e => curRels(e.rel)), Some(v - 1), Some(map))
+    def tagged(df: DataFrame, kind: String) = df
+      .withColumn("_commit_version", lit(v.toLong))
+      .withColumn("_change_type", lit(kind))
+    tagged(a, "insert").unionByName(tagged(r, "delete"))
+  }
+
+  /** insert/delete events of ONE copy-on-write version by CONTENT DIFF:
+    * [[cowSignedEvents]] netted per distinct row — each row's count in
+    * the added files minus its count in the dropped ones, replicated as
+    * that many inserts (positive) or deletes (negative), `exceptAll`'s
+    * multiset semantics in both directions with one shuffle. Rows a
+    * rewrite carried cancel, so they are never re-delivered as phantom
+    * events. Grouping is null-safe, so no key declaration is needed —
+    * this works on key-less tables where MOR tombstones cannot.
+    */
+  private def cowDiffEvents(schema: StructType, v: Int): DataFrame = {
     import org.apache.spark.sql.functions.{abs, explode, sequence, sum,
       when}
     val net = Iterator.from(0).map(i => s"_graft_net$i")
       .find(c => !schema.fieldNames.contains(c)).get
     val cols = schema.fieldNames.toSeq.map(n =>
       col("`" + n.replace("`", "``") + "`"))
-    a.withColumn(net, lit(1L)).unionByName(r.withColumn(net, lit(-1L)))
-      .groupBy(cols: _*).agg(sum(col(net)).as(net))
+    cowSignedEvents(schema, v)
+      .groupBy(cols: _*)
+      .agg(sum(when(col("_change_type") === "insert", lit(1L))
+        .otherwise(lit(-1L))).as(net))
       .filter(col(net) =!= 0L)
       .select(cols :+ lit(v.toLong).as("_commit_version") :+
         when(col(net) > 0, lit("insert")).otherwise(lit("delete"))
@@ -4101,6 +4129,87 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     moveStaged(scratch)
   }
 
+  // Driver-held `rows` of `schema` staged WITHOUT a Spark job, under
+  // [[stage]]'s layout rules: the derived hidden bucket/time columns, the
+  // within-partition sort of sorted layouts, PHYSICAL column names
+  // (`mapped`; a DV positions file is never mapped — its reader is not)
+  // and a batch-unique name under data/. The first three are the same
+  // frame transforms, evaluated on the driver by the optimizer's own
+  // local-relation folding; each hive value's rows then go to one file
+  // through Spark's parquet writer (`prepareWrite(…).newInstance(…)`, the
+  // writer a write task runs), so file and footer are what a one-task
+  // Spark write of the same rows gives. Hive segments are rendered as
+  // Spark's writer renders them (string cast in the session time zone,
+  // escaped, the default name for NULL or empty).
+  private def stageRows(rows: Seq[org.apache.spark.sql.Row],
+                        schema: StructType, partitionCols: Seq[String],
+                        mapped: Boolean = true): Seq[String] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
+      GenericInternalRow, RowOrdering}
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID,
+      TaskType}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    val local = spark.createDataFrame(rows.asJava, schema)
+    val framed = withBucketCol(local, partitionCols)
+    val lr = (if (mapped) toPhysical(framed) else framed)
+      .queryExecution.optimizedPlan match {
+        case lr: LocalRelation => lr
+        case _ => return stage(local.coalesce(1), partitionCols)
+      }
+    val attrs = lr.output
+    val at = attrs.map(_.name).zipWithIndex.toMap
+    val pIdx = partitionCols.map(at)
+    val dIdx = attrs.indices.filterNot(pIdx.contains)
+    val types = attrs.map(_.dataType)
+    val sortCols = latestVersion.map(sortColsOf).getOrElse(Nil)
+    val ordered =
+      if (sortCols.isEmpty || partitionCols.isEmpty ||
+          !sortCols.forall(framed.columns.contains)) lr.data
+      else {
+        val kIdx = pIdx ++ sortCols.map(at)
+        lr.data.sortBy(r => InternalRow.fromSeq(kIdx.map(i =>
+          r.get(i, types(i)))): InternalRow)(
+          RowOrdering.createNaturalAscendingOrdering(kIdx.map(types)))
+      }
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val segs = pIdx.map(i => Cast(BoundReference(i, types(i), true),
+      org.apache.spark.sql.types.StringType, tz))
+    def dirOf(r: InternalRow): String =
+      partitionCols.zip(segs).map { case (c, e) =>
+        ExternalCatalogUtils.getPartitionPathString(c,
+          Option(e.eval(r)).map(_.toString).orNull)
+      }.mkString("/")
+    val dataSchema = StructType(dIdx.map(i =>
+      StructField(attrs(i).name, types(i), attrs(i).nullable)))
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat()
+      .prepareWrite(spark, job, Map.empty, dataSchema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0),
+        0))
+    val scratch = dataDir.resolve(
+      "batch-" + java.util.UUID.randomUUID().toString + ".staging")
+    val file = "part-00000-c000" + factory.getFileExtension(ctx)
+    val byDir = scala.collection.mutable.LinkedHashMap
+      .empty[String, scala.collection.mutable.ArrayBuffer[InternalRow]]
+    ordered.foreach(r => byDir.getOrElseUpdate(dirOf(r),
+      scala.collection.mutable.ArrayBuffer.empty) += r)
+    byDir.foreach { case (dir, rs) =>
+      val path = if (dir.isEmpty) scratch.resolve(file)
+        else scratch.resolve(dir).resolve(file)
+      Files.createDirectories(path.getParent)
+      val w = factory.newInstance(path.toString, dataSchema, ctx)
+      try rs.foreach(r => w.write(
+        new GenericInternalRow(dIdx.map(i => r.get(i, types(i))).toArray)))
+      finally w.close()
+    }
+    moveStaged(scratch)
+  }
+
   // the parquet files under `scratch`, in path order
   private def parquetUnder(scratch: Path): Seq[String] =
     scala.util.Using.resource(Files.walk(scratch)) { s =>
@@ -4255,11 +4364,12 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * keys); a column with no usable stats is simply absent, which readers
     * treat as "cannot prune".
     */
-  private def footerStats(rel: String): Map[String, (Long, Long)] = {
+  private def footerStats(rel: String,
+                          conf: org.apache.hadoop.conf.Configuration)
+      : Map[String, (Long, Long)] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val conf = spark.sessionState.newHadoopConf()
     val in = HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(dataDir.resolve(rel).toString), conf)
     scala.util.Using.resource(ParquetFileReader.open(in)) { r =>
@@ -4456,10 +4566,12 @@ final case class TxLogTable(spark: SparkSession, root: String) {
   // pruning test would call it "may match" FOREVER (a string-keyed merge
   // rewrote one such file on every batch). Empty files are pure manifest
   // overhead at 100 TB; every staged file passes through here, so they
-  // are deleted here.
+  // are deleted here. One Hadoop conf serves every footer read: building
+  // one per file reloads its resources each time.
   private def fileEntries(rels: Seq[String], layout: Layout,
                           base: Option[Int]): Seq[String] = {
-    val (empty, live) = rels.map(rel => rel -> footerStats(rel))
+    lazy val conf = spark.sessionState.newHadoopConf()
+    val (empty, live) = rels.map(rel => rel -> footerStats(rel, conf))
       .partition(_._2.get(TxLogTable.RowsKey).exists(_._1 == 0L))
     empty.foreach { case (rel, _) =>
       scala.util.Try(Files.delete(dataDir.resolve(rel))) }
@@ -4563,33 +4675,49 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         case LongType | IntegerType | ShortType | ByteType => true
         case _ => false
       })
-    // one tiny driver-side agg over the delta: the batch key hull
-    val bounds: Map[String, (Long, Long)] =
-      if (integralKeys.isEmpty) Map.empty
-      else {
-        val aggs = integralKeys.flatMap(k => Seq(
-          org.apache.spark.sql.functions.min(col(k)).cast("long"),
-          org.apache.spark.sql.functions.max(col(k)).cast("long")))
-        val row = incoming.agg(aggs.head, aggs.tail: _*).head()
-        integralKeys.zipWithIndex.collect {
-          case (k, i) if !row.isNullAt(2 * i) =>
-            k -> (row.getLong(2 * i), row.getLong(2 * i + 1))
-        }.toMap
-      }
-    // STRING merge keys prune via the manifest Blooms: collect the batch's
-    // distinct values per string key (one small distinct per column, capped
-    // at MaxMergeProbeKeys + 1 rows of driver data). None = over the cap —
-    // that column contributes no pruning, conservatively.
     val stringKeys = keys.filter(k =>
       schema.find(_.name == k).exists(_.dataType ==
         org.apache.spark.sql.types.StringType))
-    val stringProbes: Map[String, Option[Set[String]]] = stringKeys.map { k =>
-      val vals = incoming.select(col(k)).where(col(k).isNotNull)
-        .distinct().limit(TxLogTable.MaxMergeProbeKeys + 1)
+    // STRING merge keys prune via the manifest Blooms: collect the batch's
+    // distinct values per string key (one small distinct per column, capped
+    // at MaxMergeProbeKeys + 1 non-NULL values of driver data, NULL kept as
+    // one more so an empty probe means an empty batch). None = over the
+    // cap — that column contributes no pruning, conservatively.
+    val probed: Map[String, Array[String]] = stringKeys.map { k =>
+      k -> incoming.select(col(k)).distinct()
+        .limit(TxLogTable.MaxMergeProbeKeys + 2)
         .collect().map(_.getString(0))
-      k -> (if (vals.length > TxLogTable.MaxMergeProbeKeys) None
-            else Some(vals.toSet))
     }.toMap
+    val stringProbes: Map[String, Option[Set[String]]] = probed.map {
+      case (k, vals) =>
+        val nonNull = vals.filter(_ != null)
+        k -> (if (nonNull.length > TxLogTable.MaxMergeProbeKeys) None
+              else Some(nonNull.toSet))
+    }
+    // one tiny driver-side agg over the delta: the batch key hull, and its
+    // row count wherever no string probe already tells an empty batch
+    val hullRow =
+      if (integralKeys.isEmpty && stringKeys.nonEmpty) None
+      else {
+        val aggs = integralKeys.flatMap(k => Seq(
+          org.apache.spark.sql.functions.min(col(k)).cast("long"),
+          org.apache.spark.sql.functions.max(col(k)).cast("long"))) :+
+          org.apache.spark.sql.functions.count(lit(1))
+        Some(incoming.agg(aggs.head, aggs.tail: _*).head())
+      }
+    val bounds: Map[String, (Long, Long)] = hullRow.fold(
+        Map.empty[String, (Long, Long)]) { row =>
+      integralKeys.zipWithIndex.collect {
+        case (k, i) if !row.isNullAt(2 * i) =>
+          k -> (row.getLong(2 * i), row.getLong(2 * i + 1))
+      }.toMap
+    }
+    // an empty batch changes nothing: no version (a batch of NULL keys
+    // still inserts its rows)
+    val emptyBatch = hullRow.fold(probed(stringKeys.head).isEmpty)(
+      _.getLong(2 * integralKeys.length) == 0L)
+    if (emptyBatch && latestVersion.nonEmpty)
+      return TxLogTable.MergeStats(latestVersion.get, 0, fileCount())
     // the string-key HULL for :spre range pruning: from the collected
     // probe set when bounded, else one min/max agg (a hull exists for any
     // batch size — the bloom probe set does not)
@@ -4892,9 +5020,9 @@ final case class TxLogTable(spark: SparkSession, root: String) {
         keepRows = false, opName, Nil, None) { (hit, picked) =>
       // update: the touched rows re-staged once with assignments applied
       set.filter(_ => picked.nonEmpty).map(assigns =>
-        hit.select(schema.fieldNames.toIndexedSeq.map(n =>
+        Left(hit.select(schema.fieldNames.toIndexedSeq.map(n =>
           assigns.collectFirst { case (c, e) if c == n => e.as(n) }
-            .getOrElse(col(n))): _*))
+            .getOrElse(col(n))): _*)))
     }
   }
 
@@ -4971,7 +5099,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       rows => rows.join(broadcast(keyFrame),
         keyCols.map(k => rows(k) <=> keyFrame(k)).reduce(_ && _),
         "left_semi"),
-      keepRows = false, op, extraMeta, expectHead)((_, _) => Some(aligned))
+      keepRows = false, op, extraMeta, expectHead)((_, _) =>
+        Some(Left(aligned)))
   }
 
   /** Keyed read-fold-write at a pinned head — the commit of an MV refresh
@@ -5031,9 +5160,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     maskAndAdd(schema, hull, pick, keepRows = true, op, extraMeta,
         Some(head)) { (_, picked) =>
       val out = fold(picked)
-      if (out.isEmpty) None
-      else Some(spark.createDataFrame(java.util.Arrays.asList(out: _*),
-        schema).coalesce(1))
+      if (out.isEmpty) None else Some(Right(out))
     }
   }
 
@@ -5078,11 +5205,13 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     *    `schema` columns when `keepRows` — to the driver; an over-cap
     *    mask fails with the "compact first" refusal without ever being
     *    materialized whole;
-    *  - the positions stage as ONE DV parquet from the driver rows (a
-    *    1-task write; per-file counts are driver math), and `add`'s
-    *    frame stages as new data files; `add` gets the picked rows as a
-    *    frame of `schema` columns and as the collected rows (their
-    *    `schema` columns with `keepRows`, else their positions);
+    *  - the positions stage as ONE DV parquet written on the driver
+    *    ([[stageRows]]: no Spark job; per-file counts are driver math),
+    *    and `add`'s rows stage as new data files — a frame (`Left`)
+    *    through a Spark write, driver-held rows of `schema` (`Right`) on
+    *    the driver; `add` gets the picked rows as a frame of `schema`
+    *    columns and as the collected rows (their `schema` columns with
+    *    `keepRows`, else their positions);
     *  - both publish in one manifest, or nothing when nothing was masked
     *    or added.
     */
@@ -5091,7 +5220,9 @@ final case class TxLogTable(spark: SparkSession, root: String) {
                          op: String, extraMeta: Seq[String],
                          expectHead: Option[Int])
                         (add: (DataFrame, Seq[org.apache.spark.sql.Row]) =>
-                          Option[DataFrame]): TxLogTable.MergeStats = {
+                          Option[Either[DataFrame,
+                            Seq[org.apache.spark.sql.Row]]])
+      : TxLogTable.MergeStats = {
     import org.apache.spark.sql.functions.typedLit
     optimisticCommit(op) { (base, next) =>
       expectHead.foreach { eh =>
@@ -5135,9 +5266,9 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       // span DV files — the manifest carries one line per target)
       val stagedDv =
         if (picked.isEmpty) Nil
-        else stage(spark.createDataFrame(java.util.Arrays.asList(
-          picked.map(r => org.apache.spark.sql.Row(r.get(0), r.get(1))): _*),
-          TxLogTable.DvSchema).coalesce(1), Nil)
+        else stageRows(picked.toSeq.map(r =>
+          org.apache.spark.sql.Row(r.get(0), r.get(1))), TxLogTable.DvSchema,
+          Nil, mapped = false)
       val counts = picked.groupBy(_.getString(0)).view
         .mapValues(_.length.toLong).toSeq.sortBy(_._1)
       val stagedData = add(hitRows,
@@ -5145,9 +5276,15 @@ final case class TxLogTable(spark: SparkSession, root: String) {
             org.apache.spark.sql.Row.fromSeq(r.toSeq.drop(2)))
           else picked.toSeq)
         .fold(Seq.empty[String]) { data =>
-          validateChecks(data, base)
-          fileEntries(stage(data, layout, rebalance = true), layoutOf(base),
-            base)
+          val staged = data match {
+            case Left(df) =>
+              validateChecks(df, base)
+              stage(df, layout, rebalance = true)
+            case Right(rows) =>
+              validateChecks(spark.createDataFrame(rows.asJava, schema), base)
+              stageRows(rows, schema, layout)
+          }
+          fileEntries(staged, layoutOf(base), base)
         }
       if (counts.isEmpty && stagedData.isEmpty) // nothing to mask or add
         Unchanged(TxLogTable.MergeStats(base.getOrElse(-1), 0, lines.size))

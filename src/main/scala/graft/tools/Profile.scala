@@ -12,10 +12,11 @@ import scala.jdk.CollectionConverters._
   *
   *  - `Profile q1 q2 …` — per query: total wall, job count, summed job
   *    time, the DRIVER GAP (wall not covered by any running job —
-  *    planning, manifest IO, commit protocol), the top jobs and the
-  *    per-SQL-execution split;
+  *    planning, manifest IO, commit protocol), the Janino compiles, the
+  *    top jobs and the per-SQL-execution split;
   *  - `Profile --all out.json` — every query, one summary each (wall,
-  *    jobs, tasks, job time, driver gap) written as JSON;
+  *    jobs, tasks, job time, driver gap, Janino compiles) written as
+  *    JSON;
   *  - `Profile --diff a.json b.json` — every query whose job count moved
   *    between two `--all` runs, and how many rose (no Spark session);
   *  - `Profile --iso q1 q2 …` — three timed passes per query in this
@@ -40,9 +41,12 @@ object Profile {
   final case class ExecRec(id: Long, desc: String, start: Long,
                            var end: Long = 0L)
 
-  /** One profiled run of a query. */
+  /** One profiled run of a query. `compiles` counts the Janino compiles
+    * the run paid — generated classes Spark's codegen cache did not
+    * hold — read from the process-wide `CodegenMetrics` histogram, so
+    * it costs no Spark job. */
   final case class Summary(wallS: Double, jobs: Int, tasks: Int,
-                           jobS: Double, gapS: Double)
+                           jobS: Double, gapS: Double, compiles: Long = 0L)
 
   /** Records the jobs (and the SQL executions they ran under) while it
     * is registered. */
@@ -112,7 +116,10 @@ object Profile {
                        dir: String): (Summary, Recorder) = {
     graft.SparkEntry.queries(q)(spark, dir).count()
     val rec = new Recorder
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
     spark.sparkContext.addSparkListener(rec)
+    val c0 = compiled.getCount
     val wall =
       try {
         val t0 = System.nanoTime()
@@ -122,7 +129,7 @@ object Profile {
         Thread.sleep(300) // drain the listener bus
         spark.sparkContext.removeSparkListener(rec)
       }
-    (rec.summary(wall), rec)
+    (rec.summary(wall).copy(compiles = compiled.getCount - c0), rec)
   }
 
   def main(args: Array[String]): Unit = args.toList match {
@@ -132,7 +139,8 @@ object Profile {
         q -> (try {
           val s = profiled(spark, q, dir)._1
           println(f"== $q wall=${s.wallS}%.2fs jobs=${s.jobs} " +
-            f"tasks=${s.tasks} jobTime=${s.jobS}%.2fs gap=${s.gapS}%.2fs")
+            f"tasks=${s.tasks} jobTime=${s.jobS}%.2fs gap=${s.gapS}%.2fs " +
+            s"compiles=${s.compiles}")
           s
         } catch { case scala.util.control.NonFatal(e) =>
           println(s"== $q FAILED: $e")
@@ -185,7 +193,7 @@ object Profile {
     val done = rec.done
     println(f"== $q wall=${s.wallS}%.2fs jobs=${s.jobs} " +
       f"jobTime=${s.jobS}%.2fs covered=${s.wallS - s.gapS}%.2fs " +
-      f"gap=${s.gapS}%.2fs tasks=${s.tasks}")
+      f"gap=${s.gapS}%.2fs tasks=${s.tasks} compiles=${s.compiles}")
     val byDesc = done.groupBy(_.desc).map { case (d, js) =>
       (d, js.size, js.map(j => j.end - j.start).sum, js.map(_.tasks).sum)
     }.toSeq.sortBy(-_._3)
@@ -209,14 +217,16 @@ object Profile {
   /** Every query whose job count differs between two `--all` files;
     * queries present in only one file are listed as added or dropped. */
   private def diff(a: String, b: String): Unit = {
-    // a query that failed in a run has no job count there
-    def jobsIn(f: String): Map[String, Int] = {
+    // a query that failed in a run has no job count there; a file from
+    // before compiles were recorded has none of those
+    def fieldIn(f: String, k: String): Map[String, Int] = {
       val qs = mapper.readTree(new java.io.File(f)).get("queries")
       qs.fieldNames().asScala.collect {
-        case q if qs.get(q).has("jobs") => q -> qs.get(q).get("jobs").asInt
+        case q if qs.get(q).has(k) => q -> qs.get(q).get(k).asInt
       }.toMap
     }
-    val (ja, jb) = (jobsIn(a), jobsIn(b))
+    val (ja, jb) = (fieldIn(a, "jobs"), fieldIn(b, "jobs"))
+    val (ca, cb) = (fieldIn(a, "compiles"), fieldIn(b, "compiles"))
     val moved = (ja.keySet ++ jb.keySet).toSeq.sorted.flatMap { q =>
       (ja.get(q), jb.get(q)) match {
         case (Some(x), Some(y)) if x != y => Some((q, s"$x -> $y", y - x))
@@ -231,6 +241,6 @@ object Profile {
     println(s"== ${moved.size} of ${(ja.keySet ++ jb.keySet).size} " +
       s"queries moved, ${moved.count(_._3 > 0)} rose, " +
       s"${moved.count(_._3 < 0)} fell; jobs ${ja.values.sum} -> " +
-      s"${jb.values.sum}")
+      s"${jb.values.sum}; compiles ${ca.values.sum} -> ${cb.values.sum}")
   }
 }

@@ -1205,4 +1205,179 @@ class MvPropertySpec extends AnyFunSuite {
       }
     }
   }
+
+  // ---- copy-on-write windows: the linear fold --------------------------
+
+  private lazy val cowCat = {
+    spark.conf.set("spark.sql.catalog.mvcow", "graft.sources.v2.TxLogCatalog")
+    spark.conf.set("spark.sql.catalog.mvcow.warehouse",
+      Files.createTempDirectory("mvcow-wh").toString)
+    "mvcow"
+  }
+
+  private val cowSchema = StructType(Seq(StructField("k", LongType),
+    StructField("id", LongType), StructField("v", DoubleType)))
+
+  private sealed trait CowOp
+  private type CowRow = (Long, Long, Option[Double]) // (k, id, v)
+  private case class CAppend(rows: List[CowRow]) extends CowOp
+  private case class CMerge(rows: List[CowRow]) extends CowOp
+  private case class CDelete(ids: List[Long]) extends CowOp
+  private case class CReplace(k: Long, rows: List[CowRow]) extends CowOp
+  private case class SqlUpdate(ids: List[Long], v: Option[Double])
+    extends CowOp
+  private case class SqlDelete(ids: List[Long]) extends CowOp
+  private case class SqlMerge(rows: List[CowRow]) extends CowOp
+  private case class Swap(k: Long) extends CowOp
+  private case object CRefresh extends CowOp
+
+  // few groups and 0/NULL measures: rewritten files carry other groups,
+  // and sums cross 0 and NULL both ways
+  private val vGen = Gen.oneOf(Some(0.0), Some(1.5), Some(2.25), None)
+  private val cowRowsGen: Gen[List[CowRow]] =
+    Gen.resize(3, Gen.nonEmptyListOf(for {
+      k <- Gen.choose(1L, 3L); id <- Gen.choose(1L, 9L); v <- vGen
+    } yield (k, id, v)))
+  private val idsGen = Gen.resize(2, Gen.nonEmptyListOf(Gen.choose(1L, 9L)))
+  private val cowOpGen: Gen[CowOp] = Gen.frequency(
+    2 -> cowRowsGen.map(CAppend),
+    2 -> cowRowsGen.map(CMerge),
+    2 -> idsGen.map(CDelete),
+    1 -> (for { k <- Gen.choose(1L, 3L); rs <- cowRowsGen }
+          yield CReplace(k, rs.map { case (_, id, v) => (k, id, v) })),
+    3 -> (for { ids <- idsGen; v <- vGen } yield SqlUpdate(ids, v)),
+    1 -> idsGen.map(SqlDelete),
+    2 -> cowRowsGen.map(SqlMerge),
+    2 -> Gen.choose(1L, 3L).map(Swap),
+    3 -> Gen.const(CRefresh))
+
+  test("copy-on-write fuzz: merge, deleteWhere, replaceWhere and SQL " +
+    "UPDATE/DELETE/MERGE windows — a sums-only view and a star view " +
+    "(linear fold) and a MIN/MAX view (netted) equal their recomputes " +
+    "after every refresh, and no incremental refresh changes more groups " +
+    "than the netted feed names") {
+    val dimSchema = StructType(Seq(
+      StructField("uid", LongType), StructField("seg", StringType)))
+    // the scripted program walks 0 → NULL, NULL → 0, a swap inside one
+    // group and a rewrite that only carries other groups, in that order
+    val scripted: List[CowOp] = List(
+      SqlUpdate(List(7L), None), CRefresh,      // 0 → NULL (group 3)
+      SqlUpdate(List(7L), Some(0.0)), CRefresh, // NULL → 0
+      Swap(1L), CRefresh,                       // group 1 unchanged
+      CDelete(List(9L)), CRefresh,              // carries groups 1 and 3
+      SqlMerge(List((2L, 5L, Some(0.0)))), CRefresh)
+    val programs = scripted +: (1 to 5).map(i => Gen.resize(10,
+        Gen.listOf(cowOpGen)).pureApply(Gen.Parameters.default
+        .withSize(10), Seed(5200L + i)) :+ CRefresh)
+    var linearFolds = 0
+    programs.zipWithIndex.foreach { case (program, seed) =>
+      val name = s"cow$seed"
+      val tbl = s"$cowCat.ns.$name"
+      spark.sql(s"CREATE TABLE $tbl (k BIGINT, id BIGINT, v DOUBLE) " +
+        "USING txlog")
+      val src = TxLogTable(spark, spark.conf.get(
+        s"spark.sql.catalog.$cowCat.warehouse") + s"/ns/$name")
+      // one file holding every group: each rewrite carries other groups
+      src.commit(Seq[CowRow]((1L, 1L, Some(1.5)), (1L, 2L, Some(2.25)),
+          (2L, 3L, None), (2L, 4L, Some(1.5)), (3L, 7L, Some(0.0)),
+          (3L, 9L, None)).toDF("k", "id", "v"), overwrite = false)
+      val dir = Files.createTempDirectory("mvcowprop")
+      val dim = TxLogTable(spark, dir.resolve("dim").toString)
+      dim.commit(Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("uid", "seg"),
+        overwrite = true)
+      val (sumsMv, starMv, mmMv) = (dir.resolve("sums").toString,
+        dir.resolve("star").toString, dir.resolve("mm").toString)
+      MaterializedView.create(spark, sumsMv, s"s$seed", src, cowSchema,
+        Seq("k"), Seq("total" -> "v"))
+      MaterializedView.createJoined(spark, starMv, s"j$seed", src,
+        cowSchema, dim, dimSchema, Seq("k" -> "uid"), Seq("seg"),
+        Seq("total" -> "v"))
+      MaterializedView.create(spark, mmMv, s"m$seed", src, cowSchema,
+        Seq("k"), Seq("total" -> "v"), mins = Seq("lo" -> "v"),
+        maxs = Seq("hi" -> "v"))
+      def lit0(v: Option[Double]) =
+        v.fold("CAST(NULL AS DOUBLE)")(x => s"CAST($x AS DOUBLE)")
+      def values(rows: List[CowRow]) = rows.groupBy(_._2).values
+        .map(_.head).map { case (k, id, v) => s"($k, $id, ${lit0(v)})" }
+        .mkString(", ")
+      // every view row, keyed by its group, measures as options
+      def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => r.toSeq.map(Option(_)).map(_.map {
+          case d: java.math.BigDecimal => BigDecimal(d)
+          case x => x
+        })).toSet
+      def recompute(mvRoot: String) = {
+        val d = MaterializedView.definition(spark, mvRoot)
+        val fact = src.snapshot(cowSchema)
+        val joined = if (d.dims.isEmpty) fact
+          else fact.join(dim.snapshot(dimSchema), col("k") === col("uid"))
+        val aggs = d.sums.map { case (o, c) =>
+            sum(col(c).cast(MaterializedView.SumType)).as(o) } ++
+          d.mins.map { case (o, c) => min(col(c)).as(o) } ++
+          d.maxs.map { case (o, c) => max(col(c)).as(o) } :+
+          count(lit(1)).as(MaterializedView.CountCol)
+        rowsOf(joined.groupBy(d.groupCols.map(col): _*)
+          .agg(aggs.head, aggs.tail: _*))
+      }
+      def viewOf(mvRoot: String) = rowsOf(TxLogTable(spark, mvRoot)
+        .snapshot(MaterializedView.definition(spark, mvRoot).mvSchema))
+      // the groups the netted change feed names over the refreshed window
+      def nettedGroups(mvRoot: String, st: MaterializedView.RefreshStats) = {
+        val feed = src.changesWithDeletes(cowSchema, st.fromVersion,
+          st.toVersion, skipRewrites = true)
+        (if (mvRoot == starMv) feed.join(dim.snapshot(dimSchema),
+            col("k") === col("uid")).select("seg")
+         else feed.select("k")).distinct().count()
+      }
+      program.zipWithIndex.foreach { case (op, step) =>
+        def ctx = s"seed=$seed step=$step op=$op program=$program"
+        op match {
+          case CAppend(rows) =>
+            src.commit(rows.toDF("k", "id", "v"), overwrite = false)
+          case CMerge(rows) =>
+            src.merge(cowSchema, rows.toDF("k", "id", "v"), Seq("id"))
+          case CDelete(ids) =>
+            src.deleteWhere(cowSchema, col("id").isin(ids: _*))
+          case CReplace(k, rows) =>
+            src.replaceWhere(cowSchema, col("k") === k,
+              rows.toDF("k", "id", "v"))
+          case SqlUpdate(ids, v) =>
+            spark.sql(s"UPDATE $tbl SET v = ${lit0(v)} " +
+              s"WHERE id IN (${ids.mkString(", ")})")
+          case SqlDelete(ids) =>
+            spark.sql(s"DELETE FROM $tbl WHERE id IN (${ids.mkString(", ")})")
+          case SqlMerge(rows) =>
+            spark.sql(s"""MERGE INTO $tbl t
+              USING (SELECT * FROM VALUES ${values(rows)} AS s(k, id, v)) s
+              ON t.id = s.id
+              WHEN MATCHED THEN UPDATE SET t.k = s.k, t.v = s.v
+              WHEN NOT MATCHED THEN INSERT (k, id, v)
+                VALUES (s.k, s.id, s.v)""")
+          case Swap(k) =>
+            // two rows of group k trade measures: its sum, count and
+            // NULL-ness stay, so its view row must not change
+            val two = src.snapshot(cowSchema).filter(col("k") === k)
+              .orderBy("id").collect().map(r => (r.getLong(1),
+                Option(r.getAs[java.lang.Double]("v")).map(_.doubleValue)))
+              .distinctBy(_._1).take(2)
+            if (two.length == 2 && two(0)._2 != two(1)._2)
+              spark.sql(s"UPDATE $tbl SET v = CASE id " +
+                s"WHEN ${two(0)._1} THEN ${lit0(two(1)._2)} " +
+                s"ELSE ${lit0(two(0)._2)} END " +
+                s"WHERE id IN (${two(0)._1}, ${two(1)._1})")
+          case CRefresh =>
+            Seq(sumsMv, starMv, mmMv).foreach { mvRoot =>
+              val st = MaterializedView.refresh(spark, mvRoot)
+              assert(viewOf(mvRoot) === recompute(mvRoot), s"$mvRoot $ctx")
+              if (st.mode == "incremental") {
+                assert(st.groupsChanged <= nettedGroups(mvRoot, st),
+                  s"$mvRoot groupsChanged ${st.groupsChanged} $ctx")
+                if (mvRoot != mmMv) linearFolds += 1
+              }
+            }
+        }
+      }
+    }
+    assert(linearFolds > 0, "no linear view ever folded incrementally")
+  }
 }

@@ -238,4 +238,32 @@ class TxLogDataCommitSpec extends AnyFunSuite {
     val t = TxLogTable(spark, s"$warehouse/ra/a_down")
     assert(t.latestVersion.isDefined)
   }
+
+  test("merge of an empty batch publishes nothing; a batch of NULL keys " +
+      "still inserts") {
+    val schemaI = StructType(Seq(
+      StructField("id", LongType), StructField("v", StringType)))
+    val schemaS = StructType(Seq(
+      StructField("name", StringType), StructField("v", StringType)))
+    for ((schema, key, rows) <- Seq(
+        (schemaI, "id", Seq((1L, "a"), (2L, "b")).toDF("id", "v")),
+        (schemaS, "name", Seq(("x", "a"), ("y", "b")).toDF("name", "v")))) {
+      val t = fresh()
+      t.commit(rows, overwrite = true)
+      val head = t.latestVersion.get
+      val empty = spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+      val st = t.merge(schema, empty, Seq(key))
+      assert(t.latestVersion.contains(head), s"$key: a version was published")
+      assert(st.version == head && st.rewritten == 0 &&
+        st.carried == t.fileCount(), s"$key: $st")
+      assert(t.history().map(_.version).max == head)
+      // a batch whose keys are all NULL matches nothing and inserts
+      val nullKeys = spark.createDataFrame(java.util.Arrays.asList(
+        org.apache.spark.sql.Row(null, "n")), schema)
+      val ins = t.merge(schema, nullKeys, Seq(key))
+      assert(ins.version == head + 1 && ins.rewritten == 0, s"$key: $ins")
+      assert(t.snapshot(schema).count() == 3L)
+    }
+  }
 }
