@@ -1,19 +1,20 @@
 package graft.etl
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.StructType
 
-/** Warehouse context: parquet table paths + the pinned run timestamp.
+/** Warehouse context: transaction-log tables under `warehouse` + the pinned
+  * run timestamp.
   *
-  * The reference commits row-at-a-time into Postgres; our tables are immutable
-  * parquet directories rewritten atomically per run (merge-by-rewrite, SURVEY
-  * §2.4). Because a rewrite both reads and replaces the same table, writes go
-  * to a staging dir that is swapped in only after the write succeeds — the
-  * moral equivalent of the reference's transaction, and the reason a failed
+  * The reference commits row-at-a-time into Postgres; each of our tables is
+  * a [[graft.sources.TxLogTable]] rewritten per run (merge-by-rewrite,
+  * SURVEY §2.4). A replace is one overwrite commit: the new files are
+  * staged first and become visible in a single manifest publish, so a
+  * crash at any point leaves the previous version readable — the moral
+  * equivalent of the reference's transaction, and the reason a failed
   * occupancy rebuild can no longer leave a truncated table behind
   * (`/root/reference/iis_etl/logic.py:449,474-476`).
   *
@@ -27,20 +28,16 @@ import org.apache.spark.sql.types.StructType
   */
 final case class EtlContext(spark: SparkSession, warehouse: String,
                             runTs: java.sql.Timestamp,
-                            txLog: Boolean = false,
                             seen: (String, Boolean) => Unit = (_, _) => ()) {
 
   val runTsCol: Column = lit(runTs)
 
-  private def path(table: String): Path = Paths.get(warehouse, table)
-
   private def tx(table: String): graft.sources.TxLogTable =
-    graft.sources.TxLogTable(spark, path(table).toString)
+    graft.sources.TxLogTable(spark, Paths.get(warehouse, table).toString)
 
   def exists(table: String): Boolean = {
     seen(table, false)
-    if (txLog) tx(table).latestVersion.isDefined
-    else Files.exists(path(table))
+    tx(table).latestVersion.isDefined
   }
 
   /** Read a table; absent table → empty DataFrame with the declared schema
@@ -48,53 +45,25 @@ final case class EtlContext(spark: SparkSession, warehouse: String,
     */
   def read(table: String, schema: StructType): DataFrame = {
     seen(table, false)
-    if (txLog) tx(table).snapshot(schema)
-    else if (exists(table))
-      spark.read.schema(schema).parquet(path(table).toString)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    tx(table).snapshot(schema)
   }
 
-  /** Atomic table replace. Default backend: write to staging, then swap
-    * directories — `partitionCols` lays the table out hive-style (SURVEY
-    * §4: events partitioned by entity_type match every delete/filter
-    * predicate — at scale that is partition pruning plus dynamic-partition-
-    * overwrite-shaped slice replacement). With `txLog = true` the replace
-    * is a transaction-log overwrite commit instead — safe on stores whose
-    * directory rename is not atomic; `partitionCols` is threaded into the
-    * commit, so the batch keeps its hive layout and snapshot reads recover
-    * the partition columns via basePath (TxLogTable scaladoc).
+  /** Atomic table replace: one overwrite commit. `partitionCols` lays the
+    * batch out hive-style (SURVEY §4: events partitioned by entity_type
+    * match every delete/filter predicate — at 100 TB that is partition
+    * pruning), and snapshot reads recover the partition columns via
+    * basePath (TxLogTable scaladoc).
     */
   def replace(table: String, df: DataFrame,
               partitionCols: Seq[String] = Nil): Unit = {
     seen(table, true)
-    if (txLog) {
-      tx(table).commit(df, overwrite = true, partitionCols = partitionCols)
-      ()
-    }
-    else {
-      val tmp = Paths.get(warehouse, s"_staging_$table")
-      val w = df.write.mode("overwrite")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(tmp.toString)
-      deleteRecursive(path(table))
-      Files.move(tmp, path(table))
-    }
+    tx(table).commit(df, overwrite = true, partitionCols = partitionCols)
+    ()
   }
 
-  /** The transaction-log table behind `name` (tx-log backend only) — the
-    * operational surface: change feed, compaction, history, vacuum and
-    * row-level DML are its methods ([[graft.sources.TxLogTable]]).
+  /** The transaction-log table behind `name` — the operational surface:
+    * change feed, compaction, history, vacuum and row-level DML are its
+    * methods ([[graft.sources.TxLogTable]]).
     */
-  def table(name: String): graft.sources.TxLogTable = {
-    require(txLog, s"table($name) requires the txLog backend")
-    tx(name)
-  }
-
-  private def deleteRecursive(p: Path): Unit =
-    if (Files.exists(p))
-      scala.util.Using.resource(Files.walk(p)) { s =>
-        s.sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => Files.delete(f))
-      }
+  def table(name: String): graft.sources.TxLogTable = tx(name)
 }

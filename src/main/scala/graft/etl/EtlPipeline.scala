@@ -114,12 +114,14 @@ object EtlPipeline {
     * `/student-groups`, `/auditories` — arrays of objects; `/employees/all`
     * — array parsed via VariantType (heterogeneous academicDepartment);
     * `/schedule` — array of {entityName, entityType, data};
-    * `/schedule/current-week` — scalar.
+    * `/schedule/current-week` — scalar. Every table is a transaction log;
+    * `txLog` only accepts `true`, kept for callers that pass it by name.
     */
   def runFromSource(spark: SparkSession, source: ApiSource,
                     warehouse: String, runTs: java.sql.Timestamp,
-                    txLog: Boolean = false): EtlContext = {
-    val ctx = EtlContext(spark, warehouse, runTs, txLog)
+                    txLog: Boolean = true): EtlContext = {
+    require(txLog, "the transaction log is the only ETL backend")
+    val ctx = EtlContext(spark, warehouse, runTs)
     run(ctx, inputs(spark, source))
     ctx
   }
@@ -164,6 +166,6 @@ object EtlPipeline {
   /** Convenience: run against pre-staged JSON files in a directory. */
   def runFromDir(spark: SparkSession, inputDir: String,
                  warehouse: String, runTs: java.sql.Timestamp,
-                 txLog: Boolean = false): EtlContext =
+                 txLog: Boolean = true): EtlContext =
     runFromSource(spark, StagedDirSource(inputDir), warehouse, runTs, txLog)
 }

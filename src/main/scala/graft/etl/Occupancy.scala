@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * group list + event count → day-name CASE.
   *
   * The reference TRUNCATEs first and can be left empty on failure
-  * (logic.py:449,474-476); our rewrite is atomic (staging swap in
+  * (logic.py:449,474-476); our rewrite is atomic (one overwrite commit in
   * [[EtlContext.replace]]). The only shuffle in this plan is the final
   * group-by — the rooms join is a broadcast; at 100 TB, `schedule_events`
   * partitioned by entity_type also gives partition pruning on the filter.

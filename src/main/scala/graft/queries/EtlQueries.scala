@@ -52,7 +52,10 @@ object EtlQueries {
     s.conf.get(key)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  // E3 search vector input: subject ∥ subject_full ∥ entity_name ∥ rooms.
+  private def lexOf(parts: String) = TextQueries.sqlLexemesOf(parts)
+
+  val queries: Seq[Query] = Seq(
 
     // Manifest-stats data skipping (TxLogTable.snapshotRange): events land
     // as three ts-banded commits, so each data file's manifest line carries
@@ -61,7 +64,17 @@ object EtlQueries {
     // files were actually skipped, the oracle proves skipping lost no rows.
     // At 100 TB this is the time-range-over-hourly-appends pattern: the
     // query cost is the band's files, not the table scan.
-    "skip_range_scan" -> ((s, dir) => {
+    // `(mx - mn)` is positive, so DuckDB's floor-division `//` equals the
+    // Scala Long truncating division used to place the commit boundaries.
+    Query("skip_range_scan",
+      """WITH e AS (SELECT event_id, epoch_us(ts) AS ts_us, event_type, value
+                    FROM events),
+          mm AS (SELECT min(ts_us) AS mn, max(ts_us) AS mx FROM e),
+          b AS (SELECT mn + (mx - mn) // 3 AS b1,
+                       mn + 2 * ((mx - mn) // 3) AS b2 FROM mm)
+         SELECT event_id, ts_us, event_type, value
+         FROM e, b
+         WHERE ts_us >= b1 AND ts_us <= b2 - 1""")((s, dir) => {
       // microseconds, not nanos: DuckDB truncates TIMESTAMP(NANOS) to µs on
       // read, so the oracle can only see epoch_us — `ts div 1000` (floor;
       // ts is positive) makes both sides band on identical integers
@@ -92,7 +105,15 @@ object EtlQueries {
     // time-sorted layout could never prune. The require() proves files
     // were skipped via manifest stats; the oracle proves the rewrite +
     // pruned scan lost no rows.
-    "zorder_scan" -> ((s, dir) => {
+    Query("zorder_scan",
+      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
+                    FROM events),
+          mm AS (SELECT min(user_id) AS mn, max(user_id) AS mx FROM e),
+          b AS (SELECT mn + (mx - mn) // 4 AS lo,
+                       mn + (mx - mn) // 2 AS hi FROM mm)
+         SELECT event_id, user_id, ts_us, value
+         FROM e, b
+         WHERE user_id >= lo AND user_id <= hi""")((s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"),
           expr("ts div 1000").as("ts_us"), col("value"))
@@ -121,7 +142,8 @@ object EtlQueries {
     // pin the build's version, the refresh's exact added count and the
     // advanced pin; the returned top-5 search serves the union corpus
     // and hash-matches the train-on-original / serve-on-union oracle.
-    "sql_ann_lifecycle" -> ((s, dir) => {
+    Query("sql_ann_lifecycle",
+      graft.queries.SimQueries.ivfOracle(serveAppended = true))((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
         .createOrReplaceTempView("emb_ann_src")
@@ -171,7 +193,15 @@ object EtlQueries {
     // requires pin the action sequence (routed below the threshold,
     // retrained above, ledger reset after); the returned status row is
     // pure corpus arithmetic the oracle recomputes.
-    "sql_ann_status" -> ((s, dir) => {
+    // corpus arithmetic: 500-at-sf0.01 originals + 30 clones + a full
+    // second copy, minus the 10 deleted ids; ledger reset to 0 by the
+    // retrain and untouched by the masked delete, pin current
+    Query("sql_ann_status",
+      """SELECT CAST(2 * (SELECT count(*) FROM embeddings) + 20
+             AS BIGINT) AS total_vectors,
+           CAST(0 AS BIGINT) AS routed_since_train,
+           CAST(0.0 AS DOUBLE) AS routed_frac,
+           TRUE AS current""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
         .createOrReplaceTempView("emb_st_src")
@@ -228,7 +258,10 @@ object EtlQueries {
     // alternative to that metadata line is rewriting every file to
     // backfill a constant. Oracle recomputes the defaulted state
     // relationally.
-    "sql_column_defaults" -> ((s, dir) => {
+    Query("sql_column_defaults",
+      """SELECT r_regionkey, r_name, 'active' AS status,
+           'standard' AS tier
+         FROM region""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "region").createOrReplaceTempView("region_dflt_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.region_dflt")
@@ -255,7 +288,8 @@ object EtlQueries {
     // zorder-where, a foreign partition's file census is untouched, and
     // a range scan inside the clustered partition prunes on a curve
     // dimension. Oracle recomputes the returned rows relationally.
-    "sql_zorder_scoped" -> ((s, dir) => {
+    Query("sql_zorder_scoped",
+      """SELECT event_type, event_id, user_id, value FROM events""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("events_zw_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.events_zw")
@@ -296,7 +330,13 @@ object EtlQueries {
     // relationally. The require proves the merge stayed file-targeted
     // even while evolving — the ALTER is metadata-only, so it must not
     // degrade the rewrite into a full-table pass.
-    "merge_schema_evolution" -> ((s, dir) => {
+    Query("merge_schema_evolution",
+      """SELECT n_nationkey,
+           CASE WHEN n_nationkey >= 20 THEN 'E-' || n_name
+                ELSE n_name END AS n_name,
+           CASE WHEN n_nationkey >= 20 THEN 'evolved'
+                ELSE NULL END AS batch_tag
+         FROM nation""")((s, dir) => {
       val n = t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-mse")
       val tbl = graft.sources.TxLogTable(s, tmp.resolve("nation").toString)
@@ -327,7 +367,24 @@ object EtlQueries {
     // so both merges' delete-insert semantics are hash-checked. At 100 TB
     // this is the reference's signature keyed upsert at O(affected files)
     // instead of O(table) when keys don't align with partitions.
-    "merge_cow" -> ((s, dir) => {
+    Query("merge_cow",
+      """WITH base AS (SELECT c_custkey, c_name, c_nationkey, c_acctbal,
+                              c_mktsegment FROM customer),
+          mm AS (SELECT min(c_custkey) AS mn, max(c_custkey) AS mx FROM base),
+          b AS (SELECT mn + (mx - mn) // 3 AS lo,
+                       mn + (mx - mn) // 3 + (mx - mn) // 10 AS hi FROM mm)
+         SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
+         FROM base, b WHERE c_custkey < lo OR c_custkey > hi
+         UNION ALL
+         SELECT c_custkey, 'M-' || c_name AS c_name, c_nationkey,
+                c_acctbal + 1000 AS c_acctbal, 'MERGED' AS c_mktsegment
+         FROM base, b WHERE c_custkey >= lo AND c_custkey <= hi
+         UNION ALL
+         SELECT c_custkey + 600000 AS c_custkey,
+                'N-' || CAST(c_custkey AS VARCHAR) AS c_name,
+                CAST(7 AS INT) AS c_nationkey, 0.5 AS c_acctbal,
+                'FRESH' AS c_mktsegment
+         FROM base WHERE c_custkey % 11 = 0""")((s, dir) => {
       val c = t(s, dir, "customer").select(col("c_custkey"), col("c_name"),
         col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"))
       val mm = c.agg(min("c_custkey"), max("c_custkey")).head
@@ -374,7 +431,23 @@ object EtlQueries {
     // false-positive mass is ≪ 1 across every probe, so both requires are
     // deterministic in practice. The oracle recomputes the end state
     // relationally, hash-checking the delete-insert semantics.
-    "merge_cow_str" -> ((s, dir) => {
+    Query("merge_cow_str",
+      """WITH base AS (SELECT s_suppkey, s_name, s_nationkey, s_acctbal
+                       FROM supplier),
+          mm AS (SELECT min(s_suppkey) AS mn, max(s_suppkey) AS mx FROM base),
+          b AS (SELECT mn + (mx - mn) // 3 AS lo,
+                       mn + (mx - mn) // 3 + (mx - mn) // 10 AS hi FROM mm)
+         SELECT s_suppkey, s_name, s_nationkey, s_acctbal
+         FROM base, b WHERE s_suppkey < lo OR s_suppkey > hi
+         UNION ALL
+         SELECT s_suppkey, s_name, s_nationkey,
+                s_acctbal + 500 AS s_acctbal
+         FROM base, b WHERE s_suppkey >= lo AND s_suppkey <= hi
+         UNION ALL
+         SELECT s_suppkey + 90000 AS s_suppkey,
+                'FreshSupplier#' || CAST(s_suppkey AS VARCHAR) AS s_name,
+                CAST(3 AS INT) AS s_nationkey, 1.25 AS s_acctbal
+         FROM base WHERE s_suppkey % 9 = 0""")((s, dir) => {
       val sup = t(s, dir, "supplier").select(col("s_suppkey"), col("s_name"),
         col("s_nationkey"), col("s_acctbal"))
       val mm = sup.agg(min("s_suppkey"), max("s_suppkey")).head
@@ -414,7 +487,16 @@ object EtlQueries {
     // SQL NOT(...), so DELETE-where-TRUE semantics are hash-checked. At
     // 100 TB this is the retention/GDPR delete at O(straddling files)
     // instead of O(table).
-    "delete_cow" -> ((s, dir) => {
+    Query("delete_cow",
+      """WITH base AS (SELECT c_custkey, c_name, c_nationkey, c_acctbal,
+                              c_mktsegment FROM customer),
+          mm AS (SELECT min(c_custkey) AS mn, max(c_custkey) AS mx FROM base),
+          b AS (SELECT mn + (mx - mn) // 3 AS lo,
+                       mn + (mx - mn) // 3 + (mx - mn) // 10 AS hi FROM mm)
+         SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
+         FROM base, b
+         WHERE NOT (c_custkey >= lo AND c_custkey <= hi
+                    AND c_mktsegment <> 'BUILDING')""")((s, dir) => {
       val c = t(s, dir, "customer").select(col("c_custkey"), col("c_name"),
         col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"))
       val mm = c.agg(min("c_custkey"), max("c_custkey")).head
@@ -443,7 +525,14 @@ object EtlQueries {
     // shapes the round-4 extractor couldn't bound. The require proves the
     // manifest pruned files on the extracted hull; the oracle proves
     // pruning lost no rows.
-    "skip_in_scan" -> ((s, dir) => {
+    Query("skip_in_scan",
+      """WITH e AS (SELECT event_id, user_id, event_type, value FROM events),
+          mm AS (SELECT min(event_id) AS mn, max(event_id) AS mx FROM e),
+          b AS (SELECT mn + (mx - mn) // 3 AS b1 FROM mm)
+         SELECT event_id, user_id, event_type, value
+         FROM e, b
+         WHERE event_id IN (b1 + 1, b1 + 5, b1 + 9)
+            OR (event_id >= b1 + 20 AND event_id <= b1 + 40)""")((s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"))
@@ -475,7 +564,12 @@ object EtlQueries {
     // unclustered-table shape — the case range stats fundamentally cannot
     // serve — answered from the manifest without opening a single footer.
     // The oracle proves bloom pruning lost no rows.
-    "skip_bloom_scan" -> ((s, dir) => {
+    Query("skip_bloom_scan",
+      """WITH d AS (SELECT doc_id, lang, source, n_chars FROM documents),
+          mm AS (SELECT min(doc_id) AS mn FROM d)
+         SELECT doc_id, lang, source, n_chars
+         FROM d, mm
+         WHERE doc_id IN (mn + 7, mn + 123, mn + 311)""")((s, dir) => {
       val d = t(s, dir, "documents").select(col("doc_id"), col("lang"),
         col("source"), col("n_chars"))
       val mn = d.agg(min("doc_id")).head.getLong(0)
@@ -502,7 +596,13 @@ object EtlQueries {
     // survive (the second half of the oracle's union). At 100 TB this is
     // the write-cheap half of the delete tradeoff (COW delete_cow is the
     // read-cheap half); compaction materializes tombstones away.
-    "delete_mor" -> ((s, dir) => {
+    Query("delete_mor",
+      """WITH c AS (SELECT c_custkey, c_name, c_acctbal FROM customer)
+         SELECT c_custkey, c_name, c_acctbal FROM c WHERE c_custkey % 7 <> 0
+         UNION ALL
+         SELECT c_custkey, 'R-' || c_name AS c_name,
+                c_acctbal + 1 AS c_acctbal
+         FROM c WHERE c_custkey % 14 = 0""")((s, dir) => {
       val c = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-mor")
@@ -532,7 +632,9 @@ object EtlQueries {
     // skipping lost no rows. At 100 TB this is the reference's P2/P3
     // current-version IS NULL filter shape answered without touching the
     // closed-version bulk of the table.
-    "skip_null_scan" -> ((s, dir) => {
+    Query("skip_null_scan",
+      """SELECT event_id, user_id, value AS v
+         FROM events WHERE event_id % 3 <> 0""")((s, dir) => {
       val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
         when(col("event_id") % 3 =!= 0, col("value")).as("v"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-skip-null")
@@ -555,7 +657,9 @@ object EtlQueries {
     // manifests AND their unreferenced data files are actually gone; the
     // oracle proves the surviving snapshot is intact. At 100 TB vacuum is
     // what keeps time travel from meaning infinite storage.
-    "vacuum_scan" -> ((s, dir) => {
+    Query("vacuum_scan",
+      """SELECT event_id, user_id, value FROM events
+         WHERE event_id % 3 <> 2""")((s, dir) => {
       val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
         col("value"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-vac")
@@ -578,7 +682,15 @@ object EtlQueries {
     // per-column null counts, key extrema and a decimal-exact measure sum
     // in a single aggregate (one scan, map-side partials, 1-row result).
     // The profiling pass every ingest pipeline runs before publishing.
-    "analyze_profile" -> ((s, dir) =>
+    Query("analyze_profile",
+      """SELECT count(*) AS n_rows,
+           count(*) FILTER (user_id IS NULL) AS null_user_id,
+           count(*) FILTER (value IS NULL) AS null_value,
+           min(event_id) AS min_event_id,
+           max(event_id) AS max_event_id,
+           count(DISTINCT event_type) AS n_event_types,
+           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+         FROM events""")((s, dir) =>
       t(s, dir, "events").agg(
         count(lit(1)).as("n_rows"),
         count_if(col("user_id").isNull).as("null_user_id"),
@@ -595,7 +707,12 @@ object EtlQueries {
     // day's files from the manifest ALONE — no footer stats needed, the
     // partition dir name is the statistic. The require proves files were
     // skipped; the oracle proves pruning lost no rows.
-    "skip_partition_scan" -> ((s, dir) => {
+    Query("skip_partition_scan",
+      """WITH e AS (SELECT event_id, user_id, value,
+             epoch_us(ts) // 86400000000 AS p_day FROM events),
+          mm AS (SELECT min(p_day) AS lo FROM e)
+         SELECT event_id, user_id, value, p_day
+         FROM e, mm WHERE p_day = lo""")((s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"),
           expr("(ts div 1000) div 86400000000").as("p_day"))
@@ -617,7 +734,12 @@ object EtlQueries {
     // — parquet schema-on-read, no rewrite of history (at 100 TB an
     // add-column that rewrote the table would be a non-starter). The
     // oracle recomputes the unioned shape with explicit NULLs.
-    "schema_evolution" -> ((s, dir) => {
+    Query("schema_evolution",
+      """SELECT event_id, user_id, CAST(NULL AS VARCHAR) AS event_type
+         FROM events WHERE event_id % 2 = 0
+         UNION ALL
+         SELECT event_id, user_id, event_type
+         FROM events WHERE event_id % 2 <> 0""")((s, dir) => {
       val ev = t(s, dir, "events")
       val tmp = java.nio.file.Files.createTempDirectory("graft-evo")
       val tbl = graft.sources.TxLogTable(s, tmp.resolve("events").toString)
@@ -640,7 +762,17 @@ object EtlQueries {
     // slice to prove idempotence (row count unchanged). A batch violating
     // the predicate is refused (third require). The oracle recomputes
     // non-band ∪ recomputed-band relationally.
-    "replace_where" -> ((s, dir) => {
+    Query("replace_where",
+      """WITH base AS (SELECT c_custkey, c_name, c_acctbal FROM customer),
+          mm AS (SELECT min(c_custkey) AS mn, max(c_custkey) AS mx FROM base),
+          b AS (SELECT mn + (mx - mn) // 3 AS lo,
+                       mn + (mx - mn) // 3 + (mx - mn) // 10 AS hi FROM mm)
+         SELECT c_custkey, c_name, c_acctbal
+         FROM base, b WHERE c_custkey < lo OR c_custkey > hi
+         UNION ALL
+         SELECT c_custkey, 'R-' || c_name AS c_name,
+                c_acctbal * 2 AS c_acctbal
+         FROM base, b WHERE c_custkey >= lo AND c_custkey <= hi""")((s, dir) => {
       val c = t(s, dir, "customer").select(col("c_custkey"), col("c_name"),
         col("c_acctbal"))
       val mm = c.agg(min("c_custkey"), max("c_custkey")).head
@@ -681,7 +813,9 @@ object EtlQueries {
     // the require proves files were skipped, the oracle proves skipping
     // lost no rows. At 100 TB this is retention/tenant scans on
     // string-keyed layouts (url prefixes, tenant codes) at O(band files).
-    "skip_string_range" -> ((s, dir) => {
+    Query("skip_string_range",
+      """SELECT doc_id, lang, source, n_chars FROM documents
+         WHERE source >= 'src3' AND source <= 'src5'""")((s, dir) => {
       val d = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-skip-str")
@@ -701,7 +835,9 @@ object EtlQueries {
     // InternalRow→Row conversion node — the round-5 connector tax the DSv2
     // path exists to remove. The oracle recomputes the same select
     // relationally, hash-checking the whole create→insert→read cycle.
-    "sql_ddl_catalog" -> ((s, dir) => {
+    Query("sql_ddl_catalog",
+      """SELECT n_nationkey, n_name, n_regionkey FROM nation
+         WHERE n_nationkey >= 5""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "nation").createOrReplaceTempView("nation_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.nation_tx")
@@ -740,7 +876,10 @@ object EtlQueries {
     // then manifest pruning bounds the rewrite as for the API path. The
     // oracle recomputes the survivors with SQL NOT(...); the in-query
     // require proves the commit went through the delete op.
-    "sql_delete_from" -> ((s, dir) => {
+    Query("sql_delete_from",
+      """SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus
+         FROM orders
+         WHERE NOT (o_totalprice > 150000 AND o_orderstatus = 'F')""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "orders").createOrReplaceTempView("orders_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.orders_del")
@@ -764,7 +903,13 @@ object EtlQueries {
     // files as ONE atomic version. The in-query require proves the commit
     // went through the row-level op. Oracle recomputes the post-merge
     // state relationally.
-    "sql_merge_into" -> ((s, dir) => {
+    Query("sql_merge_into",
+      """SELECT c_custkey,
+           CASE WHEN c_custkey % 10 = 0 THEN 'M-' || c_name
+                ELSE c_name END AS c_name,
+           CASE WHEN c_custkey % 10 = 0 THEN c_acctbal + 1000
+                ELSE c_acctbal END AS c_acctbal
+         FROM customer""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "customer").createOrReplaceTempView("customer_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.cust_merge")
@@ -797,7 +942,14 @@ object EtlQueries {
     // WHY full-outer sync exists). Oracle recomputes the post-merge
     // state relationally: matched → refreshed, absent-from-source →
     // closed, arrivals → inserted.
-    "sql_merge_not_matched_by_source" -> ((s, dir) => {
+    Query("sql_merge_not_matched_by_source",
+      """SELECT s_suppkey, s_name,
+           CASE WHEN s_nationkey >= 6 AND s_nationkey < 18
+                THEN s_acctbal + 500 ELSE s_acctbal END AS s_acctbal,
+           CAST(CASE WHEN s_nationkey < 6 THEN 0 ELSE 1 END
+             AS INTEGER) AS live
+         FROM supplier
+         WHERE s_nationkey < 18""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "supplier").createOrReplaceTempView("supp_nmbs_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.supp_nmbs")
@@ -835,7 +987,8 @@ object EtlQueries {
     // hash-checks that right-sizing never changed a row. At 100 TB this
     // is what keeps a 200-task hourly ingest into a dated layout from
     // minting thousands of near-empty files per commit.
-    "sql_optimize_write" -> ((s, dir) => {
+    Query("sql_optimize_write",
+      """SELECT n_nationkey, n_name, n_regionkey FROM nation""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "nation").createOrReplaceTempView("nation_ow_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.nation_ow")
@@ -874,7 +1027,8 @@ object EtlQueries {
     // vacuum deleted the dead files; the returned SELECT hash-checks that
     // maintenance never changed a row. At 100 TB this lifecycle is what
     // keeps a hot table's file count (and thus planning time) bounded.
-    "sql_maintenance" -> ((s, dir) => {
+    Query("sql_maintenance",
+      """SELECT r_regionkey, r_name FROM region""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "region").createOrReplaceTempView("region_maint_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.region_mnt")
@@ -914,7 +1068,8 @@ object EtlQueries {
     // the bad-write history (time travel still sees it), and is
     // bit-equal to `VERSION AS OF` the target. Oracle replays the
     // pre-damage state relationally.
-    "sql_restore" -> ((s, dir) => {
+    Query("sql_restore",
+      """SELECT p_partkey, p_name, p_retailprice FROM part""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "part").createOrReplaceTempView("part_rst_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.part_rst")
@@ -957,7 +1112,8 @@ object EtlQueries {
     // the independence contract: a destructive DELETE on the SOURCE
     // after the clone leaves the clone's rows intact. Oracle replays
     // the clone (= the source's pre-delete state) relationally.
-    "sql_clone" -> ((s, dir) => {
+    Query("sql_clone",
+      """SELECT c_custkey, c_acctbal, c_nationkey FROM customer""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "customer").createOrReplaceTempView("cust_cl_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.cust_cl")
@@ -994,7 +1150,10 @@ object EtlQueries {
     // recomputes the per-partition counts relationally; n_files is
     // layout-dependent (shuffle width) so only the deterministic columns
     // leave the query.
-    "sql_partitions" -> ((s, dir) => {
+    Query("sql_partitions",
+      """SELECT 'n_regionkey=' || CAST(n_regionkey AS VARCHAR) AS part,
+           count(*) AS n_rows
+         FROM nation GROUP BY n_regionkey""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "nation").createOrReplaceTempView("nation_parts_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.nation_parts")
@@ -1025,7 +1184,14 @@ object EtlQueries {
     // the ON condition excludes were carried by reference (manifest
     // pruning on the partition key bounded the rewrite). Oracle
     // recomputes the post-merge state relationally.
-    "sql_merge_partitioned" -> ((s, dir) => {
+    Query("sql_merge_partitioned",
+      """SELECT s_suppkey,
+           CASE WHEN s_nationkey = 3 THEN 'M-' || s_name
+                ELSE s_name END AS s_name,
+           s_nationkey,
+           CASE WHEN s_nationkey = 3 THEN s_acctbal + 500
+                ELSE s_acctbal END AS bal
+         FROM supplier""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "supplier").createOrReplaceTempView("supplier_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.supp_part")
@@ -1063,7 +1229,12 @@ object EtlQueries {
     // requires prove the commit is a replace-where op and that the other
     // partitions' files were carried by manifest reference, untouched.
     // Oracle recomputes the post-overwrite state relationally.
-    "sql_overwrite_partition" -> ((s, dir) => {
+    Query("sql_overwrite_partition",
+      """SELECT n_nationkey,
+           CASE WHEN n_regionkey = 2 THEN 'R2-' || n_name
+                ELSE n_name END AS n_name,
+           n_regionkey
+         FROM nation""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "nation").createOrReplaceTempView("nation_sow_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.nation_sow")
@@ -1097,7 +1268,9 @@ object EtlQueries {
     // stats disable the rewrite (metaRowCount/metaMinMax return None) —
     // the second require proves a filtered count still scans. Oracle
     // recomputes all three aggregates relationally.
-    "sql_meta_count" -> ((s, dir) => {
+    Query("sql_meta_count",
+      """SELECT count(*) AS n_rows, min(o_orderkey) AS min_key,
+           max(o_orderkey) AS max_key FROM orders""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "orders").createOrReplaceTempView("ord_meta_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.ord_meta")
@@ -1133,7 +1306,16 @@ object EtlQueries {
     // touching a NON-partition column keeps the real scan (partial
     // translation would be unsound for counting). Oracle recomputes
     // every aggregate relationally.
-    "sql_meta_count_filtered" -> ((s, dir) => {
+    Query("sql_meta_count_filtered",
+      """SELECT (SELECT count(*) FROM customer WHERE c_nationkey = 3)
+           AS n_eq,
+           (SELECT min(c_custkey) FROM customer WHERE c_nationkey = 3)
+           AS mn_eq,
+           (SELECT max(c_custkey) FROM customer WHERE c_nationkey = 3)
+           AS mx_eq,
+           (SELECT count(*) FROM customer
+            WHERE c_nationkey IN (1, 2) AND c_nationkey IN (2, 7))
+           AS n_in""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "customer").createOrReplaceTempView("cust_metaf_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.cust_metaf")
@@ -1176,7 +1358,12 @@ object EtlQueries {
     // that: a SortMergeJoin over two TxLogSpjScans and not one Exchange
     // node in the whole executed plan. Oracle recomputes the join+agg
     // relationally.
-    "sql_spj_join" -> ((s, dir) => {
+    Query("sql_spj_join",
+      """SELECT c.c_nationkey AS nationkey, count(*) AS pairs,
+           CAST(SUM(CAST(c.c_acctbal + s.s_acctbal AS DECIMAL(18,2)))
+             AS DOUBLE) AS bal_sum
+         FROM customer c JOIN supplier s ON c.c_nationkey = s.s_nationkey
+         GROUP BY c.c_nationkey""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "customer").createOrReplaceTempView("cust_spj_src")
       t(s, dir, "supplier").createOrReplaceTempView("supp_spj_src")
@@ -1220,7 +1407,12 @@ object EtlQueries {
     // before/after). At 100 TB this is "read 3 days, not 3 years". The
     // dim side reads the driver's parquet (file-backed — an in-memory
     // dim constant-folds its filter away and DPP declines, correctly).
-    "sql_dpp_join" -> ((s, dir) => {
+    Query("sql_dpp_join",
+      """SELECT c.c_nationkey AS nationkey, count(*) AS n_cust,
+           CAST(SUM(CAST(c.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal
+         FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
+         WHERE n.n_regionkey = 2
+         GROUP BY c.c_nationkey""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "customer").createOrReplaceTempView("cust_dpp_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.cust_dpp")
@@ -1268,7 +1460,12 @@ object EtlQueries {
     // subquery planned AND the file set shrank at runtime. At 100 TB
     // this is the star join reading 5/16ths of a fact nobody thought to
     // partition by that key.
-    "sql_file_skip_join" -> ((s, dir) => {
+    Query("sql_file_skip_join",
+      """SELECT c.c_nationkey AS nationkey, count(*) AS n_cust,
+           CAST(SUM(CAST(c.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal
+         FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
+         WHERE n.n_regionkey = 2
+         GROUP BY c.c_nationkey""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "customer").createOrReplaceTempView("cust_dfp_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.cust_dfp")
@@ -1316,7 +1513,12 @@ object EtlQueries {
     // needed. The require proves a 7-of-30-day range reads only those
     // days' files. At 100 TB: time-clustered ingest with no
     // user-managed date column, and "read the week, not the month".
-    "sql_hidden_partitioning" -> ((s, dir) => {
+    Query("sql_hidden_partitioning",
+      """SELECT CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sv
+         FROM events
+         WHERE epoch_ns(ts) >= 1704412800000000000
+           AND epoch_ns(ts) < 1705017600000000000""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_hp_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.ev_hp")
@@ -1357,7 +1559,12 @@ object EtlQueries {
     // O(manifest), with only boundary-straddling files ever rewritten.
     // SQL DELETE routes through the same deleteWhere, so the fast path
     // needs no special API. Oracle recomputes the surviving aggregate.
-    "sql_retention_delete" -> ((s, dir) => {
+    Query("sql_retention_delete",
+      """SELECT CAST(count(*) AS BIGINT) AS n,
+           CAST(min(epoch_ns(ts) // 1000) AS BIGINT) AS first_us,
+           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sv
+         FROM events
+         WHERE epoch_ns(ts) >= 1704931200000000000""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_ret_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.ev_ret")
@@ -1398,7 +1605,9 @@ object EtlQueries {
     // (aggregating `files` reproduces `partitions`; `history` counts
     // the commits); the oracle re-derives the per-partition row counts
     // relationally from the source.
-    "sql_meta_tables" -> ((s, dir) => {
+    Query("sql_meta_tables",
+      """SELECT event_type, CAST(count(*) AS BIGINT) AS n
+         FROM events GROUP BY event_type""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_meta_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.ev_meta")
@@ -1434,7 +1643,9 @@ object EtlQueries {
     // keep=1 vacuum that must stop at the tag — and the returned frame
     // is the TAGGED snapshot read by name after the vacuum, which the
     // oracle recomputes as the first slice of the source.
-    "sql_tags" -> ((s, dir) => {
+    Query("sql_tags",
+      """SELECT event_id, user_id, value FROM events
+         WHERE event_id % 2 = 0""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_tag_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.ev_tag")
@@ -1470,7 +1681,13 @@ object EtlQueries {
     // the WAP outcome from the raw source. At 100 TB this is staging
     // without a second copy: the branch shares every data file with
     // main and the publish is one manifest PUT.
-    "sql_branches" -> ((s, dir) => {
+    Query("sql_branches",
+      """WITH wap AS (
+           SELECT event_id, user_id, value FROM events
+           WHERE event_id % 3 IN (0, 1))
+         SELECT user_id, CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sv
+         FROM wap WHERE value >= 10 GROUP BY user_id""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_br_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.ev_br")
@@ -1513,7 +1730,9 @@ object EtlQueries {
     // table). Time travel to a mid-chain version must answer exactly
     // (resolution folds the chain). Returned frame = final state;
     // oracle recomputes it from the raw source.
-    "sql_log_checkpoint" -> ((s, dir) => {
+    Query("sql_log_checkpoint",
+      """SELECT n_nationkey AS k, n_name AS name, n_regionkey AS rk
+         FROM nation WHERE n_regionkey <> 0""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "nation").createOrReplaceTempView("nat_ck_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.nat_ck")
@@ -1564,7 +1783,14 @@ object EtlQueries {
     // 100 TB this is the hourly-refresh pattern: the hour's files in,
     // the changed groups out, the other billion groups carried by
     // manifest reference.
-    "sql_mv_incremental" -> ((s, dir) => {
+    Query("sql_mv_incremental",
+      """WITH src AS (
+           SELECT user_id, value FROM events
+           WHERE (event_id % 4 IN (0, 1) AND value >= 5)
+              OR event_id % 4 = 2)
+         SELECT user_id, CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total
+         FROM src GROUP BY user_id""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_mv_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.mv_user")
@@ -1603,7 +1829,13 @@ object EtlQueries {
     // both matching and non-matching rows). CALL system.mv_status
     // reports the maintenance position; the oracle recomputes the
     // filtered rollup from the raw source.
-    "sql_mv_filtered" -> ((s, dir) => {
+    Query("sql_mv_filtered",
+      """WITH src AS (
+           SELECT user_id, value FROM events
+           WHERE value <= 400 AND event_type = 'click' AND value > 1)
+         SELECT user_id, CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total
+         FROM src GROUP BY user_id""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_mvf_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.mv_clicks")
@@ -1646,7 +1878,23 @@ object EtlQueries {
     // the O(changed rows) keyed upsert merge's copy-on-write cannot
     // give when keys hash-spread across every file. Oracle recomputes
     // the final state from the raw source.
-    "u9_upsert_pos" -> ((s, dir) => {
+    Query("u9_upsert_pos",
+      """WITH base AS (
+           SELECT c_custkey, c_name, c_acctbal FROM customer),
+         kept AS (
+           SELECT c_custkey, c_name, c_acctbal FROM base
+           WHERE c_custkey % 7 <> 0 AND c_custkey % 13 <> 0),
+         upd AS (
+           SELECT c_custkey, 'U9-' || c_name AS c_name,
+             c_acctbal + 10 AS c_acctbal
+           FROM base WHERE c_custkey % 7 = 0),
+         fresh AS (
+           SELECT c_custkey + 900000 AS c_custkey, 'F' AS c_name,
+             1.5 AS c_acctbal
+           FROM base WHERE c_custkey % 11 = 0)
+         SELECT * FROM kept
+         UNION ALL SELECT * FROM upd
+         UNION ALL SELECT * FROM fresh""")((s, dir) => {
       val c = t(s, dir, "customer").select(col("c_custkey"),
         col("c_name"), col("c_acctbal"))
       val k = col("c_custkey")
@@ -1682,7 +1930,15 @@ object EtlQueries {
     // from the snapshot, O(affected) write, never O(view) (all three
     // refreshes pin "incremental"). The oracle recomputes count, sum,
     // min and max per group from the raw source.
-    "sql_mv_minmax" -> ((s, dir) => {
+    Query("sql_mv_minmax",
+      """WITH src AS (
+           SELECT user_id, value FROM events
+           WHERE (event_id % 3 IN (0, 1) AND value <= 450)
+              OR event_id % 3 = 2)
+         SELECT user_id, CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total,
+           min(value) AS lo, max(value) AS hi
+         FROM src GROUP BY user_id""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_mm_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.mv_mm")
@@ -1726,7 +1982,24 @@ object EtlQueries {
     // integer math (md5 → bucket/rank), so sketch-fold ≡ recompute is
     // hash-checked bit-for-bit; the float estimate (CALL
     // system.mv_distinct) stays off the hashed path by design.
-    "sql_mv_distinct" -> ((s, dir) => {
+    Query("sql_mv_distinct",
+      """WITH src AS (
+           SELECT user_id % 8 AS grp, event_id AS val FROM events
+           WHERE (event_id % 3 IN (0, 1) AND event_id % 7 <> 0)
+              OR event_id % 3 = 2),
+         h AS (
+           SELECT grp, md5(CAST(val AS VARCHAR)) AS h FROM src
+           WHERE val IS NOT NULL),
+         b AS (
+           SELECT grp, CAST('0x' || substring(h, 1, 2) AS BIGINT)
+               AS bucket,
+             CAST('0x' || substring(h, 3, 15) AS BIGINT) AS v
+           FROM h)
+         SELECT grp, bucket,
+           MAX(CASE WHEN v = 0 THEN CAST(61 AS BIGINT)
+                    ELSE 61 - length(bin(v)) END) AS r,
+           CAST(count(*) AS BIGINT) AS n
+         FROM b GROUP BY grp, bucket""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_dst_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.mv_dst")
@@ -1774,7 +2047,13 @@ object EtlQueries {
     // histogram is an exact integer function of the multiset — the
     // oracle recomputes it directly and the hash check is exact; only
     // the quantile read (CALL system.mv_quantile) is ±1 power of 2.
-    "sql_mv_hist" -> ((s, dir) => {
+    Query("sql_mv_hist",
+      """SELECT user_id % 8 AS grp,
+           length(bin(CAST(floor(value) AS BIGINT))) AS vb,
+           CAST(count(*) AS BIGINT) AS n
+         FROM events
+         WHERE value IS NOT NULL AND value >= 0 AND value <= 300
+         GROUP BY 1, 2""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_h_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.mv_h")
@@ -1813,7 +2092,14 @@ object EtlQueries {
     // s2/n - (s/n)^2 is a read-time expression. Incremental under
     // appends AND deletes (sums are fully additive). The oracle
     // recomputes both moments with the same decimal casts.
-    "sql_mv_variance" -> ((s, dir) => {
+    Query("sql_mv_variance",
+      """WITH src AS (
+           SELECT user_id % 8 AS grp, value AS val FROM events
+           WHERE value <= 250)
+         SELECT grp, CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(val AS DECIMAL(38,6))) AS DOUBLE) AS s,
+           CAST(SUM(CAST(val * val AS DECIMAL(38,6))) AS DOUBLE) AS s2
+         FROM src GROUP BY grp""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_v_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.mv_var")
@@ -1847,7 +2133,12 @@ object EtlQueries {
     // pinned "incremental", including the two absorbing a DELETE. The
     // oracle recomputes COUNT(DISTINCT) from the raw source; the hash
     // check is exact.
-    "sql_mv_distinct_exact" -> ((s, dir) => {
+    Query("sql_mv_distinct_exact",
+      """WITH src AS (
+           SELECT user_id % 8 AS grp, user_id % 100 AS u FROM events
+           WHERE (user_id % 100) % 5 <> 0)
+         SELECT grp, CAST(COUNT(DISTINCT u) AS BIGINT) AS uniques
+         FROM src GROUP BY grp""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_de_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.mv_de")
@@ -1883,7 +2174,11 @@ object EtlQueries {
     // change feed and both refreshes fold incrementally — including
     // the one absorbing a DELETE. Oracle recomputes the rollup with
     // the same day arithmetic from the raw source.
-    "sql_mv_rollup" -> ((s, dir) => {
+    Query("sql_mv_rollup",
+      """SELECT epoch_ns(ts) // 86400000000000 AS day,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total
+         FROM events WHERE value >= 2 GROUP BY 1""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_r_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.mv_day")
@@ -1916,7 +2211,10 @@ object EtlQueries {
     // version — so the post-publish refresh is pinned "noop" and
     // ordinary maintenance continues seamlessly. The oracle recomputes
     // the final rollup (base + audited batch) from the raw source.
-    "sql_mv_wap" -> ((s, dir) => {
+    Query("sql_mv_wap",
+      """SELECT user_id, CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total
+         FROM events GROUP BY user_id""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_w_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.mv_w")
@@ -1966,7 +2264,20 @@ object EtlQueries {
     // with the updated dim from the raw source — the slowly-changing-
     // dimension cadence a production star rollup actually has,
     // hash-checked end-to-end.
-    "sql_mv_joined" -> ((s, dir) => {
+    Query("sql_mv_joined",
+      """WITH f AS (
+           SELECT user_id, value FROM events
+           WHERE (event_id % 3 IN (0, 1) AND value >= 5)
+              OR event_id % 3 = 2),
+         d AS (
+           SELECT DISTINCT user_id AS uid,
+             CASE WHEN user_id % 5 = 0 THEN 99 ELSE user_id % 5 END
+               AS segment
+           FROM events)
+         SELECT d.segment, CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(f.value AS DECIMAL(38,6))) AS DOUBLE) AS total
+         FROM f JOIN d ON f.user_id = d.uid
+         GROUP BY d.segment""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_mvj_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.mv_seg")
@@ -2015,7 +2326,26 @@ object EtlQueries {
     // delta), never recomputing the view. The oracle replays the whole
     // program's net dim state against the raw source and hash-checks
     // the final rollup.
-    "sql_mv_joined_dimfold" -> ((s, dir) => {
+    // the net dim state after the program's four DML steps, replayed in
+    // application order: %13=4 update last, the %7=0 rows inserted at 77,
+    // the %5=2 migration to 102, the %11=3 rows (non-%7=0) deleted
+    Query("sql_mv_joined_dimfold",
+      """WITH du AS (SELECT DISTINCT user_id AS uid FROM events),
+         d AS (
+           SELECT uid,
+             (CASE WHEN uid % 13 = 4 THEN 55
+                  WHEN uid % 7 = 0 THEN 77
+                  WHEN uid % 5 = 2 THEN 102
+                  ELSE uid % 5 END) +
+             (CASE WHEN uid % 17 = 6 THEN 200 ELSE 0 END) AS segment
+           FROM du
+           WHERE uid % 7 = 0 OR uid % 11 <> 3),
+         f AS (
+           SELECT user_id, value FROM events WHERE event_id % 3 IN (0, 1))
+         SELECT d.segment, CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(f.value AS DECIMAL(38,6))) AS DOUBLE) AS total
+         FROM f JOIN d ON f.user_id = d.uid
+         GROUP BY d.segment""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_dimf_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.mv_dimf")
@@ -2080,7 +2410,28 @@ object EtlQueries {
     // window, never O(view), where r18 still paid a full recompute.
     // The oracle replays the dim program's net state and recomputes
     // count/sum/min/max from the raw source.
-    "sql_mv_minmax_dimfold" -> ((s, dir) => {
+    // same dim program as joined_dimfold MINUS its over-cap %17 window;
+    // fact is %3 in (0,1) minus the value<3 deletes (NULL values
+    // survive a < predicate)
+    Query("sql_mv_minmax_dimfold",
+      """WITH du AS (SELECT DISTINCT user_id AS uid FROM events),
+         d AS (
+           SELECT uid,
+             CASE WHEN uid % 13 = 4 THEN 55
+                  WHEN uid % 7 = 0 THEN 77
+                  WHEN uid % 5 = 2 THEN 102
+                  ELSE uid % 5 END AS segment
+           FROM du
+           WHERE uid % 7 = 0 OR uid % 11 <> 3),
+         f AS (
+           SELECT user_id, value FROM events
+           WHERE event_id % 3 IN (0, 1)
+             AND (value >= 3 OR value IS NULL))
+         SELECT d.segment, CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(f.value AS DECIMAL(38,6))) AS DOUBLE) AS total,
+           min(f.value) AS lo, max(f.value) AS hi
+         FROM f JOIN d ON f.user_id = d.uid
+         GROUP BY d.segment""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_mmd_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.mv_mmd")
@@ -2141,7 +2492,28 @@ object EtlQueries {
     // chain, no second stored view, one refresh hop. The oracle
     // recomputes the 2-dim join from the raw source with both dims'
     // net states.
-    "sql_mv_star_2dim" -> ((s, dir) => {
+    // both dims' NET states: users %5=2 → 102 then %11=3 deleted;
+    // 'click' → 'hot', 'view' → 'cold', the rest at their initial
+    // '<type>_c' class; the fact is all three append windows
+    Query("sql_mv_star_2dim",
+      """WITH du AS (
+           SELECT uid,
+             CASE WHEN uid % 5 = 2 THEN 102 ELSE uid % 5 END AS seg
+           FROM (SELECT DISTINCT user_id AS uid FROM events)
+           WHERE uid % 11 <> 3),
+         dt AS (
+           SELECT tkey,
+             CASE WHEN tkey = 'click' THEN 'hot'
+                  WHEN tkey = 'view' THEN 'cold'
+                  ELSE tkey || '_c' END AS tclass
+           FROM (SELECT DISTINCT event_type AS tkey FROM events)),
+         f AS (SELECT user_id, event_type, value FROM events)
+         SELECT du.seg, dt.tclass, CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(f.value AS DECIMAL(38,6))) AS DOUBLE) AS total
+         FROM f
+         JOIN du ON f.user_id = du.uid
+         JOIN dt ON f.event_type = dt.tkey
+         GROUP BY du.seg, dt.tclass""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_s2_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.mv_s2")
@@ -2206,7 +2578,22 @@ object EtlQueries {
     // dependency order (base delta → L1 → L2 → L3, each O(changed
     // groups)); the oracle recomputes the 3-level cascade from the raw
     // source and hash-checks the top.
-    "sql_mv_chain" -> ((s, dir) => {
+    // the 3-level cascade over the surviving base rows (event_id%4 in
+    // 0..2 inserted, value<3 deleted; NULL value survives a < delete)
+    Query("sql_mv_chain",
+      """WITH base AS (
+           SELECT user_id, value FROM events
+           WHERE event_id % 4 IN (0, 1, 2)
+             AND (value >= 3 OR value IS NULL)),
+         l1 AS (
+           SELECT user_id, SUM(CAST(value AS DECIMAL(38,6))) AS t1
+           FROM base GROUP BY user_id),
+         l2 AS (
+           SELECT user_id % 10 AS g2, SUM(t1) AS t2
+           FROM l1 GROUP BY 1)
+         SELECT g2 % 3 AS g3, CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(t2) AS DOUBLE) AS t3
+         FROM l2 GROUP BY 1""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_chain_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.mvc3")
@@ -2258,7 +2645,23 @@ object EtlQueries {
     // O(view). One refresh_all sweep orders base→dim-view→star. The
     // oracle recomputes the cascade (profile rollup, re-segmentation,
     // star join) from the raw source.
-    "sql_mv_star_mvdim" -> ((s, dir) => {
+    // the star-over-chain cascade: per-user profile over the surviving
+    // base rows, activity segment = bit length of the user's count,
+    // star rollup joins each base row to its user's segment
+    Query("sql_mv_star_mvdim",
+      """WITH base AS (
+           SELECT user_id, value FROM events
+           WHERE event_id % 3 IN (0, 1)
+             AND (value >= 4 OR value IS NULL)),
+         prof AS (
+           SELECT user_id AS uid, CAST(count(*) AS BIGINT) AS n
+           FROM base GROUP BY 1),
+         seg AS (
+           SELECT uid, CAST(length(bin(n)) AS BIGINT) AS seg FROM prof)
+         SELECT s.seg, CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(b.value AS DECIMAL(38,6))) AS DOUBLE) AS total
+         FROM base b JOIN seg s ON b.user_id = s.uid
+         GROUP BY s.seg""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_smd_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.star_smd")
@@ -2310,7 +2713,17 @@ object EtlQueries {
     // included — while main stays frozen, and ONE publish promotes all
     // three with seamless bookkeeping (post-publish refresh noops).
     // The oracle recomputes the published star from the raw source.
-    "sql_mv_wap_joined" -> ((s, dir) => {
+    // the published star: all events, dim with %4=1 re-segmented to 77
+    Query("sql_mv_wap_joined",
+      """WITH d AS (
+           SELECT DISTINCT user_id AS uid,
+             CASE WHEN user_id % 4 = 1 THEN 77 ELSE user_id % 4 END
+               AS segment
+           FROM events)
+         SELECT d.segment, CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(e.value AS DECIMAL(38,6))) AS DOUBLE) AS total
+         FROM events e JOIN d ON e.user_id = d.uid
+         GROUP BY d.segment""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_wj_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.mv_wj")
@@ -2359,7 +2772,34 @@ object EtlQueries {
     // so the whole snowflake absorbs base DML + churn on BOTH
     // dimensions in ONE refresh_all sweep, every level incremental.
     // The oracle replays the full cascade with the final dim states.
-    "sql_mv_snowflake" -> ((s, dir) => {
+    // the snowflake cascade with the FINAL dim states: users %5=2
+    // re-segmented to 99, 'click' re-classed to 'hot'; base rows are
+    // event_id%3 in (0,1) minus value<2 deletes
+    Query("sql_mv_snowflake",
+      """WITH base AS (
+           SELECT user_id, event_type, value FROM events
+           WHERE event_id % 3 IN (0, 1)
+             AND (value >= 2 OR value IS NULL)),
+         du AS (
+           SELECT DISTINCT user_id AS uid,
+             CASE WHEN user_id % 5 = 2 THEN 99 ELSE user_id % 5 END
+               AS useg
+           FROM events),
+         dt AS (
+           SELECT DISTINCT event_type AS tkey,
+             CASE WHEN event_type = 'click' THEN 'hot'
+                  WHEN event_type = 'view' THEN 'engage'
+                  ELSE 'convert' END AS tclass
+           FROM events),
+         star1 AS (
+           SELECT du.useg, b.event_type,
+             SUM(CAST(b.value AS DECIMAL(38,6))) AS total
+           FROM base b JOIN du ON b.user_id = du.uid
+           GROUP BY du.useg, b.event_type)
+         SELECT s.useg, dt.tclass, CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(s.total) AS DOUBLE) AS total
+         FROM star1 s JOIN dt ON s.event_type = dt.tkey
+         GROUP BY s.useg, dt.tclass""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_sfk_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.star2_sfk")
@@ -2418,7 +2858,14 @@ object EtlQueries {
     // refresh. Groups the drop empties leave the view (their count
     // reaches zero → masked with no replacement); the oracle recomputes
     // the final state from the raw source.
-    "mv_mor_groups" -> ((s, dir) => {
+    Query("mv_mor_groups",
+      """WITH src AS (
+           SELECT user_id, value FROM events
+           WHERE (event_id % 3 IN (0, 1) AND user_id % 10 <> 3)
+              OR event_id % 3 = 2)
+         SELECT user_id, CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total
+         FROM src GROUP BY user_id""")((s, dir) => {
       val ev = t(s, dir, "events").select(col("user_id"),
         col("event_id"), col("value"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-mv-mor")
@@ -2452,7 +2899,8 @@ object EtlQueries {
     // the sweep and the table content is untouched. Dry run counts
     // without deleting; the age floor is 0 only because the "crash" is
     // simulated in-query (production keeps the 15-min writer guard).
-    "sql_remove_orphans" -> ((s, dir) => {
+    Query("sql_remove_orphans",
+      """SELECT n_nationkey AS k, n_name AS name FROM nation""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "nation").createOrReplaceTempView("nat_orph_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.nat_orph")
@@ -2496,7 +2944,13 @@ object EtlQueries {
     // (litLong renders the Instant in the same micros domain). The
     // require pins the manifest-omission shape; the INT96 no-stats
     // fallback is spec'd (TxLogTableSpec). Oracle recomputes survivors.
-    "sql_retention_delete_ts" -> ((s, dir) => {
+    Query("sql_retention_delete_ts",
+      """SELECT CAST(count(*) AS BIGINT) AS n,
+           CAST(min(epoch_ns(ts) // 1000) AS BIGINT) AS first_us,
+           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sv
+         FROM events
+         WHERE epoch_ns(ts) >= 1704931200000000000
+           AND epoch_ns(ts) < 1706745600000000000""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_rts_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.ev_rts")
@@ -2547,7 +3001,12 @@ object EtlQueries {
     // the layout boundary. At 100 TB this is granularity migration
     // without the O(table) rewrite Iceberg's spec evolution exists to
     // avoid.
-    "sql_partition_evolution" -> ((s, dir) => {
+    Query("sql_partition_evolution",
+      """SELECT CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sv
+         FROM events
+         WHERE epoch_ns(ts) >= 1704672000000000000
+           AND epoch_ns(ts) < 1705190400000000000""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "events").createOrReplaceTempView("ev_evo_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.ev_evo")
@@ -2607,7 +3066,13 @@ object EtlQueries {
     // point DELETE on non-key columns costs positions, not the COW
     // rewrite of every file the predicate touches. Oracle recomputes the
     // survivors relationally.
-    "delete_dv" -> ((s, dir) => {
+    Query("delete_dv",
+      """SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+             AS sum_price
+         FROM orders
+         WHERE NOT (o_totalprice > 150000 AND o_orderstatus = 'F')
+         GROUP BY o_orderstatus""")((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-dvdel")
         .resolve("t").toString
       val tbl = graft.sources.TxLogTable(s, root)
@@ -2640,7 +3105,18 @@ object EtlQueries {
     // pre-update data file is still referenced (only NEW files joined
     // the manifest). The catalog SELECT reads through the mask. Oracle
     // replays update-then-delete relationally.
-    "sql_update_dv" -> ((s, dir) => {
+    Query("sql_update_dv",
+      """WITH upd AS (
+           SELECT c_custkey,
+             CASE WHEN c_mktsegment = 'BUILDING' AND c_acctbal < 0
+                  THEN concat('N-', c_name) ELSE c_name END AS c_name,
+             CASE WHEN c_mktsegment = 'BUILDING' AND c_acctbal < 0
+                  THEN c_acctbal + 1000 ELSE c_acctbal END AS c_acctbal,
+             c_mktsegment
+           FROM customer)
+         SELECT c_custkey, c_name, c_acctbal, c_mktsegment
+         FROM upd
+         WHERE NOT (c_acctbal > 9000 AND c_mktsegment = 'MACHINERY')""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "customer").createOrReplaceTempView("cust_dv_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.cust_dv")
@@ -2682,7 +3158,12 @@ object EtlQueries {
     // layout, the key-grouped scans, and the empty-Exchange plan; the
     // oracle replays the join + aggregation relationally (the bucket id
     // never surfaces — it's derivable but invisible).
-    "sql_bucket_join" -> ((s, dir) => {
+    Query("sql_bucket_join",
+      """SELECT c.c_custkey AS custkey, count(*) AS n_ord,
+           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+             AS spend
+         FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
+         GROUP BY c.c_custkey""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "customer").createOrReplaceTempView("cust_bkt_src")
       t(s, dir, "orders").createOrReplaceTempView("ord_bkt_src")
@@ -2733,7 +3214,12 @@ object EtlQueries {
     // conservatively gated (multi-file buckets report nothing — a
     // concatenation of sorted files is not sorted), so compaction is
     // what arms it. Oracle replays the join relationally.
-    "sql_sorted_join" -> ((s, dir) => {
+    Query("sql_sorted_join",
+      """SELECT c.c_custkey AS custkey, count(*) AS n_ord,
+           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+             AS spend
+         FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
+         GROUP BY c.c_custkey""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "customer").createOrReplaceTempView("cust_srt_src")
       t(s, dir, "orders").createOrReplaceTempView("ord_srt_src")
@@ -2790,7 +3276,12 @@ object EtlQueries {
     // longer requires rewriting each bucket into one monster unsplit
     // file. The requires additionally pin that the buckets really are
     // multi-file (a compact would trivialize the claim).
-    "sql_sorted_multifile" -> ((s, dir) => {
+    Query("sql_sorted_multifile",
+      """SELECT c.c_custkey AS custkey, count(*) AS n_ord,
+           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+             AS spend
+         FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
+         GROUP BY c.c_custkey""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "customer").createOrReplaceTempView("cust_smf_src")
       t(s, dir, "orders").createOrReplaceTempView("ord_smf_src")
@@ -2858,7 +3349,12 @@ object EtlQueries {
     // multi-file), and the join drops its Sorts again. The requires pin
     // the full arc: armed -> de-armed by the backfill -> re-armed by
     // resort with zero Sort and zero Exchange. Oracle replays the join.
-    "sql_resort" -> ((s, dir) => {
+    Query("sql_resort",
+      """SELECT c.c_custkey AS custkey, count(*) AS n_ord,
+           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+             AS spend
+         FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
+         GROUP BY c.c_custkey""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "customer").createOrReplaceTempView("cust_rs_src")
       t(s, dir, "orders").createOrReplaceTempView("ord_rs_src")
@@ -2917,7 +3413,12 @@ object EtlQueries {
     // the layout and computes, moving and sorting nothing. Running sums
     // fold in DECIMAL in ascending-key order on both engines, so the
     // hash matches exactly.
-    "sql_sorted_window" -> ((s, dir) => {
+    Query("sql_sorted_window",
+      """SELECT o_orderstatus, o_orderkey,
+           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
+             PARTITION BY o_orderstatus ORDER BY o_orderkey)
+             AS DOUBLE) AS running
+         FROM orders""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "orders").createOrReplaceTempView("ord_sw_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.ord_sw")
@@ -2960,7 +3461,13 @@ object EtlQueries {
     // table and not. The require pins the flip (threshold is set
     // BETWEEN the full and filtered estimates, so only the stats can
     // make the difference); the oracle replays the join relationally.
-    "sql_ndv_broadcast" -> ((s, dir) => {
+    Query("sql_ndv_broadcast",
+      """SELECT c.c_custkey AS custkey, count(*) AS n_ord,
+           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+             AS spend
+         FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
+         WHERE c.c_mktsegment = 'BUILDING'
+         GROUP BY c.c_custkey""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "customer").createOrReplaceTempView("cust_ndv_src")
       t(s, dir, "orders").createOrReplaceTempView("ord_ndv_src")
@@ -3005,7 +3512,14 @@ object EtlQueries {
     // materialized to a fresh catalog table the SQL-only consumer can
     // read. The oracle reconstructs the feed relationally: the odd
     // half inserted at v2, the multiples of 10 deleted at v1.
-    "sql_changes" -> ((s, dir) => {
+    Query("sql_changes",
+      """SELECT event_id, user_id, value,
+           CAST(3 AS BIGINT) AS commit_v, 'insert' AS change_type
+         FROM events WHERE event_id % 2 = 1
+         UNION ALL
+         SELECT event_id, CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE),
+           CAST(2 AS BIGINT), 'delete'
+         FROM events WHERE event_id % 10 = 0""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "events").select(col("event_id"), col("user_id"),
         col("value")).createOrReplaceTempView("ev_chg_src")
@@ -3056,7 +3570,13 @@ object EtlQueries {
     // and the same CBO broadcast flip as sql_ndv_broadcast fires from
     // the analyzed stats. The operator's path into stats for the
     // 100 TB table that already exists.
-    "sql_analyze" -> ((s, dir) => {
+    Query("sql_analyze",
+      """SELECT c.c_custkey AS custkey, count(*) AS n_ord,
+           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+             AS spend
+         FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
+         WHERE c.c_mktsegment = 'BUILDING'
+         GROUP BY c.c_custkey""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "customer").createOrReplaceTempView("cust_anl_src")
       t(s, dir, "orders").createOrReplaceTempView("ord_anl_src")
@@ -3109,7 +3629,12 @@ object EtlQueries {
     // zero Exchanges, and a post-bump append derives ids under the new
     // spec. The oracle replays the (unchanged) join relationally — the
     // layout evolved, the rows didn't, which is the whole contract.
-    "sql_rebucket" -> ((s, dir) => {
+    Query("sql_rebucket",
+      """SELECT c.c_custkey AS custkey, count(*) AS n_ord,
+           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+             AS spend
+         FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
+         GROUP BY c.c_custkey""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "customer").createOrReplaceTempView("cust_rbk_src")
       t(s, dir, "orders").createOrReplaceTempView("ord_rbk_src")
@@ -3173,7 +3698,14 @@ object EtlQueries {
     // and the plan carries zero Exchanges — the zero-shuffle join at any
     // composite-key cardinality. Oracle replays the 1:1 tuple join
     // relationally.
-    "sql_bucket_grid" -> ((s, dir) => {
+    Query("sql_bucket_grid",
+      """SELECT a.l_orderkey AS okey, a.l_linenumber AS line,
+           CAST(SUM(CAST(a.l_quantity * b.l_extendedprice
+             AS DECIMAL(28,4))) AS DOUBLE) AS qp
+         FROM lineitem a JOIN lineitem b
+           ON a.l_orderkey = b.l_orderkey
+          AND a.l_linenumber = b.l_linenumber
+         GROUP BY a.l_orderkey, a.l_linenumber""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "lineitem").createOrReplaceTempView("li_grid_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.li_grid_a")
@@ -3222,7 +3754,14 @@ object EtlQueries {
     // pin exactly that: version delta == 1 per table, both #bucketSpec
     // lines bumped together, the tuple join zero-Exchange before AND
     // after. Oracle replays the (layout-independent) join relationally.
-    "sql_rebucket_grid" -> ((s, dir) => {
+    Query("sql_rebucket_grid",
+      """SELECT a.l_orderkey AS okey, a.l_linenumber AS line,
+           CAST(SUM(CAST(a.l_quantity * b.l_quantity
+             AS DECIMAL(28,4))) AS DOUBLE) AS qq
+         FROM lineitem a JOIN lineitem b
+           ON a.l_orderkey = b.l_orderkey
+          AND a.l_linenumber = b.l_linenumber
+         GROUP BY a.l_orderkey, a.l_linenumber""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "lineitem").createOrReplaceTempView("li_rgrid_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.li_rgrid_a")
@@ -3280,7 +3819,14 @@ object EtlQueries {
     // reference. The in-query require proves the commit went through the
     // row-level UPDATE op. Oracle recomputes the post-update state with a
     // CASE over the same predicate.
-    "sql_update" -> ((s, dir) => {
+    Query("sql_update",
+      """SELECT p_partkey,
+           CASE WHEN p_size >= 30 THEN 'U-' || p_name ELSE p_name END
+             AS p_name,
+           p_size,
+           CASE WHEN p_size >= 30 THEN p_retailprice + 100
+                ELSE p_retailprice END AS p_retailprice
+         FROM part""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "part").createOrReplaceTempView("part_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.part_upd")
@@ -3305,7 +3851,11 @@ object EtlQueries {
     // or ride the rewrite, and the commit carries the tombstone lines so
     // files the rewrite never touched stay masked (asserted in-query).
     // The oracle replays delete + update relationally.
-    "sql_update_mor" -> ((s, dir) => {
+    Query("sql_update_mor",
+      """SELECT c_custkey, c_acctbal,
+           CASE WHEN c_acctbal < 0 THEN 'NEG' ELSE c_mktsegment END
+             AS c_mktsegment
+         FROM customer WHERE c_custkey % 7 <> 0""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "customer").createOrReplaceTempView("cust_mor_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.cust_mor")
@@ -3333,7 +3883,8 @@ object EtlQueries {
     // middle version — the append-only prefix — while the current
     // snapshot holds only the overwrite's row (both asserted in-query).
     // The oracle recomputes the v2 prefix relationally.
-    "sql_time_travel" -> ((s, dir) => {
+    Query("sql_time_travel",
+      """SELECT r_regionkey, r_name FROM region""")((s, dir) => {
       ensureCatalog(s)
       t(s, dir, "region").createOrReplaceTempView("region_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.region_tt")
@@ -3359,7 +3910,8 @@ object EtlQueries {
     // schema change every real table hits, and the difference between a
     // manifest write and rewriting the table. Oracle recomputes the union
     // relationally under the new name.
-    "schema_evolution_rename" -> ((s, dir) => {
+    Query("schema_evolution_rename",
+      """SELECT c_custkey, c_name AS cust_name, c_acctbal FROM customer""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "customer").createOrReplaceTempView("customer_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.cust_ren")
@@ -3390,7 +3942,16 @@ object EtlQueries {
     // one invariant: physical names are never rebound (addColumn refuses
     // a physical name still present in old files), so the LATEST colmap
     // translates every version's files.
-    "cdc_schema_evolution" -> ((s, dir) => {
+    Query("cdc_schema_evolution",
+      """SELECT c_custkey, c_name AS cust_name,
+           CAST(NULL AS VARCHAR) AS segment, CAST(1 AS BIGINT) AS commit_v
+         FROM customer WHERE c_custkey % 3 = 0
+         UNION ALL
+         SELECT c_custkey, c_name, CAST(NULL AS VARCHAR), CAST(3 AS BIGINT)
+         FROM customer WHERE c_custkey % 3 = 1
+         UNION ALL
+         SELECT c_custkey, c_name, c_mktsegment, CAST(5 AS BIGINT)
+         FROM customer WHERE c_custkey % 3 = 2""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "customer").createOrReplaceTempView("cust_cdc_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.cust_cdc")
@@ -3427,7 +3988,10 @@ object EtlQueries {
     // whole rewritten file as phantom inserts). O(touched files) per
     // version — at 100 TB the feed reads the delete's blast radius,
     // never the table.
-    "cdc_cow_delete" -> ((s, dir) => {
+    Query("cdc_cow_delete",
+      """SELECT event_id, user_id, value,
+           CAST(1 AS BIGINT) AS commit_v, 'delete' AS change_type
+         FROM events WHERE event_id % 7 = 0""")((s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-cowdel")
@@ -3448,7 +4012,12 @@ object EtlQueries {
     // lands; the same batch without the option dies loudly before any
     // row is written. At 100 TB, drift handled at the manifest beats a
     // stalled pipeline or a silently mismatched file.
-    "schema_drift" -> ((s, dir) => {
+    Query("schema_drift",
+      """SELECT event_id, user_id, CAST(NULL AS DOUBLE) AS value
+         FROM events WHERE event_id % 2 = 0
+         UNION ALL
+         SELECT event_id, user_id, value
+         FROM events WHERE event_id % 2 = 1""")((s, dir) => {
       val ev = t(s, dir, "events")
       val tmp = java.nio.file.Files.createTempDirectory("graft-drift")
       val root = tmp.resolve("t").toString
@@ -3477,7 +4046,14 @@ object EtlQueries {
     // readers, so pre-widen files keep their narrow physical type and
     // promote at read — at 100 TB the alternative is rewriting the
     // table to change a column type. The require proves no file moved.
-    "schema_widen" -> ((s, dir) => {
+    Query("schema_widen",
+      """SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS c_nationkey,
+           CAST(CAST(c_acctbal AS REAL) AS DOUBLE) AS c_acctbal
+         FROM customer WHERE c_custkey % 2 = 0
+         UNION ALL
+         SELECT c_custkey, CAST(c_nationkey AS BIGINT),
+           CAST(c_acctbal AS DOUBLE)
+         FROM customer WHERE c_custkey % 2 = 1""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "customer").createOrReplaceTempView("cust_w_src")
       s.sql("DROP TABLE IF EXISTS graftcat.db.cust_w")
@@ -3509,7 +4085,15 @@ object EtlQueries {
     // dimension still prunes files, which no linear sort can give. The
     // require proves manifest-stats pruning actually bites before the
     // relational result is compared.
-    "zorder3_scan" -> ((s, dir) => {
+    Query("zorder3_scan",
+      """WITH mm AS (SELECT min(l_suppkey) AS mn, max(l_suppkey) AS mx
+                     FROM lineitem),
+            b AS (SELECT mn + (mx - mn) // 3 AS lo,
+                         mn + (mx - mn) // 3 + (mx - mn) // 10 AS hi
+                  FROM mm)
+         SELECT l_orderkey, l_partkey, l_suppkey, l_quantity
+         FROM lineitem, b
+         WHERE l_suppkey >= lo AND l_suppkey <= hi""")((s, dir) => {
       val wh = ensureCatalog(s)
       t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"),
           col("l_suppkey"), col("l_quantity"))
@@ -3538,7 +4122,10 @@ object EtlQueries {
     // precisely the rows the bad commit removed, nothing else. Keyed
     // replicas roll back with the table instead of hitting a reset or,
     // worse, silently keeping the bad state.
-    "cdc_restore" -> ((s, dir) => {
+    Query("cdc_restore",
+      """SELECT event_id, user_id, value,
+           CAST(2 AS BIGINT) AS commit_v, 'insert' AS change_type
+         FROM events WHERE event_id % 5 = 0""")((s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-cowrst")
@@ -3559,7 +4146,18 @@ object EtlQueries {
     // plain insert — the exact-row contract Delta's CDF writes change
     // files for, here reconstructed from the immutable file diff with
     // no extra write-path cost.
-    "cdc_cow_merge" -> ((s, dir) => {
+    Query("cdc_cow_merge",
+      """SELECT s_suppkey, s_name, s_acctbal,
+           CAST(1 AS BIGINT) AS commit_v, 'delete' AS change_type
+         FROM supplier WHERE s_suppkey % 5 = 0
+         UNION ALL
+         SELECT s_suppkey, s_name, s_acctbal + 100.0,
+           CAST(1 AS BIGINT), 'insert'
+         FROM supplier WHERE s_suppkey % 5 = 0
+         UNION ALL
+         SELECT s_suppkey + 1000000, s_name, s_acctbal,
+           CAST(1 AS BIGINT), 'insert'
+         FROM supplier WHERE s_suppkey % 5 = 1""")((s, dir) => {
       val sup = t(s, dir, "supplier")
         .select(col("s_suppkey"), col("s_name"), col("s_acctbal"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-cowmrg")
@@ -3582,7 +4180,8 @@ object EtlQueries {
     // scan planned (the require proves the manifest answered). The oracle
     // recomputes the count by scanning; equality proves the metadata path
     // is exact. The optimization every lakehouse SELECT COUNT(*) rides.
-    "meta_count_scan" -> ((s, dir) => {
+    Query("meta_count_scan",
+      """SELECT count(*) AS n_rows FROM events""")((s, dir) => {
       val ev = t(s, dir, "events").select(col("event_id"), col("user_id"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-cnt")
       val tbl = graft.sources.TxLogTable(s, tmp.resolve("events").toString)
@@ -3602,7 +4201,8 @@ object EtlQueries {
     // 100 TB constraint checks ride the same pass as the write's shuffle
     // read; the alternative (discovering bad rows in downstream jobs days
     // later) costs a table repair.
-    "check_constraint" -> ((s, dir) => {
+    Query("check_constraint",
+      """SELECT c_custkey, c_name, c_acctbal FROM customer""")((s, dir) => {
       val c = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-chk")
@@ -3628,7 +4228,8 @@ object EtlQueries {
     // was carried by reference and the file count dropped). At 100 TB this
     // is the difference between compaction costing O(new small files)
     // per run and compact()'s O(table) full rewrite.
-    "compact_small" -> ((s, dir) => {
+    Query("compact_small",
+      """SELECT event_id, user_id, event_type, value FROM events""")((s, dir) => {
       val ev = t(s, dir, "events").select(col("event_id"), col("user_id"),
         col("event_type"), col("value"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-csm")
@@ -3652,7 +4253,8 @@ object EtlQueries {
     // the text-format ingest path end-to-end: quoting, header skip, typed
     // parse. At 100 TB: CSV splits line-parallel like parquet row groups;
     // the schema pin avoids the double read inference costs.
-    "src_csv_roundtrip" -> ((s, dir) => {
+    Query("src_csv_roundtrip",
+      """SELECT n_nationkey, n_name, n_regionkey FROM nation""")((s, dir) => {
       val n = t(s, dir, "nation")
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-csv")
@@ -3668,7 +4270,8 @@ object EtlQueries {
     // a memory sink, and the drained rows hash-match a plain scan of the
     // source — the driver-checked proof that the streaming source is
     // exactly-once over the feed, not just spec-asserted.
-    "stream_txlog_feed" -> ((s, dir) => {
+    Query("stream_txlog_feed",
+      """SELECT event_id, user_id, value FROM events""")((s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-stream")
@@ -3696,7 +4299,10 @@ object EtlQueries {
     // missing declared columns, so no file is rewritten for the
     // evolution. The oracle reconstructs exactly that: even ids
     // (committed pre-add) carry NULL, odd ids carry their value.
-    "stream_schema_add" -> ((s, dir) => {
+    Query("stream_schema_add",
+      """SELECT event_id, value,
+           CASE WHEN event_id % 2 = 1 THEN 'n' ELSE NULL END AS tag
+         FROM events""")((s, dir) => {
       val ev = t(s, dir, "events").select(col("event_id"), col("value"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-sadd")
       val tbl = graft.sources.TxLogTable(s, tmp.resolve("events").toString)
@@ -3746,7 +4352,13 @@ object EtlQueries {
     // the fence dropped it. Scale shape: the merge rewrites only the
     // key-overlapping files (manifest hull + bloom pruning), the
     // counter is one row per batch.
-    "stream_apply_changes" -> ((s, dir) => {
+    Query("stream_apply_changes",
+      """SELECT user_id, ts_us, event_id, value FROM (
+           SELECT user_id, epoch_ns(ts) // 1000 AS ts_us, event_id,
+             value,
+             row_number() OVER (PARTITION BY user_id
+               ORDER BY epoch_ns(ts) DESC, event_id DESC) AS rn
+           FROM events) WHERE rn = 1""")((s, dir) => {
       val wh = ensureCatalog(s)
       val ev = t(s, dir, "events").select(col("event_id"),
         // integer division: nanos exceed double's 2^53 exact range, so
@@ -3826,7 +4438,8 @@ object EtlQueries {
     // at 100 TB this is the difference between `CALL system.rebucket`
     // being routine maintenance and it being a full-table phantom
     // re-delivery into every downstream consumer.
-    "stream_maintenance_skip" -> ((s, dir) => {
+    Query("stream_maintenance_skip",
+      """SELECT event_id, user_id, value FROM events""")((s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-maint")
@@ -3860,7 +4473,9 @@ object EtlQueries {
     // final state relationally: every event except the MOR-deleted
     // keys. At 100 TB this is deletes PUSHED to consumers instead of
     // each consumer re-diffing snapshots.
-    "stream_cdc_feed" -> ((s, dir) => {
+    Query("stream_cdc_feed",
+      """SELECT event_id, user_id, value FROM events
+         WHERE event_id % 10 <> 0""")((s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-cdf")
@@ -3903,7 +4518,9 @@ object EtlQueries {
     // state form (an unwatermarked dedup's state grows with the corpus;
     // the horizon is tuned to the upstream's real lateness, here wider
     // than the synthetic ts span so nothing is late-dropped).
-    "stream_dedup" -> ((s, dir) => {
+    Query("stream_dedup",
+      """SELECT event_id, user_id, value, epoch_us(ts) AS ts_us
+         FROM events""")((s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"), col("ts"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-sdd")
@@ -3936,7 +4553,8 @@ object EtlQueries {
     // hash-checked. Each micro-batch lands as one atomic manifest commit
     // fenced by its batch id (replayed epochs skip) — the table-to-table
     // streaming ETL shape with exactly-once on both ends.
-    "stream_txlog_pipe" -> ((s, dir) => {
+    Query("stream_txlog_pipe",
+      """SELECT event_id, user_id, event_type FROM events""")((s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-pipe")
@@ -3958,7 +4576,9 @@ object EtlQueries {
     // nulls, partition values, blooms) before the parquet scan — the
     // "usable without importing this library" contract, exercised with a
     // mixed predicate and hash-checked against the source table.
-    "src_txlog_format" -> ((s, dir) => {
+    Query("src_txlog_format",
+      """SELECT c_custkey, c_name, c_acctbal FROM customer
+         WHERE c_mktsegment = 'BUILDING' AND c_acctbal > 1000""")((s, dir) => {
       val c = t(s, dir, "customer").select(col("c_custkey"), col("c_name"),
         col("c_mktsegment"), col("c_acctbal"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-rel")
@@ -3984,7 +4604,8 @@ object EtlQueries {
     // mapped onto the commit protocol (overwrite/append/error/ignore),
     // then read back through the same format — the full round trip a user
     // makes without ever importing this library's classes.
-    "src_txlog_write" -> ((s, dir) => {
+    Query("src_txlog_write",
+      """SELECT n_nationkey, n_name, n_regionkey FROM nation""")((s, dir) => {
       val n = t(s, dir, "nation")
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
       val root = java.nio.file.Files.createTempDirectory("graft-wrt")
@@ -4000,7 +4621,8 @@ object EtlQueries {
     // (Spark bundles the ORC datasource). Schema-pinned read back,
     // hash-checked against the parquet original — proves the format path,
     // predicate/pruning behavior rides the same datasource V2 machinery.
-    "src_orc_roundtrip" -> ((s, dir) => {
+    Query("src_orc_roundtrip",
+      """SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier""")((s, dir) => {
       val sp = t(s, dir, "supplier")
         .select(col("s_suppkey"), col("s_name"), col("s_nationkey"),
           col("s_acctbal"))
@@ -4014,7 +4636,8 @@ object EtlQueries {
     // and event streams actually ship): schema-pinned read back, including
     // a double column — Spark writes shortest-round-trip doubles, so the
     // value survives bit-exactly and the oracle hash-check proves it.
-    "src_jsonl_roundtrip" -> ((s, dir) => {
+    Query("src_jsonl_roundtrip",
+      """SELECT c_custkey, c_name, c_acctbal FROM customer""")((s, dir) => {
       val c = t(s, dir, "customer")
         .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-jsonl")
@@ -4030,7 +4653,10 @@ object EtlQueries {
     // groupBy, so the fold ⊕ recompute equivalence is hash-checked. Sums
     // accumulate in DECIMAL so the three-chunk fold is bit-equal to the
     // single pass (the doubles-shuffle-order rule, see CoreQueries.dsum).
-    "inc_agg_refresh" -> ((s, dir) => {
+    Query("inc_agg_refresh",
+      """SELECT user_id, count(*) AS n,
+           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
+         FROM events GROUP BY user_id""")((s, dir) => {
       val ev = t(s, dir, "events").select(col("user_id"), col("event_id"),
         col("value").cast(DecimalType(18, 6)).as("v"))
       val aggOf = (d: DataFrame) => d.groupBy("user_id")
@@ -4053,7 +4679,10 @@ object EtlQueries {
     // the source table, so feed-extraction + fold ≡ recompute is
     // hash-checked end-to-end. At 100 TB this is the hourly-materialized-
     // view pattern: refresh cost is the hour's files, never the table.
-    "ivm_refresh" -> ((s, dir) => {
+    Query("ivm_refresh",
+      """SELECT user_id, event_type, count(*) AS n,
+           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
+         FROM events GROUP BY user_id, event_type""")((s, dir) => {
       val ev = t(s, dir, "events").select(col("user_id"), col("event_type"),
         col("event_id"), col("value").cast(DecimalType(18, 6)).as("v"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-ivm")
@@ -4081,7 +4710,16 @@ object EtlQueries {
     // version's feed: inserts via IncrementalAgg, deletes by dropping the
     // key's groups. The oracle recomputes the final state from scratch,
     // so feed-with-deletes extraction + fold ≡ recompute is hash-checked.
-    "ivm_refresh_mor" -> ((s, dir) => {
+    Query("ivm_refresh_mor",
+      """WITH live AS (
+           SELECT user_id, CAST(value AS DECIMAL(18,6)) AS v
+           FROM events
+           WHERE event_id % 3 IN (0, 1) AND user_id % 10 <> 3
+           UNION ALL
+           SELECT user_id, CAST(value AS DECIMAL(18,6)) AS v
+           FROM events WHERE event_id % 3 = 2)
+         SELECT user_id, count(*) AS n, CAST(SUM(v) AS DOUBLE) AS total
+         FROM live GROUP BY user_id""")((s, dir) => {
       val ev = t(s, dir, "events").select(col("user_id"), col("event_id"),
         col("value").cast(DecimalType(18, 6)).as("v"))
       val tmp = java.nio.file.Files.createTempDirectory("graft-ivm-mor")
@@ -4111,7 +4749,22 @@ object EtlQueries {
     // insert-only column: c_mktsegment is written at insert but frozen on
     // conflict (the reference's education_form / url_id / building_number
     // semantics, logic.py:90-95,115-121,256-267).
-    "u3_insert_only_column" -> ((s, dir) => {
+    Query("u3_insert_only_column",
+      """WITH inc AS (
+           SELECT c_custkey, 'U3-' || c_name AS c_name,
+                  CAST(c_nationkey + 1 AS INT) AS c_nationkey,
+                  c_acctbal + 100 AS c_acctbal, 'CHANGED' AS c_mktsegment
+           FROM customer WHERE c_custkey % 3 = 0
+           UNION ALL
+           SELECT c_custkey + 600000, 'F-' || CAST(c_custkey AS VARCHAR),
+                  CAST(2 AS INT), 1.5, 'FRESH'
+           FROM customer WHERE c_custkey % 13 = 0)
+         SELECT COALESCE(c.c_custkey, i.c_custkey) AS c_custkey,
+           CASE WHEN i.c_custkey IS NOT NULL THEN i.c_name ELSE c.c_name END AS c_name,
+           CASE WHEN i.c_custkey IS NOT NULL THEN i.c_nationkey ELSE c.c_nationkey END AS c_nationkey,
+           CASE WHEN i.c_custkey IS NOT NULL THEN i.c_acctbal ELSE c.c_acctbal END AS c_acctbal,
+           CASE WHEN c.c_custkey IS NOT NULL THEN c.c_mktsegment ELSE i.c_mktsegment END AS c_mktsegment
+         FROM customer c FULL OUTER JOIN inc i ON c.c_custkey = i.c_custkey""")((s, dir) => {
       val c = t(s, dir, "customer")
       val k = col("c_custkey")
       val upd = c.filter(k % 3 === 0).select(k,
@@ -4133,7 +4786,18 @@ object EtlQueries {
     // positive detail value is written into the OPEN dim rows (Type 1 update);
     // rows with no match or not open keep their current value. The per-key
     // scalar set is tiny → broadcast, exactly the backPropagateCounts shape.
-    "a7_count_writeback" -> ((s, dir) => {
+    Query("a7_count_writeback",
+      """WITH f AS (
+           SELECT user_id, value AS cnt FROM (
+             SELECT user_id, value,
+               row_number() OVER (PARTITION BY user_id
+                                  ORDER BY ts, event_id) AS rn
+             FROM events WHERE value > 100)
+           WHERE rn = 1)
+         SELECT c_custkey, c_name,
+           CASE WHEN f.cnt IS NOT NULL AND c_custkey % 10 <> 3
+                THEN f.cnt ELSE c_acctbal END AS c_acctbal
+         FROM customer LEFT JOIN f ON c_custkey = f.user_id""")((s, dir) => {
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       val firstCnt = t(s, dir, "events")
         .filter(col("value") > 100)
@@ -4151,7 +4815,12 @@ object EtlQueries {
     // P3 — skip rows whose extracted key is NULL (the reference skips
     // employees without url_id, logic.py:171-176): IS NOT NULL on a
     // nullable JSON extraction, then the usual projection.
-    "p3_not_null_skip" -> ((s, dir) =>
+    Query("p3_not_null_skip",
+      """SELECT event_id, user_id,
+           CAST(json_extract_string(props, '$.k') AS INT) AS k_val
+         FROM events
+         WHERE CAST(json_extract_string(props, '$.k') AS INT) IS NOT NULL
+           AND CAST(json_extract_string(props, '$.k') AS INT) >= 75""")((s, dir) =>
       t(s, dir, "events")
         .withColumn("k_val",
           get_json_object(col("props"), "$.k").cast(IntegerType))
@@ -4163,7 +4832,18 @@ object EtlQueries {
     // stamped with the run's single timestamp (logic.py:422-424; F14: one
     // timestamp per run, not per row). Corruption is synthesized
     // deterministically so the oracle can compute expected status directly.
-    "p5_quarantine" -> ((s, dir) => {
+    Query("p5_quarantine",
+      """SELECT event_id,
+           CASE WHEN event_id % 7 = 0 THEN NULL
+                ELSE TRY_CAST(json_extract_string(props, '$.k') AS INT)
+           END AS k_val,
+           CASE WHEN event_id % 7 = 0
+                  OR TRY_CAST(json_extract_string(props, '$.k') AS INT)
+                     IS NULL
+                THEN 'unparseable json'
+                ELSE 'ok' END AS status,
+           TIMESTAMP '2024-06-01 00:00:00' AS loaded_at
+         FROM events""")((s, dir) => {
       val ev = t(s, dir, "events")
         .withColumn("payload",
           when(col("event_id") % 7 === 0, concat(lit("x"), col("props")))
@@ -4182,7 +4862,16 @@ object EtlQueries {
     // falsy dict (dropped). The REAL Variant machinery runs
     // (parse_json → schema_of_variant typeof → per-field try_variant_get);
     // the oracle computes the expected strings directly from the columns.
-    "f5_employee_names" -> ((s, dir) => {
+    Query("f5_employee_names",
+      """SELECT c_custkey,
+           'L' || CAST(c_custkey AS VARCHAR)
+             || ' F' || CAST(c_custkey % 100 AS VARCHAR)
+             || CASE WHEN c_custkey % 4 = 0
+                       THEN '|Solo' || CAST(c_custkey AS VARCHAR)
+                     WHEN c_custkey % 4 = 1
+                       THEN '|Str' || CAST(c_custkey AS VARCHAR)
+                     ELSE '' END AS employee_names
+         FROM customer""")((s, dir) => {
       val c = t(s, dir, "customer")
       val k = col("c_custkey")
       val emp1 = format_string(
@@ -4204,7 +4893,39 @@ object EtlQueries {
     // malformed time → row dropped, [0]/[] weeks → default, heterogeneous
     // auditories (dict name / empty name → id / dict id / bare string / int),
     // JSON passthrough, search-lexeme vector.
-    "e3_lessons_flatten" -> ((s, dir) => {
+    Query("e3_lessons_flatten", {
+      val searchSrc = "subject || ' ' || subject_full || ' ' || entity_name" +
+        " || ' ' || replace(auditories, '|', ' ')"
+      s"""WITH base AS (
+            SELECT c_custkey AS k, c_mktsegment AS seg FROM customer
+            WHERE c_custkey % 4 < 3 AND c_custkey % 11 <> 0),
+          f AS (
+            SELECT 'C-' || CAST(k AS VARCHAR) AS entity_name,
+              CAST(k % 4 + 1 AS INT) AS day_of_week,
+              CASE WHEN k % 5 = 0 THEN 'Без названия' ELSE seg END AS subject,
+              CASE WHEN k % 7 = 0
+                   THEN CASE WHEN k % 5 = 0 THEN 'Без названия' ELSE seg END
+                   ELSE 'FULL ' || seg END AS subject_full,
+              CAST((k % 10 + 8) * 3600 + (k % 60) * 60 AS INT) AS start_sec,
+              CAST((k % 10 + 9) * 3600 + (k % 60) * 60 AS INT) AS end_sec,
+              CASE WHEN k % 6 IN (0, 1) THEN '1|2|3|4'
+                   ELSE '1|' || CAST(k % 3 + 1 AS VARCHAR) END AS week_numbers,
+              CAST(CASE WHEN k % 2 = 0 THEN 0 ELSE 1 END AS INT) AS num_subgroup,
+              (CASE WHEN k % 8 = 0 THEN '77'
+                    ELSE 'R-' || CAST(k % 20 AS VARCHAR) END)
+                || '|' || CAST(k % 30 AS VARCHAR)
+                || '|S-' || CAST(k % 10 AS VARCHAR)
+                || '|' || CAST(k % 7 AS VARCHAR) AS auditories,
+              '[{"name":"G-' || CAST(k % 5 AS VARCHAR)
+                || '","numberOfStudents":' || CAST(k % 40 AS VARCHAR)
+                || '}]' AS related_groups
+            FROM base)
+          SELECT entity_name, day_of_week, subject, subject_full, start_sec,
+                 end_sec, week_numbers, num_subgroup, auditories,
+                 related_groups,
+                 ${lexOf(searchSrc)} AS search_lexemes
+          FROM f"""
+    })((s, dir) => {
       val c = t(s, dir, "customer")
       val k = col("c_custkey")
       val dayName = when(k % 4 === 0, lit("Понедельник"))
@@ -4254,7 +4975,34 @@ object EtlQueries {
     // E4 + F6/F7 — exams flatten: flat list, exact dd.MM.yyyy date (bad date
     // → row dropped), bad time → 00:00 (not dropped), subject default
     // "Экзамен", week_numbers always empty (ref logic.py:376-381).
-    "e4_exams_flatten" -> ((s, dir) => {
+    Query("e4_exams_flatten", {
+      val searchSrc = "subject || ' ' || subject_full || ' ' || entity_name" +
+        " || ' ' || replace(auditories, '|', ' ')"
+      s"""WITH f AS (
+            SELECT 'C-' || CAST(c_custkey AS VARCHAR) AS entity_name,
+              CAST(NULL AS INT) AS day_of_week,
+              CASE WHEN c_custkey % 3 = 0 THEN 'Экзамен'
+                   ELSE c_mktsegment END AS subject,
+              CASE WHEN c_custkey % 3 = 0 THEN 'Экзамен'
+                   ELSE c_mktsegment END AS subject_full,
+              make_date(2024, CAST(c_custkey % 12 + 1 AS INT),
+                        CAST(c_custkey % 28 + 1 AS INT)) AS exact_date,
+              CAST(CASE WHEN c_custkey % 5 = 0 THEN 0
+                   ELSE (c_custkey % 8 + 9) * 3600 + (c_custkey % 60) * 60
+                   END AS INT) AS start_sec,
+              CAST(CASE WHEN c_custkey % 5 = 0 THEN 0
+                   ELSE (c_custkey % 8 + 10) * 3600 + (c_custkey % 60) * 60
+                   END AS INT) AS end_sec,
+              '' AS week_numbers,
+              CAST(0 AS INT) AS num_subgroup,
+              'E-' || CAST(c_custkey % 6 AS VARCHAR)
+                || '|Hall ' || CAST(c_custkey % 4 AS VARCHAR) AS auditories
+            FROM customer WHERE c_custkey % 9 <> 0)
+          SELECT entity_name, day_of_week, subject, subject_full, exact_date,
+                 start_sec, end_sec, week_numbers, num_subgroup, auditories,
+                 ${lexOf(searchSrc)} AS search_lexemes
+          FROM f"""
+    })((s, dir) => {
       val c = t(s, dir, "customer")
       val k = col("c_custkey")
       val dateStr = when(k % 9 === 0, lit("99.99.2024")) // F6: dropped
@@ -4285,980 +5033,4 @@ object EtlQueries {
         array_join(col("auditories"), "|").as("auditories"),
         array_join(col("search_lexemes"), "|").as("search_lexemes"))
     }))
-
-  // E3 search vector input: subject ∥ subject_full ∥ entity_name ∥ rooms.
-  private def lexOf(parts: String) = TextQueries.sqlLexemesOf(parts)
-
-  val oracle: Map[String, String] = Map(
-
-    // `(mx - mn)` is positive, so DuckDB's floor-division `//` equals the
-    // Scala Long truncating division used to place the commit boundaries.
-    "skip_range_scan" ->
-      """WITH e AS (SELECT event_id, epoch_us(ts) AS ts_us, event_type, value
-                    FROM events),
-          mm AS (SELECT min(ts_us) AS mn, max(ts_us) AS mx FROM e),
-          b AS (SELECT mn + (mx - mn) // 3 AS b1,
-                       mn + 2 * ((mx - mn) // 3) AS b2 FROM mm)
-         SELECT event_id, ts_us, event_type, value
-         FROM e, b
-         WHERE ts_us >= b1 AND ts_us <= b2 - 1""",
-
-    "zorder_scan" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
-                    FROM events),
-          mm AS (SELECT min(user_id) AS mn, max(user_id) AS mx FROM e),
-          b AS (SELECT mn + (mx - mn) // 4 AS lo,
-                       mn + (mx - mn) // 2 AS hi FROM mm)
-         SELECT event_id, user_id, ts_us, value
-         FROM e, b
-         WHERE user_id >= lo AND user_id <= hi""",
-
-    "sql_zorder_scoped" ->
-      """SELECT event_type, event_id, user_id, value FROM events""",
-
-    "sql_ann_lifecycle" ->
-      graft.queries.SimQueries.ivfOracle(serveAppended = true),
-
-    "sql_column_defaults" ->
-      """SELECT r_regionkey, r_name, 'active' AS status,
-           'standard' AS tier
-         FROM region""",
-
-    "merge_schema_evolution" ->
-      """SELECT n_nationkey,
-           CASE WHEN n_nationkey >= 20 THEN 'E-' || n_name
-                ELSE n_name END AS n_name,
-           CASE WHEN n_nationkey >= 20 THEN 'evolved'
-                ELSE NULL END AS batch_tag
-         FROM nation""",
-
-    "merge_cow" ->
-      """WITH base AS (SELECT c_custkey, c_name, c_nationkey, c_acctbal,
-                              c_mktsegment FROM customer),
-          mm AS (SELECT min(c_custkey) AS mn, max(c_custkey) AS mx FROM base),
-          b AS (SELECT mn + (mx - mn) // 3 AS lo,
-                       mn + (mx - mn) // 3 + (mx - mn) // 10 AS hi FROM mm)
-         SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-         FROM base, b WHERE c_custkey < lo OR c_custkey > hi
-         UNION ALL
-         SELECT c_custkey, 'M-' || c_name AS c_name, c_nationkey,
-                c_acctbal + 1000 AS c_acctbal, 'MERGED' AS c_mktsegment
-         FROM base, b WHERE c_custkey >= lo AND c_custkey <= hi
-         UNION ALL
-         SELECT c_custkey + 600000 AS c_custkey,
-                'N-' || CAST(c_custkey AS VARCHAR) AS c_name,
-                CAST(7 AS INT) AS c_nationkey, 0.5 AS c_acctbal,
-                'FRESH' AS c_mktsegment
-         FROM base WHERE c_custkey % 11 = 0""",
-
-    "replace_where" ->
-      """WITH base AS (SELECT c_custkey, c_name, c_acctbal FROM customer),
-          mm AS (SELECT min(c_custkey) AS mn, max(c_custkey) AS mx FROM base),
-          b AS (SELECT mn + (mx - mn) // 3 AS lo,
-                       mn + (mx - mn) // 3 + (mx - mn) // 10 AS hi FROM mm)
-         SELECT c_custkey, c_name, c_acctbal
-         FROM base, b WHERE c_custkey < lo OR c_custkey > hi
-         UNION ALL
-         SELECT c_custkey, 'R-' || c_name AS c_name,
-                c_acctbal * 2 AS c_acctbal
-         FROM base, b WHERE c_custkey >= lo AND c_custkey <= hi""",
-
-    "skip_string_range" ->
-      """SELECT doc_id, lang, source, n_chars FROM documents
-         WHERE source >= 'src3' AND source <= 'src5'""",
-
-    "sql_ddl_catalog" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM nation
-         WHERE n_nationkey >= 5""",
-
-    "sql_time_travel" ->
-      """SELECT r_regionkey, r_name FROM region""",
-
-    "sql_delete_from" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus
-         FROM orders
-         WHERE NOT (o_totalprice > 150000 AND o_orderstatus = 'F')""",
-
-    "sql_merge_into" ->
-      """SELECT c_custkey,
-           CASE WHEN c_custkey % 10 = 0 THEN 'M-' || c_name
-                ELSE c_name END AS c_name,
-           CASE WHEN c_custkey % 10 = 0 THEN c_acctbal + 1000
-                ELSE c_acctbal END AS c_acctbal
-         FROM customer""",
-
-    "sql_merge_not_matched_by_source" ->
-      """SELECT s_suppkey, s_name,
-           CASE WHEN s_nationkey >= 6 AND s_nationkey < 18
-                THEN s_acctbal + 500 ELSE s_acctbal END AS s_acctbal,
-           CAST(CASE WHEN s_nationkey < 6 THEN 0 ELSE 1 END
-             AS INTEGER) AS live
-         FROM supplier
-         WHERE s_nationkey < 18""",
-
-    "sql_maintenance" ->
-      """SELECT r_regionkey, r_name FROM region""",
-
-    "sql_optimize_write" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM nation""",
-
-    "sql_restore" ->
-      """SELECT p_partkey, p_name, p_retailprice FROM part""",
-
-    "sql_clone" ->
-      """SELECT c_custkey, c_acctbal, c_nationkey FROM customer""",
-
-    "sql_partitions" ->
-      """SELECT 'n_regionkey=' || CAST(n_regionkey AS VARCHAR) AS part,
-           count(*) AS n_rows
-         FROM nation GROUP BY n_regionkey""",
-
-    "sql_merge_partitioned" ->
-      """SELECT s_suppkey,
-           CASE WHEN s_nationkey = 3 THEN 'M-' || s_name
-                ELSE s_name END AS s_name,
-           s_nationkey,
-           CASE WHEN s_nationkey = 3 THEN s_acctbal + 500
-                ELSE s_acctbal END AS bal
-         FROM supplier""",
-
-    "sql_overwrite_partition" ->
-      """SELECT n_nationkey,
-           CASE WHEN n_regionkey = 2 THEN 'R2-' || n_name
-                ELSE n_name END AS n_name,
-           n_regionkey
-         FROM nation""",
-
-    "sql_meta_count" ->
-      """SELECT count(*) AS n_rows, min(o_orderkey) AS min_key,
-           max(o_orderkey) AS max_key FROM orders""",
-
-    "sql_meta_count_filtered" ->
-      """SELECT (SELECT count(*) FROM customer WHERE c_nationkey = 3)
-           AS n_eq,
-           (SELECT min(c_custkey) FROM customer WHERE c_nationkey = 3)
-           AS mn_eq,
-           (SELECT max(c_custkey) FROM customer WHERE c_nationkey = 3)
-           AS mx_eq,
-           (SELECT count(*) FROM customer
-            WHERE c_nationkey IN (1, 2) AND c_nationkey IN (2, 7))
-           AS n_in""",
-
-    "sql_spj_join" ->
-      """SELECT c.c_nationkey AS nationkey, count(*) AS pairs,
-           CAST(SUM(CAST(c.c_acctbal + s.s_acctbal AS DECIMAL(18,2)))
-             AS DOUBLE) AS bal_sum
-         FROM customer c JOIN supplier s ON c.c_nationkey = s.s_nationkey
-         GROUP BY c.c_nationkey""",
-
-    "sql_dpp_join" ->
-      """SELECT c.c_nationkey AS nationkey, count(*) AS n_cust,
-           CAST(SUM(CAST(c.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal
-         FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
-         WHERE n.n_regionkey = 2
-         GROUP BY c.c_nationkey""",
-
-    "sql_retention_delete" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n,
-           CAST(min(epoch_ns(ts) // 1000) AS BIGINT) AS first_us,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sv
-         FROM events
-         WHERE epoch_ns(ts) >= 1704931200000000000""",
-
-    "sql_partition_evolution" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sv
-         FROM events
-         WHERE epoch_ns(ts) >= 1704672000000000000
-           AND epoch_ns(ts) < 1705190400000000000""",
-
-    "sql_meta_tables" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n
-         FROM events GROUP BY event_type""",
-
-    "sql_tags" ->
-      """SELECT event_id, user_id, value FROM events
-         WHERE event_id % 2 = 0""",
-
-    "sql_branches" ->
-      """WITH wap AS (
-           SELECT event_id, user_id, value FROM events
-           WHERE event_id % 3 IN (0, 1))
-         SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sv
-         FROM wap WHERE value >= 10 GROUP BY user_id""",
-
-    "sql_log_checkpoint" ->
-      """SELECT n_nationkey AS k, n_name AS name, n_regionkey AS rk
-         FROM nation WHERE n_regionkey <> 0""",
-
-    "sql_mv_incremental" ->
-      """WITH src AS (
-           SELECT user_id, value FROM events
-           WHERE (event_id % 4 IN (0, 1) AND value >= 5)
-              OR event_id % 4 = 2)
-         SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total
-         FROM src GROUP BY user_id""",
-
-    "u9_upsert_pos" ->
-      """WITH base AS (
-           SELECT c_custkey, c_name, c_acctbal FROM customer),
-         kept AS (
-           SELECT c_custkey, c_name, c_acctbal FROM base
-           WHERE c_custkey % 7 <> 0 AND c_custkey % 13 <> 0),
-         upd AS (
-           SELECT c_custkey, 'U9-' || c_name AS c_name,
-             c_acctbal + 10 AS c_acctbal
-           FROM base WHERE c_custkey % 7 = 0),
-         fresh AS (
-           SELECT c_custkey + 900000 AS c_custkey, 'F' AS c_name,
-             1.5 AS c_acctbal
-           FROM base WHERE c_custkey % 11 = 0)
-         SELECT * FROM kept
-         UNION ALL SELECT * FROM upd
-         UNION ALL SELECT * FROM fresh""",
-
-    "sql_mv_minmax" ->
-      """WITH src AS (
-           SELECT user_id, value FROM events
-           WHERE (event_id % 3 IN (0, 1) AND value <= 450)
-              OR event_id % 3 = 2)
-         SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total,
-           min(value) AS lo, max(value) AS hi
-         FROM src GROUP BY user_id""",
-
-    "sql_mv_distinct" ->
-      """WITH src AS (
-           SELECT user_id % 8 AS grp, event_id AS val FROM events
-           WHERE (event_id % 3 IN (0, 1) AND event_id % 7 <> 0)
-              OR event_id % 3 = 2),
-         h AS (
-           SELECT grp, md5(CAST(val AS VARCHAR)) AS h FROM src
-           WHERE val IS NOT NULL),
-         b AS (
-           SELECT grp, CAST('0x' || substring(h, 1, 2) AS BIGINT)
-               AS bucket,
-             CAST('0x' || substring(h, 3, 15) AS BIGINT) AS v
-           FROM h)
-         SELECT grp, bucket,
-           MAX(CASE WHEN v = 0 THEN CAST(61 AS BIGINT)
-                    ELSE 61 - length(bin(v)) END) AS r,
-           CAST(count(*) AS BIGINT) AS n
-         FROM b GROUP BY grp, bucket""",
-
-    "sql_mv_variance" ->
-      """WITH src AS (
-           SELECT user_id % 8 AS grp, value AS val FROM events
-           WHERE value <= 250)
-         SELECT grp, CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(val AS DECIMAL(38,6))) AS DOUBLE) AS s,
-           CAST(SUM(CAST(val * val AS DECIMAL(38,6))) AS DOUBLE) AS s2
-         FROM src GROUP BY grp""",
-
-    "sql_mv_distinct_exact" ->
-      """WITH src AS (
-           SELECT user_id % 8 AS grp, user_id % 100 AS u FROM events
-           WHERE (user_id % 100) % 5 <> 0)
-         SELECT grp, CAST(COUNT(DISTINCT u) AS BIGINT) AS uniques
-         FROM src GROUP BY grp""",
-
-    "sql_mv_rollup" ->
-      """SELECT epoch_ns(ts) // 86400000000000 AS day,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total
-         FROM events WHERE value >= 2 GROUP BY 1""",
-
-    "sql_mv_wap" ->
-      """SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total
-         FROM events GROUP BY user_id""",
-
-    "sql_mv_hist" ->
-      """SELECT user_id % 8 AS grp,
-           length(bin(CAST(floor(value) AS BIGINT))) AS vb,
-           CAST(count(*) AS BIGINT) AS n
-         FROM events
-         WHERE value IS NOT NULL AND value >= 0 AND value <= 300
-         GROUP BY 1, 2""",
-
-    "sql_mv_joined" ->
-      """WITH f AS (
-           SELECT user_id, value FROM events
-           WHERE (event_id % 3 IN (0, 1) AND value >= 5)
-              OR event_id % 3 = 2),
-         d AS (
-           SELECT DISTINCT user_id AS uid,
-             CASE WHEN user_id % 5 = 0 THEN 99 ELSE user_id % 5 END
-               AS segment
-           FROM events)
-         SELECT d.segment, CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(f.value AS DECIMAL(38,6))) AS DOUBLE) AS total
-         FROM f JOIN d ON f.user_id = d.uid
-         GROUP BY d.segment""",
-
-    // the net dim state after the program's four DML steps, replayed in
-    // application order: %13=4 update last, the %7=0 rows inserted at 77,
-    // the %5=2 migration to 102, the %11=3 rows (non-%7=0) deleted
-    "sql_mv_joined_dimfold" ->
-      """WITH du AS (SELECT DISTINCT user_id AS uid FROM events),
-         d AS (
-           SELECT uid,
-             (CASE WHEN uid % 13 = 4 THEN 55
-                  WHEN uid % 7 = 0 THEN 77
-                  WHEN uid % 5 = 2 THEN 102
-                  ELSE uid % 5 END) +
-             (CASE WHEN uid % 17 = 6 THEN 200 ELSE 0 END) AS segment
-           FROM du
-           WHERE uid % 7 = 0 OR uid % 11 <> 3),
-         f AS (
-           SELECT user_id, value FROM events WHERE event_id % 3 IN (0, 1))
-         SELECT d.segment, CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(f.value AS DECIMAL(38,6))) AS DOUBLE) AS total
-         FROM f JOIN d ON f.user_id = d.uid
-         GROUP BY d.segment""",
-
-    // same dim program as joined_dimfold MINUS its over-cap %17 window;
-    // fact is %3 in (0,1) minus the value<3 deletes (NULL values
-    // survive a < predicate)
-    "sql_mv_minmax_dimfold" ->
-      """WITH du AS (SELECT DISTINCT user_id AS uid FROM events),
-         d AS (
-           SELECT uid,
-             CASE WHEN uid % 13 = 4 THEN 55
-                  WHEN uid % 7 = 0 THEN 77
-                  WHEN uid % 5 = 2 THEN 102
-                  ELSE uid % 5 END AS segment
-           FROM du
-           WHERE uid % 7 = 0 OR uid % 11 <> 3),
-         f AS (
-           SELECT user_id, value FROM events
-           WHERE event_id % 3 IN (0, 1)
-             AND (value >= 3 OR value IS NULL))
-         SELECT d.segment, CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(f.value AS DECIMAL(38,6))) AS DOUBLE) AS total,
-           min(f.value) AS lo, max(f.value) AS hi
-         FROM f JOIN d ON f.user_id = d.uid
-         GROUP BY d.segment""",
-
-    // both dims' NET states: users %5=2 → 102 then %11=3 deleted;
-    // 'click' → 'hot', 'view' → 'cold', the rest at their initial
-    // '<type>_c' class; the fact is all three append windows
-    "sql_mv_star_2dim" ->
-      """WITH du AS (
-           SELECT uid,
-             CASE WHEN uid % 5 = 2 THEN 102 ELSE uid % 5 END AS seg
-           FROM (SELECT DISTINCT user_id AS uid FROM events)
-           WHERE uid % 11 <> 3),
-         dt AS (
-           SELECT tkey,
-             CASE WHEN tkey = 'click' THEN 'hot'
-                  WHEN tkey = 'view' THEN 'cold'
-                  ELSE tkey || '_c' END AS tclass
-           FROM (SELECT DISTINCT event_type AS tkey FROM events)),
-         f AS (SELECT user_id, event_type, value FROM events)
-         SELECT du.seg, dt.tclass, CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(f.value AS DECIMAL(38,6))) AS DOUBLE) AS total
-         FROM f
-         JOIN du ON f.user_id = du.uid
-         JOIN dt ON f.event_type = dt.tkey
-         GROUP BY du.seg, dt.tclass""",
-
-    // the published star: all events, dim with %4=1 re-segmented to 77
-    "sql_mv_wap_joined" ->
-      """WITH d AS (
-           SELECT DISTINCT user_id AS uid,
-             CASE WHEN user_id % 4 = 1 THEN 77 ELSE user_id % 4 END
-               AS segment
-           FROM events)
-         SELECT d.segment, CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(e.value AS DECIMAL(38,6))) AS DOUBLE) AS total
-         FROM events e JOIN d ON e.user_id = d.uid
-         GROUP BY d.segment""",
-
-    // the snowflake cascade with the FINAL dim states: users %5=2
-    // re-segmented to 99, 'click' re-classed to 'hot'; base rows are
-    // event_id%3 in (0,1) minus value<2 deletes
-    "sql_mv_snowflake" ->
-      """WITH base AS (
-           SELECT user_id, event_type, value FROM events
-           WHERE event_id % 3 IN (0, 1)
-             AND (value >= 2 OR value IS NULL)),
-         du AS (
-           SELECT DISTINCT user_id AS uid,
-             CASE WHEN user_id % 5 = 2 THEN 99 ELSE user_id % 5 END
-               AS useg
-           FROM events),
-         dt AS (
-           SELECT DISTINCT event_type AS tkey,
-             CASE WHEN event_type = 'click' THEN 'hot'
-                  WHEN event_type = 'view' THEN 'engage'
-                  ELSE 'convert' END AS tclass
-           FROM events),
-         star1 AS (
-           SELECT du.useg, b.event_type,
-             SUM(CAST(b.value AS DECIMAL(38,6))) AS total
-           FROM base b JOIN du ON b.user_id = du.uid
-           GROUP BY du.useg, b.event_type)
-         SELECT s.useg, dt.tclass, CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(s.total) AS DOUBLE) AS total
-         FROM star1 s JOIN dt ON s.event_type = dt.tkey
-         GROUP BY s.useg, dt.tclass""",
-
-    // the star-over-chain cascade: per-user profile over the surviving
-    // base rows, activity segment = bit length of the user's count,
-    // star rollup joins each base row to its user's segment
-    "sql_mv_star_mvdim" ->
-      """WITH base AS (
-           SELECT user_id, value FROM events
-           WHERE event_id % 3 IN (0, 1)
-             AND (value >= 4 OR value IS NULL)),
-         prof AS (
-           SELECT user_id AS uid, CAST(count(*) AS BIGINT) AS n
-           FROM base GROUP BY 1),
-         seg AS (
-           SELECT uid, CAST(length(bin(n)) AS BIGINT) AS seg FROM prof)
-         SELECT s.seg, CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(b.value AS DECIMAL(38,6))) AS DOUBLE) AS total
-         FROM base b JOIN seg s ON b.user_id = s.uid
-         GROUP BY s.seg""",
-
-    // the 3-level cascade over the surviving base rows (event_id%4 in
-    // 0..2 inserted, value<3 deleted; NULL value survives a < delete)
-    "sql_mv_chain" ->
-      """WITH base AS (
-           SELECT user_id, value FROM events
-           WHERE event_id % 4 IN (0, 1, 2)
-             AND (value >= 3 OR value IS NULL)),
-         l1 AS (
-           SELECT user_id, SUM(CAST(value AS DECIMAL(38,6))) AS t1
-           FROM base GROUP BY user_id),
-         l2 AS (
-           SELECT user_id % 10 AS g2, SUM(t1) AS t2
-           FROM l1 GROUP BY 1)
-         SELECT g2 % 3 AS g3, CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(t2) AS DOUBLE) AS t3
-         FROM l2 GROUP BY 1""",
-
-    // corpus arithmetic: 500-at-sf0.01 originals + 30 clones + a full
-    // second copy, minus the 10 deleted ids; ledger reset to 0 by the
-    // retrain and untouched by the masked delete, pin current
-    "sql_ann_status" ->
-      """SELECT CAST(2 * (SELECT count(*) FROM embeddings) + 20
-             AS BIGINT) AS total_vectors,
-           CAST(0 AS BIGINT) AS routed_since_train,
-           CAST(0.0 AS DOUBLE) AS routed_frac,
-           TRUE AS current""",
-
-    "sql_mv_filtered" ->
-      """WITH src AS (
-           SELECT user_id, value FROM events
-           WHERE value <= 400 AND event_type = 'click' AND value > 1)
-         SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total
-         FROM src GROUP BY user_id""",
-
-    "mv_mor_groups" ->
-      """WITH src AS (
-           SELECT user_id, value FROM events
-           WHERE (event_id % 3 IN (0, 1) AND user_id % 10 <> 3)
-              OR event_id % 3 = 2)
-         SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS total
-         FROM src GROUP BY user_id""",
-
-    "sql_remove_orphans" ->
-      """SELECT n_nationkey AS k, n_name AS name FROM nation""",
-
-    "sql_retention_delete_ts" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n,
-           CAST(min(epoch_ns(ts) // 1000) AS BIGINT) AS first_us,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sv
-         FROM events
-         WHERE epoch_ns(ts) >= 1704931200000000000
-           AND epoch_ns(ts) < 1706745600000000000""",
-
-    "delete_dv" ->
-      """SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS sum_price
-         FROM orders
-         WHERE NOT (o_totalprice > 150000 AND o_orderstatus = 'F')
-         GROUP BY o_orderstatus""",
-
-    "sql_update_dv" ->
-      """WITH upd AS (
-           SELECT c_custkey,
-             CASE WHEN c_mktsegment = 'BUILDING' AND c_acctbal < 0
-                  THEN concat('N-', c_name) ELSE c_name END AS c_name,
-             CASE WHEN c_mktsegment = 'BUILDING' AND c_acctbal < 0
-                  THEN c_acctbal + 1000 ELSE c_acctbal END AS c_acctbal,
-             c_mktsegment
-           FROM customer)
-         SELECT c_custkey, c_name, c_acctbal, c_mktsegment
-         FROM upd
-         WHERE NOT (c_acctbal > 9000 AND c_mktsegment = 'MACHINERY')""",
-
-    "sql_file_skip_join" ->
-      """SELECT c.c_nationkey AS nationkey, count(*) AS n_cust,
-           CAST(SUM(CAST(c.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal
-         FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
-         WHERE n.n_regionkey = 2
-         GROUP BY c.c_nationkey""",
-
-    "sql_hidden_partitioning" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sv
-         FROM events
-         WHERE epoch_ns(ts) >= 1704412800000000000
-           AND epoch_ns(ts) < 1705017600000000000""",
-
-    "sql_bucket_join" ->
-      """SELECT c.c_custkey AS custkey, count(*) AS n_ord,
-           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS spend
-         FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-         GROUP BY c.c_custkey""",
-
-    "sql_rebucket" ->
-      """SELECT c.c_custkey AS custkey, count(*) AS n_ord,
-           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS spend
-         FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-         GROUP BY c.c_custkey""",
-
-    "sql_sorted_join" ->
-      """SELECT c.c_custkey AS custkey, count(*) AS n_ord,
-           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS spend
-         FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-         GROUP BY c.c_custkey""",
-
-    "sql_changes" ->
-      """SELECT event_id, user_id, value,
-           CAST(3 AS BIGINT) AS commit_v, 'insert' AS change_type
-         FROM events WHERE event_id % 2 = 1
-         UNION ALL
-         SELECT event_id, CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE),
-           CAST(2 AS BIGINT), 'delete'
-         FROM events WHERE event_id % 10 = 0""",
-
-    "sql_analyze" ->
-      """SELECT c.c_custkey AS custkey, count(*) AS n_ord,
-           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS spend
-         FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-         WHERE c.c_mktsegment = 'BUILDING'
-         GROUP BY c.c_custkey""",
-
-    "sql_ndv_broadcast" ->
-      """SELECT c.c_custkey AS custkey, count(*) AS n_ord,
-           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS spend
-         FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-         WHERE c.c_mktsegment = 'BUILDING'
-         GROUP BY c.c_custkey""",
-
-    "sql_sorted_multifile" ->
-      """SELECT c.c_custkey AS custkey, count(*) AS n_ord,
-           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS spend
-         FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-         GROUP BY c.c_custkey""",
-
-    "sql_resort" ->
-      """SELECT c.c_custkey AS custkey, count(*) AS n_ord,
-           CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-             AS spend
-         FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-         GROUP BY c.c_custkey""",
-
-    "sql_sorted_window" ->
-      """SELECT o_orderstatus, o_orderkey,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-             PARTITION BY o_orderstatus ORDER BY o_orderkey)
-             AS DOUBLE) AS running
-         FROM orders""",
-
-    "sql_bucket_grid" ->
-      """SELECT a.l_orderkey AS okey, a.l_linenumber AS line,
-           CAST(SUM(CAST(a.l_quantity * b.l_extendedprice
-             AS DECIMAL(28,4))) AS DOUBLE) AS qp
-         FROM lineitem a JOIN lineitem b
-           ON a.l_orderkey = b.l_orderkey
-          AND a.l_linenumber = b.l_linenumber
-         GROUP BY a.l_orderkey, a.l_linenumber""",
-
-    "sql_rebucket_grid" ->
-      """SELECT a.l_orderkey AS okey, a.l_linenumber AS line,
-           CAST(SUM(CAST(a.l_quantity * b.l_quantity
-             AS DECIMAL(28,4))) AS DOUBLE) AS qq
-         FROM lineitem a JOIN lineitem b
-           ON a.l_orderkey = b.l_orderkey
-          AND a.l_linenumber = b.l_linenumber
-         GROUP BY a.l_orderkey, a.l_linenumber""",
-
-    "sql_update" ->
-      """SELECT p_partkey,
-           CASE WHEN p_size >= 30 THEN 'U-' || p_name ELSE p_name END
-             AS p_name,
-           p_size,
-           CASE WHEN p_size >= 30 THEN p_retailprice + 100
-                ELSE p_retailprice END AS p_retailprice
-         FROM part""",
-
-    "sql_update_mor" ->
-      """SELECT c_custkey, c_acctbal,
-           CASE WHEN c_acctbal < 0 THEN 'NEG' ELSE c_mktsegment END
-             AS c_mktsegment
-         FROM customer WHERE c_custkey % 7 <> 0""",
-
-    "schema_evolution_rename" ->
-      """SELECT c_custkey, c_name AS cust_name, c_acctbal FROM customer""",
-
-    "cdc_schema_evolution" ->
-      """SELECT c_custkey, c_name AS cust_name,
-           CAST(NULL AS VARCHAR) AS segment, CAST(1 AS BIGINT) AS commit_v
-         FROM customer WHERE c_custkey % 3 = 0
-         UNION ALL
-         SELECT c_custkey, c_name, CAST(NULL AS VARCHAR), CAST(3 AS BIGINT)
-         FROM customer WHERE c_custkey % 3 = 1
-         UNION ALL
-         SELECT c_custkey, c_name, c_mktsegment, CAST(5 AS BIGINT)
-         FROM customer WHERE c_custkey % 3 = 2""",
-
-    "cdc_cow_delete" ->
-      """SELECT event_id, user_id, value,
-           CAST(1 AS BIGINT) AS commit_v, 'delete' AS change_type
-         FROM events WHERE event_id % 7 = 0""",
-
-    "schema_drift" ->
-      """SELECT event_id, user_id, CAST(NULL AS DOUBLE) AS value
-         FROM events WHERE event_id % 2 = 0
-         UNION ALL
-         SELECT event_id, user_id, value
-         FROM events WHERE event_id % 2 = 1""",
-
-    "schema_widen" ->
-      """SELECT c_custkey, CAST(c_nationkey AS BIGINT) AS c_nationkey,
-           CAST(CAST(c_acctbal AS REAL) AS DOUBLE) AS c_acctbal
-         FROM customer WHERE c_custkey % 2 = 0
-         UNION ALL
-         SELECT c_custkey, CAST(c_nationkey AS BIGINT),
-           CAST(c_acctbal AS DOUBLE)
-         FROM customer WHERE c_custkey % 2 = 1""",
-
-    "zorder3_scan" ->
-      """WITH mm AS (SELECT min(l_suppkey) AS mn, max(l_suppkey) AS mx
-                     FROM lineitem),
-            b AS (SELECT mn + (mx - mn) // 3 AS lo,
-                         mn + (mx - mn) // 3 + (mx - mn) // 10 AS hi
-                  FROM mm)
-         SELECT l_orderkey, l_partkey, l_suppkey, l_quantity
-         FROM lineitem, b
-         WHERE l_suppkey >= lo AND l_suppkey <= hi""",
-
-    "cdc_restore" ->
-      """SELECT event_id, user_id, value,
-           CAST(2 AS BIGINT) AS commit_v, 'insert' AS change_type
-         FROM events WHERE event_id % 5 = 0""",
-
-    "cdc_cow_merge" ->
-      """SELECT s_suppkey, s_name, s_acctbal,
-           CAST(1 AS BIGINT) AS commit_v, 'delete' AS change_type
-         FROM supplier WHERE s_suppkey % 5 = 0
-         UNION ALL
-         SELECT s_suppkey, s_name, s_acctbal + 100.0,
-           CAST(1 AS BIGINT), 'insert'
-         FROM supplier WHERE s_suppkey % 5 = 0
-         UNION ALL
-         SELECT s_suppkey + 1000000, s_name, s_acctbal,
-           CAST(1 AS BIGINT), 'insert'
-         FROM supplier WHERE s_suppkey % 5 = 1""",
-
-    "merge_cow_str" ->
-      """WITH base AS (SELECT s_suppkey, s_name, s_nationkey, s_acctbal
-                       FROM supplier),
-          mm AS (SELECT min(s_suppkey) AS mn, max(s_suppkey) AS mx FROM base),
-          b AS (SELECT mn + (mx - mn) // 3 AS lo,
-                       mn + (mx - mn) // 3 + (mx - mn) // 10 AS hi FROM mm)
-         SELECT s_suppkey, s_name, s_nationkey, s_acctbal
-         FROM base, b WHERE s_suppkey < lo OR s_suppkey > hi
-         UNION ALL
-         SELECT s_suppkey, s_name, s_nationkey,
-                s_acctbal + 500 AS s_acctbal
-         FROM base, b WHERE s_suppkey >= lo AND s_suppkey <= hi
-         UNION ALL
-         SELECT s_suppkey + 90000 AS s_suppkey,
-                'FreshSupplier#' || CAST(s_suppkey AS VARCHAR) AS s_name,
-                CAST(3 AS INT) AS s_nationkey, 1.25 AS s_acctbal
-         FROM base WHERE s_suppkey % 9 = 0""",
-
-    "delete_cow" ->
-      """WITH base AS (SELECT c_custkey, c_name, c_nationkey, c_acctbal,
-                              c_mktsegment FROM customer),
-          mm AS (SELECT min(c_custkey) AS mn, max(c_custkey) AS mx FROM base),
-          b AS (SELECT mn + (mx - mn) // 3 AS lo,
-                       mn + (mx - mn) // 3 + (mx - mn) // 10 AS hi FROM mm)
-         SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-         FROM base, b
-         WHERE NOT (c_custkey >= lo AND c_custkey <= hi
-                    AND c_mktsegment <> 'BUILDING')""",
-
-    "skip_in_scan" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value FROM events),
-          mm AS (SELECT min(event_id) AS mn, max(event_id) AS mx FROM e),
-          b AS (SELECT mn + (mx - mn) // 3 AS b1 FROM mm)
-         SELECT event_id, user_id, event_type, value
-         FROM e, b
-         WHERE event_id IN (b1 + 1, b1 + 5, b1 + 9)
-            OR (event_id >= b1 + 20 AND event_id <= b1 + 40)""",
-
-    "skip_bloom_scan" ->
-      """WITH d AS (SELECT doc_id, lang, source, n_chars FROM documents),
-          mm AS (SELECT min(doc_id) AS mn FROM d)
-         SELECT doc_id, lang, source, n_chars
-         FROM d, mm
-         WHERE doc_id IN (mn + 7, mn + 123, mn + 311)""",
-
-    "delete_mor" ->
-      """WITH c AS (SELECT c_custkey, c_name, c_acctbal FROM customer)
-         SELECT c_custkey, c_name, c_acctbal FROM c WHERE c_custkey % 7 <> 0
-         UNION ALL
-         SELECT c_custkey, 'R-' || c_name AS c_name,
-                c_acctbal + 1 AS c_acctbal
-         FROM c WHERE c_custkey % 14 = 0""",
-
-    "skip_null_scan" ->
-      """SELECT event_id, user_id, value AS v
-         FROM events WHERE event_id % 3 <> 0""",
-
-    "vacuum_scan" ->
-      """SELECT event_id, user_id, value FROM events
-         WHERE event_id % 3 <> 2""",
-
-    "analyze_profile" ->
-      """SELECT count(*) AS n_rows,
-           count(*) FILTER (user_id IS NULL) AS null_user_id,
-           count(*) FILTER (value IS NULL) AS null_value,
-           min(event_id) AS min_event_id,
-           max(event_id) AS max_event_id,
-           count(DISTINCT event_type) AS n_event_types,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-         FROM events""",
-
-    "skip_partition_scan" ->
-      """WITH e AS (SELECT event_id, user_id, value,
-             epoch_us(ts) // 86400000000 AS p_day FROM events),
-          mm AS (SELECT min(p_day) AS lo FROM e)
-         SELECT event_id, user_id, value, p_day
-         FROM e, mm WHERE p_day = lo""",
-
-    "schema_evolution" ->
-      """SELECT event_id, user_id, CAST(NULL AS VARCHAR) AS event_type
-         FROM events WHERE event_id % 2 = 0
-         UNION ALL
-         SELECT event_id, user_id, event_type
-         FROM events WHERE event_id % 2 <> 0""",
-
-    "meta_count_scan" ->
-      """SELECT count(*) AS n_rows FROM events""",
-
-    "check_constraint" ->
-      """SELECT c_custkey, c_name, c_acctbal FROM customer""",
-
-    "compact_small" ->
-      """SELECT event_id, user_id, event_type, value FROM events""",
-
-    "src_csv_roundtrip" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM nation""",
-
-    "src_jsonl_roundtrip" ->
-      """SELECT c_custkey, c_name, c_acctbal FROM customer""",
-
-    "src_orc_roundtrip" ->
-      """SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier""",
-
-    "src_txlog_write" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM nation""",
-
-    "src_txlog_format" ->
-      """SELECT c_custkey, c_name, c_acctbal FROM customer
-         WHERE c_mktsegment = 'BUILDING' AND c_acctbal > 1000""",
-
-    "stream_txlog_feed" ->
-      """SELECT event_id, user_id, value FROM events""",
-
-    "stream_maintenance_skip" ->
-      """SELECT event_id, user_id, value FROM events""",
-
-    "stream_cdc_feed" ->
-      """SELECT event_id, user_id, value FROM events
-         WHERE event_id % 10 <> 0""",
-
-    "stream_txlog_pipe" ->
-      """SELECT event_id, user_id, event_type FROM events""",
-
-    "stream_dedup" ->
-      """SELECT event_id, user_id, value, epoch_us(ts) AS ts_us
-         FROM events""",
-
-    "stream_schema_add" ->
-      """SELECT event_id, value,
-           CASE WHEN event_id % 2 = 1 THEN 'n' ELSE NULL END AS tag
-         FROM events""",
-
-    "stream_apply_changes" ->
-      """SELECT user_id, ts_us, event_id, value FROM (
-           SELECT user_id, epoch_ns(ts) // 1000 AS ts_us, event_id,
-             value,
-             row_number() OVER (PARTITION BY user_id
-               ORDER BY epoch_ns(ts) DESC, event_id DESC) AS rn
-           FROM events) WHERE rn = 1""",
-
-    "inc_agg_refresh" ->
-      """SELECT user_id, count(*) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-         FROM events GROUP BY user_id""",
-
-    "ivm_refresh" ->
-      """SELECT user_id, event_type, count(*) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
-         FROM events GROUP BY user_id, event_type""",
-
-    "ivm_refresh_mor" ->
-      """WITH live AS (
-           SELECT user_id, CAST(value AS DECIMAL(18,6)) AS v
-           FROM events
-           WHERE event_id % 3 IN (0, 1) AND user_id % 10 <> 3
-           UNION ALL
-           SELECT user_id, CAST(value AS DECIMAL(18,6)) AS v
-           FROM events WHERE event_id % 3 = 2)
-         SELECT user_id, count(*) AS n, CAST(SUM(v) AS DOUBLE) AS total
-         FROM live GROUP BY user_id""",
-
-    "u3_insert_only_column" ->
-      """WITH inc AS (
-           SELECT c_custkey, 'U3-' || c_name AS c_name,
-                  CAST(c_nationkey + 1 AS INT) AS c_nationkey,
-                  c_acctbal + 100 AS c_acctbal, 'CHANGED' AS c_mktsegment
-           FROM customer WHERE c_custkey % 3 = 0
-           UNION ALL
-           SELECT c_custkey + 600000, 'F-' || CAST(c_custkey AS VARCHAR),
-                  CAST(2 AS INT), 1.5, 'FRESH'
-           FROM customer WHERE c_custkey % 13 = 0)
-         SELECT COALESCE(c.c_custkey, i.c_custkey) AS c_custkey,
-           CASE WHEN i.c_custkey IS NOT NULL THEN i.c_name ELSE c.c_name END AS c_name,
-           CASE WHEN i.c_custkey IS NOT NULL THEN i.c_nationkey ELSE c.c_nationkey END AS c_nationkey,
-           CASE WHEN i.c_custkey IS NOT NULL THEN i.c_acctbal ELSE c.c_acctbal END AS c_acctbal,
-           CASE WHEN c.c_custkey IS NOT NULL THEN c.c_mktsegment ELSE i.c_mktsegment END AS c_mktsegment
-         FROM customer c FULL OUTER JOIN inc i ON c.c_custkey = i.c_custkey""",
-
-    "p3_not_null_skip" ->
-      """SELECT event_id, user_id,
-           CAST(json_extract_string(props, '$.k') AS INT) AS k_val
-         FROM events
-         WHERE CAST(json_extract_string(props, '$.k') AS INT) IS NOT NULL
-           AND CAST(json_extract_string(props, '$.k') AS INT) >= 75""",
-
-    "p5_quarantine" ->
-      """SELECT event_id,
-           CASE WHEN event_id % 7 = 0 THEN NULL
-                ELSE TRY_CAST(json_extract_string(props, '$.k') AS INT)
-           END AS k_val,
-           CASE WHEN event_id % 7 = 0
-                  OR TRY_CAST(json_extract_string(props, '$.k') AS INT)
-                     IS NULL
-                THEN 'unparseable json'
-                ELSE 'ok' END AS status,
-           TIMESTAMP '2024-06-01 00:00:00' AS loaded_at
-         FROM events""",
-
-    "f5_employee_names" ->
-      """SELECT c_custkey,
-           'L' || CAST(c_custkey AS VARCHAR)
-             || ' F' || CAST(c_custkey % 100 AS VARCHAR)
-             || CASE WHEN c_custkey % 4 = 0
-                       THEN '|Solo' || CAST(c_custkey AS VARCHAR)
-                     WHEN c_custkey % 4 = 1
-                       THEN '|Str' || CAST(c_custkey AS VARCHAR)
-                     ELSE '' END AS employee_names
-         FROM customer""",
-
-    "a7_count_writeback" ->
-      """WITH f AS (
-           SELECT user_id, value AS cnt FROM (
-             SELECT user_id, value,
-               row_number() OVER (PARTITION BY user_id
-                                  ORDER BY ts, event_id) AS rn
-             FROM events WHERE value > 100)
-           WHERE rn = 1)
-         SELECT c_custkey, c_name,
-           CASE WHEN f.cnt IS NOT NULL AND c_custkey % 10 <> 3
-                THEN f.cnt ELSE c_acctbal END AS c_acctbal
-         FROM customer LEFT JOIN f ON c_custkey = f.user_id""",
-
-    "e3_lessons_flatten" -> {
-      val searchSrc = "subject || ' ' || subject_full || ' ' || entity_name" +
-        " || ' ' || replace(auditories, '|', ' ')"
-      s"""WITH base AS (
-            SELECT c_custkey AS k, c_mktsegment AS seg FROM customer
-            WHERE c_custkey % 4 < 3 AND c_custkey % 11 <> 0),
-          f AS (
-            SELECT 'C-' || CAST(k AS VARCHAR) AS entity_name,
-              CAST(k % 4 + 1 AS INT) AS day_of_week,
-              CASE WHEN k % 5 = 0 THEN 'Без названия' ELSE seg END AS subject,
-              CASE WHEN k % 7 = 0
-                   THEN CASE WHEN k % 5 = 0 THEN 'Без названия' ELSE seg END
-                   ELSE 'FULL ' || seg END AS subject_full,
-              CAST((k % 10 + 8) * 3600 + (k % 60) * 60 AS INT) AS start_sec,
-              CAST((k % 10 + 9) * 3600 + (k % 60) * 60 AS INT) AS end_sec,
-              CASE WHEN k % 6 IN (0, 1) THEN '1|2|3|4'
-                   ELSE '1|' || CAST(k % 3 + 1 AS VARCHAR) END AS week_numbers,
-              CAST(CASE WHEN k % 2 = 0 THEN 0 ELSE 1 END AS INT) AS num_subgroup,
-              (CASE WHEN k % 8 = 0 THEN '77'
-                    ELSE 'R-' || CAST(k % 20 AS VARCHAR) END)
-                || '|' || CAST(k % 30 AS VARCHAR)
-                || '|S-' || CAST(k % 10 AS VARCHAR)
-                || '|' || CAST(k % 7 AS VARCHAR) AS auditories,
-              '[{"name":"G-' || CAST(k % 5 AS VARCHAR)
-                || '","numberOfStudents":' || CAST(k % 40 AS VARCHAR)
-                || '}]' AS related_groups
-            FROM base)
-          SELECT entity_name, day_of_week, subject, subject_full, start_sec,
-                 end_sec, week_numbers, num_subgroup, auditories,
-                 related_groups,
-                 ${lexOf(searchSrc)} AS search_lexemes
-          FROM f"""
-    },
-
-    "e4_exams_flatten" -> {
-      val searchSrc = "subject || ' ' || subject_full || ' ' || entity_name" +
-        " || ' ' || replace(auditories, '|', ' ')"
-      s"""WITH f AS (
-            SELECT 'C-' || CAST(c_custkey AS VARCHAR) AS entity_name,
-              CAST(NULL AS INT) AS day_of_week,
-              CASE WHEN c_custkey % 3 = 0 THEN 'Экзамен'
-                   ELSE c_mktsegment END AS subject,
-              CASE WHEN c_custkey % 3 = 0 THEN 'Экзамен'
-                   ELSE c_mktsegment END AS subject_full,
-              make_date(2024, CAST(c_custkey % 12 + 1 AS INT),
-                        CAST(c_custkey % 28 + 1 AS INT)) AS exact_date,
-              CAST(CASE WHEN c_custkey % 5 = 0 THEN 0
-                   ELSE (c_custkey % 8 + 9) * 3600 + (c_custkey % 60) * 60
-                   END AS INT) AS start_sec,
-              CAST(CASE WHEN c_custkey % 5 = 0 THEN 0
-                   ELSE (c_custkey % 8 + 10) * 3600 + (c_custkey % 60) * 60
-                   END AS INT) AS end_sec,
-              '' AS week_numbers,
-              CAST(0 AS INT) AS num_subgroup,
-              'E-' || CAST(c_custkey % 6 AS VARCHAR)
-                || '|Hall ' || CAST(c_custkey % 4 AS VARCHAR) AS auditories
-            FROM customer WHERE c_custkey % 9 <> 0)
-          SELECT entity_name, day_of_week, subject, subject_full, exact_date,
-                 start_sec, end_sec, week_numbers, num_subgroup, auditories,
-                 ${lexOf(searchSrc)} AS search_lexemes
-          FROM f"""
-    })
 }

@@ -50,8 +50,16 @@ object MultimodalQueries {
     unhex(lit("00000000")), be4(dur),                       // duration u64
     unhex(lit("0" * 160)))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_binary_meta" -> ((s, dir) =>
+  val queries: Seq[Query] = Seq(
+    Query("mm_binary_meta",
+      """SELECT doc_id AS media_id,
+           CASE WHEN doc_id % 3 = 0 THEN 'image'
+                WHEN doc_id % 3 = 1 THEN 'audio'
+                ELSE 'video' END AS kind,
+           CAST(octet_length(encode(text)) AS INT) AS n_bytes,
+           doc_id AS source_doc,
+           lower(hex(encode(substring(text, 1, 4)))) AS magic
+         FROM documents""")((s, dir) =>
       Multimodal.fromDocuments(t(s, dir, "documents")).select(
         col("media_id"), col("kind"),
         octet_length(col("media_bytes")).as("n_bytes"),
@@ -69,7 +77,15 @@ object MultimodalQueries {
     // recomputes the encoded dims arithmetically, so the whole parse is
     // hash-checked. Runs map-side in whole-stage codegen over header bytes
     // only — the 100 TB metadata-pass shape (payloads never move).
-    "mm_image_dims" -> ((s, dir) => {
+    Query("mm_image_dims",
+      """SELECT doc_id AS media_id,
+           CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
+                           WHEN 2 THEN 'gif' END AS format,
+           CASE WHEN doc_id % 4 < 3
+                THEN CAST(doc_id % 1920 + 1 AS INT) END AS width,
+           CASE WHEN doc_id % 4 < 3
+                THEN CAST(doc_id % 1080 + 1 AS INT) END AS height
+         FROM documents""")((s, dir) => {
       graft.catalyst.ImageDims.register(s)
       val d = t(s, dir, "documents")
       val w = (col("doc_id") % 1920 + 1).cast("int")
@@ -104,7 +120,14 @@ object MultimodalQueries {
     // arithmetically from the same fields, so the byte-level parse is
     // hash-checked. Header-only metadata pass over mapPartitions — the
     // audio twin of mm_image_dims.
-    "mm_wav_meta" -> ((s, dir) => {
+    Query("mm_wav_meta",
+      """SELECT doc_id AS media_id,
+           CAST(44 AS INT) AS n_bytes,
+           ((n_chars * 13) % 100000 + 1000) * 1000
+             // ((8000 + (doc_id % 5) * 4000) * (doc_id % 2 + 1) * 2)
+             AS duration_ms,
+           TRUE AS ok
+         FROM documents""")((s, dir) => {
       implicit val ss: SparkSession = s
       import s.implicits._
       def le2(c: org.apache.spark.sql.Column) =
@@ -146,7 +169,15 @@ object MultimodalQueries {
     // parse is hash-checked. The 100 TB shape: header-only decode per
     // row, iterator flatMap — payload bytes never leave the executor,
     // output is O(videos × n frames).
-    "mm_frame_sample" -> ((s, dir) => {
+    // duration_ms = mvhd duration units * 1000 // timescale, then the
+    // i-th of 4 evenly spaced frames — integer division at BOTH steps,
+    // exactly as the box walk + frameSample compute it
+    Query("mm_frame_sample",
+      """SELECT doc_id AS media_id, CAST(i AS INT) AS frame_idx,
+           (((n_chars * 11) % 90000 + 600) * 1000
+              // (600 + (doc_id % 4) * 200)) * i // 4 AS frame_ms
+         FROM documents,
+           (SELECT unnest(generate_series(0, 3)) AS i) g""")((s, dir) => {
       implicit val ss: SparkSession = s
       import s.implicits._
       val ts = (lit(600) + (col("doc_id") % 4) * 200).cast("int")
@@ -168,7 +199,15 @@ object MultimodalQueries {
     // and duration_ms are all recomputed arithmetically by the oracle, so
     // the whole box walk is hash-checked — the video completion of
     // mm_image_dims / mm_wav_meta. Runs map-side in whole-stage codegen.
-    "mm_video_meta" -> ((s, dir) => {
+    Query("mm_video_meta",
+      """SELECT doc_id AS media_id,
+           CASE WHEN doc_id % 3 < 2 THEN 'isom' END AS brand,
+           CASE WHEN doc_id % 3 < 2
+                THEN 600 + (doc_id % 4) * 200 END AS timescale,
+           CASE WHEN doc_id % 3 < 2
+                THEN ((n_chars * 11) % 90000 + 600) * 1000
+                       // (600 + (doc_id % 4) * 200) END AS duration_ms
+         FROM documents""")((s, dir) => {
       graft.catalyst.Mp4Meta.register(s)
       val d = t(s, dir, "documents")
       val ts = (lit(600) + (col("doc_id") % 4) * 200).cast("int")
@@ -187,7 +226,17 @@ object MultimodalQueries {
     // hash is computed over the raw bytes map-side, the only shuffle is the
     // hash-keyed window, and payloads themselves never move (at 100 TB the
     // shuffle carries 32-byte digests, not terabytes of media).
-    "mm_dedup" -> ((s, dir) => {
+    // DuckDB's md5 takes VARCHAR and hashes its UTF-8 bytes — exactly the
+    // payload bytes (media_bytes = encode(text)) Spark's binary md5 sees.
+    Query("mm_dedup",
+      """SELECT doc_id AS media_id,
+           CASE WHEN doc_id % 3 = 0 THEN 'image'
+                WHEN doc_id % 3 = 1 THEN 'audio'
+                ELSE 'video' END AS kind,
+           md5(text) AS content_hash,
+           MIN(doc_id) OVER (PARTITION BY md5(text)) AS canonical_id,
+           doc_id <> MIN(doc_id) OVER (PARTITION BY md5(text)) AS is_dup
+         FROM documents""")((s, dir) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("content_hash")
       Multimodal.fromDocuments(t(s, dir, "documents"))
@@ -206,7 +255,14 @@ object MultimodalQueries {
     // an all-pairs pixel compare (at 100 TB the shuffle carries 8-byte
     // hashes, not pixels). The requires prove decode is real: byte
     // signatures differ where perceptual hashes agree.
-    "mm_pixel_dedup" -> ((s, dir) => {
+    // perceptual clusters = the 40 pattern groups; cluster id = its
+    // smallest doc, exactly what min-over-ahash yields when the hash
+    // collapses the three render sizes
+    Query("mm_pixel_dedup",
+      """SELECT CAST(min(doc_id) AS BIGINT) AS cluster_id,
+           CAST(count(*) AS BIGINT) AS n_docs
+         FROM documents WHERE doc_id < 400
+         GROUP BY doc_id % 40""")((s, dir) => {
       import s.implicits._
       val ids = t(s, dir, "documents").select(col("doc_id"))
         .where(col("doc_id") < 400).as[Long]
@@ -247,7 +303,15 @@ object MultimodalQueries {
     // replays the closed-form cluster structure. Inter-frame codecs
     // (H.264-class) need a native library: documented out — their
     // container metadata walk is mm_video_meta.
-    "mm_mjpeg_frames" -> ((s, dir) => {
+    // decoded-content clusters = the 24 pattern groups; frame counts are
+    // the closed form the synth used — what the hash groupBy yields when
+    // the perceptual hash collapses qualities and sizes
+    Query("mm_mjpeg_frames",
+      """SELECT CAST(min(doc_id) AS BIGINT) AS cluster_id,
+           CAST(count(*) AS BIGINT) AS n_streams,
+           CAST(SUM(2 + doc_id % 3) AS BIGINT) AS n_frames
+         FROM documents WHERE doc_id < 300
+         GROUP BY doc_id % 24""")((s, dir) => {
       import s.implicits._
       val ids = t(s, dir, "documents").select(col("doc_id"))
         .where(col("doc_id") < 300).as[Long]
@@ -287,7 +351,12 @@ object MultimodalQueries {
     // crossing rate are computed from the actual samples — the closed
     // forms (rms = A exactly, zcr = 1.0) let DuckDB recompute them
     // arithmetically, so the whole sample walk is hash-checked.
-    "mm_audio_pcm" -> ((s, dir) => {
+    Query("mm_audio_pcm",
+      """SELECT doc_id,
+           CAST(((doc_id % 5) + 1) * 4000 AS DOUBLE) AS rms,
+           CAST(((doc_id % 5) + 1) * 4000 AS BIGINT) AS peak,
+           CAST(1.0 AS DOUBLE) AS zcr
+         FROM documents WHERE doc_id < 400""")((s, dir) => {
       import s.implicits._
       val ids = t(s, dir, "documents").select(col("doc_id"))
         .where(col("doc_id") < 400).as[Long]
@@ -299,92 +368,4 @@ object MultimodalQueries {
         (id, f.rms, f.peak, f.zcr)
       }).toDF("doc_id", "rms", "peak", "zcr")
     }))
-
-  val oracle: Map[String, String] = Map(
-    "mm_binary_meta" ->
-      """SELECT doc_id AS media_id,
-           CASE WHEN doc_id % 3 = 0 THEN 'image'
-                WHEN doc_id % 3 = 1 THEN 'audio'
-                ELSE 'video' END AS kind,
-           CAST(octet_length(encode(text)) AS INT) AS n_bytes,
-           doc_id AS source_doc,
-           lower(hex(encode(substring(text, 1, 4)))) AS magic
-         FROM documents""",
-
-    "mm_image_dims" ->
-      """SELECT doc_id AS media_id,
-           CASE doc_id % 4 WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg'
-                           WHEN 2 THEN 'gif' END AS format,
-           CASE WHEN doc_id % 4 < 3
-                THEN CAST(doc_id % 1920 + 1 AS INT) END AS width,
-           CASE WHEN doc_id % 4 < 3
-                THEN CAST(doc_id % 1080 + 1 AS INT) END AS height
-         FROM documents""",
-
-    "mm_wav_meta" ->
-      """SELECT doc_id AS media_id,
-           CAST(44 AS INT) AS n_bytes,
-           ((n_chars * 13) % 100000 + 1000) * 1000
-             // ((8000 + (doc_id % 5) * 4000) * (doc_id % 2 + 1) * 2)
-             AS duration_ms,
-           TRUE AS ok
-         FROM documents""",
-
-    // duration_ms = mvhd duration units * 1000 // timescale, then the
-    // i-th of 4 evenly spaced frames — integer division at BOTH steps,
-    // exactly as the box walk + frameSample compute it
-    "mm_frame_sample" ->
-      """SELECT doc_id AS media_id, CAST(i AS INT) AS frame_idx,
-           (((n_chars * 11) % 90000 + 600) * 1000
-              // (600 + (doc_id % 4) * 200)) * i // 4 AS frame_ms
-         FROM documents,
-           (SELECT unnest(generate_series(0, 3)) AS i) g""",
-
-    "mm_video_meta" ->
-      """SELECT doc_id AS media_id,
-           CASE WHEN doc_id % 3 < 2 THEN 'isom' END AS brand,
-           CASE WHEN doc_id % 3 < 2
-                THEN 600 + (doc_id % 4) * 200 END AS timescale,
-           CASE WHEN doc_id % 3 < 2
-                THEN ((n_chars * 11) % 90000 + 600) * 1000
-                       // (600 + (doc_id % 4) * 200) END AS duration_ms
-         FROM documents""",
-
-    // DuckDB's md5 takes VARCHAR and hashes its UTF-8 bytes — exactly the
-    // payload bytes (media_bytes = encode(text)) Spark's binary md5 sees.
-    "mm_dedup" ->
-      """SELECT doc_id AS media_id,
-           CASE WHEN doc_id % 3 = 0 THEN 'image'
-                WHEN doc_id % 3 = 1 THEN 'audio'
-                ELSE 'video' END AS kind,
-           md5(text) AS content_hash,
-           MIN(doc_id) OVER (PARTITION BY md5(text)) AS canonical_id,
-           doc_id <> MIN(doc_id) OVER (PARTITION BY md5(text)) AS is_dup
-         FROM documents""",
-
-    // perceptual clusters = the 40 pattern groups; cluster id = its
-    // smallest doc, exactly what min-over-ahash yields when the hash
-    // collapses the three render sizes
-    "mm_pixel_dedup" ->
-      """SELECT CAST(min(doc_id) AS BIGINT) AS cluster_id,
-           CAST(count(*) AS BIGINT) AS n_docs
-         FROM documents WHERE doc_id < 400
-         GROUP BY doc_id % 40""",
-
-    // decoded-content clusters = the 24 pattern groups; frame counts are
-    // the closed form the synth used — what the hash groupBy yields when
-    // the perceptual hash collapses qualities and sizes
-    "mm_mjpeg_frames" ->
-      """SELECT CAST(min(doc_id) AS BIGINT) AS cluster_id,
-           CAST(count(*) AS BIGINT) AS n_streams,
-           CAST(SUM(2 + doc_id % 3) AS BIGINT) AS n_frames
-         FROM documents WHERE doc_id < 300
-         GROUP BY doc_id % 24""",
-
-    "mm_audio_pcm" ->
-      """SELECT doc_id,
-           CAST(((doc_id % 5) + 1) * 4000 AS DOUBLE) AS rms,
-           CAST(((doc_id % 5) + 1) * 4000 AS BIGINT) AS peak,
-           CAST(1.0 AS DOUBLE) AS zcr
-         FROM documents WHERE doc_id < 400""")
 }

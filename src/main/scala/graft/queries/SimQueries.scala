@@ -184,875 +184,6 @@ object SimQueries {
       .withColumn("adc_dist",
         col("d0") + col("d1") + col("d2") + col("d3"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // PQ compression: every vector reduced to its 4 subspace codes.
-    "pq_codes" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      pqCodesPivot(emb)
-    }),
-
-    // PQ search (ADC): distances to the query are a 4-way lookup-table sum
-    // over the codes — the scan never touches the original vectors. The
-    // four per-subspace tables are 16 rows each, joined broadcast; the
-    // addition order is fixed (d0+d1+d2+d3) so the oracle reproduces the
-    // double sum exactly.
-    "pq_adc_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      pqAdcJoin(pqCodesPivot(emb), pqDistTables(emb))
-        .select(col("vec_id"), col("adc_dist"))
-        .orderBy(col("adc_dist"), col("vec_id"))
-        .limit(10)
-    }),
-
-    // IVF + PQ — the production billion-vector shape: the trained coarse
-    // quantizer routes the query to one cell (scan 1/k of the corpus), and
-    // within the cell ranking runs on 4-byte PQ codes via the ADC tables —
-    // neither the routing nor the ranking ever touches a full vector at
-    // scan time. At 100 TB: cell id partitions the codes table, the ADC
-    // tables broadcast, and the scan reads ~corpus/k × 4 bytes per row.
-    "ivfpq_topk" -> ((s, dir) => {
-      implicit val sp = s
-      val embRaw = t(s, dir, "embeddings")
-      val (assignedRaw, centsRaw) = graft.operators.KMeans.fit(embRaw, 8, 2)
-      // session-scoped caches: CacheManager dedups by plan, so repeated
-      // invocations (and the bench warmup) share ONE entry per artifact —
-      // nothing accumulates; `spark.catalog.clearCache()` releases them
-      val assigned = assignedRaw.cache()
-      val cents = centsRaw.cache()
-      val emb = embRaw.select(col("vec_id"),
-        asDouble(col("embedding")).as("v"))
-      val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      val bestCell = cents.crossJoin(broadcast(q))
-        .select(col("cluster"), cosine(col("cv"), col("qv")).as("cs"))
-        .orderBy(col("cs").desc, col("cluster"))
-        .limit(1).select(col("cluster").as("best_cluster"))
-      pqAdcJoin(
-        assigned.join(broadcast(bestCell),
-            col("cluster") === col("best_cluster"))
-          .select(col("vec_id"), col("cluster"))
-          .join(pqCodesPivot(emb), "vec_id"),
-        pqDistTables(emb))
-        .select(col("vec_id"), col("cluster"), col("adc_dist"))
-        .orderBy(col("adc_dist"), col("vec_id"))
-        .limit(5)
-    }),
-
-    // PERSISTED index lifecycle (operators.AnnIndex — round-5 gap #3
-    // closed): the corpus lands as a tx-log table, ONE build call trains
-    // and persists centroids/assignments/meta pinned to the corpus
-    // version, and the search LOADS the index — no k-means fit in the
-    // query (searchIvf never trains, by construction; the requires prove
-    // the lifecycle contract). Staleness: after the corpus advances, a
-    // requireFresh search REFUSES (the serving guard), while the pinned
-    // search still serves the snapshot it indexed — its results are
-    // required identical before and after the append. Oracle = the same
-    // 2-iteration trained-IVF recomputation as sim_ivf_kmeans_topk.
-    // INCREMENTAL index refresh — the growth path between full rebuilds:
-    // new corpus vectors route to the EXISTING centroids (broadcast
-    // argmax, no training pass), append to the assignments, and the pin
-    // advances — O(new vectors), never O(corpus). The requires walk the
-    // full lifecycle: fresh search refuses on the stale index, refresh
-    // adds exactly the appended count, and the post-refresh fresh search
-    // SUCCEEDS serving the union corpus. Oracle: train over the original
-    // corpus, serve over original+appended — bit-for-bit the refresh
-    // contract.
-    "sim_ivf_refresh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        col("embedding"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-annrf")
-      val corpusRoot = tmp.resolve("corpus").toString
-      val indexRoot = tmp.resolve("index").toString
-      val corpus = graft.sources.TxLogTable(s, corpusRoot)
-      corpus.commit(emb, overwrite = true)
-      graft.operators.AnnIndex.build(
-        s, corpusRoot, indexRoot, emb.schema, k = 8, iterations = 2,
-        pq = false)
-      corpus.commit(emb.filter(col("vec_id") < 4)
-        .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")),
-        overwrite = false)
-      val threw =
-        try {
-          graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5,
-            requireFresh = true).collect(); false
-        } catch { case _: IllegalArgumentException => true }
-      require(threw, "stale index must refuse before the refresh")
-      val (newPin, added) = graft.operators.AnnIndex.refresh(s, indexRoot)
-      require(added == 4L,
-        s"refresh must add exactly the appended vectors, got $added")
-      require(corpus.latestVersion.contains(newPin),
-        s"refresh must advance the pin to the corpus head: $newPin")
-      // requireFresh now passes — the refreshed index serves the union
-      graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5,
-        requireFresh = true)
-    }),
-
-    "sim_ivf_persisted" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        col("embedding"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-ann")
-      val corpusRoot = tmp.resolve("corpus").toString
-      val indexRoot = tmp.resolve("index").toString
-      val corpus = graft.sources.TxLogTable(s, corpusRoot)
-      corpus.commit(emb, overwrite = true)
-      val pinned = graft.operators.AnnIndex.build(
-        s, corpusRoot, indexRoot, emb.schema, k = 8, iterations = 2,
-        pq = false) // centroids-only index: the PQ twin builds its own
-      val fresh = graft.operators.AnnIndex.searchIvf(
-        s, indexRoot, queryVecId = 0L, topK = 5, requireFresh = true)
-        .collect()
-      // the corpus moves on: a fresh-index search must now refuse
-      corpus.commit(emb.filter(col("vec_id") < 4)
-        .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")),
-        overwrite = false)
-      val threw =
-        try {
-          graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5,
-            requireFresh = true).collect(); false
-        } catch { case _: IllegalArgumentException => true }
-      require(threw, "stale index must refuse a requireFresh search")
-      val pinnedSearch = graft.operators.AnnIndex.searchIvf(
-        s, indexRoot, 0L, 5, requireFresh = false)
-      require(pinnedSearch.collect().toSeq == fresh.toSeq,
-        "pinned-snapshot search changed after a corpus append — the index " +
-          s"is not actually pinned to v$pinned")
-      pinnedSearch
-    }),
-
-    // AUTO-SIZED persisted IVF (AnnIndex.buildAuto): k derives from the
-    // corpus so CELL SIZE, not cell count, is the scale invariant
-    // (k = ceil(rows / targetCell) — the same rule SemDedup scales by),
-    // and the quantizer trains on a bounded deterministic stride-sample
-    // (every stride-th vec_id), so training cost is O(sample × k) at
-    // any corpus size; the full corpus then takes exactly ONE
-    // broadcast-argmax routing pass. The requires pin the derived k
-    // and the recorded stride (> 1: the sampled path actually ran);
-    // the oracle replays sampled training + full routing in SQL.
-    "sim_ivf_autok" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        col("embedding"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-annauto")
-      val corpusRoot = tmp.resolve("corpus").toString
-      val indexRoot = tmp.resolve("index").toString
-      graft.sources.TxLogTable(s, corpusRoot).commit(emb,
-        overwrite = true)
-      val (_, k) = graft.operators.AnnIndex.buildAuto(
-        s, corpusRoot, indexRoot, emb.schema, iterations = 2,
-        targetCell = 64L, trainSample = 256L, pq = false)
-      val rows = emb.count()
-      require(k == ((rows + 63) / 64).toInt,
-        s"auto-k must track corpus size: k=$k rows=$rows")
-      val meta = graft.sources.TxLogTable(s, s"$indexRoot/meta")
-        .snapshot(graft.operators.AnnIndex.metaSchema).collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      require(meta("train_stride").toLong > 1,
-        s"the strided training sample must be in effect: $meta")
-      graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5,
-        requireFresh = true)
-    }),
-
-    // Persisted IVF+PQ (the full billion-vector serving path, nothing
-    // trained at query time): ONE build persists centroids, assignments,
-    // the 64×-compressed 4-byte codes AND the codebook; the search loads
-    // all four, routes via centroids, ranks on codes through ADC tables
-    // built from the persisted codebook — full vectors are touched only
-    // to fetch the query. Same staleness/pinning contract as
-    // sim_ivf_persisted; oracle = the ivfpq_topk recomputation.
-    "sim_ivfpq_persisted" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        col("embedding"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-annpq")
-      val corpusRoot = tmp.resolve("corpus").toString
-      val indexRoot = tmp.resolve("index").toString
-      val corpus = graft.sources.TxLogTable(s, corpusRoot)
-      corpus.commit(emb, overwrite = true)
-      graft.operators.AnnIndex.build(
-        s, corpusRoot, indexRoot, emb.schema, k = 8, iterations = 2)
-      val fresh = graft.operators.AnnIndex.searchIvfPq(
-        s, indexRoot, queryVecId = 0L, topK = 5, requireFresh = true)
-        .collect()
-      corpus.commit(emb.filter(col("vec_id") < 4)
-        .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")),
-        overwrite = false)
-      val threw =
-        try {
-          graft.operators.AnnIndex.searchIvfPq(s, indexRoot, 0L, 5,
-            requireFresh = true).collect(); false
-        } catch { case _: IllegalArgumentException => true }
-      require(threw, "stale index must refuse a requireFresh search")
-      val pinnedSearch = graft.operators.AnnIndex.searchIvfPq(
-        s, indexRoot, 0L, 5, requireFresh = false)
-      require(pinnedSearch.collect().toSeq == fresh.toSeq,
-        "pinned-snapshot IVF+PQ search changed after a corpus append")
-      pinnedSearch
-    }),
-
-    // Brute-force cosine against one query vector (vec_id 0) — the exact
-    // baseline every ANN variant is measured against.
-    // Batch ANN through the persisted index (the r14 VERDICT's #5):
-    // sim_topk_batch is brute-force N×corpus by design; this routes N
-    // queries through ONE persisted-IVF pass — probed-cells union
-    // scanned once, scoring an EQUI-join on the cell id (the in-query
-    // require proves no corpus × queries nested loop: every join in
-    // the scoring plan is hash/broadcast-hash on a key). Per-query
-    // results equal searchIvf's, pinned by an in-query compare on one
-    // of the queries. Oracle recomputes the trained cells + per-query
-    // routing + per-query top-k relationally.
-    "sim_ivf_batch" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        col("embedding"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-annb")
-      val corpusRoot = tmp.resolve("corpus").toString
-      val indexRoot = tmp.resolve("index").toString
-      graft.sources.TxLogTable(s, corpusRoot).commit(emb, overwrite = true)
-      graft.operators.AnnIndex.build(
-        s, corpusRoot, indexRoot, emb.schema, k = 8, iterations = 2,
-        pq = false)
-      val out = graft.operators.AnnIndex.searchIvfBatch(
-        s, indexRoot, queryVecIds = Seq(0L, 1L, 2L, 3L), topK = 5)
-      // batch ≡ per-query: query 2's slice equals the single search
-      val single = graft.operators.AnnIndex.searchIvf(s, indexRoot, 2L, 5)
-        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-      val slice = out.filter(col("q_id") === 2L)
-        .orderBy(col("q_cos").desc, col("vec_id"))
-        .collect().map(r => (r.getLong(1), r.getDouble(3))).toSeq
-      require(slice == single,
-        s"batch slice must equal the single search: $slice vs $single")
-      // the equivalence holds through the nprobe knob too
-      val single2 = graft.operators.AnnIndex.searchIvf(s, indexRoot, 3L, 5,
-          nprobe = 2)
-        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-      val slice2 = graft.operators.AnnIndex.searchIvfBatch(
-          s, indexRoot, queryVecIds = Seq(0L, 3L), topK = 5, nprobe = 2)
-        .filter(col("q_id") === 3L)
-        .orderBy(col("q_cos").desc, col("vec_id"))
-        .collect().map(r => (r.getLong(1), r.getDouble(3))).toSeq
-      require(slice2 == single2,
-        s"nprobe=2 batch slice must equal the single search: " +
-          s"$slice2 vs $single2")
-      // scoring never nests corpus × queries: the only loop-join in the
-      // plan is the k × N routing product (tiny, broadcast)
-      val plan = out.queryExecution.executedPlan.toString
-      require(!plan.contains("CartesianProduct"),
-        s"batch ANN must not cartesian:\n$plan")
-      out
-    }),
-
-    // Batch IVF+PQ through the persisted index: N queries ranked on the
-    // persisted 4-byte codes in ONE pass — the ADC lookup tables gain a
-    // query key (16 × N rows per subspace, still broadcast), candidates
-    // join their own query's table on (code, q_id), per-query window
-    // top-k closes. The in-query require pins batch ≡ single (same
-    // codes, same ADC fold, same tie-break); the oracle recomputes the
-    // trained cells + codes + per-query routing + per-query ADC sums.
-    "sim_ivfpq_batch" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        col("embedding"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-annpqb")
-      val corpusRoot = tmp.resolve("corpus").toString
-      val indexRoot = tmp.resolve("index").toString
-      graft.sources.TxLogTable(s, corpusRoot).commit(emb, overwrite = true)
-      graft.operators.AnnIndex.build(
-        s, corpusRoot, indexRoot, emb.schema, k = 8, iterations = 2)
-      val out = graft.operators.AnnIndex.searchIvfPqBatch(
-        s, indexRoot, queryVecIds = Seq(0L, 1L, 2L, 3L), topK = 5)
-      val single = graft.operators.AnnIndex.searchIvfPq(s, indexRoot, 1L, 5)
-        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-      val slice = out.filter(col("q_id") === 1L)
-        .orderBy(col("adc_dist"), col("vec_id"))
-        .collect().map(r => (r.getLong(1), r.getDouble(3))).toSeq
-      require(slice == single,
-        s"PQ batch slice must equal the single search: $slice vs $single")
-      val plan = out.queryExecution.executedPlan.toString
-      require(!plan.contains("CartesianProduct"),
-        s"batch ADC must not cartesian:\n$plan")
-      out
-    }),
-
-    // Multi-probe through the PERSISTED index (nprobe — the recall/cost
-    // knob production IVF serves with; the in-query quantizer has had
-    // it since sim_ivf_topk_nprobe2): routing widens to the nprobe best
-    // cells,
-    // candidates stay ~nprobe/k of the corpus, results only improve.
-    // Two in-query exactness requires pin the knob's contract: at every
-    // rank the nprobe=2 top-5 scores >= the nprobe=1 top-5 (the probed
-    // candidate set only grows, so recall is rank-wise monotone), and
-    // nprobe=k (all cells probed) EQUALS the brute-force top-5 — at
-    // full probe IVF is exact by construction.
-    "sim_ivf_nprobe" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        col("embedding"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-annnp")
-      val corpusRoot = tmp.resolve("corpus").toString
-      val indexRoot = tmp.resolve("index").toString
-      graft.sources.TxLogTable(s, corpusRoot).commit(emb, overwrite = true)
-      graft.operators.AnnIndex.build(
-        s, corpusRoot, indexRoot, emb.schema, k = 8, iterations = 2,
-        pq = false)
-      def scores(np: Int): Seq[Double] =
-        graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5,
-            nprobe = np)
-          .orderBy(col("q_cos").desc).collect().map(_.getDouble(2)).toSeq
-      require(scores(1).zip(scores(2))
-          .forall { case (a, b) => b >= a - 1e-12 },
-        "nprobe=2 must dominate nprobe=1 rank-wise")
-      val full = graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5,
-          nprobe = 8)
-        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-      val brute = emb
-        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-        .crossJoin(broadcast(emb.filter(col("vec_id") === 0L)
-          .select(asDouble(col("embedding")).as("qv"))))
-        .select(col("vec_id"),
-          graft.functions.VectorFunctions.cosine(col("v"), col("qv"))
-            .as("q_cos"))
-        .orderBy(col("q_cos").desc, col("vec_id")).limit(5)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      require(full == brute,
-        s"nprobe=k must equal brute force: $full vs $brute")
-      graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5, nprobe = 2)
-    }),
-
-    // ANN RECALL MATRIX (the r15 VERDICT's #5): recall@10 of the
-    // persisted IVF and IVF+PQ indexes at nprobe 1/2/4, measured
-    // against exact brute-force ground truth over 16 query vectors —
-    // the dial's actual numbers, not a vibe. The contracts ride the
-    // requires: IVF recall is provably rank-safe (a true top-10 member
-    // whose cell is probed ALWAYS surfaces — exact scoring means at
-    // most 9 corpus vectors outrank it anywhere), hence monotone in
-    // nprobe and exactly 1.0 at full probe; PQ may trade accuracy for
-    // 4-byte codes but must not DEGRADE as probing widens. The measured
-    // matrix prints per run and is recorded in COVERAGE.md. The
-    // RETURNED frame is the ground truth itself (per-query exact
-    // top-10), which the oracle recomputes — a hash-checked row whose
-    // construction forces the whole matrix through its assertions.
-    "sim_recall_matrix" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-annrm")
-      val corpusRoot = tmp.resolve("corpus").toString
-      graft.sources.TxLogTable(s, corpusRoot).commit(emb, overwrite = true)
-      val ivfRoot = tmp.resolve("ivf").toString
-      val pqRoot = tmp.resolve("pq").toString
-      graft.operators.AnnIndex.build(s, corpusRoot, ivfRoot, emb.schema,
-        k = 8, iterations = 2, pq = false)
-      graft.operators.AnnIndex.build(s, corpusRoot, pqRoot, emb.schema,
-        k = 8, iterations = 2, pq = true)
-      val qids: Seq[Long] = (0L until 16L).toSeq
-      val topK = 10
-      import org.apache.spark.sql.expressions.Window
-      val embd = emb.select(col("vec_id"),
-        asDouble(col("embedding")).as("v"))
-      val qs = embd.filter(col("vec_id") < 16L)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-      val truthDf = embd.crossJoin(broadcast(qs))
-        .select(col("q_id"), col("vec_id"),
-          cosine(col("v"), col("qv")).as("cos_sim"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= topK).drop("rn")
-      val truth: Map[Long, Set[Long]] = truthDf.collect()
-        .groupBy(_.getLong(0))
-        .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-      def recall(got: org.apache.spark.sql.DataFrame): Double = {
-        val by = got.select("q_id", "vec_id").collect()
-          .groupBy(_.getLong(0))
-          .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-        qids.map(q => (by.getOrElse(q, Set.empty[Long]) & truth(q)).size
-          .toDouble / topK).sum / qids.size
-      }
-      // the production PQ serving shape: ADC ranks a 4× over-fetched
-      // candidate list from the codes alone, exact cosine re-ranks the
-      // survivors — full vectors touched for 40 rows per query, never
-      // the corpus
-      def pqRerank(np: Int): org.apache.spark.sql.DataFrame =
-        graft.operators.AnnIndex.searchIvfPqBatch(
-            s, pqRoot, qids, topK * 4, nprobe = np)
-          .select(col("q_id"), col("vec_id"))
-          .join(embd, "vec_id")
-          .join(broadcast(qs), "q_id")
-          .select(col("q_id"), col("vec_id"),
-            cosine(col("v"), col("qv")).as("cos_sim"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= topK).drop("rn")
-      // SQ8 brute arm — the compression point between exact float32 and
-      // 4-subspace PQ: per-dimension 8-bit codes (4× payload cut),
-      // asymmetric serving. Distortion is per-element rounding noise,
-      // not a subspace-centroid snap, so recall must be near-exact —
-      // quantified here against the same ground truth as the PQ arms
-      // (whose raw ADC the r15 matrix measured at ~0.23).
-      val sq8Stats = embd.select(posexplode(col("v")).as(Seq("i", "x")))
-        .groupBy("i").agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
-        .orderBy("i").collect()
-      val mns = sq8Stats.map(_.getDouble(1))
-      val mxs = sq8Stats.map(_.getDouble(2))
-      val mnA = array(mns.toIndexedSeq.map(lit): _*)
-      val spanA = array(mns.indices.map(i => lit(mxs(i) - mns(i))): _*)
-      val dqCol = transform(col("v"), (x, i) => {
-        val mn = element_at(mnA, i + 1)
-        val span = element_at(spanA, i + 1)
-        when(span === 0d, mn).otherwise(
-          mn + floor((x - mn) / span * 255d + 0.5d) * span / 255d)
-      })
-      val sq8Df = embd.select(col("vec_id"), dqCol.as("dv"))
-        .crossJoin(broadcast(qs))
-        .select(col("q_id"), col("vec_id"),
-          cosine(col("dv"), col("qv")).as("cos_sim"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= topK).drop("rn")
-      val sq8R = recall(sq8Df)
-      System.err.println(f"[recall] sq8 brute recall@$topK=$sq8R%.4f")
-      require(sq8R >= 0.9,
-        s"SQ8 quantization must stay near-exact (recall >= 0.9): $sq8R")
-      val matrix = for {
-        (variant, fn) <- Seq[(String, Int => org.apache.spark.sql.DataFrame)](
-          "ivf" -> (np => graft.operators.AnnIndex.searchIvfBatch(
-            s, ivfRoot, qids, topK, nprobe = np)),
-          "ivfpq" -> (np => graft.operators.AnnIndex.searchIvfPqBatch(
-            s, pqRoot, qids, topK, nprobe = np)),
-          "ivfpq_rerank" -> (np => pqRerank(np)))
-        np <- Seq(1, 2, 4)
-      } yield (variant, np, recall(fn(np)))
-      matrix.foreach { case (v, np, r) =>
-        System.err.println(f"[recall] $v nprobe=$np recall@$topK=$r%.4f") }
-      val ivfR = matrix.filter(_._1 == "ivf").map(_._3)
-      require(ivfR.zip(ivfR.tail).forall { case (a, b) => b >= a },
-        s"IVF recall must be monotone in nprobe: $ivfR")
-      require(ivfR.head >= 0.2,
-        s"IVF nprobe=1 recall floor (0.2) broken: ${ivfR.head}")
-      val fullProbe = recall(graft.operators.AnnIndex.searchIvfBatch(
-        s, ivfRoot, qids, topK, nprobe = 8))
-      require(fullProbe == 1.0,
-        s"IVF at nprobe=k is brute force by construction: $fullProbe")
-      val pqR = matrix.filter(_._1 == "ivfpq").map(_._3)
-      require(pqR.last >= pqR.head - 0.05,
-        s"PQ recall must not degrade as probing widens: $pqR")
-      // exact re-ranking an over-fetched ADC list must recover recall:
-      // per nprobe, rerank >= plain ADC (exact scores on a superset of
-      // the candidates ADC kept), and it must close most of the gap to
-      // IVF at the widest probe
-      val rrR = matrix.filter(_._1 == "ivfpq_rerank").map(_._3)
-      pqR.zip(rrR).zip(Seq(1, 2, 4)).foreach { case ((pq, rr), np) =>
-        require(rr >= pq - 1e-9,
-          s"rerank must not lose to raw ADC at nprobe=$np: $rr < $pq")
-      }
-      truthDf
-    }),
-
-    "sim_cosine_brute" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      emb.crossJoin(broadcast(q))
-        .select(col("vec_id"), cosine(col("v"), col("qv")).as("cos_sim"))
-    }),
-
-    // FILTERED ANN, exact baseline: top-k under a metadata predicate,
-    // PRE-filter semantics — candidates restrict BEFORE ranking, so all
-    // k survivors satisfy the predicate (post-filtering a top-k list
-    // can starve below k). The filter is an ordinary pushable predicate
-    // on the scan; at 100 TB it rides the same column stats every
-    // filter does. Brute-force twin of sim_ivf_filtered.
-    "sim_filtered_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("label"),
-          asDouble(col("embedding")).as("v"))
-      val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      emb.filter(col("label") === 3)
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"), cosine(col("v"), col("qv")).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-        .limit(10)
-    }),
-
-    // FILTERED ANN through the PERSISTED IVF index: the predicate
-    // applies INSIDE the probed cell (pre-filter — same contract as
-    // sim_filtered_topk, same recall contract as unfiltered IVF). The
-    // index itself is filter-blind: ONE index serves every predicate,
-    // which is what makes filtered vector search operable at 100 TB —
-    // nobody re-indexes per label.
-    "sim_ivf_filtered" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"), col("label"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-annf")
-      val corpusRoot = tmp.resolve("corpus").toString
-      val indexRoot = tmp.resolve("index").toString
-      graft.sources.TxLogTable(s, corpusRoot).commit(emb, overwrite = true)
-      graft.operators.AnnIndex.build(s, corpusRoot, indexRoot, emb.schema,
-        k = 8, iterations = 2, pq = false)
-      graft.operators.AnnIndex.searchIvf(s, indexRoot, queryVecId = 0L,
-        topK = 5, requireFresh = true,
-        filter = Some(col("label") === 3))
-    }),
-
-    // Top-k of the same — deterministic order with vec_id tie-break.
-    "sim_cosine_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      emb.crossJoin(broadcast(q))
-        .select(col("vec_id"), cosine(col("v"), col("qv")).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-        .limit(10)
-    }),
-
-    // The ANN top-k through the SQL front-end: the registered native
-    // cosine_sim drives a plain spark.sql query over a temp view — the
-    // engine-user surface (registry + SQL) reaches the custom expressions,
-    // not just the Column API. Same plan, same oracle shape as
-    // sim_cosine_topk.
-    "sql_ann" -> ((s, dir) => {
-      t(s, dir, "embeddings").createOrReplaceTempView("v_embeddings")
-      s.sql("""
-        WITH e AS (SELECT vec_id,
-                     transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-                   FROM v_embeddings),
-             q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-        SELECT e.vec_id, cosine_sim(e.v, q.qv) AS cos_sim
-        FROM e CROSS JOIN q
-        ORDER BY cos_sim DESC, vec_id
-        LIMIT 10""")
-    }),
-
-    // SCALAR-QUANTIZED (SQ8) ranking — the compression point BETWEEN
-    // exact float32 and 4-subspace PQ that the sim_recall_matrix exposed
-    // as coarse (raw-ADC recall ~0.23): per-DIMENSION trained linear
-    // bounds (FAISS ScalarQuantizer QT_8bit shape) code each element
-    // into 8 bits — a 4× ranking-payload cut (64 B vs 256 B per vector)
-    // with near-exact recall, because SQ distortion is per-element
-    // rounding noise, not a 16-dim-subspace centroid snap. Serving is
-    // ASYMMETRIC: dequantized corpus against the raw query (ADC style).
-    // The in-query require pins the self-match surviving quantization on
-    // top; the oracle recomputes bounds, codes, dequantization, and the
-    // left-fold cosine in DuckDB — the whole SQ path is hash-checked,
-    // not just sampled. At 100 TB the bounds are one order-free
-    // min/max aggregate (two 64-double arrays broadcast as literals)
-    // and the rank is the same one broadcast + one scan as exact
-    // cosine, on a quarter of the bytes.
-    "sim_sq8_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      val stats = emb.select(posexplode(col("v")).as(Seq("i", "x")))
-        .groupBy("i").agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
-        .orderBy("i").collect()
-      val mns = stats.map(_.getDouble(1))
-      val mxs = stats.map(_.getDouble(2))
-      val mnA = array(mns.toIndexedSeq.map(lit): _*)
-      val spanA = array(mns.indices.map(i => lit(mxs(i) - mns(i))): _*)
-      // code = floor((x-mn)/span*255 + 0.5) ∈ [0,255]; dequantize in the
-      // same expression (asymmetric serving never materializes floats)
-      val dq = transform(col("v"), (x, i) => {
-        val mn = element_at(mnA, i + 1)
-        val span = element_at(spanA, i + 1)
-        when(span === 0d, mn).otherwise(
-          mn + floor((x - mn) / span * 255d + 0.5d) * span / 255d)
-      })
-      val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      val ranked = emb.select(col("vec_id"), dq.as("dv"))
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"), cosine(col("dv"), col("qv")).as("sq8_sim"))
-        .orderBy(col("sq8_sim").desc, col("vec_id"))
-        .limit(10)
-      require(ranked.head().getLong(0) == 0L,
-        "SQ8 distortion must keep the self-match ranked first")
-      ranked
-    }),
-
-    // SQ8 through the PERSISTED index (AnnIndex build/searchIvfSq8):
-    // bounds and 8-bit codes are index artifacts like the PQ codebook —
-    // trained once on the pinned corpus, loaded by every search, encoded
-    // incrementally on refresh. Serving ranks the dequantized codes
-    // (4× less ranking I/O than float32) inside the probed cells. The
-    // hash-check: at FULL probe the candidate set is the whole corpus,
-    // so the persisted-code ranking must equal the in-query sim_sq8_topk
-    // bit-for-bit — same oracle SQL. The nprobe=1 require pins the real
-    // serving shape (self-match in its own cell).
-    "sim_sq8_persisted" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-annsq")
-      val corpusRoot = tmp.resolve("corpus").toString
-      val indexRoot = tmp.resolve("index").toString
-      graft.sources.TxLogTable(s, corpusRoot).commit(emb, overwrite = true)
-      graft.operators.AnnIndex.build(s, corpusRoot, indexRoot, emb.schema,
-        k = 8, iterations = 2, pq = false, sq8 = true)
-      val one = graft.operators.AnnIndex.searchIvfSq8(s, indexRoot,
-        queryVecId = 0L, topK = 10, requireFresh = true, nprobe = 1)
-      require(one.head().getLong(0) == 0L,
-        "single-probe SQ8 serving must surface the self-match")
-      graft.operators.AnnIndex.searchIvfSq8(s, indexRoot,
-          queryVecId = 0L, topK = 10, nprobe = 8)
-        .select(col("vec_id"), col("sq8_sim"))
-    }),
-
-    // Batch ANN — top-k neighbors for EACH of several query vectors at
-    // once, the realistic serving shape (a query batch, not one probe).
-    // Scale: q queries broadcast as one small build side, n×q cosines
-    // computed map-side, and the per-query top-k goes through
-    // WindowGroupLimit — each task keeps only its local top-5 per query
-    // BEFORE the exchange, so the shuffle carries O(q·k·tasks) rows, never
-    // n×q (the a7 PlanSpec gate proves the same mechanism).
-    "sim_topk_batch" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      val qs = emb.filter(col("vec_id") < 4)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      val w = Window.partitionBy("q_id")
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-      emb.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("q_id")) // a vector is not its own hit
-        .select(col("q_id"), col("vec_id"),
-          cosine(col("v"), col("qv")).as("cos_sim"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
-        .drop("rn")
-    }),
-
-    // Sign-LSH bucketing — integer-exact bucket assignment + occupancy.
-    "sim_lsh_bucket" -> ((s, dir) => {
-      val w = Window.partitionBy("bucket")
-      t(s, dir, "embeddings")
-        .select(col("vec_id"),
-          signBucket(col("embedding")).cast(IntegerType).as("bucket"))
-        .withColumn("bucket_size", count(lit(1)).over(w))
-    }),
-
-    // Embedding near-dup — cosine pairs within a sign-LSH bucket: the
-    // blocked form of embedding-similarity dedup (pairs only form inside a
-    // bucket; bucket id is the shuffle key at scale).
-    "dd_embedding_neardup" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select(col("vec_id"),
-        signBucket(col("embedding")).as("bucket"),
-        asDouble(col("embedding")).as("v"))
-      val a = emb.select(col("bucket"), col("vec_id").as("vec_a"),
-        col("v").as("va"))
-      val b = emb.select(col("bucket").as("bucket_b"),
-        col("vec_id").as("vec_b"), col("v").as("vb"))
-      a.join(b, col("bucket") === col("bucket_b") &&
-          col("vec_a") < col("vec_b"))
-        .select(col("vec_a"), col("vec_b"),
-          cosine(col("va"), col("vb")).as("cos_sim"))
-        .filter(col("cos_sim") >= 0.25)
-    }),
-
-    // Distributed k-means (2 Lloyd iterations, deterministic): the trained
-    // coarse quantizer for IVF — decimal-exact centroid means, lowest-id
-    // argmax tie-break, id-seeded.
-    "sim_kmeans" -> ((s, dir) => {
-      implicit val sp = s
-      graft.operators.KMeans.fit(t(s, dir, "embeddings"), k = 8,
-        iterations = 2)._1
-    }),
-
-    // Semantic dedup (SemDeDup-style): the TRAINED k-means clusters are
-    // the blocking key — pairs only form within a cluster, so cluster id
-    // is the shuffle key and per-cluster work is bounded by the cell
-    // size. k is PINNED at 8 here so the DuckDB oracle can replay the
-    // whole Lloyd fit deterministically; the scale surface is
-    // [[graft.operators.SemDedup.apply]], which derives
-    // k = ⌈rows/targetCell⌉ so cells stay ~constant as the corpus grows
-    // (ScaleProbe `semdedup` pins the flat per-cluster cost).
-    "dd_semantic" -> ((s, dir) => {
-      implicit val sp = s
-      graft.operators.SemDedup.withK(
-        t(s, dir, "embeddings"), k = 8, tau = SemDedupTau)
-    }),
-
-    // The SQL surface of the same operator: `CALL system.semdedup` reads
-    // a txlog catalog table, runs the identical cluster-blocked dedup
-    // (k pinned here so the DuckDB Lloyd replay stays deterministic —
-    // k = 0 is the derive-from-corpus scale path), and materializes the
-    // verdicts as a fresh catalog table the SQL-first user queries
-    // directly. Same oracle as `dd_semantic`: the procedure path must be
-    // hash-identical to the library path it wraps.
-    "sql_semdedup" -> ((s, dir) => {
-      EtlQueries.ensureCatalog(s)
-      t(s, dir, "embeddings").createOrReplaceTempView("emb_sd_src")
-      s.sql("DROP TABLE IF EXISTS graftcat.db.emb_sd")
-      s.sql("DROP TABLE IF EXISTS graftcat.db.emb_sd_out")
-      s.sql("CREATE TABLE graftcat.db.emb_sd USING txlog AS " +
-        "SELECT vec_id, embedding FROM emb_sd_src")
-      val r = s.sql("CALL graftcat.system.semdedup(" +
-        s"'db.emb_sd', 'db.emb_sd_out', $SemDedupTau, 8)").collect().head
-      require(r.getInt(0) == 1 && r.getLong(1) > 0,
-        s"semdedup must land one data commit in the dest: $r")
-      s.sql("SELECT vec_id, cluster, kept FROM graftcat.db.emb_sd_out")
-    }),
-
-    // Hybrid retrieval — reciprocal-rank fusion (RRF, k=60) of a lexical
-    // BM25 leg over `documents` and a cosine vector leg over `embeddings`
-    // (doc_id ≡ vec_id): the standard two-tower retrieval front-end of a
-    // decontamination / RAG pipeline, where neither signal alone suffices.
-    // Scale shape: each leg reduces to its own top-N FIRST (BM25 touches
-    // only matching postings; the vector leg is the ANN path — brute here,
-    // IVF-routable at size), so the fusion joins two N-row frames, never
-    // the corpora: at 100 TB the fuse cost is O(N), constant. Ranks are
-    // total-ordered (score desc, id asc) so fusion is deterministic;
-    // symmetric rank pairs tie in rrf and break by doc_id on both engines.
-    "retr_hybrid_rrf" -> ((s, dir) => {
-      val qTerms = Seq("hash", "join", "filter")
-      val d = t(s, dir, "documents")
-      // the lexical leg IS the named scorer (one tokenize pass, one
-      // doc-keyed shuffle, broadcast df/stats — see bm25Scores scaladoc);
-      // 6dp-rounded scores order identically as DOUBLE, so ranks match
-      // the oracle's DECIMAL ordering
-      val bm = TextQueries.bm25Scores(d, qTerms)
-        .select(col("doc_id"), col("bm25").as("sc"))
-      val lex = bm.orderBy(col("sc").desc, col("doc_id")).limit(50)
-        .withColumn("lex_rank", row_number().over(
-          Window.orderBy(col("sc").desc, col("doc_id"))).cast(LongType))
-        .select(col("doc_id"), col("lex_rank"))
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      val vec = emb.crossJoin(broadcast(q))
-        .select(col("vec_id"), cosine(col("v"), col("qv")).as("cs"))
-        .orderBy(col("cs").desc, col("vec_id")).limit(50)
-        .withColumn("vec_rank", row_number().over(
-          Window.orderBy(col("cs").desc, col("vec_id"))).cast(LongType))
-        .select(col("vec_id").as("doc_id"), col("vec_rank"))
-      lex.join(vec, Seq("doc_id"), "full_outer")
-        .withColumn("rrf", round(
-          coalesce(lit(1.0) / (lit(60L) + col("lex_rank")), lit(0.0)) +
-            coalesce(lit(1.0) / (lit(60L) + col("vec_rank")), lit(0.0)), 6)
-          .cast(DecimalType(18, 6)))
-        .orderBy(col("rrf").desc, col("doc_id")).limit(20)
-        .select(col("doc_id"), col("lex_rank"), col("vec_rank"),
-          col("rrf").cast(DoubleType).as("rrf"))
-    }),
-
-    // IVF search over the TRAINED quantizer: route the query to its best
-    // k-means cell, then rank only that cell's members against the query.
-    // At 100 TB the cell id is the partition key — probing one cell reads
-    // ~1/k of the data.
-    "sim_ivf_kmeans_topk" -> ((s, dir) => {
-      implicit val sp = s
-      val emb = t(s, dir, "embeddings")
-      val (assignedRaw, centsRaw) = graft.operators.KMeans.fit(emb, 8, 2)
-      // three downstream consumers (cell routing, membership join, ranking)
-      // would each replay the training lineage — persist the tiny artifacts.
-      // Session-scoped: CacheManager dedups by plan (one entry per artifact
-      // across invocations + the bench warmup); clearCache() releases them.
-      val assigned = assignedRaw.cache()
-      val cents = centsRaw.cache()
-      val vecs = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      val q = vecs.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      val bestCell = cents.crossJoin(broadcast(q))
-        .select(col("cluster"), cosine(col("cv"), col("qv")).as("cs"))
-        .orderBy(col("cs").desc, col("cluster"))
-        .limit(1).select(col("cluster").as("best_cluster"))
-      assigned.join(broadcast(bestCell),
-          col("cluster") === col("best_cluster"))
-        .join(vecs, "vec_id")
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"), col("cluster"),
-          cosine(col("v"), col("qv")).as("q_cos"))
-        .orderBy(col("q_cos").desc, col("vec_id"))
-        .limit(5)
-    }),
-
-    // IVF search, nprobe=1: coarse quantizer = per-label representative
-    // (min vec_id — deterministic, no float means); route the query to its
-    // best cell, then rank only that cell's members.
-    "sim_ivf_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("label"),
-          asDouble(col("embedding")).as("v"))
-      val w = Window.partitionBy("label").orderBy("vec_id")
-      val reps = emb.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("label").as("cell"), col("v").as("centroid"))
-      val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      val bestCell = reps.crossJoin(broadcast(q))
-        .select(col("cell"), cosine(col("centroid"), col("qv")).as("cs"))
-        .orderBy(col("cs").desc, col("cell"))
-        .limit(1)
-        .select(col("cell"))
-      emb.join(broadcast(bestCell), col("label") === col("cell"))
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"), col("label"),
-          cosine(col("v"), col("qv")).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-        .limit(5)
-    }),
-
-    // Two-stage retrieve-then-rerank — the production ANN serving shape:
-    // stage 1 ranks the WHOLE corpus on 4-byte PQ codes via the broadcast
-    // ADC tables (never touching a full vector) and keeps 32 candidates;
-    // stage 2 joins only those 32 back to their full vectors for an exact
-    // cosine re-rank. At 100 TB the exact math runs on 32 rows instead of
-    // the corpus — recall comes from the candidate depth (32 ≫ k=5), the
-    // final ordering from true distances. Both stages deterministic
-    // (vec_id tie-breaks), so the composed pipeline hash-matches.
-    "sim_rerank_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      val cands = pqAdcJoin(pqCodesPivot(emb), pqDistTables(emb))
-        .select(col("vec_id"), col("adc_dist"))
-        .orderBy(col("adc_dist"), col("vec_id"))
-        .limit(32)
-      val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      emb.join(broadcast(cands.select("vec_id")), "vec_id")
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"), cosine(col("v"), col("qv")).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-        .limit(5)
-    }),
-
-    // Truncated-dimension two-stage search (the matryoshka-embedding
-    // serving pattern): stage 1 scores the corpus on the FIRST 16 of 64
-    // dims — 4x less arithmetic and, with a dimension-sliced column
-    // layout, 4x less I/O — keeping 32 candidates; stage 2 re-ranks only
-    // those on full vectors. Same two-stage economics as sim_rerank_topk
-    // with truncation instead of quantization as the cheap stage; both
-    // stages deterministic (vec_id tie-breaks).
-    "sim_mrl_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      val q = emb.filter(col("vec_id") === 0)
-      val qt = q.select(slice(col("v"), 1, 16).as("qtv"))
-      val cands = emb
-        .select(col("vec_id"), slice(col("v"), 1, 16).as("tv"))
-        .crossJoin(broadcast(qt))
-        .select(col("vec_id"), cosine(col("tv"), col("qtv")).as("cs"))
-        .orderBy(col("cs").desc, col("vec_id"))
-        .limit(32).select("vec_id")
-      emb.join(broadcast(cands), "vec_id")
-        .crossJoin(broadcast(q.select(col("v").as("qv"))))
-        .select(col("vec_id"), cosine(col("v"), col("qv")).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-        .limit(5)
-    }),
-
-    // IVF search, nprobe=2 — the recall/cost knob: probing the 2 best cells
-    // scans 2/k of the data instead of 1/k and recovers neighbors that
-    // straddle a cell boundary (the classic IVF recall failure). Identical
-    // plan shape; only the broadcast cell list grows.
-    "sim_ivf_topk_nprobe2" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("label"),
-          asDouble(col("embedding")).as("v"))
-      val w = Window.partitionBy("label").orderBy("vec_id")
-      val reps = emb.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("label").as("cell"), col("v").as("centroid"))
-      val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      val bestCells = reps.crossJoin(broadcast(q))
-        .select(col("cell"), cosine(col("centroid"), col("qv")).as("cs"))
-        .orderBy(col("cs").desc, col("cell"))
-        .limit(2)
-        .select(col("cell"))
-      emb.join(broadcast(bestCells), col("label") === col("cell"))
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"), col("label"),
-          cosine(col("v"), col("qv")).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-        .limit(5)
-    }))
-
   /** DuckDB squared-L2 over subspace `si`'s 16-dim slice — same element
     * order and double arithmetic as [[l2sq]] over [[pqSubVectors]] slices.
     */
@@ -1381,13 +512,23 @@ object SimQueries {
             FROM scored) WHERE rn <= 5"""
   }
 
-  val oracle: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
 
-    "pq_codes" ->
+    // PQ compression: every vector reduced to its 4 subspace codes.
+    Query("pq_codes",
       s"""WITH $SqlPqCodes
-          SELECT vec_id, c0, c1, c2, c3 FROM codes""",
+          SELECT vec_id, c0, c1, c2, c3 FROM codes""")((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      pqCodesPivot(emb)
+    }),
 
-    "pq_adc_topk" -> {
+    // PQ search (ADC): distances to the query are a 4-way lookup-table sum
+    // over the codes — the scan never touches the original vectors. The
+    // four per-subspace tables are 16 rows each, joined broadcast; the
+    // addition order is fixed (d0+d1+d2+d3) so the oracle reproduces the
+    // double sum exactly.
+    Query("pq_adc_topk", {
       val dtSub = (0 until PqM).map(si =>
         s"""SELECT $si AS s, cb.code,
               ${sqlSubL2("cb.cv", "q.qv", si)} AS qd
@@ -1403,56 +544,341 @@ object SimQueries {
           JOIN (SELECT code, qd FROM dt WHERE s = 2) d2 ON c.c2 = d2.code
           JOIN (SELECT code, qd FROM dt WHERE s = 3) d3 ON c.c3 = d3.code
           ORDER BY adc_dist, c.vec_id LIMIT 10"""
-    },
+    })((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      pqAdcJoin(pqCodesPivot(emb), pqDistTables(emb))
+        .select(col("vec_id"), col("adc_dist"))
+        .orderBy(col("adc_dist"), col("vec_id"))
+        .limit(10)
+    }),
 
-    "ivfpq_topk" -> ivfPqOracle,
+    // IVF + PQ — the production billion-vector shape: the trained coarse
+    // quantizer routes the query to one cell (scan 1/k of the corpus), and
+    // within the cell ranking runs on 4-byte PQ codes via the ADC tables —
+    // neither the routing nor the ranking ever touches a full vector at
+    // scan time. At 100 TB: cell id partitions the codes table, the ADC
+    // tables broadcast, and the scan reads ~corpus/k × 4 bytes per row.
+    Query("ivfpq_topk", ivfPqOracle)((s, dir) => {
+      implicit val sp = s
+      val embRaw = t(s, dir, "embeddings")
+      val (assignedRaw, centsRaw) = graft.operators.KMeans.fit(embRaw, 8, 2)
+      // session-scoped caches: CacheManager dedups by plan, so repeated
+      // invocations (and the bench warmup) share ONE entry per artifact —
+      // nothing accumulates; `spark.catalog.clearCache()` releases them
+      val assigned = assignedRaw.cache()
+      val cents = centsRaw.cache()
+      val emb = embRaw.select(col("vec_id"),
+        asDouble(col("embedding")).as("v"))
+      val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
+      val bestCell = cents.crossJoin(broadcast(q))
+        .select(col("cluster"), cosine(col("cv"), col("qv")).as("cs"))
+        .orderBy(col("cs").desc, col("cluster"))
+        .limit(1).select(col("cluster").as("best_cluster"))
+      pqAdcJoin(
+        assigned.join(broadcast(bestCell),
+            col("cluster") === col("best_cluster"))
+          .select(col("vec_id"), col("cluster"))
+          .join(pqCodesPivot(emb), "vec_id"),
+        pqDistTables(emb))
+        .select(col("vec_id"), col("cluster"), col("adc_dist"))
+        .orderBy(col("adc_dist"), col("vec_id"))
+        .limit(5)
+    }),
 
+    // PERSISTED index lifecycle (operators.AnnIndex — round-5 gap #3
+    // closed): the corpus lands as a tx-log table, ONE build call trains
+    // and persists centroids/assignments/meta pinned to the corpus
+    // version, and the search LOADS the index — no k-means fit in the
+    // query (searchIvf never trains, by construction; the requires prove
+    // the lifecycle contract). Staleness: after the corpus advances, a
+    // requireFresh search REFUSES (the serving guard), while the pinned
+    // search still serves the snapshot it indexed — its results are
+    // required identical before and after the append. Oracle = the same
+    // 2-iteration trained-IVF recomputation as sim_ivf_kmeans_topk.
+    // INCREMENTAL index refresh — the growth path between full rebuilds:
+    // new corpus vectors route to the EXISTING centroids (broadcast
+    // argmax, no training pass), append to the assignments, and the pin
+    // advances — O(new vectors), never O(corpus). The requires walk the
+    // full lifecycle: fresh search refuses on the stale index, refresh
+    // adds exactly the appended count, and the post-refresh fresh search
+    // SUCCEEDS serving the union corpus. Oracle: train over the original
+    // corpus, serve over original+appended — bit-for-bit the refresh
+    // contract.
+    Query("sim_ivf_refresh", ivfOracle(serveAppended = true))((s, dir) => {
+      val emb = t(s, dir, "embeddings").select(col("vec_id"),
+        col("embedding"))
+      val tmp = java.nio.file.Files.createTempDirectory("graft-annrf")
+      val corpusRoot = tmp.resolve("corpus").toString
+      val indexRoot = tmp.resolve("index").toString
+      val corpus = graft.sources.TxLogTable(s, corpusRoot)
+      corpus.commit(emb, overwrite = true)
+      graft.operators.AnnIndex.build(
+        s, corpusRoot, indexRoot, emb.schema, k = 8, iterations = 2,
+        pq = false)
+      corpus.commit(emb.filter(col("vec_id") < 4)
+        .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")),
+        overwrite = false)
+      val threw =
+        try {
+          graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5,
+            requireFresh = true).collect(); false
+        } catch { case _: IllegalArgumentException => true }
+      require(threw, "stale index must refuse before the refresh")
+      val (newPin, added) = graft.operators.AnnIndex.refresh(s, indexRoot)
+      require(added == 4L,
+        s"refresh must add exactly the appended vectors, got $added")
+      require(corpus.latestVersion.contains(newPin),
+        s"refresh must advance the pin to the corpus head: $newPin")
+      // requireFresh now passes — the refreshed index serves the union
+      graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5,
+        requireFresh = true)
+    }),
+
+    // identical recomputation: the persisted index serves the SAME pinned
+    // corpus the in-query trainer would see, so the oracle is shared
+    Query("sim_ivf_persisted", ivfTrainedOracle)((s, dir) => {
+      val emb = t(s, dir, "embeddings").select(col("vec_id"),
+        col("embedding"))
+      val tmp = java.nio.file.Files.createTempDirectory("graft-ann")
+      val corpusRoot = tmp.resolve("corpus").toString
+      val indexRoot = tmp.resolve("index").toString
+      val corpus = graft.sources.TxLogTable(s, corpusRoot)
+      corpus.commit(emb, overwrite = true)
+      val pinned = graft.operators.AnnIndex.build(
+        s, corpusRoot, indexRoot, emb.schema, k = 8, iterations = 2,
+        pq = false) // centroids-only index: the PQ twin builds its own
+      val fresh = graft.operators.AnnIndex.searchIvf(
+        s, indexRoot, queryVecId = 0L, topK = 5, requireFresh = true)
+        .collect()
+      // the corpus moves on: a fresh-index search must now refuse
+      corpus.commit(emb.filter(col("vec_id") < 4)
+        .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")),
+        overwrite = false)
+      val threw =
+        try {
+          graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5,
+            requireFresh = true).collect(); false
+        } catch { case _: IllegalArgumentException => true }
+      require(threw, "stale index must refuse a requireFresh search")
+      val pinnedSearch = graft.operators.AnnIndex.searchIvf(
+        s, indexRoot, 0L, 5, requireFresh = false)
+      require(pinnedSearch.collect().toSeq == fresh.toSeq,
+        "pinned-snapshot search changed after a corpus append — the index " +
+          s"is not actually pinned to v$pinned")
+      pinnedSearch
+    }),
+
+    // AUTO-SIZED persisted IVF (AnnIndex.buildAuto): k derives from the
+    // corpus so CELL SIZE, not cell count, is the scale invariant
+    // (k = ceil(rows / targetCell) — the same rule SemDedup scales by),
+    // and the quantizer trains on a bounded deterministic stride-sample
+    // (every stride-th vec_id), so training cost is O(sample × k) at
+    // any corpus size; the full corpus then takes exactly ONE
+    // broadcast-argmax routing pass. The requires pin the derived k
+    // and the recorded stride (> 1: the sampled path actually ran);
+    // the oracle replays sampled training + full routing in SQL.
+    Query("sim_ivf_autok", ivfAutoOracle)((s, dir) => {
+      val emb = t(s, dir, "embeddings").select(col("vec_id"),
+        col("embedding"))
+      val tmp = java.nio.file.Files.createTempDirectory("graft-annauto")
+      val corpusRoot = tmp.resolve("corpus").toString
+      val indexRoot = tmp.resolve("index").toString
+      graft.sources.TxLogTable(s, corpusRoot).commit(emb,
+        overwrite = true)
+      val (_, k) = graft.operators.AnnIndex.buildAuto(
+        s, corpusRoot, indexRoot, emb.schema, iterations = 2,
+        targetCell = 64L, trainSample = 256L, pq = false)
+      val rows = emb.count()
+      require(k == ((rows + 63) / 64).toInt,
+        s"auto-k must track corpus size: k=$k rows=$rows")
+      val meta = graft.sources.TxLogTable(s, s"$indexRoot/meta")
+        .snapshot(graft.operators.AnnIndex.metaSchema).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      require(meta("train_stride").toLong > 1,
+        s"the strided training sample must be in effect: $meta")
+      graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5,
+        requireFresh = true)
+    }),
+
+    // Persisted IVF+PQ (the full billion-vector serving path, nothing
+    // trained at query time): ONE build persists centroids, assignments,
+    // the 64×-compressed 4-byte codes AND the codebook; the search loads
+    // all four, routes via centroids, ranks on codes through ADC tables
+    // built from the persisted codebook — full vectors are touched only
+    // to fetch the query. Same staleness/pinning contract as
+    // sim_ivf_persisted; oracle = the ivfpq_topk recomputation.
     // identical recomputation: the persisted codes/codebook/centroids
     // serve the same pinned corpus the in-query trainer sees
-    "sim_ivfpq_persisted" -> ivfPqOracle,
-    "sim_ivfpq_batch" -> ivfPqBatchOracle,
+    Query("sim_ivfpq_persisted", ivfPqOracle)((s, dir) => {
+      val emb = t(s, dir, "embeddings").select(col("vec_id"),
+        col("embedding"))
+      val tmp = java.nio.file.Files.createTempDirectory("graft-annpq")
+      val corpusRoot = tmp.resolve("corpus").toString
+      val indexRoot = tmp.resolve("index").toString
+      val corpus = graft.sources.TxLogTable(s, corpusRoot)
+      corpus.commit(emb, overwrite = true)
+      graft.operators.AnnIndex.build(
+        s, corpusRoot, indexRoot, emb.schema, k = 8, iterations = 2)
+      val fresh = graft.operators.AnnIndex.searchIvfPq(
+        s, indexRoot, queryVecId = 0L, topK = 5, requireFresh = true)
+        .collect()
+      corpus.commit(emb.filter(col("vec_id") < 4)
+        .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")),
+        overwrite = false)
+      val threw =
+        try {
+          graft.operators.AnnIndex.searchIvfPq(s, indexRoot, 0L, 5,
+            requireFresh = true).collect(); false
+        } catch { case _: IllegalArgumentException => true }
+      require(threw, "stale index must refuse a requireFresh search")
+      val pinnedSearch = graft.operators.AnnIndex.searchIvfPq(
+        s, indexRoot, 0L, 5, requireFresh = false)
+      require(pinnedSearch.collect().toSeq == fresh.toSeq,
+        "pinned-snapshot IVF+PQ search changed after a corpus append")
+      pinnedSearch
+    }),
 
-    "sim_rerank_topk" -> {
-      val dtSub = (0 until PqM).map(si =>
-        s"""SELECT $si AS s, cb.code,
-              ${sqlSubL2("cb.cv", "q.qv", si)} AS qd
-            FROM cb CROSS JOIN q""").mkString("\n          UNION ALL\n")
-      s"""WITH $SqlPqCodes,
-          q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-          dt AS ($dtSub),
-          cand AS (
-            SELECT c.vec_id FROM codes c
-            JOIN (SELECT code, qd FROM dt WHERE s = 0) d0 ON c.c0 = d0.code
-            JOIN (SELECT code, qd FROM dt WHERE s = 1) d1 ON c.c1 = d1.code
-            JOIN (SELECT code, qd FROM dt WHERE s = 2) d2 ON c.c2 = d2.code
-            JOIN (SELECT code, qd FROM dt WHERE s = 3) d3 ON c.c3 = d3.code
-            ORDER BY (d0.qd + d1.qd + d2.qd + d3.qd), c.vec_id LIMIT 32)
-          SELECT e.vec_id,
-            ${sqlDot("e.embedding", "qv")} /
-            (sqrt(${sqlDot("e.embedding", "e.embedding")}) *
-             sqrt(${sqlDot("qv", "qv")})) AS cos_sim
-          FROM embeddings e JOIN cand USING (vec_id) CROSS JOIN q
-          ORDER BY cos_sim DESC, e.vec_id LIMIT 5"""
-    },
+    // Brute-force cosine against one query vector (vec_id 0) — the exact
+    // baseline every ANN variant is measured against.
+    // Batch ANN through the persisted index (the r14 VERDICT's #5):
+    // sim_topk_batch is brute-force N×corpus by design; this routes N
+    // queries through ONE persisted-IVF pass — probed-cells union
+    // scanned once, scoring an EQUI-join on the cell id (the in-query
+    // require proves no corpus × queries nested loop: every join in
+    // the scoring plan is hash/broadcast-hash on a key). Per-query
+    // results equal searchIvf's, pinned by an in-query compare on one
+    // of the queries. Oracle recomputes the trained cells + per-query
+    // routing + per-query top-k relationally.
+    Query("sim_ivf_batch", ivfBatchOracle)((s, dir) => {
+      val emb = t(s, dir, "embeddings").select(col("vec_id"),
+        col("embedding"))
+      val tmp = java.nio.file.Files.createTempDirectory("graft-annb")
+      val corpusRoot = tmp.resolve("corpus").toString
+      val indexRoot = tmp.resolve("index").toString
+      graft.sources.TxLogTable(s, corpusRoot).commit(emb, overwrite = true)
+      graft.operators.AnnIndex.build(
+        s, corpusRoot, indexRoot, emb.schema, k = 8, iterations = 2,
+        pq = false)
+      val out = graft.operators.AnnIndex.searchIvfBatch(
+        s, indexRoot, queryVecIds = Seq(0L, 1L, 2L, 3L), topK = 5)
+      // batch ≡ per-query: query 2's slice equals the single search
+      val single = graft.operators.AnnIndex.searchIvf(s, indexRoot, 2L, 5)
+        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+      val slice = out.filter(col("q_id") === 2L)
+        .orderBy(col("q_cos").desc, col("vec_id"))
+        .collect().map(r => (r.getLong(1), r.getDouble(3))).toSeq
+      require(slice == single,
+        s"batch slice must equal the single search: $slice vs $single")
+      // the equivalence holds through the nprobe knob too
+      val single2 = graft.operators.AnnIndex.searchIvf(s, indexRoot, 3L, 5,
+          nprobe = 2)
+        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+      val slice2 = graft.operators.AnnIndex.searchIvfBatch(
+          s, indexRoot, queryVecIds = Seq(0L, 3L), topK = 5, nprobe = 2)
+        .filter(col("q_id") === 3L)
+        .orderBy(col("q_cos").desc, col("vec_id"))
+        .collect().map(r => (r.getLong(1), r.getDouble(3))).toSeq
+      require(slice2 == single2,
+        s"nprobe=2 batch slice must equal the single search: " +
+          s"$slice2 vs $single2")
+      // scoring never nests corpus × queries: the only loop-join in the
+      // plan is the k × N routing product (tiny, broadcast)
+      val plan = out.queryExecution.executedPlan.toString
+      require(!plan.contains("CartesianProduct"),
+        s"batch ANN must not cartesian:\n$plan")
+      out
+    }),
 
-    "sim_mrl_topk" ->
-      s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-          cand AS (
-            SELECT vec_id FROM (
-              SELECT e.vec_id,
-                ${sqlDotN("e.embedding", "qv", 16)} /
-                (sqrt(${sqlDotN("e.embedding", "e.embedding", 16)}) *
-                 sqrt(${sqlDotN("qv", "qv", 16)})) AS cs
-              FROM embeddings e CROSS JOIN q)
-            ORDER BY cs DESC, vec_id LIMIT 32)
-          SELECT e.vec_id,
-            ${sqlDot("e.embedding", "qv")} /
-            (sqrt(${sqlDot("e.embedding", "e.embedding")}) *
-             sqrt(${sqlDot("qv", "qv")})) AS cos_sim
-          FROM embeddings e JOIN cand USING (vec_id) CROSS JOIN q
-          ORDER BY cos_sim DESC, e.vec_id LIMIT 5""",
+    // Batch IVF+PQ through the persisted index: N queries ranked on the
+    // persisted 4-byte codes in ONE pass — the ADC lookup tables gain a
+    // query key (16 × N rows per subspace, still broadcast), candidates
+    // join their own query's table on (code, q_id), per-query window
+    // top-k closes. The in-query require pins batch ≡ single (same
+    // codes, same ADC fold, same tie-break); the oracle recomputes the
+    // trained cells + codes + per-query routing + per-query ADC sums.
+    Query("sim_ivfpq_batch", ivfPqBatchOracle)((s, dir) => {
+      val emb = t(s, dir, "embeddings").select(col("vec_id"),
+        col("embedding"))
+      val tmp = java.nio.file.Files.createTempDirectory("graft-annpqb")
+      val corpusRoot = tmp.resolve("corpus").toString
+      val indexRoot = tmp.resolve("index").toString
+      graft.sources.TxLogTable(s, corpusRoot).commit(emb, overwrite = true)
+      graft.operators.AnnIndex.build(
+        s, corpusRoot, indexRoot, emb.schema, k = 8, iterations = 2)
+      val out = graft.operators.AnnIndex.searchIvfPqBatch(
+        s, indexRoot, queryVecIds = Seq(0L, 1L, 2L, 3L), topK = 5)
+      val single = graft.operators.AnnIndex.searchIvfPq(s, indexRoot, 1L, 5)
+        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+      val slice = out.filter(col("q_id") === 1L)
+        .orderBy(col("adc_dist"), col("vec_id"))
+        .collect().map(r => (r.getLong(1), r.getDouble(3))).toSeq
+      require(slice == single,
+        s"PQ batch slice must equal the single search: $slice vs $single")
+      val plan = out.queryExecution.executedPlan.toString
+      require(!plan.contains("CartesianProduct"),
+        s"batch ADC must not cartesian:\n$plan")
+      out
+    }),
 
-    "sim_recall_matrix" ->
+    // Multi-probe through the PERSISTED index (nprobe — the recall/cost
+    // knob production IVF serves with; the in-query quantizer has had
+    // it since sim_ivf_topk_nprobe2): routing widens to the nprobe best
+    // cells,
+    // candidates stay ~nprobe/k of the corpus, results only improve.
+    // Two in-query exactness requires pin the knob's contract: at every
+    // rank the nprobe=2 top-5 scores >= the nprobe=1 top-5 (the probed
+    // candidate set only grows, so recall is rank-wise monotone), and
+    // nprobe=k (all cells probed) EQUALS the brute-force top-5 — at
+    // full probe IVF is exact by construction.
+    Query("sim_ivf_nprobe", ivfOracle(serveAppended = false, nprobe = 2))((s, dir) => {
+      val emb = t(s, dir, "embeddings").select(col("vec_id"),
+        col("embedding"))
+      val tmp = java.nio.file.Files.createTempDirectory("graft-annnp")
+      val corpusRoot = tmp.resolve("corpus").toString
+      val indexRoot = tmp.resolve("index").toString
+      graft.sources.TxLogTable(s, corpusRoot).commit(emb, overwrite = true)
+      graft.operators.AnnIndex.build(
+        s, corpusRoot, indexRoot, emb.schema, k = 8, iterations = 2,
+        pq = false)
+      def scores(np: Int): Seq[Double] =
+        graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5,
+            nprobe = np)
+          .orderBy(col("q_cos").desc).collect().map(_.getDouble(2)).toSeq
+      require(scores(1).zip(scores(2))
+          .forall { case (a, b) => b >= a - 1e-12 },
+        "nprobe=2 must dominate nprobe=1 rank-wise")
+      val full = graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5,
+          nprobe = 8)
+        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+      val brute = emb
+        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+        .crossJoin(broadcast(emb.filter(col("vec_id") === 0L)
+          .select(asDouble(col("embedding")).as("qv"))))
+        .select(col("vec_id"),
+          graft.functions.VectorFunctions.cosine(col("v"), col("qv"))
+            .as("q_cos"))
+        .orderBy(col("q_cos").desc, col("vec_id")).limit(5)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      require(full == brute,
+        s"nprobe=k must equal brute force: $full vs $brute")
+      graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5, nprobe = 2)
+    }),
+
+    // ANN RECALL MATRIX (the r15 VERDICT's #5): recall@10 of the
+    // persisted IVF and IVF+PQ indexes at nprobe 1/2/4, measured
+    // against exact brute-force ground truth over 16 query vectors —
+    // the dial's actual numbers, not a vibe. The contracts ride the
+    // requires: IVF recall is provably rank-safe (a true top-10 member
+    // whose cell is probed ALWAYS surfaces — exact scoring means at
+    // most 9 corpus vectors outrank it anywhere), hence monotone in
+    // nprobe and exactly 1.0 at full probe; PQ may trade accuracy for
+    // 4-byte codes but must not DEGRADE as probing widens. The measured
+    // matrix prints per run and is recorded in COVERAGE.md. The
+    // RETURNED frame is the ground truth itself (per-query exact
+    // top-10), which the oracle recomputes — a hash-checked row whose
+    // construction forces the whole matrix through its assertions.
+    Query("sim_recall_matrix",
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS qv
                      FROM embeddings WHERE vec_id < 16),
           scored AS (
@@ -1465,72 +891,141 @@ object SimQueries {
             SELECT *, row_number() OVER (PARTITION BY q_id
               ORDER BY cos_sim DESC, vec_id) AS rn
             FROM scored)
-          WHERE rn <= 10""",
+          WHERE rn <= 10""")((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+        .select(col("vec_id"), col("embedding"))
+      val tmp = java.nio.file.Files.createTempDirectory("graft-annrm")
+      val corpusRoot = tmp.resolve("corpus").toString
+      graft.sources.TxLogTable(s, corpusRoot).commit(emb, overwrite = true)
+      val ivfRoot = tmp.resolve("ivf").toString
+      val pqRoot = tmp.resolve("pq").toString
+      graft.operators.AnnIndex.build(s, corpusRoot, ivfRoot, emb.schema,
+        k = 8, iterations = 2, pq = false)
+      graft.operators.AnnIndex.build(s, corpusRoot, pqRoot, emb.schema,
+        k = 8, iterations = 2, pq = true)
+      val qids: Seq[Long] = (0L until 16L).toSeq
+      val topK = 10
+      import org.apache.spark.sql.expressions.Window
+      val embd = emb.select(col("vec_id"),
+        asDouble(col("embedding")).as("v"))
+      val qs = embd.filter(col("vec_id") < 16L)
+        .select(col("vec_id").as("q_id"), col("v").as("qv"))
+      val w = Window.partitionBy("q_id")
+        .orderBy(col("cos_sim").desc, col("vec_id"))
+      val truthDf = embd.crossJoin(broadcast(qs))
+        .select(col("q_id"), col("vec_id"),
+          cosine(col("v"), col("qv")).as("cos_sim"))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= topK).drop("rn")
+      val truth: Map[Long, Set[Long]] = truthDf.collect()
+        .groupBy(_.getLong(0))
+        .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
+      def recall(got: org.apache.spark.sql.DataFrame): Double = {
+        val by = got.select("q_id", "vec_id").collect()
+          .groupBy(_.getLong(0))
+          .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
+        qids.map(q => (by.getOrElse(q, Set.empty[Long]) & truth(q)).size
+          .toDouble / topK).sum / qids.size
+      }
+      // the production PQ serving shape: ADC ranks a 4× over-fetched
+      // candidate list from the codes alone, exact cosine re-ranks the
+      // survivors — full vectors touched for 40 rows per query, never
+      // the corpus
+      def pqRerank(np: Int): org.apache.spark.sql.DataFrame =
+        graft.operators.AnnIndex.searchIvfPqBatch(
+            s, pqRoot, qids, topK * 4, nprobe = np)
+          .select(col("q_id"), col("vec_id"))
+          .join(embd, "vec_id")
+          .join(broadcast(qs), "q_id")
+          .select(col("q_id"), col("vec_id"),
+            cosine(col("v"), col("qv")).as("cos_sim"))
+          .withColumn("rn", row_number().over(w))
+          .filter(col("rn") <= topK).drop("rn")
+      // SQ8 brute arm — the compression point between exact float32 and
+      // 4-subspace PQ: per-dimension 8-bit codes (4× payload cut),
+      // asymmetric serving. Distortion is per-element rounding noise,
+      // not a subspace-centroid snap, so recall must be near-exact —
+      // quantified here against the same ground truth as the PQ arms
+      // (whose raw ADC the r15 matrix measured at ~0.23).
+      val sq8Stats = embd.select(posexplode(col("v")).as(Seq("i", "x")))
+        .groupBy("i").agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
+        .orderBy("i").collect()
+      val mns = sq8Stats.map(_.getDouble(1))
+      val mxs = sq8Stats.map(_.getDouble(2))
+      val mnA = array(mns.toIndexedSeq.map(lit): _*)
+      val spanA = array(mns.indices.map(i => lit(mxs(i) - mns(i))): _*)
+      val dqCol = transform(col("v"), (x, i) => {
+        val mn = element_at(mnA, i + 1)
+        val span = element_at(spanA, i + 1)
+        when(span === 0d, mn).otherwise(
+          mn + floor((x - mn) / span * 255d + 0.5d) * span / 255d)
+      })
+      val sq8Df = embd.select(col("vec_id"), dqCol.as("dv"))
+        .crossJoin(broadcast(qs))
+        .select(col("q_id"), col("vec_id"),
+          cosine(col("dv"), col("qv")).as("cos_sim"))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= topK).drop("rn")
+      val sq8R = recall(sq8Df)
+      System.err.println(f"[recall] sq8 brute recall@$topK=$sq8R%.4f")
+      require(sq8R >= 0.9,
+        s"SQ8 quantization must stay near-exact (recall >= 0.9): $sq8R")
+      val matrix = for {
+        (variant, fn) <- Seq[(String, Int => org.apache.spark.sql.DataFrame)](
+          "ivf" -> (np => graft.operators.AnnIndex.searchIvfBatch(
+            s, ivfRoot, qids, topK, nprobe = np)),
+          "ivfpq" -> (np => graft.operators.AnnIndex.searchIvfPqBatch(
+            s, pqRoot, qids, topK, nprobe = np)),
+          "ivfpq_rerank" -> (np => pqRerank(np)))
+        np <- Seq(1, 2, 4)
+      } yield (variant, np, recall(fn(np)))
+      matrix.foreach { case (v, np, r) =>
+        System.err.println(f"[recall] $v nprobe=$np recall@$topK=$r%.4f") }
+      val ivfR = matrix.filter(_._1 == "ivf").map(_._3)
+      require(ivfR.zip(ivfR.tail).forall { case (a, b) => b >= a },
+        s"IVF recall must be monotone in nprobe: $ivfR")
+      require(ivfR.head >= 0.2,
+        s"IVF nprobe=1 recall floor (0.2) broken: ${ivfR.head}")
+      val fullProbe = recall(graft.operators.AnnIndex.searchIvfBatch(
+        s, ivfRoot, qids, topK, nprobe = 8))
+      require(fullProbe == 1.0,
+        s"IVF at nprobe=k is brute force by construction: $fullProbe")
+      val pqR = matrix.filter(_._1 == "ivfpq").map(_._3)
+      require(pqR.last >= pqR.head - 0.05,
+        s"PQ recall must not degrade as probing widens: $pqR")
+      // exact re-ranking an over-fetched ADC list must recover recall:
+      // per nprobe, rerank >= plain ADC (exact scores on a superset of
+      // the candidates ADC kept), and it must close most of the gap to
+      // IVF at the widest probe
+      val rrR = matrix.filter(_._1 == "ivfpq_rerank").map(_._3)
+      pqR.zip(rrR).zip(Seq(1, 2, 4)).foreach { case ((pq, rr), np) =>
+        require(rr >= pq - 1e-9,
+          s"rerank must not lose to raw ADC at nprobe=$np: $rr < $pq")
+      }
+      truthDf
+    }),
 
-    "sim_cosine_brute" ->
+    Query("sim_cosine_brute",
       s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
           SELECT vec_id,
             ${sqlDot("embedding", "qv")} /
             (sqrt(${sqlDot("embedding", "embedding")}) *
              sqrt(${sqlDot("qv", "qv")})) AS cos_sim
-          FROM embeddings CROSS JOIN q""",
+          FROM embeddings CROSS JOIN q""")((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
+      emb.crossJoin(broadcast(q))
+        .select(col("vec_id"), cosine(col("v"), col("qv")).as("cos_sim"))
+    }),
 
-    "sim_cosine_topk" ->
-      s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-          SELECT vec_id,
-            ${sqlDot("embedding", "qv")} /
-            (sqrt(${sqlDot("embedding", "embedding")}) *
-             sqrt(${sqlDot("qv", "qv")})) AS cos_sim
-          FROM embeddings CROSS JOIN q
-          ORDER BY cos_sim DESC, vec_id LIMIT 10""",
-
-    "sim_sq8_persisted" ->
-      s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         dims AS (SELECT i, min(v[i]) AS mn,
-             max(v[i]) - min(v[i]) AS span
-           FROM e, (SELECT unnest(generate_series(1, $Dim)) AS i) d
-           GROUP BY i),
-         b AS (SELECT list(mn ORDER BY i) AS mns,
-             list(span ORDER BY i) AS spans FROM dims),
-         dq AS (SELECT e.vec_id, list_transform(generate_series(1, $Dim),
-             i -> CASE WHEN b.spans[i] = 0 THEN b.mns[i]
-                  ELSE b.mns[i] + floor((e.v[i] - b.mns[i]) / b.spans[i]
-                       * 255 + 0.5) * b.spans[i] / 255 END) AS dv
-           FROM e, b),
-         q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-         SELECT d.vec_id,
-           ${sqlDot("d.dv", "q.qv")} /
-           (sqrt(${sqlDot("d.dv", "d.dv")}) *
-            sqrt(${sqlDot("q.qv", "q.qv")})) AS sq8_sim
-         FROM dq d CROSS JOIN q
-         ORDER BY sq8_sim DESC, vec_id LIMIT 10""",
-
-    "sim_sq8_topk" ->
-      s"""WITH e AS (SELECT vec_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-         dims AS (SELECT i, min(v[i]) AS mn,
-             max(v[i]) - min(v[i]) AS span
-           FROM e, (SELECT unnest(generate_series(1, $Dim)) AS i) d
-           GROUP BY i),
-         b AS (SELECT list(mn ORDER BY i) AS mns,
-             list(span ORDER BY i) AS spans FROM dims),
-         dq AS (SELECT e.vec_id, list_transform(generate_series(1, $Dim),
-             i -> CASE WHEN b.spans[i] = 0 THEN b.mns[i]
-                  ELSE b.mns[i] + floor((e.v[i] - b.mns[i]) / b.spans[i]
-                       * 255 + 0.5) * b.spans[i] / 255 END) AS dv
-           FROM e, b),
-         q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-         SELECT d.vec_id,
-           ${sqlDot("d.dv", "q.qv")} /
-           (sqrt(${sqlDot("d.dv", "d.dv")}) *
-            sqrt(${sqlDot("q.qv", "q.qv")})) AS sq8_sim
-         FROM dq d CROSS JOIN q
-         ORDER BY sq8_sim DESC, vec_id LIMIT 10""",
-
-    "sim_filtered_topk" ->
+    // FILTERED ANN, exact baseline: top-k under a metadata predicate,
+    // PRE-filter semantics — candidates restrict BEFORE ranking, so all
+    // k survivors satisfy the predicate (post-filtering a top-k list
+    // can starve below k). The filter is an ordinary pushable predicate
+    // on the scan; at 100 TB it rides the same column stats every
+    // filter does. Brute-force twin of sim_ivf_filtered.
+    Query("sim_filtered_topk",
       s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
           SELECT vec_id,
             ${sqlDot("embedding", "qv")} /
@@ -1538,22 +1033,204 @@ object SimQueries {
              sqrt(${sqlDot("qv", "qv")})) AS cos_sim
           FROM embeddings CROSS JOIN q
           WHERE label = 3
-          ORDER BY cos_sim DESC, vec_id LIMIT 10""",
+          ORDER BY cos_sim DESC, vec_id LIMIT 10""")((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+        .select(col("vec_id"), col("label"),
+          asDouble(col("embedding")).as("v"))
+      val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
+      emb.filter(col("label") === 3)
+        .crossJoin(broadcast(q))
+        .select(col("vec_id"), cosine(col("v"), col("qv")).as("cos_sim"))
+        .orderBy(col("cos_sim").desc, col("vec_id"))
+        .limit(10)
+    }),
 
-    "sim_ivf_filtered" -> ivfOracle(serveAppended = false,
+    // FILTERED ANN through the PERSISTED IVF index: the predicate
+    // applies INSIDE the probed cell (pre-filter — same contract as
+    // sim_filtered_topk, same recall contract as unfiltered IVF). The
+    // index itself is filter-blind: ONE index serves every predicate,
+    // which is what makes filtered vector search operable at 100 TB —
+    // nobody re-indexes per label.
+    Query("sim_ivf_filtered", ivfOracle(serveAppended = false,
       servePred =
-        "v.vec_id IN (SELECT vec_id FROM embeddings WHERE label = 3)"),
+        "v.vec_id IN (SELECT vec_id FROM embeddings WHERE label = 3)"))((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+        .select(col("vec_id"), col("embedding"), col("label"))
+      val tmp = java.nio.file.Files.createTempDirectory("graft-annf")
+      val corpusRoot = tmp.resolve("corpus").toString
+      val indexRoot = tmp.resolve("index").toString
+      graft.sources.TxLogTable(s, corpusRoot).commit(emb, overwrite = true)
+      graft.operators.AnnIndex.build(s, corpusRoot, indexRoot, emb.schema,
+        k = 8, iterations = 2, pq = false)
+      graft.operators.AnnIndex.searchIvf(s, indexRoot, queryVecId = 0L,
+        topK = 5, requireFresh = true,
+        filter = Some(col("label") === 3))
+    }),
 
-    "sql_ann" ->
+    // Top-k of the same — deterministic order with vec_id tie-break.
+    Query("sim_cosine_topk",
       s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
           SELECT vec_id,
             ${sqlDot("embedding", "qv")} /
             (sqrt(${sqlDot("embedding", "embedding")}) *
              sqrt(${sqlDot("qv", "qv")})) AS cos_sim
           FROM embeddings CROSS JOIN q
-          ORDER BY cos_sim DESC, vec_id LIMIT 10""",
+          ORDER BY cos_sim DESC, vec_id LIMIT 10""")((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
+      emb.crossJoin(broadcast(q))
+        .select(col("vec_id"), cosine(col("v"), col("qv")).as("cos_sim"))
+        .orderBy(col("cos_sim").desc, col("vec_id"))
+        .limit(10)
+    }),
 
-    "sim_topk_batch" ->
+    // The ANN top-k through the SQL front-end: the registered native
+    // cosine_sim drives a plain spark.sql query over a temp view — the
+    // engine-user surface (registry + SQL) reaches the custom expressions,
+    // not just the Column API. Same plan, same oracle shape as
+    // sim_cosine_topk.
+    Query("sql_ann",
+      s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
+          SELECT vec_id,
+            ${sqlDot("embedding", "qv")} /
+            (sqrt(${sqlDot("embedding", "embedding")}) *
+             sqrt(${sqlDot("qv", "qv")})) AS cos_sim
+          FROM embeddings CROSS JOIN q
+          ORDER BY cos_sim DESC, vec_id LIMIT 10""")((s, dir) => {
+      t(s, dir, "embeddings").createOrReplaceTempView("v_embeddings")
+      s.sql("""
+        WITH e AS (SELECT vec_id,
+                     transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+                   FROM v_embeddings),
+             q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
+        SELECT e.vec_id, cosine_sim(e.v, q.qv) AS cos_sim
+        FROM e CROSS JOIN q
+        ORDER BY cos_sim DESC, vec_id
+        LIMIT 10""")
+    }),
+
+    // SCALAR-QUANTIZED (SQ8) ranking — the compression point BETWEEN
+    // exact float32 and 4-subspace PQ that the sim_recall_matrix exposed
+    // as coarse (raw-ADC recall ~0.23): per-DIMENSION trained linear
+    // bounds (FAISS ScalarQuantizer QT_8bit shape) code each element
+    // into 8 bits — a 4× ranking-payload cut (64 B vs 256 B per vector)
+    // with near-exact recall, because SQ distortion is per-element
+    // rounding noise, not a 16-dim-subspace centroid snap. Serving is
+    // ASYMMETRIC: dequantized corpus against the raw query (ADC style).
+    // The in-query require pins the self-match surviving quantization on
+    // top; the oracle recomputes bounds, codes, dequantization, and the
+    // left-fold cosine in DuckDB — the whole SQ path is hash-checked,
+    // not just sampled. At 100 TB the bounds are one order-free
+    // min/max aggregate (two 64-double arrays broadcast as literals)
+    // and the rank is the same one broadcast + one scan as exact
+    // cosine, on a quarter of the bytes.
+    Query("sim_sq8_topk",
+      s"""WITH e AS (SELECT vec_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+           FROM embeddings),
+         dims AS (SELECT i, min(v[i]) AS mn,
+             max(v[i]) - min(v[i]) AS span
+           FROM e, (SELECT unnest(generate_series(1, $Dim)) AS i) d
+           GROUP BY i),
+         b AS (SELECT list(mn ORDER BY i) AS mns,
+             list(span ORDER BY i) AS spans FROM dims),
+         dq AS (SELECT e.vec_id, list_transform(generate_series(1, $Dim),
+             i -> CASE WHEN b.spans[i] = 0 THEN b.mns[i]
+                  ELSE b.mns[i] + floor((e.v[i] - b.mns[i]) / b.spans[i]
+                       * 255 + 0.5) * b.spans[i] / 255 END) AS dv
+           FROM e, b),
+         q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
+         SELECT d.vec_id,
+           ${sqlDot("d.dv", "q.qv")} /
+           (sqrt(${sqlDot("d.dv", "d.dv")}) *
+            sqrt(${sqlDot("q.qv", "q.qv")})) AS sq8_sim
+         FROM dq d CROSS JOIN q
+         ORDER BY sq8_sim DESC, vec_id LIMIT 10""")((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      val stats = emb.select(posexplode(col("v")).as(Seq("i", "x")))
+        .groupBy("i").agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
+        .orderBy("i").collect()
+      val mns = stats.map(_.getDouble(1))
+      val mxs = stats.map(_.getDouble(2))
+      val mnA = array(mns.toIndexedSeq.map(lit): _*)
+      val spanA = array(mns.indices.map(i => lit(mxs(i) - mns(i))): _*)
+      // code = floor((x-mn)/span*255 + 0.5) ∈ [0,255]; dequantize in the
+      // same expression (asymmetric serving never materializes floats)
+      val dq = transform(col("v"), (x, i) => {
+        val mn = element_at(mnA, i + 1)
+        val span = element_at(spanA, i + 1)
+        when(span === 0d, mn).otherwise(
+          mn + floor((x - mn) / span * 255d + 0.5d) * span / 255d)
+      })
+      val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
+      val ranked = emb.select(col("vec_id"), dq.as("dv"))
+        .crossJoin(broadcast(q))
+        .select(col("vec_id"), cosine(col("dv"), col("qv")).as("sq8_sim"))
+        .orderBy(col("sq8_sim").desc, col("vec_id"))
+        .limit(10)
+      require(ranked.head().getLong(0) == 0L,
+        "SQ8 distortion must keep the self-match ranked first")
+      ranked
+    }),
+
+    // SQ8 through the PERSISTED index (AnnIndex build/searchIvfSq8):
+    // bounds and 8-bit codes are index artifacts like the PQ codebook —
+    // trained once on the pinned corpus, loaded by every search, encoded
+    // incrementally on refresh. Serving ranks the dequantized codes
+    // (4× less ranking I/O than float32) inside the probed cells. The
+    // hash-check: at FULL probe the candidate set is the whole corpus,
+    // so the persisted-code ranking must equal the in-query sim_sq8_topk
+    // bit-for-bit — same oracle SQL. The nprobe=1 require pins the real
+    // serving shape (self-match in its own cell).
+    Query("sim_sq8_persisted",
+      s"""WITH e AS (SELECT vec_id,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+           FROM embeddings),
+         dims AS (SELECT i, min(v[i]) AS mn,
+             max(v[i]) - min(v[i]) AS span
+           FROM e, (SELECT unnest(generate_series(1, $Dim)) AS i) d
+           GROUP BY i),
+         b AS (SELECT list(mn ORDER BY i) AS mns,
+             list(span ORDER BY i) AS spans FROM dims),
+         dq AS (SELECT e.vec_id, list_transform(generate_series(1, $Dim),
+             i -> CASE WHEN b.spans[i] = 0 THEN b.mns[i]
+                  ELSE b.mns[i] + floor((e.v[i] - b.mns[i]) / b.spans[i]
+                       * 255 + 0.5) * b.spans[i] / 255 END) AS dv
+           FROM e, b),
+         q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
+         SELECT d.vec_id,
+           ${sqlDot("d.dv", "q.qv")} /
+           (sqrt(${sqlDot("d.dv", "d.dv")}) *
+            sqrt(${sqlDot("q.qv", "q.qv")})) AS sq8_sim
+         FROM dq d CROSS JOIN q
+         ORDER BY sq8_sim DESC, vec_id LIMIT 10""")((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+        .select(col("vec_id"), col("embedding"))
+      val tmp = java.nio.file.Files.createTempDirectory("graft-annsq")
+      val corpusRoot = tmp.resolve("corpus").toString
+      val indexRoot = tmp.resolve("index").toString
+      graft.sources.TxLogTable(s, corpusRoot).commit(emb, overwrite = true)
+      graft.operators.AnnIndex.build(s, corpusRoot, indexRoot, emb.schema,
+        k = 8, iterations = 2, pq = false, sq8 = true)
+      val one = graft.operators.AnnIndex.searchIvfSq8(s, indexRoot,
+        queryVecId = 0L, topK = 10, requireFresh = true, nprobe = 1)
+      require(one.head().getLong(0) == 0L,
+        "single-probe SQ8 serving must surface the self-match")
+      graft.operators.AnnIndex.searchIvfSq8(s, indexRoot,
+          queryVecId = 0L, topK = 10, nprobe = 8)
+        .select(col("vec_id"), col("sq8_sim"))
+    }),
+
+    // Batch ANN — top-k neighbors for EACH of several query vectors at
+    // once, the realistic serving shape (a query batch, not one probe).
+    // Scale: q queries broadcast as one small build side, n×q cosines
+    // computed map-side, and the per-query top-k goes through
+    // WindowGroupLimit — each task keeps only its local top-5 per query
+    // BEFORE the exchange, so the shuffle carries O(q·k·tasks) rows, never
+    // n×q (the a7 PlanSpec gate proves the same mechanism).
+    Query("sim_topk_batch",
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS qv
                      FROM embeddings WHERE vec_id < 4),
           scored AS (
@@ -1568,9 +1245,24 @@ object SimQueries {
               row_number() OVER (PARTITION BY q_id
                                  ORDER BY cos_sim DESC, vec_id) AS rn
             FROM scored)
-          SELECT q_id, vec_id, cos_sim FROM ranked WHERE rn <= 5""",
+          SELECT q_id, vec_id, cos_sim FROM ranked WHERE rn <= 5""")((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      val qs = emb.filter(col("vec_id") < 4)
+        .select(col("vec_id").as("q_id"), col("v").as("qv"))
+      val w = Window.partitionBy("q_id")
+        .orderBy(col("cos_sim").desc, col("vec_id"))
+      emb.crossJoin(broadcast(qs))
+        .filter(col("vec_id") =!= col("q_id")) // a vector is not its own hit
+        .select(col("q_id"), col("vec_id"),
+          cosine(col("v"), col("qv")).as("cos_sim"))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= 5)
+        .drop("rn")
+    }),
 
-    "sim_lsh_bucket" ->
+    // Sign-LSH bucketing — integer-exact bucket assignment + occupancy.
+    Query("sim_lsh_bucket",
       """WITH b AS (
            SELECT vec_id,
              CAST((CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END) +
@@ -1585,9 +1277,18 @@ object SimQueries {
            FROM embeddings)
          SELECT vec_id, bucket,
                 COUNT(*) OVER (PARTITION BY bucket) AS bucket_size
-         FROM b""",
+         FROM b""")((s, dir) => {
+      val w = Window.partitionBy("bucket")
+      t(s, dir, "embeddings")
+        .select(col("vec_id"),
+          signBucket(col("embedding")).cast(IntegerType).as("bucket"))
+        .withColumn("bucket_size", count(lit(1)).over(w))
+    }),
 
-    "dd_embedding_neardup" ->
+    // Embedding near-dup — cosine pairs within a sign-LSH bucket: the
+    // blocked form of embedding-similarity dedup (pairs only form inside a
+    // bucket; bucket id is the shuffle key at scale).
+    Query("dd_embedding_neardup",
       s"""WITH b AS (
             SELECT vec_id, embedding,
               (CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END) +
@@ -1606,13 +1307,41 @@ object SimQueries {
                sqrt(${sqlDot("b2.embedding", "b2.embedding")})) AS cos_sim
             FROM b a JOIN b b2
               ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id)
-          SELECT vec_a, vec_b, cos_sim FROM pairs WHERE cos_sim >= 0.25""",
+          SELECT vec_a, vec_b, cos_sim FROM pairs WHERE cos_sim >= 0.25""")((s, dir) => {
+      val emb = t(s, dir, "embeddings").select(col("vec_id"),
+        signBucket(col("embedding")).as("bucket"),
+        asDouble(col("embedding")).as("v"))
+      val a = emb.select(col("bucket"), col("vec_id").as("vec_a"),
+        col("v").as("va"))
+      val b = emb.select(col("bucket").as("bucket_b"),
+        col("vec_id").as("vec_b"), col("v").as("vb"))
+      a.join(b, col("bucket") === col("bucket_b") &&
+          col("vec_a") < col("vec_b"))
+        .select(col("vec_a"), col("vec_b"),
+          cosine(col("va"), col("vb")).as("cos_sim"))
+        .filter(col("cos_sim") >= 0.25)
+    }),
 
-    "sim_kmeans" ->
+    // Distributed k-means (2 Lloyd iterations, deterministic): the trained
+    // coarse quantizer for IVF — decimal-exact centroid means, lowest-id
+    // argmax tie-break, id-seeded.
+    Query("sim_kmeans",
       s"""$kmeansAssignCte
-          SELECT vec_id, cluster, cs AS cos_sim FROM a2""",
+          SELECT vec_id, cluster, cs AS cos_sim FROM a2""")((s, dir) => {
+      implicit val sp = s
+      graft.operators.KMeans.fit(t(s, dir, "embeddings"), k = 8,
+        iterations = 2)._1
+    }),
 
-    "dd_semantic" ->
+    // Semantic dedup (SemDeDup-style): the TRAINED k-means clusters are
+    // the blocking key — pairs only form within a cluster, so cluster id
+    // is the shuffle key and per-cluster work is bounded by the cell
+    // size. k is PINNED at 8 here so the DuckDB oracle can replay the
+    // whole Lloyd fit deterministically; the scale surface is
+    // [[graft.operators.SemDedup.apply]], which derives
+    // k = ⌈rows/targetCell⌉ so cells stay ~constant as the corpus grows
+    // (ScaleProbe `semdedup` pins the flat per-cluster cost).
+    Query("dd_semantic",
       s"""$kmeansAssignCte,
           av AS (SELECT a2.vec_id, a2.cluster, v.embedding
                  FROM a2 JOIN vecs v USING (vec_id))
@@ -1623,10 +1352,21 @@ object SimQueries {
                 (sqrt(${sqlDot("a.embedding", "a.embedding")}) *
                  sqrt(${sqlDot("b.embedding", "b.embedding")}))
               >= $SemDedupTau
-          GROUP BY b.vec_id, b.cluster""",
+          GROUP BY b.vec_id, b.cluster""")((s, dir) => {
+      implicit val sp = s
+      graft.operators.SemDedup.withK(
+        t(s, dir, "embeddings"), k = 8, tau = SemDedupTau)
+    }),
 
+    // The SQL surface of the same operator: `CALL system.semdedup` reads
+    // a txlog catalog table, runs the identical cluster-blocked dedup
+    // (k pinned here so the DuckDB Lloyd replay stays deterministic —
+    // k = 0 is the derive-from-corpus scale path), and materializes the
+    // verdicts as a fresh catalog table the SQL-first user queries
+    // directly. Same oracle as `dd_semantic`: the procedure path must be
+    // hash-identical to the library path it wraps.
     // the procedure path must replay to the same verdicts
-    "sql_semdedup" ->
+    Query("sql_semdedup",
       s"""$kmeansAssignCte,
           av AS (SELECT a2.vec_id, a2.cluster, v.embedding
                  FROM a2 JOIN vecs v USING (vec_id))
@@ -1637,9 +1377,31 @@ object SimQueries {
                 (sqrt(${sqlDot("a.embedding", "a.embedding")}) *
                  sqrt(${sqlDot("b.embedding", "b.embedding")}))
               >= $SemDedupTau
-          GROUP BY b.vec_id, b.cluster""",
+          GROUP BY b.vec_id, b.cluster""")((s, dir) => {
+      EtlQueries.ensureCatalog(s)
+      t(s, dir, "embeddings").createOrReplaceTempView("emb_sd_src")
+      s.sql("DROP TABLE IF EXISTS graftcat.db.emb_sd")
+      s.sql("DROP TABLE IF EXISTS graftcat.db.emb_sd_out")
+      s.sql("CREATE TABLE graftcat.db.emb_sd USING txlog AS " +
+        "SELECT vec_id, embedding FROM emb_sd_src")
+      val r = s.sql("CALL graftcat.system.semdedup(" +
+        s"'db.emb_sd', 'db.emb_sd_out', $SemDedupTau, 8)").collect().head
+      require(r.getInt(0) == 1 && r.getLong(1) > 0,
+        s"semdedup must land one data commit in the dest: $r")
+      s.sql("SELECT vec_id, cluster, kept FROM graftcat.db.emb_sd_out")
+    }),
 
-    "retr_hybrid_rrf" ->
+    // Hybrid retrieval — reciprocal-rank fusion (RRF, k=60) of a lexical
+    // BM25 leg over `documents` and a cosine vector leg over `embeddings`
+    // (doc_id ≡ vec_id): the standard two-tower retrieval front-end of a
+    // decontamination / RAG pipeline, where neither signal alone suffices.
+    // Scale shape: each leg reduces to its own top-N FIRST (BM25 touches
+    // only matching postings; the vector leg is the ANN path — brute here,
+    // IVF-routable at size), so the fusion joins two N-row frames, never
+    // the corpora: at 100 TB the fuse cost is O(N), constant. Ranks are
+    // total-ordered (score desc, id asc) so fusion is deterministic;
+    // symmetric rank pairs tie in rrf and break by doc_id on both engines.
+    Query("retr_hybrid_rrf",
       s"""WITH tok AS (SELECT doc_id,
                 unnest(${TextQueries.sqlToksOf("text")}) AS tok
               FROM documents),
@@ -1686,20 +1448,72 @@ object SimQueries {
           ORDER BY round(
               COALESCE(CAST(1.0 AS DOUBLE) / (60 + lex_rank), 0.0) +
               COALESCE(CAST(1.0 AS DOUBLE) / (60 + vec_rank), 0.0), 6)
-            DESC, COALESCE(lex.doc_id, vec.doc_id) LIMIT 20""",
+            DESC, COALESCE(lex.doc_id, vec.doc_id) LIMIT 20""")((s, dir) => {
+      val qTerms = Seq("hash", "join", "filter")
+      val d = t(s, dir, "documents")
+      // the lexical leg IS the named scorer (one tokenize pass, one
+      // doc-keyed shuffle, broadcast df/stats — see bm25Scores scaladoc);
+      // 6dp-rounded scores order identically as DOUBLE, so ranks match
+      // the oracle's DECIMAL ordering
+      val bm = TextQueries.bm25Scores(d, qTerms)
+        .select(col("doc_id"), col("bm25").as("sc"))
+      val lex = bm.orderBy(col("sc").desc, col("doc_id")).limit(50)
+        .withColumn("lex_rank", row_number().over(
+          Window.orderBy(col("sc").desc, col("doc_id"))).cast(LongType))
+        .select(col("doc_id"), col("lex_rank"))
+      val emb = t(s, dir, "embeddings")
+        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
+      val vec = emb.crossJoin(broadcast(q))
+        .select(col("vec_id"), cosine(col("v"), col("qv")).as("cs"))
+        .orderBy(col("cs").desc, col("vec_id")).limit(50)
+        .withColumn("vec_rank", row_number().over(
+          Window.orderBy(col("cs").desc, col("vec_id"))).cast(LongType))
+        .select(col("vec_id").as("doc_id"), col("vec_rank"))
+      lex.join(vec, Seq("doc_id"), "full_outer")
+        .withColumn("rrf", round(
+          coalesce(lit(1.0) / (lit(60L) + col("lex_rank")), lit(0.0)) +
+            coalesce(lit(1.0) / (lit(60L) + col("vec_rank")), lit(0.0)), 6)
+          .cast(DecimalType(18, 6)))
+        .orderBy(col("rrf").desc, col("doc_id")).limit(20)
+        .select(col("doc_id"), col("lex_rank"), col("vec_rank"),
+          col("rrf").cast(DoubleType).as("rrf"))
+    }),
 
-    "sim_ivf_kmeans_topk" -> ivfTrainedOracle,
+    // IVF search over the TRAINED quantizer: route the query to its best
+    // k-means cell, then rank only that cell's members against the query.
+    // At 100 TB the cell id is the partition key — probing one cell reads
+    // ~1/k of the data.
+    Query("sim_ivf_kmeans_topk", ivfTrainedOracle)((s, dir) => {
+      implicit val sp = s
+      val emb = t(s, dir, "embeddings")
+      val (assignedRaw, centsRaw) = graft.operators.KMeans.fit(emb, 8, 2)
+      // three downstream consumers (cell routing, membership join, ranking)
+      // would each replay the training lineage — persist the tiny artifacts.
+      // Session-scoped: CacheManager dedups by plan (one entry per artifact
+      // across invocations + the bench warmup); clearCache() releases them.
+      val assigned = assignedRaw.cache()
+      val cents = centsRaw.cache()
+      val vecs = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      val q = vecs.filter(col("vec_id") === 0).select(col("v").as("qv"))
+      val bestCell = cents.crossJoin(broadcast(q))
+        .select(col("cluster"), cosine(col("cv"), col("qv")).as("cs"))
+        .orderBy(col("cs").desc, col("cluster"))
+        .limit(1).select(col("cluster").as("best_cluster"))
+      assigned.join(broadcast(bestCell),
+          col("cluster") === col("best_cluster"))
+        .join(vecs, "vec_id")
+        .crossJoin(broadcast(q))
+        .select(col("vec_id"), col("cluster"),
+          cosine(col("v"), col("qv")).as("q_cos"))
+        .orderBy(col("q_cos").desc, col("vec_id"))
+        .limit(5)
+    }),
 
-    // identical recomputation: the persisted index serves the SAME pinned
-    // corpus the in-query trainer would see, so the oracle is shared
-    "sim_ivf_persisted" -> ivfTrainedOracle,
-    "sim_ivf_autok" -> ivfAutoOracle,
-    "sim_ivf_batch" -> ivfBatchOracle,
-    "sim_ivf_nprobe" -> ivfOracle(serveAppended = false, nprobe = 2),
-    "sim_ivf_refresh" -> ivfOracle(serveAppended = true),
-
-
-    "sim_ivf_topk" ->
+    // IVF search, nprobe=1: coarse quantizer = per-label representative
+    // (min vec_id — deterministic, no float means); route the query to its
+    // best cell, then rank only that cell's members.
+    Query("sim_ivf_topk",
       s"""WITH emb AS (SELECT vec_id, label, embedding FROM embeddings),
           q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
           reps AS (
@@ -1718,9 +1532,117 @@ object SimQueries {
             (sqrt(${sqlDot("embedding", "embedding")}) *
              sqrt(${sqlDot("qv", "qv")})) AS cos_sim
           FROM emb JOIN best ON label = best.cell CROSS JOIN q
-          ORDER BY cos_sim DESC, vec_id LIMIT 5""",
+          ORDER BY cos_sim DESC, vec_id LIMIT 5""")((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+        .select(col("vec_id"), col("label"),
+          asDouble(col("embedding")).as("v"))
+      val w = Window.partitionBy("label").orderBy("vec_id")
+      val reps = emb.withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .select(col("label").as("cell"), col("v").as("centroid"))
+      val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
+      val bestCell = reps.crossJoin(broadcast(q))
+        .select(col("cell"), cosine(col("centroid"), col("qv")).as("cs"))
+        .orderBy(col("cs").desc, col("cell"))
+        .limit(1)
+        .select(col("cell"))
+      emb.join(broadcast(bestCell), col("label") === col("cell"))
+        .crossJoin(broadcast(q))
+        .select(col("vec_id"), col("label"),
+          cosine(col("v"), col("qv")).as("cos_sim"))
+        .orderBy(col("cos_sim").desc, col("vec_id"))
+        .limit(5)
+    }),
 
-    "sim_ivf_topk_nprobe2" ->
+    // Two-stage retrieve-then-rerank — the production ANN serving shape:
+    // stage 1 ranks the WHOLE corpus on 4-byte PQ codes via the broadcast
+    // ADC tables (never touching a full vector) and keeps 32 candidates;
+    // stage 2 joins only those 32 back to their full vectors for an exact
+    // cosine re-rank. At 100 TB the exact math runs on 32 rows instead of
+    // the corpus — recall comes from the candidate depth (32 ≫ k=5), the
+    // final ordering from true distances. Both stages deterministic
+    // (vec_id tie-breaks), so the composed pipeline hash-matches.
+    Query("sim_rerank_topk", {
+      val dtSub = (0 until PqM).map(si =>
+        s"""SELECT $si AS s, cb.code,
+              ${sqlSubL2("cb.cv", "q.qv", si)} AS qd
+            FROM cb CROSS JOIN q""").mkString("\n          UNION ALL\n")
+      s"""WITH $SqlPqCodes,
+          q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+          dt AS ($dtSub),
+          cand AS (
+            SELECT c.vec_id FROM codes c
+            JOIN (SELECT code, qd FROM dt WHERE s = 0) d0 ON c.c0 = d0.code
+            JOIN (SELECT code, qd FROM dt WHERE s = 1) d1 ON c.c1 = d1.code
+            JOIN (SELECT code, qd FROM dt WHERE s = 2) d2 ON c.c2 = d2.code
+            JOIN (SELECT code, qd FROM dt WHERE s = 3) d3 ON c.c3 = d3.code
+            ORDER BY (d0.qd + d1.qd + d2.qd + d3.qd), c.vec_id LIMIT 32)
+          SELECT e.vec_id,
+            ${sqlDot("e.embedding", "qv")} /
+            (sqrt(${sqlDot("e.embedding", "e.embedding")}) *
+             sqrt(${sqlDot("qv", "qv")})) AS cos_sim
+          FROM embeddings e JOIN cand USING (vec_id) CROSS JOIN q
+          ORDER BY cos_sim DESC, e.vec_id LIMIT 5"""
+    })((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      val cands = pqAdcJoin(pqCodesPivot(emb), pqDistTables(emb))
+        .select(col("vec_id"), col("adc_dist"))
+        .orderBy(col("adc_dist"), col("vec_id"))
+        .limit(32)
+      val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
+      emb.join(broadcast(cands.select("vec_id")), "vec_id")
+        .crossJoin(broadcast(q))
+        .select(col("vec_id"), cosine(col("v"), col("qv")).as("cos_sim"))
+        .orderBy(col("cos_sim").desc, col("vec_id"))
+        .limit(5)
+    }),
+
+    // Truncated-dimension two-stage search (the matryoshka-embedding
+    // serving pattern): stage 1 scores the corpus on the FIRST 16 of 64
+    // dims — 4x less arithmetic and, with a dimension-sliced column
+    // layout, 4x less I/O — keeping 32 candidates; stage 2 re-ranks only
+    // those on full vectors. Same two-stage economics as sim_rerank_topk
+    // with truncation instead of quantization as the cheap stage; both
+    // stages deterministic (vec_id tie-breaks).
+    Query("sim_mrl_topk",
+      s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+          cand AS (
+            SELECT vec_id FROM (
+              SELECT e.vec_id,
+                ${sqlDotN("e.embedding", "qv", 16)} /
+                (sqrt(${sqlDotN("e.embedding", "e.embedding", 16)}) *
+                 sqrt(${sqlDotN("qv", "qv", 16)})) AS cs
+              FROM embeddings e CROSS JOIN q)
+            ORDER BY cs DESC, vec_id LIMIT 32)
+          SELECT e.vec_id,
+            ${sqlDot("e.embedding", "qv")} /
+            (sqrt(${sqlDot("e.embedding", "e.embedding")}) *
+             sqrt(${sqlDot("qv", "qv")})) AS cos_sim
+          FROM embeddings e JOIN cand USING (vec_id) CROSS JOIN q
+          ORDER BY cos_sim DESC, e.vec_id LIMIT 5""")((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      val q = emb.filter(col("vec_id") === 0)
+      val qt = q.select(slice(col("v"), 1, 16).as("qtv"))
+      val cands = emb
+        .select(col("vec_id"), slice(col("v"), 1, 16).as("tv"))
+        .crossJoin(broadcast(qt))
+        .select(col("vec_id"), cosine(col("tv"), col("qtv")).as("cs"))
+        .orderBy(col("cs").desc, col("vec_id"))
+        .limit(32).select("vec_id")
+      emb.join(broadcast(cands), "vec_id")
+        .crossJoin(broadcast(q.select(col("v").as("qv"))))
+        .select(col("vec_id"), cosine(col("v"), col("qv")).as("cos_sim"))
+        .orderBy(col("cos_sim").desc, col("vec_id"))
+        .limit(5)
+    }),
+
+    // IVF search, nprobe=2 — the recall/cost knob: probing the 2 best cells
+    // scans 2/k of the data instead of 1/k and recovers neighbors that
+    // straddle a cell boundary (the classic IVF recall failure). Identical
+    // plan shape; only the broadcast cell list grows.
+    Query("sim_ivf_topk_nprobe2",
       s"""WITH emb AS (SELECT vec_id, label, embedding FROM embeddings),
           q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
           reps AS (
@@ -1739,5 +1661,25 @@ object SimQueries {
             (sqrt(${sqlDot("embedding", "embedding")}) *
              sqrt(${sqlDot("qv", "qv")})) AS cos_sim
           FROM emb JOIN best ON label = best.cell CROSS JOIN q
-          ORDER BY cos_sim DESC, vec_id LIMIT 5""")
+          ORDER BY cos_sim DESC, vec_id LIMIT 5""")((s, dir) => {
+      val emb = t(s, dir, "embeddings")
+        .select(col("vec_id"), col("label"),
+          asDouble(col("embedding")).as("v"))
+      val w = Window.partitionBy("label").orderBy("vec_id")
+      val reps = emb.withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .select(col("label").as("cell"), col("v").as("centroid"))
+      val q = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
+      val bestCells = reps.crossJoin(broadcast(q))
+        .select(col("cell"), cosine(col("centroid"), col("qv")).as("cs"))
+        .orderBy(col("cs").desc, col("cell"))
+        .limit(2)
+        .select(col("cell"))
+      emb.join(broadcast(bestCells), col("label") === col("cell"))
+        .crossJoin(broadcast(q))
+        .select(col("vec_id"), col("label"),
+          cosine(col("v"), col("qv")).as("cos_sim"))
+        .orderBy(col("cos_sim").desc, col("vec_id"))
+        .limit(5)
+    }))
 }

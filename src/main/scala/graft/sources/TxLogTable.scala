@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * of version manifests; a version BECOMES VISIBLE in the single atomic
   * create of its manifest file.
   *
-  * Why this beats the staging-directory swap of `EtlContext.replace` at
-  * 100 TB:
+  * Why this beats swapping a staged directory into place (the ETL's
+  * replace before it wrote through this log) at 100 TB:
   *  - readers resolve a manifest once and read exactly that file list —
   *    snapshot isolation with no rename window, on stores where directory
   *    rename is not atomic (object stores);
@@ -3435,27 +3435,27 @@ final case class TxLogTable(spark: SparkSession, root: String) {
 
   private def cursorsDir: Path = logDir.resolve("cursors")
 
-  // cursor names become file names: keep [A-Za-z0-9._-] bytes, percent-
-  // encode everything else (UTF-8, byte-wise) — the same round-trip
-  // discipline the partition dirs needed for non-ASCII (r13 CDC fix).
-  // The NAME itself is stored inside the file, so reads never decode.
-  private def cursorFileName(name: String): String =
-    name.getBytes(UTF_8).map { b =>
+  // named-ref (cursor, tag) names become file names: keep [A-Za-z0-9._-]
+  // bytes, percent-encode everything else (UTF-8, byte-wise) — the same
+  // round-trip discipline the partition dirs needed for non-ASCII (r13
+  // CDC fix). The NAME itself is stored inside the file, so reads never
+  // decode.
+  private def refFile(dir: Path, name: String, ext: String): Path =
+    dir.resolve(name.getBytes(UTF_8).map { b =>
       if ((b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') ||
           (b >= '0' && b <= '9') || b == '.' || b == '_' || b == '-')
         b.toChar.toString
       else f"%%${b & 0xff}%02X"
-    }.mkString + ".cursor"
+    }.mkString + ext)
 
-  /** Registered change-feed cursors by name. A malformed cursor file is
-    * skipped (it cannot pin anything it can no longer describe) — vacuum
-    * stays runnable even if a cursor write was interrupted pre-move. */
-  def cursors(): Map[String, TxLogTable.Cursor] =
-    if (!Files.isDirectory(cursorsDir)) Map.empty
-    else scala.util.Using.resource(Files.list(cursorsDir)) { s =>
+  // every `ext` ref file under `dir` as (name, version, all its `k=v`
+  // lines); a file without a name or an integer version is skipped
+  private def readRefs(dir: Path, ext: String)
+      : Seq[(String, Int, Map[String, String])] =
+    if (!Files.isDirectory(dir)) Nil
+    else scala.util.Using.resource(Files.list(dir)) { s =>
       s.iterator().asScala
-        .filter(p => p.toString.endsWith(".cursor") &&
-          Files.isRegularFile(p))
+        .filter(p => p.toString.endsWith(ext) && Files.isRegularFile(p))
         .flatMap { p =>
           val kv = new String(Files.readAllBytes(p), UTF_8)
             .split("\n").iterator.map(_.split("=", 2))
@@ -3463,10 +3463,18 @@ final case class TxLogTable(spark: SparkSession, root: String) {
           for {
             n <- kv.get("name")
             v <- kv.get("version").flatMap(_.toIntOption)
-          } yield n -> TxLogTable.Cursor(n, v,
-            kv.get("updatedMillis").flatMap(_.toLongOption).getOrElse(0L))
-        }.toMap
+          } yield (n, v, kv)
+        }.toList
     }
+
+  /** Registered change-feed cursors by name. A malformed cursor file is
+    * skipped (it cannot pin anything it can no longer describe) — vacuum
+    * stays runnable even if a cursor write was interrupted pre-move. */
+  def cursors(): Map[String, TxLogTable.Cursor] =
+    readRefs(cursorsDir, ".cursor").map { case (n, v, kv) =>
+      n -> TxLogTable.Cursor(n, v,
+        kv.get("updatedMillis").flatMap(_.toLongOption).getOrElse(0L))
+    }.toMap
 
   /** Upsert cursor `name` at `version`: every manifest at or after
     * `version` survives vacuum until the cursor advances or is
@@ -3480,7 +3488,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     Files.createDirectories(cursorsDir)
     val body = s"name=$name\nversion=$version\n" +
       s"updatedMillis=${System.currentTimeMillis()}\n"
-    TxLogTable.replaceAtomically(cursorsDir.resolve(cursorFileName(name)),
+    TxLogTable.replaceAtomically(refFile(cursorsDir, name, ".cursor"),
       body.getBytes(UTF_8))
   }
 
@@ -3488,7 +3496,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * lets history behind an abandoned consumer be reclaimed (the Kafka
     * consumer-group deletion model). Returns false if no such cursor. */
   def releaseCursor(name: String): Boolean =
-    Files.deleteIfExists(cursorsDir.resolve(cursorFileName(name)))
+    Files.deleteIfExists(refFile(cursorsDir, name, ".cursor"))
 
   private def tagsDir: Path = logDir.resolve("tags")
 
@@ -3507,20 +3515,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * alive.
     */
   def tags(): Map[String, Int] =
-    if (!Files.isDirectory(tagsDir)) Map.empty
-    else scala.util.Using.resource(Files.list(tagsDir)) { s =>
-      s.iterator().asScala
-        .filter(p => p.toString.endsWith(".tag") && Files.isRegularFile(p))
-        .flatMap { p =>
-          val kv = new String(Files.readAllBytes(p), UTF_8)
-            .split("\n").iterator.map(_.split("=", 2))
-            .collect { case Array(k, v) => k -> v }.toMap
-          for {
-            n <- kv.get("name")
-            v <- kv.get("version").flatMap(_.toIntOption)
-          } yield n -> v
-        }.toMap
-    }
+    readRefs(tagsDir, ".tag").map { case (n, v, _) => n -> v }.toMap
 
   /** Create tag `name` at `version` (default: latest). Refuses an
     * existing name (immutability), a vacuumed/absent version, and a
@@ -3545,15 +3540,14 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     Files.createDirectories(tagsDir)
     val body = s"name=$name\nversion=$v\n" +
       s"createdMillis=${System.currentTimeMillis()}\n"
-    TxLogTable.putIfAbsent(tagsDir.resolve(cursorFileName(name)
-        .stripSuffix(".cursor") + ".tag"), body.getBytes(UTF_8))
+    TxLogTable.putIfAbsent(refFile(tagsDir, name, ".tag"),
+      body.getBytes(UTF_8))
     v
   }
 
   /** Drop tag `name` — releases its retention pin. False if absent. */
   def dropTag(name: String): Boolean =
-    Files.deleteIfExists(tagsDir.resolve(cursorFileName(name)
-      .stripSuffix(".cursor") + ".tag"))
+    Files.deleteIfExists(refFile(tagsDir, name, ".tag"))
 
   def versionOfTag(name: String): Option[Int] = tags().get(name)
 
@@ -4971,9 +4965,11 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     * `set` applied, as new data files holding ONLY the touched rows —
     * O(matched rows) write amplification, vs [[deleteWhere]]'s O(affected
     * files). `set` maps column name → replacement expression (evaluated
-    * against the row's old values, so `col("x") + 1` increments).
-    * CHECK constraints validate the updated rows before publish; CDC
-    * sees exact delete+insert pairs (the mask's rows and the new files'
+    * against the row's old values, so `col("x") + 1` increments; cast to
+    * the column's type). The touched rows reach the driver in the mask's
+    * bounded collect, so their new file is written there, with no Spark
+    * write job. CHECK constraints validate the updated rows before
+    * publish; CDC sees exact delete+insert pairs (the mask's rows and the new files'
     * rows under one `_commit_version`).
     */
   def updateWherePos(schema: StructType, pred: org.apache.spark.sql.Column,
@@ -5017,12 +5013,16 @@ final case class TxLogTable(spark: SparkSession, root: String) {
                       opName: String): TxLogTable.MergeStats = {
     import org.apache.spark.sql.functions.coalesce
     maskAndAdd(schema, Some(pred), _.filter(coalesce(pred, lit(false))),
-        keepRows = false, opName, Nil, None) { (hit, picked) =>
-      // update: the touched rows re-staged once with assignments applied
+        keepRows = set.isDefined, opName, Nil, None) { picked =>
+      // update: the touched rows, collected with their positions, take
+      // the assignments (cast to the column's type) over a local relation
+      // that the optimizer folds on the driver, and stage once
       set.filter(_ => picked.nonEmpty).map(assigns =>
-        Left(hit.select(schema.fieldNames.toIndexedSeq.map(n =>
-          assigns.collectFirst { case (c, e) if c == n => e.as(n) }
-            .getOrElse(col(n))): _*)))
+        Right(spark.createDataFrame(picked.asJava, schema)
+          .select(schema.fields.toIndexedSeq.map(f =>
+            assigns.collectFirst { case (c, e) if c == f.name =>
+              e.cast(f.dataType).as(f.name) }.getOrElse(col(f.name))): _*)
+          .collect().toSeq))
     }
   }
 
@@ -5099,7 +5099,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
       rows => rows.join(broadcast(keyFrame),
         keyCols.map(k => rows(k) <=> keyFrame(k)).reduce(_ && _),
         "left_semi"),
-      keepRows = false, op, extraMeta, expectHead)((_, _) =>
+      keepRows = false, op, extraMeta, expectHead)(_ =>
         Some(Left(aligned)))
   }
 
@@ -5158,7 +5158,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
           keyCols.map(k => rows(k) <=> kf(k)).reduce(_ && _), "left_semi")
       }
     maskAndAdd(schema, hull, pick, keepRows = true, op, extraMeta,
-        Some(head)) { (_, picked) =>
+        Some(head)) { picked =>
       val out = fold(picked)
       if (out.isEmpty) None else Some(Right(out))
     }
@@ -5209,9 +5209,8 @@ final case class TxLogTable(spark: SparkSession, root: String) {
     *    ([[stageRows]]: no Spark job; per-file counts are driver math),
     *    and `add`'s rows stage as new data files — a frame (`Left`)
     *    through a Spark write, driver-held rows of `schema` (`Right`) on
-    *    the driver; `add` gets the picked rows as a frame of `schema`
-    *    columns and as the collected rows (their `schema` columns with
-    *    `keepRows`, else their positions);
+    *    the driver; `add` gets the collected rows (their `schema`
+    *    columns with `keepRows`, else their positions);
     *  - both publish in one manifest, or nothing when nothing was masked
     *    or added.
     */
@@ -5219,7 +5218,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
                          pick: DataFrame => DataFrame, keepRows: Boolean,
                          op: String, extraMeta: Seq[String],
                          expectHead: Option[Int])
-                        (add: (DataFrame, Seq[org.apache.spark.sql.Row]) =>
+                        (add: Seq[org.apache.spark.sql.Row] =>
                           Option[Either[DataFrame,
                             Seq[org.apache.spark.sql.Row]]])
       : TxLogTable.MergeStats = {
@@ -5240,15 +5239,12 @@ final case class TxLogTable(spark: SparkSession, root: String) {
           allEntries.filter(entryFilter(p, base, inheritedColMap))
         case None => allEntries
       }
-      val (hitRows, picked) =
-        if (affected.isEmpty)
-          (scanFiles(schema, inheritedColMap, Nil),
-            Array.empty[org.apache.spark.sql.Row])
+      val picked =
+        if (affected.isEmpty) Array.empty[org.apache.spark.sql.Row]
         else {
           val (rows, fcol, pcol) = readMaskedPos(schema,
             affected, base, None, withPos = true)
-          val kept = pick(rows)
-          val hit = kept.select(
+          val hit = pick(rows).select(
             Seq(typedLit(affected.map(_.rel)).apply(col(fcol)).as("file"),
               col(pcol).as("pos")) ++
               (if (keepRows) schema.fieldNames.toSeq.map(col) else Nil): _*)
@@ -5260,7 +5256,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
             s"$op would push the live positional-delete mask past $cap " +
               "rows: compact the table first (folds every mask), or use " +
               "the copy-on-write path (deleteWhere/merge)")
-          (kept.drop(fcol, pcol), got)
+          got
         }
       // ONE small DV parquet per commit (a target's positions must not
       // span DV files — the manifest carries one line per target)
@@ -5271,7 +5267,7 @@ final case class TxLogTable(spark: SparkSession, root: String) {
           Nil, mapped = false)
       val counts = picked.groupBy(_.getString(0)).view
         .mapValues(_.length.toLong).toSeq.sortBy(_._1)
-      val stagedData = add(hitRows,
+      val stagedData = add(
           if (keepRows) picked.toSeq.map(r =>
             org.apache.spark.sql.Row.fromSeq(r.toSeq.drop(2)))
           else picked.toSeq)

@@ -22,7 +22,9 @@ class PipelineSpec extends AnyFunSuite {
   private def write(name: String, content: String): Unit =
     Files.writeString(Paths.get(dir, name), content)
 
-  private def table(name: String) = spark.read.parquet(s"$wh/$name")
+  private def table(name: String) =
+    graft.sources.TxLogTable(spark, s"$wh/$name")
+      .snapshot(allTables.toMap.apply(name))
 
   private def longName = "Кафедра очень длинного названия которое явно " +
     "длиннее пятидесяти символов для проверки усечения"
@@ -350,7 +352,7 @@ class PipelineSpec extends AnyFunSuite {
       when(col("v").isNotNull, raise_error(lit("employees feed broken")))
         .otherwise(col("v")))))
     def ctx(wh: String, t: String) =
-      EtlContext(spark, s"$dir/$wh", ts(t), txLog = true)
+      EtlContext(spark, s"$dir/$wh", ts(t))
     def versions(wh: String): Map[String, Option[Int]] =
       allTables.map { case (t, _) =>
         t -> graft.sources.TxLogTable(spark, s"$dir/$wh/$t").latestVersion

@@ -7,31 +7,21 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.sources.TxLogTable
 
-/** Full pipeline on the transaction-log storage backend: every table the
-  * dir-swap backend produces, bit-equal, plus time travel back to the run-1
-  * state after run 2 overwrites.
+/** Full pipeline on the transaction-log tables: time travel back to the
+  * run-1 state after run 2 overwrites, and the context's maintenance
+  * surface (change feed, compact, history, vacuum).
   */
 class TxLogPipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private val dir = Files.createTempDirectory("graft-txlog-e2e").toString
   private val whTx = s"$dir/wh_txlog"
-  private val whSwap = s"$dir/wh_swap"
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
   private def write(name: String, content: String): Unit =
     Files.writeString(Paths.get(dir, name), content)
 
-  private val tables = Seq(
-    "student_groups" -> Schemas.studentGroupsTable,
-    "schedule_json_storage" -> Schemas.scheduleJsonStorageTable,
-    "schedule_events" -> Schemas.scheduleEventsTable,
-    "schedule_rejects" -> Schemas.scheduleRejectsTable,
-    "occupancy_index" -> Schemas.occupancyIndexTable,
-    "system_state" -> Schemas.systemState)
-
-  // normalize to schema column order: the dir-swap backend's hive layout
-  // appends partition columns on read
+  // normalize to schema column order
   private def norm(df: org.apache.spark.sql.DataFrame,
                    schema: org.apache.spark.sql.types.StructType): Seq[String] =
     df.select(schema.fieldNames.map(org.apache.spark.sql.functions.col): _*)
@@ -40,11 +30,6 @@ class TxLogPipelineSpec extends AnyFunSuite {
   private def rowsTx(t: String, schema: org.apache.spark.sql.types.StructType,
                      version: Option[Int] = None): Seq[String] =
     norm(TxLogTable(spark, s"$whTx/$t").snapshot(schema, version), schema)
-
-  private def rowsSwap(t: String,
-                       schema: org.apache.spark.sql.types.StructType): Seq[String] =
-    norm(EtlContext(spark, whSwap, ts("2000-01-01 00:00:00")).read(t, schema),
-      schema)
 
   private def writeRun1(): Unit = {
     write("current-week.json", "2")
@@ -71,24 +56,14 @@ class TxLogPipelineSpec extends AnyFunSuite {
                "studentGroups":[{"name":"253501","numberOfStudents":25}]}]},
            "exams":[]}}]""")
 
-  test("txlog backend: both runs produce the dir-swap tables exactly") {
+  test("txlog pipeline: time travel, feed, compact, history, vacuum") {
     writeRun1()
-    EtlPipeline.runFromDir(spark, dir, whTx, ts("2026-01-10 00:00:00"),
-      txLog = true)
-    EtlPipeline.runFromDir(spark, dir, whSwap, ts("2026-01-10 00:00:00"))
-    tables.foreach { case (t, sch) =>
-      assert(rowsTx(t, sch) == rowsSwap(t, sch), s"run1 table $t")
-    }
+    EtlPipeline.runFromDir(spark, dir, whTx, ts("2026-01-10 00:00:00"))
     val run1Events = rowsTx("schedule_events", Schemas.scheduleEventsTable)
     assert(run1Events.nonEmpty)
 
     writeRun2()
-    EtlPipeline.runFromDir(spark, dir, whTx, ts("2026-02-01 00:00:00"),
-      txLog = true)
-    EtlPipeline.runFromDir(spark, dir, whSwap, ts("2026-02-01 00:00:00"))
-    tables.foreach { case (t, sch) =>
-      assert(rowsTx(t, sch) == rowsSwap(t, sch), s"run2 table $t")
-    }
+    EtlPipeline.runFromDir(spark, dir, whTx, ts("2026-02-01 00:00:00"))
 
     // time travel: version 0 of schedule_events is the run-1 state
     val eventsLog = TxLogTable(spark, s"$whTx/schedule_events")
@@ -102,7 +77,7 @@ class TxLogPipelineSpec extends AnyFunSuite {
     // context-level maintenance surface: the change feed sees run 2's
     // overwrite as a reset boundary carrying the new state; compact packs
     // the table without changing it; vacuum leaves only the latest version
-    val ctx = EtlContext(spark, whTx, ts("2026-02-01 00:00:00"), txLog = true)
+    val ctx = EtlContext(spark, whTx, ts("2026-02-01 00:00:00"))
     val events = ctx.table("schedule_events")
     val latest = events.latestVersion.get
     val feed = events.changesBetween(Schemas.scheduleEventsTable,
