@@ -206,10 +206,4 @@ object Multimodal {
       col("text").cast(BinaryType).as("media_bytes"),
       struct(col("doc_id").as("source_doc"),
         lit("application/octet-stream").as("mime")).as("meta"))
-
-  /** Metadata-only projection: binary column pruned at the parquet scan. */
-  def metaOnly(media: DataFrame): DataFrame =
-    media.select(col("media_id"), col("kind"),
-      octet_length(col("media_bytes")).as("n_bytes"),
-      col("meta.source_doc"), col("meta.mime"))
 }

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,7 +23,7 @@ import graft.sources.TxLogTable
   *   - `assignments` (vec_id, cluster): corpus routing at build time
   *
   * Staleness contract: the index answers for the corpus snapshot it was
-  * built on. [[searchIvf]] with `requireFresh = true` REFUSES when the
+  * built on. [[search]] with `requireFresh = true` REFUSES when the
   * corpus has advanced past the pinned version (the serving-layer guard:
   * an index silently lagging its corpus returns wrong neighbors); with
   * `requireFresh = false` it serves the pinned snapshot — consistent
@@ -83,15 +85,10 @@ object AnnIndex {
     * side of every search/refresh broadcast, and a serving loop
     * (status probes, recall sweeps, batch searches) re-reads the same
     * immutable version per call — the stamped memo turns each re-read
-    * into a driver map hit and each broadcast build into a no-job
-    * LocalRelation collect. Vector-row sized (centroid rows carry the
-    * full embedding), far under the dim-snapshot cap.
-    * Conf-overridable: `spark.graft.ann.maxLocalIdxRows`. */
+    * into a driver map hit, and a broadcast build reads the held rows
+    * instead of scanning the table's files. Vector-row sized (centroid
+    * rows carry the full embedding), far under the dim-snapshot cap. */
   val MaxLocalIdxRows: Long = 1L << 14
-
-  private def maxLocalIdxRows(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.ann.maxLocalIdxRows")
-      .map(_.toLong).getOrElse(MaxLocalIdxRows)
 
   // a small index side table as a LocalRelation when its exact size is
   // known and under the cap; the ordinary distributed snapshot
@@ -101,7 +98,7 @@ object AnnIndex {
     val t = TxLogTable(spark, root)
     t.latestVersion
       .flatMap(v =>
-        t.localPinnedSnapshot(schema, v, maxLocalIdxRows(spark)))
+        t.localPinnedSnapshot(schema, v, MaxLocalIdxRows))
       .getOrElse(t.snapshot(schema))
   }
 
@@ -113,8 +110,18 @@ object AnnIndex {
   // only MOVE to the driver — every comparison, cosine and ADC distance
   // stays a Spark expression, so results are bit-identical.
   private def localized(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(df.collect(): _*), df.schema)
+    onePart(df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema))
+
+  // a driver-local frame as ONE partition: Spark splits a LocalRelation
+  // into min(rows, defaultParallelism) partitions, so a few-row frame
+  // streaming into a join or a broadcast build fans out into
+  // sub-millisecond tasks. A distributed frame passes through unchanged.
+  private def onePart(df: DataFrame): DataFrame =
+    df.queryExecution.analyzed match {
+      case _: LocalRelation => df.coalesce(1)
+      case _ => df
+    }
 
   private def sq8BoundArrays(spark: SparkSession, indexRoot: String)
       : (org.apache.spark.sql.Column, org.apache.spark.sql.Column) = {
@@ -129,7 +136,7 @@ object AnnIndex {
   /** Train and persist an IVF index over the corpus's CURRENT version.
     * One k-means fit (the only time the corpus is scanned for training);
     * `pq = false` skips the PQ artifacts for a centroids-only index
-    * (searchIvfPq then has nothing to load and must not be used).
+    * (a [[Pq]] search then has nothing to load and must not be used).
     * Returns the pinned corpus version.
     */
   def build(spark: SparkSession, corpusRoot: String, indexRoot: String,
@@ -439,13 +446,10 @@ object AnnIndex {
       mx, if (mean > 0) mx / mean else 0.0)
   }
 
-  /** Conf-resolved default retrain threshold for the staleness guard —
-    * `spark.graft.ann.maxRoutedFrac` (default 0.5, ≤ 0 disables): the
-    * policy [[refreshAuto]], `CALL ann_refresh` and the streaming
-    * maintainer apply when the caller does not name one explicitly. */
-  def confMaxRoutedFrac(spark: SparkSession): Double =
-    spark.conf.getOption("spark.graft.ann.maxRoutedFrac")
-      .map(_.toDouble).getOrElse(0.5)
+  /** Default retrain threshold for the staleness guard: the policy
+    * [[refreshAuto]], `CALL ann_refresh` and the streaming maintainer
+    * apply when the caller does not name one explicitly. */
+  val DefaultMaxRoutedFrac: Double = 0.5
 
   /** [[refresh]] with a RETRAIN THRESHOLD — the guard that keeps the
     * cheap growth path from decaying recall forever: when absorbing the
@@ -463,7 +467,8 @@ object AnnIndex {
     *         noop | routed | retrained)
     */
   def refreshAuto(spark: SparkSession, indexRoot: String,
-                  maxRoutedFrac: Double = 0.5): (Int, Long, String) = {
+                  maxRoutedFrac: Double = DefaultMaxRoutedFrac)
+      : (Int, Long, String) = {
     require(maxRoutedFrac > 0 && maxRoutedFrac <= 1,
       s"maxRoutedFrac must be in (0, 1], got $maxRoutedFrac")
     val meta = loadMeta(spark, indexRoot)
@@ -537,24 +542,16 @@ object AnnIndex {
     sideTable(spark, s"$indexRoot/meta", metaSchema)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
-  /** IVF search THROUGH the persisted index: centroids and routing come
-    * from the index tables (tiny parquet reads, broadcast), the corpus is
-    * read at the PINNED version, and no k-means fit runs — by
-    * construction, this method never trains. Cell probing reads ~1/k of
-    * the corpus at scale (cluster id is the partition key of the
-    * assignments join).
-    */
   // shared load + staleness gate: the pinned corpus with its FULL
   // column set (filtered search predicates reference corpus attributes
-  // — label, lang, any metadata the row carries). Callers apply their
-  // filter against this frame and then immediately project to the
+  // — label, lang, any metadata the row carries). The search applies
+  // its filter against this frame and then immediately projects to the
   // internal (vec_id, v) shape, so corpus columns — including ones
   // literally named "v", "cluster", "qv", "cs" or "best_cluster" —
   // never reach the ranking pipeline's joins and cannot collide with
   // its internal names.
   private def loadPinnedCorpus(spark: SparkSession, indexRoot: String,
-                               requireFresh: Boolean)
-      : (DataFrame, Int) = {
+                               requireFresh: Boolean): DataFrame = {
     val meta = loadMeta(spark, indexRoot)
     val pinned = meta("corpus_version").toInt
     val corpus = TxLogTable(spark, meta("corpus_root"))
@@ -568,337 +565,160 @@ object AnnIndex {
         "rebuild the index")
     val schema = DataType.fromJson(meta("corpus_schema"))
       .asInstanceOf[StructType]
-    (corpus.snapshot(schema, Some(pinned)), pinned)
+    corpus.snapshot(schema, Some(pinned))
   }
 
   // the internal two-column ranking shape: the optional pre-filter is
   // applied while the corpus columns are still present, then projected
   // away — `as("v")` on a select output cannot collide with any corpus
   // column name
-  private def rankingShape(corpus: DataFrame,
-                           filter: Option[org.apache.spark.sql.Column])
+  private def rankingShape(corpus: DataFrame, filter: Option[Column])
       : DataFrame =
     filter.map(corpus.filter).getOrElse(corpus)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
 
-  /** IVF top-k, optionally FILTERED: `filter` (a predicate over the
-    * corpus's own columns — label, lang, any metadata the corpus row
-    * carries) restricts the CANDIDATES before ranking — pre-filter
-    * semantics, so all `topK` survivors satisfy it (post-filtering a
-    * top-k can return fewer than k). The predicate applies inside the
-    * probed cell only — same recall contract as unfiltered IVF search,
-    * same cost shape: ~1/k of the corpus scanned, then a predicate the
-    * scan can push down.
-    */
-  def searchIvf(spark: SparkSession, indexRoot: String, queryVecId: Long,
-                topK: Int, requireFresh: Boolean = false,
-                filter: Option[org.apache.spark.sql.Column] = None,
-                nprobe: Int = 1)
-      : DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    graft.catalyst.CosineSim.register(spark)
-    val (corpus, _) = loadPinnedCorpus(spark, indexRoot, requireFresh)
-    val emb = rankingShape(corpus, filter)
-    val cents = sideTable(spark, s"$indexRoot/centroids",
-      centroidsSchema)
-    val assigned = TxLogTable(spark, s"$indexRoot/assignments")
-      .snapshot(assignmentsSchema)
-    // the query vector is fetched UNfiltered: asking for neighbors of a
-    // row the filter excludes is legitimate
-    val q = rankingShape(corpus, None)
-      .filter(col("vec_id") === queryVecId)
-      .select(col("v").as("qv"))
-    // the recall/cost knob: probe the nprobe nearest cells — each vector
-    // lives in exactly one cell, so the probed union has no duplicates
-    // and candidate volume is ~nprobe/k of the corpus
-    val bestCell = cents.crossJoin(broadcast(q))
-      .select(col("cluster"), cosine(col("cv"), col("qv")).as("cs"))
-      .orderBy(col("cs").desc, col("cluster"))
-      .limit(nprobe).select(col("cluster").as("best_cluster"))
-    assigned.join(broadcast(bestCell),
-        col("cluster") === col("best_cluster"))
-      .join(emb, "vec_id")
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("cluster"),
-        cosine(col("v"), col("qv")).as("q_cos"))
-      .orderBy(col("q_cos").desc, col("vec_id"))
-      .limit(topK)
+  // per-query top-k, shared by routing and ranking: one query keeps the
+  // plain ORDER BY + LIMIT (no exchange on q_id); a batch ranks within
+  // each q_id through a row_number window, whose rank partial Spark's
+  // WindowGroupLimit pushes below the exchange
+  private def perQueryTopK(df: DataFrame, k: Int, oneQuery: Boolean,
+                           order: Column*): DataFrame =
+    if (oneQuery) df.orderBy(order: _*).limit(k)
+    else df.withColumn("rn", row_number().over(
+        Window.partitionBy("q_id").orderBy(order: _*)))
+      .filter(col("rn") <= k).drop("rn")
+
+  /** One ranker of the probed cells' candidates, declared once: the
+    * index table its candidates join, the score column it computes and
+    * the direction it ranks in (ties break on `vec_id` ascending). */
+  sealed abstract class Variant(val name: String, val score: String,
+                                ascending: Boolean) {
+    private[AnnIndex] def order: Seq[Column] =
+      Seq(if (ascending) col(score) else col(score).desc, col("vec_id"))
+
+    // the probed candidates joined to this ranker's index table, with
+    // `score` added
+    private[AnnIndex] def scored(p: Probe): DataFrame
   }
 
-  /** BATCH IVF search through the persisted index — N query vectors in
-    * ONE pass, the nightly-similarity-sweep shape ([[searchIvf]] per id
-    * would re-plan and re-scan per query). Routing is one tiny
-    * centroids × queries product (k × N rows, broadcast, driver never
-    * touched); scoring joins the probed cells' candidates to EXACTLY
-    * the queries routed to each cell — an EQUI-join on the cluster id,
-    * never corpus × queries — and a per-query window top-k (Spark's
-    * WindowGroupLimit pushes the rank partial) returns `topK` rows per
-    * query. Cost shape: |union of probed cells| of the corpus scanned
-    * once + one shuffle of (cell candidates × that cell's queries).
-    * Same per-query results as [[searchIvf]], tie-break included;
-    * `nprobe` widens routing to the n best cells per query — the same
-    * recall/cost knob, candidate volume ~nprobe/k of the corpus.
-    */
-  def searchIvfBatch(spark: SparkSession, indexRoot: String,
-                     queryVecIds: Seq[Long], topK: Int,
-                     requireFresh: Boolean = false,
-                     nprobe: Int = 1): DataFrame = {
-    require(queryVecIds.nonEmpty, "searchIvfBatch needs query ids")
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    graft.catalyst.CosineSim.register(spark)
-    import org.apache.spark.sql.expressions.Window
-    val (corpus, _) = loadPinnedCorpus(spark, indexRoot, requireFresh)
-    val emb = rankingShape(corpus, None)
-    val cents = sideTable(spark, s"$indexRoot/centroids",
-      centroidsSchema)
-    val assigned = TxLogTable(spark, s"$indexRoot/assignments")
-      .snapshot(assignmentsSchema)
-    // ONE job fetches the N query vectors; the local frame then feeds
-    // the routing product and the routed broadcast without re-scanning
-    // the corpus per exchange
-    val qs = localized(emb.filter(col("vec_id").isin(queryVecIds: _*))
-      .select(col("vec_id").as("q_id"), col("v").as("qv")))
-    // route: per query the nprobe best cells — rank over the tiny k × N
-    // routing product (ORDER BY cs DESC, cluster ASC reproduces
-    // searchIvf's tie-break); each vector lives in exactly one cell, so
-    // probing more cells only widens the candidate set, never dups it
-    val rw = Window.partitionBy("q_id")
-      .orderBy(col("cs").desc, col("cluster"))
-    val best = cents.crossJoin(broadcast(qs))
-      .select(col("q_id"), col("cluster"),
-        cosine(col("cv"), col("qv")).as("cs"))
-      .withColumn("crn", row_number().over(rw))
-      .filter(col("crn") <= nprobe)
-      .select(col("q_id"), col("cluster").as("best_cluster"))
-    val routed = best.join(qs, "q_id") // tiny: N*nprobe rows with vectors
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("q_cos").desc, col("vec_id"))
-    assigned.join(broadcast(routed),
-        col("cluster") === col("best_cluster"))
-      .join(emb, "vec_id")
-      .select(col("q_id"), col("vec_id"), col("cluster"),
-        cosine(col("v"), col("qv")).as("q_cos"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topK)
-      .drop("rn")
+  // what a ranker sees of one search: the pinned corpus and its filter,
+  // the (q_id, qv) queries, and the probed candidates (q_id, qv, vec_id,
+  // cluster, best_cluster)
+  private final case class Probe(spark: SparkSession, indexRoot: String,
+                                 corpus: DataFrame, filter: Option[Column],
+                                 queries: DataFrame, probed: DataFrame)
+
+  /** Exact cosine against the pinned corpus's full vectors. The only
+    * variant that takes a `filter`: a predicate over the corpus's own
+    * columns restricts the candidates before ranking — pre-filter
+    * semantics, so all `topK` survivors satisfy it, inside the probed
+    * cells only (the same recall contract and cost shape as the
+    * unfiltered search). */
+  case object Exact extends Variant("exact", "q_cos", ascending = false) {
+    private[AnnIndex] def scored(p: Probe): DataFrame =
+      p.probed.join(rankingShape(p.corpus, p.filter), "vec_id")
+        .withColumn(score, cosine(col("v"), col("qv")))
   }
 
-  /** Batch twin of [[searchIvfPq]] — N queries ranked on the persisted
-    * 4-byte codes in ONE pass. The ADC lookup tables gain a query key
-    * (16 × N rows per subspace — still broadcast), candidates join
-    * their own query's table on (code, q_id), and a per-query window
-    * top-k closes. Full vectors are touched only to fetch the N query
-    * vectors; candidate volume is the probed-cells union, exactly as
-    * in the single search.
-    */
-  def searchIvfPqBatch(spark: SparkSession, indexRoot: String,
-                       queryVecIds: Seq[Long], topK: Int,
-                       requireFresh: Boolean = false,
-                       nprobe: Int = 1): DataFrame = {
-    require(queryVecIds.nonEmpty, "searchIvfPqBatch needs query ids")
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    graft.catalyst.CosineSim.register(spark)
-    graft.catalyst.L2Sq.register(spark)
-    import org.apache.spark.sql.expressions.Window
-    val (corpus, _) = loadPinnedCorpus(spark, indexRoot, requireFresh)
-    val emb = rankingShape(corpus, None)
-    val cents = sideTable(spark, s"$indexRoot/centroids",
-      centroidsSchema)
-    val assigned = TxLogTable(spark, s"$indexRoot/assignments")
-      .snapshot(assignmentsSchema)
-    val codes = TxLogTable(spark, s"$indexRoot/codes")
-      .snapshot(codesSchema)
-    val codebook = sideTable(spark, s"$indexRoot/codebook",
-      codebookSchema)
-    // ONE job fetches the N query vectors; routing, the subvector
-    // derivation and the ADC fold below all reuse the local frame
-    // instead of re-scanning the corpus per exchange
-    val qs = localized(emb.filter(col("vec_id").isin(queryVecIds: _*))
-      .select(col("vec_id").as("q_id"), col("v").as("qv")))
-    val rw = Window.partitionBy("q_id")
-      .orderBy(col("cs").desc, col("cluster"))
-    val best = cents.crossJoin(broadcast(qs))
-      .select(col("q_id"), col("cluster"),
-        cosine(col("cv"), col("qv")).as("cs"))
-      .withColumn("crn", row_number().over(rw))
-      .filter(col("crn") <= nprobe)
-      .select(col("q_id"), col("cluster").as("best_cluster"))
-    // per-query ADC tables from the persisted codebook — same fold and
-    // join order as the single search, so per-query results are
-    // bit-identical to searchIvfPq. The (vec_id, v) input to the
-    // subvector split is the SAME local query frame renamed back.
-    val qSub = graft.queries.SimQueries.pqSubVectors(
-        qs.select(col("q_id").as("vec_id"), col("qv").as("v")))
-      .select(col("vec_id").as("dq_id"), col("s").as("qs"), col("sv"))
-    // the ADC table is 16 codes × 4 subspaces × N queries — localize it
-    // once so the four per-subspace broadcast builds below fold to
-    // in-memory LocalRelations (zero jobs) instead of each re-running
-    // the codebook⋈queries join
-    val dt = localized(
-      codebook.join(broadcast(qSub), col("s") === col("qs"))
-        .select(col("dq_id"), col("s"), col("code"),
-          graft.catalyst.L2Sq.l2sq(col("cv"), col("sv")).as("qd")))
-    val dts = (0 until graft.queries.SimQueries.PqM).map(si =>
-      dt.filter(col("s") === si)
-        .select(col("dq_id").as(s"q$si"), col("code").as(s"code$si"),
-          col("qd").as(s"d$si")))
-    val cand = assigned.join(broadcast(best),
-        col("cluster") === col("best_cluster"))
-      .join(codes, "vec_id")
-    val joined = dts.zipWithIndex.foldLeft(cand) { case (df, (d, si)) =>
-      df.join(broadcast(d),
-        col("q_id") === col(s"q$si") && col(s"c$si") === col(s"code$si"))
-    }.withColumn("adc_dist",
-      col("d0") + col("d1") + col("d2") + col("d3"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("adc_dist"), col("vec_id"))
-    joined.select(col("q_id"), col("vec_id"), col("cluster"),
-        col("adc_dist"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topK)
-      .drop("rn")
+  /** The persisted 4-byte PQ codes ranked by asymmetric distance: per
+    * query, ADC lookup tables from the persisted codebook × the query's
+    * subvectors (16 codes × 4 subspaces per query, broadcast), each
+    * candidate joined to its own query's table on (q_id, code). Full
+    * vectors are touched only to fetch the queries; the sum runs in
+    * subspace order, so scores are bit-identical to `ivfpq_topk`. */
+  case object Pq extends Variant("pq", "adc_dist", ascending = true) {
+    private[AnnIndex] def scored(p: Probe): DataFrame = {
+      graft.catalyst.L2Sq.register(p.spark)
+      val qSub = graft.queries.SimQueries.pqSubVectors(
+          p.queries.select(col("q_id").as("vec_id"), col("qv").as("v")))
+        .select(col("vec_id").as("dq_id"), col("s").as("qs"), col("sv"))
+      // localize the ADC table once: the four per-subspace broadcast
+      // builds below then read driver-held rows instead of each
+      // re-running codebook ⋈ queries
+      val dt = localized(
+        onePart(sideTable(p.spark, s"${p.indexRoot}/codebook",
+            codebookSchema))
+          .join(broadcast(qSub), col("s") === col("qs"))
+          .select(col("dq_id"), col("s"), col("code"),
+            graft.catalyst.L2Sq.l2sq(col("cv"), col("sv")).as("qd")))
+      (0 until graft.queries.SimQueries.PqM).foldLeft(
+        p.probed.join(TxLogTable(p.spark, s"${p.indexRoot}/codes")
+          .snapshot(codesSchema), "vec_id")) { (df, si) =>
+        df.join(broadcast(dt.filter(col("s") === si)
+            .select(col("dq_id").as(s"q$si"), col("code").as(s"code$si"),
+              col("qd").as(s"d$si"))),
+          col("q_id") === col(s"q$si") && col(s"c$si") === col(s"code$si"))
+      }.withColumn(score, col("d0") + col("d1") + col("d2") + col("d3"))
+    }
   }
 
-  /** IVF+SQ8 search through the persisted index: routing via the
-    * persisted centroids, ranking on the persisted 8-bit codes
-    * dequantized against the persisted per-dimension bounds (two 64-double
-    * literal arrays — no broadcast table, no join), asymmetric against
-    * the raw query vector. The middle serving rung: 4× less ranking I/O
-    * than exact float32 at near-exact recall (measured 0.99 vs raw-ADC
-    * PQ's ~0.23 on this corpus), where PQ buys 16× at real recall cost.
-    * Full vectors are touched only to fetch the query itself.
-    */
-  def searchIvfSq8(spark: SparkSession, indexRoot: String,
-                   queryVecId: Long, topK: Int,
-                   requireFresh: Boolean = false,
-                   nprobe: Int = 1): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    graft.catalyst.CosineSim.register(spark)
-    val (corpus, _) = loadPinnedCorpus(spark, indexRoot, requireFresh)
-    val emb = rankingShape(corpus, None)
-    val cents = sideTable(spark, s"$indexRoot/centroids",
-      centroidsSchema)
-    val assigned = TxLogTable(spark, s"$indexRoot/assignments")
-      .snapshot(assignmentsSchema)
-    val codes = TxLogTable(spark, s"$indexRoot/sq8codes")
-      .snapshot(sq8CodesSchema)
-    val (mnA, spanA) = sq8BoundArrays(spark, indexRoot)
-    val q = emb.filter(col("vec_id") === queryVecId)
-      .select(col("v").as("qv"))
-    val bestCell = cents.crossJoin(broadcast(q))
-      .select(col("cluster"), cosine(col("cv"), col("qv")).as("cs"))
-      .orderBy(col("cs").desc, col("cluster"))
-      .limit(nprobe).select(col("cluster").as("best_cluster"))
-    assigned.join(broadcast(bestCell),
-        col("cluster") === col("best_cluster"))
-      .join(codes, "vec_id")
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("cluster"),
-        cosine(sq8DecodeCol(mnA, spanA), col("qv")).as("sq8_sim"))
-      .orderBy(col("sq8_sim").desc, col("vec_id"))
-      .limit(topK)
+  /** The persisted 8-bit SQ8 codes dequantized against the persisted
+    * per-dimension bounds (two literal arrays — no broadcast table, no
+    * join), cosine against the raw query vector: 4× less ranking I/O
+    * than exact at near-exact recall (the recall matrix's sq8 arm
+    * measures 0.99 where raw 4-subspace ADC sits at ~0.23). */
+  case object Sq8 extends Variant("sq8", "sq8_sim", ascending = false) {
+    private[AnnIndex] def scored(p: Probe): DataFrame = {
+      val (mnA, spanA) = sq8BoundArrays(p.spark, p.indexRoot)
+      p.probed.join(TxLogTable(p.spark, s"${p.indexRoot}/sq8codes")
+          .snapshot(sq8CodesSchema), "vec_id")
+        .withColumn(score, cosine(sq8DecodeCol(mnA, spanA), col("qv")))
+    }
   }
 
-  /** Batch twin of [[searchIvfSq8]] — N queries ranked on the persisted
-    * 8-bit codes in ONE pass: the same per-query routing as
-    * [[searchIvfBatch]], candidates join their cells' queries on the
-    * cluster id, ranking dequantizes against the two bounds literals
-    * (no broadcast table), and a per-query window top-k closes. The
-    * batch serving shape at the recall/IO point the matrix measured
-    * best (sq8 0.99 recall@10 at 4× less ranking I/O).
+  /** IVF top-k THROUGH the persisted index for each of `queryVecIds`,
+    * as `(q_id, vec_id, cluster, <variant.score>)`: centroids and
+    * routing come from the index tables, the corpus is read at the
+    * PINNED version, and no k-means fit runs — by construction, the
+    * search never trains. Routing is one tiny centroids × queries
+    * product: per query, the `nprobe` nearest cells (cosine descending,
+    * then cluster); each vector lives in exactly one cell, so more
+    * probes widen the candidates (~nprobe/k of the corpus) without
+    * duplicates. Scoring EQUI-joins the probed cells' candidates to
+    * exactly the queries routed there — never corpus × queries — and
+    * `variant` ranks them (score, then `vec_id`), `topK` per query. A
+    * query's rows do not depend on the rest of its batch.
+    *
+    * Only [[Exact]] takes a `filter`. `requireFresh` refuses an index
+    * whose corpus has moved past the pinned version.
     */
-  def searchIvfSq8Batch(spark: SparkSession, indexRoot: String,
-                        queryVecIds: Seq[Long], topK: Int,
-                        requireFresh: Boolean = false,
-                        nprobe: Int = 1): DataFrame = {
-    require(queryVecIds.nonEmpty, "searchIvfSq8Batch needs query ids")
+  def search(spark: SparkSession, indexRoot: String, variant: Variant,
+             queryVecIds: Seq[Long], topK: Int, nprobe: Int = 1,
+             filter: Option[Column] = None,
+             requireFresh: Boolean = false): DataFrame = {
+    require(queryVecIds.nonEmpty, "AnnIndex.search needs query ids")
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+    require(filter.isEmpty || variant == Exact,
+      s"ANN variant '${variant.name}' serves unfiltered — its ranking " +
+        "payload carries no corpus attributes; use the exact variant for " +
+        "predicate search")
     graft.catalyst.CosineSim.register(spark)
-    import org.apache.spark.sql.expressions.Window
-    val (corpus, _) = loadPinnedCorpus(spark, indexRoot, requireFresh)
-    val emb = rankingShape(corpus, None)
-    val cents = sideTable(spark, s"$indexRoot/centroids",
-      centroidsSchema)
-    val assigned = TxLogTable(spark, s"$indexRoot/assignments")
+    val corpus = loadPinnedCorpus(spark, indexRoot, requireFresh)
+    val oneQuery = queryVecIds.size == 1
+    // the query vectors are fetched UNfiltered: asking for neighbors of
+    // a row the filter excludes is legitimate. A batch's vectors are
+    // fetched by ONE job and held on the driver, so routing and the ADC
+    // tables reuse them instead of re-scanning the corpus per exchange
+    val fetched = rankingShape(corpus, None)
+      .filter(col("vec_id").isin(queryVecIds: _*))
+      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+    val queries = if (oneQuery) fetched else localized(fetched)
+    // the routed cells carry their query's vector, so scoring needs no
+    // second join to the queries
+    val routed = perQueryTopK(
+        onePart(sideTable(spark, s"$indexRoot/centroids", centroidsSchema))
+          .crossJoin(broadcast(queries))
+          .select(col("q_id"), col("qv"), col("cluster"),
+            cosine(col("cv"), col("qv")).as("cs")),
+        nprobe, oneQuery, col("cs").desc, col("cluster"))
+      .select(col("q_id"), col("qv"), col("cluster").as("best_cluster"))
+    val probed = TxLogTable(spark, s"$indexRoot/assignments")
       .snapshot(assignmentsSchema)
-    val codes = TxLogTable(spark, s"$indexRoot/sq8codes")
-      .snapshot(sq8CodesSchema)
-    val (mnA, spanA) = sq8BoundArrays(spark, indexRoot)
-    // ONE job fetches the N query vectors (see searchIvfBatch)
-    val qs = localized(emb.filter(col("vec_id").isin(queryVecIds: _*))
-      .select(col("vec_id").as("q_id"), col("v").as("qv")))
-    val rw = Window.partitionBy("q_id")
-      .orderBy(col("cs").desc, col("cluster"))
-    val best = cents.crossJoin(broadcast(qs))
-      .select(col("q_id"), col("cluster"),
-        cosine(col("cv"), col("qv")).as("cs"))
-      .withColumn("crn", row_number().over(rw))
-      .filter(col("crn") <= nprobe)
-      .select(col("q_id"), col("cluster").as("best_cluster"))
-    val routed = best.join(qs, "q_id")
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("sq8_sim").desc, col("vec_id"))
-    assigned.join(broadcast(routed),
-        col("cluster") === col("best_cluster"))
-      .join(codes, "vec_id")
-      .select(col("q_id"), col("vec_id"), col("cluster"),
-        cosine(sq8DecodeCol(mnA, spanA), col("qv")).as("sq8_sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= topK)
-      .drop("rn")
-  }
-
-  /** IVF+PQ search through the persisted index — the billion-vector
-    * serving shape with NOTHING trained at query time: the coarse
-    * quantizer routes via persisted centroids, ranking runs on the
-    * persisted 4-byte codes through ADC lookup tables built from the
-    * persisted codebook and the query vector (16 rows per subspace,
-    * broadcast). The corpus's full vectors are touched only to fetch the
-    * query vector itself.
-    */
-  def searchIvfPq(spark: SparkSession, indexRoot: String, queryVecId: Long,
-                  topK: Int, requireFresh: Boolean = false): DataFrame = {
-    graft.catalyst.CosineSim.register(spark)
-    graft.catalyst.L2Sq.register(spark)
-    val (corpus, _) = loadPinnedCorpus(spark, indexRoot, requireFresh)
-    val emb = rankingShape(corpus, None)
-    val cents = sideTable(spark, s"$indexRoot/centroids",
-      centroidsSchema)
-    val assigned = TxLogTable(spark, s"$indexRoot/assignments")
-      .snapshot(assignmentsSchema)
-    val codes = TxLogTable(spark, s"$indexRoot/codes")
-      .snapshot(codesSchema)
-    val codebook = sideTable(spark, s"$indexRoot/codebook",
-      codebookSchema)
-    val q = emb.filter(col("vec_id") === queryVecId)
-      .select(col("v").as("qv"))
-    val bestCell = cents.crossJoin(broadcast(q))
-      .select(col("cluster"), cosine(col("cv"), col("qv")).as("cs"))
-      .orderBy(col("cs").desc, col("cluster"))
-      .limit(1).select(col("cluster").as("best_cluster"))
-    // ADC tables from the persisted codebook × the query's subvectors —
-    // same fold and join order as the in-query trainer, so results are
-    // bit-identical to ivfpq_topk over the pinned corpus
-    val qSub = graft.queries.SimQueries.pqSubVectors(
-        emb.filter(col("vec_id") === queryVecId))
-      .select(col("s").as("qs"), col("sv").as("qv"))
-    // localize the 64-row ADC table once: the four per-subspace
-    // broadcast builds fold to LocalRelations (zero jobs) instead of
-    // each re-running codebook⋈query (see searchIvfPqBatch)
-    val dt = localized(
-      codebook.join(broadcast(qSub), col("s") === col("qs"))
-        .select(col("s"), col("code"),
-          graft.catalyst.L2Sq.l2sq(col("cv"), col("qv")).as("qd")))
-    val dts = (0 until graft.queries.SimQueries.PqM).map(si =>
-      dt.filter(col("s") === si)
-        .select(col("code").as(s"code$si"), col("qd").as(s"d$si")))
-    graft.queries.SimQueries.pqAdcJoin(
-        assigned.join(broadcast(bestCell),
-            col("cluster") === col("best_cluster"))
-          .join(codes, "vec_id"),
-        dts)
-      .select(col("vec_id"), col("cluster"), col("adc_dist"))
-      .orderBy(col("adc_dist"), col("vec_id"))
-      .limit(topK)
+      .join(broadcast(routed), col("cluster") === col("best_cluster"))
+    perQueryTopK(
+      variant.scored(Probe(spark, indexRoot, corpus, filter, queries, probed))
+        .select(col("q_id"), col("vec_id"), col("cluster"),
+          col(variant.score)),
+      topK, oneQuery, variant.order: _*)
   }
 }

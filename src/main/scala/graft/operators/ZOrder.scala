@@ -43,23 +43,6 @@ object ZOrder {
   // (mx - mn) in DOUBLE without the Long-subtraction overflow
   private def spanOf(mn: Long, mx: Long): Double = mx.toDouble - mn.toDouble
 
-  /** Interleave the low [[Bits]] bits of `a` and `b`: bit i of `a` goes to
-    * position 2i, bit i of `b` to 2i+1 — the Morton code. Unrolled to a
-    * fixed OR-chain of shifts so whole-stage codegen sees straight-line
-    * long arithmetic.
-    */
-  def interleave(a: Column, b: Column): Column =
-    (0 until Bits).foldLeft(lit(0L)) { (acc, i) =>
-      acc
-        .bitwiseOR(shiftleft(a.bitwiseAND(lit(1L << i)), i))
-        .bitwiseOR(shiftleft(b.bitwiseAND(lit(1L << i)), i + 1))
-    }
-
-  /** The z-value of (`a`, `b`) given their committed value ranges. */
-  def zValue(a: Column, aMin: Long, aMax: Long,
-             b: Column, bMin: Long, bMax: Long): Column =
-    interleave(gridCell(a, aMin, aMax), gridCell(b, bMin, bMax))
-
   /** Grid resolution for an N-dimensional curve: the interleaved key
     * must fit a non-negative Long, so each dimension gets
     * `min(16, 63/N)` bits — 16²=2 dims keep the classic resolution,
@@ -71,10 +54,10 @@ object ZOrder {
   def bitsFor(n: Int): Int = math.min(Bits, 63 / math.max(1, n))
 
   /** N-way Morton interleave over `bits` low bits of each column: bit i
-    * of column j lands at position i·N + j. The 2-column [[interleave]]
-    * is the N=2 special case (identical bit layout). Still a fixed
-    * OR-chain of shifts — straight-line long arithmetic under
-    * whole-stage codegen, no shuffle.
+    * of column j lands at position i·N + j (for N=2, bit i of the first
+    * column goes to 2i and of the second to 2i+1 — the classic Morton
+    * code). A fixed OR-chain of shifts — straight-line long arithmetic
+    * under whole-stage codegen, no shuffle.
     */
   def interleaveN(cols: Seq[Column], bits: Int): Column = {
     val n = cols.size

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.VectorFunctions._
+import graft.operators.AnnIndex
 import graft.sources.Tables
 
 /** Approximate-nearest-neighbor / similarity-search operators over the
@@ -175,7 +176,7 @@ object SimQueries {
   /** ADC distance join: codes (c0..c3) × the four broadcast tables, summed
     * in fixed order so the oracle reproduces the double sum exactly.
     */
-  private[graft] def pqAdcJoin(codes: DataFrame, dts: Seq[DataFrame]): DataFrame =
+  private def pqAdcJoin(codes: DataFrame, dts: Seq[DataFrame]): DataFrame =
     codes
       .join(broadcast(dts(0)), col("c0") === col("code0"))
       .join(broadcast(dts(1)), col("c1") === col("code1"))
@@ -281,7 +282,7 @@ object SimQueries {
 
   private lazy val ivfTrainedOracle: String = ivfOracle(false)
 
-  /** SQL replay of [[graft.operators.AnnIndex.buildAuto]] + searchIvf:
+  /** SQL replay of [[graft.operators.AnnIndex.buildAuto]] + search:
     * k and stride derive from the corpus count (targetCell 64, sample
     * 256), seeds are the k smallest SAMPLED vec_ids renumbered by rank,
     * one mean update runs over the SAMPLE only, and the full corpus is
@@ -590,7 +591,7 @@ object SimQueries {
     // closed): the corpus lands as a tx-log table, ONE build call trains
     // and persists centroids/assignments/meta pinned to the corpus
     // version, and the search LOADS the index — no k-means fit in the
-    // query (searchIvf never trains, by construction; the requires prove
+    // query (the search never trains, by construction; the requires prove
     // the lifecycle contract). Staleness: after the corpus advances, a
     // requireFresh search REFUSES (the serving guard), while the pinned
     // search still serves the snapshot it indexed — its results are
@@ -621,7 +622,7 @@ object SimQueries {
         overwrite = false)
       val threw =
         try {
-          graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5,
+          AnnIndex.search(s, indexRoot, AnnIndex.Exact, Seq(0L), 5,
             requireFresh = true).collect(); false
         } catch { case _: IllegalArgumentException => true }
       require(threw, "stale index must refuse before the refresh")
@@ -631,8 +632,8 @@ object SimQueries {
       require(corpus.latestVersion.contains(newPin),
         s"refresh must advance the pin to the corpus head: $newPin")
       // requireFresh now passes — the refreshed index serves the union
-      graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5,
-        requireFresh = true)
+      AnnIndex.search(s, indexRoot, AnnIndex.Exact, Seq(0L), 5,
+        requireFresh = true).drop("q_id")
     }),
 
     // identical recomputation: the persisted index serves the SAME pinned
@@ -648,21 +649,21 @@ object SimQueries {
       val pinned = graft.operators.AnnIndex.build(
         s, corpusRoot, indexRoot, emb.schema, k = 8, iterations = 2,
         pq = false) // centroids-only index: the PQ twin builds its own
-      val fresh = graft.operators.AnnIndex.searchIvf(
-        s, indexRoot, queryVecId = 0L, topK = 5, requireFresh = true)
-        .collect()
+      val fresh = AnnIndex.search(s, indexRoot, AnnIndex.Exact, Seq(0L), 5,
+          requireFresh = true)
+        .drop("q_id").collect()
       // the corpus moves on: a fresh-index search must now refuse
       corpus.commit(emb.filter(col("vec_id") < 4)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")),
         overwrite = false)
       val threw =
         try {
-          graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5,
+          AnnIndex.search(s, indexRoot, AnnIndex.Exact, Seq(0L), 5,
             requireFresh = true).collect(); false
         } catch { case _: IllegalArgumentException => true }
       require(threw, "stale index must refuse a requireFresh search")
-      val pinnedSearch = graft.operators.AnnIndex.searchIvf(
-        s, indexRoot, 0L, 5, requireFresh = false)
+      val pinnedSearch = AnnIndex.search(s, indexRoot, AnnIndex.Exact,
+        Seq(0L), 5).drop("q_id")
       require(pinnedSearch.collect().toSeq == fresh.toSeq,
         "pinned-snapshot search changed after a corpus append — the index " +
           s"is not actually pinned to v$pinned")
@@ -697,8 +698,8 @@ object SimQueries {
         .map(r => r.getString(0) -> r.getString(1)).toMap
       require(meta("train_stride").toLong > 1,
         s"the strided training sample must be in effect: $meta")
-      graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5,
-        requireFresh = true)
+      AnnIndex.search(s, indexRoot, AnnIndex.Exact, Seq(0L), 5,
+        requireFresh = true).drop("q_id")
     }),
 
     // Persisted IVF+PQ (the full billion-vector serving path, nothing
@@ -720,20 +721,20 @@ object SimQueries {
       corpus.commit(emb, overwrite = true)
       graft.operators.AnnIndex.build(
         s, corpusRoot, indexRoot, emb.schema, k = 8, iterations = 2)
-      val fresh = graft.operators.AnnIndex.searchIvfPq(
-        s, indexRoot, queryVecId = 0L, topK = 5, requireFresh = true)
-        .collect()
+      val fresh = AnnIndex.search(s, indexRoot, AnnIndex.Pq, Seq(0L), 5,
+          requireFresh = true)
+        .drop("q_id").collect()
       corpus.commit(emb.filter(col("vec_id") < 4)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")),
         overwrite = false)
       val threw =
         try {
-          graft.operators.AnnIndex.searchIvfPq(s, indexRoot, 0L, 5,
+          AnnIndex.search(s, indexRoot, AnnIndex.Pq, Seq(0L), 5,
             requireFresh = true).collect(); false
         } catch { case _: IllegalArgumentException => true }
       require(threw, "stale index must refuse a requireFresh search")
-      val pinnedSearch = graft.operators.AnnIndex.searchIvfPq(
-        s, indexRoot, 0L, 5, requireFresh = false)
+      val pinnedSearch = AnnIndex.search(s, indexRoot, AnnIndex.Pq,
+        Seq(0L), 5).drop("q_id")
       require(pinnedSearch.collect().toSeq == fresh.toSeq,
         "pinned-snapshot IVF+PQ search changed after a corpus append")
       pinnedSearch
@@ -747,8 +748,8 @@ object SimQueries {
     // scanned once, scoring an EQUI-join on the cell id (the in-query
     // require proves no corpus × queries nested loop: every join in
     // the scoring plan is hash/broadcast-hash on a key). Per-query
-    // results equal searchIvf's, pinned by an in-query compare on one
-    // of the queries. Oracle recomputes the trained cells + per-query
+    // results equal a one-query search's, pinned by an in-query compare
+    // on one of the queries. Oracle recomputes the trained cells + per-query
     // routing + per-query top-k relationally.
     Query("sim_ivf_batch", ivfBatchOracle)((s, dir) => {
       val emb = t(s, dir, "embeddings").select(col("vec_id"),
@@ -760,22 +761,22 @@ object SimQueries {
       graft.operators.AnnIndex.build(
         s, corpusRoot, indexRoot, emb.schema, k = 8, iterations = 2,
         pq = false)
-      val out = graft.operators.AnnIndex.searchIvfBatch(
-        s, indexRoot, queryVecIds = Seq(0L, 1L, 2L, 3L), topK = 5)
+      val out = AnnIndex.search(s, indexRoot, AnnIndex.Exact,
+        Seq(0L, 1L, 2L, 3L), 5)
       // batch ≡ per-query: query 2's slice equals the single search
-      val single = graft.operators.AnnIndex.searchIvf(s, indexRoot, 2L, 5)
-        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+      val single = AnnIndex.search(s, indexRoot, AnnIndex.Exact, Seq(2L), 5)
+        .collect().map(r => (r.getLong(1), r.getDouble(3))).toSeq
       val slice = out.filter(col("q_id") === 2L)
         .orderBy(col("q_cos").desc, col("vec_id"))
         .collect().map(r => (r.getLong(1), r.getDouble(3))).toSeq
       require(slice == single,
         s"batch slice must equal the single search: $slice vs $single")
       // the equivalence holds through the nprobe knob too
-      val single2 = graft.operators.AnnIndex.searchIvf(s, indexRoot, 3L, 5,
-          nprobe = 2)
-        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-      val slice2 = graft.operators.AnnIndex.searchIvfBatch(
-          s, indexRoot, queryVecIds = Seq(0L, 3L), topK = 5, nprobe = 2)
+      val single2 = AnnIndex.search(s, indexRoot, AnnIndex.Exact, Seq(3L),
+          5, nprobe = 2)
+        .collect().map(r => (r.getLong(1), r.getDouble(3))).toSeq
+      val slice2 = AnnIndex.search(s, indexRoot, AnnIndex.Exact,
+          Seq(0L, 3L), 5, nprobe = 2)
         .filter(col("q_id") === 3L)
         .orderBy(col("q_cos").desc, col("vec_id"))
         .collect().map(r => (r.getLong(1), r.getDouble(3))).toSeq
@@ -806,10 +807,10 @@ object SimQueries {
       graft.sources.TxLogTable(s, corpusRoot).commit(emb, overwrite = true)
       graft.operators.AnnIndex.build(
         s, corpusRoot, indexRoot, emb.schema, k = 8, iterations = 2)
-      val out = graft.operators.AnnIndex.searchIvfPqBatch(
-        s, indexRoot, queryVecIds = Seq(0L, 1L, 2L, 3L), topK = 5)
-      val single = graft.operators.AnnIndex.searchIvfPq(s, indexRoot, 1L, 5)
-        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+      val out = AnnIndex.search(s, indexRoot, AnnIndex.Pq,
+        Seq(0L, 1L, 2L, 3L), 5)
+      val single = AnnIndex.search(s, indexRoot, AnnIndex.Pq, Seq(1L), 5)
+        .collect().map(r => (r.getLong(1), r.getDouble(3))).toSeq
       val slice = out.filter(col("q_id") === 1L)
         .orderBy(col("adc_dist"), col("vec_id"))
         .collect().map(r => (r.getLong(1), r.getDouble(3))).toSeq
@@ -842,15 +843,15 @@ object SimQueries {
         s, corpusRoot, indexRoot, emb.schema, k = 8, iterations = 2,
         pq = false)
       def scores(np: Int): Seq[Double] =
-        graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5,
+        AnnIndex.search(s, indexRoot, AnnIndex.Exact, Seq(0L), 5,
             nprobe = np)
-          .orderBy(col("q_cos").desc).collect().map(_.getDouble(2)).toSeq
+          .orderBy(col("q_cos").desc).collect().map(_.getDouble(3)).toSeq
       require(scores(1).zip(scores(2))
           .forall { case (a, b) => b >= a - 1e-12 },
         "nprobe=2 must dominate nprobe=1 rank-wise")
-      val full = graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5,
+      val full = AnnIndex.search(s, indexRoot, AnnIndex.Exact, Seq(0L), 5,
           nprobe = 8)
-        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
+        .collect().map(r => (r.getLong(1), r.getDouble(3))).toSeq
       val brute = emb
         .select(col("vec_id"), asDouble(col("embedding")).as("v"))
         .crossJoin(broadcast(emb.filter(col("vec_id") === 0L)
@@ -862,7 +863,8 @@ object SimQueries {
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       require(full == brute,
         s"nprobe=k must equal brute force: $full vs $brute")
-      graft.operators.AnnIndex.searchIvf(s, indexRoot, 0L, 5, nprobe = 2)
+      AnnIndex.search(s, indexRoot, AnnIndex.Exact, Seq(0L), 5, nprobe = 2)
+        .drop("q_id")
     }),
 
     // ANN RECALL MATRIX (the r15 VERDICT's #5): recall@10 of the
@@ -932,8 +934,8 @@ object SimQueries {
       // survivors — full vectors touched for 40 rows per query, never
       // the corpus
       def pqRerank(np: Int): org.apache.spark.sql.DataFrame =
-        graft.operators.AnnIndex.searchIvfPqBatch(
-            s, pqRoot, qids, topK * 4, nprobe = np)
+        AnnIndex.search(s, pqRoot, AnnIndex.Pq, qids, topK * 4,
+            nprobe = np)
           .select(col("q_id"), col("vec_id"))
           .join(embd, "vec_id")
           .join(broadcast(qs), "q_id")
@@ -972,10 +974,10 @@ object SimQueries {
         s"SQ8 quantization must stay near-exact (recall >= 0.9): $sq8R")
       val matrix = for {
         (variant, fn) <- Seq[(String, Int => org.apache.spark.sql.DataFrame)](
-          "ivf" -> (np => graft.operators.AnnIndex.searchIvfBatch(
-            s, ivfRoot, qids, topK, nprobe = np)),
-          "ivfpq" -> (np => graft.operators.AnnIndex.searchIvfPqBatch(
-            s, pqRoot, qids, topK, nprobe = np)),
+          "ivf" -> (np => AnnIndex.search(s, ivfRoot, AnnIndex.Exact,
+            qids, topK, nprobe = np)),
+          "ivfpq" -> (np => AnnIndex.search(s, pqRoot, AnnIndex.Pq,
+            qids, topK, nprobe = np)),
           "ivfpq_rerank" -> (np => pqRerank(np)))
         np <- Seq(1, 2, 4)
       } yield (variant, np, recall(fn(np)))
@@ -986,8 +988,8 @@ object SimQueries {
         s"IVF recall must be monotone in nprobe: $ivfR")
       require(ivfR.head >= 0.2,
         s"IVF nprobe=1 recall floor (0.2) broken: ${ivfR.head}")
-      val fullProbe = recall(graft.operators.AnnIndex.searchIvfBatch(
-        s, ivfRoot, qids, topK, nprobe = 8))
+      val fullProbe = recall(AnnIndex.search(s, ivfRoot, AnnIndex.Exact,
+        qids, topK, nprobe = 8))
       require(fullProbe == 1.0,
         s"IVF at nprobe=k is brute force by construction: $fullProbe")
       val pqR = matrix.filter(_._1 == "ivfpq").map(_._3)
@@ -1062,9 +1064,9 @@ object SimQueries {
       graft.sources.TxLogTable(s, corpusRoot).commit(emb, overwrite = true)
       graft.operators.AnnIndex.build(s, corpusRoot, indexRoot, emb.schema,
         k = 8, iterations = 2, pq = false)
-      graft.operators.AnnIndex.searchIvf(s, indexRoot, queryVecId = 0L,
-        topK = 5, requireFresh = true,
-        filter = Some(col("label") === 3))
+      AnnIndex.search(s, indexRoot, AnnIndex.Exact, Seq(0L), 5,
+          filter = Some(col("label") === 3), requireFresh = true)
+        .drop("q_id")
     }),
 
     // Top-k of the same — deterministic order with vec_id tie-break.
@@ -1175,7 +1177,7 @@ object SimQueries {
       ranked
     }),
 
-    // SQ8 through the PERSISTED index (AnnIndex build/searchIvfSq8):
+    // SQ8 through the PERSISTED index (AnnIndex build/search):
     // bounds and 8-bit codes are index artifacts like the PQ codebook —
     // trained once on the pinned corpus, loaded by every search, encoded
     // incrementally on refresh. Serving ranks the dequantized codes
@@ -1214,12 +1216,11 @@ object SimQueries {
       graft.sources.TxLogTable(s, corpusRoot).commit(emb, overwrite = true)
       graft.operators.AnnIndex.build(s, corpusRoot, indexRoot, emb.schema,
         k = 8, iterations = 2, pq = false, sq8 = true)
-      val one = graft.operators.AnnIndex.searchIvfSq8(s, indexRoot,
-        queryVecId = 0L, topK = 10, requireFresh = true, nprobe = 1)
-      require(one.head().getLong(0) == 0L,
+      val one = AnnIndex.search(s, indexRoot, AnnIndex.Sq8, Seq(0L), 10,
+        requireFresh = true)
+      require(one.head().getLong(1) == 0L,
         "single-probe SQ8 serving must surface the self-match")
-      graft.operators.AnnIndex.searchIvfSq8(s, indexRoot,
-          queryVecId = 0L, topK = 10, nprobe = 8)
+      AnnIndex.search(s, indexRoot, AnnIndex.Sq8, Seq(0L), 10, nprobe = 8)
         .select(col("vec_id"), col("sq8_sim"))
     }),
 

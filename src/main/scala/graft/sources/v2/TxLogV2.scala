@@ -497,6 +497,16 @@ class TxLogCatalog extends TableCatalog with ProcedureCatalog
     pathOf(Identifier.of(parts.init, parts.last)).toString
   }
 
+  // the persisted-index rankers the ann_search procedures serve, one
+  // dispatch for both: exact cosine or the 8-bit SQ8 codes
+  private def annVariant(a: ProcArgs): AnnIndex.Variant =
+    a.str("variant") match {
+      case "exact" => AnnIndex.Exact
+      case "sq8" => AnnIndex.Sq8
+      case other => throw new IllegalArgumentException(
+        s"ann_search variant must be 'exact' or 'sq8', got $other")
+    }
+
   // warehouse path for a 'ns.table' argument that must NOT exist yet —
   // clone targets, views and result tables are new artifacts, never
   // in-place mutations
@@ -956,8 +966,8 @@ class TxLogCatalog extends TableCatalog with ProcedureCatalog
     // the persisted codebook, the pin advances. O(new vectors); the
     // between-rebuilds growth path (AnnIndex.refresh's contract,
     // tombstoned corpora refuse loudly). The STALENESS GUARD
-    // (AnnIndex.refreshAuto) is ON BY DEFAULT at the conf policy
-    // spark.graft.ann.maxRoutedFrac (0.5): when absorbing the window
+    // (AnnIndex.refreshAuto) is ON BY DEFAULT at
+    // AnnIndex.DefaultMaxRoutedFrac (0.5): when absorbing the window
     // would push the routed-since-train fraction past the threshold, the
     // refresh retrains instead — recall decay from frozen centroids is
     // bounded by policy, not operator vigilance. An explicit
@@ -967,10 +977,10 @@ class TxLogCatalog extends TableCatalog with ProcedureCatalog
         "action STRING", req("index"),
         opt("max_routed_frac", DoubleType)) { a =>
       val idx = indexRoot(a)
-      // omitted → the conf-resolved policy default (0.5), computed at
-      // call time: the guard is ON unless the caller passes ≤ 0
+      // omitted → the policy default (0.5): the guard is ON unless the
+      // caller passes ≤ 0
       val frac = a.opt[Double]("max_routed_frac")
-        .getOrElse(AnnIndex.confMaxRoutedFrac(spark))
+        .getOrElse(AnnIndex.DefaultMaxRoutedFrac)
       val (v, added, action) =
         if (frac > 0) AnnIndex.refreshAuto(spark, idx, frac)
         else {
@@ -1001,18 +1011,9 @@ class TxLogCatalog extends TableCatalog with ProcedureCatalog
       require(k > 0, s"ann_search k must be positive, got $k")
       val pred = a.opt[String]("predicate")
         .map(org.apache.spark.sql.functions.expr)
-      val (fresh, np) = (a.bool("require_fresh"), a.int("nprobe"))
-      (a.str("variant") match {
-        case "exact" => AnnIndex.searchIvf(spark, idx, qid, k,
-          requireFresh = fresh, filter = pred, nprobe = np)
-        case "sq8" =>
-          require(pred.isEmpty, "ann_search variant 'sq8' serves " +
-            "unfiltered — use the exact variant for predicate search")
-          AnnIndex.searchIvfSq8(spark, idx, qid, k, requireFresh = fresh,
-            nprobe = np)
-        case other => throw new IllegalArgumentException(
-          s"ann_search variant must be 'exact' or 'sq8': $other")
-      }).collect().toSeq
+      AnnIndex.search(spark, idx, annVariant(a), Seq(qid), k,
+          a.int("nprobe"), pred, a.bool("require_fresh"))
+        .drop("q_id").collect().toSeq
     },
     // CALL c.system.ann_build_auto('ns.corpus', 'ns.idx' [, target_cell
     // [, train_sample [, iters [, pq [, sq8]]]]]): the auto-sized build
@@ -1127,7 +1128,7 @@ class TxLogCatalog extends TableCatalog with ProcedureCatalog
     },
     // CALL c.system.ann_search_batch('ns.idx', array(id, ...) [, k
     // [, nprobe [, require_fresh [, variant]]]]): N queries through ONE
-    // persisted-index pass (AnnIndex.searchIvfBatch — routing is the
+    // persisted-index pass (AnnIndex.search — routing is the
     // broadcast k × N centroid product, scoring an equi-join on the
     // probed cell, per-query window top-k). At most k rows PER QUERY
     // cross the driver — bounded by the ask, never the corpus; the
@@ -1144,18 +1145,11 @@ class TxLogCatalog extends TableCatalog with ProcedureCatalog
       require(qids.nonEmpty, "ann_search_batch needs query ids")
       val k = a.int("k")
       require(k > 0, s"ann_search_batch k must be positive, got $k")
-      val (fresh, np) = (a.bool("require_fresh"), a.int("nprobe"))
-      val (df, scoreCol) = a.str("variant") match {
-        case "exact" => (AnnIndex.searchIvfBatch(spark, idx, qids, k,
-          requireFresh = fresh, nprobe = np), "q_cos")
-        case "sq8" => (AnnIndex.searchIvfSq8Batch(spark, idx, qids, k,
-          requireFresh = fresh, nprobe = np), "sq8_sim")
-        case other => throw new IllegalArgumentException(
-          s"ann_search_batch variant must be exact|sq8, got $other")
-      }
+      val variant = annVariant(a)
       (StructType.fromDDL(
-        s"q_id BIGINT, vec_id BIGINT, cluster INT, $scoreCol DOUBLE"),
-        df.collect().toSeq)
+        s"q_id BIGINT, vec_id BIGINT, cluster INT, ${variant.score} DOUBLE"),
+        AnnIndex.search(spark, idx, variant, qids, k, a.int("nprobe"),
+          requireFresh = a.bool("require_fresh")).collect().toSeq)
     },
     // CALL c.system.branch('ns.t', 'name' [, version]): fork a WRITABLE
     // branch at `version` (default: head) — write-audit-publish. Every

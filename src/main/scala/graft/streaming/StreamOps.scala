@@ -302,8 +302,9 @@ object StreamOps {
     * `maxRoutedFrac` the batch RETRAINS instead — continuous ingest is
     * exactly where frozen-centroid drift accumulates fastest, so the
     * recall floor is bounded by policy, not operator vigilance.
-    * `maxRoutedFrac` defaults from `spark.graft.ann.maxRoutedFrac`
-    * (0.5); an explicit value ≤ 0 disables the guard (plain
+    * `maxRoutedFrac` defaults to
+    * [[graft.operators.AnnIndex.DefaultMaxRoutedFrac]] (0.5); an
+    * explicit value ≤ 0 disables the guard (plain
     * [[graft.operators.AnnIndex.refresh]], which still absorbs deletes
     * by masking and refuses non-replayable windows loudly).
     */
@@ -312,11 +313,9 @@ object StreamOps {
                   trigger: org.apache.spark.sql.streaming.Trigger =
                     org.apache.spark.sql.streaming.Trigger
                       .ProcessingTime(0L),
-                  maxRoutedFrac: Double = Double.NaN): StreamingQuery = {
-    val frac =
-      if (maxRoutedFrac.isNaN)
-        graft.operators.AnnIndex.confMaxRoutedFrac(spark)
-      else maxRoutedFrac
+                  maxRoutedFrac: Double =
+                    graft.operators.AnnIndex.DefaultMaxRoutedFrac)
+      : StreamingQuery = {
     val corpusRoot = graft.sources.TxLogTable(spark, s"$indexRoot/meta")
       .snapshot(graft.operators.AnnIndex.metaSchema)
       .collect().collectFirst {
@@ -332,8 +331,9 @@ object StreamOps {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (_: DataFrame, _: Long) =>
-        if (frac > 0)
-          graft.operators.AnnIndex.refreshAuto(spark, indexRoot, frac)
+        if (maxRoutedFrac > 0)
+          graft.operators.AnnIndex.refreshAuto(spark, indexRoot,
+            maxRoutedFrac)
         else graft.operators.AnnIndex.refresh(spark, indexRoot)
         ()
       }

@@ -50,7 +50,7 @@ object AnnDriftProbe {
     // CANDIDATE BUDGET constant across different k (recall is only
     // comparable at equal fraction of the corpus scanned)
     def recallAt10(queryIds: Seq[Long], nprobe: Int = 1): Double = {
-      val got = AnnIndex.searchIvfBatch(spark, idx, queryIds, 10,
+      val got = AnnIndex.search(spark, idx, AnnIndex.Exact, queryIds, 10,
           nprobe = nprobe)
         .select(col("q_id"), col("vec_id")).collect()
         .groupBy(_.getLong(0)).map { case (q, rs) =>

@@ -24,7 +24,12 @@ import scala.jdk.CollectionConverters._
   *    query's own cost from session-state pollution in the full Bench run;
   *  - `Profile --explain [q1 q2 …]` — `.explain("formatted")` of the named
   *    queries (all of them if none named): the dev loop for checking
-  *    pushdown, broadcast choice and exchange count.
+  *    pushdown, broadcast choice and exchange count;
+  *  - `Profile --action-cost` — the per-action fixed costs in this
+  *    session shape: N timed repetitions of small canonical actions
+  *    (scan+shuffle+agg, broadcast join, localCheckpoint, tiny parquet
+  *    write) with AQE on and off — the denominator behind every
+  *    multi-action engine path (MV refresh, DML commit, ANN search).
   *
   * The session reads `SPARK_GRAFT_SF_DIR` (default sf0.1) with
   * `SPARK_GRAFT_CPUS` cores (default 32):
@@ -170,6 +175,7 @@ object Profile {
           }
         }
     }
+    case "--action-cost" :: Nil => actionCost()
     case qs => withSession((spark, dir) => qs.foreach(detail(spark, dir, _)))
   }
 
@@ -212,6 +218,46 @@ object Profile {
         f"jobTime=${jt / 1e3}%5.2fs tasks=${js.map(_.tasks).sum}%-5d " +
         s"$oneLine")
     }
+  }
+
+  private def actionCost(): Unit = {
+    import org.apache.spark.sql.functions.broadcast
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = Sessions.local(cpus.toInt)
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("actioncost")
+    val tiny = (1 to 1000).map(i => (i.toLong, i % 50, s"v$i"))
+      .toDF("id", "k", "s")
+    tiny.write.mode("overwrite").parquet(s"$dir/tiny")
+    val small = (1 to 40).map(i => (i % 50, s"d$i")).toDF("k", "dv")
+    small.write.mode("overwrite").parquet(s"$dir/small")
+
+    def timed(name: String, n: Int)(f: => Unit): Unit = {
+      f // warm
+      val t0 = System.nanoTime()
+      (1 to n).foreach(_ => f)
+      println(f"[cost] $name: ${(System.nanoTime() - t0) / 1e6 / n}%.1f ms/action")
+    }
+
+    for (aqe <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      println(s"=== adaptive=$aqe shuffle.partitions=$cpus")
+      val t = spark.read.parquet(s"$dir/tiny")
+      val s = spark.read.parquet(s"$dir/small")
+      timed("scan+count", 30) { t.count() }
+      timed("scan+groupBy+count", 30) { t.groupBy("k").count().count() }
+      timed("scan+bcast-join+agg", 30) {
+        t.join(broadcast(s), "k").groupBy("dv").count().count() }
+      timed("distinct+localCheckpoint", 30) {
+        t.select("k").distinct().localCheckpoint().count() }
+      timed("tiny parquet write", 20) {
+        t.limit(100).write.mode("overwrite").parquet(s"$dir/out") }
+      timed("local-relation bcast join", 30) {
+        val lr = spark.createDataFrame(
+          java.util.Arrays.asList(small.collect(): _*), small.schema)
+        t.join(broadcast(lr), "k").groupBy("dv").count().count() }
+    }
+    spark.stop()
   }
 
   /** Every query whose job count differs between two `--all` files;

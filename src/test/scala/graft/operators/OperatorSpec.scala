@@ -266,8 +266,69 @@ class OperatorSpec extends AnyFunSuite {
     assert(AnnIndex.status(spark, idx).totalVectors == 19L)
   }
 
-  test("searchIvfSq8Batch equals per-id searchIvfSq8, and maintainAnn " +
-    "keeps the index at the corpus head from the stream") {
+  test("AnnIndex.search over variant × nprobe: each query of a batch " +
+    "equals its one-query search, exact at nprobe = k is brute force, " +
+    "PQ and SQ8 refuse a filter, every variant refuses a stale index") {
+    implicit val sp = spark
+    val vecs = (0L until 48L).map { i =>
+      (i, (0 until 64).map(j =>
+        math.sin(i * 7.0 + j * 1.3 + (i % 3) * j).toFloat))
+    }
+    val emb = vecs.toDF("vec_id", "embedding")
+    val tmp = java.nio.file.Files.createTempDirectory("ann-search")
+    val corpus = graft.sources.TxLogTable(spark, tmp.resolve("c").toString)
+    corpus.commit(emb, overwrite = true)
+    val idx = tmp.resolve("i").toString
+    AnnIndex.build(spark, corpus.root, idx, emb.schema, k = 4,
+      iterations = 2, pq = true, sq8 = true)
+    val qids = Seq(0L, 5L, 17L)
+    val variants = Seq(AnnIndex.Exact, AnnIndex.Pq, AnnIndex.Sq8)
+    def rows(df: org.apache.spark.sql.DataFrame)
+        : Seq[(Long, Long, Int, Double)] =
+      df.collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq
+    for (v <- variants; np <- Seq(1, 2)) {
+      val batch = rows(AnnIndex.search(spark, idx, v, qids, 4, nprobe = np))
+      assert(batch.map(_._1).toSet == qids.toSet, s"${v.name} np=$np")
+      qids.foreach { q =>
+        val one = rows(AnnIndex.search(spark, idx, v, Seq(q), 4,
+          nprobe = np))
+        assert(one.nonEmpty &&
+          batch.filter(_._1 == q).sortBy(_._2) == one.sortBy(_._2),
+          s"${v.name} np=$np q=$q: the batch changed the query's answer")
+      }
+    }
+    // full probe: every cell's candidates, so exact IVF is brute force
+    val embD = emb.select(col("vec_id"),
+      graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
+    qids.foreach { q =>
+      val full = rows(AnnIndex.search(spark, idx, AnnIndex.Exact, Seq(q), 5,
+        nprobe = 4)).map(r => (r._2, r._4))
+      val brute = embD.crossJoin(broadcast(
+          embD.filter(col("vec_id") === q).select(col("v").as("qv"))))
+        .select(col("vec_id"),
+          graft.functions.VectorFunctions.cosine(col("v"), col("qv"))
+            .as("q_cos"))
+        .orderBy(col("q_cos").desc, col("vec_id")).limit(5)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(full == brute, s"q=$q: nprobe = k must equal brute force")
+    }
+    Seq(AnnIndex.Pq, AnnIndex.Sq8).foreach { v =>
+      val e = intercept[IllegalArgumentException](
+        AnnIndex.search(spark, idx, v, Seq(0L), 4,
+          filter = Some(col("vec_id") > 3L)))
+      assert(e.getMessage.contains("serves unfiltered"), e.getMessage)
+    }
+    corpus.commit(Seq((100L, vecs(1)._2)).toDF("vec_id", "embedding"),
+      overwrite = false)
+    variants.foreach { v =>
+      val e = intercept[IllegalArgumentException](
+        AnnIndex.search(spark, idx, v, qids, 4, requireFresh = true))
+      assert(e.getMessage.contains("stale index"), e.getMessage)
+    }
+  }
+
+  test("maintainAnn keeps the index at the corpus head from the stream") {
     implicit val sp = spark
     val vecs = (0L until 32L).map { i =>
       val v = Array.fill(4)(0.0f); v((i % 4).toInt) = 1.0f + 0.01f * i
@@ -281,15 +342,6 @@ class OperatorSpec extends AnyFunSuite {
     val idx = tmp.resolve("i").toString
     AnnIndex.build(spark, corpus.root, idx, emb.schema, k = 4,
       iterations = 2, pq = false, sq8 = true)
-    val qids = Seq(0L, 3L, 7L)
-    val batch = AnnIndex.searchIvfSq8Batch(spark, idx, qids, topK = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
-      .groupBy(_._1).view.mapValues(_.map(x => (x._2, x._3)).toSeq).toMap
-    qids.foreach { q =>
-      val single = AnnIndex.searchIvfSq8(spark, idx, q, topK = 3)
-        .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-      assert(batch(q) === single, s"q=$q batch != single")
-    }
     // continuous maintenance: an embedding drop advances the pin
     val ckpt = java.nio.file.Files.createTempDirectory("ann-maint").toString
     val q = graft.streaming.StreamOps.maintainAnn(spark, idx, ckpt)
@@ -303,7 +355,7 @@ class OperatorSpec extends AnyFunSuite {
       assert(a.contains(100L) && a(100L) == a(5L),
         s"the streamed vector must route to its twin's cell: $a")
       // the pin advanced with the refresh: a fresh search serves
-      assert(AnnIndex.searchIvfSq8(spark, idx, 100L, 3,
+      assert(AnnIndex.search(spark, idx, AnnIndex.Sq8, Seq(100L), 3,
         requireFresh = true).count() == 3)
     } finally q.stop()
   }
@@ -373,8 +425,8 @@ class OperatorSpec extends AnyFunSuite {
       .snapshot(AnnIndex.assignmentsSchema).count() == 64L)
     // all direction-1 vectors tie at cosine 1.0 (same axis, magnitude
     // cancels); the query is in the tied top set and ids break the tie
-    val top = AnnIndex.searchIvf(spark, idx, queryVecId = 5L, topK = 3,
-      requireFresh = true).collect()
+    val top = AnnIndex.search(spark, idx, AnnIndex.Exact, Seq(5L), 3,
+      requireFresh = true).drop("q_id").collect()
     assert(top.map(_.getLong(0)).contains(5L) &&
       top.forall(r => r.getLong(0) % 4 == 1),
       s"neighbors must come from the query's direction: " +
@@ -423,9 +475,9 @@ class OperatorSpec extends AnyFunSuite {
     // the refreshed index serves the new twin tied at cosine 1.0 with
     // the collinear family (1, 5, 9, 13 share its direction — cosine is
     // scale-invariant, so all five tie and vec_id breaks the order)
-    val got = AnnIndex.searchIvfSq8(spark, idx, queryVecId = 1L,
-      topK = 5, requireFresh = true, nprobe = 4)
-      .collect().map(_.getLong(0)).toSet
+    val got = AnnIndex.search(spark, idx, AnnIndex.Sq8, Seq(1L), 5,
+        nprobe = 4, requireFresh = true)
+      .drop("q_id").collect().map(_.getLong(0)).toSet
     assert(got == Set(1L, 5L, 9L, 13L, 100L),
       s"the refreshed twin must tie into the collinear family: $got")
   }
@@ -487,16 +539,18 @@ class OperatorSpec extends AnyFunSuite {
     AnnIndex.build(spark, corpus.root, idx, emb.schema, k = 4,
       iterations = 2, pq = true)
     // unfiltered search: no AnalysisException from ambiguous joins
-    val un = AnnIndex.searchIvf(spark, idx, 0L, 5).collect()
+    val un = AnnIndex.search(spark, idx, AnnIndex.Exact, Seq(0L), 5)
+      .drop("q_id").collect()
     assert(un.nonEmpty && un.head.getLong(0) == 0L)
     // filter on the corpus's OWN "v" column: only vec_ids >= 8 qualify
     // (v = id - 8 >= 0). If the doubled embedding clobbered it, the
     // predicate would test an array and fail or return wrong rows.
-    val f = AnnIndex.searchIvf(spark, idx, 0L, 16,
-        filter = Some(col("v") >= 0.0)).collect()
+    val f = AnnIndex.search(spark, idx, AnnIndex.Exact, Seq(0L), 16,
+        filter = Some(col("v") >= 0.0)).drop("q_id").collect()
     assert(f.nonEmpty && f.forall(_.getLong(0) >= 8L),
       s"filter must apply to the corpus column v: ${f.mkString(",")}")
     // PQ path with the same corpus: internals stay collision-free
-    assert(AnnIndex.searchIvfPq(spark, idx, 0L, 3).collect().nonEmpty)
+    assert(AnnIndex.search(spark, idx, AnnIndex.Pq, Seq(0L), 3).collect()
+      .nonEmpty)
   }
 }
